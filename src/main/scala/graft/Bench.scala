@@ -108,13 +108,9 @@ object Bench {
     // no longer moves the number, so round-over-round deltas compare
     // steady-state plan cost, not host weather. =min2 opts out (fast
     // mode for local iteration).
-    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame,
-             name: String): Double = {
+    def once(fn: (org.apache.spark.sql.SparkSession, String) => org.apache.spark.sql.DataFrame): Double = {
       val t0 = System.nanoTime()
-      try fn(spark, sfDir).write.format("noop").mode("overwrite").save()
-      catch { case e: Throwable =>
-        System.err.println(s"[bench] $name failed: ${e.getMessage}")
-      }
+      fn(spark, sfDir).write.format("noop").mode("overwrite").save()
       (System.nanoTime() - t0) / 1e9
     }
     val steadyMode = sys.env.getOrElse("SPARK_GRAFT_BENCH_RUNS", "steady") != "min2"
@@ -127,13 +123,19 @@ object Bench {
       case None => SparkEntry.queries
     }
     // The measurement schedule and outlier defense live in
-    // BenchPolicy.measure (pure, unit-tested in BenchPolicySpec).
-    val rawResults = selected.map { case (name, fn) =>
+    // BenchPolicy.measure (pure, unit-tested in BenchPolicySpec). A
+    // query that throws on any run is listed in `failed` and has no
+    // entry in the time maps or totals.
+    val attempts = selected.toSeq.map { case (name, fn) =>
       val gc0 = gcMs
-      val m = BenchPolicy.measure(() => once(fn, name), steadyMode, ref.get(name))
-      val gcSec = (gcMs - gc0) / 1000.0
-      name -> ((m, gcSec))
+      val r = BenchPolicy.attempt(() => once(fn), steadyMode, ref.get(name))
+      r.swap.foreach(msg => System.err.println(s"[bench] $name failed: $msg"))
+      name -> r.map(m => (m, (gcMs - gc0) / 1000.0))
     }
+    val failed = attempts.collect { case (k, Left(_)) => "\"" + k + "\"" }
+      .mkString("[", ",", "]")
+    val rawResults = scala.collection.immutable.ListMap(
+      attempts.collect { case (k, Right(v)) => k -> v }: _*)
     // Session-ratio normalization (round-9 protocol fix): a committed
     // table taken on a fast host produced phantom prior-excess flags
     // two rounds running. Estimate the run-wide host factor as the
@@ -201,7 +203,7 @@ object Bench {
       s""","remeasured":$extraRuns,"degraded_host":$degraded$ratioPart$scalePart,"flags":${flagged.mkString("{", ",", "}")}""" +
         s""","flag_detail":${flagDetails.mkString("{", ",", "}")}"""
     val line =
-      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs$steadyPart$gcPart$defendPart,"sf":"$sfDir"}"""
+      f"""{"metric":"total","value":$total%.3f,"unit":"sec","queries":$qs$steadyPart$gcPart$defendPart,"failed":$failed,"sf":"$sfDir"}"""
     // The stdout line is the driver contract, but every BENCH_r0N so
     // far shows the capture keeping only a ~2000-char TAIL of it
     // ("parsed": null since round 3) — the ~18 KB four-map line never
@@ -232,7 +234,7 @@ object Bench {
       System.err.println(s"[bench] could not write $lastPath: ${e.getMessage}")
     }
     println(
-      s"""{"metric":"total","value":${compactNum(total)},"unit":"sec","queries":$qsCompact,"sf":"$sfDir","detail":"$lastPath"}""")
+      s"""{"metric":"total","value":${compactNum(total)},"unit":"sec","queries":$qsCompact,"failed":$failed,"sf":"$sfDir","detail":"$lastPath"}""")
     spark.stop()
   }
 }

@@ -188,6 +188,15 @@ object BenchPolicy {
     Measurement(best, steady, extra, flags.reverse, detail)
   }
 
+  /** [[measure]], or the error message when any run throws. A failed
+    * query gets no time: the seconds spent up to the exception are not
+    * its cost, and reporting them would read a broken query as a fast
+    * one. */
+  def attempt(once: () => Double, steadyMode: Boolean,
+              priorSteady: Option[Double]): Either[String, Measurement] =
+    try Right(measure(once, steadyMode, priorSteady))
+    catch { case e: Throwable => Left(String.valueOf(e.getMessage)) }
+
   /** Aggregate steady-vs-committed ratio above which the SESSION is
     * suspect regardless of per-query flags. Round 7's driver run read
     * 1.76× committed in aggregate (with a tail to 44.6×) yet reported

@@ -5,7 +5,7 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
-import graft.sinks.Sinks
+import graft.streaming.SideCar
 
 /** Continuous ingestion with a PERSISTENT dedup index — the piece the
   * watermark-horizon forms cannot give: every micro-batch is deduped
@@ -19,13 +19,9 @@ import graft.sinks.Sinks
   *             appended to the corpus, their hashes/signatures/token
   *             sets appended to the index.
   *
-  * Consistency: survivors land via dynamic partition overwrite keyed
-  * on (run id, micro-batch id) ([[Sinks.upsertPartitions]]) — a
-  * foreachBatch RETRY overwrites its own partition instead of
-  * double-appending, so the corpus output is exactly-once. The run id
-  * disambiguates queries: batch ids restart at 0 per checkpoint, so
-  * two ingestion runs sharing an output dir would otherwise overwrite
-  * each other's partitions. Index appends are retried at-least-once,
+  * Consistency: survivors land by the [[SideCar]] contract (partition
+  * overwrite keyed on run id and micro-batch id), so the corpus
+  * output is exactly-once. Index appends are retried at-least-once,
   * which is harmless by construction: duplicate hash rows change no
   * anti-join result and duplicate signatures only re-propose the same
   * candidates.
@@ -123,9 +119,7 @@ object IncrementalDedupJob {
         thresholdPermille, textCol, idCol).cache()
     val nSurvivors = survivors.count()
     // 4. exactly-once corpus append: the batch owns its partition
-    Sinks.upsertPartitions(
-      survivors.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId)),
-      outDir, Seq("run_id", "batch_id"))
+    SideCar.write(survivors, runId, batchId, outDir)
     survivors.unpersist()
     exactDeduped.unpersist()
     gatedC.unpersist()
@@ -139,8 +133,7 @@ object IncrementalDedupJob {
     // as a near-dup → empty recompute → rows lost). Reading back the
     // written partition also means the index describes exactly what
     // the corpus committed.
-    val written = spark.read.parquet(outDir)
-      .filter(col("run_id") === runId && col("batch_id") === batchId)
+    val written = SideCar.committed(spark, outDir, runId, batchId)
       .drop("run_id", "batch_id")
     val idx = Dedup.buildIndex(written, index.k, textCol, idCol)
     idx.signatures.write.mode("append").parquet(s"$indexDir/signatures")
@@ -157,23 +150,15 @@ object IncrementalDedupJob {
       "after_history_dedup" -> nSurvivors)
   }
 
-  /** Streaming entry: foreachBatch over a document stream. `runId`
-    * must be stable across RESTARTS of the same logical run (same
-    * checkpoint) and distinct between different runs sharing `outDir`. */
+  /** Streaming entry: runs [[process]] per micro-batch. */
   def start(docs: DataFrame, runId: String, indexDir: String, outDir: String,
             checkpoint: String,
             thresholdPermille: Int = 950, k: Int = 3,
-            minQuality: Long = 0L, maxMojibakePermille: Long = 1000L,
-            onStats: (Long, Map[String, Long]) => Unit = (_, _) => ()): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        val stats = process(batch, runId, batchId, indexDir, outDir,
-          thresholdPermille, k,
-          minQuality = minQuality, maxMojibakePermille = maxMojibakePermille)
-        onStats(batchId, stats)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+            minQuality: Long = 0L, maxMojibakePermille: Long = 1000L): StreamingQuery =
+    SideCar.start(docs, checkpoint) { (batch, batchId) =>
+      process(batch, runId, batchId, indexDir, outDir, thresholdPermille, k,
+        minQuality = minQuality, maxMojibakePermille = maxMojibakePermille)
+    }
 
   def main(args: Array[String]): Unit = {
     val a = args.sliding(2, 2).collect { case Array(kk, v) => kk -> v }.toMap

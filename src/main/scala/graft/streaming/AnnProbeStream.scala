@@ -1,11 +1,9 @@
 package graft.streaming
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
-import graft.sinks.Sinks
 
 /** Streaming ANN serving against the STORED IVFPQ index — the
   * [[IndexProbeDedup]] architecture applied to similarity search:
@@ -25,12 +23,9 @@ import graft.sinks.Sinks
   * each batch's current on-disk snapshot, so an append lands in
   * serving at the next micro-batch, no restart).
   *
-  * Exactly-once: hit lists land via dynamic partition overwrite keyed
-  * on (run id, micro-batch id) ([[Sinks.upsertPartitions]]); a
-  * foreachBatch retry overwrites its own partition rather than
-  * double-appending, and the probe is stateless across batches (the
-  * "state" IS the parquet index), so a replayed batch recomputes
-  * identical hits.
+  * Exactly-once by the [[SideCar]] contract; the probe is stateless
+  * across batches (the "state" IS the parquet index), so a replayed
+  * batch recomputes identical hits.
   *
   * Scale: per batch, cost is the query-side broadcasts (probe set =
   * batch×nprobe rows, ADC tables batch×m×pqK×nprobe) + one
@@ -42,35 +37,22 @@ object AnnProbeStream {
 
   /** One micro-batch (usable directly as a batch entry point): serve
     * top-k for `batch` from the index at `indexDir`, write the hit
-    * list exactly-once, return the hit-row count for monitoring. */
+    * list exactly-once, return the committed hit-row count. */
   def process(batch: DataFrame, runId: String, batchId: Long,
               indexDir: String, outDir: String, k: Int, nprobe: Int,
-              idCol: String = "vec_id", vecCol: String = "embedding"): Long = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return 0L
-    val index = Similarity.readAnnIndex(spark, indexDir)
-    val hits = Similarity
-      .ivfPqTopKIndexedProbes(batch, index, k, nprobe, idCol, vecCol)
-      .withColumn("run_id", lit(runId))
-      .withColumn("batch_id", lit(batchId))
-    Sinks.upsertPartitions(hits, outDir, Seq("run_id", "batch_id"))
-    spark.read.parquet(outDir)
-      .filter(col("run_id") === runId && col("batch_id") === batchId)
-      .count()
-  }
+              idCol: String = "vec_id", vecCol: String = "embedding"): Long =
+    SideCar.process(batch, runId, batchId, outDir, 0L)(
+      hits(_, indexDir, k, nprobe, idCol, vecCol))(_.count())
 
-  /** Streaming entry: foreachBatch over a query-vector stream. `runId`
-    * must be stable across RESTARTS of the same logical run (same
-    * checkpoint) and distinct between runs sharing `outDir`. */
+  /** Streaming entry: lands each micro-batch's hit list. */
   def start(queries: DataFrame, runId: String, indexDir: String, outDir: String,
             checkpoint: String, k: Int = 5, nprobe: Int = 2,
-            idCol: String = "vec_id", vecCol: String = "embedding",
-            onStats: (Long, Long) => Unit = (_, _) => ()): StreamingQuery =
-    queries.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onStats(batchId, process(batch, runId, batchId, indexDir, outDir,
-          k, nprobe, idCol, vecCol))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+            idCol: String = "vec_id", vecCol: String = "embedding"): StreamingQuery =
+    SideCar.startLanding(queries, runId, outDir, checkpoint)(
+      hits(_, indexDir, k, nprobe, idCol, vecCol))
+
+  private def hits(batch: DataFrame, indexDir: String, k: Int, nprobe: Int,
+                   idCol: String, vecCol: String): DataFrame =
+    Similarity.ivfPqTopKIndexedProbes(batch,
+      Similarity.readAnnIndex(batch.sparkSession, indexDir), k, nprobe, idCol, vecCol)
 }

@@ -1,15 +1,18 @@
 package graft.streaming
 
-import org.apache.spark.sql.{DataFrame, Dataset, Encoders}
+import org.apache.spark.sql.{DataFrame, Dataset}
 import org.apache.spark.sql.functions.col
-import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode,
-  StatefulProcessor, TTLConfig, TimeMode, TimerValues, ValueState}
+import org.apache.spark.sql.streaming.{GroupState, GroupStateTimeout, OutputMode}
 
 /** Keyed changelog compaction with explicit state — the Spark-native
   * replacement for the reference's retract stream + REPLACE-INTO sink
   * (O11/O15): per key, keep the newest version and emit a row only
   * when the winner changes (an upsert changelog, dedup'd at the
   * source instead of at the database).
+  *
+  * Two streaming compactors share these semantics: [[compact]] keeps
+  * each key's state forever, [[compactExpiring]] expires it on an
+  * event-time TTL. [[compactBatch]] is their batch twin.
   *
   * State is one (version, payload-hash) pair per key, partitioned by
   * key across executors — at 100 TB of stream the state size is bound
@@ -91,46 +94,6 @@ object Changelog {
             out
           }
       }
-  }
-
-  /** The [[compact]] worker on Spark 4's `transformWithState` API —
-    * the arbitrary-state successor to flatMapGroupsWithState: state is
-    * DECLARED through the typed handle (named states, composable, each
-    * with its own optional TTL) instead of being one opaque blob per
-    * key. Keeping both forms proves the changelog semantics are
-    * API-independent; new pipelines should prefer this one. */
-  private final class CompactProcessor(ttl: TTLConfig)
-      extends StatefulProcessor[Long, VersionedEvent, VersionedEvent] {
-    @transient private var state: ValueState[KeyState] = _
-    override def init(outputMode: OutputMode, timeMode: TimeMode): Unit =
-      state = getHandle.getValueState[KeyState]("latest",
-        Encoders.product[KeyState], ttl)
-    override def handleInputRows(key: Long, rows: Iterator[VersionedEvent],
-                                 timers: TimerValues): Iterator[VersionedEvent] = {
-      val newest = rows.reduceOption((a, b) => if (b.version > a.version) b else a)
-      newest match {
-        case Some(e) if !state.exists() || e.version > state.get().version =>
-          state.update(KeyState(e.version, e.payload))
-          Iterator.single(e)
-        case _ => Iterator.empty
-      }
-    }
-  }
-
-  /** [[compact]] via `transformWithState`. Requires the RocksDB state
-    * store (`spark.sql.streaming.stateStore.providerClass` =
-    * `...state.RocksDBStateStoreProvider` — the only provider backing
-    * the new API). `ttl` bounds per-key state in processing time: the
-    * declarative replacement for [[compactExpiring]]'s hand-rolled
-    * event-time timers (same trade-off: a key returning after the TTL
-    * re-emits even if stale; the idempotent versioned upsert sink
-    * converges downstream). */
-  def compactTws(events: Dataset[VersionedEvent],
-                 ttl: TTLConfig = TTLConfig.NONE): Dataset[VersionedEvent] = {
-    import events.sparkSession.implicits._
-    events
-      .groupByKey(_.key)
-      .transformWithState(new CompactProcessor(ttl), TimeMode.None(), OutputMode.Append())
   }
 
   /** Batch twin of [[compact]] for replay/backfill: one row per

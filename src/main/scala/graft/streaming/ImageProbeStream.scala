@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Multimodal
-import graft.sinks.Sinks
 
 /** Streaming perceptual-image dedup against the PERSISTENT hash index —
   * the [[IndexProbeDedup]] side-car pattern on the multimodal axis:
@@ -27,12 +26,9 @@ import graft.sinks.Sinks
   * ingestion is owned by a nightly [[Multimodal.appendImageIndex]] +
   * [[Multimodal.compactImageIndex]] job).
   *
-  * Exactly-once: verdicts land via dynamic partition overwrite keyed
-  * on (run id, micro-batch id) ([[Sinks.upsertPartitions]]) — a
-  * foreachBatch retry overwrites its own partition instead of
-  * double-appending; the probe itself is stateless across batches
-  * (the "state" IS the parquet index), so a replayed batch recomputes
-  * identical verdicts.
+  * Exactly-once by the [[SideCar]] contract; the probe is stateless
+  * across batches (the "state" IS the parquet index), so a replayed
+  * batch recomputes identical verdicts.
   *
   * Scale: per batch, shuffle ∝ batch + band-collision candidates —
   * the stored hash side meets the delta only on (band, slice) keys,
@@ -43,18 +39,28 @@ object ImageProbeStream {
 
   /** One micro-batch (usable directly as a nightly-batch entry point):
     * write per-doc verdicts for `batch` (doc_id, blob) against the
-    * index at `indexDir`, returning verdict counts for monitoring. */
+    * index at `indexDir`, returning the committed verdict counts. */
   def process(batch: DataFrame, runId: String, batchId: Long,
               indexDir: String, outDir: String, maxDistance: Int = 1,
-              grid: Int = 8, idCol: String = "doc_id"): Map[String, Long] = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return Map.empty
-    val index = Multimodal.readImageIndex(spark, indexDir)
+              grid: Int = 8, idCol: String = "doc_id"): Map[String, Long] =
+    SideCar.process(batch, runId, batchId, outDir, Map.empty[String, Long])(
+      verdicts(_, indexDir, maxDistance, grid, idCol))(SideCar.verdictCounts)
+
+  /** Streaming entry: lands each micro-batch's verdicts. */
+  def start(blobs: DataFrame, runId: String, indexDir: String, outDir: String,
+            checkpoint: String, maxDistance: Int = 1, grid: Int = 8,
+            idCol: String = "doc_id"): StreamingQuery =
+    SideCar.startLanding(blobs, runId, outDir, checkpoint)(
+      verdicts(_, indexDir, maxDistance, grid, idCol))
+
+  private def verdicts(batch: DataFrame, indexDir: String, maxDistance: Int,
+                       grid: Int, idCol: String): DataFrame = {
+    val index = Multimodal.readImageIndex(batch.sparkSession, indexDir)
     val hashes = Multimodal.imageAHash(batch, grid)
       .select(col(idCol), col("ahash"))
     val best = Multimodal.aHashProbe(hashes, index, maxDistance)
       .groupBy(col("probe_id")).agg(min(col("hamming")).as("__minh"))
-    val verdicts = batch.select(col(idCol))
+    batch.select(col(idCol))
       .join(hashes.select(col(idCol)).withColumn("__dec", lit(1)), Seq(idCol), "left")
       .join(best, col(idCol) === col("probe_id"), "left")
       .select(col(idCol),
@@ -62,27 +68,5 @@ object ImageProbeStream {
           .when(col("__minh") === 0, "dup_exact_image")
           .when(col("__minh").isNotNull, "dup_near_image")
           .otherwise("unique").as("verdict"))
-    Sinks.upsertPartitions(
-      verdicts.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId)),
-      outDir, Seq("run_id", "batch_id"))
-    spark.read.parquet(outDir)
-      .filter(col("run_id") === runId && col("batch_id") === batchId)
-      .groupBy(col("verdict")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
-
-  /** Streaming entry: foreachBatch over an image-blob stream. `runId`
-    * must be stable across RESTARTS of the same logical run (same
-    * checkpoint) and distinct between runs sharing `outDir`. */
-  def start(blobs: DataFrame, runId: String, indexDir: String, outDir: String,
-            checkpoint: String, maxDistance: Int = 1, grid: Int = 8,
-            idCol: String = "doc_id",
-            onStats: (Long, Map[String, Long]) => Unit = (_, _) => ()): StreamingQuery =
-    blobs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onStats(batchId, process(batch, runId, batchId, indexDir, outDir,
-          maxDistance, grid, idCol))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
-import graft.sinks.Sinks
 
 /** Streaming near-dedup against the PERSISTENT signature index — the
   * composition that closes the lambda split the watermark forms leave
@@ -25,13 +24,9 @@ import graft.sinks.Sinks
   * gets a verdict — `unique`, `dup_exact_index` (content hash already
   * indexed) or `dup_near_index` (band collision verified ≥ threshold).
   *
-  * Exactly-once: verdicts land via dynamic partition overwrite keyed
-  * on (run id, micro-batch id) ([[Sinks.upsertPartitions]]) — a
-  * foreachBatch RETRY after a crash overwrites its own partition
-  * instead of double-appending, and the streaming checkpoint commits
-  * the batch only after the write returns. The probe itself is
-  * stateless across batches (the "state" is the parquet index), so a
-  * replayed batch recomputes identical verdicts.
+  * Exactly-once by the [[SideCar]] contract; the probe is stateless
+  * across batches (the "state" is the parquet index), so a replayed
+  * batch recomputes identical verdicts.
   *
   * Scale: per batch, shuffle ∝ batch + collision candidates. The
   * index hash side stays unshuffled through the same Bloom prune the
@@ -44,17 +39,29 @@ object IndexProbeDedup {
 
   /** One micro-batch (usable directly as the nightly-batch entry
     * point): write per-doc verdicts for `batch` against the index at
-    * `indexDir`, returning the verdict counts for monitoring.
+    * `indexDir`, returning the committed verdict counts.
     * `weighted = true` verifies candidates with the repetition-aware
     * multiset-Jaccard measure against the index's stored bags
     * ([[Dedup.dedupeAgainstIndexWeighted]]) instead of set Jaccard. */
   def process(batch: DataFrame, runId: String, batchId: Long,
               indexDir: String, outDir: String, thresholdPermille: Int,
               idCol: String = "doc_id", textCol: String = "text",
-              weighted: Boolean = false): Map[String, Long] = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return Map.empty
-    val index = Dedup.readIndex(spark, indexDir)
+              weighted: Boolean = false): Map[String, Long] =
+    SideCar.process(batch, runId, batchId, outDir, Map.empty[String, Long])(
+      verdicts(_, indexDir, thresholdPermille, idCol, textCol, weighted))(
+      SideCar.verdictCounts)
+
+  /** Streaming entry: lands each micro-batch's verdicts. */
+  def start(docs: DataFrame, runId: String, indexDir: String, outDir: String,
+            checkpoint: String, thresholdPermille: Int = 900,
+            idCol: String = "doc_id", textCol: String = "text",
+            weighted: Boolean = false): StreamingQuery =
+    SideCar.startLanding(docs, runId, outDir, checkpoint)(
+      verdicts(_, indexDir, thresholdPermille, idCol, textCol, weighted))
+
+  private def verdicts(batch: DataFrame, indexDir: String, thresholdPermille: Int,
+                       idCol: String, textCol: String, weighted: Boolean): DataFrame = {
+    val index = Dedup.readIndex(batch.sparkSession, indexDir)
     // exact verdicts from the hash set; near verdicts = dropped by the
     // full probe but not exact — one shared dedupeAgainstIndex pass
     // owns candidate generation and verification (shingle size comes
@@ -70,32 +77,9 @@ object IndexProbeDedup {
         textCol, idCol)
     val unique = survivors
       .select(col(idCol)).withColumn("__v", lit("unique"))
-    val verdicts = batch.select(col(idCol))
+    batch.select(col(idCol))
       .join(exact.unionByName(unique), Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("__v"), lit("dup_near_index")).as("verdict"))
-    Sinks.upsertPartitions(
-      verdicts.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId)),
-      outDir, Seq("run_id", "batch_id"))
-    spark.read.parquet(outDir)
-      .filter(col("run_id") === runId && col("batch_id") === batchId)
-      .groupBy(col("verdict")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
-
-  /** Streaming entry: foreachBatch over a document stream. `runId`
-    * must be stable across RESTARTS of the same logical run (same
-    * checkpoint) and distinct between runs sharing `outDir`. */
-  def start(docs: DataFrame, runId: String, indexDir: String, outDir: String,
-            checkpoint: String, thresholdPermille: Int = 900,
-            idCol: String = "doc_id", textCol: String = "text",
-            weighted: Boolean = false,
-            onStats: (Long, Map[String, Long]) => Unit = (_, _) => ()): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onStats(batchId, process(batch, runId, batchId, indexDir, outDir,
-          thresholdPermille, idCol, textCol, weighted))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
 }

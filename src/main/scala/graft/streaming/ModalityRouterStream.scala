@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Multimodal
-import graft.sinks.Sinks
 
 /** Streaming modality router — the all-container magic dispatch
   * ([[Multimodal.routeInventory]]: TIFF/ZIP/GIF/JPEG/PNG/MP3/FLAC/
@@ -21,12 +20,8 @@ import graft.sinks.Sinks
   *    input row gets exactly one verdict: the stream's accounting
   *    must cover the corpus, not just the parseable part.
   *
-  * Exactly-once: the [[ImageProbeStream]] side-car contract — verdicts
-  * land via dynamic partition overwrite keyed on (run id, micro-batch
-  * id) ([[Sinks.upsertPartitions]]), so a foreachBatch retry
-  * overwrites its own partition instead of double-appending, and the
-  * router is stateless across batches (identical bytes → identical
-  * verdicts on replay).
+  * Exactly-once by the [[SideCar]] contract; the router is stateless
+  * across batches (identical bytes → identical verdicts on replay).
   *
   * Scale: the router is a narrow per-partition byte walk (no shuffle
   * until the per-batch verdict write), so the side-car rides the
@@ -35,39 +30,25 @@ import graft.sinks.Sinks
 object ModalityRouterStream {
 
   /** One micro-batch (usable directly as a nightly-batch entry point):
-    * write per-doc verdicts for `batch` (doc_id, blob), returning
-    * per-format verified/refused counts for monitoring. */
+    * write per-doc verdicts for `batch` (doc_id, blob), returning the
+    * committed per-format verified/refused counts. */
   def process(batch: DataFrame, runId: String, batchId: Long,
-              outDir: String, idCol: String = "doc_id"): Map[(String, Long), Long] = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return Map.empty
-    val routed = Multimodal.routeInventory(batch)
-    val verdicts = batch.select(col(idCol))
-      .join(routed, Seq(idCol), "left")
+              outDir: String, idCol: String = "doc_id"): Map[(String, Long), Long] =
+    SideCar.process(batch, runId, batchId, outDir, Map.empty[(String, Long), Long])(
+      verdicts(_, idCol))(
+      _.groupBy(col("format"), col("verified")).count()
+        .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap)
+
+  /** Streaming entry: lands each micro-batch's verdicts. */
+  def start(blobs: DataFrame, runId: String, outDir: String,
+            checkpoint: String, idCol: String = "doc_id"): StreamingQuery =
+    SideCar.startLanding(blobs, runId, outDir, checkpoint)(verdicts(_, idCol))
+
+  private def verdicts(batch: DataFrame, idCol: String): DataFrame =
+    batch.select(col(idCol))
+      .join(Multimodal.routeInventory(batch), Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("format"), lit("unknown")).as("format"),
         coalesce(col("verified"), lit(0L)).as("verified"),
         coalesce(col("units"), lit(0L)).as("units"))
-    Sinks.upsertPartitions(
-      verdicts.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId)),
-      outDir, Seq("run_id", "batch_id"))
-    spark.read.parquet(outDir)
-      .filter(col("run_id") === runId && col("batch_id") === batchId)
-      .groupBy(col("format"), col("verified")).count()
-      .collect().map(r => (r.getString(0), r.getLong(1)) -> r.getLong(2)).toMap
-  }
-
-  /** Streaming entry: foreachBatch over a mixed-blob stream. `runId`
-    * must be stable across RESTARTS of the same logical run (same
-    * checkpoint) and distinct between runs sharing `outDir`. */
-  def start(blobs: DataFrame, runId: String, outDir: String,
-            checkpoint: String, idCol: String = "doc_id",
-            onStats: (Long, Map[(String, Long), Long]) => Unit = (_, _) => ())
-      : StreamingQuery =
-    blobs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onStats(batchId, process(batch, runId, batchId, outDir, idCol))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
-import graft.sinks.Sinks
 
 /** Streaming SEMANTIC near-dup detection against the persistent
   * IVF-Flat index — the third probe of the side-car trio: where
@@ -24,10 +23,9 @@ import graft.sinks.Sinks
   *
   * Verdicts: `semantic_dup_index` (with the best-matching index
   * vector and its exact cosine in millis) or `unique`. Exactly-once
-  * by the house rule: dynamic partition overwrite on (run id, batch
-  * id), so a foreachBatch retry overwrites its own partition; the
-  * probe is stateless across batches (the state IS the parquet
-  * index), so a replayed batch recomputes identical verdicts.
+  * by the [[SideCar]] contract; the probe is stateless across batches
+  * (the state IS the parquet index), so a replayed batch recomputes
+  * identical verdicts.
   *
   * Scale per batch: centroids broadcast for probe selection, the
   * probe set (batch × nprobe rows) broadcasts into the cell table —
@@ -38,14 +36,24 @@ object SemanticProbeStream {
 
   /** One micro-batch (usable directly as a nightly-batch entry
     * point): verdicts for `batch` (idCol + vecCol) against the index
-    * at `indexDir`, returning verdict counts for monitoring. */
+    * at `indexDir`, returning the committed verdict counts. */
   def process(batch: DataFrame, runId: String, batchId: Long,
               indexDir: String, outDir: String, minCos: Double,
               nprobe: Int = 1, idCol: String = "vec_id",
-              vecCol: String = "embedding"): Map[String, Long] = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return Map.empty
-    val index = Similarity.readIvfFlatIndex(spark, indexDir)
+              vecCol: String = "embedding"): Map[String, Long] =
+    SideCar.process(batch, runId, batchId, outDir, Map.empty[String, Long])(
+      verdicts(_, indexDir, minCos, nprobe, idCol, vecCol))(SideCar.verdictCounts)
+
+  /** Streaming entry: lands each micro-batch's verdicts. */
+  def start(vecs: DataFrame, runId: String, indexDir: String, outDir: String,
+            checkpoint: String, minCos: Double, nprobe: Int = 1,
+            idCol: String = "vec_id", vecCol: String = "embedding"): StreamingQuery =
+    SideCar.startLanding(vecs, runId, outDir, checkpoint)(
+      verdicts(_, indexDir, minCos, nprobe, idCol, vecCol))
+
+  private def verdicts(batch: DataFrame, indexDir: String, minCos: Double,
+                       nprobe: Int, idCol: String, vecCol: String): DataFrame = {
+    val index = Similarity.readIvfFlatIndex(batch.sparkSession, indexDir)
     val hits = Similarity.ivfFlatScore(batch, index, nprobe, idCol, vecCol)
       .filter(col("cos") >= minCos)
       .withColumn("__rn", row_number().over(
@@ -54,33 +62,11 @@ object SemanticProbeStream {
       .filter(col("__rn") === 1)
       .select(col("query_id").as(idCol), col("cand_id").as("match_id"),
         floor(col("cos") * 1000).cast("long").as("cos_millis"))
-    val verdicts = batch.select(col(idCol))
+    batch.select(col(idCol))
       .join(hits, Seq(idCol), "left")
       .select(col(idCol),
         when(col("match_id").isNotNull, lit("semantic_dup_index"))
           .otherwise(lit("unique")).as("verdict"),
         col("match_id"), coalesce(col("cos_millis"), lit(0L)).as("cos_millis"))
-    Sinks.upsertPartitions(
-      verdicts.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId)),
-      outDir, Seq("run_id", "batch_id"))
-    spark.read.parquet(outDir)
-      .filter(col("run_id") === runId && col("batch_id") === batchId)
-      .groupBy(col("verdict")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
-
-  /** Streaming entry: foreachBatch over an embedding stream. `runId`
-    * must be stable across RESTARTS of the same logical run (same
-    * checkpoint) and distinct between runs sharing `outDir`. */
-  def start(vecs: DataFrame, runId: String, indexDir: String, outDir: String,
-            checkpoint: String, minCos: Double, nprobe: Int = 1,
-            idCol: String = "vec_id", vecCol: String = "embedding",
-            onStats: (Long, Map[String, Long]) => Unit = (_, _) => ()): StreamingQuery =
-    vecs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onStats(batchId, process(batch, runId, batchId, indexDir, outDir,
-          minCos, nprobe, idCol, vecCol))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
 }

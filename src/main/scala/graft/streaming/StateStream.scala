@@ -5,9 +5,8 @@ import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Relational
 
-/** Streaming maintenance for ANY mergeable profile state — the
-  * generic form of [[ProfileStream]] (its histogram instance
-  * delegates here): each micro-batch is folded to its PARTIAL state
+/** Streaming maintenance for ANY mergeable profile state: each
+  * micro-batch is folded to its PARTIAL state
   * by the caller-supplied builder ([[Relational.histogramState]],
   * [[Relational.cmsState]], [[Relational.kmvState]],
   * [[Relational.aggState]], [[Relational.distinctStateExact]] — any
@@ -34,17 +33,10 @@ object StateStream {
       Relational.appendState(state(batch), dir, s"$runId-$batchId")
   }
 
-  /** Streaming entry: foreachBatch over an event stream. `runId` must
-    * be stable across RESTARTS of the same logical run (same
+  /** Streaming entry: lands each micro-batch's partial state. `runId`
+    * must be stable across RESTARTS of the same logical run (same
     * checkpoint) and distinct between runs sharing `dir`. */
-  def start(events: DataFrame, runId: String, dir: String, checkpoint: String,
-            onBatch: Long => Unit = _ => ())
+  def start(events: DataFrame, runId: String, dir: String, checkpoint: String)
            (state: DataFrame => DataFrame): StreamingQuery =
-    events.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        process(batch, runId, batchId, dir)(state)
-        onBatch(batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+    SideCar.start(events, checkpoint)(process(_, runId, _, dir)(state))
 }

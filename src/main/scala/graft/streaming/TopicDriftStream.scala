@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Similarity
-import graft.sinks.Sinks
 
 /** Streaming topic-drift monitor: per micro-batch, incoming
   * embeddings are assigned to a FROZEN k-means quantizer's cells
@@ -19,11 +18,9 @@ import graft.sinks.Sinks
   * architecture): retraining owns the model directory; a new model
   * lands in monitoring at the next micro-batch, no restart.
   *
-  * Exactly-once: histograms land via dynamic partition overwrite
-  * keyed on (run id, micro-batch id) ([[Sinks.upsertPartitions]]) —
-  * a foreachBatch retry overwrites its own partition, and assignment
-  * is stateless across batches, so a replayed batch recomputes an
-  * identical histogram.
+  * Exactly-once by the [[SideCar]] contract; assignment is stateless
+  * across batches, so a replayed batch recomputes an identical
+  * histogram.
   *
   * Scale: assignment is a broadcast of the (k×dims, driver-small by
   * construction) centroid table against the never-shuffled batch
@@ -35,36 +32,28 @@ object TopicDriftStream {
   /** One micro-batch (usable directly as a batch entry point):
     * assign `batch` under the centroids at `centroidsDir`, write the
     * (cell, cnt, permille) histogram exactly-once, return the batch
-    * row count for monitoring. */
+    * row count the committed histogram holds. */
   def process(batch: DataFrame, runId: String, batchId: Long,
               centroidsDir: String, outDir: String,
-              idCol: String = "vec_id", vecCol: String = "embedding"): Long = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return 0L
-    val cents = spark.read.parquet(centroidsDir)
-    val asg = Similarity.ivfAssign(batch, cents, idCol, vecCol)
-    val total = asg.count()
-    val hist = asg.groupBy(col("cell"))
-      .agg(count(lit(1)).as("cnt"))
-      .withColumn("permille", floor(col("cnt") * 1000 / lit(total)).cast("long"))
-      .withColumn("run_id", lit(runId))
-      .withColumn("batch_id", lit(batchId))
-    Sinks.upsertPartitions(hist, outDir, Seq("run_id", "batch_id"))
-    total
-  }
+              idCol: String = "vec_id", vecCol: String = "embedding"): Long =
+    SideCar.process(batch, runId, batchId, outDir, 0L)(
+      histogram(_, centroidsDir, idCol, vecCol))(
+      _.agg(sum(col("cnt"))).head().getLong(0))
 
-  /** Streaming entry: foreachBatch over an embedding stream. `runId`
-    * must be stable across RESTARTS of the same logical run (same
-    * checkpoint) and distinct between runs sharing `outDir`. */
+  /** Streaming entry: lands each micro-batch's histogram. */
   def start(vectors: DataFrame, runId: String, centroidsDir: String,
             outDir: String, checkpoint: String,
-            idCol: String = "vec_id", vecCol: String = "embedding",
-            onStats: (Long, Long) => Unit = (_, _) => ()): StreamingQuery =
-    vectors.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onStats(batchId, process(batch, runId, batchId, centroidsDir, outDir,
-          idCol, vecCol))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+            idCol: String = "vec_id", vecCol: String = "embedding"): StreamingQuery =
+    SideCar.startLanding(vectors, runId, outDir, checkpoint)(
+      histogram(_, centroidsDir, idCol, vecCol))
+
+  private def histogram(batch: DataFrame, centroidsDir: String,
+                        idCol: String, vecCol: String): DataFrame = {
+    val asg = Similarity.ivfAssign(batch,
+      batch.sparkSession.read.parquet(centroidsDir), idCol, vecCol)
+    val total = asg.count()
+    asg.groupBy(col("cell"))
+      .agg(count(lit(1)).as("cnt"))
+      .withColumn("permille", floor(col("cnt") * 1000 / lit(total)).cast("long"))
+  }
 }

@@ -29,14 +29,9 @@ object UpsertStream {
     * `keys`/`numBuckets`. */
   def start(changelog: DataFrame, dir: String, checkpoint: String,
             keys: Seq[String], numBuckets: Int,
-            opCol: String = "op", seqCol: String = "seq",
-            onBatch: Long => Unit = _ => ()): StreamingQuery =
-    changelog.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        Cdc.applyDeltaStored(batch.sparkSession, dir, batch, keys,
-          numBuckets, opCol, seqCol)
-        onBatch(batchId)
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
+            opCol: String = "op", seqCol: String = "seq"): StreamingQuery =
+    SideCar.start(changelog, checkpoint) { (batch, _) =>
+      Cdc.applyDeltaStored(batch.sparkSession, dir, batch, keys,
+        numBuckets, opCol, seqCol)
+    }
 }

@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.{Multimodal, TextAnalysis, WebExtract}
-import graft.sinks.Sinks
 
 /** Streaming web-corpus ingest — the `corpus_e2e_web` chain as an
   * exactly-once side-car: each micro-batch of crawl WARC blobs runs
@@ -21,11 +20,9 @@ import graft.sinks.Sinks
   *    text/html response present: the stream's accounting covers the
   *    corpus, not just the parseable part.
   *
-  * Exactly-once: verdicts land via dynamic partition overwrite keyed
-  * on (run id, micro-batch id) ([[Sinks.upsertPartitions]]) — a
-  * foreachBatch retry overwrites its own partition; the chain is
-  * stateless across batches (identical bytes → identical verdicts on
-  * replay), so the batch query and this side-car are the same code
+  * Exactly-once by the [[SideCar]] contract; the chain is stateless
+  * across batches (identical bytes → identical verdicts on replay),
+  * so the batch query and this side-car are the same code
   * path and must agree row-for-row ([[graft.MultimodalStreamSpec]]'s
   * parity discipline, proven in `WebIngestStreamSpec`).
   *
@@ -35,12 +32,21 @@ import graft.sinks.Sinks
 object WebIngestStream {
 
   /** One micro-batch (usable directly as a nightly-batch entry point):
-    * write per-doc verdicts for `batch` (doc_id, blob), returning
-    * keep/drop/refused counts for monitoring. */
+    * write per-doc verdicts for `batch` (doc_id, blob), returning the
+    * committed keep/drop/refused counts. */
   def process(batch: DataFrame, runId: String, batchId: Long,
-              outDir: String, idCol: String = "doc_id"): Map[String, Long] = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return Map.empty
+              outDir: String, idCol: String = "doc_id"): Map[String, Long] =
+    SideCar.process(batch, runId, batchId, outDir, Map.empty[String, Long])(
+      verdicts(_, idCol))(committed => SideCar.verdictCounts(committed.select(
+        when(col("n_kept") < 0, "refused")
+          .when(col("keep") === 1, "keep").otherwise("drop").as("verdict"))))
+
+  /** Streaming entry: lands each micro-batch's verdicts. */
+  def start(blobs: DataFrame, runId: String, outDir: String,
+            checkpoint: String, idCol: String = "doc_id"): StreamingQuery =
+    SideCar.startLanding(blobs, runId, outDir, checkpoint)(verdicts(_, idCol))
+
+  private def verdicts(batch: DataFrame, idCol: String): DataFrame = {
     val bodies = Multimodal.warcHttpBodies(batch)
       .filter(col("content_type") === "text/html")
     val extracted = WebExtract.htmlExtract(bodies, htmlCol = "body_text")
@@ -49,35 +55,12 @@ object WebIngestStream {
     val scored = TextAnalysis.gopherFeatures(flat, textCol = "flat")
       .select(col(idCol), col("n_kept"), col("n_words"), col("keep"),
         md5(col("text").cast("binary")).as("text_md5"))
-    val verdicts = batch.select(col(idCol))
+    batch.select(col(idCol))
       .join(scored, Seq(idCol), "left")
       .select(col(idCol),
         coalesce(col("n_kept"), lit(-1L)).as("n_kept"),
         coalesce(col("n_words"), lit(0L)).as("n_words"),
         coalesce(col("keep"), lit(0L)).as("keep"),
         coalesce(col("text_md5"), lit("")).as("text_md5"))
-    Sinks.upsertPartitions(
-      verdicts.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId)),
-      outDir, Seq("run_id", "batch_id"))
-    spark.read.parquet(outDir)
-      .filter(col("run_id") === runId && col("batch_id") === batchId)
-      .select(when(col("n_kept") < 0, "refused")
-        .when(col("keep") === 1, "keep").otherwise("drop").as("verdict"))
-      .groupBy(col("verdict")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
-
-  /** Streaming entry: foreachBatch over a WARC-blob stream. `runId`
-    * must be stable across RESTARTS of the same logical run (same
-    * checkpoint) and distinct between runs sharing `outDir`. */
-  def start(blobs: DataFrame, runId: String, outDir: String,
-            checkpoint: String, idCol: String = "doc_id",
-            onStats: (Long, Map[String, Long]) => Unit = (_, _) => ())
-      : StreamingQuery =
-    blobs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onStats(batchId, process(batch, runId, batchId, outDir, idCol))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
 }

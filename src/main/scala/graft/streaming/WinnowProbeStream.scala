@@ -5,7 +5,6 @@ import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.StreamingQuery
 
 import graft.operators.Dedup
-import graft.sinks.Sinks
 
 /** Streaming EXCERPT detection against the persistent winnow index —
   * the [[IndexProbeDedup]] side-car pattern over
@@ -22,10 +21,9 @@ import graft.sinks.Sinks
   *
   * Verdicts: `excerpt_of_index` (with the strongest-overlap index doc
   * and its shared-fingerprint count) or `unique`. Exactly-once by the
-  * house rule: dynamic partition overwrite on (run id, batch id), so
-  * a foreachBatch retry overwrites its own partition; the probe
-  * itself is stateless across batches (the state IS the parquet
-  * index), so a replayed batch recomputes identical verdicts.
+  * [[SideCar]] contract; the probe itself is stateless across batches
+  * (the state IS the parquet index), so a replayed batch recomputes
+  * identical verdicts.
   *
   * Scale per batch: delta-side winnowing is narrow (native one-pass
   * expression), the postings census is map-side-combinable, and the
@@ -35,14 +33,25 @@ object WinnowProbeStream {
 
   /** One micro-batch (usable directly as a nightly-batch entry
     * point): verdicts for `batch` against the index at `indexDir`,
-    * returning verdict counts for monitoring. */
+    * returning the committed verdict counts. */
   def process(batch: DataFrame, runId: String, batchId: Long,
               indexDir: String, outDir: String, minShared: Int = 3,
               maxPostings: Int = 10000, idCol: String = "doc_id",
-              textCol: String = "text"): Map[String, Long] = {
-    val spark = batch.sparkSession
-    if (batch.isEmpty) return Map.empty
-    val index = Dedup.readWinnowIndex(spark, indexDir)
+              textCol: String = "text"): Map[String, Long] =
+    SideCar.process(batch, runId, batchId, outDir, Map.empty[String, Long])(
+      verdicts(_, indexDir, minShared, maxPostings, idCol, textCol))(
+      SideCar.verdictCounts)
+
+  /** Streaming entry: lands each micro-batch's verdicts. */
+  def start(docs: DataFrame, runId: String, indexDir: String, outDir: String,
+            checkpoint: String, minShared: Int = 3, maxPostings: Int = 10000,
+            idCol: String = "doc_id", textCol: String = "text"): StreamingQuery =
+    SideCar.startLanding(docs, runId, outDir, checkpoint)(
+      verdicts(_, indexDir, minShared, maxPostings, idCol, textCol))
+
+  private def verdicts(batch: DataFrame, indexDir: String, minShared: Int,
+                       maxPostings: Int, idCol: String, textCol: String): DataFrame = {
+    val index = Dedup.readWinnowIndex(batch.sparkSession, indexDir)
     val hits = Dedup.excerptAgainstIndex(batch, index, minShared, maxPostings,
         idCol, textCol)
       .withColumn("__rn", row_number().over(
@@ -50,33 +59,11 @@ object WinnowProbeStream {
           .orderBy(col("n_shared").desc, col("index_id"))))
       .filter(col("__rn") === 1)
       .select(col("new_id").as(idCol), col("index_id"), col("n_shared"))
-    val verdicts = batch.select(col(idCol))
+    batch.select(col(idCol))
       .join(hits, Seq(idCol), "left")
       .select(col(idCol),
         when(col("index_id").isNotNull, lit("excerpt_of_index"))
           .otherwise(lit("unique")).as("verdict"),
         col("index_id"), coalesce(col("n_shared"), lit(0L)).as("n_shared"))
-    Sinks.upsertPartitions(
-      verdicts.withColumn("run_id", lit(runId)).withColumn("batch_id", lit(batchId)),
-      outDir, Seq("run_id", "batch_id"))
-    spark.read.parquet(outDir)
-      .filter(col("run_id") === runId && col("batch_id") === batchId)
-      .groupBy(col("verdict")).count()
-      .collect().map(r => r.getString(0) -> r.getLong(1)).toMap
   }
-
-  /** Streaming entry: foreachBatch over a document stream. `runId`
-    * must be stable across RESTARTS of the same logical run (same
-    * checkpoint) and distinct between runs sharing `outDir`. */
-  def start(docs: DataFrame, runId: String, indexDir: String, outDir: String,
-            checkpoint: String, minShared: Int = 3, maxPostings: Int = 10000,
-            idCol: String = "doc_id", textCol: String = "text",
-            onStats: (Long, Map[String, Long]) => Unit = (_, _) => ()): StreamingQuery =
-    docs.writeStream
-      .foreachBatch { (batch: DataFrame, batchId: Long) =>
-        onStats(batchId, process(batch, runId, batchId, indexDir, outDir,
-          minShared, maxPostings, idCol, textCol))
-      }
-      .option("checkpointLocation", checkpoint)
-      .start()
 }

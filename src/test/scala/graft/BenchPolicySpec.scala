@@ -81,6 +81,17 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(m.flagDetail === None, "a recovered entry is not disputed — no detail")
   }
 
+  test("a query that throws is reported failed with no time, even after fast runs") {
+    // two quick runs, then the third throws: the seconds measured
+    // before the failure must not surface as the query's cost
+    val runs = Iterator[() => Double](() => 0.4, () => 0.3,
+      () => throw new IllegalStateException("boom"))
+    val r = BenchPolicy.attempt(() => runs.next()(), steadyMode = true, None)
+    assert(r === Left("boom"))
+    assert(BenchPolicy.attempt(scripted(2.5, 2.0, 2.1), steadyMode = true, None)
+      .map(_.value) === Right(2.0))
+  }
+
   test("an honestly slower query (<2.5x prior) is NOT flagged") {
     val m = BenchPolicy.measure(scripted(5.0, 5.2, 5.1), steadyMode = true,
       priorSteady = Some(2.7))

@@ -72,4 +72,15 @@ class MultimodalStreamSpec extends SparkSpec {
     val all = verdicts()
     assert(all.size === 19 && all(200L)._1 === "tiff")
   }
+
+  test("an empty micro-batch returns no counts and writes no partition") {
+    import spark.implicits._
+    val outDir = java.nio.file.Files.createTempDirectory("mmstream_empty")
+      .resolve("verdicts")
+    val stats = graft.streaming.ModalityRouterStream.process(
+      Seq.empty[(Long, Array[Byte])].toDF("doc_id", "blob"), "r1", 3L,
+      outDir.toString)
+    assert(stats.isEmpty)
+    assert(!java.nio.file.Files.exists(outDir), "an empty batch writes no partition")
+  }
 }

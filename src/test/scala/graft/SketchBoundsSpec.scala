@@ -460,9 +460,9 @@ class SketchBoundsSpec extends SparkSpec {
     val base = java.nio.file.Files.createTempDirectory("profile_stream").toString
     val dir = s"$base/hist"
     val mem = MemoryStream[(String, Long)]
-    val q = graft.streaming.ProfileStream.start(
-      mem.toDF().toDF("k", "v"), "r1", dir, s"$base/ckpt",
-      Seq(col("k")), col("v"), bucketWidth = 10L)
+    val q = graft.streaming.StateStream.start(
+      mem.toDF().toDF("k", "v"), "r1", dir, s"$base/ckpt")(
+      Relational.histogramState(_, Seq(col("k")), col("v"), 10L))
     try {
       mem.addData((0 until 500).map(i => ("t", i.toLong)): _*)
       q.processAllAvailable()
@@ -476,9 +476,10 @@ class SketchBoundsSpec extends SparkSpec {
     assert(quantiles() === Map(500 -> 490L, 990 -> 980L),
       "streamed state must reproduce the batch-direct quantiles")
     // post-crash foreachBatch retry: same (run, batch) overwrites
-    graft.streaming.ProfileStream.process(
+    graft.streaming.StateStream.process(
       (500 until 1000).map(i => ("t", i.toLong)).toDF("k", "v"),
-      "r1", batchId = 1L, dir, Seq(col("k")), col("v"), 10L)
+      "r1", batchId = 1L, dir)(
+      Relational.histogramState(_, Seq(col("k")), col("v"), 10L))
     assert(quantiles() === Map(500 -> 490L, 990 -> 980L),
       "replayed micro-batch must not double-count")
   }

@@ -275,32 +275,6 @@ class StreamingSpec extends SparkSpec {
     q.stop()
   }
 
-  test("transformWithState changelog twin matches flatMapGroupsWithState semantics") {
-    // the new API only runs on the RocksDB state store
-    spark.conf.set("spark.sql.streaming.stateStore.providerClass",
-      "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider")
-    try {
-      val mem = MemoryStream[Changelog.VersionedEvent]
-      val q = Changelog.compactTws(mem.toDS()).writeStream
-        .outputMode("append").format("memory").queryName("tws_out").start()
-      mem.addData(
-        Changelog.VersionedEvent(1, 10, "a"),
-        Changelog.VersionedEvent(1, 12, "b"),
-        Changelog.VersionedEvent(2, 5, "x"))
-      q.processAllAvailable()
-      mem.addData(
-        Changelog.VersionedEvent(1, 11, "stale"), // below state version: dropped
-        Changelog.VersionedEvent(2, 6, "y"))
-      q.processAllAvailable()
-      val out = spark.table("tws_out").as[Changelog.VersionedEvent]
-        .collect().map(e => (e.key, e.version, e.payload)).toSet
-      assert(out === Set((1L, 12L, "b"), (2L, 5L, "x"), (2L, 6L, "y")))
-      q.stop()
-    } finally {
-      spark.conf.unset("spark.sql.streaming.stateStore.providerClass")
-    }
-  }
-
   test("watermark loop closes: the measured curve's drop count IS the observed " +
     "streaming loss at each candidate delay") {
     // The decision loop rel_watermark_curve exists for: measure the

@@ -66,4 +66,15 @@ class WebIngestStreamSpec extends SparkSpec {
     assert(verdicts().size === 15)
     assert(stats.values.sum === 1L)
   }
+
+  test("an empty micro-batch returns no counts and writes no partition") {
+    import spark.implicits._
+    val outDir = java.nio.file.Files.createTempDirectory("webingest_empty")
+      .resolve("verdicts")
+    val stats = graft.streaming.WebIngestStream.process(
+      Seq.empty[(Long, Array[Byte])].toDF("doc_id", "blob"), "r1", 3L,
+      outDir.toString)
+    assert(stats.isEmpty)
+    assert(!java.nio.file.Files.exists(outDir), "an empty batch writes no partition")
+  }
 }
