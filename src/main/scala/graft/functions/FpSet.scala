@@ -213,8 +213,8 @@ object FpSet {
   }
 
   /** Compiled kernel behind [[FpInterCount]] — also the call target
-    * of its generated code. Inputs sorted ascending (nulls last for
-    * strings, as `array_sort` emits). */
+    * of its generated code. Inputs sorted ascending (nulls last, as
+    * `array_sort` emits). */
   def interCount(a: ArrayData, b: ArrayData, isString: Boolean): Long = {
     val na = a.numElements()
     val nb = b.numElements()
@@ -245,14 +245,18 @@ object FpSet {
       }
     } else {
       while (i < na && j < nb) {
+        if (a.isNullAt(i) || b.isNullAt(j)) {
+          if (a.isNullAt(na - 1) && b.isNullAt(nb - 1)) cnt += 1
+          return cnt
+        }
         val x = a.getLong(i)
         val y = b.getLong(j)
         if (x == y) {
           cnt += 1
           i += 1
-          while (i < na && a.getLong(i) == x) i += 1
+          while (i < na && !a.isNullAt(i) && a.getLong(i) == x) i += 1
           j += 1
-          while (j < nb && b.getLong(j) == y) j += 1
+          while (j < nb && !b.isNullAt(j) && b.getLong(j) == y) j += 1
         }
         else if (x < y) i += 1
         else j += 1

@@ -89,7 +89,11 @@ object JdbcUpsertSink {
   }
 
   /** foreachBatch adapter for [[graft.streaming.CdcStreamJob.start]]:
-    * compacts the micro-batch to one row per key, then writes. */
+    * when `versionCol` is given, compacts the micro-batch to one row per
+    * key with the sort-free [[graft.streaming.Changelog.compactBatch]]
+    * (one hash exchange on the key, newest version per key, replay-stable
+    * ties), then writes. All rows of a key sit in one partition, so the
+    * per-partition transactions never touch the same key. */
   def writer(url: String, table: String, keyCols: Seq[String], valCols: Seq[String],
              dialect: Dialect = DeleteInsert, opCol: Option[String] = None,
              versionCol: Option[String] = None): (DataFrame, Long) => Unit =

@@ -78,12 +78,22 @@ class FpInterCountSpec extends SparkSpec {
         size(array_intersect(a, b)).cast("long").as("ref")).head()
       assert(row.getLong(0) === row.getLong(1), s"case $i")
     }
-    // long duplicates too
-    val row = spark.range(1).select(
-      fp_inter_count(array(lit(1L), lit(1L), lit(2L)), array(lit(1L), lit(2L), lit(2L))).as("fast"),
-      size(array_intersect(array(lit(1L), lit(1L), lit(2L)),
-        array(lit(1L), lit(2L), lit(2L)))).cast("long").as("ref")).head()
-    assert(row.getLong(0) === row.getLong(1))
+    // the long path: duplicates, and nulls (sorted last) on one side
+    // and on both sides. A null slot reads as 0 without the guard, so
+    // the cases put a real 0 where an unguarded null would meet it.
+    val nullL = lit(null).cast("long")
+    val longCases = Seq(
+      (array(lit(1L), lit(1L), lit(2L)), array(lit(1L), lit(2L), lit(2L))),
+      (array(lit(-3L), nullL), array(lit(0L), lit(1L))),
+      (array(lit(1L), lit(2L)), array(lit(2L), nullL, nullL)),
+      (array(lit(0L), nullL), array(lit(0L), nullL)),
+      (array(nullL), array(nullL)))
+    longCases.zipWithIndex.foreach { case ((a, b), i) =>
+      val row = spark.range(1).select(
+        fp_inter_count(a, b).as("fast"),
+        size(array_intersect(a, b)).cast("long").as("ref")).head()
+      assert(row.getLong(0) === row.getLong(1), s"long case $i")
+    }
   }
 
   test("fp_weighted_inter: equals the explicit Σ w over A∩B; inclusion-exclusion union holds") {

@@ -490,4 +490,29 @@ class PlanShapeSpec extends SparkSpec {
     assert(plan.contains("BroadcastHashJoin"), plan.take(3000))
     assert(!plan.contains("SortMergeJoin"), plan.take(3000))
   }
+
+  test("compactBatch: one hash exchange, no Sort, Window or SortAggregate in the executed plan") {
+    import org.apache.spark.sql.execution.SparkPlan
+    import org.apache.spark.sql.execution.adaptive.{AdaptiveSparkPlanExec, QueryStageExec}
+    import spark.implicits._
+    def nodes(p: SparkPlan): Seq[String] = p match {
+      case a: AdaptiveSparkPlanExec => nodes(a.executedPlan)
+      case q: QueryStageExec => nodes(q.plan)
+      case _ => p.nodeName +: p.children.flatMap(nodes)
+    }
+    val sorting = Set("Sort", "Window", "WindowGroupLimit", "SortAggregate")
+    val batch = (1 to 60).map(i => (i % 7, s"c$i", i.toLong)).toDF("k", "code", "es")
+      .repartition(3)
+    def executed(df: org.apache.spark.sql.DataFrame) = {
+      df.collect()
+      nodes(df.queryExecution.executedPlan)
+    }
+    val compacted = executed(graft.streaming.Changelog.compactBatch(batch, Seq("k"), "es"))
+    assert(compacted.toSet.intersect(sorting).isEmpty, compacted.mkString(" <- "))
+    // the key's hash exchange (it replaces the input's round-robin one)
+    assert(compacted.count(_ == "Exchange") === 1, compacted.mkString(" <- "))
+    // control: the window form the sink used to run does plan a sort
+    val window = executed(Relational.latestByKey(batch, Seq(col("k")), Seq(col("es"))))
+    assert(window.toSet.intersect(sorting).nonEmpty, window.mkString(" <- "))
+  }
 }
