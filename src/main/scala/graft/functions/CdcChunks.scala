@@ -23,6 +23,8 @@ import org.apache.spark.unsafe.types.UTF8String
   * first 4 digest bytes big-endian ([[HexSliceLong]] parity) — is ≡ 0
   * (mod modulus). Each chunk's `chunk_md5` is the lowercase md5 hex
   * of its space-joined tokens, exactly `md5(cast(join as binary))`.
+  * Both joins are `array_join`'s: a null element is skipped with its
+  * separator, yet still counts as a position and in `n_chunk_tokens`.
   *
   * Why an expression (the [[CharShingles]] precedent — guide §1.2
   * step 2 once the shape is right): the composed form evaluated a
@@ -97,35 +99,42 @@ object CdcChunks {
   def compute(arr: ArrayData, window: Int, modulus: Int): ArrayData = {
     val n = arr.numElements()
     val md = mdLocal.get()
-    // token bytes fetched once (null elements as empty — the composed
-    // form's array_join skips nulls inside the joined window, while
-    // tokenizers here never emit them)
+    // token bytes fetched once; a null element stays null and, as in
+    // array_join, is hashed as neither a token nor a separator (it
+    // still counts as a position and towards n_chunk_tokens)
     val toks = new Array[Array[Byte]](n)
     var i = 0
     while (i < n) {
-      toks(i) = if (arr.isNullAt(i)) Array.emptyByteArray
-        else arr.getUTF8String(i).getBytes
+      if (!arr.isNullAt(i)) toks(i) = arr.getUTF8String(i).getBytes
       i += 1
     }
     val out = scala.collection.mutable.ArrayBuffer.empty[InternalRow]
     // current chunk's md5 stream (digest() resets it per emitted
-    // chunk) + token count
+    // chunk), token count, and whether a non-null token is hashed yet
     val chunkMd = chunkMdLocal.get()
     chunkMd.reset()
     var chunkLen = 0L
+    var chunkJoined = false
     i = 0
     while (i < n) {
       // append token i to the running chunk hash
-      if (chunkLen > 0) chunkMd.update(SP)
-      chunkMd.update(toks(i))
+      if (toks(i) != null) {
+        if (chunkJoined) chunkMd.update(SP)
+        chunkMd.update(toks(i))
+        chunkJoined = true
+      }
       chunkLen += 1
       // boundary test after 1-based token i+1: window fingerprint
       if (i + 1 >= window) {
         md.reset()
+        var joined = false
         var j = i - (window - 1)
         while (j <= i) {
-          if (j > i - (window - 1)) md.update(SP)
-          md.update(toks(j))
+          if (toks(j) != null) {
+            if (joined) md.update(SP)
+            md.update(toks(j))
+            joined = true
+          }
           j += 1
         }
         val d = md.digest()
@@ -134,6 +143,7 @@ object CdcChunks {
         if (fp % modulus == 0) {
           out += new GenericInternalRow(Array[Any](chunkLen, hex(chunkMd.digest())))
           chunkLen = 0L
+          chunkJoined = false
         }
       }
       i += 1

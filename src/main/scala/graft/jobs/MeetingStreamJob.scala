@@ -1,5 +1,7 @@
 package graft.jobs
 
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
@@ -14,14 +16,19 @@ import graft.streaming.CdcStreamJob
   * spark-submit --class graft.jobs.MeetingStreamJob <jar> \
   *   --events  <dir of Canal flat-JSON files | kafka:brokers/topic> \
   *   --dim-jdbc <jdbc url> --dim-query "<pushdown sql>" \
+  *   [--dim-refresh "1 minute"] \
   *   --sink-jdbc <jdbc url> --sink-table meeting_result \
-  *   --checkpoint <dir>
+  *   --checkpoint <dir> [--trigger "1 second"]
   * }}}
   *
   * Pipeline: Canal feed → envelope decode → {INSERT,UPDATE,DELETE}
-  * selection → typed projection → broadcast dimension enrich →
-  * per-batch compacted keyed upsert/delete. Exactly-once via
-  * checkpointed offsets + idempotent sink.
+  * selection → typed projection → held-dimension enrich →
+  * per-batch compacted keyed upsert/delete. The dimension query runs
+  * at start and then every `--dim-refresh` (a Scala duration, "Inf" to
+  * read it once): a committed dimension change reaches every
+  * micro-batch that starts more than that plus one reload after it.
+  * Replays of a micro-batch converge via checkpointed offsets + the
+  * keyed sink (see [[graft.sinks.JdbcUpsertSink]] for its limit).
   */
 object MeetingStreamJob {
 
@@ -44,7 +51,8 @@ object MeetingStreamJob {
         Files.textStream(spark, dir)
     }
     val dim = Jdbc.query(spark, a("--dim-jdbc"), a("--dim-query"))
-    val enriched = CdcStreamJob.enriched(raw, dim)
+    val enriched = CdcStreamJob.enriched(raw, dim,
+      dimRefresh = Duration(a.getOrElse("--dim-refresh", "1 minute")))
     val q = CdcStreamJob.start(enriched, a("--checkpoint"),
       JdbcUpsertSink.writer(a("--sink-jdbc"), a.getOrElse("--sink-table", "meeting_result"),
         keyCols = Seq("meeting_id"),

@@ -11,10 +11,15 @@ import org.apache.spark.sql.{DataFrame, Row}
   *  - per-partition connections and statement *batches* (the reference
   *    did one `executeUpdate` per record through a dbcp2 pool —
   *    per-record round-trips are the first thing that dies at scale);
-  *  - idempotent keyed upsert (REPLACE INTO on MySQL; portable
-  *    delete+insert elsewhere — same last-writer-wins semantics) so
-  *    micro-batch replays converge: checkpointed offsets + idempotent
-  *    writes = exactly-once end-to-end;
+  *  - keyed upsert (REPLACE INTO on MySQL; portable delete+insert
+  *    elsewhere — same last-writer-wins semantics), so a replay of the
+  *    same micro-batch after a failure converges to the same table;
+  *  - limit: rows are written without a stored-version check, so a
+  *    stale event arriving in a *later* micro-batch overwrites a newer
+  *    row (or brings back a deleted one). Versions are ordered only
+  *    within one micro-batch, by `writer`'s compaction; the result is
+  *    exactly-once only for a source that delivers each key's changes
+  *    in version order;
   *  - CDC DELETE ops become keyed deletes (the reference dropped
   *    retractions on the floor, Main.java:129).
   *

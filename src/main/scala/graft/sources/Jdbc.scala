@@ -10,9 +10,11 @@ import org.apache.spark.sql.{DataFrame, SparkSession}
   * pre-join down to the database, shipping only the projected columns)
   * and fixing its two limitations:
   *
-  *  - snapshot staleness: a stream–static join re-plans the static
-  *    side per micro-batch, so re-reading the dimension is a config
-  *    (trigger cadence), not a code change;
+  *  - snapshot staleness: a stream holds the dimension as one broadcast
+  *    and re-reads it every `dimRefresh` off the micro-batch path
+  *    ([[graft.streaming.HeldDimension]]), so freshness is a config,
+  *    not a code change: a committed change reaches every micro-batch
+  *    that starts more than `dimRefresh` plus one reload after it;
   *  - single-connection scan: `partitionColumn/numPartitions` split
   *    the snapshot read across executors when the dimension is large.
   */

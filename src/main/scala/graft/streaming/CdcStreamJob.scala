@@ -1,5 +1,7 @@
 package graft.streaming
 
+import scala.concurrent.duration._
+
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
@@ -8,21 +10,26 @@ import graft.codec.CanalCodec
 
 /** The reference's whole job (Main.java:43–151) as one Structured
   * Streaming pipeline: Kafka Canal feed → envelope decode → change
-  * selection → typed projection → broadcast dimension enrich →
+  * selection → typed projection → held-dimension enrich →
   * foreachBatch upsert sink.
   *
   * Differences from the reference, by design (SURVEY.md §7):
   *  - UPDATE/DELETE are first-class (op column drives the sink's
   *    upsert/delete), not INSERT-only;
-  *  - the dimension is re-read per micro-batch (stream–static joins
-  *    re-plan the static side), fixing the reference's snapshot-once
-  *    staleness (CreateJDBCInputFormat.java:8–10);
-  *  - no join state, no TTL: the static side broadcasts, so 100 TB of
-  *    stream never shuffles (the reference needed 1–2 day idle-state
-  *    TTL to survive);
-  *  - exactly-once to the sink via idempotent keyed upsert +
+  *  - the dimension is held as one broadcast and re-read every
+  *    `dimRefresh` off the micro-batch path ([[HeldDimension]]): a
+  *    committed dimension change reaches every micro-batch that starts
+  *    more than `dimRefresh` plus one reload after it, where the
+  *    reference read it once (CreateJDBCInputFormat.java:8–10);
+  *  - no join and no join state, no TTL: each event looks its room up
+  *    in the broadcast inside the decode stage, so 100 TB of stream
+  *    never shuffles for enrichment (the reference needed 1–2 day
+  *    idle-state TTL to survive);
+  *  - a replayed micro-batch converges in the sink via keyed upsert +
   *    checkpointed offsets (the reference's plain INSERT into
-  *    Greenplum was at-least-once despite EXACTLY_ONCE checkpoints).
+  *    Greenplum was at-least-once despite EXACTLY_ONCE checkpoints);
+  *    the sink does not order versions across micro-batches
+  *    ([[graft.sinks.JdbcUpsertSink]]'s documented limit).
   */
 object CdcStreamJob {
 
@@ -43,15 +50,22 @@ object CdcStreamJob {
   }
 
   /** Raw Canal JSON stream → enriched meeting rows. `dim` is a *batch*
-    * DataFrame (JDBC/parquet snapshot) — the static side of the
-    * stream–static left join, broadcast per micro-batch. */
+    * DataFrame (JDBC/parquet) of rooms keyed by `meetingroom_id`, read
+    * now and every `dimRefresh` into a [[HeldDimension]]; it must hold
+    * one row per room (a duplicate fails here with
+    * `IllegalArgumentException`). Rows and schema are the left join's
+    * on `address_id = meetingroom_id`: unmatched and null rooms give
+    * null room columns. */
   def enriched(raw: DataFrame, dim: DataFrame,
-               ops: Set[String] = Set("INSERT", "UPDATE", "DELETE")): DataFrame = {
+               ops: Set[String] = Set("INSERT", "UPDATE", "DELETE"),
+               dimRefresh: Duration = 1.minute): DataFrame = {
     val events = CanalCodec.meetingPipeline(raw, ops = ops)
-    events.join(broadcast(dim), events("address_id") === dim("meetingroom_id"), "left")
-      .select(events("meeting_id"), events("meeting_code"),
-        dim("meetingroom_id"), dim("meetingroom_name"),
-        dim("location_name"), dim("city"), events("op"), events("es"))
+    val rooms = new HeldDimension(dim, "meetingroom_id",
+      Seq("meetingroom_id", "meetingroom_name", "location_name", "city"),
+      events.schema("address_id").dataType, dimRefresh)
+    events.select(col("meeting_id"), col("meeting_code"), rooms(col("address_id")).as("room"),
+        col("op"), col("es"))
+      .select("meeting_id", "meeting_code", "room.*", "op", "es")
   }
 
   /** Wire the pipeline to a per-batch writer (e.g.

@@ -59,8 +59,9 @@ object Changelog {
     * seen — an event-time TTL caps it at the keys active within the TTL
     * window. Trade-off: an event for a key arriving later than the TTL
     * is re-emitted even if stale; choose `ttlMs` larger than the
-    * source's maximum disorder (the idempotent upsert sink keyed on a
-    * version column still converges downstream). */
+    * source's maximum disorder. Downstream,
+    * [[graft.sinks.JdbcUpsertSink]] does not guard on versions: a
+    * re-emitted stale event overwrites the newer row it reaches. */
   def compactExpiring(events: Dataset[TimedVersionedEvent], watermarkDelay: String,
                       ttlMs: Long): Dataset[TimedVersionedEvent] = {
     import events.sparkSession.implicits._

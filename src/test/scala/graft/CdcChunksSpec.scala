@@ -27,19 +27,22 @@ class CdcChunksSpec extends SparkSpec {
     ((d(0) & 0xffL) << 24) | ((d(1) & 0xffL) << 16) | ((d(2) & 0xffL) << 8) | (d(3) & 0xffL)
   }
 
+  /** Space join skipping nulls, as `array_join` does. */
+  private def join(toks: collection.Seq[String]): String = toks.filter(_ != null).mkString(" ")
+
   private def ref(toks: Seq[String], window: Int, modulus: Int): Seq[(Int, Long, String)] = {
     val out = scala.collection.mutable.ArrayBuffer.empty[(Int, Long, String)]
     val cur = scala.collection.mutable.ArrayBuffer.empty[String]
     for (i <- toks.indices) {
       cur += toks(i)
       if (i + 1 >= window &&
-          fp32(toks.slice(i + 1 - window, i + 1).mkString(" ")) % modulus == 0) {
-        out += ((out.length, cur.length.toLong, md5hex(cur.mkString(" "))))
+          fp32(join(toks.slice(i + 1 - window, i + 1))) % modulus == 0) {
+        out += ((out.length, cur.length.toLong, md5hex(join(cur))))
         cur.clear()
       }
     }
     if (cur.nonEmpty)
-      out += ((out.length, cur.length.toLong, md5hex(cur.mkString(" "))))
+      out += ((out.length, cur.length.toLong, md5hex(join(cur))))
     out.toSeq
   }
 
@@ -61,6 +64,37 @@ class CdcChunksSpec extends SparkSpec {
         .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sortBy(_._1).toSeq }
       val exp = rows.filter(_._2.nonEmpty)
         .map { case (id, tk) => id -> ref(tk, window, modulus) }.toMap
+      assert(got === exp, s"window=$window modulus=$modulus")
+    }
+  }
+
+  test("null elements are skipped with their separators, as md5(array_join(...)) does") {
+    GraftExtensions.register(spark)
+    val arrays = Seq(Seq("a", null, "b"), Seq(null, "a", "b"), Seq("a", "b", null),
+      Seq("a", null, null, "b", "c"), Seq(null, null), Seq("x", null, "y", "z", null, "w"))
+    val df = arrays.zipWithIndex.map { case (tk, i) => (i.toLong, tk) }.toDF("id", "tk")
+    // a window longer than any array closes no boundary: one whole-array
+    // chunk, whose hash must be array_join's
+    val whole = arrays.map(tk => md5hex(join(tk)))
+    val one = df.select(col("id"), md5(array_join(col("tk"), " ")).as("joined"),
+        cdc_chunks(col("tk"), 100, 1).as("ch"))
+      .orderBy("id").collect()
+    one.foreach { r =>
+      val chunks = r.getSeq[org.apache.spark.sql.Row](2)
+      assert(chunks.map(_.getLong(0)) === Seq(arrays(r.getLong(0).toInt).size.toLong), r)
+      assert(chunks.head.getString(1) === r.getString(1), r)
+    }
+    assert(one.map(_.getString(1)).toSeq === whole)
+    // window fingerprints and chunk hashes against the reference rule
+    // over null-skipping joins, across windows and moduli
+    for ((window, modulus) <- Seq((1, 1), (2, 1), (2, 2), (3, 2))) {
+      val got = df.select(col("id"), posexplode(cdc_chunks(col("tk"), window, modulus))
+          .as(Seq("idx", "ch")))
+        .select(col("id"), col("idx"), col("ch.n_chunk_tokens"), col("ch.chunk_md5"))
+        .collect()
+        .map(r => (r.getLong(0), (r.getInt(1), r.getLong(2), r.getString(3))))
+        .groupBy(_._1).map { case (k, v) => k -> v.map(_._2).sortBy(_._1).toSeq }
+      val exp = arrays.zipWithIndex.map { case (tk, i) => i.toLong -> ref(tk, window, modulus) }.toMap
       assert(got === exp, s"window=$window modulus=$modulus")
     }
   }

@@ -515,4 +515,85 @@ class PlanShapeSpec extends SparkSpec {
     val window = executed(Relational.latestByKey(batch, Seq(col("k")), Seq(col("es"))))
     assert(window.toSet.intersect(sorting).nonEmpty, window.mkString(" <- "))
   }
+
+  test("meeting stream: at most 2 Spark jobs per non-empty micro-batch, no broadcast " +
+    "exchange or join in the micro-batch plan") {
+    import java.util.concurrent.ConcurrentHashMap
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    import org.apache.spark.sql.execution.exchange.BroadcastExchangeExec
+    import org.apache.spark.sql.execution.joins.BroadcastHashJoinExec
+    import org.apache.spark.sql.execution.streaming.runtime.{MemoryStream, StreamingQueryWrapper}
+    import org.apache.spark.sql.streaming.Trigger
+    import spark.implicits._
+    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
+    val url = "jdbc:derby:memory:jobbudget;create=true"
+    val conn = java.sql.DriverManager.getConnection(url)
+    Seq("CREATE TABLE meeting_result (meeting_id INT PRIMARY KEY, meeting_code VARCHAR(64), " +
+        "meetingroom_id INT, meetingroom_name VARCHAR(64), location_name VARCHAR(64), city VARCHAR(64))",
+      "CREATE TABLE room (meetingroom_id INT PRIMARY KEY, meetingroom_name VARCHAR(64), " +
+        "location_id INT, location_name VARCHAR(64), city VARCHAR(64))",
+      "INSERT INTO room VALUES (3, 'Room A', 10, 'Floor 1', 'Shanghai'), " +
+        "(4, 'Room B', 11, 'Floor 2', 'Beijing')"
+    ).foreach(conn.createStatement().execute)
+    conn.close()
+    def resultRows(): Int = {
+      val c = java.sql.DriverManager.getConnection(url)
+      try { val rs = c.createStatement().executeQuery("SELECT COUNT(*) FROM meeting_result"); rs.next(); rs.getInt(1) }
+      finally c.close()
+    }
+    // a JDBC dimension, as the job reads it (a local one would broadcast without a job)
+    val dim = graft.sources.Jdbc.query(spark, url, "SELECT * FROM room")
+    // jobs per micro-batch, read from the batch id streaming puts on each job
+    val jobs = new ConcurrentHashMap[String, AtomicInteger]()
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("streaming.sql.batchId")))
+          .orElse(Option(e.properties).flatMap(p => Option(p.getProperty("budget.marker"))))
+          .foreach(b => jobs.computeIfAbsent(b, _ => new AtomicInteger()).incrementAndGet())
+    }
+    spark.sparkContext.addSparkListener(listener)
+    val mem = MemoryStream[String]
+    val q = graft.streaming.CdcStreamJob.start(
+      graft.streaming.CdcStreamJob.enriched(mem.toDF(), dim),
+      java.nio.file.Files.createTempDirectory("jobbudget").toString,
+      graft.sinks.JdbcUpsertSink.writer(url, "meeting_result", keyCols = Seq("meeting_id"),
+        valCols = Seq("meeting_code", "meetingroom_id", "meetingroom_name", "location_name", "city"),
+        opCol = Some("op"), versionCol = Some("es")),
+      trigger = Trigger.ProcessingTime(0))
+    try {
+      for (b <- 0 until 3) {
+        mem.addData((0 until 20).map { i =>
+          val id = b * 7 + i
+          s"""{"data":[{"id":"$id","meeting_code":"mc-$id-$b","address_id":"${3 + i % 3}",""" +
+            s""""mstart_date":"2024-05-01 09:00:00","mend_date":"2024-05-01 10:00:00"}],""" +
+            s""""database":"mrbs","es":${1700000000000L + b * 100 + i},"id":1,"isDdl":false,""" +
+            s""""mysqlType":{},"old":null,"sql":"","sqlType":{},"table":"t_meeting_info",""" +
+            s""""ts":1,"type":"${if (b == 0) "INSERT" else "UPDATE"}"}"""
+        }: _*)
+        // processAllAvailable can return before the batch just added is
+        // processed; wait for its rows so each addData is its own batch
+        val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+        do q.processAllAvailable() while (resultRows() < 20 + 7 * b && System.nanoTime() < deadline)
+      }
+      // listener events arrive in order: once a marker job is seen, every batch job has been
+      spark.sparkContext.setLocalProperty("budget.marker", "marker")
+      try spark.range(1).collect() finally spark.sparkContext.setLocalProperty("budget.marker", null)
+      val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+      while (!jobs.containsKey("marker") && System.nanoTime() < deadline) Thread.sleep(20)
+      val perBatch = q.recentProgress.filter(_.numInputRows > 0).map(_.batchId).distinct
+        .map(b => b -> Option(jobs.get(b.toString)).map(_.get).getOrElse(0)).toMap
+      assert(perBatch.size === 3, perBatch)
+      assert(perBatch.values.forall(n => n >= 1 && n <= 2), s"jobs per micro-batch: $perBatch")
+      val plan = q.asInstanceOf[StreamingQueryWrapper].streamingQuery.lastExecution.executedPlan
+      assert(plan.collectFirst { case p: BroadcastExchangeExec => p }.isEmpty, plan.toString)
+      assert(plan.collectFirst { case p: BroadcastHashJoinExec => p }.isEmpty, plan.toString)
+      // one lookup per event, not one per room column
+      assert(plan.collect { case p => p.expressions.flatMap(_.collect {
+        case l: graft.streaming.SnapshotLookup => l }) }.flatten.size === 1, plan.toString)
+    } finally {
+      q.stop()
+      spark.sparkContext.removeSparkListener(listener)
+    }
+  }
 }

@@ -2,9 +2,11 @@ package graft
 
 import java.sql.{DriverManager, Timestamp}
 
+import scala.concurrent.duration.Duration
+
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
-import org.apache.spark.sql.streaming.Trigger
+import org.apache.spark.sql.streaming.{StreamingQuery, Trigger}
 
 import graft.sinks.JdbcUpsertSink
 import graft.streaming.{CdcStreamJob, Changelog, Windows}
@@ -80,6 +82,143 @@ class StreamingSpec extends SparkSpec {
 
     q.stop()
     conn.close()
+  }
+
+  /** Rooms and locations in a fresh in-memory Derby database, and the
+    * pushed-down dimension query over them, as `MeetingStreamJob` reads it. */
+  private def derbyDim(db: String, roomKey: String = "PRIMARY KEY"): (String, String) = {
+    val url = s"jdbc:derby:memory:$db;create=true"
+    val c = DriverManager.getConnection(url)
+    try Seq(
+      "CREATE TABLE location (location_id INT PRIMARY KEY, location_name VARCHAR(64), city VARCHAR(64))",
+      s"CREATE TABLE meetingroom (meetingroom_id INT $roomKey, meetingroom_name VARCHAR(64), location_id INT)",
+      "INSERT INTO location VALUES (10, 'Floor 1', 'Shanghai'), (11, 'Floor 2', 'Beijing')",
+      "INSERT INTO meetingroom VALUES (3, 'Room A', 10), (4, 'Room B', 11)"
+    ).foreach(c.createStatement().execute) finally c.close()
+    (url, """SELECT r.meetingroom_id, r.meetingroom_name, l.location_id, l.location_name, l.city
+            |FROM meetingroom r JOIN location l ON r.location_id = l.location_id""".stripMargin)
+  }
+
+  private def exec(url: String, sql: String): Unit = {
+    val c = DriverManager.getConnection(url)
+    try c.createStatement().execute(sql) finally c.close()
+  }
+
+  /** One meeting stream over a Derby dimension, fed by its own
+    * `MemoryStream` (a MemoryStream drops what one query commits, so two
+    * queries cannot share one); `cities` is `meeting id → city` as written. */
+  private final class HeldStream(url: String, sql: String, refresh: Duration) {
+    val mem = MemoryStream[String]
+    private val seen = new java.util.concurrent.ConcurrentHashMap[Int, String]()
+    val q: StreamingQuery = CdcStreamJob.enriched(mem.toDF(), graft.sources.Jdbc.query(spark, url, sql),
+      dimRefresh = refresh).writeStream.foreachBatch { (b: org.apache.spark.sql.DataFrame, _: Long) =>
+        b.select("meeting_id", "city").collect().foreach(r => seen.put(r.getInt(0), r.getString(1)))
+      }.start()
+    def cities: Map[Int, String] = {
+      import scala.jdk.CollectionConverters._
+      seen.asScala.toMap
+    }
+  }
+
+  /** Adds an UPDATE of meeting `id` into room 3 to each stream and waits
+    * until it is written: `processAllAvailable` alone can return early,
+    * when a trigger that looked for data just before the add reports
+    * "no new data" just after. */
+  private def step(streams: HeldStream*)(id: Int): Unit = {
+    val event = canal(id, s"mc-$id", 3, "UPDATE")
+    streams.foreach(_.mem.addData(event))
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    for (s <- streams) {
+      do s.q.processAllAvailable() while (!s.cities.contains(id) && System.nanoTime() < deadline)
+      assert(s.cities.contains(id), s"meeting $id missing after 30 s: ${s.q.status}")
+    }
+  }
+
+  /** Steps meetings after `from` through `streams` until the first shows
+    * `city` for the last one, or 30 s pass; returns the last id. */
+  private def stepUntil(city: String, from: Int, streams: HeldStream*): Int = {
+    val deadline = System.nanoTime() + 30L * 1000 * 1000 * 1000
+    var id = from
+    while (streams.head.cities(id) != city && System.nanoTime() < deadline) {
+      Thread.sleep(100); id += 1; step(streams: _*)(id)
+    }
+    id
+  }
+
+  test("held dimension matches the left join it replaces: rows, null rooms and schema, " +
+    "for Seq- and Derby-built dimensions") {
+    val raw = Seq(canal(1, "mc-1", 3, "INSERT"), canal(2, "mc-2", 99, "INSERT"),
+      canal(3, "mc-3", null, "UPDATE"), canal(4, "mc-4", 4, "DELETE")).toDF("value")
+    val (url, sql) = derbyDim("heldparity")
+    for (d <- Seq(dim, graft.sources.Jdbc.query(spark, url, sql))) {
+      // the replaced form, kept here as the oracle
+      val events = graft.codec.CanalCodec.meetingPipeline(raw,
+        ops = Set("INSERT", "UPDATE", "DELETE"))
+      val joined = events.join(broadcast(d), events("address_id") === d("meetingroom_id"), "left")
+        .select(events("meeting_id"), events("meeting_code"),
+          d("meetingroom_id"), d("meetingroom_name"), d("location_name"), d("city"),
+          events("op"), events("es"))
+      val held = CdcStreamJob.enriched(raw, d, dimRefresh = scala.concurrent.duration.Duration.Inf)
+      // names (exact case: the sink looks columns up by name), order and types
+      assert(held.schema.map(f => (f.name, f.dataType)) ===
+        joined.schema.map(f => (f.name, f.dataType)))
+      assert(held.schema.map(_.name).take(3) === Seq("meeting_id", "meeting_code", "meetingroom_id"))
+      val rows = held.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Int]).toSeq
+      assert(rows === joined.collect().map(_.toSeq).sortBy(_.head.asInstanceOf[Int]).toSeq)
+      assert(rows.map(r => r(0) -> r(5)) ===
+        Seq(1 -> "Shanghai", 2 -> null, 3 -> null, 4 -> "Beijing"))
+    }
+  }
+
+  test("held dimension: a committed city change reaches the stream after one short " +
+    "dimRefresh, and a stream that has not re-read it keeps the old city") {
+    import scala.concurrent.duration._
+    val (url, sql) = derbyDim("heldfresh")
+    val fresh = new HeldStream(url, sql, 200.millis)
+    val held = new HeldStream(url, sql, 1.hour)
+    step(fresh, held)(1)
+    assert(fresh.cities === Map(1 -> "Shanghai") && held.cities === Map(1 -> "Shanghai"))
+    exec(url, "UPDATE location SET city = 'Hangzhou' WHERE location_id = 10")
+    val last = stepUntil("Hangzhou", 1, fresh, held)
+    assert(fresh.cities(last) === "Hangzhou", "the 200 ms refresh never delivered the change")
+    // no per-batch re-read: the hour-refresh stream ran the same batches
+    assert(held.cities.values.toSet === Set("Shanghai"))
+    fresh.q.stop(); held.q.stop()
+    // a stopped stream's dimension is no longer re-read: after a re-read
+    // already under way ends, no job in five refresh periods
+    Thread.sleep(500)
+    val jobs = new java.util.concurrent.atomic.AtomicInteger()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        jobs.incrementAndGet()
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try Thread.sleep(1000) finally spark.sparkContext.removeSparkListener(listener)
+    assert(jobs.get === 0)
+  }
+
+  test("held dimension: a duplicate key fails the first load; a failing re-read " +
+    "keeps the previous snapshot") {
+    import scala.concurrent.duration._
+    val raw = Seq(canal(1, "mc-1", 3, "INSERT")).toDF("value")
+    val dup = dim.union(Seq((3, "Room A2", 12, "Floor 3", "Shenzhen")).toDF(dim.columns.toSeq: _*))
+    intercept[IllegalArgumentException](CdcStreamJob.enriched(raw, dup))
+    // a room table without a primary key, so a duplicate can be committed later
+    val (url, sql) = derbyDim("heldfail", roomKey = "")
+    val s = new HeldStream(url, sql, 200.millis)
+    step(s)(1)
+    exec(url, "INSERT INTO meetingroom VALUES (3, 'Room A2', 11)")
+    exec(url, "UPDATE location SET city = 'Hangzhou' WHERE location_id = 10")
+    // several refresh periods, each re-read failing on the duplicate
+    Thread.sleep(1500)
+    step(s)(2)
+    assert(s.cities === Map(1 -> "Shanghai", 2 -> "Shanghai"))
+    assert(s.q.isActive)
+    // the refreshes kept running: once the duplicate goes, the change arrives
+    exec(url, "DELETE FROM meetingroom WHERE meetingroom_name = 'Room A2'")
+    val last = stepUntil("Hangzhou", 2, s)
+    assert(s.cities(last) === "Hangzhou")
+    s.q.stop()
   }
 
   test("tumbling window with watermark aggregates by event time") {
