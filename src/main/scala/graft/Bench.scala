@@ -1,7 +1,5 @@
 package graft
 
-import org.apache.spark.sql.SparkSession
-
 /** Per-round benchmark main. Runs every SparkEntry query against
   * SPARK_GRAFT_SF_DIR and prints one JSON line with per-query seconds.
   *
@@ -44,33 +42,10 @@ import org.apache.spark.sql.SparkSession
   */
 object Bench {
 
-  /** Every unpartitioned window in the query surface is k-bounded
-    * (ivfTrain/pqTrain seed rows, the top-100 vocabulary rank — each
-    * commented at its site); WindowExec still WARNs "No Partition
-    * Defined" once per execution, ~176 lines per full run, burying
-    * real warnings. Silence exactly that logger — category log levels
-    * stay untouched, so a genuinely unpartitioned window over data
-    * still surfaces through plan lints (`PlanAuditSpec`), which ban it
-    * where it matters. */
-  private[graft] def silenceKBoundedWindowWarnings(): Unit =
-    for (cls <- Seq("org.apache.spark.sql.execution.window.WindowExec",
-                    "org.apache.spark.sql.execution.window.WindowExecBase"))
-      org.apache.logging.log4j.core.config.Configurator.setLevel(
-        cls, org.apache.logging.log4j.Level.ERROR)
-
   def main(args: Array[String]): Unit = {
     val sfDir = sys.env.getOrElse("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder()
-      .master(s"local[$cpus]")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    silenceKBoundedWindowWarnings()
+    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt
+    val spark = Session.local(cpus)
     // Untimed warmup: JVM/codegen/file-listing costs land here, not on
     // the first measured query.
     graft.sources.Tables.normalize(spark)
@@ -208,8 +183,10 @@ object Bench {
     // far shows the capture keeping only a ~2000-char TAIL of it
     // ("parsed": null since round 3) — the ~18 KB four-map line never
     // survives whole. Repo-side fix (round-10): stdout carries ONE
-    // COMPACT line — the contract keys only (metric/value/unit/
-    // queries/sf), per-query seconds trimmed to 3 decimals with
+    // COMPACT line — the contract keys (metric/value/unit/queries/sf)
+    // plus the host verdict (`degraded_host`, and `flag_count`, the
+    // number of flagged queries) so a stdout-only capture still sees
+    // a corrupted session — per-query seconds trimmed to 3 decimals with
     // trailing zeros stripped — and the full four-map artifact
     // (steady/gc/flags/flag_detail at fixed precision) goes to the
     // file only. The compact line is still ~6 KB (256 query names
@@ -234,7 +211,7 @@ object Bench {
       System.err.println(s"[bench] could not write $lastPath: ${e.getMessage}")
     }
     println(
-      s"""{"metric":"total","value":${compactNum(total)},"unit":"sec","queries":$qsCompact,"failed":$failed,"sf":"$sfDir","detail":"$lastPath"}""")
+      s"""{"metric":"total","value":${compactNum(total)},"unit":"sec","queries":$qsCompact,"failed":$failed,"degraded_host":$degraded,"flag_count":${flagged.size},"sf":"$sfDir","detail":"$lastPath"}""")
     spark.stop()
   }
 }

@@ -2,7 +2,6 @@ package graft.jobs
 
 import scala.concurrent.duration.Duration
 
-import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.streaming.Trigger
 
 import graft.sinks.JdbcUpsertSink
@@ -34,14 +33,7 @@ object MeetingStreamJob {
 
   def main(args: Array[String]): Unit = {
     val a = args.sliding(2, 2).collect { case Array(k, v) => k -> v }.toMap
-    val builder = SparkSession.builder()
-      .appName("meeting-stream-job")
-      .config("spark.sql.session.timeZone", "UTC")
-    // default master only when launched outside spark-submit (which
-    // sets spark.master as a system property)
-    if (!new org.apache.spark.SparkConf().contains("spark.master"))
-      builder.master("local[*]")
-    val spark = builder.getOrCreate()
+    val spark = graft.Session.local(Runtime.getRuntime.availableProcessors)
 
     val raw = a("--events") match {
       case k if k.startsWith("kafka:") =>

@@ -74,10 +74,7 @@ object Cdc {
     *
     * Scale shape: one window shuffle on the DELTA (delta-sized) plus
     * one full-outer equi-join shuffle on the key — the unavoidable
-    * cost of touching every key once. The stored production form
-    * composes this with partition overwrite
-    * ([[graft.sinks.Sinks.upsertPartitions]]) so only partitions
-    * holding delta keys rewrite, never the whole snapshot. */
+    * cost of touching every key once. */
   def mergeInto(target: DataFrame, delta: DataFrame, keys: Seq[String],
                 opCol: String = "op", seqCol: String = "seq"): DataFrame = {
     val valueCols = target.columns.filterNot(keys.contains).toSeq
@@ -95,15 +92,13 @@ object Cdc {
 
   /** Change-data-feed GENERATION — [[mergeInto]]'s inverse: diff two
     * snapshots into the keyed I/U/D changelog that replays old → new
-    * (the feed a downstream [[mergeInto]]/[[applyDeltaStored]] consumer
-    * ingests when the upstream system only publishes snapshots).
+    * (the feed a downstream [[mergeInto]] consumer ingests when the
+    * upstream system only publishes snapshots).
     * Verdicts come from [[Relational.snapshotDiff]]; I/U rows carry the
     * NEW snapshot's payload, D rows null payloads. Round-trip law
     * `mergeInto(old, changelogFrom(old, new)) ≡ new` is spec-proven.
     * Cost: the diff's full-outer key join plus one payload equi-join —
-    * O(snapshot) shuffles, the honest snapshot-diff price; at table
-    * scale run it bucket-by-bucket over the [[initUpsertTable]] layout
-    * so each diff is bucket-sized. */
+    * O(snapshot) shuffles, the honest snapshot-diff price. */
   def changelogFrom(oldSnap: DataFrame, newSnap: DataFrame, keys: Seq[String],
                     opCol: String = "op", seqCol: String = "seq"): DataFrame = {
     val valueCols = oldSnap.columns.filterNot(keys.contains).toSeq
@@ -119,78 +114,6 @@ object Cdc {
         lit(null).cast(oldSnap.schema(c).dataType).as(c)) ++ Seq(
         lit("D").as(opCol), lit(1).as(seqCol)): _*)
     ud.unionByName(dels)
-  }
-
-  private def bucketOf(keys: Seq[String], numBuckets: Int) =
-    pmod(xxhash64(keys.map(col): _*), lit(numBuckets.toLong)).cast("int")
-
-  /** PERSISTENT upsert table — the stored form of [[mergeInto]], i.e.
-    * the reference's continuously-maintained `meeting_result` table
-    * re-expressed as a parquet table this engine owns end to end:
-    * rows live in `numBuckets` hash partitions of the key
-    * (`bucket = xxhash64(keys) mod N`), so applying a delta reads
-    * ONLY the buckets its keys hash into (partition-pruned scan),
-    * merges bucket-locally, and dynamic-partition-overwrites just
-    * those buckets — at ANY table size the rewrite is O(touched
-    * buckets · bucket size), never the snapshot. Size `numBuckets`
-    * so a bucket ≈ a comfortable task (e.g. 100 TB / 4096 buckets ≈
-    * 25 GB splits further by parquet row groups).
-    *
-    * Replay safety without a transaction log: [[mergeInto]] of a
-    * FIXED delta is idempotent (re-upserting the same values and
-    * re-deleting the same keys is a no-op), so an at-least-once
-    * redelivery of the same micro-batch re-converges to the same
-    * state — proven in `TemporalOpsSpec`. */
-  def initUpsertTable(snapshot: DataFrame, dir: String, keys: Seq[String],
-                      numBuckets: Int): Unit = {
-    require(numBuckets >= 1, "need at least one bucket")
-    snapshot.withColumn("bucket", bucketOf(keys, numBuckets))
-      .write.mode("overwrite").partitionBy("bucket").parquet(dir)
-  }
-
-  /** Apply one keyed I/U/D delta to the stored table: prune to the
-    * delta's buckets, [[mergeInto]], overwrite only those partitions.
-    * The touched-bucket list is collected driver-side — bounded by
-    * `numBuckets`, never by data. */
-  def applyDeltaStored(spark: SparkSession, dir: String, delta: DataFrame,
-                       keys: Seq[String], numBuckets: Int,
-                       opCol: String = "op", seqCol: String = "seq"): Unit = {
-    val db = delta.withColumn("bucket", bucketOf(keys, numBuckets))
-    val touched = db.select("bucket").distinct()
-      .collect().map(_.getInt(0)).toSeq
-    if (touched.nonEmpty) {
-      val target = spark.read.parquet(dir)
-        .filter(col("bucket").isin(touched: _*)).drop("bucket")
-      // materialize BEFORE the overwrite — the merge reads the same
-      // partitions the write replaces (the swapInDir/compact rule)
-      val merged = mergeInto(target, db.drop("bucket"), keys, opCol, seqCol)
-        .withColumn("bucket", bucketOf(keys, numBuckets))
-        .localCheckpoint()
-      graft.sinks.Sinks.upsertPartitions(merged, dir, Seq("bucket"))
-      // dynamic overwrite only replaces partitions PRESENT in the
-      // write: a touched bucket whose every row was deleted writes
-      // nothing and would keep its stale files — clear those
-      // explicitly (driver-side, ≤ numBuckets dirs)
-      val survived = merged.select("bucket").distinct()
-        .collect().map(_.getInt(0)).toSet
-      // Hadoop FileSystem, NOT java.io.File: the store can live on
-      // hdfs://s3a:// where a local-File delete silently no-ops and
-      // deleted keys resurrect on the next read (and stripping the
-      // scheme could hit an unrelated same-named local path)
-      val hconf = spark.sessionState.newHadoopConf()
-      (touched.toSet -- survived).foreach { bkt =>
-        val p = new org.apache.hadoop.fs.Path(dir, s"bucket=$bkt")
-        val fs = p.getFileSystem(hconf)
-        if (fs.exists(p)) fs.delete(p, true)
-      }
-    }
-  }
-
-  /** The stored table's current contents (bucket column dropped;
-    * filter by key upstream of this to keep the pruned scan). */
-  def readUpsertTable(spark: SparkSession, dir: String): DataFrame = {
-    val raw = spark.read.parquet(dir)
-    raw.select(raw.columns.filter(_ != "bucket").map(col).toSeq: _*)
   }
 
   /** The README's business goal the reference never coded: per-region

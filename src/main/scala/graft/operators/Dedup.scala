@@ -731,23 +731,14 @@ object Dedup {
     ContainmentPairs(pairs, dropped)
   }
 
-  /** Persistent winnowed-fingerprint EXCERPT index: the stored-corpus
-    * twin of [[winnowPairs]] — postings are each document's
-    * winnow-selected 32-bit gram hashes (expected density 2/(w+1) of
-    * the grams, substring matches ≥ w+k−1 guaranteed caught), so the
-    * on-disk index is a fraction of a full gram index at the same
-    * detection floor. (k, w) ride the meta so a probe can never
-    * diverge from what the postings were built with — the
-    * [[DedupIndex]] discipline.
-    *
-    * `df` is the OPTIONAL stored document-frequency census (fp → df):
-    * present on indexes read back from disk, so every probe skips the
-    * corpus-sized census aggregate and per-batch cost really is
-    * ∝ batch + collisions ([[excerptAgainstIndex]]); None on a fresh
-    * in-memory build, where the probe computes it from the postings
-    * plan. */
-  final case class WinnowIndex(postings: DataFrame, k: Int, w: Int,
-                               df: Option[DataFrame] = None)
+  /** Winnowed-fingerprint EXCERPT index: the corpus-side twin of
+    * [[winnowPairs]] — postings are each document's winnow-selected
+    * 32-bit gram hashes (expected density 2/(w+1) of the grams,
+    * substring matches ≥ w+k−1 guaranteed caught), so the index is a
+    * fraction of a full gram index at the same detection floor. (k, w) ride with the postings so a probe can
+    * never diverge from what the postings were built with — the
+    * [[DedupIndex]] discipline. */
+  final case class WinnowIndex(postings: DataFrame, k: Int, w: Int)
 
   def buildWinnowIndex(docs: DataFrame, k: Int = 5, w: Int = 4,
                        idCol: String = "doc_id",
@@ -760,108 +751,14 @@ object Dedup {
       k, w)
   }
 
-  /** On-disk layout: `postings/` and `df/` are partitioned by a
-    * `seg`(ment) column — the base build lands in seg=base and each
-    * [[winnowIndexAppend]] delta in its own segment, so an
-    * at-least-once replayed append overwrites ITS OWN partition
-    * (dynamic partition overwrite) instead of duplicating postings —
-    * the exactly-once house rule. `meta` is written LAST so meta
-    * existing implies every part is complete (the [[writeIndex]]
-    * crash-ordering discipline). The stored census is recomputed from
-    * the WRITTEN postings files, never from the in-memory plan, so df
-    * can never diverge from what is on disk. */
-  def writeWinnowIndex(index: WinnowIndex, dir: String): Unit = {
-    val spark = index.postings.sparkSession
-    index.postings.select(col("doc_id"), col("fp")).withColumn("seg", lit("base"))
-      .write.mode("overwrite").partitionBy("seg").parquet(s"$dir/postings")
-    spark.read.parquet(s"$dir/postings")
-      .groupBy(col("fp")).agg(count(lit(1)).as("df"))
-      .withColumn("seg", lit("base"))
-      .write.mode("overwrite").partitionBy("seg").parquet(s"$dir/df")
-    import spark.implicits._
-    Seq((index.k, index.w)).toDF("k", "w").coalesce(1)
-      .write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  def readWinnowIndex(spark: org.apache.spark.sql.SparkSession, dir: String): WinnowIndex = {
-    val meta = spark.read.parquet(s"$dir/meta").select(col("k"), col("w")).head()
-    val postings = spark.read.parquet(s"$dir/postings").select(col("doc_id"), col("fp"))
-    // per-segment partial censuses sum to the index-wide df; the
-    // aggregate is index-vocabulary-sized, not corpus-sized
-    val dfCensus = spark.read.parquet(s"$dir/df")
-      .groupBy(col("fp")).agg(sum(col("df")).as("df"))
-    WinnowIndex(postings, meta.getInt(0), meta.getInt(1), Some(dfCensus))
-  }
-
-  /** Incremental ingestion for a stored [[WinnowIndex]] — the
-    * [[graft.operators.Similarity.annIndexAppend]] discipline applied
-    * to the excerpt index: winnow ONLY `newDocs` with the index's
-    * stored (k, w) and land their postings AND their partial df
-    * census in the `seg=segment` partition of each table. Cost scales
-    * with the DELTA — the corpus postings are never read (the census
-    * update reads back only the just-written delta partition, pruned
-    * by `seg`). Replaying the same `segment` overwrites its own
-    * partition on both tables — exactly-once under at-least-once
-    * retries. A crash between the two writes leaves df UNDERcounting
-    * the new segment: probes stay correct (df only governs the
-    * hot-fingerprint cap; n_shared comes from the postings join) and
-    * re-running the append heals both tables. */
-  def winnowIndexAppend(newDocs: DataFrame, dir: String, segment: String,
-                        idCol: String = "doc_id",
-                        textCol: String = "text"): Unit = {
-    require(segment.nonEmpty && segment != "base",
-      "segment must be a non-empty id distinct from the reserved base segment")
-    val spark = newDocs.sparkSession
-    graft.plans.GraftExtensions.register(spark)
-    val meta = spark.read.parquet(s"$dir/meta").select(col("k"), col("w")).head()
-    import graft.functions.WinnowFp.winnow_fp
-    val dfp = Partitioning.fanOut(newDocs)
-      .select(col(idCol).as("doc_id"),
-        explode(winnow_fp(col(textCol), meta.getInt(0), meta.getInt(1))).as("fp"))
-    graft.sinks.Sinks.upsertPartitions(dfp.withColumn("seg", lit(segment)),
-      s"$dir/postings", Seq("seg"))
-    val written = spark.read.parquet(s"$dir/postings").filter(col("seg") === segment)
-    graft.sinks.Sinks.upsertPartitions(
-      written.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-        .withColumn("seg", lit(segment)),
-      s"$dir/df", Seq("seg"))
-  }
-
-  /** OFFLINE maintenance for an appended excerpt index — the
-    * [[compactIndex]] discipline on the segmented layout: fold every
-    * segment into a single deduplicated seg=base generation of
-    * `postings/` (dropping retried-append duplicates), recompute `df`
-    * from the folded postings, and swap both dirs via the
-    * rename-with-backup protocol. NOT safe concurrently with a
-    * running append. Compaction is a replay BARRIER: segments folded
-    * here are retired — re-appending a pre-compact segment id after
-    * compaction would re-add its postings beside the folded copy
-    * (inflating n_shared until the next compact dedups them). */
-  def compactWinnowIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         targetBytes: Long = 128L << 20): Unit = {
-    val nFiles = Partitioning.plannedFileCount(spark, s"$dir/postings", targetBytes)
-    val folded = spark.read.parquet(s"$dir/postings")
-      .select(col("doc_id"), col("fp")).distinct()
-      .repartition(nFiles).localCheckpoint() // one winnow-read, two writes below
-    Partitioning.swapInDir(spark, s"$dir/postings")(tmp =>
-      folded.withColumn("seg", lit("base"))
-        .write.mode("overwrite").partitionBy("seg").parquet(tmp))
-    Partitioning.swapInDir(spark, s"$dir/df")(tmp =>
-      folded.groupBy(col("fp")).agg(count(lit(1)).as("df"))
-        .withColumn("seg", lit("base"))
-        .write.mode("overwrite").partitionBy("seg").parquet(tmp))
-  }
-
-  /** Excerpt detection of a DELTA against the stored corpus index:
-    * new docs sharing ≥ `minShared` winnowed fingerprints with an
-    * indexed document surface as (new_id, index_id, n_shared) —
-    * plagiarism/excerpt lineage against corpus history without
-    * rescanning the corpus. The delta winnows with the INDEX's
-    * (k, w); the postings census governs document frequency
-    * (fingerprints above `maxPostings` never join), so probe work is
-    * ≤ |delta fps| + |fps|·cap·(delta side) — collision-bounded.
-    * Shuffle ∝ delta + collision candidates, the
-    * [[dedupeAgainstIndex]] contract. */
+  /** Excerpt detection of a DELTA against a corpus index: new docs
+    * sharing ≥ `minShared` winnowed fingerprints with an indexed
+    * document surface as (new_id, index_id, n_shared) —
+    * plagiarism/excerpt lineage against corpus history. The delta
+    * winnows with the INDEX's (k, w); the postings census governs
+    * document frequency (fingerprints above `maxPostings` never join),
+    * so the probe join is ≤ |delta fps| + |fps|·cap·(delta side) —
+    * collision-bounded. */
   def excerptAgainstIndex(newDocs: DataFrame, index: WinnowIndex,
                           minShared: Int = 3, maxPostings: Int = 10000,
                           idCol: String = "doc_id",
@@ -871,19 +768,9 @@ object Dedup {
     val dfp = Partitioning.fanOut(newDocs)
       .select(col(idCol).as("new_id"),
         explode(winnow_fp(col(textCol), index.k, index.w)).as("fp"))
-    // stored census when the index came off disk (probe cost ∝ batch +
-    // collisions); fall back to an on-the-fly census for in-memory
-    // builds. LEFT join + df default 1: a fingerprint missing from the
-    // stored census (the winnowIndexAppend crash window — postings
-    // landed, df didn't) is NEW and therefore rare — keeping it is
-    // both the safe and the correct governor call, so probes stay
-    // correct in that window instead of silently dropping the new
-    // segment's postings through an inner join.
-    val cnt = index.df
-      .map(_.select(col("fp"), col("df").as("__df")))
-      .getOrElse(index.postings.groupBy(col("fp")).agg(count(lit(1)).as("__df")))
-    val kept = index.postings.join(cnt, Seq("fp"), "left")
-      .filter(coalesce(col("__df"), lit(1L)) <= maxPostings)
+    val cnt = index.postings.groupBy(col("fp")).agg(count(lit(1)).as("__df"))
+    val kept = index.postings.join(cnt, "fp")
+      .filter(col("__df") <= maxPostings)
       .select(col("fp"), col("doc_id").as("index_id"))
     dfp.join(kept, "fp")
       .groupBy(col("new_id"), col("index_id"))
@@ -897,7 +784,7 @@ object Dedup {
     require(blockCols.nonEmpty,
       "jaccardPairs needs at least one blocking column — an unblocked " +
         "self-join is O(n²) and will not survive scale. For an explicit " +
-        "candidate-pair set (e.g. LSH candidates) use jaccardVerify.")
+        "candidate-pair set (e.g. LSH candidates) use jaccardVerifySets.")
     graft.plans.GraftExtensions.register(docs.sparkSession)
     val base = Partitioning.fanOut(docs)
       .withColumn("tset", tsetExpr)
@@ -919,111 +806,6 @@ object Dedup {
       .withColumn("jac_permille", floor(col("inter") * 1000 / col("uni")).cast("long"))
       .filter(col("jac_permille") >= thresholdPermille)
       .select(col("doc_a"), col("doc_b"), col("inter"), col("uni"), col("jac_permille"))
-  }
-
-  /** Streaming twin of [[exact]]: drop documents whose content hash was
-    * already emitted, with state bounded by the event-time watermark
-    * (`dropDuplicatesWithinWatermark`) — at 100 TB/day of stream the
-    * dedup state holds only the hashes inside the watermark horizon,
-    * not the corpus history. Narrow except the implicit keyed state
-    * exchange on the hash. */
-  def exactStreaming(docs: DataFrame, tsCol: String, watermarkDelay: String,
-                     textCol: String = "text"): DataFrame =
-    docs
-      .withColumn("text_hash", md5(col(textCol).cast("binary")))
-      .withWatermark(tsCol, watermarkDelay)
-      .dropDuplicatesWithinWatermark("text_hash")
-
-  /** Streaming near-duplicate detection within the watermark horizon —
-    * the bounded-state streaming form of [[lshCandidatePairs]] +
-    * [[jaccardVerify]]: emit verified near-dup pairs whose event times
-    * are within `within` of each other. (Batch-only near-dedup plus
-    * this stream closes the lambda split for in-horizon duplicates;
-    * cross-horizon duplicates remain the nightly batch job's.)
-    *
-    * Bounded-state design: the MinHash signature is computed PER ROW
-    * with array expressions (no explode+groupBy — a streaming
-    * aggregation upstream of a stream–stream join is unsupported, and
-    * would also hold doc-level state). Bands then explode (narrow,
-    * streaming-safe) and the stream self-joins on the (band, bandValue)
-    * key with a symmetric event-time bound — Spark expires both sides'
-    * join state as the watermark passes, so state holds only the
-    * horizon's band rows, never corpus history. Jaccard verification
-    * (PPJoin length prefilter + exact token-set intersection) runs
-    * narrowly on each matched pair in-stream.
-    *
-    * The per-row signature uses higher-order array functions (2 md5
-    * traversals + 8 cheap min-traversals per doc) — CodegenFallback,
-    * acceptable at stream rates; the batch path keeps the faster
-    * explode+HashAggregate form. Signatures are bit-identical to
-    * [[minhashSignature]] (same md5 slices, min over the same values),
-    * so batch-mode runs of this operator agree with the batch pipeline.
-    *
-    * A pair colliding in several bands emits once per band (`band` is
-    * in the output key; stream-side distinct would add another stateful
-    * operator). Docs shorter than `k` tokens have no shingles and are
-    * filtered out — they cannot collide in the batch form either.
-    *
-    * Note: the optimizer pushes the Jaccard verification filters into
-    * the join condition, and StreamingJoinHelper logs per-batch WARNs
-    * while probing those non-time conjuncts for state-value
-    * watermarks. Benign — the event-time range IS extracted and drives
-    * state expiry (spec asserts numRowsRemoved > 0). */
-  def nearDupPairsStreaming(docs: DataFrame, tsCol: String, within: String,
-                            maxLateness: String, thresholdPermille: Int,
-                            k: Int = 3, numHashes: Int = 8, rowsPerBand: Int = 2,
-                            idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    import graft.functions.HexSliceLong.hex_slice_long
-    import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
-    require(numHashes == 8, "per-row signature is tuned for 8 hashes (2 md5 digests)")
-    val nBands = numHashes / rowsPerBand
-    val prepped = docs
-      .select(col(tsCol), col(idCol), col(textCol))
-      .withColumn("shingles", word_shingles(col(textCol), k))
-      .filter(size(col("shingles")) > 0)
-      .withColumn("m1s", transform(col("shingles"), s => md5(s.cast("binary"))))
-      .withColumn("m2s", transform(col("shingles"), s => md5(concat(lit("8|"), s).cast("binary"))))
-      .withColumn("tset", array_distinct(tokens(col(textCol))))
-      .withColumn("tsz", size(col("tset")).cast("long"))
-    val withSig = (0 until numHashes).foldLeft(prepped) { (df, i) =>
-      val src = if (i < 4) "m1s" else "m2s"
-      df.withColumn(s"h$i", array_min(transform(col(src), m => hex_slice_long(m, (i % 4) * 8))))
-    }
-    val bandStructs = (0 until nBands).map { b =>
-      val parts = (0 until rowsPerBand)
-        .map(r => col(s"h${b * rowsPerBand + r}").cast("string"))
-      struct(lit(b).as("band"), concat_ws("|", parts: _*).as("bv"))
-    }
-    val banded = withSig
-      .select(col(tsCol), col(idCol), col("tset"), col("tsz"),
-        explode(array(bandStructs: _*)).as("bk"))
-      .select(col(tsCol), col(idCol), col("tset"), col("tsz"),
-        col("bk.band").as("band"), col("bk.bv").as("bv"))
-    val a = banded.select(col(tsCol).as("ts_a"), col(idCol).as("doc_a"),
-        array_sort(col("tset")).as("ta"), col("tsz").as("sza"), col("band"), col("bv"))
-      .withWatermark("ts_a", maxLateness)
-    val b = banded.select(col(tsCol).as("ts_b"), col(idCol).as("doc_b"),
-        array_sort(col("tset")).as("tb"), col("tsz").as("szb"),
-        col("band").as("band_b"), col("bv").as("bv_b"))
-      .withWatermark("ts_b", maxLateness)
-    a.join(b,
-        col("band") === col("band_b") && col("bv") === col("bv_b") &&
-          col("doc_a") < col("doc_b") &&
-          col("ts_b") >= col("ts_a") - expr(s"INTERVAL $within") &&
-          col("ts_b") <= col("ts_a") + expr(s"INTERVAL $within"),
-        "inner")
-      // PPJoin length filter before the O(|A|+|B|) intersection
-      .filter(col("sza") * 1000 >= lit(thresholdPermille) * col("szb") &&
-              col("szb") * 1000 >= lit(thresholdPermille) * col("sza"))
-      // ta/tb are array_sort-ed at the banded projection — per-pair
-      // zero-allocation merge count (see jaccardVerifySetsFull)
-      .withColumn("inter", graft.functions.FpSet.fp_inter_count(col("ta"), col("tb")))
-      .withColumn("uni", col("sza") + col("szb") - col("inter"))
-      .withColumn("jac_permille", floor(col("inter") * 1000 / col("uni")).cast("long"))
-      .filter(col("jac_permille") >= thresholdPermille)
-      .select(col("doc_a"), col("doc_b"), col("band"), col("jac_permille"),
-        col("ts_a"), col("ts_b"))
   }
 
   /** Shared band-bucket projection for LSH joins. Package-visible so
@@ -1059,32 +841,12 @@ object Dedup {
     a.join(b, Seq("band", "bv")).select(col("doc_a"), col("doc_b")).distinct()
   }
 
-  /** A persistable near-dup index over a corpus: distinct content
-    * hashes (exact dedup), minhash signatures (LSH candidates),
-    * distinct-token sets with sizes (Jaccard verification), and token
-    * BAGS with totals (weighted/multiset-Jaccard verification —
-    * optional for compatibility with indexes stored before bags
-    * existed). This is what production stores between daily-delta
-    * runs — build once per corpus version, [[writeIndex]] to parquet,
-    * [[readIndex]] next run. Token sets/bags are the largest parts; a
-    * deployment that prefers not to store them can re-derive
-    * verification features by joining the corpus store on `doc_id` —
-    * the frames here are plain DataFrames, so either source drops
-    * in. */
+  /** A near-dup index over a corpus: distinct content hashes (exact
+    * dedup), minhash signatures (LSH candidates) and distinct-token
+    * sets with sizes (Jaccard verification). The frames are plain
+    * DataFrames, so a deployment may store them or re-derive them. */
   final case class DedupIndex(hashes: DataFrame, signatures: DataFrame,
-                              tokenSets: DataFrame, k: Int,
-                              bags: Option[DataFrame] = None)
-
-  /** Token bags + multiplicity totals per doc — the verification
-    * features the weighted measure needs ([[weightedVerifyBags]]). */
-  private def tokenBags(docs: DataFrame, idCol: String, textCol: String): DataFrame = {
-    import graft.functions.BagFunctions.token_counts
-    graft.plans.GraftExtensions.register(docs.sparkSession)
-    Partitioning.fanOut(docs)
-      .withColumn("__tk", tokens(col(textCol)))
-      .select(col(idCol), token_counts(col("__tk")).as("bag"),
-        size(col("__tk")).cast("long").as("tot"))
-  }
+                              tokenSets: DataFrame, k: Int)
 
   /** Build the [[DedupIndex]] for `corpus` (all parts lazy).
     * The shingle size `k` is RECORDED in the index: delta signatures
@@ -1097,52 +859,7 @@ object Dedup {
       corpus.select(md5(col(textCol).cast("binary")).as("__h")).distinct(),
       minhashSignature(shingled(corpus, k, textCol), idCol = idCol),
       tokenSets(corpus, idCol, textCol),
-      k,
-      Some(tokenBags(corpus, idCol, textCol)))
-
-  def writeIndex(index: DedupIndex, dir: String): Unit = {
-    index.hashes.write.mode("overwrite").parquet(s"$dir/hashes")
-    index.signatures.write.mode("overwrite").parquet(s"$dir/signatures")
-    index.tokenSets.write.mode("overwrite").parquet(s"$dir/token_sets")
-    index.bags.foreach(_.write.mode("overwrite").parquet(s"$dir/bags"))
-    val spark = index.hashes.sparkSession
-    import spark.implicits._
-    Seq(index.k).toDF("k").coalesce(1).write.mode("overwrite").parquet(s"$dir/meta")
-  }
-
-  def readIndex(spark: org.apache.spark.sql.SparkSession, dir: String): DedupIndex = {
-    // bags are optional on disk (indexes stored before the weighted
-    // measure existed stay readable; set-based probing never needs them)
-    val bagsPath = new org.apache.hadoop.fs.Path(s"$dir/bags")
-    val fs = bagsPath.getFileSystem(spark.sparkContext.hadoopConfiguration)
-    DedupIndex(
-      spark.read.parquet(s"$dir/hashes"),
-      spark.read.parquet(s"$dir/signatures"),
-      spark.read.parquet(s"$dir/token_sets"),
-      spark.read.parquet(s"$dir/meta").head().getInt(0),
-      if (fs.exists(bagsPath)) Some(spark.read.parquet(s"$dir/bags")) else None)
-  }
-
-  /** OFFLINE maintenance for a stored index that has accumulated
-    * per-batch appends ([[graft.jobs.IncrementalDedupJob]] writes a
-    * few files per micro-batch — the classic small-file problem: a
-    * year of 5-minute batches is ~10⁵ tiny files per part, and the
-    * exact-stage anti-join pays an open() per file). Each part is
-    * rewritten at ⌈bytes/targetBytes⌉ files and DEDUPLICATED
-    * (at-least-once index appends may retry identical rows — harmless
-    * for correctness, wasteful at scan), then swapped in via rename
-    * with a `.bak` kept until the swap completes. NOT safe
-    * concurrently with a running ingestion — run between jobs (crash
-    * mid-swap leaves either `.bak` or the compacted dir; both carry
-    * the full data). `meta` is untouched. */
-  def compactIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                   targetBytes: Long = 128L << 20): Unit =
-    for (part <- Seq("hashes", "signatures", "token_sets", "bags")) {
-      val p = new org.apache.hadoop.fs.Path(s"$dir/$part")
-      // bags are optional on disk (pre-weighted-measure indexes)
-      if (p.getFileSystem(spark.sparkContext.hadoopConfiguration).exists(p))
-        Partitioning.compactParquetDir(spark, s"$dir/$part", targetBytes)
-    }
+      k)
 
   /** Incremental dedup — the daily-delta workflow: drop `newDocs` that
     * duplicate the EXISTING `corpus`, exactly (content hash anti-join)
@@ -1200,52 +917,6 @@ object Dedup {
     exactNew.join(verified, Seq(idCol), "left_anti")
   }
 
-  /** [[dedupeAgainstIndex]] with WEIGHTED (multiset) Jaccard
-    * verification — the [[weightedJaccardPairsBanded]] measure served
-    * from the persistent index: candidates still come from the stored
-    * set-LSH signatures (the standard recipe: candidate on set
-    * similarity, verify the weighted measure), but the verdict joins
-    * the stored token BAGS and scores Σmin/Σmax with multiplicities,
-    * so a doc that repeats an indexed paragraph 10× is judged on the
-    * repetition-aware similarity, not the collapsed set one. Requires
-    * an index built since bags were added ([[buildIndex]] stores them;
-    * older stored indexes fail fast here rather than silently serving
-    * the set measure). Same scale shape as the set probe: Bloom-pruned
-    * exact stage, shuffle ∝ delta + collision candidates. */
-  def dedupeAgainstIndexWeighted(newDocs: DataFrame, index: DedupIndex,
-                                 thresholdPermille: Int,
-                                 textCol: String = "text", idCol: String = "doc_id",
-                                 bloomFpp: Option[Double] = Some(0.01)): DataFrame = {
-    val indexBags = index.bags.getOrElse(throw new IllegalArgumentException(
-      "this stored index has no bags part — rebuild it with buildIndex " +
-        "(weighted verification needs token multiplicities)"))
-    val newHashed = newDocs.withColumn("__h", md5(col(textCol).cast("binary")))
-    val hashSide = bloomFpp match {
-      case Some(fpp) => bloomPruned(index.hashes, newHashed.select(col("__h")), "__h", fpp)
-      case None => index.hashes
-    }
-    val exactNew = newHashed.join(hashSide, Seq("__h"), "left_anti").drop("__h")
-    val cands = lshCandidatePairsAcross(
-      minhashSignature(shingled(exactNew, index.k, textCol), idCol = idCol),
-      index.signatures, idCol = idCol)
-    val verified = weightedVerifyBags(
-        tokenBags(exactNew, idCol, textCol).unionByName(indexBags),
-        cands, thresholdPermille, idCol)
-      .select(col("doc_a").as(idCol)).distinct()
-    exactNew.join(verified, Seq(idCol), "left_anti")
-  }
-
-  /** Exact Jaccard verification over an explicit candidate-pair set
-    * (`doc_a`, `doc_b` — e.g. [[lshCandidatePairs]] output): join each
-    * side's distinct-token set onto the pair, keep pairs ≥ threshold.
-    * Two equi-joins keyed on the doc id — shuffle is proportional to
-    * |candidates| + |docs|, never all-pairs. Integer permille
-    * arithmetic end-to-end (engine-exact). */
-  def jaccardVerify(docs: DataFrame, pairs: DataFrame, thresholdPermille: Int,
-                    idCol: String = "doc_id", textCol: String = "text"): DataFrame =
-    jaccardVerifySets(tokenSets(docs, idCol, textCol), pairs, thresholdPermille,
-      idCol)
-
   /** Distinct-token sets + sizes per doc — the verification features a
     * [[DedupIndex]] stores. */
   private def tokenSets(docs: DataFrame, idCol: String, textCol: String): DataFrame =
@@ -1254,8 +925,10 @@ object Dedup {
       .withColumn("tsz", size(col("tset")).cast("long"))
       .select(col(idCol), col("tset"), col("tsz"))
 
-  /** [[jaccardVerify]] over precomputed token sets (`idCol`, tset,
-    * tsz) — the form a stored index uses directly. */
+  /** Exact Jaccard verification over an explicit candidate-pair set
+    * (`doc_a`, `doc_b`) and precomputed token sets (`idCol`, tset,
+    * tsz): keep pairs ≥ threshold. Integer permille arithmetic
+    * end-to-end (engine-exact). */
   def jaccardVerifySets(withSets: DataFrame, pairs: DataFrame,
                         thresholdPermille: Int,
                         idCol: String = "doc_id"): DataFrame =
@@ -1589,21 +1262,6 @@ object Dedup {
         size(col("__cov")).cast("long").as("n_removed"),
         md5(expr("concat_ws(' ', transform(__kept, x -> x.tok))").cast("binary"))
           .as("clean_md5"))
-
-  /** [[stripRepeatedSpans]] that returns the full input rows with
-    * `textCol` REBUILT (non-canonical repeated spans removed) plus a
-    * `span_tokens_removed` count — the form a curation pipeline wires
-    * in-line. Same plan shape; the rebuilt text rides the one id-keyed
-    * span-list join. */
-  def stripRepeatedSpansText(docs: DataFrame, spanTokens: Int = 8,
-                             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val others = docs.columns.filterNot(c => c == idCol || c == textCol)
-    withSpanCover(docs, spanTokens, idCol, textCol)
-      .withColumn(textCol, expr("concat_ws(' ', transform(__kept, x -> x.tok))"))
-      .withColumn("span_tokens_removed", size(col("__cov")).cast("long"))
-      .select((Seq(col(idCol), col(textCol)) ++ others.map(col) :+
-        col("span_tokens_removed")): _*)
-  }
 
   private def withSpanCover(docs: DataFrame, spanTokens: Int,
                             idCol: String, textCol: String): DataFrame = {

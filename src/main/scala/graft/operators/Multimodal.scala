@@ -2830,8 +2830,7 @@ object Multimodal {
   // PERSISTENT image-hash index — the DedupIndex/AnnIndex lifecycle
   // discipline for perceptual near-dup: build once, append deltas with
   // the exactly-once segment overwrite, fold segments through the
-  // shared compaction planner, probe read-only from batch or stream
-  // (graft.streaming.ImageProbeStream). State is 16 bytes/doc — a
+  // shared compaction planner, probe read-only. State is 16 bytes/doc — a
   // 100 TB image corpus indexes into ~GB-scale parquet.
   // ------------------------------------------------------------------
 
@@ -2856,8 +2855,8 @@ object Multimodal {
   /** Fold every segment into one deduplicated seg=base generation,
     * sized through the shared compaction planner
     * ([[Partitioning.plannedFileCount]]) and swapped in by rename.
-    * Replay barrier: folded segment ids are retired (the
-    * [[graft.operators.Dedup.compactWinnowIndex]] discipline). */
+    * Replay barrier: folded segment ids are retired — re-appending one
+    * after compaction would add its rows beside the folded copy. */
   def compactImageIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
                         targetBytes: Long = 128L << 20): Unit = {
     val nFiles = Partitioning.plannedFileCount(spark, dir, targetBytes)

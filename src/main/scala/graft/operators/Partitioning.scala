@@ -247,9 +247,7 @@ object Partitioning {
     * `.bak` or the new dir — both carry the full data). The writer
     * must fully materialize its input BEFORE this runs if that input
     * reads from `dir` (localCheckpoint — the old dir is renamed away
-    * mid-swap). Shared by [[compactParquetDir]],
-    * [[Dedup.compactWinnowIndex]] and
-    * [[Similarity.compactIvfFlatIndex]]. */
+    * mid-swap). */
   def swapInDir(spark: org.apache.spark.sql.SparkSession, dir: String)
                (write: String => Unit): Unit = {
     val conf = spark.sessionState.newHadoopConf()
@@ -315,8 +313,7 @@ object Partitioning {
       Seq(), col("file"), col("bytes"), targetBytes)
 
   /** Planner-routed output file count — ONE code path sizes every
-    * store compaction ([[compactParquetDir]], the dedup/ANN/winnow
-    * index compactors, the profile state stores): the plan's bin
+    * store compaction: the plan's bin
     * count, lower-bounded by ⌈bytes/target⌉ because the plan merges at
     * FILE granularity and cannot split an oversized input file, while
     * the executing rewrite (a row-level repartition) can. Proven plan
@@ -327,22 +324,4 @@ object Partitioning {
     math.max(math.max(1, bins), compactFileCount(spark, dir, targetBytes))
   }
 
-  /** OFFLINE compaction of one append-accumulated parquet dir (the
-    * small-file problem: a year of 5-minute batches is ~10⁵ tiny
-    * files, and every keyed read pays an open() per file). The dir is
-    * rewritten at ⌈bytes/targetBytes⌉ files and DEDUPLICATED
-    * (at-least-once appends may retry identical rows — harmless for
-    * correctness, wasteful at scan), then swapped in via
-    * [[swapInDir]]. NOT safe concurrently with a running writer — run
-    * between jobs. Shared by [[Dedup.compactIndex]] (3 parts) and
-    * [[Similarity.compactAnnIndex]] (the code table). */
-  def compactParquetDir(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        targetBytes: Long = 128L << 20): Unit = {
-    val nFiles = plannedFileCount(spark, dir, targetBytes)
-    // the lazy read executes inside swapInDir's write step, which runs
-    // BEFORE any rename — the source dir is still live, no checkpoint
-    swapInDir(spark, dir)(tmp =>
-      spark.read.parquet(dir).distinct()
-        .repartition(nFiles).write.mode("overwrite").parquet(tmp))
-  }
 }

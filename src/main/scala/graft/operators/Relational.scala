@@ -387,8 +387,7 @@ object Relational {
     * (x-moments are shift-invariant). merge(state(deltas)) ≡
     * state(all) down to the last digit — the trend joins the
     * incremental-maintenance family (NOT idempotent: replayed deltas
-    * double the sums, the [[aggState]] contract the [[appendState]]
-    * overwrite store absorbs). State: keys, t_base, m, st, sx, stx,
+    * double the sums, the [[aggState]] contract). State: keys, t_base, m, st, sx, stx,
     * stt, sxx. */
   def trendState(series: DataFrame, keys: Seq[Column], orderCol: Column,
                  valueCol: Column): DataFrame = {
@@ -1239,9 +1238,8 @@ object Relational {
     * the truth from opposite sides. This is the STORED, mergeable form
     * of the same summary the [[graft.functions.FreqTopK]] native
     * aggregate computes in-query: that one streams per-partition and
-    * merges inside one aggregation; this one persists per-delta
-    * partials in the [[appendState]] segmented store and re-merges at
-    * read time. Guarantees (n = total items in the
+    * merges inside one aggregation; this one keeps per-delta partials
+    * and re-merges them at read time. Guarantees (n = total items in the
     * key group, at ANY merge topology): every stored counter satisfies
     * n̂(v) ≤ n(v) ≤ n̂(v) + n div (k+1), and every value with
     * n(v) > n/(k+1) is present. The bound survives merging because each
@@ -1261,8 +1259,7 @@ object Relational {
     * histogram (see [[mgTrim]] — no per-key sort of the counter
     * table), and the stored state is O(#keys · k) forever. Merge is
     * a sum + re-trim (associative/commutative, NOT idempotent —
-    * replayed deltas double-count, the [[aggState]] contract the
-    * [[appendState]] per-segment overwrite store absorbs). */
+    * replayed deltas double-count, the [[aggState]] contract). */
   def mgState(df: DataFrame, keys: Seq[Column], valueCol: Column,
               k: Int): DataFrame = {
     require(k >= 1, s"Misra-Gries needs k >= 1 counters, got $k")
@@ -1327,8 +1324,7 @@ object Relational {
     * "cms<i>|<value>" mod width), so the state is a plain bucket-count
     * table — merge is a count sum (associative/commutative, NOT
     * idempotent: replayed deltas double-count, the [[aggState]]
-    * contract, which is exactly what the [[appendState]] per-segment
-    * overwrite store absorbs). Every number is deterministic integer
+    * contract). Every number is deterministic integer
     * md5 arithmetic, so a DuckDB replay hash-matches the sketch AND
     * its estimates exactly.
     *
@@ -1406,7 +1402,7 @@ object Relational {
     * State: Z_j = Σ_v s_j(v)·f(v) for k independent ±1 md5 sign coins
     * s_j — E[Z_j²] = F₂. Counters are LINEAR in the counts, so merge
     * is a plain sum (associative/commutative, NOT idempotent — the
-    * [[aggState]] contract, absorbed by the [[appendState]] store).
+    * [[aggState]] contract).
     * Deterministic integer arithmetic end to end: the oracle replays
     * state AND estimate exactly.
     *
@@ -1554,52 +1550,5 @@ object Relational {
       .withColumn("might_contain",
         coalesce(col("__found") === numHashes, lit(false)))
       .drop("__found")
-  }
-
-  /** PERSISTENT per-segment state store for the mergeable profile
-    * states ([[aggState]], [[histogramState]], [[kmvState]], [[cmsState]],
-    * [[amsState]], [[distinctStateExact]]) — the lifecycle that makes a daily
-    * 100 TB profile maintainable: each delta's PARTIAL state lands in
-    * its own `seg=segment` partition (dynamic partition overwrite),
-    * so an at-least-once replayed delta overwrites ITS OWN partition
-    * instead of double-counting — exactly-once for the non-idempotent
-    * count/sum states without distributed transactions, the
-    * [[Dedup.winnowIndexAppend]] rule. Readers merge across segments
-    * with the state's own merge ([[readMergedState]]); a periodic
-    * [[compactStateStore]] folds segments down. */
-  def appendState(state: DataFrame, dir: String, segment: String): Unit = {
-    require(segment.nonEmpty && segment != "base",
-      "segment must be a non-empty id distinct from the reserved base segment")
-    graft.sinks.Sinks.upsertPartitions(
-      state.withColumn("seg", lit(segment)), dir, Seq("seg"))
-  }
-
-  /** Read a segmented state store and merge the per-segment partials
-    * with `merge` (the state's own merge function over the seg-less
-    * frame — e.g. `s => mergeHistogramStates(Seq(s), keys)`). */
-  def readMergedState(spark: org.apache.spark.sql.SparkSession, dir: String)
-                     (merge: DataFrame => DataFrame): DataFrame = {
-    val raw = spark.read.parquet(dir)
-    merge(raw.select(raw.columns.filter(_ != "seg").map(col).toSeq: _*))
-  }
-
-  /** Fold every segment of a state store into one seg=base generation
-    * holding the MERGED state (rename-swap; the compact is the merge,
-    * so the store stays O(state), not O(state × segments)). Replay
-    * barrier: compaction retires folded segment ids
-    * ([[Dedup.compactWinnowIndex]] discipline). */
-  def compactStateStore(spark: org.apache.spark.sql.SparkSession, dir: String,
-                        targetBytes: Long = 128L << 20)
-                       (merge: DataFrame => DataFrame): Unit = {
-    // planner-routed sizing (the shared compactor seam): a small
-    // merged state folds to ONE file instead of one per shuffle
-    // partition — 10 stores × 32 partitions of near-empty files is
-    // the small-file problem the compaction exists to fix
-    val nFiles = Partitioning.plannedFileCount(spark, dir, targetBytes)
-    val folded = readMergedState(spark, dir)(merge)
-      .repartition(nFiles).localCheckpoint()
-    Partitioning.swapInDir(spark, dir)(tmp =>
-      folded.withColumn("seg", lit("base"))
-        .write.mode("overwrite").partitionBy("seg").parquet(tmp))
   }
 }

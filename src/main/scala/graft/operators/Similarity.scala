@@ -543,12 +543,8 @@ object Similarity {
 
   /** Cells first, centroids LAST — centroids existing implies the
     * index is complete (the [[writeAnnIndex]] crash-ordering rule).
-    * `cells/` is partitioned by a `seg`(ment) column — base build in
-    * seg=base, each [[ivfFlatAppend]] delta in its own segment, so a
-    * replayed append overwrites ITS OWN partition (the
-    * [[graft.operators.Dedup.winnowIndexAppend]] exactly-once rule;
-    * stronger than the ANN code table's dedup-at-compact, because a
-    * duplicated FLAT row would occupy a top-k rank until compacted). */
+    * `cells/` is partitioned by a `seg`(ment) column and the build
+    * lands in seg=base. */
   def writeIvfFlatIndex(index: IvfFlatIndex, dir: String): Unit = {
     index.cells.withColumn("seg", lit("base"))
       .write.mode("overwrite").partitionBy("seg").parquet(s"$dir/cells")
@@ -561,43 +557,6 @@ object Similarity {
     val cols = spark.read.parquet(s"$dir/cells")
       .columns.filter(_ != "seg").map(col)
     IvfFlatIndex(cents, spark.read.parquet(s"$dir/cells").select(cols.toSeq: _*))
-  }
-
-  /** Incremental ingestion for a stored [[IvfFlatIndex]] — the
-    * [[annIndexAppend]] discipline with the segmented exactly-once
-    * layout: assign ONLY `newEmb` under the FROZEN stored centroids
-    * and land their (id, cell, embedding, n2) rows in the
-    * `seg=segment` partition. Cost ∝ delta (centroid broadcast + one
-    * narrow pass); the existing cells are never read. Same retrain
-    * trigger as the PQ index: when cell-size drift or probe recall
-    * sags, rebuild and swap dirs. */
-  def ivfFlatAppend(newEmb: DataFrame, dir: String, segment: String,
-                    idCol: String = "vec_id",
-                    vecCol: String = "embedding"): Unit = {
-    require(segment.nonEmpty && segment != "base",
-      "segment must be a non-empty id distinct from the reserved base segment")
-    val spark = newEmb.sparkSession
-    val cents = spark.read.parquet(s"$dir/centroids")
-    val rows = withNorm(newEmb.join(ivfAssign(newEmb, cents, idCol, vecCol), idCol), vecCol)
-      .select(col(idCol), col("cell"), col(vecCol), col("__n2").as("n2"))
-    graft.sinks.Sinks.upsertPartitions(rows.withColumn("seg", lit(segment)),
-      s"$dir/cells", Seq("seg"))
-  }
-
-  /** OFFLINE maintenance for an appended flat index: fold every
-    * segment into one deduplicated seg=base generation of `cells/`
-    * (rename-swap; centroids untouched). NOT safe concurrently with a
-    * running append; compaction retires folded segment ids (the
-    * [[graft.operators.Dedup.compactWinnowIndex]] replay barrier). */
-  def compactIvfFlatIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                          targetBytes: Long = 128L << 20): Unit = {
-    val nFiles = Partitioning.plannedFileCount(spark, s"$dir/cells", targetBytes)
-    val cols = spark.read.parquet(s"$dir/cells").columns.filter(_ != "seg").map(col)
-    val folded = spark.read.parquet(s"$dir/cells").select(cols.toSeq: _*)
-      .distinct().repartition(nFiles).localCheckpoint()
-    Partitioning.swapInDir(spark, s"$dir/cells")(tmp =>
-      folded.withColumn("seg", lit("base"))
-        .write.mode("overwrite").partitionBy("seg").parquet(tmp))
   }
 
   /** Exact cosine of each query against every vector in its `nprobe`
@@ -672,65 +631,6 @@ object Similarity {
       .withColumn("recall_permille",
         floor(col("n_hits") * 1000 / lit(k.toLong)).cast("long"))
       .select(col("nprobe"), col("query_id"), col("n_hits"), col("recall_permille"))
-  }
-
-  /** In-horizon streaming SEMANTIC near-dup pairs — the embedding
-    * twin of [[graft.operators.Dedup.nearDupPairsStreaming]], closing
-    * the same lambda split for meaning-level duplicates: this catches
-    * paraphrase pairs WITHIN the watermark horizon with bounded state;
-    * [[graft.streaming.SemanticProbeStream]] catches duplicates of
-    * the indexed corpus HISTORY.
-    *
-    * Blocking: each vector assigns per row to its nearest cell under
-    * the STATIC pretrained `centroids` (e.g. [[ivfTrain]] on a corpus
-    * sample, or a stored index's `centroids`) — collected driver-side
-    * at model size (k rows, the MLlib pattern) and folded into one
-    * narrow `least`-of-structs expression, because a streaming
-    * aggregation upstream of a stream–stream join is unsupported (and
-    * would hold per-vector state). The assignment is value-identical
-    * to [[ivfAssign]] (same quantized distance, same (s, cell)
-    * tie-break), so batch-mode runs agree with the batch pipeline.
-    * The stream then self-joins on the cell key with a symmetric
-    * event-time bound — join state expires with the watermark, so
-    * state holds only the horizon's vectors, never corpus history —
-    * and exact cosine ≥ `minCos` verifies each collision in-stream.
-    * Zero-norm vectors are dropped (cosine undefined). Like the batch
-    * [[nearDupPairs]], candidate work is cells × (in-horizon cell
-    * population)², never horizon². */
-  def semanticPairsStreaming(vecs: DataFrame, centroids: DataFrame, tsCol: String,
-                             within: String, maxLateness: String, minCos: Double,
-                             idCol: String = "vec_id",
-                             vecCol: String = "embedding"): DataFrame = {
-    graft.plans.GraftExtensions.register(vecs.sparkSession)
-    val cents = centroids.select(col("cell").cast("long"), col("cv")).collect()
-    require(cents.nonEmpty, "centroids must be non-empty")
-    val structs = cents.map { r =>
-      val cv = r.getSeq[Long](1)
-      val csq = cv.map(v => v * v).sum // quantized ints; < 2^53, exact as double
-      struct((lit(csq.toDouble) - lit(2d) * dot(col("__qv"), array(cv.map(lit): _*)))
-        .as("s"), lit(r.getLong(0)).as("cell"))
-    }
-    val cellOf =
-      if (structs.length == 1) lit(cents.head.getLong(0))
-      else least(structs.toIndexedSeq: _*).getField("cell")
-    val assigned = vecs.select(col(tsCol), col(idCol), col(vecCol))
-      .withColumn("__qv", quantize(col(vecCol)))
-      .withColumn("__n2", norm2(col(vecCol)))
-      .filter(col("__n2") > 0)
-      .withColumn("cell", cellOf)
-    val a = assigned.select(col(tsCol).as("ts_a"), col(idCol).as("id_a"),
-        col(vecCol).as("va"), col("__n2").as("na"), col("cell"))
-      .withWatermark("ts_a", maxLateness)
-    val b = assigned.select(col(tsCol).as("ts_b"), col(idCol).as("id_b"),
-        col(vecCol).as("vb"), col("__n2").as("nb"), col("cell").as("cell_b"))
-      .withWatermark("ts_b", maxLateness)
-    a.join(b,
-        col("cell") === col("cell_b") && col("id_a") < col("id_b") &&
-          col("ts_b") >= col("ts_a") - expr(s"INTERVAL $within") &&
-          col("ts_b") <= col("ts_a") + expr(s"INTERVAL $within"), "inner")
-      .withColumn("cos", cosFromParts(dot(col("va"), col("vb")), col("na"), col("nb")))
-      .filter(col("cos") >= minCos)
-      .select(col("id_a"), col("id_b"), col("cell"), col("cos"))
   }
 
   /** Per-vector symmetric int8 scalar quantization: the candidate side
@@ -1110,24 +1010,24 @@ object Similarity {
       .select(col("__id"), col("__ccell").as("cell"), col("codes"))
   }
 
-  /** Subspace width off the codebook row (model-small, one 1-row job),
-    * with fail-fast guards (round-10, from ADVICE): an empty codebook
-    * is an explicit error instead of a bare NoSuchElementException,
-    * and the query width must be exactly m·sd — the slice expressions
-    * at the call sites would otherwise mis-score silently (short
-    * slices, min-length dots inside nearest_cell). The width check is
-    * one 1-row job over the QUERY frame (the broadcast-small side). */
-  private def subWidth(codebook: DataFrame, m: Int,
-                       queries: DataFrame, vecCol: String): Int = {
+  /** Subspace width off the codebook row (model-small, one 1-row job);
+    * an empty codebook is an explicit error instead of a bare
+    * NoSuchElementException. */
+  private def subWidth(codebook: DataFrame): Int = {
     val head = codebook.select(size(col("cv"))).limit(1).collect()
     require(head.nonEmpty, "empty PQ codebook — train it before scoring")
-    val sd = head.head.getInt(0)
-    queries.select(size(col(vecCol))).limit(1).collect().foreach { r =>
-      require(r.getInt(0) == m * sd,
-        s"query width ${r.getInt(0)} != m*sd = ${m * sd} (wrong m or codebook)")
-    }
-    sd
+    head.head.getInt(0)
   }
+
+  /** `v`, failing the query on any row whose width is not `width`
+    * (= m·sd): the slices cut from it would otherwise mis-score
+    * silently (short slices, min-length dots inside nearest_cell).
+    * Checked per row in the projection that quantizes the vector, so a
+    * ragged frame fails on every bad row at no extra job. */
+  private def widthChecked(v: Column, width: Int): Column =
+    when(size(v) =!= width, raise_error(concat(lit("query width "),
+      size(v).cast("string"), lit(s" != m*sd = $width (wrong m or codebook)"))))
+      .otherwise(v)
 
   /** The query-time half of IVF-ADC: score `queries` against an
     * ALREADY-ENCODED candidate frame (`idCol`, cell, codes) — what a
@@ -1143,9 +1043,9 @@ object Similarity {
     // distance table is built from its output directly — the old form
     // paid a second quantize scan (adcTable's subvector pass) plus a
     // query-id join to attach the cell. Still queries×m×k rows.
-    val sd = subWidth(codebook, m, queries, vecCol)
+    val sd = subWidth(codebook)
     val q = Partitioning.fanOut(queries)
-      .select(col(idCol).as("__id"), quantize(col(vecCol)).as("qv"))
+      .select(col(idCol).as("__id"), quantize(widthChecked(col(vecCol), m * sd)).as("qv"))
     val cb = codebook.withColumn("__cbsq", dot(col("cv"), col("cv")))
     val dt = assignCells(q, coarse)
       .select(col("__id").as("query_id"), col("cell").as("qcell"),
@@ -1246,8 +1146,7 @@ object Similarity {
 
   /** Parquet round-trip for the full index. The code table is written
     * BEFORE the model (whose `meta` lands last), so meta existing
-    * implies every part is complete — the [[Dedup.writeIndex]]
-    * crash-ordering discipline. */
+    * implies every part is complete. */
   def writeAnnIndex(index: AnnIndex, dir: String): Unit = {
     index.encoded.write.mode("overwrite").parquet(s"$dir/encoded")
     writeAnnModel(index.model, dir)
@@ -1255,41 +1154,6 @@ object Similarity {
 
   def readAnnIndex(spark: org.apache.spark.sql.SparkSession, dir: String): AnnIndex =
     AnnIndex(readAnnModel(spark, dir), spark.read.parquet(s"$dir/encoded"))
-
-  /** Incremental ingestion for a stored [[AnnIndex]] — the
-    * [[graft.operators.Dedup.DedupIndex]] append discipline applied to
-    * ANN serving: encode ONLY `newEmb` against the FROZEN stored model
-    * and append their (id, cell, codes) rows to `dir/encoded`. Cost
-    * scales with the DELTA (model broadcast + one narrow pass over the
-    * new vectors); the corpus embeddings and the existing code table
-    * are never read, let alone re-encoded. Ids must be new to the
-    * index — the code table is append-only and serving assumes one row
-    * per id (a retried at-least-once append of the SAME rows is
-    * harmless for top-k: duplicate rows score identically and
-    * [[compactAnnIndex]] removes them offline).
-    *
-    * RETRAIN TRIGGER (the knob this API deliberately does not hide):
-    * appends quantize new vectors with centroids trained on the OLD
-    * distribution. Monitor cell-size drift — when the hottest cell's
-    * share grows to a few multiples of 1/k (cells started √n-balanced
-    * by construction), or ADC recall on a held-out probe set sags, the
-    * distribution has moved: re-run [[annIndexBuild]] and swap dirs.
-    * Until then appended vectors serve at full fidelity — assignment
-    * and codes come from the same frozen quantizers the corpus used. */
-  def annIndexAppend(newEmb: DataFrame, dir: String,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): Unit =
-    annEncode(newEmb, readAnnModel(newEmb.sparkSession, dir), idCol, vecCol)
-      .write.mode("append").parquet(s"$dir/encoded")
-
-  /** OFFLINE maintenance for an appended code table — the
-    * [[graft.operators.Dedup.compactIndex]] discipline on
-    * `dir/encoded`: rewrite at ⌈bytes/targetBytes⌉ files, dedup
-    * retried appends, swap via rename. NOT safe concurrently with a
-    * running ingestion; model dirs (`coarse`/`codebook`/`meta`) are
-    * untouched. */
-  def compactAnnIndex(spark: org.apache.spark.sql.SparkSession, dir: String,
-                      targetBytes: Long = 128L << 20): Unit =
-    Partitioning.compactParquetDir(spark, s"$dir/encoded", targetBytes)
 
   /** Serve top-k from a stored [[AnnIndex]]: zero training, zero
     * corpus reads — [[ivfPqScore]] over the stored code table. */
@@ -1314,14 +1178,15 @@ object Similarity {
     require(nprobe >= 1, "nprobe must be >= 1")
     graft.plans.GraftExtensions.register(queries.sparkSession)
     val m = index.model.m
-    val sd = subWidth(index.model.codebook, m, queries, vecCol)
+    val sd = subWidth(index.model.codebook)
     val c = index.model.coarse.withColumn("__csq", dot(col("cv"), col("cv")))
     // the quantized query vector RIDES probe selection, so the ADC
     // table builds straight off the probe set — the old form re-paid
     // a quantize/subvector scan of the queries (adcTable) plus a
     // query-id join to attach the probes (the ivfPqScore discipline)
     val probes = Partitioning.fanOut(queries)
-      .select(col(idCol).as("query_id"), quantize(col(vecCol)).as("__qqv"))
+      .select(col(idCol).as("query_id"),
+        quantize(widthChecked(col(vecCol), m * sd)).as("__qqv"))
       .crossJoin(broadcast(c))
       .withColumn("__s", col("__csq") - lit(2d) * dot(col("__qqv"), col("cv")))
       .select(col("query_id"), col("cell"), col("__s"), col("__qqv"))
@@ -1453,10 +1318,11 @@ object Similarity {
     require(nprobe >= 1, "nprobe must be >= 1")
     graft.plans.GraftExtensions.register(queries.sparkSession)
     val m = model.m
-    val sd = subWidth(model.codebook, m, queries, vecCol)
+    val sd = subWidth(model.codebook)
     val c = model.coarse.withColumn("__csq", dot(col("cv"), col("cv")))
     val probes = Partitioning.fanOut(queries)
-      .select(col(idCol).as("query_id"), quantize(col(vecCol)).as("__qqv"))
+      .select(col(idCol).as("query_id"),
+        quantize(widthChecked(col(vecCol), m * sd)).as("__qqv"))
       .crossJoin(broadcast(c))
       .withColumn("__s", col("__csq") - lit(2d) * dot(col("__qqv"), col("cv")))
     // per probed cell, the query re-residualizes against THAT centroid

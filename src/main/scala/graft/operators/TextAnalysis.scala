@@ -201,16 +201,6 @@ object TextAnalysis {
     * of characters. Pure narrow char-class regex counting (RE2-safe,
     * engine-portable), codegen'd, streaming-composable like the other
     * quality gates. */
-  /** The combined [[mojibake]] score as a standalone narrow column —
-    * for inline gating (`filter(mojibakePermille($"text") <= cap)`)
-    * without the metrics projection or a self-join. */
-  def mojibakePermille(text: Column): Column = {
-    val bad = length(regexp_replace(text, "[^�]", "")) +
-      length(regexp_replace(text, "[^ÃÂâ]", ""))
-    when(length(text) === 0, lit(0L))
-      .otherwise(floor(bad * 1000 / length(text))).cast("long")
-  }
-
   def mojibake(docs: DataFrame, idCol: String = "doc_id",
                textCol: String = "text"): DataFrame = {
     def countOf(cls: String) =
@@ -1065,14 +1055,6 @@ object TextAnalysis {
       .withColumn("recall_permille",
         when(col("tp") + col("fn") > 0, expr("(tp * 1000) DIV (tp + fn)"))
           .otherwise(lit(0L)))
-  }
-
-  /** Deterministic document fingerprint appended to the input columns
-    * (order-insensitive content hash over the sorted distinct token
-    * set). Narrow — streaming-safe. */
-  def withFingerprint(docs: DataFrame): DataFrame = {
-    val tset = array_sort(array_distinct(tokens(col("text"))))
-    docs.withColumn("fp", md5(array_join(tset, " ").cast("binary")))
   }
 
   /** Deterministic document fingerprint: md5 over the sorted distinct

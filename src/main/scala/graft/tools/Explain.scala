@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: print the executed plan of named SparkEntry queries
   * (all queries when no names given).
   *
@@ -19,15 +17,7 @@ object Explain {
     val names = if (args.length > 1) args.drop(1).toSeq else graft.SparkEntry.queries.keys.toSeq
     val outDir = sys.env.get("SPARK_GRAFT_EXPLAIN_OUT")
     val suffix = sys.env.getOrElse("SPARK_GRAFT_EXPLAIN_SUFFIX", "")
-    val spark = SparkSession.builder().master("local[4]")
-      .appName("graft-explain")
-      .config("spark.sql.shuffle.partitions", "4")
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("ERROR")
-    graft.Bench.silenceKBoundedWindowWarnings()
+    val spark = graft.Session.local(4, logLevel = "ERROR")
     names.foreach { q =>
       println(s"===== $q =====")
       val df = graft.SparkEntry.queries(q)(spark, sfDir)

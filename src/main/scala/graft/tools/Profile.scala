@@ -1,7 +1,5 @@
 package graft.tools
 
-import org.apache.spark.sql.SparkSession
-
 /** Dev tool: time named SparkEntry queries run-by-run with Spark job
   * counts — answers "where do the seconds of a training-chain query
   * go" without the UI (which the sandbox can't serve).
@@ -13,17 +11,7 @@ object Profile {
     val sfDir = args.headOption.getOrElse("/root/testdata/sf0.1")
     val runs = args.lift(1).map(_.toInt).getOrElse(3)
     val names = args.drop(2).toSeq
-    val cpus = sys.env.getOrElse("SPARK_GRAFT_CPUS", "32")
-    val spark = SparkSession.builder().master(s"local[$cpus]")
-      .appName("graft-profile")
-      .config("spark.sql.shuffle.partitions", cpus)
-      .config("spark.sql.session.timeZone", "UTC")
-      .config("spark.sql.adaptive.enabled", "true")
-      .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-      .config("spark.ui.enabled", "false")
-      .getOrCreate()
-    spark.sparkContext.setLogLevel("WARN")
-    graft.Bench.silenceKBoundedWindowWarnings()
+    val spark = graft.Session.local(sys.env.getOrElse("SPARK_GRAFT_CPUS", "32").toInt)
     graft.sources.Tables.normalize(spark)
     @volatile var jobs = 0
     @volatile var stages = 0

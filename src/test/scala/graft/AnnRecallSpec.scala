@@ -288,26 +288,27 @@ class AnnRecallSpec extends SparkSpec {
       f"residual recall $rRes16%.2f below raw $rRaw16%.2f at pqK=16")
   }
 
-  test("annIndexAppend: append ≡ rebuild under the frozen model; serving sees the delta") {
+  test("annEncode of a delta under the frozen model ≡ encoding the union") {
     // index built on 3/4 of the corpus; every 4th vector arrives as a
-    // delta (IN-distribution — spread across all clusters, the regime
-    // appends are for; held-out whole clusters would quantize garbage
-    // under the frozen codebook, which is the documented RETRAIN
-    // trigger, not the append path) and is appended against the frozen
-    // model. The stored code table must equal encoding the full corpus
-    // with that SAME model — the honest comparison: a full rebuild
-    // would retrain on the union and converge to different centroids.
+    // delta (IN-distribution — spread across all clusters; held-out
+    // whole clusters would quantize garbage under the frozen codebook,
+    // which is the documented RETRAIN trigger) and is encoded against
+    // the frozen model. Base codes ∪ delta codes must equal encoding
+    // the full corpus with that SAME model — the honest comparison: a
+    // full rebuild would retrain on the union and converge to
+    // different centroids.
     val head = clustered.filter(col("vec_id") % 4 =!= 3)
     val delta = clustered.filter(col("vec_id") % 4 === 3)
     val dir = java.nio.file.Files.createTempDirectory("graft_ann_append_spec").toString
     Similarity.writeAnnIndex(Similarity.annIndexBuild(head,
       coarseK = nClusters, m = 4, pqK = 4, iters = 2), dir)
-    Similarity.annIndexAppend(delta, dir)
-    val appended = Similarity.readAnnIndex(spark, dir)
+    val frozen = Similarity.readAnnModel(spark, dir)
+    val stored = Similarity.readAnnIndex(spark, dir)
+    val appended = stored.copy(encoded =
+      stored.encoded.unionByName(Similarity.annEncode(delta, frozen)))
     def codeRows(df: org.apache.spark.sql.DataFrame) =
       df.select(col("vec_id"), col("cell"), col("codes").cast("array<long>"))
         .collect().map(r => (r.getLong(0), r.getLong(1), r.getSeq[Long](2))).toSet
-    val frozen = Similarity.readAnnModel(spark, dir)
     assert(codeRows(appended.encoded) ===
       codeRows(Similarity.annEncode(clustered, frozen)),
       "appended code table must equal one-shot encoding of the union under the frozen model")
@@ -320,32 +321,22 @@ class AnnRecallSpec extends SparkSpec {
       s"serving after append must reach delta vectors, got $got")
   }
 
-  test("compactAnnIndex dedups retried appends, shrinks files, preserves serving") {
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_compact_spec").toString
-    Similarity.writeAnnIndex(Similarity.annIndexBuild(clustered,
-      coarseK = nClusters, m = 4, pqK = 4, iters = 2), dir)
-    val queries = clustered.filter(col("vec_id") < 10)
-    def rows(idx: Similarity.AnnIndex) =
-      Similarity.ivfPqTopKIndexed(queries, idx, k = 5)
-        .orderBy(col("query_id"), col("rnk"))
-        .select(col("query_id"), col("cand_id"), col("rnk"), col("adc"))
-        .collect().toSeq
-    val before = rows(Similarity.readAnnIndex(spark, dir))
-    // an at-least-once RETRY: the same delta appended twice
-    val delta = clustered.filter(col("vec_id") >= 250)
-    // simulate retried appends of rows already present
-    Similarity.annIndexAppend(delta, dir)
-    def fileCount = new java.io.File(s"$dir/encoded").listFiles()
-      .count(_.getName.endsWith(".parquet"))
-    val filesBefore = fileCount
-    Similarity.compactAnnIndex(spark, dir)
-    val after = Similarity.readAnnIndex(spark, dir)
-    assert(fileCount < filesBefore, "compaction must shrink the file count")
-    val ids = after.encoded.groupBy(col("vec_id")).count()
-      .filter(col("count") > 1)
-    assert(ids.isEmpty, "compaction must dedup retried append rows")
-    assert(rows(after) === before,
-      "serving results must be identical across compaction")
+  test("a ragged query frame fails on its bad row, not only when the first row is bad") {
+    val index = Similarity.annIndexBuild(clustered, coarseK = nClusters,
+      m = 4, pqK = 4, iters = 2)
+    // row 0 has the right width; row 1 is one value short
+    val good = clustered.filter(col("vec_id") === 0L)
+      .select(col("vec_id"), col("embedding"))
+    val short = clustered.filter(col("vec_id") === 1L)
+      .select(col("vec_id"), slice(col("embedding"), 1, dims - 1).as("embedding"))
+    val ragged = good.unionByName(short).coalesce(1)
+    for ((name, serve) <- Seq[(String, () => Any)](
+        "ivfPqTopKIndexed" -> (() => Similarity.ivfPqTopKIndexed(ragged, index, k = 5).collect()),
+        "ivfPqTopKIndexedProbes" ->
+          (() => Similarity.ivfPqTopKIndexedProbes(ragged, index, k = 5, nprobe = 2).collect()))) {
+      val e = intercept[Exception](serve())
+      assert(e.getMessage.contains("query width"), s"$name: ${e.getMessage}")
+    }
   }
 
   test("refine (exact re-rank) recall >= raw stored-index serving at equal k") {
@@ -374,94 +365,6 @@ class AnnRecallSpec extends SparkSpec {
         val cs = rows.map(_.getAs[Double]("cos"))
         assert(cs.sameElements(cs.sortBy(-_)), s"cos not sorted: ${cs.toSeq}")
       }
-  }
-
-  test("AnnProbeStream: streaming serving ≡ batch serving; replay is exactly-once") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val index = Similarity.annIndexBuild(clustered, coarseK = nClusters,
-      m = 4, pqK = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_probe_idx").toString
-    Similarity.writeAnnIndex(index, dir)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_ann_probe_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_ann_probe_ckpt").toString
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val q = graft.streaming.AnnProbeStream.start(
-      mem.toDF.toDF("vec_id", "embedding"), "run1", dir, outDir, ckpt,
-      k = 5, nprobe = 2)
-    def queryRows(pred: org.apache.spark.sql.Column): Seq[(Long, Seq[Double])] =
-      clustered.filter(pred).select("vec_id", "embedding")
-        .as[(Long, Seq[Double])].collect().toSeq
-    val b0 = queryRows(col("vec_id") < 5)
-    mem.addData(b0: _*); q.processAllAvailable()
-    val b1 = queryRows(col("vec_id") >= 40 && col("vec_id") < 43)
-    mem.addData(b1: _*); q.processAllAvailable()
-    q.stop()
-    // parity: streamed hit lists ≡ batch serving over the same queries
-    val back = Similarity.readAnnIndex(spark, dir)
-    def servedSet(ids: Seq[Long]): Set[(Long, Long, Long)] =
-      Similarity.ivfPqTopKIndexedProbes(
-          clustered.filter(col("vec_id").isin(ids: _*)), back, k = 5, nprobe = 2)
-        .select(col("query_id"), col("cand_id"), col("rnk").cast("long"))
-        .as[(Long, Long, Long)].collect().toSet
-    def gotDf = spark.read.parquet(outDir).filter(col("run_id") === "run1")
-    val gotSet = gotDf
-      .select(col("query_id"), col("cand_id"), col("rnk").cast("long"))
-      .as[(Long, Long, Long)].collect().toSet
-    assert(gotSet === servedSet(b0.map(_._1)) ++ servedSet(b1.map(_._1)))
-    assert(gotSet.nonEmpty)
-    // replay batch 0 (a foreachBatch retry): the (run, batch) partition
-    // is overwritten with identical rows — no duplication
-    val before = gotDf.count()
-    graft.streaming.AnnProbeStream.process(
-      clustered.filter(col("vec_id") < 5).select(col("vec_id"), col("embedding")),
-      "run1", 0L, dir, outDir, k = 5, nprobe = 2)
-    assert(gotDf.count() === before)
-  }
-
-  test("TopicDriftStream: per-batch histograms ≡ batch assignment; replay is exactly-once") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val cents = Similarity.ivfTrain(clustered, k = nClusters, iters = 2)
-    val mdir = java.nio.file.Files.createTempDirectory("graft_drift_model").toString
-    cents.write.mode("overwrite").parquet(mdir)
-    val outDir = java.nio.file.Files.createTempDirectory("graft_drift_out").toString
-    val ckpt = java.nio.file.Files.createTempDirectory("graft_drift_ckpt").toString
-    val mem = MemoryStream[(Long, Seq[Double])]
-    val q = graft.streaming.TopicDriftStream.start(
-      mem.toDF.toDF("vec_id", "embedding"), "runD", mdir, outDir, ckpt)
-    def vecRows(pred: org.apache.spark.sql.Column): Seq[(Long, Seq[Double])] =
-      clustered.filter(pred).select("vec_id", "embedding")
-        .as[(Long, Seq[Double])].collect().toSeq
-    val b0 = vecRows(col("vec_id") < 20)
-    mem.addData(b0: _*); q.processAllAvailable()
-    val b1 = vecRows(col("vec_id") >= 20 && col("vec_id") < 30)
-    mem.addData(b1: _*); q.processAllAvailable()
-    q.stop()
-    // parity: each batch's streamed histogram ≡ batch ivfAssign groupBy
-    def gotDf = spark.read.parquet(outDir).filter(col("run_id") === "runD")
-    def expected(ids: Seq[Long]): Map[Long, Long] =
-      Similarity.ivfAssign(clustered.filter(col("vec_id").isin(ids: _*)), cents)
-        .groupBy("cell").count()
-        .as[(Long, Long)].collect().toMap
-    val got0 = gotDf.filter(col("batch_id") === 0L)
-      .select("cell", "cnt").as[(Long, Long)].collect().toMap
-    val got1 = gotDf.filter(col("batch_id") === 1L)
-      .select("cell", "cnt").as[(Long, Long)].collect().toMap
-    assert(got0 === expected(b0.map(_._1)))
-    assert(got1 === expected(b1.map(_._1)))
-    // permille shares sum to ≤ 1000 per batch (floor rounding)
-    val s0 = gotDf.filter(col("batch_id") === 0L)
-      .agg(sum("permille")).as[Long].head()
-    assert(s0 > 900L && s0 <= 1000L)
-    // replay batch 0 (a foreachBatch retry): identical overwrite
-    val before = gotDf.count()
-    graft.streaming.TopicDriftStream.process(
-      clustered.filter(col("vec_id") < 20).select(col("vec_id"), col("embedding")),
-      "runD", 0L, mdir, outDir)
-    assert(gotDf.count() === before)
-    assert(gotDf.filter(col("batch_id") === 0L)
-      .select("cell", "cnt").as[(Long, Long)].collect().toMap === got0)
   }
 
   test("k-means|| seeding: deterministic, spreads across clusters, beats min-id WCSS") {

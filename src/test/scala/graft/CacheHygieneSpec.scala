@@ -2,7 +2,6 @@ package graft
 
 import org.apache.spark.sql.functions._
 
-import graft.jobs.CurateCorpusJob
 import graft.operators.{Caching, Dedup, TextAnalysis}
 import graft.sources.Tables
 
@@ -89,14 +88,25 @@ class CacheHygieneSpec extends SparkSpec {
     assert(leaked.isEmpty, s"langId leaked persistent RDDs: $leaked")
   }
 
-  test("curate releases its caches in both modes") {
-    for (exact <- Seq(false, true)) {
-      val leaked = leakedAfter {
-        val result = CurateCorpusJob.curate(spark, sf, exactComponents = exact)
-        assert(result.docs.count() === result.stats.kept)
-        result.release()
-      }
-      assert(leaked.isEmpty, s"curate(exactComponents=$exact) leaked: $leaked")
-    }
+  test("graph pairs cache: a rewritten documents.parquet serves fresh pairs") {
+    import graft.operators.Graph
+    val dir = java.nio.file.Files.createTempDirectory("pairs_cache").toString
+    def publish(docs: org.apache.spark.sql.DataFrame): Unit =
+      docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
+    def expected(docs: org.apache.spark.sql.DataFrame) =
+      Graph.degrees(Dedup.jaccardPairsBanded(docs, Seq("source", "lang"), 900))
+        .orderBy(col("doc_id")).collect().toSeq
+    def served() = SparkEntry.queries("graph_degrees")(spark, dir).collect().toSeq
+    val all = spark.read.parquet(s"$sf/documents.parquet")
+    publish(all)
+    assert(served() === expected(all))
+    val persisted = spark.sparkContext.getPersistentRDDs.size
+    val half = all.filter(col("doc_id") % 2 === 0)
+    publish(half)
+    val fresh = served()
+    assert(fresh === expected(half), "pairs must follow the rewritten documents")
+    assert(fresh !== expected(all), "fixture must change the pairs")
+    assert(spark.sparkContext.getPersistentRDDs.size === persisted,
+      "the replaced pairs' checkpoint must be released")
   }
 }

@@ -1,7 +1,5 @@
 package graft
 
-import java.sql.Timestamp
-
 import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
@@ -290,8 +288,11 @@ class CorpusSpec extends SparkSpec {
   }
 
   test("corpus pipeline composes: curate → split → sample → pack") {
-    val result = graft.jobs.CurateCorpusJob.curate(spark, sf)
-    val (curated, stats) = (result.docs, result.stats)
+    // the suite's curate pipeline picks the survivors; split, sample
+    // and pack run over their full document rows
+    val curated = docs.join(
+      SparkEntry.queries("corpus_e2e_curate")(spark, sf).select("doc_id"), "doc_id")
+    val kept = curated.count()
     val train = Corpus.split(curated)
       .filter(col("split") === "train").drop("bucket", "split")
     val sampled = Corpus.stratifiedSample(train, "source",
@@ -299,27 +300,9 @@ class CorpusSpec extends SparkSpec {
     val packed = Corpus.pack(sampled, budgetTokens = 512)
     val n = packed.count()
     assert(n === sampled.count())
-    assert(n > 0 && n <= stats.kept)
+    assert(n > 0 && n <= kept)
     // every pack is within its shard and ids are present exactly once
     assert(packed.select("doc_id").distinct().count() === n)
-  }
-
-  test("streaming exact dedup drops in-horizon duplicates") {
-    val mem = MemoryStream[(Timestamp, Long, String)]
-    val out = Dedup.exactStreaming(
-      mem.toDF().toDF("ts", "doc_id", "text"), "ts", "10 minutes")
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("sdedup_out").start()
-    mem.addData(
-      (Timestamp.valueOf("2024-01-01 10:00:00"), 1L, "same text"),
-      (Timestamp.valueOf("2024-01-01 10:00:01"), 2L, "same text"),
-      (Timestamp.valueOf("2024-01-01 10:00:02"), 3L, "other text"))
-    q.processAllAvailable()
-    mem.addData((Timestamp.valueOf("2024-01-01 10:01:00"), 4L, "same text"))
-    q.processAllAvailable()
-    val ids = spark.table("sdedup_out").select("doc_id").as[Long].collect().toSet
-    assert(ids === Set(1L, 3L)) // 2 and 4 are in-horizon duplicates
-    q.stop()
   }
 
   test("shuffleOrder: totally ordered across range partitions, seeded, deterministic") {

@@ -350,4 +350,22 @@ class LshBlockingSpec extends SparkSpec {
     info(s"planted near-dups recovered: ${found.size}/20")
     assert(found.size >= 19, s"only ${found.size}/20 planted near-dups recovered")
   }
+
+  test("jaccardPairs refuses empty blocking columns") {
+    val d = Seq((1L, "a b c")).toDF("doc_id", "text")
+    val e = intercept[IllegalArgumentException](Dedup.jaccardPairs(d, Seq.empty, 900))
+    assert(e.getMessage.contains("blocking"))
+  }
+
+  test("jaccardVerifySets scores an explicit candidate-pair set") {
+    val d = Seq((1L, "a b c d"), (2L, "a b c d"), (3L, "w x y z"))
+      .toDF("doc_id", "text")
+      .withColumn("tset", array_distinct(split(col("text"), " ")))
+      .withColumn("tsz", size(col("tset")).cast("long"))
+    val pairs = Seq((1L, 2L), (1L, 3L)).toDF("doc_a", "doc_b")
+    val v = Dedup.jaccardVerifySets(d, pairs, 900).collect()
+    assert(v.length === 1)
+    assert(v.head.getAs[Long]("doc_a") === 1L && v.head.getAs[Long]("doc_b") === 2L)
+    assert(v.head.getAs[Long]("jac_permille") === 1000L)
+  }
 }

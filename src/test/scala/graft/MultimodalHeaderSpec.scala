@@ -2203,4 +2203,29 @@ class MultimodalHeaderSpec extends SparkSpec {
       }
     }
   }
+
+  test("image index lifecycle: replayed append folds away, probe finds an exact dup") {
+    val indexDir = java.nio.file.Files.createTempDirectory("img_index").toString + "/index"
+    // base segment ids < 50, appended segment 50..99 (appended TWICE —
+    // an at-least-once replay must fold away), then compact
+    val ids = (0L until 100L).toDF("doc_id")
+    Multimodal.buildImageIndex(
+      Multimodal.syntheticJpegAHashBlobs(ids.filter(col("doc_id") < 50)), indexDir)
+    val delta = Multimodal.syntheticJpegAHashBlobs(ids.filter(col("doc_id") >= 50))
+    Multimodal.appendImageIndex(delta, indexDir, "d1")
+    Multimodal.appendImageIndex(delta, indexDir, "d1") // replay
+    Multimodal.compactImageIndex(spark, indexDir)
+    val stored = Multimodal.readImageIndex(spark, indexDir)
+    assert(stored.count() === 100L, "replayed append must fold away")
+    assert(spark.read.parquet(indexDir).select("seg").distinct()
+      .as[String].collect().toSeq === Seq("base"), "compact must fold segments")
+    // id 500 ≡ 16 (mod 121): its fixture bytes are IDENTICAL to indexed
+    // id 16 (the dc field cycles mod 121), a guaranteed exact dup
+    val probe = Multimodal.imageAHash(
+        Multimodal.syntheticJpegAHashBlobs(Seq(500L).toDF("doc_id")), 8)
+      .select(col("doc_id"), col("ahash"))
+    val hits = Multimodal.aHashProbe(probe, stored, maxDistance = 1)
+    assert(hits.filter(col("hamming") === 0).count() > 0,
+      "the folded index must serve the exact dup")
+  }
 }

@@ -258,14 +258,6 @@ class PlanShapeSpec extends SparkSpec {
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
   }
 
-  test("stripRepeatedSpansText: rebuild is narrow — exactly one id-keyed join " +
-    "of the span list onto the corpus") {
-    val plan = Dedup.stripRepeatedSpansText(Tables.documents(spark, sf), 8)
-      .queryExecution.executedPlan.toString
-    assert(!plan.contains("CartesianProduct"), plan.take(2000))
-    assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
-  }
-
   test("PlanLint: flags cartesians and sort-aggregates, budgets exchanges") {
     import spark.implicits._
     import graft.plans.PlanLint
@@ -367,21 +359,6 @@ class PlanShapeSpec extends SparkSpec {
         Multimodal.syntheticPixelBlobs(Tables.documents(spark, sf)))
       .queryExecution.executedPlan.toString
     assert(!plan.contains("Exchange"), plan.take(2000))
-  }
-
-  test("upsert-table delta read is partition-pruned to the delta's buckets") {
-    import spark.implicits._
-    import graft.operators.Cdc
-    val dir = java.nio.file.Files.createTempDirectory("upsert_prune").toString + "/t"
-    Cdc.initUpsertTable((1L to 100L).map(k => (k, k * 2)).toDF("k", "v"),
-      dir, Seq("k"), numBuckets = 8)
-    // the read applyDeltaStored issues: bucket IN (touched) must reach
-    // the scan as a PartitionFilter — the property that caps a delta
-    // apply at O(touched buckets) on a 100 TB table
-    val plan = spark.read.parquet(dir).filter(col("bucket").isin(0, 3))
-      .queryExecution.executedPlan.toString
-    assert(plan.contains("PartitionFilters") && plan.contains("bucket"),
-      plan.take(2000))
   }
 
   test("runtime bloom-filter join pruning injects might_contain on the probe side") {

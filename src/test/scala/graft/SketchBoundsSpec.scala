@@ -289,24 +289,11 @@ class SketchBoundsSpec extends SparkSpec {
     val cen = Relational.mgState(small, Seq(col("k")), col("v"), k)
       .select("v", "n").as[(String, Long)].collect().toMap
     assert(cen === exact.filter(_._1.toLong < k), "census must be the exact counts")
-    // the generic StateStream side-car maintains MG too: per-batch
-    // partials in the segmented store, merged readout honors the same
-    // laws, and a replayed (run, batch) overwrites (MG counters are
-    // NOT idempotent — the store's exactly-once is what protects them)
-    val store = java.nio.file.Files.createTempDirectory("mg_stream").toString + "/mg"
-    val batches = (0 to 2).map(i => df.filter(col("id") % 3 === i))
-    batches.zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.StateStream.process(b, "r1", i.toLong, store)(
-        Relational.mgState(_, Seq(col("k")), col("v"), k))
-    }
-    def streamed() = Relational.readMergedState(spark, store)(st =>
-      Relational.mergeMgStates(Seq(st), Seq("k"), k))
-    laws(streamed(), "streamed")
-    val before = streamed().select("v", "n").as[(String, Long)].collect().toSet
-    graft.streaming.StateStream.process(batches(1), "r1", 1L, store)(
-      Relational.mgState(_, Seq(col("k")), col("v"), k))
-    assert(streamed().select("v", "n").as[(String, Long)].collect().toSet === before,
-      "replayed micro-batch must not inflate MG counters")
+    // a stream folds one micro-batch partial at a time: the running
+    // merge honors the same laws after every batch
+    val folded = slices.reduceLeft((acc, b) =>
+      Relational.mergeMgStates(Seq(acc, b), Seq("k"), k))
+    laws(folded, "folded")
   }
 
   test("coverage state: merge ≡ direct EXACTLY, replay-idempotent, canonical, streamed agrees") {
@@ -343,42 +330,25 @@ class SketchBoundsSpec extends SparkSpec {
       .select("k", "n_islands", "covered", "span", "utilization_permille")
       .as[(String, Long, Long, Long, Long)].collect().toSet
     assert(ro === ic, "state readout must equal the direct aggregate")
-    // the generic StateStream side-car maintains it too
-    val store = java.nio.file.Files.createTempDirectory("cov_stream").toString + "/cov"
-    (0 to 2).foreach { i =>
-      graft.streaming.StateStream.process(df.filter(col("id") % 3 === i),
-        "r1", i.toLong, store)(
-        Relational.coverageState(_, Seq(col("k")), col("s0"), col("e0")))
-    }
-    def streamed() = Relational.readMergedState(spark, store)(st =>
-      Relational.mergeCoverageStates(Seq(st), Seq("k")))
-    assert(rows(streamed()) === want, "streamed store must read the direct islands")
-    // crash-retry of a batch: idempotent state + overwrite store ⇒ no drift
-    graft.streaming.StateStream.process(df.filter(col("id") % 3 === 1),
-      "r1", 1L, store)(
-      Relational.coverageState(_, Seq(col("k")), col("s0"), col("e0")))
-    assert(rows(streamed()) === want, "replayed micro-batch must not change islands")
+    // a stream folds one micro-batch partial at a time; a crash-retried
+    // batch merges in again without drift (idempotent state)
+    val streamed = (slices :+ slices(1)).reduceLeft((acc, b) =>
+      Relational.mergeCoverageStates(Seq(acc, b), Seq("k")))
+    assert(rows(streamed) === want, "folded micro-batches must read the direct islands")
   }
 
-  test("streaming anomaly monitor: StateStream hourly counts → zscoreFlags ≡ batch-direct") {
+  test("anomaly monitor: merged per-batch hourly counts → zscoreFlags ≡ batch-direct") {
     import spark.implicits._
     import graft.operators.Relational
-    // the composition a live ops monitor runs: the side-car lands each
-    // micro-batch's per-hour partial counts (aggState — NOT idempotent,
-    // so the store's exactly-once is load-bearing), the reader merges
-    // and scores the series; flags must equal the batch-direct ones
+    // the composition a live ops monitor runs: each micro-batch's
+    // per-hour partial counts (aggState) are merged and the series is
+    // scored; flags must equal the batch-direct ones
     val ev = Tables.events(spark, dir)
       .select(col("event_type"), expr("ts_sec div 3600").as("hour_num"),
         floor(col("value") * 100 + 0.5).cast("long").as("cents"))
-    val store = java.nio.file.Files.createTempDirectory("anom_stream").toString + "/h"
-    val batches = (0 to 2).map(i => ev.filter(pmod(col("cents"), lit(3)) === i))
-    batches.zipWithIndex.foreach { case (b, i) =>
-      graft.streaming.StateStream.process(b, "r1", i.toLong, store)(
-        Relational.aggState(_, Seq(col("event_type"), col("hour_num")), col("cents")))
-    }
-    // crash-retry of one micro-batch: the overwrite absorbs the replay
-    graft.streaming.StateStream.process(batches(1), "r1", 1L, store)(
-      Relational.aggState(_, Seq(col("event_type"), col("hour_num")), col("cents")))
+    val partials = (0 to 2).map(i => Relational.aggState(
+      ev.filter(pmod(col("cents"), lit(3)) === i),
+      Seq(col("event_type"), col("hour_num")), col("cents")))
     def flags(series: org.apache.spark.sql.DataFrame): Set[(String, Long, Long, Long, Boolean)] =
       Relational.zscoreFlags(
           series.select(col("event_type"), col("hour_num"), col("n_rows")),
@@ -387,12 +357,12 @@ class SketchBoundsSpec extends SparkSpec {
         .select(col("event_type"), col("t"), col("x"), col("z2_permille"),
           col("is_anomaly"))
         .as[(String, Long, Long, Long, Boolean)].collect().toSet
-    val streamed = flags(Relational.readMergedState(spark, store)(st =>
-      Relational.mergeAggStates(Seq(st), Seq("event_type", "hour_num"))))
+    val streamed = flags(
+      Relational.mergeAggStates(partials, Seq("event_type", "hour_num")))
     val direct = flags(ev.groupBy(col("event_type"), col("hour_num"))
       .agg(count(lit(1)).as("n_rows")))
     assert(streamed === direct,
-      "streamed hourly-count store must score identically to batch-direct")
+      "merged hourly counts must score identically to batch-direct")
     assert(direct.exists(_._5), "fixture must produce at least one anomaly")
   }
 
@@ -419,72 +389,20 @@ class SketchBoundsSpec extends SparkSpec {
     assert(neg === Map(-1L -> 2L, -2L -> 1L))
   }
 
-  test("segmented state store: replayed deltas overwrite (exactly-once for " +
-    "non-idempotent count states), compact folds, results stable") {
+  test("histogram state over two micro-batches: merged quantiles ≡ batch-direct") {
     import spark.implicits._
     import graft.operators.Relational
-    val dir = java.nio.file.Files.createTempDirectory("state_store").toString + "/hist"
-    val df = (0 until 1000).map(i => ("t", i.toLong)).toDF("k", "v")
-    val w = 10L
-    val slices = (0 to 2).map(i => df.filter(col("v") % 3 === i))
-    slices.zipWithIndex.foreach { case (s, i) =>
-      Relational.appendState(
-        Relational.histogramState(s, Seq(col("k")), col("v"), w), dir, s"d$i")
-    }
-    def quantiles(): Map[Int, Long] = Relational.readMergedState(spark, dir)(st =>
-        Relational.histogramQuantiles(
-          Relational.mergeHistogramStates(Seq(st), Seq("k")), Seq("k"), Seq(500, 990), w))
+    val batches = Seq(0 until 500, 500 until 1000).map(r =>
+      Relational.histogramState(r.map(i => ("t", i.toLong)).toDF("k", "v"),
+        Seq(col("k")), col("v"), 10L))
+    val quantiles = Relational.histogramQuantiles(
+        Relational.mergeHistogramStates(batches, Seq("k")), Seq("k"), Seq(500, 990), 10L)
       .select("q", "quantile_lo").as[(Int, Long)].collect().toMap
-    val before = quantiles()
-    assert(before === Map(500 -> 490L, 990 -> 980L))
-    // at-least-once: replaying a delta overwrites its partition — the
-    // count-sum state would double without the segment store
-    Relational.appendState(
-      Relational.histogramState(slices(1), Seq(col("k")), col("v"), w), dir, "d1")
-    assert(quantiles() === before, "replayed delta must not double-count")
-    assert(Relational.readMergedState(spark, dir)(st =>
-        Relational.mergeHistogramStates(Seq(st), Seq("k")))
-      .agg(sum(col("n"))).as[Long].head() === 1000L)
-    Relational.compactStateStore(spark, dir)(st =>
-      Relational.mergeHistogramStates(Seq(st), Seq("k")))
-    assert(spark.read.parquet(dir).select(col("seg")).distinct()
-      .as[String].collect().toSeq === Seq("base"))
-    assert(quantiles() === before, "compaction must not change the merged state")
+    assert(quantiles === Map(500 -> 490L, 990 -> 980L),
+      "merged per-batch state must reproduce the batch-direct quantiles")
   }
 
-  test("ProfileStream: in-stream quantile maintenance ≡ batch-direct, replay-exactly-once") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.operators.Relational
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("profile_stream").toString
-    val dir = s"$base/hist"
-    val mem = MemoryStream[(String, Long)]
-    val q = graft.streaming.StateStream.start(
-      mem.toDF().toDF("k", "v"), "r1", dir, s"$base/ckpt")(
-      Relational.histogramState(_, Seq(col("k")), col("v"), 10L))
-    try {
-      mem.addData((0 until 500).map(i => ("t", i.toLong)): _*)
-      q.processAllAvailable()
-      mem.addData((500 until 1000).map(i => ("t", i.toLong)): _*)
-      q.processAllAvailable()
-    } finally q.stop()
-    def quantiles(): Map[Int, Long] = Relational.readMergedState(spark, dir)(st =>
-        Relational.histogramQuantiles(
-          Relational.mergeHistogramStates(Seq(st), Seq("k")), Seq("k"), Seq(500, 990), 10L))
-      .select("q", "quantile_lo").as[(Int, Long)].collect().toMap
-    assert(quantiles() === Map(500 -> 490L, 990 -> 980L),
-      "streamed state must reproduce the batch-direct quantiles")
-    // post-crash foreachBatch retry: same (run, batch) overwrites
-    graft.streaming.StateStream.process(
-      (500 until 1000).map(i => ("t", i.toLong)).toDF("k", "v"),
-      "r1", batchId = 1L, dir)(
-      Relational.histogramState(_, Seq(col("k")), col("v"), 10L))
-    assert(quantiles() === Map(500 -> 490L, 990 -> 980L),
-      "replayed micro-batch must not double-count")
-  }
-
-  test("count-min sketch: one-sided error, merge ≡ recompute, store lifecycle") {
+  test("count-min sketch: one-sided error, merge ≡ recompute, estimates agree") {
     import spark.implicits._
     import graft.operators.Relational
     val (depth, width) = (4, 128)
@@ -516,72 +434,13 @@ class SketchBoundsSpec extends SparkSpec {
     val merged = Relational.mergeCmsStates(slices, Seq("event_type"))
     assert(merged.exceptAll(whole).isEmpty && whole.exceptAll(merged).isEmpty,
       "merged delta states must equal the single-shot state bucket for bucket")
-    // segmented store: replayed delta overwrites its own partition
-    // (count states are NOT idempotent — the store absorbs that),
-    // compaction folds without changing any estimate
-    val sdir = java.nio.file.Files.createTempDirectory("cms_store").toString + "/cms"
-    slices.zipWithIndex.foreach { case (s, i) =>
-      Relational.appendState(s, sdir, s"d$i") }
+    // point estimates read off the merged state equal the whole-set ones
     val probes = ev.select("event_type").distinct()
       .crossJoin(broadcast(Seq("1", "7", "42").toDF("v")))
-    def est(): Map[(String, String), Long] = Relational.cmsEstimate(
-        Relational.readMergedState(spark, sdir)(st =>
-          Relational.mergeCmsStates(Seq(st), Seq("event_type"))),
-        Seq("event_type"), probes, "v", depth, width)
-      .collect().map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("n_est")).toMap
-    val before = est()
-    Relational.appendState(slices(1), sdir, "d1") // at-least-once replay
-    assert(est() === before, "replayed delta must not double-count")
-    Relational.compactStateStore(spark, sdir)(st =>
-      Relational.mergeCmsStates(Seq(st), Seq("event_type")))
-    assert(est() === before, "compaction must not change any estimate")
-  }
-
-  test("StateStream: in-stream CMS and KMV maintenance ≡ batch-direct, replay-exactly-once") {
-    import spark.implicits._
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    import graft.operators.Relational
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("state_stream").toString
-    val (depth, width, k) = (4, 64, 16)
-    val rows = (0 until 600).map(i => ("t" + i % 3, (i % 50).toString))
-    val mem = MemoryStream[(String, String)]
-    // two side-car stores off one logical ingest: a CMS (non-idempotent
-    // count state — the store's exactly-once matters) and a KMV sketch
-    val qCms = graft.streaming.StateStream.start(
-      mem.toDF().toDF("key", "v"), "r1", s"$base/cms", s"$base/ck1")(
-      Relational.cmsState(_, Seq(col("key")), col("v"), depth, width))
-    val qKmv = graft.streaming.StateStream.start(
-      mem.toDF().toDF("key", "v"), "r2", s"$base/kmv", s"$base/ck2")(
-      Relational.kmvState(_, Seq(col("key")), col("v"), k))
-    try {
-      mem.addData(rows.take(300): _*)
-      qCms.processAllAvailable(); qKmv.processAllAvailable()
-      mem.addData(rows.drop(300): _*)
-      qCms.processAllAvailable(); qKmv.processAllAvailable()
-    } finally { qCms.stop(); qKmv.stop() }
-    val batchDf = rows.toDF("key", "v")
-    def cmsMerged() = Relational.readMergedState(spark, s"$base/cms")(st =>
-      Relational.mergeCmsStates(Seq(st), Seq("key")))
-    // streamed CMS state ≡ the single-shot batch state, bucket for bucket
-    val direct = Relational.cmsState(batchDf, Seq(col("key")), col("v"), depth, width)
-    assert(cmsMerged().exceptAll(direct).isEmpty && direct.exceptAll(cmsMerged()).isEmpty,
-      "streamed CMS state must equal the batch-direct state")
-    // streamed KMV estimate ≡ batch-direct estimate
-    def kmvEst(st: org.apache.spark.sql.DataFrame) =
-      Relational.kmvDistinctEstimate(Relational.mergeKmvStates(Seq(st), Seq("key"), k),
-        Seq("key"), k).select("key", "est_distinct")
-        .as[(String, Long)].collect().toMap
-    val streamedKmv = kmvEst(Relational.readMergedState(spark, s"$base/kmv")(identity))
-    assert(streamedKmv === kmvEst(Relational.kmvState(batchDf, Seq(col("key")), col("v"), k)),
-      "streamed KMV estimates must equal batch-direct")
-    // post-crash foreachBatch retry: same (run, batch) overwrites — the
-    // CMS count state would double without the segment store
-    graft.streaming.StateStream.process(
-      rows.drop(300).toDF("key", "v"), "r1", batchId = 1L, s"$base/cms")(
-      Relational.cmsState(_, Seq(col("key")), col("v"), depth, width))
-    assert(cmsMerged().exceptAll(direct).isEmpty && direct.exceptAll(cmsMerged()).isEmpty,
-      "replayed micro-batch must not double-count")
+    def est(state: org.apache.spark.sql.DataFrame): Map[(String, String), Long] =
+      Relational.cmsEstimate(state, Seq("event_type"), probes, "v", depth, width)
+        .collect().map(r => (r.getString(0), r.getString(1)) -> r.getAs[Long]("n_est")).toMap
+    assert(est(merged) === est(whole), "merged state must estimate like the whole-set state")
   }
 
   test("AMS F2 sketch: estimate tracks the exact self-join size; merge ≡ recompute") {
@@ -640,120 +499,6 @@ class SketchBoundsSpec extends SparkSpec {
     val merged = Relational.mergeBloomStates(slices ++ Seq(slices(1)))
     assert(merged.exceptAll(whole).isEmpty && whole.exceptAll(merged).isEmpty,
       "replayed-slice OR-merge must equal the single-shot position set")
-  }
-
-  test("ProfileMaintenanceJob: two-segment ingest + replay + compact reads the direct profile") {
-    import spark.implicits._
-    import graft.jobs.ProfileMaintenanceJob
-    import graft.operators.Relational
-    val store = java.nio.file.Files.createTempDirectory("profile_job").toString + "/p"
-    val ev = Tables.events(spark, dir)
-    val slices = (0 to 1).map(i => ev.filter(pmod(col("event_id"), lit(2)) === i))
-    ProfileMaintenanceJob.ingest(slices(0), store, "d0")
-    ProfileMaintenanceJob.ingest(slices(1), store, "d1")
-    ProfileMaintenanceJob.ingest(slices(1), store, "d1") // at-least-once replay
-    def snap(): Seq[org.apache.spark.sql.Row] =
-      ProfileMaintenanceJob.profile(spark, store).collect().toSeq
-    val got = snap()
-    // exact columns agree with a direct computation over all events
-    val cents = ev.withColumn("cents", floor(col("value") * 100 + 0.5).cast("long"))
-    val direct = cents.groupBy("event_type")
-      .agg(count(lit(1)).as("n"), sum("cents").as("s"))
-      .collect().map(r => r.getString(0) -> (r.getLong(1), r.getLong(2))).toMap
-    assert(got.nonEmpty)
-    got.foreach { r =>
-      val (n, s0) = direct(r.getAs[String]("event_type"))
-      assert(r.getAs[Long]("n_rows") === n && r.getAs[Long]("sum_cents") === s0,
-        s"agg family diverged on $r")
-      // sketch columns sane: distinct-user estimate within KMV bounds
-      val nd = ev.filter(col("event_type") === r.getAs[String]("event_type"))
-        .select("user_id").distinct().count()
-      val est = r.getAs[Long]("est_distinct_users")
-      assert(est === nd || math.abs(est - nd).toDouble / nd <= 0.40,
-        s"KMV estimate $est vs exact $nd")
-      // the sample's a-posteriori subset sum tracks the exact answer
-      val exEven = cents.filter(col("event_type") === r.getAs[String]("event_type")
-          && pmod(col("user_id"), lit(2)) === 0)
-        .agg(coalesce(sum("cents"), lit(0L))).head().getLong(0)
-      val estEven = r.getAs[Long]("est_cents_even_users")
-      assert(estEven === exEven ||
-        math.abs(estEven - exEven).toDouble / math.max(exEven, 1L) <= 0.60,
-        s"priority-sample estimate $estEven vs exact $exEven")
-      // the MG top-user counter never overshoots that user's true count
-      val lb = r.getAs[Long]("top_user_lb")
-      val topUser = r.getAs[Long]("top_user_id")
-      val exTop = ev.filter(col("event_type") === r.getAs[String]("event_type")
-          && col("user_id") === topUser).count()
-      assert(lb >= 1 && lb <= exTop,
-        s"MG top-user bound $lb vs exact $exTop for user $topUser")
-      // the coverage store reads the EXACT direct answer (idempotent
-      // islands: merge ≡ recompute even across the replayed segment)
-      val exCov = Relational.intervalCoverage(
-          ev.filter(col("event_type") === r.getAs[String]("event_type")),
-          Seq(col("event_type")), col("ts_sec"),
-          col("ts_sec") + ProfileMaintenanceJob.CoverageWindowSec)
-        .select("covered").collect().headOption.map(_.getLong(0)).getOrElse(0L)
-      assert(r.getAs[Long]("active_secs") === exCov,
-        s"coverage store diverged from direct: ${r.getAs[Long]("active_secs")} vs $exCov")
-      // the trend store's merged moments fit EXACTLY like a direct OLS
-      val exSlope = Relational.linearTrend(
-          cents.filter(col("event_type") === r.getAs[String]("event_type")),
-          Seq(col("event_type")), expr("ts_sec div 3600"), expr("cents div 100"))
-        .select("slope_ppm").collect().headOption.flatMap(x => Option(x.get(0)))
-      assert(Option(r.get(r.fieldIndex("value_slope_ppm"))) === exSlope,
-        s"trend store diverged from direct OLS on $r")
-    }
-    // compaction folds all ten stores and changes no readout
-    ProfileMaintenanceJob.compact(spark, store)
-    assert(snap() === got, "compaction must not change the profile")
-    for (fam <- Seq("agg", "hist", "kmv", "ams", "cms", "bloom", "sample",
-        "mg", "cov", "trend"))
-      assert(spark.read.parquet(s"$store/$fam").select("seg").distinct()
-        .as[String].collect().toSeq === Seq("base"), s"$fam not folded")
-    // the probe-style stores answer through their own readers
-    val probes = ev.select("event_type").distinct()
-      .crossJoin(broadcast(Seq("1", "7").toDF("v")))
-    val cms = Relational.cmsEstimate(
-      Relational.readMergedState(spark, s"$store/cms")(st =>
-        Relational.mergeCmsStates(Seq(st), Seq("event_type"))),
-      Seq("event_type"), probes, "v",
-      ProfileMaintenanceJob.CmsDepth, ProfileMaintenanceJob.CmsWidth)
-    val exact = ev.groupBy(col("event_type"), col("user_id").cast("string").as("v"))
-      .agg(count(lit(1)).as("n")).collect()
-      .map(r => (r.getString(0), r.getString(1)) -> r.getLong(2)).toMap
-    cms.collect().foreach { r =>
-      val ex = exact.getOrElse((r.getString(0), r.getString(1)), 0L)
-      assert(r.getAs[Long]("n_est") >= ex, s"CMS undercounted through the store: $r")
-    }
-  }
-
-  test("profile() survives a key whose optional states are legally empty") {
-    import spark.implicits._
-    import graft.jobs.ProfileMaintenanceJob
-    // a key with all-null user_id (kmv/ams/cms/mg states have no rows
-    // for it) and cents = 0 (the sample store's w > 0 guard filters
-    // every row): the agg/hist/cov/trend families still have rows, so
-    // the profile row must SURVIVE with nulls, not vanish (all
-    // per-state readouts join LEFT off the agg spine)
-    val store = java.nio.file.Files.createTempDirectory("profile_degen").toString + "/p"
-    val normal = Tables.events(spark, dir).limit(200)
-    val degen = spark.range(10).select(
-      lit("degenerate").as("event_type"),
-      col("id").as("event_id"),
-      lit(null).cast("long").as("user_id"),
-      (lit(1000L) + col("id")).as("ts_sec"),
-      lit(0.0).as("value"))
-    ProfileMaintenanceJob.ingest(
-      normal.select("event_type", "event_id", "user_id", "ts_sec", "value")
-        .unionByName(degen), store, "d0")
-    val rows = ProfileMaintenanceJob.profile(spark, store).collect()
-    val d = rows.find(_.getAs[String]("event_type") == "degenerate")
-    assert(d.isDefined, "degenerate key dropped from the profile")
-    assert(d.get.getAs[Long]("n_rows") === 10L)
-    assert(d.get.isNullAt(d.get.fieldIndex("est_distinct_users")),
-      "all-null user_id must read as null distinct estimate, not a number")
-    assert(d.get.isNullAt(d.get.fieldIndex("est_cents_even_users")),
-      "empty sample state must read as null, not zero")
   }
 
   test("kmvOverlap estimates track the exact pairwise set sizes (k=64)") {

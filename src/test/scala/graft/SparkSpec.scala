@@ -5,12 +5,6 @@ import org.scalatest.funsuite.AnyFunSuite
 
 /** Shared one-session-per-suite base (guide: one lazy SparkSession). */
 trait SparkSpec extends AnyFunSuite {
-  lazy val spark: SparkSession = SparkSession.builder()
-    .master("local[4]")
-    .config("spark.sql.shuffle.partitions", "4")
-    .config("spark.sql.session.timeZone", "UTC")
-    .config("spark.sql.legacy.parquet.nanosAsLong", "true")
-    .config("spark.ui.enabled", "false")
-    .getOrCreate()
+  lazy val spark: SparkSession = Session.local(4)
   lazy val sf: String = "/root/testdata/sf0.001"
 }

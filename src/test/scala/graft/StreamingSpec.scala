@@ -284,47 +284,6 @@ class StreamingSpec extends SparkSpec {
     conn.close()
   }
 
-  test("streaming funnel emits stage advances with strictly-after semantics") {
-    import graft.streaming.FunnelStream
-    import graft.streaming.FunnelStream.FunnelEvent
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    def ts(s: String): Timestamp = Timestamp.valueOf(s"2024-01-01 $s")
-    val mem = MemoryStream[FunnelEvent]
-    val out = FunnelStream.stageAdvances(mem.toDS(),
-      Seq("view", "click", "purchase"), "10 minutes", ttlMs = 3600000L)
-    val q = out.writeStream.outputMode("append").format("memory")
-      .queryName("funnel_out").start()
-    mem.addData(
-      FunnelEvent(1L, "view", ts("10:00:00")),
-      FunnelEvent(1L, "click", ts("10:01:00")))
-    q.processAllAvailable()
-    mem.addData(
-      FunnelEvent(1L, "purchase", ts("10:02:00")), // completes the funnel
-      FunnelEvent(2L, "click", ts("10:00:00")),    // click BEFORE first view
-      FunnelEvent(2L, "view", ts("10:03:00")),     // → stage 1 only
-      FunnelEvent(3L, "view", ts("10:05:00")),     // same-batch disorder:
-      FunnelEvent(3L, "click", ts("10:04:00")))    // click is pre-view → no stage 2
-    q.processAllAvailable()
-    val got = spark.table("funnel_out")
-      .select("user", "stage", "step").as[(Long, Int, String)].collect().toSet
-    q.stop()
-    assert(got === Set(
-      (1L, 1, "view"), (1L, 2, "click"), (1L, 3, "purchase"),
-      (2L, 1, "view"), (3L, 1, "view")))
-    // batch parity: the same events through Relational.funnel
-    val batch = graft.operators.Relational.funnel(
-      Seq((1L, "view", 36000L), (1L, "click", 36060L), (1L, "purchase", 36120L),
-        (2L, "click", 36000L), (2L, "view", 36180L),
-        (3L, "view", 36300L), (3L, "click", 36240L))
-        .toDF("user_id", "event_type", "ts_sec"),
-      Seq("view", "click", "purchase"))
-      .select("stage", "n_users").as[(Long, Long)].collect().toMap
-    val streamed = got.groupBy(_._2).view.mapValues(_.size.toLong).toMap
-    assert(batch === Map(1L -> 3L, 2L -> 1L, 3L -> 1L))
-    assert(streamed.map { case (k, v) => k.toLong -> v } ===
-      Map(1L -> 3L, 2L -> 1L, 3L -> 1L))
-  }
-
   test("Trigger.AvailableNow drains a file backfill and terminates by itself") {
     // the batch-shaped run of a streaming pipeline: process everything
     // present, commit the checkpoint, exit — how a nightly backfill

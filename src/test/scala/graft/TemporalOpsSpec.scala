@@ -231,124 +231,6 @@ class TemporalOpsSpec extends SparkSpec {
     assert(Cdc.changelogFrom(old, old, Seq("k")).isEmpty)
   }
 
-  test("stored upsert table: bucket-pruned apply ≡ mergeInto, replay idempotent, " +
-    "untouched buckets' files never rewritten") {
-    import graft.operators.Cdc
-    val dir = java.nio.file.Files.createTempDirectory("upsert_table").toString + "/t"
-    val nb = 8
-    val target = (1L to 200L).map(k => (k, s"s${k % 7}", k * 10)).toDF("k", "s", "v")
-    Cdc.initUpsertTable(target, dir, Seq("k"), numBuckets = nb)
-    val ups = Seq((5L, "X", 555L, "U", 1), (201L, "n", 2010L, "I", 1))
-      .toDF("k", "s", "v", "op", "seq")
-    val delta = ups.unionByName(Seq((6L, "D", 1)).toDF("k", "op", "seq")
-      .withColumn("s", lit(null).cast("string"))
-      .withColumn("v", lit(null).cast("long"))
-      .select("k", "s", "v", "op", "seq"))
-    def files(): Map[String, Set[String]] = {
-      val root = new java.io.File(dir)
-      root.listFiles().filter(f => f.isDirectory && f.getName.startsWith("bucket="))
-        .map(d => d.getName -> d.listFiles().map(_.getName).toSet).toMap
-    }
-    val before = files()
-    assert(before.size === nb, "every bucket should be populated at this row count")
-    Cdc.applyDeltaStored(spark, dir, delta, Seq("k"), nb)
-    def snap(): Set[(Long, String, Long)] = Cdc.readUpsertTable(spark, dir)
-      .as[(Long, String, Long)].collect().toSet
-    val expected = Cdc.mergeInto(target, delta, Seq("k"))
-      .as[(Long, String, Long)].collect().toSet
-    assert(snap() === expected, "stored apply must equal the batch mergeInto")
-    // partition discipline: buckets no delta key hashes into keep their
-    // exact files (dynamic overwrite only replaces touched partitions)
-    val touched = delta
-      .withColumn("bucket", pmod(xxhash64(col("k")), lit(nb.toLong)).cast("int"))
-      .select("bucket").distinct().collect().map(r => s"bucket=${r.getInt(0)}").toSet
-    assert(touched.size < nb, "fixture must leave some buckets untouched")
-    val after = files()
-    (before.keySet -- touched).foreach { b =>
-      assert(after(b) === before(b), s"untouched $b was rewritten")
-    }
-    touched.foreach { b =>
-      assert(after(b) !== before(b), s"touched $b was not rewritten")
-    }
-    // at-least-once redelivery: re-applying the SAME delta re-converges
-    Cdc.applyDeltaStored(spark, dir, delta, Seq("k"), nb)
-    assert(snap() === expected, "replayed delta must be a no-op")
-  }
-
-  test("stored upsert table: deleting a bucket's EVERY key clears its partition") {
-    import graft.operators.Cdc
-    val dir = java.nio.file.Files.createTempDirectory("upsert_empty").toString + "/t"
-    val nb = 4
-    val target = (1L to 40L).map(k => (k, k * 10)).toDF("k", "v")
-    Cdc.initUpsertTable(target, dir, Seq("k"), numBuckets = nb)
-    // delete every key that hashes into bucket 0 (plus nothing else):
-    // dynamic overwrite writes no rows for that bucket — the stale
-    // files must be cleared explicitly, or the deletes resurrect
-    val bucketOf = target
-      .withColumn("bucket", pmod(xxhash64(col("k")), lit(nb.toLong)).cast("int"))
-      .select("k", "bucket").as[(Long, Int)].collect().toMap
-    val doomed = bucketOf.collect { case (k, b) if b == 0 => k }.toSeq
-    assert(doomed.nonEmpty, "fixture must populate bucket 0")
-    val delta = doomed.map(k => (k, -1L, "D", 1)).toDF("k", "v", "op", "seq")
-    Cdc.applyDeltaStored(spark, dir, delta, Seq("k"), nb)
-    val left = Cdc.readUpsertTable(spark, dir).as[(Long, Long)].collect().toMap
-    doomed.foreach(k => assert(!left.contains(k), s"deleted key $k resurrected"))
-    assert(left.size === 40 - doomed.size)
-    assert(!new java.io.File(dir, "bucket=0").exists(),
-      "emptied bucket partition must be cleared from disk")
-  }
-
-  test("stored upsert table: bucket clear goes through the Hadoop FileSystem " +
-    "(scheme-qualified store URI)") {
-    import graft.operators.Cdc
-    // the store dir carries an explicit file: scheme, as hdfs://s3a://
-    // would — the clear must resolve the Path's OWN FileSystem, never
-    // java.io.File (which silently no-ops on remote schemes and lets
-    // deleted keys resurrect on the next read)
-    val local = java.nio.file.Files.createTempDirectory("upsert_uri").toString + "/t"
-    val dir = "file:" + local
-    val nb = 4
-    val target = (1L to 40L).map(k => (k, k * 10)).toDF("k", "v")
-    Cdc.initUpsertTable(target, dir, Seq("k"), numBuckets = nb)
-    val bucketOf = target
-      .withColumn("bucket", pmod(xxhash64(col("k")), lit(nb.toLong)).cast("int"))
-      .select("k", "bucket").as[(Long, Int)].collect().toMap
-    val doomed = bucketOf.collect { case (k, b) if b == 0 => k }.toSeq
-    assert(doomed.nonEmpty, "fixture must populate bucket 0")
-    val delta = doomed.map(k => (k, -1L, "D", 1)).toDF("k", "v", "op", "seq")
-    Cdc.applyDeltaStored(spark, dir, delta, Seq("k"), nb)
-    val left = Cdc.readUpsertTable(spark, dir).as[(Long, Long)].collect().toMap
-    doomed.foreach(k => assert(!left.contains(k), s"deleted key $k resurrected"))
-    assert(!new java.io.File(local, "bucket=0").exists(),
-      "emptied bucket partition must be cleared through the scheme-qualified path")
-  }
-
-  test("UpsertStream: streamed changelog apply ≡ sequential batch merges") {
-    import graft.operators.Cdc
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    val base = java.nio.file.Files.createTempDirectory("upsert_stream").toString
-    val dir = s"$base/t"
-    val target = (1L to 100L).map(k => (k, s"s${k % 5}", k)).toDF("k", "s", "v")
-    Cdc.initUpsertTable(target, dir, Seq("k"), numBuckets = 4)
-    // D-row payload values are ignored by mergeInto, so plain Longs do
-    val d1 = Seq((1L, "a1", 11L, "U", 1), (101L, "new", 1010L, "I", 1))
-    val d2 = Seq((1L, "a2", 12L, "U", 1), (2L, "x", -1L, "D", 1))
-    val mem = MemoryStream[(Long, String, Long, String, Int)]
-    val q = graft.streaming.UpsertStream.start(
-      mem.toDF().toDF("k", "s", "v", "op", "seq"),
-      dir, s"$base/ckpt", Seq("k"), numBuckets = 4)
-    try {
-      mem.addData(d1: _*); q.processAllAvailable()
-      mem.addData(d2: _*); q.processAllAvailable()
-    } finally q.stop()
-    val expected = Cdc.mergeInto(
-        Cdc.mergeInto(target, d1.toDF("k", "s", "v", "op", "seq"), Seq("k")),
-        d2.toDF("k", "s", "v", "op", "seq"), Seq("k"))
-      .as[(Long, String, Long)].collect().toSet
-    assert(Cdc.readUpsertTable(spark, dir)
-      .as[(Long, String, Long)].collect().toSet === expected)
-  }
-
   test("saltedJoin returns exactly the plain join's result") {
     val orders = graft.sources.Tables.orders(spark, sf)
     val customer = graft.sources.Tables.customer(spark, sf)
@@ -470,5 +352,4 @@ class TemporalOpsSpec extends SparkSpec {
     assert(got === Set(("p1", "v1")))
     q.stop()
   }
-
 }
