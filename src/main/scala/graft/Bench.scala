@@ -60,19 +60,11 @@ object Bench {
       gcBeans.forEach(b => s += math.max(b.getCollectionTime, 0L))
       s
     }
-    // Prior-round steady reference: flat {"query": seconds} committed
-    // alongside BASELINE.md, only honored when it was taken at THIS sf
-    // (a cross-sf comparison would flag everything or nothing).
+    // Prior-round steady reference, committed alongside BASELINE.md.
     val refPath = sys.env.getOrElse("SPARK_GRAFT_BENCH_REF", "tools/bench_steady_ref.json")
-    val ref: Map[String, Double] = try {
-      val txt = {
-        val src = scala.io.Source.fromFile(refPath)
-        try src.mkString finally src.close()
-      }
-      if (!txt.contains("\"sf\":\"" + sfDir + "\"")) Map.empty
-      else """"([A-Za-z0-9_]+)"\s*:\s*([0-9][0-9.eE+-]*)""".r.findAllMatchIn(txt)
-        .map(m => m.group(1) -> m.group(2).toDouble).toMap
-    } catch { case _: Throwable => Map.empty }
+    val ref = BenchPolicy.steadyRef(
+      scala.util.Try(java.nio.file.Files.readString(java.nio.file.Paths.get(refPath))).getOrElse(""),
+      sfDir)
     // Min of two runs per query (the first pays codegen compile), plus
     // an adaptive third run when the two disagree by >30% — a burst
     // during either run would otherwise be reported as plan cost.

@@ -1,5 +1,10 @@
 package graft
 
+import scala.jdk.CollectionConverters._
+import scala.util.Try
+
+import com.fasterxml.jackson.databind.ObjectMapper
+
 /** The bench's measurement policy as a PURE function of scripted run
   * results — extracted from [[Bench]] so the self-defense logic (the
   * part that exists because a past round recorded 135 s for a 2.7 s
@@ -56,6 +61,18 @@ object BenchPolicy {
     * human adjudication and don't count toward [[degradedHost]]'s
     * flagged-query tally. */
   val AutoAdjudicated: Set[String] = Set("steady_jitter_auto", HostScaledFlag)
+
+  /** The committed prior-round steady map (`tools/bench_steady_ref.json`:
+    * `{"sf": dir, query: seconds, ...}`), honored only when it was
+    * taken at `sfDir` (a cross-sf comparison would flag everything or
+    * nothing). Empty when `text` is not a JSON object of that sf. */
+  def steadyRef(text: String, sfDir: String): Map[String, Double] =
+    Try(new ObjectMapper().readTree(text)).toOption
+      .filter(n => n.isObject && n.path("sf").asText() == sfDir)
+      .map(_.properties.asScala.collect {
+        case e if e.getValue.isNumber => e.getKey -> e.getValue.asDouble
+      }.toMap)
+      .getOrElse(Map.empty)
 
   /** Session-median steady-vs-prior ratio over the ref-covered
     * queries, clamped to [1, [[MaxSessionScale]]]: the run-wide host

@@ -21,6 +21,9 @@ import graft.sources.Tables
   *     sides (Spark reads micros, DuckDB nanos);
   *   - every query ends in a total ORDER BY over a unique key set, and
   *     output columns are identically aliased on both sides.
+  *
+  * Adding a query is one `Q` entry in `suite`: its name, its Spark
+  * builder and its DuckDB oracle side by side.
   */
 object SparkEntry {
   private val D = DecimalType(18, 2)
@@ -66,60 +69,109 @@ object SparkEntry {
         col("nation"), col("region"))
   }
 
-  def queries: Map[String, (SparkSession, String) => DataFrame] = ListMap(
+  /** One suite query: the Spark builder `(session, sfDir) => DataFrame`
+    * and the DuckDB SQL that must hash-equal its result, or `None` for
+    * a rows-only query (the reason is written at the entry). */
+  final case class Q(name: String, build: (SparkSession, String) => DataFrame,
+                     oracle: Option[String])
+
+  lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
+    ListMap(suite.map(q => q.name -> q.build): _*)
+
+  lazy val oracleSql: Map[String, String] =
+    ListMap(suite.flatMap(q => q.oracle.map(q.name -> _)): _*)
+
+  // lazy: the oracles read private helpers defined further down
+  lazy val suite: Seq[Q] = Seq(
 
     // ───────────────────────── CDC / ETL (reference surface) ─────────────────────────
 
-    "cdc_filter" -> ((s, d) => {
+    Q("cdc_filter", ((s, d) => {
       Cdc.filterOps(Tables.events(s, d), Seq("signup", "purchase"))
         .select(col("event_id"), col("user_id"), col("event_type"), col("ts"))
         .orderBy(col("event_id"))
-    }),
+    }), Some(
+      """SELECT event_id, user_id, event_type, date_trunc('second', ts) AS ts
+        |FROM events WHERE event_type IN ('signup','purchase')
+        |ORDER BY event_id""".stripMargin)),
 
-    "cdc_parse" -> ((s, d) => {
+    Q("cdc_parse", ((s, d) => {
       Cdc.parseProps(Tables.events(s, d))
         .select(col("event_id"), col("k"), col("event_type"))
         .orderBy(col("event_id"))
-    }),
+    }), Some(
+      """SELECT event_id, CAST(regexp_extract(props, '[0-9]+', 0) AS INTEGER) AS k, event_type
+        |FROM events ORDER BY event_id""".stripMargin)),
 
-    "cdc_project" -> ((s, d) => {
+    Q("cdc_project", ((s, d) => {
       Tables.events(s, d)
         .select(col("event_id"), col("user_id"),
           round(col("value"), 2).as("value"),
           upper(col("event_type")).as("etype"),
           col("ts"))
         .orderBy(col("event_id"))
-    }),
+    }), Some(
+      """SELECT event_id, user_id, round(value, 2) AS value,
+        |       upper(event_type) AS etype, date_trunc('second', ts) AS ts
+        |FROM events ORDER BY event_id""".stripMargin)),
 
-    "cdc_enrich" -> ((s, d) => {
+    Q("cdc_enrich", ((s, d) => {
       Cdc.enrich(Tables.events(s, d), Cdc.dimension(s, d))
         .select(col("event_id"), col("user_id"), col("event_type"),
           col("c_name"), col("nation"), col("region"))
         .orderBy(col("event_id"))
-    }),
+    }), Some(
+      """SELECT event_id, user_id, event_type, c_name, nation, region
+        |FROM events LEFT JOIN (
+        |  SELECT c_custkey, c_name, n_name AS nation, r_name AS region
+        |  FROM customer
+        |  LEFT JOIN nation ON c_nationkey = n_nationkey
+        |  LEFT JOIN region ON n_regionkey = r_regionkey) dim
+        |ON user_id = c_custkey
+        |ORDER BY event_id""".stripMargin)),
 
-    "cdc_active_at" -> ((s, d) => {
+    Q("cdc_active_at", ((s, d) => {
       Cdc.activeAt(Tables.events(s, d), "2024-01-03 12:00:00")
         .groupBy(col("event_type")).agg(count(lit(1)).as("n_active"))
         .orderBy(col("event_type"))
-    }),
+    }), Some(
+      """SELECT event_type, count(*) AS n_active
+        |FROM events
+        |WHERE date_trunc('second', ts) <= TIMESTAMP '2024-01-03 12:00:00'
+        |  AND TIMESTAMP '2024-01-03 12:00:00'
+        |      < date_trunc('second', ts) + CAST(round(value) AS INTEGER) * INTERVAL '1 minute'
+        |GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
-    "cdc_occupancy_rate" -> ((s, d) => {
+    Q("cdc_occupancy_rate", ((s, d) => {
       Cdc.occupancyRate(Tables.orders(s, d), Tables.customer(s, d))
         .select(col("c_nationkey"), col("n_open"), col("n_orders"), col("open_rate"))
         .orderBy(col("c_nationkey"))
-    }),
+    }), Some(
+      """SELECT c_nationkey,
+        |       CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_open,
+        |       count(*) AS n_orders,
+        |       round(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) * 1.0 / count(*), 4) AS open_rate
+        |FROM orders JOIN customer ON o_custkey = c_custkey
+        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin)),
 
-    "cdc_latest_by_key" -> ((s, d) => {
+    Q("cdc_latest_by_key", ((s, d) => {
       Relational.latestByKey(Tables.events(s, d),
           keys = Seq(col("user_id")),
           versionOrder = Seq(col("ts_sec"), col("event_id")))
         .select(col("user_id"), col("event_id"), col("event_type"),
           round(col("value"), 2).as("value"), col("ts"))
         .orderBy(col("user_id"))
-    }),
+    }), Some(
+      """SELECT user_id, event_id, event_type, round(value, 2) AS value,
+        |       date_trunc('second', ts) AS ts
+        |FROM (
+        |  SELECT *, row_number() OVER (
+        |    PARTITION BY user_id
+        |    ORDER BY date_trunc('second', ts) DESC, event_id DESC) AS rn
+        |  FROM events) t
+        |WHERE rn = 1 ORDER BY user_id""".stripMargin)),
 
-    "cdc_asof_join" -> ((s, d) => {
+    Q("cdc_asof_join", ((s, d) => {
       val e = Tables.events(s, d)
       val probe = e.filter(col("event_type") === "purchase")
         .select(col("event_id"), col("user_id"), col("ts_sec"))
@@ -130,16 +182,34 @@ object SparkEntry {
         .select(col("event_id"), col("user_id"), col("ts_sec"),
           col("asof_event_id").as("view_id"))
         .orderBy(col("event_id"))
-    }),
+    }), Some(
+      """WITH e AS (SELECT event_id, user_id,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec, event_type
+        |           FROM events)
+        |SELECT p.event_id, p.user_id, p.ts_sec,
+        |       (SELECT arg_max(v.event_id, v.ts_sec * 10000000 + v.event_id)
+        |        FROM e v
+        |        WHERE v.event_type = 'view' AND v.user_id = p.user_id
+        |          AND v.ts_sec <= p.ts_sec) AS view_id
+        |FROM e p WHERE p.event_type = 'purchase'
+        |ORDER BY p.event_id""".stripMargin)),
 
-    "cdc_scd2" -> ((s, d) => {
+    Q("cdc_scd2", ((s, d) => {
       Relational.scd2(
           Tables.events(s, d).select(col("user_id"), col("event_id"), col("ts_sec")),
           key = "user_id", tsCol = "ts_sec", tieCol = "event_id")
         .select(col("user_id"), col("event_id"), col("valid_from"),
           col("valid_to"), col("is_current"))
         .orderBy(col("user_id"), col("valid_from"), col("event_id"))
-    }),
+    }), Some(
+      """WITH e AS (SELECT user_id, event_id,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec
+        |           FROM events)
+        |SELECT user_id, event_id, ts_sec AS valid_from,
+        |       lead(ts_sec) OVER w AS valid_to,
+        |       lead(ts_sec) OVER w IS NULL AS is_current
+        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id)
+        |ORDER BY user_id, valid_from, event_id""".stripMargin)),
 
     // MERGE INTO: apply a keyed I/U/D changelog to the orders snapshot
     // in one batch op — deletes (key%10=0), updates (+1¢, %10=1),
@@ -148,11 +218,49 @@ object SparkEntry {
     // %10=4: delete then update → survives updated). The oracle
     // replays the same window + full-outer CASE — the generic form of
     // the reference's whole REPLACE-INTO egress.
-    "cdc_merge_upsert" -> ((s, d) => {
+    Q("cdc_merge_upsert", ((s, d) => {
       val t = ordersCentsSnapshot(s, d)
       Cdc.mergeInto(t, mergeFixtureDelta(t), keys = Seq("o_orderkey"))
         .orderBy(col("o_orderkey"))
-    }),
+    }), Some(
+      // MERGE replay: same delta arithmetic, last-writer window, full
+      // outer join + CASE — op D drops, any other delta op takes the
+      // delta's values, untouched keys pass through.
+      """WITH t AS (SELECT o_orderkey, o_orderstatus,
+        |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents
+        |           FROM orders),
+        |d AS (
+        |  SELECT o_orderkey, CAST(NULL AS VARCHAR) AS o_orderstatus,
+        |         CAST(NULL AS BIGINT) AS total_cents, 'D' AS op, 1 AS seq
+        |  FROM t WHERE o_orderkey % 10 = 0
+        |  UNION ALL SELECT o_orderkey, o_orderstatus, total_cents + 1, 'U', 1
+        |  FROM t WHERE o_orderkey % 10 = 1
+        |  UNION ALL SELECT o_orderkey + 1000000000, o_orderstatus, total_cents, 'I', 1
+        |  FROM t WHERE o_orderkey % 10 = 2
+        |  UNION ALL SELECT o_orderkey, o_orderstatus, total_cents + 7, 'U', 1
+        |  FROM t WHERE o_orderkey % 10 = 3
+        |  UNION ALL SELECT o_orderkey, CAST(NULL AS VARCHAR),
+        |         CAST(NULL AS BIGINT), 'D', 2
+        |  FROM t WHERE o_orderkey % 10 = 3
+        |  UNION ALL SELECT o_orderkey, CAST(NULL AS VARCHAR),
+        |         CAST(NULL AS BIGINT), 'D', 1
+        |  FROM t WHERE o_orderkey % 10 = 4
+        |  UNION ALL SELECT o_orderkey, o_orderstatus, total_cents + 9, 'U', 2
+        |  FROM t WHERE o_orderkey % 10 = 4),
+        |latest AS (SELECT * FROM (
+        |    SELECT *, row_number() OVER (PARTITION BY o_orderkey
+        |                                 ORDER BY seq DESC) AS rn FROM d)
+        |  WHERE rn = 1),
+        |m AS (SELECT coalesce(t.o_orderkey, l.o_orderkey) AS o_orderkey,
+        |        CASE WHEN l.op IS NOT NULL THEN l.o_orderstatus
+        |             ELSE t.o_orderstatus END AS o_orderstatus,
+        |        CASE WHEN l.op IS NOT NULL THEN l.total_cents
+        |             ELSE t.total_cents END AS total_cents,
+        |        l.op AS op
+        |      FROM t FULL OUTER JOIN latest l ON t.o_orderkey = l.o_orderkey)
+        |SELECT o_orderkey, o_orderstatus, total_cents
+        |FROM m WHERE op IS NULL OR op <> 'D'
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // Change-data-feed GENERATION (mergeInto's inverse): diff the
     // orders snapshot against its merged successor back into the NET
@@ -161,18 +269,37 @@ object SparkEntry {
     // for the inserted +1e9 clones. The oracle derives the same net
     // ops from orders directly; the round-trip law apply(diff(old,
     // new)) ≡ new is spec-proven in TemporalOpsSpec.
-    "cdc_changelog" -> ((s, d) => {
+    Q("cdc_changelog", ((s, d) => {
       val t = ordersCentsSnapshot(s, d)
       val merged = Cdc.mergeInto(t, mergeFixtureDelta(t), keys = Seq("o_orderkey"))
       Cdc.changelogFrom(t, merged, keys = Seq("o_orderkey"))
         .select(col("o_orderkey"), col("op"), col("o_orderstatus"),
           col("total_cents"))
         .orderBy(col("o_orderkey"))
-    }),
+    }), Some(
+      // CDF replay: the NET op per key derived from orders directly —
+      // %10∈{0,3} → D (two different delta paths, same net), %10=1 →
+      // U +1¢, %10=4 → U +9¢ (delete-then-update), %10=2 → I clone.
+      """WITH t AS (SELECT o_orderkey, o_orderstatus,
+        |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents
+        |           FROM orders)
+        |SELECT o_orderkey, 'D' AS op, CAST(NULL AS VARCHAR) AS o_orderstatus,
+        |       CAST(NULL AS BIGINT) AS total_cents
+        |FROM t WHERE o_orderkey % 10 IN (0, 3)
+        |UNION ALL
+        |SELECT o_orderkey, 'U', o_orderstatus, total_cents + 1
+        |FROM t WHERE o_orderkey % 10 = 1
+        |UNION ALL
+        |SELECT o_orderkey + 1000000000, 'I', o_orderstatus, total_cents
+        |FROM t WHERE o_orderkey % 10 = 2
+        |UNION ALL
+        |SELECT o_orderkey, 'U', o_orderstatus, total_cents + 9
+        |FROM t WHERE o_orderkey % 10 = 4
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // ───────────────────────── Relational core ─────────────────────────
 
-    "rel_pricing_summary" -> ((s, d) => {
+    Q("rel_pricing_summary", ((s, d) => {
       Tables.lineitem(s, d)
         .filter(col("l_shipdate") <= lit("1998-09-01").cast("timestamp_ntz"))
         .groupBy(col("l_returnflag"), col("l_linestatus"))
@@ -183,9 +310,18 @@ object SparkEntry {
           round(avg(col("l_quantity")), 2).as("avg_qty"),
           count(lit(1)).as("count_order"))
         .orderBy(col("l_returnflag"), col("l_linestatus"))
-    }),
+    }), Some(
+      """SELECT l_returnflag, l_linestatus,
+        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
+        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
+        |       (CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0) AS sum_disc_price,
+        |       round(avg(l_quantity), 2) AS avg_qty,
+        |       count(*) AS count_order
+        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
+        |GROUP BY l_returnflag, l_linestatus
+        |ORDER BY l_returnflag, l_linestatus""".stripMargin)),
 
-    "rel_filter_project" -> ((s, d) => {
+    Q("rel_filter_project", ((s, d) => {
       Tables.lineitem(s, d)
         .filter(col("l_shipdate") >= lit("1995-01-01").cast("timestamp_ntz")
           && col("l_shipdate") < lit("1997-01-01").cast("timestamp_ntz")
@@ -194,9 +330,14 @@ object SparkEntry {
         .select(col("l_orderkey"), col("l_linenumber"), col("l_quantity"),
           col("l_extendedprice"), col("l_shipdate"))
         .orderBy(col("l_orderkey"), col("l_linenumber"))
-    }),
+    }), Some(
+      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_shipdate
+        |FROM lineitem
+        |WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
+        |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
+        |ORDER BY l_orderkey, l_linenumber""".stripMargin)),
 
-    "rel_join_agg" -> ((s, d) => {
+    Q("rel_join_agg", ((s, d) => {
       // Pre-aggregate lineitem to order grain: shrinks the join input
       // 4x and turns countDistinct(o_orderkey) into a plain count(*)
       // (no Expand in the plan). Same result as the naive 3-table
@@ -213,24 +354,40 @@ object SparkEntry {
           count(lit(1)).as("n_orders"),
           (sum(col("rev_e4")) / 10000.0).as("revenue"))
         .orderBy(col("c_mktsegment"))
-    }),
+    }), Some(
+      """SELECT c_mktsegment,
+        |       count(DISTINCT o_orderkey) AS n_orders,
+        |       (CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0) AS revenue
+        |FROM customer
+        |JOIN orders ON c_custkey = o_custkey
+        |JOIN lineitem ON o_orderkey = l_orderkey
+        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin)),
 
-    "rel_semi_join" -> ((s, d) => {
+    Q("rel_semi_join", ((s, d) => {
       val o = Tables.orders(s, d)
       val big = Tables.lineitem(s, d).filter(col("l_quantity") > 45)
       o.join(big, o("o_orderkey") === big("l_orderkey"), "left_semi")
         .select(col("o_orderkey"), col("o_totalprice"), col("o_orderstatus"))
         .orderBy(col("o_orderkey"))
-    }),
+    }), Some(
+      """SELECT o_orderkey, o_totalprice, o_orderstatus
+        |FROM orders
+        |WHERE EXISTS (SELECT 1 FROM lineitem
+        |              WHERE l_orderkey = o_orderkey AND l_quantity > 45)
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "rel_anti_join" -> ((s, d) => {
+    Q("rel_anti_join", ((s, d) => {
       val c = Tables.customer(s, d); val o = Tables.orders(s, d)
       c.join(o, c("c_custkey") === o("o_custkey"), "left_anti")
         .select(col("c_custkey"), col("c_name"), col("c_mktsegment"))
         .orderBy(col("c_custkey"))
-    }),
+    }), Some(
+      """SELECT c_custkey, c_name, c_mktsegment
+        |FROM customer
+        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
+        |ORDER BY c_custkey""".stripMargin)),
 
-    "rel_window_topn" -> ((s, d) => {
+    Q("rel_window_topn", ((s, d) => {
       val o = Tables.orders(s, d).withColumn("price_d", col("o_totalprice").cast(D))
       Relational.topNPerGroup(
           o.withColumn("run_total",
@@ -243,9 +400,17 @@ object SparkEntry {
           orderCols = Seq(col("o_orderdate"), col("o_orderkey")), n = 3)
         .select(col("o_custkey"), col("o_orderkey"), col("rn").cast("long").as("rn"), col("run_total").cast("double").as("run_total"))
         .orderBy(col("o_custkey"), col("rn"))
-    }),
+    }), Some(
+      """SELECT o_custkey, o_orderkey, rn, run_total FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |         row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn,
+        |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
+        |           PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
+        |           ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS run_total
+        |  FROM orders) t
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin)),
 
-    "rel_topn_agg" -> ((s, d) => {
+    Q("rel_topn_agg", ((s, d) => {
       // Bounded top-k per group via the custom TypedImperativeAggregate:
       // map-side partials keep only k rows per group per partition, so
       // the shuffle moves k x groups rows instead of every row (the
@@ -259,31 +424,54 @@ object SparkEntry {
         .select(col("o_custkey"), (col("pos") + 1).cast("long").as("rn"),
           col("col.o_orderkey").as("o_orderkey"))
         .orderBy(col("o_custkey"), col("rn"))
-    }),
+    }), Some(
+      """SELECT o_custkey, rn, o_orderkey FROM (
+        |  SELECT o_custkey, o_orderkey,
+        |         row_number() OVER (PARTITION BY o_custkey
+        |                            ORDER BY o_orderdate, o_orderkey) AS rn
+        |  FROM orders) t
+        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin)),
 
-    "rel_topk" -> ((s, d) => {
+    Q("rel_topk", ((s, d) => {
       Relational.topK(Tables.orders(s, d),
           Seq(col("o_totalprice").desc, col("o_orderkey")), 100)
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
-    }),
+    }), Some(
+      """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin)),
 
-    "rel_setops" -> ((s, d) => {
+    Q("rel_setops", ((s, d) => {
       Relational.setCompare(
           Tables.customer(s, d).select(col("c_nationkey").as("nationkey")),
           Tables.supplier(s, d).select(col("s_nationkey").as("nationkey")),
           "nationkey", "customer_only", "supplier_only")
         .orderBy(col("tag"), col("nationkey"))
-    }),
+    }), Some(
+      """SELECT 'both' AS tag, nationkey FROM (
+        |  SELECT c_nationkey AS nationkey FROM customer
+        |  INTERSECT SELECT s_nationkey FROM supplier) a
+        |UNION ALL
+        |SELECT 'customer_only' AS tag, nationkey FROM (
+        |  SELECT c_nationkey AS nationkey FROM customer
+        |  EXCEPT SELECT s_nationkey FROM supplier) b
+        |UNION ALL
+        |SELECT 'supplier_only' AS tag, nationkey FROM (
+        |  SELECT s_nationkey AS nationkey FROM supplier
+        |  EXCEPT SELECT c_nationkey FROM customer) c
+        |ORDER BY tag, nationkey""".stripMargin)),
 
-    "rel_distinct_agg" -> ((s, d) => {
+    Q("rel_distinct_agg", ((s, d) => {
       Tables.customer(s, d)
         .groupBy(col("c_nationkey"))
         .agg(countDistinct(col("c_mktsegment")).as("n_segments"),
           count(lit(1)).as("n_customers"))
         .orderBy(col("c_nationkey"))
-    }),
+    }), Some(
+      """SELECT c_nationkey, count(DISTINCT c_mktsegment) AS n_segments,
+        |       count(*) AS n_customers
+        |FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin)),
 
-    "rel_scalar_funcs" -> ((s, d) => {
+    Q("rel_scalar_funcs", ((s, d) => {
       Tables.part(s, d).select(
           col("p_partkey"),
           upper(col("p_brand")).as("brand_u"),
@@ -295,29 +483,46 @@ object SparkEntry {
           round(col("p_retailprice"), 1).as("price_r"),
           abs(col("p_size") - 25).as("size_dist"))
         .orderBy(col("p_partkey"))
-    }),
+    }), Some(
+      """SELECT p_partkey,
+        |       upper(p_brand) AS brand_u,
+        |       lower(p_type) AS type_l,
+        |       substr(p_name, 1, 8) AS name8,
+        |       concat(p_brand, '#', CAST(p_size AS VARCHAR)) AS brand_size,
+        |       length(p_name) AS name_len,
+        |       CASE WHEN p_size > 25 THEN 'L' WHEN p_size > 10 THEN 'M' ELSE 'S' END AS size_class,
+        |       round(p_retailprice, 1) AS price_r,
+        |       abs(p_size - 25) AS size_dist
+        |FROM part ORDER BY p_partkey""".stripMargin)),
 
-    "rel_rollup" -> ((s, d) => {
+    Q("rel_rollup", ((s, d) => {
       Tables.customer(s, d)
         .rollup(col("c_nationkey"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"))
         .orderBy(asc_nulls_first("c_nationkey"), asc_nulls_first("c_mktsegment"))
-    }),
+    }), Some(
+      """SELECT c_nationkey, c_mktsegment, count(*) AS n
+        |FROM customer GROUP BY ROLLUP (c_nationkey, c_mktsegment)
+        |ORDER BY c_nationkey ASC NULLS FIRST, c_mktsegment ASC NULLS FIRST""".stripMargin)),
 
     // CUBE = all grouping sets; grouping() distinguishes real NULLs
     // from subtotal rows.
-    "rel_cube" -> ((s, d) => {
+    Q("rel_cube", ((s, d) => {
       Tables.customer(s, d)
         .cube(col("c_nationkey"), col("c_mktsegment"))
         .agg(count(lit(1)).as("n"),
           (grouping(col("c_nationkey")) * 2 + grouping(col("c_mktsegment")))
             .cast("long").as("gid"))
         .orderBy(asc_nulls_first("c_nationkey"), asc_nulls_first("c_mktsegment"), col("gid"))
-    }),
+    }), Some(
+      """SELECT c_nationkey, c_mktsegment, count(*) AS n,
+        |       CAST(grouping(c_nationkey) * 2 + grouping(c_mktsegment) AS BIGINT) AS gid
+        |FROM customer GROUP BY CUBE (c_nationkey, c_mktsegment)
+        |ORDER BY c_nationkey ASC NULLS FIRST, c_mktsegment ASC NULLS FIRST, gid""".stripMargin)),
 
     // Explicit GROUPING SETS (beyond rollup/cube's fixed shapes): one
     // Expand + one aggregation pass, not three scans.
-    "rel_grouping_sets" -> ((s, d) => {
+    Q("rel_grouping_sets", ((s, d) => {
       Tables.lineitem(s, d)
         .groupingSets(
           Seq(Seq(col("l_returnflag"), col("l_linestatus")),
@@ -326,13 +531,18 @@ object SparkEntry {
         .agg(count(lit(1)).as("n"),
           sum(round(col("l_quantity") * 100).cast("long")).as("qty_cents"))
         .orderBy(asc_nulls_first("l_returnflag"), asc_nulls_first("l_linestatus"))
-    }),
+    }), Some(
+      """SELECT l_returnflag, l_linestatus, count(*) AS n,
+        |       CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_cents
+        |FROM lineitem
+        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
+        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin)),
 
     // Distribution windows: ntile quartiles + integer permille percent
     // rank (exact long arithmetic — raw percent_rank doubles are not
     // hash-comparable cross-engine). Rank ties broken by the unique
     // order key.
-    "rel_ntile" -> ((s, d) => {
+    Q("rel_ntile", ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("o_orderstatus"))
         .orderBy(col("o_totalprice"), col("o_orderkey"))
@@ -347,23 +557,37 @@ object SparkEntry {
             .otherwise(floor((col("rnk") - 1) * 1000 / (col("__n") - 1)).cast("long")))
         .drop("rnk", "__n")
         .orderBy(col("o_orderkey"))
-    }),
+    }), Some(
+      """WITH r AS (
+        |  SELECT o_orderkey, o_orderstatus,
+        |         ntile(4) OVER w AS quartile,
+        |         rank() OVER w AS rnk,
+        |         count(*) OVER (PARTITION BY o_orderstatus) AS n
+        |  FROM orders
+        |  WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey))
+        |SELECT o_orderkey, o_orderstatus, CAST(quartile AS BIGINT) AS quartile,
+        |       CAST(CASE WHEN n = 1 THEN 0 ELSE (rnk - 1) * 1000 // (n - 1) END AS BIGINT) AS pct_permille
+        |FROM r ORDER BY o_orderkey""".stripMargin)),
 
     // Skew-safe two-stage aggregation: identical result to a direct
     // groupBy (the oracle IS the direct form), but no reducer sees a
     // hot key's full row stream.
-    "rel_salted_agg" -> ((s, d) => {
+    Q("rel_salted_agg", ((s, d) => {
       Relational.saltedAggregate(
         Tables.lineitem(s, d)
           .withColumn("qty_cents", round(col("l_quantity") * 100).cast("long")),
         Seq("l_returnflag"), col("l_orderkey"), col("qty_cents"), saltBuckets = 32)
         .orderBy(col("l_returnflag"))
-    }),
+    }), Some(
+      """SELECT l_returnflag,
+        |       CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_value,
+        |       count(*) AS n
+        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin)),
 
     // Event-time RANGE frame (trailing 5 minutes per user) — value-
     // based frames, distinct from the ROWS frames elsewhere; integer
     // cents keep the running sums hash-comparable.
-    "rel_window_range" -> ((s, d) => {
+    Q("rel_window_range", ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window
         .partitionBy(col("user_id")).orderBy(col("ts_sec"))
         .rangeBetween(-300, org.apache.spark.sql.expressions.Window.currentRow)
@@ -373,11 +597,22 @@ object SparkEntry {
           sum(col("v_cents")).over(w).as("sum_5m_cents"),
           count(lit(1)).over(w).cast("long").as("n_5m"))
         .orderBy(col("event_id"))
-    }),
+    }), Some(
+      """WITH e AS (SELECT event_id, user_id,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec,
+        |             CAST(round(value * 100) AS BIGINT) AS v_cents
+        |           FROM events)
+        |SELECT event_id, user_id, ts_sec,
+        |       CAST(sum(v_cents) OVER w AS BIGINT) AS sum_5m_cents,
+        |       CAST(count(*) OVER w AS BIGINT) AS n_5m
+        |FROM e
+        |WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec
+        |             RANGE BETWEEN 300 PRECEDING AND CURRENT ROW)
+        |ORDER BY event_id""".stripMargin)),
 
     // Window navigation functions: lag/lead + first/last/nth over an
     // explicit unbounded frame, tie-broken total order.
-    "rel_window_nav" -> ((s, d) => {
+    Q("rel_window_nav", ((s, d) => {
       val W = org.apache.spark.sql.expressions.Window
       val w = W.partitionBy(col("o_orderstatus"))
         .orderBy(col("price_cents"), col("o_orderkey"))
@@ -391,17 +626,35 @@ object SparkEntry {
           last(col("o_orderkey")).over(wf).as("dearest_key"),
           nth_value(col("o_orderkey"), 2).over(wf).as("second_key"))
         .orderBy(col("o_orderkey"))
-    }),
+    }), Some(
+      """WITH o AS (SELECT o_orderkey, o_orderstatus,
+        |             CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
+        |           FROM orders)
+        |SELECT o_orderkey, o_orderstatus, price_cents,
+        |       lag(price_cents, 1) OVER w AS prev_cents,
+        |       lead(price_cents, 1) OVER w AS next_cents,
+        |       first_value(o_orderkey) OVER wf AS cheapest_key,
+        |       last_value(o_orderkey) OVER wf AS dearest_key,
+        |       nth_value(o_orderkey, 2) OVER wf AS second_key
+        |FROM o
+        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY price_cents, o_orderkey),
+        |       wf AS (PARTITION BY o_orderstatus ORDER BY price_cents, o_orderkey
+        |              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
+        |ORDER BY o_orderkey""".stripMargin)),
 
-    "rel_broadcast_join" -> ((s, d) => {
+    Q("rel_broadcast_join", ((s, d) => {
       val l = Tables.lineitem(s, d); val p = Tables.part(s, d)
       l.join(broadcast(p), l("l_partkey") === p("p_partkey"))
         .groupBy(col("p_brand"))
         .agg(count(lit(1)).as("n_items"), sum(col("l_quantity").cast(D)).cast("double").as("sum_qty"))
         .orderBy(col("p_brand"))
-    }),
+    }), Some(
+      """SELECT p_brand, count(*) AS n_items,
+        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
+        |FROM lineitem JOIN part ON l_partkey = p_partkey
+        |GROUP BY p_brand ORDER BY p_brand""".stripMargin)),
 
-    "rel_range_join" -> ((s, d) => {
+    Q("rel_range_join", ((s, d) => {
       val e = Tables.events(s, d)
       val a = e.select(col("user_id"), col("ts_sec").as("a_sec"))
       val b = e.select(col("user_id").as("b_user"), col("ts_sec").as("b_sec"))
@@ -409,75 +662,138 @@ object SparkEntry {
           && col("b_sec") > col("a_sec") && col("b_sec") <= col("a_sec") + 300)
         .groupBy(col("user_id")).agg(count(lit(1)).as("n_pairs"))
         .orderBy(col("user_id"))
-    }),
+    }), Some(
+      """SELECT a.user_id AS user_id, count(*) AS n_pairs
+        |FROM (SELECT user_id, epoch(date_trunc('second', ts)) AS a_sec FROM events) a
+        |JOIN (SELECT user_id AS b_user, epoch(date_trunc('second', ts)) AS b_sec FROM events) b
+        |  ON a.user_id = b_user AND b_sec > a_sec AND b_sec <= a_sec + 300
+        |GROUP BY a.user_id ORDER BY user_id""".stripMargin)),
 
-    "rel_sessionize" -> ((s, d) => {
+    Q("rel_sessionize", ((s, d) => {
       Relational.sessionize(Tables.events(s, d),
           col("user_id"), col("ts_sec"), col("event_id"), gapSeconds = 6 * 3600)
         .groupBy(col("user_id"))
         .agg(max(col("session_id")).as("n_sessions"), count(lit(1)).as("n_events"))
         .orderBy(col("user_id"))
-    }),
+    }), Some(
+      """WITH e AS (
+        |  SELECT user_id, event_id, CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
+        |  FROM events),
+        |flags AS (
+        |  SELECT user_id,
+        |         CASE WHEN lag(sec) OVER w IS NULL
+        |              OR sec - lag(sec) OVER w > 21600 THEN 1 ELSE 0 END AS is_new
+        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id))
+        |SELECT user_id, CAST(sum(is_new) AS BIGINT) AS n_sessions, count(*) AS n_events
+        |FROM flags GROUP BY user_id ORDER BY user_id""".stripMargin)),
 
     // The STREAMING session_window operator run in batch mode — the
     // native dynamic-gap session store, one code path both modes,
     // batch side oracle-checked (gaps-and-islands CTE twin). Sessions
     // merge while consecutive events are <= gap apart (touching
     // windows merge); end = last + gap.
-    "rel_window_session" -> ((s, d) => {
+    Q("rel_window_session", ((s, d) => {
       graft.streaming.Windows.sessions(Tables.events(s, d), "ts", "user_id",
         "6 hours", "10 minutes")
         .orderBy(col("user_id"), col("sess_start"))
-    }),
+    }), Some(
+      // session_window twin: a session breaks only when the inter-event
+      // gap EXCEEDS 21600 s — Spark merges touching windows (an event at
+      // exactly prev + gap extends the session; found empirically at
+      // sf0.1, where one event pair sits exactly one gap apart); session
+      // end = last event + gap.
+      """WITH e AS (SELECT user_id, date_trunc('second', ts) AS t,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
+        |           FROM events),
+        |f AS (SELECT user_id, t, sec,
+        |        CASE WHEN lag(sec) OVER w IS NULL
+        |             OR sec - lag(sec) OVER w > 21600 THEN 1 ELSE 0 END AS is_new
+        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec)),
+        |s AS (SELECT user_id, t,
+        |        sum(is_new) OVER (PARTITION BY user_id ORDER BY sec
+        |                          ROWS UNBOUNDED PRECEDING) AS sid
+        |      FROM f)
+        |SELECT user_id, min(t) AS sess_start,
+        |       max(t) + INTERVAL 21600 SECOND AS sess_end,
+        |       count(*) AS n_events
+        |FROM s GROUP BY user_id, sid ORDER BY user_id, sess_start""".stripMargin)),
 
     // The STREAMING sliding-window operator run in batch mode (the
     // watermark is a no-op there) — one code path, both modes, the
     // batch side oracle-checked.
-    "rel_window_sliding" -> ((s, d) => {
+    Q("rel_window_sliding", ((s, d) => {
       graft.streaming.Windows.sliding(Tables.events(s, d), "ts", "event_type",
         "1 hour", "30 minutes", "10 minutes")
         .orderBy(col("win_start"), col("event_type"))
-    }),
+    }), Some(
+      // Each event lands in exactly two 1h/30min sliding windows:
+      // starts floor1800(ts) and floor1800(ts) - 1800 (epoch-aligned,
+      // matching Spark's window() alignment).
+      """WITH e AS (SELECT event_type,
+        |             CAST(floor(epoch(ts) / 1800) * 1800 AS BIGINT) AS f FROM events),
+        |w AS (SELECT event_type, f - k * 1800 AS s
+        |      FROM e, (VALUES (0), (1)) t(k))
+        |SELECT make_timestamp(s * 1000000) AS win_start,
+        |       make_timestamp((s + 3600) * 1000000) AS win_end,
+        |       event_type, count(*) AS n
+        |FROM w GROUP BY s, event_type ORDER BY win_start, event_type""".stripMargin)),
 
-    "rel_window_tumbling" -> ((s, d) => {
+    Q("rel_window_tumbling", ((s, d) => {
       Tables.events(s, d)
         .groupBy(date_trunc("hour", col("ts")).cast("timestamp_ntz").as("hour"), col("event_type"))
         .agg(count(lit(1)).as("n"), sum(col("value").cast(D)).cast("double").as("sum_value"))
         .orderBy(col("hour"), col("event_type"))
-    }),
+    }), Some(
+      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
+        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
+        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin)),
 
     // One-pass ANALYZE-style profiling: per-column rows/nulls/exact
     // distinct/min/max in a single aggregate (Expand per column — the
     // cost of exactness; HLL swap documented in Relational.profile).
-    "rel_profile" -> ((s, d) => {
+    Q("rel_profile", ((s, d) => {
       Relational.profile(
           Tables.events(s, d).select("event_id", "user_id", "event_type", "props"),
           Seq("event_id", "user_id", "event_type", "props"))
         .orderBy(col("column"))
-    }),
+    }), Some(
+      Seq("event_id", "user_id", "event_type", "props")
+        .map(profileColSql).mkString("SELECT * FROM (\n", "\nUNION ALL\n",
+          "\n) ORDER BY \"column\""))),
 
     // Z-order clustering key: morton-interleaved (partkey, suppkey) —
     // the data-skipping layout; files cover rectangles in key space so
     // min/max stats prune on either column.
-    "rel_zorder" -> ((s, d) => {
+    Q("rel_zorder", ((s, d) => {
       graft.operators.Partitioning.zorderBy(
           Tables.lineitem(s, d).select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
           "l_partkey", "l_suppkey", bits = 16)
         .select(col("l_orderkey"), col("l_linenumber"), col("zorder"))
         .orderBy(col("zorder"), col("l_orderkey"), col("l_linenumber"))
-    }),
+    }), Some(
+      s"""SELECT l_orderkey, l_linenumber,
+         |       CAST(${mortonSql("l_partkey", "l_suppkey", 16)} AS BIGINT) AS zorder
+         |FROM lineitem
+         |ORDER BY zorder, l_orderkey, l_linenumber""".stripMargin)),
 
     // Hilbert-curve clustering key: the Z-order successor — same
     // rectangle-covering property for min/max skipping, but no long
     // diagonal jumps, so file bounding boxes are tighter. Native
     // codegen'd bit walk (graft.functions.HilbertIndex).
-    "rel_hilbert" -> ((s, d) => {
+    Q("rel_hilbert", ((s, d) => {
       graft.operators.Partitioning.hilbertBy(
           Tables.lineitem(s, d).select("l_orderkey", "l_linenumber", "l_partkey", "l_suppkey"),
           "l_partkey", "l_suppkey", bits = 16)
         .select(col("l_orderkey"), col("l_linenumber"), col("hilbert"))
         .orderBy(col("hilbert"), col("l_orderkey"), col("l_linenumber"))
-    }),
+    }), Some(
+      // Hilbert xy2d walk as chained CTE steps — one per bit level,
+      // generated; the list_reduce lambda form mis-evaluates on
+      // multi-row data (the documented DuckDB vectorizer bug), so the
+      // fold is FLAT like the wordpiece oracle.
+      s"""WITH ${hilbertCtes("l_partkey", "l_suppkey", 16)}
+         |SELECT l_orderkey, l_linenumber, d AS hilbert
+         |FROM h16 ORDER BY hilbert, l_orderkey, l_linenumber""".stripMargin)),
 
     // LAYOUT SKIP AUDIT — what rel_zorder/rel_hilbert only assert,
     // measured: band lineitem into 64 files under three layouts
@@ -488,7 +804,7 @@ object SparkEntry {
     // rates on BOTH — the number that justifies a 100 TB clustering
     // rewrite before paying for it. Deterministic value banding, so
     // the oracle replays manifest and verdicts exactly.
-    "rel_layout_audit" -> ((s, d) => {
+    Q("rel_layout_audit", ((s, d) => {
       graft.plans.GraftExtensions.register(s)
       import graft.functions.HilbertIndex.hilbert_index
       val li = Tables.lineitem(s, d).select("l_partkey", "l_suppkey")
@@ -511,12 +827,57 @@ object SparkEntry {
           "zorder" -> Partitioning.mortonCode(col("l_partkey"), col("l_suppkey"), 16)),
         Seq("l_partkey", "l_suppkey"), nFiles = 64, probes = probes)
         .orderBy(col("layout"), col("workload"))
-    }),
+    }), Some(
+      // Layout audit replayed end to end: the three layout keys (plain,
+      // morton, hilbert walk), value-banded files, min/max manifest,
+      // probe ranges, and the readPruned skip rule — all integer.
+      s"""WITH ${hilbertCtes("l_partkey", "l_suppkey", 16,
+              carry = Seq("l_partkey", "l_suppkey"))},
+         |hk AS (SELECT l_partkey, l_suppkey, d FROM h16),
+         |lay AS (
+         |  SELECT 'single' AS layout, l_partkey AS pk, l_suppkey AS sp,
+         |         CAST(l_partkey AS BIGINT) AS k FROM lineitem
+         |  UNION ALL
+         |  SELECT 'zorder', l_partkey, l_suppkey,
+         |         CAST(${mortonSql("l_partkey", "l_suppkey", 16)} AS BIGINT)
+         |  FROM lineitem
+         |  UNION ALL
+         |  SELECT 'hilbert', l_partkey, l_suppkey, d FROM hk),
+         |mxk AS (SELECT layout, max(k) AS mxk FROM lay GROUP BY 1),
+         |filed AS (SELECT lay.layout, pk, sp, (k * 64) // (mxk + 1) AS file
+         |          FROM lay JOIN mxk ON lay.layout = mxk.layout),
+         |man AS (SELECT layout, file,
+         |          CAST(min(pk) AS BIGINT) AS mn_pk, CAST(max(pk) AS BIGINT) AS mx_pk,
+         |          CAST(min(sp) AS BIGINT) AS mn_sp, CAST(max(sp) AS BIGINT) AS mx_sp
+         |        FROM filed GROUP BY 1, 2),
+         |lf AS (SELECT layout, file, 'l_partkey' AS on_col, mn_pk AS mn, mx_pk AS mx
+         |       FROM man
+         |       UNION ALL
+         |       SELECT layout, file, 'l_suppkey', mn_sp, mx_sp FROM man),
+         |b AS (SELECT CAST(max(l_partkey) AS BIGINT) AS mp,
+         |        CAST(max(l_suppkey) AS BIGINT) AS ms FROM lineitem),
+         |ii AS (SELECT unnest(range(0, 16)) AS i),
+         |pr AS (SELECT 'by_part' AS workload, 'l_partkey' AS on_col,
+         |         ((mp + 1) * i) // 16 AS lo,
+         |         ((mp + 1) * i) // 16 + (mp + 1) // 256 AS hi
+         |       FROM b CROSS JOIN ii
+         |       UNION ALL
+         |       SELECT 'by_supp', 'l_suppkey',
+         |         ((ms + 1) * i) // 16, ((ms + 1) * i) // 16 + (ms + 1) // 256
+         |       FROM b CROSS JOIN ii)
+         |SELECT layout, workload, CAST(count(DISTINCT file) AS BIGINT) AS n_files,
+         |  count(*) AS file_probe_pairs,
+         |  CAST(sum(CASE WHEN mx < lo OR mn > hi THEN 1 ELSE 0 END) AS BIGINT)
+         |    AS skipped,
+         |  (CAST(sum(CASE WHEN mx < lo OR mn > hi THEN 1 ELSE 0 END) AS BIGINT)
+         |    * 1000) // count(*) AS skip_permille
+         |FROM lf JOIN pr ON lf.on_col = pr.on_col
+         |GROUP BY 1, 2 ORDER BY layout, workload""".stripMargin)),
 
     // Sketch aggregates: HLL++ distinct and t-digest-style quantiles.
-    // No oracleSql on purpose — sketch algorithms differ per engine, so
+    // No oracle on purpose — sketch algorithms differ per engine, so
     // the driver records the weaker rows-only check for this one.
-    "rel_approx_sketches" -> ((s, d) => {
+    Q("rel_approx_sketches", ((s, d) => {
       Tables.lineitem(s, d)
         .groupBy(col("l_returnflag"))
         .agg(
@@ -524,23 +885,30 @@ object SparkEntry {
           percentile_approx(col("l_extendedprice"), lit(0.5), lit(1000)).as("p50_price"),
           percentile_approx(col("l_extendedprice"), lit(0.99), lit(1000)).as("p99_price"))
         .orderBy(col("l_returnflag"))
-    }),
+    }), None),
 
-    "rel_pivot" -> ((s, d) => {
+    Q("rel_pivot", ((s, d) => {
       val types = Seq("click", "error", "purchase", "signup", "view")
       val aggs = types.map(t => count(when(col("event_type") === t, 1)).as(s"n_$t"))
       Tables.events(s, d)
         .groupBy(col("ts").cast("date").as("day"))
         .agg(aggs.head, aggs.tail: _*)
         .orderBy(col("day"))
-    }),
+    }), Some(
+      """SELECT CAST(ts AS DATE) AS day,
+        |       count(*) FILTER (WHERE event_type = 'click') AS n_click,
+        |       count(*) FILTER (WHERE event_type = 'error') AS n_error,
+        |       count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
+        |       count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
+        |       count(*) FILTER (WHERE event_type = 'view') AS n_view
+        |FROM events GROUP BY 1 ORDER BY day""".stripMargin)),
 
     // UNPIVOT (melt) — rel_pivot's inverse verb via Spark's native
     // Dataset.unpivot (plans an Expand, one pass, no join): the wide
     // per-day counts fold back to (day, event_type, n) INCLUDING the
     // zero cells pivot materialized — the oracle rebuilds the full
     // day × type scaffold to match.
-    "rel_unpivot" -> ((s, d) => {
+    Q("rel_unpivot", ((s, d) => {
       val types = Seq("click", "error", "purchase", "signup", "view")
       val aggs = types.map(t => count(when(col("event_type") === t, 1)).as(s"n_$t"))
       val wide = Tables.events(s, d)
@@ -550,28 +918,46 @@ object SparkEntry {
           "etype", "n")
         .select(col("day"), expr("substring(etype, 3)").as("event_type"), col("n"))
         .orderBy(col("day"), col("event_type"))
-    }),
+    }), Some(
+      // pivot's inverse: the long form INCLUDING zero cells, so the
+      // oracle scaffolds day × type and left-joins the counts.
+      """WITH days AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events),
+        |t AS (SELECT unnest(['click','error','purchase','signup','view']) AS event_type),
+        |c AS (SELECT CAST(ts AS DATE) AS day, event_type,
+        |        CAST(count(*) AS BIGINT) AS n
+        |      FROM events GROUP BY 1, 2)
+        |SELECT days.day, t.event_type, CAST(coalesce(c.n, 0) AS BIGINT) AS n
+        |FROM days CROSS JOIN t
+        |LEFT JOIN c ON c.day = days.day AND c.event_type = t.event_type
+        |ORDER BY days.day, t.event_type""".stripMargin)),
 
-    "rel_scalar_subquery" -> ((s, d) => {
+    Q("rel_scalar_subquery", ((s, d) => {
       val w = org.apache.spark.sql.expressions.Window.partitionBy(col("o_custkey"))
       Tables.orders(s, d)
         .withColumn("__avg", avg(col("o_totalprice")).over(w))
         .filter(col("o_totalprice") > lit(1.5) * col("__avg"))
         .select(col("o_orderkey"), col("o_custkey"), col("o_totalprice"))
         .orderBy(col("o_orderkey"))
-    }),
+    }), Some(
+      """SELECT o_orderkey, o_custkey, o_totalprice
+        |FROM orders o
+        |WHERE o_totalprice > (SELECT 1.5 * avg(o2.o_totalprice)
+        |                      FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // ───────────────────────── LLM pipeline: dedup ─────────────────────────
 
-    "dedup_exact" -> ((s, d) => {
+    Q("dedup_exact", ((s, d) => {
       Dedup.exact(Tables.documents(s, d)).orderBy(col("text_hash"))
-    }),
+    }), Some(
+      """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id, count(*) AS n_copies
+        |FROM documents GROUP BY md5(text) ORDER BY text_hash""".stripMargin)),
 
     // Dedup-rate monitoring: exact-duplicate share per source — the
     // per-feed health table an ingestion dashboard polls (a feed whose
     // dup share jumps is re-crawling or replaying). One groupBy on
     // (source, hash) + one per-source rollup.
-    "dedup_rate_by_source" -> ((s, d) => {
+    Q("dedup_rate_by_source", ((s, d) => {
       val docs = Tables.documents(s, d)
       docs.groupBy(col("source"), md5(col("text").cast("binary")).as("h"))
         .agg(count(lit(1)).as("n"))
@@ -581,68 +967,203 @@ object SparkEntry {
           (sum(col("n")) - count(lit(1))).as("n_dups"))
         .withColumn("dup_permille", expr("n_dups * 1000 DIV n_docs"))
         .orderBy(col("source"))
-    }),
+    }), Some(
+      """WITH h AS (SELECT source, md5(text) AS h, CAST(count(*) AS BIGINT) AS n
+        |           FROM documents GROUP BY source, md5(text))
+        |SELECT source, CAST(sum(n) AS BIGINT) AS n_docs,
+        |       CAST(count(*) AS BIGINT) AS n_unique,
+        |       CAST(sum(n) - count(*) AS BIGINT) AS n_dups,
+        |       CAST((sum(n) - count(*)) * 1000 // sum(n) AS BIGINT) AS dup_permille
+        |FROM h GROUP BY source ORDER BY source""".stripMargin)),
 
-    "dedup_minhash_lsh" -> ((s, d) => {
+    Q("dedup_minhash_lsh", ((s, d) => {
       val sig = Dedup.minhashSignature(Dedup.shingled(Tables.documents(s, d), k = 3), numHashes = 8)
       Dedup.lshCandidatePairs(sig, numHashes = 8, rowsPerBand = 2)
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    }), Some(minhashOracle)),
 
     // Blocked on (source, lang) PLUS an LSH band over the token set:
     // fixed strata alone grow linearly with the corpus (quadratic pair
     // work); the band component keeps block population collision-
     // bounded at any scale (see Dedup.jaccardPairsBanded).
-    "dedup_jaccard" -> ((s, d) => {
+    Q("dedup_jaccard", ((s, d) => {
       Dedup.jaccardPairsBanded(Tables.documents(s, d), Seq("source", "lang"),
         thresholdPermille = 900)
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    }), Some(
+      s"""WITH ${bandedPairsCtes(tokSql, "", 900)}
+         |SELECT doc_a, doc_b, inter, uni, jac_permille FROM pairs
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // Weighted (multiset) Jaccard: Σmin/Σmax over token BAGS — the
     // repetition-aware near-dup measure set-Jaccard collapses (a doc
     // repeating one paragraph 10× is set-identical to one copy).
     // Candidates from the same set-LSH banding; verification per-pair
     // in-row via the native token_counts + bag_overlap merge scan.
-    "dedup_weighted_jaccard" -> ((s, d) => {
+    Q("dedup_weighted_jaccard", ((s, d) => {
       Dedup.weightedJaccardPairsBanded(Tables.documents(s, d), Seq("source", "lang"),
         thresholdPermille = 500).pairs
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    }), Some(
+      // weighted verification over the same banded candidates: Σmin via
+      // a token-grain join (independent of Spark's in-row merge scan),
+      // Σmax = |A| + |B| − Σmin from raw token totals
+      s"""WITH ${bandedCandCtes(tokSql, "")},
+         |bag AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS cnt
+         |        FROM (SELECT doc_id, unnest($tokSql) AS token FROM documents)
+         |        GROUP BY doc_id, token),
+         |tt AS (SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS tot FROM documents),
+         |mn AS (SELECT c.doc_a, c.doc_b, CAST(sum(least(a.cnt, b.cnt)) AS BIGINT) AS min_sum
+         |       FROM cand c JOIN bag a ON a.doc_id = c.doc_a
+         |                   JOIN bag b ON b.doc_id = c.doc_b AND a.token = b.token
+         |       GROUP BY c.doc_a, c.doc_b),
+         |pv AS (SELECT c.doc_a, c.doc_b, coalesce(m.min_sum, 0) AS min_sum,
+         |         ta.tot + tb.tot - coalesce(m.min_sum, 0) AS max_sum
+         |       FROM cand c
+         |       JOIN d da ON da.doc_id = c.doc_a JOIN d db ON db.doc_id = c.doc_b
+         |       JOIN tt ta ON ta.doc_id = c.doc_a JOIN tt tb ON tb.doc_id = c.doc_b
+         |       LEFT JOIN mn m ON m.doc_a = c.doc_a AND m.doc_b = c.doc_b
+         |       WHERE da.source = db.source AND da.lang = db.lang)
+         |SELECT doc_a, doc_b, min_sum, max_sum,
+         |       CAST(floor(min_sum * 1000 / max_sum) AS BIGINT) AS wjac_permille
+         |FROM pv WHERE floor(min_sum * 1000 / max_sum) >= 500
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // Edit-distance near-dup pairs at TITLE grain (first 80 chars —
     // the short-text slot the measure is for; full-doc Levenshtein is
     // O(len²) per pair and the token measures own that grain): banded
     // char-5-gram candidates, length prefilter, exact DP at dist <= 8.
-    "dedup_edit_distance" -> ((s, d) => {
+    Q("dedup_edit_distance", ((s, d) => {
       val titles = Tables.documents(s, d)
         .select(col("doc_id"), substring(col("text"), 1, 80).as("text"),
           col("source"), col("lang"))
       Dedup.editDistancePairs(titles, Seq("source", "lang"),
         maxDist = 8, k = 5).pairs
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    }), Some(
+      // char-5-gram banded candidates over the title slice at the
+      // default cap, length prefilter, engine levenshtein verification
+      s"""WITH ${bandedBucketCtes(
+        "list_transform(range(1, length(substr(text, 1, 80)) - 3), " +
+          "i -> substr(substr(text, 1, 80), CAST(i AS INTEGER), 5))", "")},
+         |cold AS (SELECT band, bv, source, lang FROM bsz WHERE bucket_docs <= 1000),
+         |cb AS (SELECT s.* FROM sbands s JOIN cold c
+         |         ON s.band = c.band AND s.bv = c.bv
+         |        AND s.source = c.source AND s.lang = c.lang),
+         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |         FROM cb a JOIN cb b
+         |           ON a.band = b.band AND a.bv = b.bv
+         |          AND a.source = b.source AND a.lang = b.lang
+         |          AND a.doc_id < b.doc_id),
+         |tx AS (SELECT doc_id, substr(text, 1, 80) AS ttl,
+         |         length(substr(text, 1, 80)) AS ln FROM documents),
+         |v AS (SELECT cand.doc_a, cand.doc_b,
+         |        CAST(levenshtein(a.ttl, b.ttl) AS BIGINT) AS dist
+         |      FROM cand JOIN tx a ON a.doc_id = cand.doc_a
+         |                JOIN tx b ON b.doc_id = cand.doc_b
+         |      WHERE abs(a.ln - b.ln) <= 8)
+         |SELECT doc_a, doc_b, dist FROM v WHERE dist <= 8
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // IDF-weighted set Jaccard: rare-token overlap counts more
     // (Robertson odds idf in exact integers, the bm25 weight) —
     // boilerplate-only overlap scores low, shared rare content high.
     // Same banded-LSH candidates as dedup_jaccard.
-    "dedup_idf_jaccard" -> ((s, d) => {
+    Q("dedup_idf_jaccard", ((s, d) => {
       Dedup.idfJaccardPairsBanded(Tables.documents(s, d), Seq("source", "lang"),
         thresholdPermille = 500).pairs
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    }), Some(
+      // banded candidates at the default cap + integer odds-idf weights,
+      // weighted intersection/union via pair-bounded token joins
+      s"""WITH ${bandedBucketCtes(tokSql, "")},
+         |cold AS (SELECT band, bv, source, lang FROM bsz WHERE bucket_docs <= 1000),
+         |cb AS (SELECT s.* FROM sbands s JOIN cold c
+         |         ON s.band = c.band AND s.bv = c.bv
+         |        AND s.source = c.source AND s.lang = c.lang),
+         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |         FROM cb a JOIN cb b
+         |           ON a.band = b.band AND a.bv = b.bv
+         |          AND a.source = b.source AND a.lang = b.lang
+         |          AND a.doc_id < b.doc_id),
+         |tok AS (SELECT doc_id, unnest(ts) AS t FROM d),
+         |nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d),
+         |wt AS (SELECT t, (1000 * (2 * (nd.n - x.df) + 1)) // (2 * x.df + 1) AS w
+         |       FROM (SELECT t, CAST(count(*) AS BIGINT) AS df FROM tok GROUP BY t) x, nd),
+         |tw AS (SELECT tok.doc_id, tok.t, wt.w FROM tok JOIN wt USING (t)),
+         |pa AS (SELECT cand.doc_a, cand.doc_b, tw.t, tw.w
+         |       FROM tw JOIN cand ON tw.doc_id = cand.doc_a),
+         |pb AS (SELECT cand.doc_a, cand.doc_b, tw.t, tw.w
+         |       FROM tw JOIN cand ON tw.doc_id = cand.doc_b),
+         |sa AS (SELECT doc_a, doc_b, CAST(sum(w) AS BIGINT) AS swa
+         |       FROM pa GROUP BY doc_a, doc_b),
+         |sb AS (SELECT doc_a, doc_b, CAST(sum(w) AS BIGINT) AS swb
+         |       FROM pb GROUP BY doc_a, doc_b),
+         |si AS (SELECT pa.doc_a, pa.doc_b, CAST(sum(pa.w) AS BIGINT) AS swi
+         |       FROM pa JOIN pb ON pa.doc_a = pb.doc_a
+         |         AND pa.doc_b = pb.doc_b AND pa.t = pb.t
+         |       GROUP BY pa.doc_a, pa.doc_b),
+         |f AS (SELECT sa.doc_a, sa.doc_b,
+         |        CAST(coalesce(si.swi, 0) AS BIGINT) AS w_inter,
+         |        CAST(sa.swa + sb.swb - coalesce(si.swi, 0) AS BIGINT) AS w_union
+         |      FROM sa JOIN sb USING (doc_a, doc_b)
+         |      LEFT JOIN si USING (doc_a, doc_b))
+         |SELECT doc_a, doc_b, w_inter, w_union,
+         |       CAST(w_inter * 1000 // w_union AS BIGINT) AS idfjac_permille
+         |FROM f WHERE w_inter * 1000 // w_union >= 500
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // Containment (excerpt) detection: |A∩B| / min(|A|,|B|) ≥ 0.8
     // over char-5-gram sets via the canonical prefix-filter inverted
     // index (AllPairs/PPJoin) — the asymmetric duplication Jaccard
     // structurally misses (an excerpt of a long doc has J ≈ 0 but
     // containment = 1). Strata-blocked like the Jaccard family.
-    "dedup_containment" -> ((s, d) => {
+    Q("dedup_containment", ((s, d) => {
       Dedup.charNgramContainmentAccounted(Tables.documents(s, d),
         Seq("source", "lang"), thresholdPermille = 800, k = 5).pairs
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    }), Some(
+      // Prefix-filter containment over char-5-gram sets: global
+      // (freq, gram) order, per-doc rarest-gram prefixes probe the
+      // strata-blocked inverted index, exact intersection over min-size
+      // on candidates — mirrors the Spark operator including the
+      // maxPostings=10000 governor.
+      s"""WITH d AS (SELECT doc_id, source, lang, list_distinct($charGramSql) AS ts
+         |           FROM documents),
+         |base AS (SELECT doc_id, source, lang, ts
+         |         FROM d WHERE len(ts) >= 1),
+         |tok AS (SELECT doc_id, source, lang, unnest(ts) AS t FROM base),
+         |gh AS (SELECT doc_id, source, lang, ${hexSliceSql("m", 1)} AS gh
+         |       FROM (SELECT doc_id, source, lang, md5(t) AS m FROM tok) mx),
+         |ghs AS (SELECT doc_id, source, lang,
+         |          list_sort(list(DISTINCT gh)) AS hs
+         |        FROM gh GROUP BY doc_id, source, lang),
+         |tokh AS (SELECT doc_id, source, lang, CAST(len(hs) AS BIGINT) AS hsz,
+         |           unnest(hs) AS gh FROM ghs),
+         |cnt AS (SELECT gh, CAST(count(*) AS BIGINT) AS c FROM tokh GROUP BY gh),
+         |tokc AS (SELECT tokh.doc_id, tokh.source, tokh.lang, tokh.hsz, tokh.gh, cnt.c
+         |         FROM tokh JOIN cnt USING (gh)),
+         |rk AS (SELECT doc_id, source, lang, gh, c, hsz,
+         |         CAST(row_number() OVER (PARTITION BY doc_id ORDER BY c, gh) AS BIGINT) AS rn
+         |       FROM tokc),
+         |pref AS (SELECT doc_id, source, lang, gh, hsz FROM rk
+         |         WHERE rn <= hsz - ((800 * hsz + 999) // 1000) + 1),
+         |post AS (SELECT doc_id, source, lang, gh, hsz FROM tokc WHERE c <= 10000),
+         |cand AS (SELECT DISTINCT least(p.doc_id, q.doc_id) AS doc_a,
+         |                greatest(p.doc_id, q.doc_id) AS doc_b
+         |         FROM pref p JOIN post q
+         |           ON p.gh = q.gh AND p.source = q.source AND p.lang = q.lang
+         |         WHERE p.hsz < q.hsz
+         |            OR (p.hsz = q.hsz AND p.doc_id < q.doc_id)),
+         |v AS (SELECT cand.doc_a, cand.doc_b,
+         |        CAST(len(list_filter(a.hs, x -> list_contains(b.hs, x))) AS BIGINT) AS inter,
+         |        least(CAST(len(a.hs) AS BIGINT), CAST(len(b.hs) AS BIGINT)) AS minsz
+         |      FROM cand JOIN ghs a ON a.doc_id = cand.doc_a
+         |                JOIN ghs b ON b.doc_id = cand.doc_b)
+         |SELECT doc_a, doc_b, inter, minsz,
+         |       CAST(floor(inter * 1000 / minsz) AS BIGINT) AS cont_permille
+         |FROM v WHERE floor(inter * 1000 / minsz) >= 800
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // Winnowed-fingerprint inverted index: pairs sharing >= 5
     // winnow-selected gram hashes — the 2/(w+1)-density excerpt
@@ -650,30 +1171,58 @@ object SparkEntry {
     // to |fps|·cap² rows at ANY corpus size; this tiny-vocabulary
     // synthetic corpus shares grams by construction, so the cap is
     // doing its loud-degradation job here, not just at 100 TB.
-    "dedup_winnow_pairs" -> ((s, d) => {
+    Q("dedup_winnow_pairs", ((s, d) => {
       Dedup.winnowPairs(Tables.documents(s, d), k = 5, w = 4,
           minShared = 5, maxPostings = 50).pairs
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    }), Some(
+      // Winnowed inverted index: unnest selected fingerprints, governor
+      // on document frequency, self-join, shared-count >= 5.
+      s"""WITH $winnowSelCtes,
+         |f AS (SELECT doc_id, unnest(sl) AS fp FROM sel),
+         |c AS (SELECT fp, CAST(count(*) AS BIGINT) AS df FROM f GROUP BY fp),
+         |kept AS (SELECT f.doc_id, f.fp FROM f JOIN c USING (fp) WHERE df <= 50),
+         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |        CAST(count(*) AS BIGINT) AS n_shared
+         |      FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
+         |      GROUP BY a.doc_id, b.doc_id)
+         |SELECT doc_a, doc_b, n_shared FROM p WHERE n_shared >= 5
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // Delta-vs-corpus excerpt probe: docs >= 250 winnow-probed against
     // the index of docs < 250 — the asymmetric corpus-history question.
-    "dedup_excerpt_index" -> ((s, d) => {
+    Q("dedup_excerpt_index", ((s, d) => {
       val docs = Tables.documents(s, d)
       val index = Dedup.buildWinnowIndex(docs.filter(col("doc_id") < 250), k = 5, w = 4)
       Dedup.excerptAgainstIndex(docs.filter(col("doc_id") >= 250), index,
           minShared = 5, maxPostings = 50)
         .orderBy(col("new_id"), col("index_id"))
-    }),
+    }), Some(
+      // Delta-vs-corpus winnow probe: corpus postings census (governor
+      // df <= 50 on the INDEX side), delta fingerprints equi-join.
+      s"""WITH $winnowSelCtes,
+         |f AS (SELECT doc_id, unnest(sl) AS fp FROM sel),
+         |idx AS (SELECT doc_id, fp FROM f WHERE doc_id < 250),
+         |c AS (SELECT fp, CAST(count(*) AS BIGINT) AS df FROM idx GROUP BY fp),
+         |kept AS (SELECT idx.doc_id, idx.fp FROM idx JOIN c USING (fp) WHERE df <= 50),
+         |dl AS (SELECT doc_id, fp FROM f WHERE doc_id >= 250),
+         |p AS (SELECT dl.doc_id AS new_id, kept.doc_id AS index_id,
+         |        CAST(count(*) AS BIGINT) AS n_shared
+         |      FROM dl JOIN kept ON dl.fp = kept.fp GROUP BY 1, 2)
+         |SELECT new_id, index_id, n_shared FROM p WHERE n_shared >= 5
+         |ORDER BY new_id, index_id""".stripMargin)),
 
     // Character 5-gram Jaccard: the char-level near-dup sweep (catches
     // whitespace/punctuation edits word-level misses). Banded like
     // dedup_jaccard — the minhash runs over the char-gram set itself.
-    "dedup_char_ngram" -> ((s, d) => {
+    Q("dedup_char_ngram", ((s, d) => {
       Dedup.charNgramPairsBanded(Tables.documents(s, d), Seq("source", "lang"),
         thresholdPermille = 800, k = 5)
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    }), Some(
+      s"""WITH ${bandedPairsCtes(charGramSql, " WHERE length(text) >= 5", 800)}
+         |SELECT doc_a, doc_b, inter, uni, jac_permille FROM pairs
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // The hot-bucket governor made observable: LSH buckets whose
     // population exceeds the cap are DROPPED from candidate
@@ -682,13 +1231,17 @@ object SparkEntry {
     // buckets trip it, proving the governor's population math
     // cross-engine. (The oracle-checked dedup_jaccard family runs at
     // the 1000 default, far above testdata bucket sizes — no drops.)
-    "dedup_hot_buckets" -> ((s, d) => {
+    Q("dedup_hot_buckets", ((s, d) => {
       Dedup.jaccardPairsBandedAccounted(Tables.documents(s, d), Seq("source", "lang"),
         thresholdPermille = 900, maxBucket = 8).droppedBuckets
         .select(col("band").cast("long").as("band"), col("bv"),
           col("source"), col("lang"), col("bucket_docs"))
         .orderBy(col("band"), col("bv"), col("source"), col("lang"))
-    }),
+    }), Some(
+      s"""WITH ${bandedBucketCtes(tokSql, "")}
+         |SELECT CAST(band AS BIGINT) AS band, bv, source, lang, bucket_docs
+         |FROM bsz WHERE bucket_docs > 8
+         |ORDER BY band, bv, source, lang""".stripMargin)),
 
     // The governor at ADVERSARIAL scale: a synthetic sf-independent
     // clone corpus — 100k exact clones of one text (every band bucket
@@ -700,7 +1253,7 @@ object SparkEntry {
     // shingles), so the oracle pins the exact verdict while the bench
     // entry prices the census + broadcast-anti-join curve per round
     // (PERF.md tracks it against the 1600-clone spec point).
-    "dedup_governor_clones" -> ((s, d) => {
+    Q("dedup_governor_clones", ((s, d) => {
       val clones = 100000L
       val clone = "alpha beta gamma delta epsilon zeta eta theta iota " +
         "kappa lambda mu nu xi omicron pi rho sigma tau upsilon"
@@ -719,18 +1272,48 @@ object SparkEntry {
         bp.droppedBuckets.agg(
           count(lit(1)).as("n_hot_buckets"),
           coalesce(sum(col("bucket_docs")), lit(0L)).as("hot_docs")))
-    }),
+    }), Some(
+      // Analytic verdict for the synthetic clone corpus (the input is
+      // generated in-query, not from the tables): 100k identical docs
+      // share one minhash signature → one hot bucket per band (8 hashes
+      // / 2 rows per band = 4 bands) of population 100k, all over the
+      // 1000 cap → dropped; the 1000 distinct docs share no shingles →
+      // no candidates → zero verified pairs.
+      """SELECT CAST(0 AS BIGINT) AS n_pairs,
+        |       CAST(4 AS BIGINT) AS n_hot_buckets,
+        |       CAST(400000 AS BIGINT) AS hot_docs""".stripMargin)),
 
     // dedup_jaccard with the governor ENGAGED (cap 8): pairs whose
     // every band collision lands in a hot bucket disappear; pairs with
     // at least one cold collision survive — the degraded-loudly
     // semantics, hash-checked against an oracle that replays the
     // bucket-population filter.
-    "dedup_jaccard_capped" -> ((s, d) => {
+    Q("dedup_jaccard_capped", ((s, d) => {
       Dedup.jaccardPairsBanded(Tables.documents(s, d), Seq("source", "lang"),
         thresholdPermille = 900, maxBucket = 8)
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    }), Some(
+      // the capped pair set: candidates may only meet in buckets whose
+      // population is within the cap; verification is unchanged
+      s"""WITH ${bandedBucketCtes(tokSql, "")},
+         |cold AS (SELECT band, bv, source, lang FROM bsz WHERE bucket_docs <= 8),
+         |cb AS (SELECT s.* FROM sbands s JOIN cold c
+         |         ON s.band = c.band AND s.bv = c.bv
+         |        AND s.source = c.source AND s.lang = c.lang),
+         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
+         |         FROM cb a JOIN cb b
+         |           ON a.band = b.band AND a.bv = b.bv
+         |          AND a.source = b.source AND a.lang = b.lang
+         |          AND a.doc_id < b.doc_id),
+         |pv AS (SELECT c.doc_a, c.doc_b,
+         |         CAST(len(list_filter(a.ts, x -> list_contains(b.ts, x))) AS BIGINT) AS inter,
+         |         CAST(len(a.ts) + len(b.ts) AS BIGINT) AS sz
+         |       FROM cand c JOIN d a ON a.doc_id = c.doc_a
+         |                   JOIN d b ON b.doc_id = c.doc_b)
+         |SELECT doc_a, doc_b, inter, sz - inter AS uni,
+         |       CAST(floor(inter * 1000 / (sz - inter)) AS BIGINT) AS jac_permille
+         |FROM pv WHERE floor(inter * 1000 / (sz - inter)) >= 900
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // Incremental (daily-delta) dedup: drop new docs (id ≥ 250) that
     // duplicate the existing corpus (id < 250) exactly or nearly.
@@ -738,341 +1321,1107 @@ object SparkEntry {
     // side (two delta-sized driver jobs buy an unshuffled 100 TB index
     // at scale; at bench sf the prune is measurable overhead — see
     // dedup_incremental_core for the same result without it).
-    "dedup_incremental" -> ((s, d) => {
+    Q("dedup_incremental", ((s, d) => {
       val docs = Tables.documents(s, d)
       Dedup.dedupeAgainst(docs.filter(col("doc_id") >= 250),
         docs.filter(col("doc_id") < 250), thresholdPermille = 900)
         .select(col("doc_id")).orderBy(col("doc_id"))
-    }),
+    }), Some(incrementalDedupOracle)),
 
     // The ungated/unpruned core (bloomFpp = None): identical result,
     // fully lazy plan — prices the Bloom stage by bench difference
     // against dedup_incremental (PERF.md carries the breakdown).
-    "dedup_incremental_core" -> ((s, d) => {
+    Q("dedup_incremental_core", ((s, d) => {
       val docs = Tables.documents(s, d)
       Dedup.dedupeAgainst(docs.filter(col("doc_id") >= 250),
         docs.filter(col("doc_id") < 250), thresholdPermille = 900,
         bloomFpp = None)
         .select(col("doc_id")).orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Bloom pruning never changes the anti-join result (no false
+      // negatives) — the core variant shares the oracle verbatim.
+      incrementalDedupOracle)),
 
     // Exact duplicate clustering: transitive closure over the verified
     // near-dup pairs; component = smallest reachable doc id.
-    "dedup_components" -> ((s, d) => {
+    Q("dedup_components", ((s, d) => {
       val pairs = sharedNearDupPairs(s, d)
       Dedup.connectedComponents(pairs).orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH RECURSIVE ${bandedPairsCtes(tokSql, "", 900)},
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |nodes AS (SELECT DISTINCT u AS node FROM edges),
+         |reach AS (
+         |  SELECT node, node AS label FROM nodes
+         |  UNION
+         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node)
+         |SELECT node AS doc_id, min(label) AS component
+         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin)),
 
     // INCREMENTAL component maintenance: the stored map from the
     // doc_id<300 history pairs is updated with only the delta edges
     // (super-node contraction; old edges never re-read) — the oracle
     // recomputes the closure over ALL pairs, so the hash match IS the
     // proof that update(stored, delta) ≡ recompute(history ∪ delta).
-    "dedup_components_incremental" -> ((s, d) => {
+    Q("dedup_components_incremental", ((s, d) => {
       val pairs = sharedNearDupPairs(s, d)
       val history = pairs.filter(col("doc_a") < 300 && col("doc_b") < 300)
       val delta = pairs.filter(col("doc_a") >= 300 || col("doc_b") >= 300)
       Dedup.componentsUpdate(Dedup.connectedComponents(history), delta)
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // The incremental update must equal the full recompute — the
+      // oracle IS the dedup_components closure over all pairs.
+      s"""WITH RECURSIVE ${bandedPairsCtes(tokSql, "", 900)},
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |nodes AS (SELECT DISTINCT u AS node FROM edges),
+         |reach AS (
+         |  SELECT node, node AS label FROM nodes
+         |  UNION
+         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node)
+         |SELECT node AS doc_id, min(label) AS component
+         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin)),
 
     // Keep-best dedup: collapse each near-dup cluster to its highest-
     // token-count member (ties → smallest id); singletons survive.
-    "dedup_keep_best" -> ((s, d) => {
+    Q("dedup_keep_best", ((s, d) => {
       val docs = Tables.documents(s, d)
       val pairs = sharedNearDupPairs(s, d)
       Dedup.keepBest(docs, pairs, size(Dedup.tokens(col("text"))))
         .select(col("doc_id")).orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH RECURSIVE ${bandedPairsCtes(tokSql, "", 900)},
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |nodes AS (SELECT DISTINCT u AS node FROM edges),
+         |reach AS (
+         |  SELECT node, node AS label FROM nodes
+         |  UNION
+         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node),
+         |comp AS (SELECT node AS doc_id, min(label) AS component
+         |         FROM reach GROUP BY node),
+         |sc AS (SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS score FROM documents),
+         |lab AS (SELECT sc.doc_id, coalesce(c.component, sc.doc_id) AS component, sc.score
+         |        FROM sc LEFT JOIN comp c ON c.doc_id = sc.doc_id),
+         |win AS (SELECT doc_id, row_number() OVER
+         |          (PARTITION BY component ORDER BY score DESC, doc_id ASC) AS rn
+         |        FROM lab)
+         |SELECT doc_id FROM win WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
 
     // Link analysis over the near-dup graph: degrees (hub detection)
     // and fixed-point PageRank (canonical-copy ranking within mirrors).
-    "graph_degrees" -> ((s, d) => {
+    Q("graph_degrees", ((s, d) => {
       val pairs = sharedNearDupPairs(s, d)
       Graph.degrees(pairs).orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH ${bandedPairsCtes(tokSql, "", 900)},
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |          UNION SELECT doc_b, doc_a FROM pairs)
+         |SELECT u AS doc_id, CAST(count(*) AS BIGINT) AS degree
+         |FROM edges GROUP BY u ORDER BY doc_id""".stripMargin)),
 
-    "graph_pagerank" -> ((s, d) => {
+    Q("graph_pagerank", ((s, d) => {
       val pairs = sharedNearDupPairs(s, d)
       Graph.pageRank(pairs, iters = 3).orderBy(col("doc_id"))
+    }), Some {
+      val rounds = (1 to 3).map { it =>
+        s"""pr$it AS (SELECT n.node, CAST(1500 + (85 * coalesce(s.s, 0)) // 100 AS BIGINT) AS pr
+           |  FROM nodes n LEFT JOIN (
+           |    SELECT e.v, sum(p.pr // dg.deg) AS s
+           |    FROM edges e JOIN pr${it - 1} p ON p.node = e.u
+           |                 JOIN deg dg ON dg.u = e.u
+           |    GROUP BY e.v) s ON s.v = n.node)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH ${bandedPairsCtes(tokSql, "", 900)},
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |          UNION SELECT doc_b, doc_a FROM pairs),
+         |deg AS (SELECT u, count(*) AS deg FROM edges GROUP BY u),
+         |nodes AS (SELECT DISTINCT u AS node FROM edges),
+         |pr0 AS (SELECT node, CAST(10000 AS BIGINT) AS pr FROM nodes),
+         |$rounds
+         |SELECT node AS doc_id, pr FROM pr3 ORDER BY doc_id""".stripMargin
     }),
 
     // HITS hubs/authorities over the same near-dup graph, 2 rounds of
     // all-integer mutual reinforcement with L∞ rescaling — the
     // canonical template in a mirror farm scores 10000, copies
     // proportionally less; complements pageRank's damped walk.
-    "graph_hits" -> ((s, d) => {
+    Q("graph_hits", ((s, d) => {
       val pairs = sharedNearDupPairs(s, d)
       Graph.hits(pairs, iters = 2).orderBy(col("doc_id"))
+    }), Some {
+      // HITS replay: two unrolled rounds, each = edge-join sum + the
+      // scalar-max L∞ rescale as integer floor division.
+      val rounds = (1 to 2).map { it =>
+        s"""h${it}r AS (SELECT e.u AS node, sum(a.score) AS raw
+           |  FROM edges e JOIN a${it - 1} a ON a.node = e.v GROUP BY e.u),
+           |h$it AS (SELECT node, raw * 10000 // (SELECT max(raw) FROM h${it}r) AS score
+           |  FROM h${it}r),
+           |a${it}r AS (SELECT e.v AS node, sum(h.score) AS raw
+           |  FROM edges e JOIN h$it h ON h.node = e.u GROUP BY e.v),
+           |a$it AS (SELECT node, raw * 10000 // (SELECT max(raw) FROM a${it}r) AS score
+           |  FROM a${it}r)""".stripMargin
+      }.mkString(",\n")
+      s"""WITH ${bandedPairsCtes(tokSql, "", 900)},
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |          UNION SELECT doc_b, doc_a FROM pairs),
+         |nodes AS (SELECT DISTINCT u AS node FROM edges),
+         |a0 AS (SELECT node, CAST(10000 AS BIGINT) AS score FROM nodes),
+         |$rounds
+         |SELECT h2.node AS doc_id, CAST(h2.score AS BIGINT) AS hub,
+         |       CAST(a2.score AS BIGINT) AS auth
+         |FROM h2 JOIN a2 ON a2.node = h2.node ORDER BY doc_id""".stripMargin
     }),
 
     // Exact triangle census + clustering coefficient over the same
     // near-dup graph (degree-ordered wedge join, O(m^1.5) bound):
     // high cc = mirror clique, high degree + low cc = shared template.
-    "graph_triangles" -> ((s, d) => {
+    Q("graph_triangles", ((s, d) => {
       val pairs = sharedNearDupPairs(s, d)
       Graph.triangles(pairs).orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // degree-ordered triangle enumeration replayed: direct each edge
+      // low→high (deg, id) rank, wedge at the source, close on the
+      // directed edge set, unnest the three corners
+      s"""WITH ${bandedPairsCtes(tokSql, "", 900)},
+         |e0 AS (SELECT DISTINCT least(doc_a, doc_b) AS u, greatest(doc_a, doc_b) AS v
+         |       FROM pairs WHERE doc_a <> doc_b),
+         |sym AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
+         |dg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY u),
+         |dire AS (SELECT CASE WHEN a.deg <= b.deg THEN e0.u ELSE e0.v END AS src,
+         |                CASE WHEN a.deg <= b.deg THEN e0.v ELSE e0.u END AS dst,
+         |                CASE WHEN a.deg <= b.deg THEN b.deg ELSE a.deg END AS ddeg
+         |         FROM e0 JOIN dg a ON a.u = e0.u JOIN dg b ON b.u = e0.v),
+         |tri AS (SELECT e1.src AS x, e1.dst AS y, e2.dst AS z
+         |        FROM dire e1 JOIN dire e2 ON e1.src = e2.src
+         |          AND (e1.ddeg < e2.ddeg OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst))
+         |        JOIN dire e3 ON e3.src = e1.dst AND e3.dst = e2.dst),
+         |corners AS (SELECT unnest([x, y, z]) AS doc_id FROM tri),
+         |tc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_triangles
+         |       FROM corners GROUP BY doc_id)
+         |SELECT dg.u AS doc_id, dg.deg AS degree,
+         |       CAST(coalesce(tc.n_triangles, 0) AS BIGINT) AS n_triangles,
+         |       CAST(CASE WHEN dg.deg >= 2
+         |            THEN (2000 * coalesce(tc.n_triangles, 0)) // (dg.deg * (dg.deg - 1))
+         |            ELSE 0 END AS BIGINT) AS cc_permille
+         |FROM dg LEFT JOIN tc ON tc.doc_id = dg.u
+         |ORDER BY doc_id""".stripMargin)),
 
     // BFS hop distances from the oldest (min-id) node: direct copies
     // at 1, copies-of-copies at 2, drift chains beyond.
-    "graph_bfs" -> ((s, d) => {
+    Q("graph_bfs", ((s, d) => {
       val pairs = sharedNearDupPairs(s, d)
       Graph.bfsFromMin(pairs).orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Recursive BFS walk from the min node, hop bound 12 (eccentricity
+      // within budget is spec-pinned); UNION dedups (v, d) rows so the
+      // closure terminates, min(d) per node is the BFS distance.
+      s"""WITH RECURSIVE ${bandedPairsCtes(tokSql, "", 900)},
+         |e0 AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |       UNION SELECT doc_b, doc_a FROM pairs),
+         |src AS (SELECT min(u) AS s FROM e0),
+         |walk AS (
+         |  SELECT s AS v, 0 AS d FROM src
+         |  UNION
+         |  SELECT e.v, w.d + 1 FROM walk w JOIN e0 e ON e.u = w.v WHERE w.d < 12
+         |)
+         |SELECT v AS doc_id, CAST(min(d) AS BIGINT) AS dist
+         |FROM walk GROUP BY v ORDER BY doc_id""".stripMargin)),
 
     // 3-core of the near-dup graph: peel degree-<3 nodes to fixpoint;
     // survivors are tight mirror communities (sustained mutual
     // similarity, not one-gram chaining).
-    "graph_kcore" -> ((s, d) => {
+    Q("graph_kcore", ((s, d) => {
       val pairs = sharedNearDupPairs(s, d)
       Graph.kCore(pairs, k = 3).orderBy(col("doc_id"))
+    }), Some {
+      // k=3 peeling, 10 rounds unrolled (fixpoint within 10 is
+      // spec-pinned at both test SFs; post-convergence rounds no-op).
+      // Every round CTE is MATERIALIZED: DuckDB inlines CTEs per
+      // reference, and each round referencing the previous 3× would
+      // otherwise expand 3^10 copies of the whole pairs pipeline
+      // (observed as a too-many-open-files parquet-scan explosion).
+      val rounds = (0 until 10).map { i =>
+        s"""r$i AS MATERIALIZED (SELECT u FROM e$i GROUP BY u HAVING count(*) < 3),
+           |e${i + 1} AS MATERIALIZED (SELECT e.u, e.v FROM e$i e
+           |        WHERE e.u NOT IN (SELECT u FROM r$i)
+           |          AND e.v NOT IN (SELECT u FROM r$i))""".stripMargin
+      }.mkString(",\n")
+      s"""WITH ${bandedPairsCtes(tokSql, "", 900)},
+         |e0 AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |       UNION SELECT doc_b, doc_a FROM pairs),
+         |$rounds
+         |SELECT u AS doc_id, CAST(count(*) AS BIGINT) AS core_degree
+         |FROM e10 GROUP BY u ORDER BY doc_id""".stripMargin
     }),
 
-    "dedup_simhash" -> ((s, d) => {
+    Q("dedup_simhash", ((s, d) => {
       Dedup.simhash16(Tables.documents(s, d)).orderBy(col("doc_id"))
-    }),
+    }), Some(simhashOracle)),
 
-    "dedup_simhash_pairs" -> ((s, d) => {
+    Q("dedup_simhash_pairs", ((s, d) => {
       Dedup.simhashPairs(Dedup.simhash16(Tables.documents(s, d)), maxDistance = 3)
         .orderBy(col("doc_a"), col("doc_b"))
-    }),
+    }), Some(
+      s"""WITH sig AS ($simhashOracleBody)
+         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |       a.simhash16 AS sig_a, b.simhash16 AS sig_b,
+         |       CAST(bit_count(xor(a.simhash16, b.simhash16)) AS BIGINT) AS hamming
+         |FROM sig a JOIN sig b
+         |  ON (a.simhash16 >> 8) = (b.simhash16 >> 8) AND a.doc_id < b.doc_id
+         |WHERE bit_count(xor(a.simhash16, b.simhash16)) <= 3
+         |ORDER BY doc_a, doc_b""".stripMargin)),
 
-    "dedup_embedding" -> ((s, d) => {
+    Q("dedup_embedding", ((s, d) => {
       Similarity.nearDupPairs(Tables.embeddings(s, d), cellCol = "label", minCos = 0.4)
         .orderBy(col("id_a"), col("id_b"))
-    }),
+    }), Some(
+      s"""WITH e AS (SELECT vec_id, label, embedding,
+         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings)
+         |SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label AS cell,
+         |       round(${dotSql("a.embedding", "b.embedding")} / sqrt(a.n2 * b.n2), 4) AS cos
+         |FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
+         |WHERE cos >= 0.4
+         |ORDER BY id_a, id_b""".stripMargin)),
 
     // ───────────────────────── LLM pipeline: similarity search ─────────────────────────
 
-    "sim_ann_brute" -> ((s, d) => {
+    Q("sim_ann_brute", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.bruteForceTopK(emb.filter(col("vec_id") < 10), emb, k = 5)
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"), col("cos"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      s"""WITH e AS (SELECT vec_id, label, embedding,
+         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
+         |q AS (SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2 FROM e WHERE vec_id < 10),
+         |scored AS (SELECT query_id, e.vec_id AS cand_id,
+         |             round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
+         |           FROM q, e WHERE query_id <> e.vec_id),
+         |ranked AS (SELECT query_id, cand_id, cos,
+         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
+         |           FROM scored)
+         |SELECT query_id, cand_id, rnk, cos FROM ranked WHERE rnk <= 5
+         |ORDER BY query_id, rnk""".stripMargin)),
 
-    "sim_ann_ivf" -> ((s, d) => {
+    Q("sim_ann_ivf", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.ivfTopK(emb.filter(col("vec_id") < 10), emb, k = 5, cellCol = "label")
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"), col("cos"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      s"""WITH e AS (SELECT vec_id, label, embedding,
+         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
+         |q AS (SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2, label AS qlabel
+         |      FROM e WHERE vec_id < 10),
+         |scored AS (SELECT query_id, e.vec_id AS cand_id,
+         |             round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
+         |           FROM q JOIN e ON qlabel = e.label AND query_id <> e.vec_id),
+         |ranked AS (SELECT query_id, cand_id, cos,
+         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
+         |           FROM scored)
+         |SELECT query_id, cand_id, rnk, cos FROM ranked WHERE rnk <= 5
+         |ORDER BY query_id, rnk""".stripMargin)),
 
-    "sim_ann_lsh" -> ((s, d) => {
+    Q("sim_ann_lsh", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.lshTopK(emb.filter(col("vec_id") < 10), emb, k = 5)
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"), col("cos"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      s"""WITH planes AS (
+         |  SELECT h, list_transform(range(1, 65),
+         |    d -> strpos('0123456789abcdef',
+         |           substr(md5(CAST(h AS VARCHAR) || ',' || CAST(d AS VARCHAR)), 1, 1)) - 8.5) AS p
+         |  FROM range(0, 16) t(h)),
+         |e AS (SELECT vec_id, embedding,
+         |        ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
+         |sigs AS (
+         |  SELECT vec_id,
+         |    CAST(sum(CASE WHEN list_sum(list_transform(range(1, 65),
+         |           i -> embedding[i]::DOUBLE * p[i])) > 0
+         |         THEN (CAST(1 AS BIGINT) << h) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS sig
+         |  FROM e, planes GROUP BY vec_id),
+         |q AS (SELECT e.vec_id AS query_id, e.embedding AS qv, e.n2 AS qn2, s.sig >> 8 AS qblock
+         |      FROM e JOIN sigs s ON e.vec_id = s.vec_id WHERE e.vec_id < 10),
+         |c AS (SELECT e.vec_id AS cand_id, e.embedding AS cv, e.n2 AS cn2, s.sig >> 8 AS cblock
+         |      FROM e JOIN sigs s ON e.vec_id = s.vec_id),
+         |scored AS (SELECT query_id, cand_id,
+         |             round(${dotSql("qv", "cv")} / sqrt(qn2 * cn2), 4) AS cos
+         |           FROM q JOIN c ON qblock = cblock AND query_id <> cand_id),
+         |ranked AS (SELECT query_id, cand_id, cos,
+         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
+         |           FROM scored)
+         |SELECT query_id, cand_id, rnk, cos FROM ranked WHERE rnk <= 5
+         |ORDER BY query_id, rnk""".stripMargin)),
 
     // MMR diversified rerank over a brute-force shortlist: greedy
     // λ·rel − (1−λ)·max-sim-to-picked in integer ten-thousandths, so
     // the DuckDB twin unrolls the same k rounds bit-identically.
-    "sim_mmr" -> ((s, d) => {
+    Q("sim_mmr", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.mmrTopK(emb.filter(col("vec_id") < 5), emb, k = 3, shortlist = 8,
           lambdaPermille = 700)
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      // Unrolls mmrTopK's k=3 greedy rounds: shortlist by raw cosine,
+      // pairwise sims within the shortlist, then per round argmax of
+      // 700·rel_m − 300·max-sim-to-picked (pure BIGINT arithmetic,
+      // cand_id tie-break) — the same integer fixed-point the Spark
+      // side computes.
+      s"""WITH e AS (SELECT vec_id, embedding,
+         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
+         |q AS (SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2 FROM e WHERE vec_id < 5),
+         |scored AS (SELECT query_id, e.vec_id AS cand_id,
+         |             round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
+         |           FROM q, e WHERE query_id <> e.vec_id),
+         |sl AS (SELECT query_id, cand_id, CAST(round(cos * 10000) AS BIGINT) AS rel_m
+         |       FROM (SELECT query_id, cand_id, cos,
+         |               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rn
+         |             FROM scored) WHERE rn <= 8),
+         |pr AS (SELECT a.query_id, a.cand_id AS pa, b.cand_id AS pb,
+         |         CAST(round(round(${dotSql("ea.embedding", "eb.embedding")}
+         |           / sqrt(ea.n2 * eb.n2), 4) * 10000) AS BIGINT) AS sim_m
+         |       FROM sl a JOIN sl b ON a.query_id = b.query_id AND a.cand_id <> b.cand_id
+         |       JOIN e ea ON ea.vec_id = a.cand_id JOIN e eb ON eb.vec_id = b.cand_id),
+         |r1 AS (SELECT query_id, cand_id, rel_m, CAST(1 AS BIGINT) AS rnk
+         |       FROM (SELECT query_id, cand_id, rel_m,
+         |               row_number() OVER (PARTITION BY query_id ORDER BY rel_m DESC, cand_id) AS rn
+         |             FROM sl) WHERE rn = 1),
+         |c2 AS (SELECT s.query_id, s.cand_id, s.rel_m, max(p.sim_m) AS msim
+         |       FROM sl s
+         |       JOIN pr p ON p.query_id = s.query_id AND p.pa = s.cand_id
+         |       JOIN r1 ON r1.query_id = p.query_id AND r1.cand_id = p.pb
+         |       WHERE NOT EXISTS (SELECT 1 FROM r1 x
+         |                         WHERE x.query_id = s.query_id AND x.cand_id = s.cand_id)
+         |       GROUP BY s.query_id, s.cand_id, s.rel_m),
+         |r2 AS (SELECT query_id, cand_id, rel_m, CAST(2 AS BIGINT) AS rnk
+         |       FROM (SELECT query_id, cand_id, rel_m,
+         |               row_number() OVER (PARTITION BY query_id
+         |                 ORDER BY 700 * rel_m - 300 * msim DESC, cand_id) AS rn
+         |             FROM c2) WHERE rn = 1),
+         |p2 AS (SELECT query_id, cand_id FROM r1 UNION ALL SELECT query_id, cand_id FROM r2),
+         |c3 AS (SELECT s.query_id, s.cand_id, s.rel_m, max(p.sim_m) AS msim
+         |       FROM sl s
+         |       JOIN pr p ON p.query_id = s.query_id AND p.pa = s.cand_id
+         |       JOIN p2 ON p2.query_id = p.query_id AND p2.cand_id = p.pb
+         |       WHERE NOT EXISTS (SELECT 1 FROM p2 x
+         |                         WHERE x.query_id = s.query_id AND x.cand_id = s.cand_id)
+         |       GROUP BY s.query_id, s.cand_id, s.rel_m),
+         |r3 AS (SELECT query_id, cand_id, rel_m, CAST(3 AS BIGINT) AS rnk
+         |       FROM (SELECT query_id, cand_id, rel_m,
+         |               row_number() OVER (PARTITION BY query_id
+         |                 ORDER BY 700 * rel_m - 300 * msim DESC, cand_id) AS rn
+         |             FROM c3) WHERE rn = 1)
+         |SELECT query_id, cand_id, rel_m, rnk FROM r1
+         |UNION ALL SELECT query_id, cand_id, rel_m, rnk FROM r2
+         |UNION ALL SELECT query_id, cand_id, rel_m, rnk FROM r3
+         |ORDER BY query_id, rnk""".stripMargin)),
 
     // Matryoshka serving: shortlist by cosine over the FIRST 16 dims
     // only (prefix scan, dot cost ∝ d), exact full-dim re-rank of the
     // 20-row shortlist.
-    "sim_ann_truncated" -> ((s, d) => {
+    Q("sim_ann_truncated", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.truncatedTopK(emb.filter(col("vec_id") < 10), emb, k = 5,
           dim = 16, shortlist = 20)
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"),
           col("cos"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      // Matryoshka serving replayed: 16-dim-prefix cosine shortlist
+      // (rounded, cand_id tie-break), exact 64-dim re-rank of the 20.
+      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
+         |q AS (SELECT vec_id AS query_id, embedding AS qv FROM e WHERE vec_id < 10),
+         |st AS (SELECT query_id, e.vec_id AS cand_id,
+         |         round(${dotSqlN("qv", "e.embedding", "16")}
+         |           / sqrt(${dotSqlN("qv", "qv", "16")}
+         |                  * ${dotSqlN("e.embedding", "e.embedding", "16")}), 4) AS cos_t
+         |       FROM q, e WHERE query_id <> e.vec_id),
+         |sl AS (SELECT query_id, cand_id FROM (
+         |         SELECT query_id, cand_id,
+         |           row_number() OVER (PARTITION BY query_id ORDER BY cos_t DESC, cand_id) AS srnk
+         |         FROM st) x WHERE srnk <= 20),
+         |rr AS (SELECT sl.query_id, sl.cand_id,
+         |         round(${dotSql("q.qv", "e.embedding")}
+         |           / sqrt(${dotSql("q.qv", "q.qv")}
+         |                  * ${dotSql("e.embedding", "e.embedding")}), 4) AS cos
+         |       FROM sl JOIN q USING (query_id) JOIN e ON e.vec_id = sl.cand_id),
+         |rk AS (SELECT query_id, cand_id, cos,
+         |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
+         |       FROM rr)
+         |SELECT query_id, cand_id, rnk, cos FROM rk WHERE rnk <= 5
+         |ORDER BY query_id, rnk""".stripMargin)),
 
     // The MRL quality curve: recall@5 of pure truncated-dim ranking
     // vs the full-dim truth, per (dim, query); dim=64 pins 1000.
-    "sim_dim_recall" -> ((s, d) => {
+    Q("sim_dim_recall", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.dimRecall(emb.filter(col("vec_id") < 10), emb, k = 5,
           dims = Seq(8, 16, 32, 64))
         .orderBy(col("trunc_dim"), col("query_id"))
-    }),
+    }), Some(
+      // MRL recall curve: per-(dim, query) overlap of truncated-prefix
+      // top-5 with the full-dim truth; the dim list unnests so all dims
+      // score in one scored frame, as the Spark side explodes.
+      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
+         |q AS (SELECT vec_id AS query_id, embedding AS qv FROM e WHERE vec_id < 10),
+         |truth AS (SELECT query_id, cand_id FROM (
+         |            SELECT query_id, e.vec_id AS cand_id,
+         |              row_number() OVER (PARTITION BY query_id ORDER BY
+         |                round(${dotSql("qv", "e.embedding")}
+         |                  / sqrt(${dotSql("qv", "qv")}
+         |                         * ${dotSql("e.embedding", "e.embedding")}), 4) DESC,
+         |                e.vec_id) AS rnk
+         |            FROM q, e WHERE query_id <> e.vec_id) t WHERE rnk <= 5),
+         |dims AS (SELECT unnest([8, 16, 32, 64]) AS td),
+         |st AS (SELECT td, query_id, e.vec_id AS cand_id,
+         |         round(${dotSqlN("qv", "e.embedding", "td")}
+         |           / sqrt(${dotSqlN("qv", "qv", "td")}
+         |                  * ${dotSqlN("e.embedding", "e.embedding", "td")}), 4) AS cos_t
+         |       FROM dims, q, e WHERE query_id <> e.vec_id),
+         |ak AS (SELECT td, query_id, cand_id FROM (
+         |         SELECT td, query_id, cand_id,
+         |           row_number() OVER (PARTITION BY td, query_id ORDER BY cos_t DESC, cand_id) AS rn
+         |         FROM st) y WHERE rn <= 5),
+         |h AS (SELECT ak.td, ak.query_id,
+         |        CAST(sum(CASE WHEN truth.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
+         |      FROM ak LEFT JOIN truth
+         |        ON ak.query_id = truth.query_id AND ak.cand_id = truth.cand_id
+         |      GROUP BY ak.td, ak.query_id)
+         |SELECT CAST(td AS BIGINT) AS trunc_dim, query_id, n_hits,
+         |       (n_hits * 1000) // 5 AS recall_permille
+         |FROM h ORDER BY trunc_dim, query_id""".stripMargin)),
 
     // Recall@k evaluation as an operator: the label-cell IVF's top-5
     // against the brute-force ground truth, per query — the ANN
     // quality gate a serving pipeline runs continuously.
-    "sim_eval_recall" -> ((s, d) => {
+    Q("sim_eval_recall", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val q = emb.filter(col("vec_id") < 10)
       Similarity.recallAtK(
           Similarity.ivfTopK(q, emb, k = 5, cellCol = "label"), q, emb, k = 5)
         .orderBy(col("query_id"))
-    }),
+    }), Some(
+      // Brute-force truth and label-IVF candidates replayed side by
+      // side, semi-joined per (query, cand) — queries the approx side
+      // missed still appear via the truth-side left join.
+      s"""WITH e AS (SELECT vec_id, label, embedding,
+         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
+         |q AS (SELECT vec_id AS query_id, label AS qlabel, embedding AS qv, n2 AS qn2
+         |      FROM e WHERE vec_id < 10),
+         |bs AS (SELECT query_id, e.vec_id AS cand_id,
+         |         round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
+         |       FROM q, e WHERE query_id <> e.vec_id),
+         |bt AS (SELECT query_id, cand_id FROM (
+         |         SELECT query_id, cand_id,
+         |           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
+         |         FROM bs) x WHERE rnk <= 5),
+         |ivs AS (SELECT query_id, e.vec_id AS cand_id,
+         |          round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
+         |        FROM q JOIN e ON qlabel = e.label AND query_id <> e.vec_id),
+         |ivt AS (SELECT query_id, cand_id FROM (
+         |          SELECT query_id, cand_id,
+         |            row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
+         |          FROM ivs) y WHERE rnk <= 5),
+         |h AS (SELECT bt.query_id, CAST(count(ivt.cand_id) AS BIGINT) AS n_hits
+         |      FROM bt LEFT JOIN ivt
+         |        ON bt.query_id = ivt.query_id AND bt.cand_id = ivt.cand_id
+         |      GROUP BY bt.query_id)
+         |SELECT query_id, n_hits, CAST(floor(n_hits * 1000 / 5) AS BIGINT) AS recall_permille
+         |FROM h ORDER BY query_id""".stripMargin)),
 
     // Hard-negative mining: top-k highest-cosine candidates with a
     // DIFFERENT label per query — the contrastive-training negatives
     // that actually carry gradient.
-    "sim_hard_negatives" -> ((s, d) => {
+    Q("sim_hard_negatives", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.hardNegatives(emb.filter(col("vec_id") < 10), emb, k = 5)
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"), col("cos"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      s"""WITH e AS (SELECT vec_id, label, embedding,
+         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
+         |q AS (SELECT vec_id AS query_id, label AS qlabel, embedding AS qv, n2 AS qn2
+         |      FROM e WHERE vec_id < 10),
+         |scored AS (SELECT query_id, e.vec_id AS cand_id,
+         |             round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
+         |           FROM q JOIN e ON qlabel <> e.label),
+         |ranked AS (SELECT query_id, cand_id, cos,
+         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
+         |           FROM scored)
+         |SELECT query_id, cand_id, rnk, cos FROM ranked WHERE rnk <= 5
+         |ORDER BY query_id, rnk""".stripMargin)),
 
     // ───────────────────────── LLM pipeline: text analysis ─────────────────────────
 
-    "text_tokens" -> ((s, d) =>
-      TextAnalysis.tokenCounts(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("text_tokens", ((s, d) =>
+      TextAnalysis.tokenCounts(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      s"""SELECT doc_id,
+         |       CAST(len($tokSql) AS BIGINT) AS n_ws_tokens,
+         |       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS n_re_tokens,
+         |       CAST(length(text) AS BIGINT) AS n_chars_measured,
+         |       n_chars AS n_chars_meta
+         |FROM documents ORDER BY doc_id""".stripMargin)),
 
-    "text_quality" -> ((s, d) =>
-      TextAnalysis.qualityScore(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("text_quality", ((s, d) =>
+      TextAnalysis.qualityScore(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      s"""WITH f AS (SELECT doc_id,
+         |    CAST(len($tokSql) AS BIGINT) AS n_tokens,
+         |    CAST(len(list_distinct($tokSql)) AS BIGINT) AS n_distinct,
+         |    CAST(len(list_filter(string_split(text, ' '),
+         |      x -> x = 'the' OR x = 'a' OR x = 'an' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in')) AS BIGINT) AS n_stop,
+         |    length(replace(text, ' ', '')) AS tok_chars
+         |  FROM documents)
+         |SELECT doc_id, n_tokens, n_distinct, n_stop,
+         |  CAST(floor(tok_chars * 1000 / n_tokens) AS BIGINT) AS mean_tok_len_permille,
+         |  CAST(floor(n_stop * 1000 / n_tokens) AS BIGINT) AS stop_permille,
+         |  CAST(floor(n_distinct * 1000 / n_tokens) AS BIGINT) AS distinct_permille,
+         |  CAST((CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 250 ELSE 0 END) +
+         |       (CASE WHEN floor(tok_chars * 1000 / n_tokens) BETWEEN 3000 AND 9000 THEN 250 ELSE 0 END) +
+         |       (CASE WHEN floor(n_stop * 1000 / n_tokens) BETWEEN 10 AND 400 THEN 250 ELSE 0 END) +
+         |       (CASE WHEN floor(n_distinct * 1000 / n_tokens) >= 300 THEN 250 ELSE 0 END) AS BIGINT) AS quality_score
+         |FROM f ORDER BY doc_id""".stripMargin)),
 
-    "text_langid" -> ((s, d) =>
-      TextAnalysis.langId(Tables.documents(s, d), profileSize = 20).orderBy(col("doc_id"))),
+    Q("text_langid", ((s, d) =>
+      TextAnalysis.langId(Tables.documents(s, d), profileSize = 20).orderBy(col("doc_id"))), Some(
+      s"""WITH tok AS (SELECT doc_id, lang, unnest($tokSql) AS t FROM documents),
+         |freq AS (SELECT lang, t, count(*) AS cnt FROM tok GROUP BY lang, t),
+         |prof AS (SELECT lang AS cand_lang, t FROM (
+         |    SELECT lang, t, row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, t) AS rn
+         |    FROM freq) x WHERE rn <= 20),
+         |hits AS (SELECT doc_id, cand_lang, count(*) AS hits
+         |         FROM (SELECT doc_id, t FROM tok) tk JOIN prof USING (t)
+         |         GROUP BY doc_id, cand_lang)
+         |SELECT doc_id, cand_lang AS pred_lang, hits FROM (
+         |  SELECT doc_id, cand_lang, hits,
+         |         row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, cand_lang) AS rn
+         |  FROM hits) y
+         |WHERE rn = 1 ORDER BY doc_id""".stripMargin)),
 
     // Span-level language segmentation: fixed token windows scored
     // against the trained profile, contiguous same-language windows
     // merged — the mixed-language-document splitter.
-    "text_lang_spans" -> ((s, d) =>
+    Q("text_lang_spans", ((s, d) =>
       TextAnalysis.langSpans(Tables.documents(s, d), profileSize = 20, windowTokens = 10)
-        .orderBy(col("doc_id"), col("win_start"))),
+        .orderBy(col("doc_id"), col("win_start"))), Some(
+      s"""WITH tok AS (SELECT doc_id, lang, unnest($tokSql) AS t FROM documents),
+         |freq AS (SELECT lang, t, count(*) AS cnt FROM tok GROUP BY lang, t),
+         |prof AS (SELECT lang AS cand_lang, t FROM (
+         |    SELECT lang, t, row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, t) AS rn
+         |    FROM freq) x WHERE rn <= 20),
+         |d2 AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |tp AS (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS pos FROM d2),
+         |tpx AS (SELECT doc_id, (pos - 1) // 10 AS win_idx,
+         |          tk[CAST(pos AS INTEGER)] AS t FROM tp),
+         |wins AS (SELECT DISTINCT doc_id, win_idx FROM tpx),
+         |whits AS (SELECT doc_id, win_idx, cand_lang, CAST(count(*) AS BIGINT) AS hits
+         |          FROM tpx JOIN prof USING (t) GROUP BY doc_id, win_idx, cand_lang),
+         |wpred AS (SELECT doc_id, win_idx, cand_lang FROM (
+         |    SELECT doc_id, win_idx, cand_lang,
+         |           row_number() OVER (PARTITION BY doc_id, win_idx
+         |                              ORDER BY hits DESC, cand_lang) AS rn
+         |    FROM whits) y WHERE rn = 1),
+         |lab AS (SELECT w.doc_id, w.win_idx, coalesce(p.cand_lang, 'und') AS span_lang
+         |        FROM wins w LEFT JOIN wpred p
+         |          ON p.doc_id = w.doc_id AND p.win_idx = w.win_idx),
+         |lgrp AS (SELECT doc_id, win_idx, span_lang,
+         |           win_idx - row_number() OVER (PARTITION BY doc_id, span_lang
+         |                                        ORDER BY win_idx) AS g
+         |         FROM lab)
+         |SELECT doc_id, span_lang, CAST(min(win_idx) AS BIGINT) AS win_start,
+         |       CAST(max(win_idx) AS BIGINT) AS win_end,
+         |       CAST(count(*) AS BIGINT) AS n_windows
+         |FROM lgrp GROUP BY doc_id, span_lang, g
+         |ORDER BY doc_id, win_start""".stripMargin)),
 
     // Classifier eval: langid predictions vs labeled language.
-    "text_langid_confusion" -> ((s, d) =>
+    Q("text_langid_confusion", ((s, d) =>
       TextAnalysis.langIdConfusion(Tables.documents(s, d), profileSize = 20)
-        .orderBy(col("lang"), col("pred_lang"))),
+        .orderBy(col("lang"), col("pred_lang"))), Some(
+      s"""WITH tok AS (SELECT doc_id, lang, unnest($tokSql) AS t FROM documents),
+         |freq AS (SELECT lang, t, count(*) AS cnt FROM tok GROUP BY lang, t),
+         |prof AS (SELECT lang AS cand_lang, t FROM (
+         |    SELECT lang, t, row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, t) AS rn
+         |    FROM freq) x WHERE rn <= 20),
+         |hits AS (SELECT doc_id, cand_lang, count(*) AS hits
+         |         FROM (SELECT doc_id, t FROM tok) tk JOIN prof USING (t)
+         |         GROUP BY doc_id, cand_lang),
+         |pred AS (SELECT doc_id, cand_lang AS pred_lang FROM (
+         |  SELECT doc_id, cand_lang,
+         |         row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, cand_lang) AS rn
+         |  FROM hits) y WHERE rn = 1)
+         |SELECT d.lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
+         |FROM pred JOIN documents d USING (doc_id)
+         |GROUP BY d.lang, pred_lang ORDER BY d.lang, pred_lang""".stripMargin)),
 
     // Gopher-style published quality rules, integer permille form.
-    "text_gopher_rules" -> ((s, d) =>
-      TextAnalysis.gopherRules(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("text_gopher_rules", ((s, d) =>
+      TextAnalysis.gopherRules(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      s"""WITH f AS (SELECT doc_id,
+         |    CAST(len($tokSql) AS BIGINT) AS n_words,
+         |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_alpha_chars,
+         |    CAST(len(regexp_extract_all(text, '#|[.][.][.]')) AS BIGINT) AS n_sym,
+         |    CAST(len(list_filter($tokSql,
+         |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
+         |    CAST(len(list_filter($tokSql,
+         |      w -> w IN ('the', 'a', 'an', 'of', 'to', 'and', 'in'))) AS BIGINT) AS n_stop
+         |  FROM documents),
+         |g AS (SELECT doc_id, n_words,
+         |    CASE WHEN n_words > 0 THEN (n_alpha_chars * 1000) // n_words
+         |         ELSE 0 END AS mean_word_len_permille,
+         |    CASE WHEN n_words > 0 THEN (n_sym * 1000) // n_words
+         |         ELSE 0 END AS symbol_permille,
+         |    CASE WHEN n_words > 0 THEN (n_alpha_words * 1000) // n_words
+         |         ELSE 0 END AS alpha_word_permille,
+         |    n_stop
+         |  FROM f)
+         |SELECT doc_id, n_words, mean_word_len_permille, symbol_permille,
+         |  alpha_word_permille, n_stop,
+         |  CAST(CASE WHEN n_words BETWEEN 50 AND 100000
+         |        AND mean_word_len_permille BETWEEN 3000 AND 10000
+         |        AND symbol_permille <= 100
+         |        AND alpha_word_permille >= 800
+         |        AND n_stop >= 2 THEN 1 ELSE 0 END AS BIGINT) AS keep
+         |FROM g ORDER BY doc_id""".stripMargin)),
 
     // Operating-point sweep: confusion counts + precision/recall of
     // the composite quality score at each threshold, judged against
     // the Gopher keep decision — the cutoff-picking table, one pass.
-    "text_quality_sweep" -> ((s, d) =>
+    Q("text_quality_sweep", ((s, d) =>
       TextAnalysis.qualityThresholdSweep(Tables.documents(s, d))
-        .orderBy(col("threshold"))),
+        .orderBy(col("threshold"))), Some(
+      s"""WITH q AS (SELECT doc_id,
+         |    CAST(len($tokSql) AS BIGINT) AS n_tokens,
+         |    CAST(len(list_distinct($tokSql)) AS BIGINT) AS n_distinct,
+         |    CAST(len(list_filter(string_split(text, ' '),
+         |      x -> x = 'the' OR x = 'a' OR x = 'an' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in')) AS BIGINT) AS n_stop,
+         |    length(replace(text, ' ', '')) AS tok_chars
+         |  FROM documents),
+         |qs AS (SELECT doc_id,
+         |  CAST((CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 250 ELSE 0 END) +
+         |       (CASE WHEN floor(tok_chars * 1000 / n_tokens) BETWEEN 3000 AND 9000 THEN 250 ELSE 0 END) +
+         |       (CASE WHEN floor(n_stop * 1000 / n_tokens) BETWEEN 10 AND 400 THEN 250 ELSE 0 END) +
+         |       (CASE WHEN floor(n_distinct * 1000 / n_tokens) >= 300 THEN 250 ELSE 0 END) AS BIGINT) AS quality_score
+         |  FROM q),
+         |gf AS (SELECT doc_id,
+         |    CAST(len($tokSql) AS BIGINT) AS n_words,
+         |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_alpha_chars,
+         |    CAST(len(regexp_extract_all(text, '#|[.][.][.]')) AS BIGINT) AS n_sym,
+         |    CAST(len(list_filter($tokSql,
+         |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
+         |    CAST(len(list_filter($tokSql,
+         |      w -> w IN ('the', 'a', 'an', 'of', 'to', 'and', 'in'))) AS BIGINT) AS n_stop
+         |  FROM documents),
+         |gk AS (SELECT doc_id,
+         |  CAST(CASE WHEN n_words BETWEEN 50 AND 100000
+         |        AND (CASE WHEN n_words > 0 THEN (n_alpha_chars * 1000) // n_words ELSE 0 END) BETWEEN 3000 AND 10000
+         |        AND (CASE WHEN n_words > 0 THEN (n_sym * 1000) // n_words ELSE 0 END) <= 100
+         |        AND (CASE WHEN n_words > 0 THEN (n_alpha_words * 1000) // n_words ELSE 0 END) >= 800
+         |        AND n_stop >= 2 THEN 1 ELSE 0 END AS BIGINT) AS keep
+         |  FROM gf),
+         |j AS (SELECT qs.quality_score, gk.keep
+         |      FROM qs JOIN gk ON qs.doc_id = gk.doc_id),
+         |th AS (SELECT unnest([250, 500, 750, 1000]) AS threshold),
+         |c AS (SELECT CAST(th.threshold AS BIGINT) AS threshold,
+         |        CAST(sum(CASE WHEN quality_score >= th.threshold AND keep = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
+         |        CAST(sum(CASE WHEN quality_score >= th.threshold AND keep = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
+         |        CAST(sum(CASE WHEN quality_score <  th.threshold AND keep = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
+         |        CAST(sum(CASE WHEN quality_score <  th.threshold AND keep = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
+         |      FROM j CROSS JOIN th GROUP BY th.threshold)
+         |SELECT threshold, tp, fp, fn, tn,
+         |  CAST(CASE WHEN tp + fp > 0 THEN (tp * 1000) // (tp + fp) ELSE 0 END AS BIGINT) AS precision_permille,
+         |  CAST(CASE WHEN tp + fn > 0 THEN (tp * 1000) // (tp + fn) ELSE 0 END AS BIGINT) AS recall_permille
+         |FROM c ORDER BY threshold""".stripMargin)),
 
-    "text_fingerprint" -> ((s, d) =>
-      TextAnalysis.fingerprint(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("text_fingerprint", ((s, d) =>
+      TextAnalysis.fingerprint(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      s"""WITH d AS (SELECT doc_id, list_sort(list_distinct($tokSql)) AS ts FROM documents)
+         |SELECT doc_id, md5(array_to_string(ts, ' ')) AS fp,
+         |       ts[1] AS tok_min, ts[-1] AS tok_max,
+         |       CAST(len(ts) AS BIGINT) AS n_distinct
+         |FROM d ORDER BY doc_id""".stripMargin)),
 
     // MOSS winnowing: per-doc distinct window-min 32-bit gram hashes
     // (k=5 char grams, w=4 windows) — count, extremes, exact sum.
-    "text_winnow" -> ((s, d) =>
+    Q("text_winnow", ((s, d) =>
       TextAnalysis.winnowStats(Tables.documents(s, d), k = 5, w = 4)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // Winnowing (k=5, w=4): char-5-gram 32-bit md5 hashes, window-of-4
+      // minima, distinct selected values — the selected VALUE set is
+      // tie-break-independent, so list_min per window replays the
+      // native deque exactly.
+      s"""WITH $winnowSelCtes
+         |SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams,
+         |       CAST(len(sl) AS BIGINT) AS n_selected,
+         |       sl[1] AS min_fp, sl[-1] AS max_fp,
+         |       CAST(list_sum(sl) AS BIGINT) AS sum_fp
+         |FROM sel ORDER BY doc_id""".stripMargin)),
 
     // Flesch–Kincaid grade (integer millis): vowel-group syllables,
     // terminal-punctuation sentences floored at 1.
-    "text_readability" -> ((s, d) =>
-      TextAnalysis.readability(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("text_readability", ((s, d) =>
+      TextAnalysis.readability(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      // FK grade replayed: same char-class regexes, same floor chain.
+      s"""WITH f AS (SELECT doc_id,
+         |    CAST(len($tokSql) AS BIGINT) AS n_words,
+         |    greatest(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT),
+         |             CAST(1 AS BIGINT)) AS n_sentences,
+         |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
+         |      AS n_syllables
+         |  FROM documents)
+         |SELECT doc_id, n_words, n_sentences, n_syllables,
+         |       (390 * n_words) // n_sentences
+         |         + (11800 * n_syllables) // n_words - 15590 AS fk_milli
+         |FROM f WHERE n_words > 0 ORDER BY doc_id""".stripMargin)),
 
     // Lexical diversity: type–token ratio + Shannon word entropy per
     // doc — the repetition-vs-prose quality axis. Fully narrow (no
     // shuffle); the entropy fold runs over the sorted count multiset
     // so the one float is bit-reproducible cross-engine.
-    "text_entropy" -> ((s, d) =>
-      TextAnalysis.lexicalStats(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("text_entropy", ((s, d) =>
+      TextAnalysis.lexicalStats(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      // Twin of TextAnalysis.lexicalStats: the Σ c·ln c fold runs over
+      // the SORTED count multiset via transform-then-reduce with a 0.0
+      // seed — the identical float-op sequence as Spark's aggregate().
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |c AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
+         |        CAST(len(list_distinct(tk)) AS BIGINT) AS n_types,
+         |        list_sort(list_transform(list_distinct(tk),
+         |          u -> CAST(len(list_filter(tk, x -> x = u)) AS DOUBLE))) AS cnts
+         |      FROM t WHERE len(tk) > 0)
+         |SELECT doc_id, n_tokens, n_types,
+         |       n_types * 1000 // n_tokens AS ttr_permille,
+         |       round(ln(CAST(n_tokens AS DOUBLE)) -
+         |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |           list_transform(cnts, y -> y * ln(y))), (a,b) -> a + b) / n_tokens,
+         |         4) AS entropy_q4
+         |FROM c ORDER BY doc_id""".stripMargin)),
 
     // Self-trained add-one bigram LM scored back over the corpus:
     // per-doc mean negative log-prob + perplexity (the KenLM-style
     // fluency-filter slot of CCNet/Gopher pipelines).
-    "text_perplexity" -> ((s, d) =>
-      TextAnalysis.bigramPerplexity(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("text_perplexity", ((s, d) =>
+      TextAnalysis.bigramPerplexity(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      // Twin of TextAnalysis.bigramPerplexity: same add-one bigram LM
+      // (V from its own unigram CTE = Spark's inlined literal), per-doc
+      // fold over struct-sorted (c12, c1) pairs, ln over integer
+      // arguments only.
+      s"""WITH $pplCtes
+         |SELECT doc_id, n_bigrams, round(nll, 4) AS nll_q4,
+         |       round(exp(nll), 4) AS ppl_q4
+         |FROM s ORDER BY doc_id""".stripMargin)),
 
     // Interpolated Kneser–Ney bigram LM (absolute discount 3/4, the
     // real-LM smoothing family) scored back over the corpus:
     // continuation-probability backoff instead of add-one, exact
     // integer ln arguments cross-engine.
-    "text_kn_perplexity" -> ((s, d) =>
-      TextAnalysis.knPerplexity(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("text_kn_perplexity", ((s, d) =>
+      TextAnalysis.knPerplexity(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      // Kneser–Ney with D = 3/4: every transition's log-prob decomposes
+      // as ln(4·c1·B) − ln((4·c12 − 3)·B + 3·n1f·n1p) — integer ln
+      // arguments, same fold order as the Spark aggregate.
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
+         |         i -> tk[i] || ' ' || tk[i+1])) AS b
+         |       FROM t WHERE len(tk) >= 2),
+         |c AS (SELECT b, CAST(count(*) AS BIGINT) AS c12 FROM bg GROUP BY b),
+         |cx AS (SELECT string_split(b, ' ')[1] AS w1,
+         |         CAST(sum(c12) AS BIGINT) AS c1, CAST(count(*) AS BIGINT) AS n1f
+         |       FROM c GROUP BY 1),
+         |ct AS (SELECT string_split(b, ' ')[2] AS w2,
+         |         CAST(count(*) AS BIGINT) AS n1p
+         |       FROM c GROUP BY 1),
+         |bt AS (SELECT CAST(count(*) AS BIGINT) AS bt FROM c),
+         |j AS (SELECT bg.doc_id, c.c12, cx.c1, cx.n1f, ct.n1p, bt.bt
+         |      FROM bg JOIN c USING (b)
+         |        JOIN cx ON cx.w1 = string_split(bg.b, ' ')[1]
+         |        JOIN ct ON ct.w2 = string_split(bg.b, ' ')[2], bt),
+         |g AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, max(bt) AS bt,
+         |        list_sort(list({'c12': c12, 'c1': c1, 'n1f': n1f, 'n1p': n1p})) AS ps
+         |      FROM j GROUP BY doc_id),
+         |s AS (SELECT doc_id, n_bigrams,
+         |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(ps,
+         |          p -> ln(CAST(p.c1 * 4 * bt AS DOUBLE)) -
+         |               ln(CAST((p.c12 * 4 - 3) * bt + 3 * p.n1f * p.n1p AS DOUBLE)))),
+         |          (a,b) -> a + b) / n_bigrams AS nll
+         |      FROM g)
+         |SELECT doc_id, n_bigrams, round(nll, 4) AS kn_nll_q4,
+         |       round(exp(nll), 4) AS kn_ppl_q4
+         |FROM s ORDER BY doc_id""".stripMargin)),
 
     // Per-source Zipf rank-frequency fit: OLS slope of ln(count) vs
     // ln(rank) on q4-quantized integer lns, exact sufficient stats —
     // natural prose ≈ −1; template farms flat, key-smash steep.
-    "text_zipf_fit" -> ((s, d) =>
-      TextAnalysis.zipfFit(Tables.documents(s, d)).orderBy(col("source"))),
+    Q("text_zipf_fit", ((s, d) =>
+      TextAnalysis.zipfFit(Tables.documents(s, d)).orderBy(col("source"))), Some(
+      // Zipf replayed: per-source counts, rank window, quantized lns,
+      // integer sufficient statistics, one closed-form division
+      s"""WITH tok AS (SELECT source, unnest($tokSql) AS w FROM documents),
+         |c AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c
+         |      FROM tok GROUP BY source, w),
+         |r AS (SELECT source, c,
+         |        CAST(row_number() OVER (PARTITION BY source
+         |          ORDER BY c DESC, w) AS BIGINT) AS r
+         |      FROM c),
+         |q AS (SELECT source,
+         |        CAST(floor(ln(CAST(r AS DOUBLE)) * 10000) AS BIGINT) AS x,
+         |        CAST(floor(ln(CAST(c AS DOUBLE)) * 10000) AS BIGINT) AS y
+         |      FROM r),
+         |s AS (SELECT source, CAST(count(*) AS BIGINT) AS n_types,
+         |        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
+         |        CAST(sum(x * y) AS BIGINT) AS sxy,
+         |        CAST(sum(x * x) AS BIGINT) AS sxx
+         |      FROM q GROUP BY source),
+         |f AS (SELECT source, n_types, sx, sy,
+         |        n_types * sxy - sx * sy AS num,
+         |        n_types * sxx - sx * sx AS den
+         |      FROM s)
+         |SELECT source, n_types,
+         |       round(CAST(num AS DOUBLE) / den, 4) AS slope_q4,
+         |       round((sy - CAST(num AS DOUBLE) / den * sx) / n_types / 10000, 4) AS intercept_q4
+         |FROM f WHERE den <> 0 ORDER BY source""".stripMargin)),
 
     // Top-25 collocations by PMI (Church & Hanks): exact-integer
     // ratio ranking, integer-ln reported values, count floor 5 —
     // the multi-word-unit miner for tokenizer vocabularies.
-    "text_pmi" -> ((s, d) =>
+    Q("text_pmi", ((s, d) =>
       TextAnalysis.pmiTop(Tables.documents(s, d), k = 25, minCount = 5)
-        .orderBy(col("ratio_micro").desc, col("w1"), col("w2"))),
+        .orderBy(col("ratio_micro").desc, col("w1"), col("w2"))), Some(
+      // PMI replayed: bigram/unigram counts, exact ratio ranking
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |bg AS (SELECT unnest(list_transform(range(1, len(tk)),
+         |         i -> tk[i] || ' ' || tk[i+1])) AS b
+         |       FROM t WHERE len(tk) >= 2),
+         |c AS (SELECT b, CAST(count(*) AS BIGINT) AS cab FROM bg
+         |      GROUP BY b HAVING count(*) >= 5),
+         |u AS (SELECT w, CAST(count(*) AS BIGINT) AS c1
+         |      FROM (SELECT unnest(tk) AS w FROM t) x GROUP BY w),
+         |nn AS (SELECT CAST(coalesce(sum(c1), 0) AS BIGINT) AS n FROM u),
+         |sc AS (SELECT string_split(c.b, ' ')[1] AS w1,
+         |         string_split(c.b, ' ')[2] AS w2, c.cab,
+         |         (c.cab * nn.n * 1000000) // (a.c1 * b2.c1) AS ratio_micro,
+         |         round(ln(CAST(c.cab * nn.n AS DOUBLE)) -
+         |               ln(CAST(a.c1 * b2.c1 AS DOUBLE)), 4) AS pmi_q4
+         |       FROM c JOIN u a ON a.w = string_split(c.b, ' ')[1]
+         |              JOIN u b2 ON b2.w = string_split(c.b, ' ')[2], nn)
+         |SELECT w1, w2, cab, ratio_micro, pmi_q4 FROM sc
+         |ORDER BY ratio_micro DESC, w1, w2 LIMIT 25""".stripMargin)),
 
     // Stupid Backoff trigram scoring on a held-out split (train on
     // even doc_ids, score odd): the web-scale LM scorer — MLE ratios
     // with a 0.4 = 2/5 backoff factor so every ln argument stays an
     // exact integer. Per-doc backoff-tier histogram + mean -ln score.
-    "text_stupid_backoff" -> ((s, d) =>
-      TextAnalysis.stupidBackoff(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("text_stupid_backoff", ((s, d) =>
+      TextAnalysis.stupidBackoff(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      // Stupid Backoff replayed: even-id count tables, odd-id trigram
+      // stream, four LEFT joins, tier CASE with (ln 5 − ln 2) backoff
+      // penalties — integer ln arguments throughout, same fold order.
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |tr AS (SELECT doc_id, tk FROM t WHERE doc_id % 2 = 0),
+         |sc AS (SELECT doc_id, tk FROM t WHERE doc_id % 2 = 1),
+         |t3 AS (SELECT g3, CAST(count(*) AS BIGINT) AS c123 FROM (
+         |        SELECT unnest(list_transform(range(1, len(tk) - 1),
+         |          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g3
+         |        FROM tr WHERE len(tk) >= 3) x GROUP BY g3),
+         |t2 AS (SELECT g2, CAST(count(*) AS BIGINT) AS c2g FROM (
+         |        SELECT unnest(list_transform(range(1, len(tk)),
+         |          i -> tk[i] || ' ' || tk[i+1])) AS g2
+         |        FROM tr WHERE len(tk) >= 2) x GROUP BY g2),
+         |t1 AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM (
+         |        SELECT unnest(tk) AS w FROM tr) x GROUP BY w),
+         |nn AS (SELECT CAST(sum(c1) AS BIGINT) AS n FROM t1),
+         |tg AS (SELECT doc_id, g AS tgm, string_split(g, ' ') AS ws FROM (
+         |        SELECT doc_id, unnest(list_transform(range(1, len(tk) - 1),
+         |          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
+         |        FROM sc WHERE len(tk) >= 3) x),
+         |j AS (SELECT tg.doc_id,
+         |        CAST(coalesce(t3.c123, -1) AS BIGINT) AS c123,
+         |        CAST(coalesce(p12.c2g, -1) AS BIGINT) AS c12,
+         |        CAST(coalesce(p23.c2g, -1) AS BIGINT) AS c23,
+         |        CAST(coalesce(u2.c1, -1) AS BIGINT) AS c2,
+         |        CAST(coalesce(u3.c1, -1) AS BIGINT) AS c3,
+         |        nn.n
+         |      FROM tg
+         |      LEFT JOIN t3 ON t3.g3 = tg.tgm
+         |      LEFT JOIN t2 p12 ON p12.g2 = ws[1] || ' ' || ws[2]
+         |      LEFT JOIN t2 p23 ON p23.g2 = ws[2] || ' ' || ws[3]
+         |      LEFT JOIN t1 u2 ON u2.w = ws[2]
+         |      LEFT JOIN t1 u3 ON u3.w = ws[3], nn),
+         |g AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
+         |        CAST(sum(CASE WHEN c123 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_tri_hit,
+         |        CAST(sum(CASE WHEN c123 <= 0 AND c23 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_bi_hit,
+         |        CAST(sum(CASE WHEN c123 <= 0 AND c23 <= 0 AND c3 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_uni_hit,
+         |        CAST(sum(CASE WHEN c3 <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
+         |        max(n) AS n,
+         |        list_sort(list({'c123': c123, 'c12': c12, 'c23': c23,
+         |                        'c2': c2, 'c3': c3})) AS ps
+         |      FROM j GROUP BY doc_id),
+         |s AS (SELECT doc_id, n_trigrams, n_tri_hit, n_bi_hit, n_uni_hit, n_oov,
+         |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(ps,
+         |          p -> CASE
+         |            WHEN p.c123 > 0 THEN ln(CAST(p.c12 AS DOUBLE)) - ln(CAST(p.c123 AS DOUBLE))
+         |            WHEN p.c23 > 0 THEN (ln(5.0) - ln(2.0)) +
+         |              (ln(CAST(p.c2 AS DOUBLE)) - ln(CAST(p.c23 AS DOUBLE)))
+         |            WHEN p.c3 > 0 THEN (ln(5.0) - ln(2.0)) * 2.0 +
+         |              (ln(CAST(n AS DOUBLE)) - ln(CAST(p.c3 AS DOUBLE)))
+         |            ELSE (ln(5.0) - ln(2.0)) * 3.0 + ln(CAST(n AS DOUBLE)) END)),
+         |          (a,b) -> a + b) / n_trigrams AS nll
+         |      FROM g)
+         |SELECT doc_id, n_trigrams, n_tri_hit, n_bi_hit, n_uni_hit, n_oov,
+         |       round(nll, 4) AS sb_nll_q4, round(exp(nll), 4) AS sb_ppl_q4
+         |FROM s ORDER BY doc_id""".stripMargin)),
 
     // CCNet-style per-source perplexity banding: head/middle/tail by
     // equal population within each source, tail marked for drop — the
     // fluency filter with per-stratum calibration.
-    "text_perplexity_buckets" -> ((s, d) =>
+    Q("text_perplexity_buckets", ((s, d) =>
       TextAnalysis.perplexityBuckets(Tables.documents(s, d))
         .select(col("doc_id"), col("source"), col("ppl_q4"),
           col("bucket"), col("keep"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      s"""WITH $pplCtes,
+         |pp AS (SELECT doc_id, round(exp(nll), 4) AS ppl_q4 FROM s),
+         |sb AS (SELECT d.doc_id, d.source, pp.ppl_q4,
+         |         CAST(ntile(3) OVER (PARTITION BY d.source
+         |           ORDER BY pp.ppl_q4, d.doc_id) AS BIGINT) AS bucket
+         |       FROM pp JOIN documents d USING (doc_id))
+         |SELECT doc_id, source, ppl_q4, bucket, bucket < 3 AS keep
+         |FROM sb ORDER BY doc_id""".stripMargin)),
 
     // Bigram LM-ish fluency: mean corpus frequency of each doc's word
     // bigrams, exact integer arithmetic.
-    "text_bigram_lm" -> ((s, d) =>
-      TextAnalysis.bigramFluency(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("text_bigram_lm", ((s, d) =>
+      TextAnalysis.bigramFluency(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
+         |                                            i -> tk[i] || ' ' || tk[i+1])) AS b
+         |       FROM t WHERE len(tk) >= 2),
+         |c AS (SELECT b, CAST(count(*) AS BIGINT) AS cnt FROM bg GROUP BY b),
+         |s AS (SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
+         |        sum(c.cnt) AS sc
+         |      FROM bg JOIN c USING (b) GROUP BY bg.doc_id)
+         |SELECT doc_id, n_bigrams, CAST(sc // n_bigrams AS BIGINT) AS mean_freq
+         |FROM s ORDER BY doc_id""".stripMargin)),
 
     // Corpus-scope duplicated-trigram share per doc (RefinedWeb-style
     // staleness): grams first seen in an earlier doc, permille-exact.
-    "text_ngram_novelty" -> ((s, d) =>
+    Q("text_ngram_novelty", ((s, d) =>
       TextAnalysis.ngramNovelty(Tables.documents(s, d), k = 3)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // Same trigram construction as the minhash chain; DISTINCT grams
+      // per doc, min-id first owner, staleness = grams owned earlier.
+      s"""WITH toks AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |shg AS (SELECT DISTINCT doc_id, g FROM (
+         |          SELECT doc_id, unnest(list_transform(range(1, len(tk) - 1),
+         |            i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
+         |          FROM toks WHERE len(tk) >= 3) s),
+         |own AS (SELECT g, min(doc_id) AS owner FROM shg GROUP BY g),
+         |per AS (SELECT shg.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
+         |          CAST(sum(CASE WHEN own.owner < shg.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_stale
+         |        FROM shg JOIN own USING (g) GROUP BY shg.doc_id)
+         |SELECT doc_id, n_grams, n_stale,
+         |       CAST(floor(n_stale * 1000 / n_grams) AS BIGINT) AS stale_permille
+         |FROM per ORDER BY doc_id""".stripMargin)),
 
     // Vocabulary-coverage check: per-doc OOV share vs the corpus's own
     // top-20 token vocab.
-    "text_oov" -> ((s, d) =>
+    Q("text_oov", ((s, d) =>
       TextAnalysis.oovRate(Tables.documents(s, d), vocabSize = 20)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      s"""WITH tok AS (SELECT doc_id, unnest($tokSql) AS t FROM documents),
+         |c AS (SELECT t, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY t),
+         |v AS (SELECT t FROM c ORDER BY cnt DESC, t LIMIT 20),
+         |s AS (SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
+         |        CAST(sum(CASE WHEN v.t IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
+         |      FROM tok LEFT JOIN v ON tok.t = v.t GROUP BY tok.doc_id)
+         |SELECT doc_id, n_tokens, n_oov,
+         |       CAST(n_oov * 1000 // n_tokens AS BIGINT) AS oov_permille
+         |FROM s ORDER BY doc_id""".stripMargin)),
 
     // Per-source corpus health: doc counts, token mass, exact-dup docs.
-    "corpus_source_stats" -> ((s, d) => {
+    Q("corpus_source_stats", ((s, d) => {
       val docs = Tables.documents(s, d)
       docs.groupBy(col("source"))
         .agg(count(lit(1)).as("n_docs"),
           sum(size(Dedup.tokens(col("text"))).cast("long")).as("n_tokens"),
           (count(lit(1)) - countDistinct(md5(col("text").cast("binary")))).as("n_dup_docs"))
         .orderBy(col("source"))
-    }),
+    }), Some(
+      s"""SELECT source, count(*) AS n_docs,
+         |       CAST(sum(len($tokSql)) AS BIGINT) AS n_tokens,
+         |       CAST(count(*) - count(DISTINCT md5(text)) AS BIGINT) AS n_dup_docs
+         |FROM documents GROUP BY source ORDER BY source""".stripMargin)),
 
     // ───────────────────────── LLM pipeline: multimodal ─────────────────────────
 
-    "mm_blob_meta" -> ((s, d) => {
+    Q("mm_blob_meta", ((s, d) => {
       Multimodal.asBlob(Tables.documents(s, d))
         .select(col("doc_id"), col("n_bytes"), col("digest"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      """SELECT doc_id, CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
+        |       md5(text) AS digest
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
-    "mm_frames" -> ((s, d) => {
+    Q("mm_frames", ((s, d) => {
       Multimodal.frames(Tables.documents(s, d), frameSize = 32, maxFrames = 4)
         .orderBy(col("doc_id"), col("frame_idx"))
-    }),
+    }), Some(
+      """SELECT doc_id, i AS frame_idx, md5(substr(text, CAST(i * 32 + 1 AS INTEGER), 32)) AS frame_md5
+        |FROM documents, range(0, 4) t(i)
+        |WHERE i * 32 < length(text)
+        |ORDER BY doc_id, frame_idx""".stripMargin)),
 
-    "mm_scene_changes" -> ((s, d) => {
+    Q("mm_scene_changes", ((s, d) => {
       Multimodal.sceneChanges(
         Multimodal.frames(Tables.documents(s, d), frameSize = 32, maxFrames = 4))
         .select(col("doc_id"), col("frame_idx"), col("is_cut"), col("scene_id"))
         .orderBy(col("doc_id"), col("frame_idx"))
-    }),
+    }), Some(
+      """WITH f AS (
+        |  SELECT doc_id, i AS frame_idx,
+        |         md5(substr(text, CAST(i * 32 + 1 AS INTEGER), 32)) AS frame_md5
+        |  FROM documents, range(0, 4) t(i)
+        |  WHERE i * 32 < length(text)),
+        |c AS (
+        |  SELECT doc_id, frame_idx, frame_md5,
+        |         CAST(CASE WHEN lag(frame_md5) OVER w IS NULL
+        |              OR lag(frame_md5) OVER w <> frame_md5 THEN 1 ELSE 0 END AS BIGINT) AS is_cut
+        |  FROM f WINDOW w AS (PARTITION BY doc_id ORDER BY frame_idx))
+        |SELECT doc_id, frame_idx, is_cut,
+        |       CAST(sum(is_cut) OVER (PARTITION BY doc_id ORDER BY frame_idx
+        |                              ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS scene_id
+        |FROM c ORDER BY doc_id, frame_idx""".stripMargin)),
 
     // Byte-histogram featurization (the deterministic stand-in for an
     // embedding extractor): spot-check three of the 16 buckets as
     // scalars. doc_id < 200 keeps the DuckDB side (per-byte list scan)
     // cheap; the Spark side is a single mapPartitions pass either way.
-    "mm_featurize" -> ((s, d) => {
+    Q("mm_featurize", ((s, d) => {
       val blobs = Multimodal.asBlob(
         Tables.documents(s, d).filter(col("doc_id") < 200 && length(col("text")) > 0))
       Multimodal.featurize(blobs)
         .select(col("doc_id") +:
           Seq(0, 7, 15).map(i => element_at(col("features"), i + 1).as(s"f$i")): _*)
         .orderBy(col("doc_id"))
+    }), Some {
+      // Byte-histogram buckets = high nibble of each UTF-8 byte. DuckDB:
+      // hex() the blob (uppercase), bucket b's count = occurrences of hex
+      // digit b at ODD positions (2i-1 = byte i's high nibble). Exact-int
+      // count / exact-int length → bit-identical double division.
+      val buckets = Seq(0, 7, 15).map { b =>
+        val digit = "0123456789ABCDEF".charAt(b)
+        s"""       CAST(len(list_filter(range(1, n + 1), i -> substr(hx, 2*i - 1, 1) = '$digit')) AS DOUBLE) / n AS f$b"""
+      }.mkString(",\n")
+      s"""WITH h AS (SELECT doc_id, hex(CAST(text AS BLOB)) AS hx,
+         |             octet_length(CAST(text AS BLOB)) AS n
+         |           FROM documents WHERE doc_id < 200 AND length(text) > 0)
+         |SELECT doc_id,
+         |$buckets
+         |FROM h ORDER BY doc_id""".stripMargin
     }),
 
     // Real header decode round-trip: synthetic BMP/WAV/PNG/JPEG blobs
@@ -1080,7 +2429,7 @@ object SparkEntry {
     // parser (JPEG = SOI marker walk to SOF0). The oracle recomputes
     // the encoded values analytically — a hash-match proves
     // parseHeader read the right offsets back.
-    "mm_decode_headers" -> ((s, d) => {
+    Q("mm_decode_headers", ((s, d) => {
       Multimodal.decodeHeaders(Multimodal.syntheticBlobs(Tables.documents(s, d)))
         .select(col("doc_id"), col("format"),
           col("width").cast("long").as("width"),
@@ -1090,7 +2439,37 @@ object SparkEntry {
           col("bits_per_sample").cast("long").as("bits_per_sample"),
           col("n_bytes"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // The oracle recomputes the synthetic-blob generator's formulas
+      // analytically — a hash match proves the decoder read the actual
+      // header bytes (bmp: even ids; wav: id%4==1; png: id%8==3 with
+      // color type cycling grey/RGB/RGBA → channels 1/3/4; jpeg:
+      // id%8==7 with components cycling grey/YCbCr → channels 1/3,
+      // n_bytes 32+3·ch).
+      """SELECT doc_id,
+        |       CASE WHEN doc_id % 2 = 0 THEN 'bmp'
+        |            WHEN doc_id % 4 = 1 THEN 'wav'
+        |            WHEN doc_id % 8 = 3 THEN 'png' ELSE 'jpeg' END AS format,
+        |       CASE WHEN doc_id % 2 = 0 THEN CAST(1 + doc_id % 64 AS BIGINT)
+        |            WHEN doc_id % 8 = 3 THEN CAST(1 + doc_id % 128 AS BIGINT)
+        |            WHEN doc_id % 8 = 7 THEN CAST(1 + doc_id % 96 AS BIGINT) END AS width,
+        |       CASE WHEN doc_id % 2 = 0 THEN CAST(1 + doc_id % 32 AS BIGINT)
+        |            WHEN doc_id % 8 = 3 THEN CAST(1 + doc_id % 64 AS BIGINT)
+        |            WHEN doc_id % 8 = 7 THEN CAST(1 + doc_id % 48 AS BIGINT) END AS height,
+        |       CASE WHEN doc_id % 2 = 0 THEN CAST(3 AS BIGINT)
+        |            WHEN doc_id % 4 = 1 THEN CAST(1 + (doc_id // 2) % 2 AS BIGINT)
+        |            WHEN doc_id % 8 = 3 THEN CAST(CASE (doc_id // 4) % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END AS BIGINT)
+        |            ELSE CAST(CASE (doc_id // 8) % 2 WHEN 0 THEN 1 ELSE 3 END AS BIGINT)
+        |       END AS channels,
+        |       CASE WHEN doc_id % 4 = 1 THEN CAST(8000 + (doc_id % 8) * 1000 AS BIGINT) END AS sample_rate,
+        |       CASE WHEN doc_id % 4 = 1 THEN CAST(16 AS BIGINT)
+        |            WHEN doc_id % 4 = 3 THEN CAST(8 AS BIGINT) END AS bits_per_sample,
+        |       CASE WHEN doc_id % 2 = 0 THEN CAST(54 AS BIGINT)
+        |            WHEN doc_id % 4 = 1 THEN CAST(44 AS BIGINT)
+        |            WHEN doc_id % 8 = 3 THEN CAST(33 AS BIGINT)
+        |            ELSE CAST(32 + 3 * (CASE (doc_id // 8) % 2 WHEN 0 THEN 1 ELSE 3 END) AS BIGINT)
+        |       END AS n_bytes
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // REAL pixel decode: complete uncompressed BMPs (24 bpp even ids /
     // 32 bpp odd, 4-byte-padded strides, pixel bytes arithmetic in
@@ -1098,7 +2477,7 @@ object SparkEntry {
     // The oracle re-enumerates the same pixel grid in SQL — a
     // hash-match proves the decoder walked the right strides, skipped
     // the padding, and read BGR(A) channel order.
-    "mm_decode_pixels" -> ((s, d) => {
+    Q("mm_decode_pixels", ((s, d) => {
       Multimodal.decodePixels(Multimodal.syntheticPixelBlobs(Tables.documents(s, d)))
         .select(col("doc_id"),
           col("width").cast("long").as("width"),
@@ -1106,7 +2485,27 @@ object SparkEntry {
           col("channels").cast("long").as("channels"),
           col("n_pixels"), col("sum_b"), col("sum_g"), col("sum_r"), col("sum_a"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Re-enumerates the generator's pixel grid: dims from doc_id
+      // parity, x over [0, w), file row r over [0, h), channel bytes
+      // B=(id+2x+3r)%256 G=(id+5x+r)%256 R=(id+x+7r)%256 A=(id+x+r)%256
+      // (A only at 32 bpp / odd ids).
+      """WITH d AS (SELECT doc_id,
+        |    CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 16 ELSE 1 + doc_id % 12 END AS w,
+        |    CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 8 ELSE 1 + doc_id % 6 END AS h,
+        |    CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 4 END AS ch
+        |  FROM documents),
+        |gx AS (SELECT doc_id, w, h, ch, unnest(range(0, w)) AS x FROM d),
+        |px AS (SELECT doc_id, w, h, ch, x, unnest(range(0, h)) AS r FROM gx)
+        |SELECT doc_id,
+        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |       CAST(ch AS BIGINT) AS channels,
+        |       CAST(count(*) AS BIGINT) AS n_pixels,
+        |       CAST(sum((doc_id + 2 * x + 3 * r) % 256) AS BIGINT) AS sum_b,
+        |       CAST(sum((doc_id + 5 * x + r) % 256) AS BIGINT) AS sum_g,
+        |       CAST(sum((doc_id + x + 7 * r) % 256) AS BIGINT) AS sum_r,
+        |       CAST(sum(CASE WHEN ch = 4 THEN (doc_id + x + r) % 256 ELSE 0 END) AS BIGINT) AS sum_a
+        |FROM px GROUP BY doc_id, w, h, ch ORDER BY doc_id""".stripMargin)),
 
     // Nearest-neighbor resize of decoded pixels onto the fixed 16×16
     // model mesh (the vision-embedding preprocessing step): integer
@@ -1116,7 +2515,7 @@ object SparkEntry {
     // mapping, so a hash match proves every resized pixel came from
     // the right source coordinate (fixture dims 1..16 × 1..8 exercise
     // BOTH up- and down-scaling, 24 and 32 bpp).
-    "mm_image_resize" -> ((s, d) =>
+    Q("mm_image_resize", ((s, d) =>
       Multimodal.imageResize(Multimodal.syntheticPixelBlobs(Tables.documents(s, d)))
         .select(col("doc_id"),
           col("width").cast("long").as("width"),
@@ -1124,7 +2523,32 @@ object SparkEntry {
           col("out_w").cast("long").as("out_w"),
           col("out_h").cast("long").as("out_h"),
           col("sum_r"), col("sum_g"), col("sum_b"), col("checksum"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // NN-resize replay: the analytic source-pixel formulas evaluated
+      // at sx = (x·w)//16, file row fr = h−1−((y·h)//16) (bottom-up BMP,
+      // image orientation) — same index mapping, same positional
+      // checksum weights.
+      """WITH d AS (SELECT doc_id,
+        |    CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 16 ELSE 1 + doc_id % 12 END AS w,
+        |    CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 8 ELSE 1 + doc_id % 6 END AS h
+        |  FROM documents),
+        |gx AS (SELECT doc_id, w, h, unnest(range(0, 16)) AS x FROM d),
+        |gy AS (SELECT doc_id, w, h, x, unnest(range(0, 16)) AS y FROM gx),
+        |ix AS (SELECT doc_id, w, h, x, y,
+        |         (x * w) // 16 AS sx, h - 1 - ((y * h) // 16) AS fr FROM gy),
+        |ch AS (SELECT doc_id, w, h, x, y,
+        |         (doc_id + 2 * sx + 3 * fr) % 256 AS b,
+        |         (doc_id + 5 * sx + fr) % 256 AS g,
+        |         (doc_id + sx + 7 * fr) % 256 AS r
+        |       FROM ix)
+        |SELECT doc_id,
+        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |       CAST(16 AS BIGINT) AS out_w, CAST(16 AS BIGINT) AS out_h,
+        |       CAST(sum(r) AS BIGINT) AS sum_r,
+        |       CAST(sum(g) AS BIGINT) AS sum_g,
+        |       CAST(sum(b) AS BIGINT) AS sum_b,
+        |       CAST(sum((y * 16 + x + 1) * (b + 256 * g + 65536 * r)) AS BIGINT) AS checksum
+        |FROM ch GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin)),
 
     // REAL compressed-codec decode: complete valid PNGs (grey/RGB/RGBA
     // by id%3, every row forward-filtered with a different PNG filter,
@@ -1133,7 +2557,7 @@ object SparkEntry {
     // sums. The oracle re-enumerates the analytic pixel grid — a
     // hash-match proves inflate + all five filter reconstructions +
     // IDAT concatenation read every byte back.
-    "mm_decode_png" -> ((s, d) => {
+    Q("mm_decode_png", ((s, d) => {
       Multimodal.decodePng(Multimodal.syntheticPngBlobs(Tables.documents(s, d)))
         .select(col("doc_id"),
           col("width").cast("long").as("width"),
@@ -1141,16 +2565,37 @@ object SparkEntry {
           col("channels").cast("long").as("channels"),
           col("n_pixels"), col("sum_r"), col("sum_g"), col("sum_b"), col("sum_a"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(pngDecodeOracle)),
 
     // WARC record walk — Common Crawl's container, THE training-data
     // ingest format: version line + CRLF header block +
     // Content-Length-framed payload per record, framing VERIFIED
     // (any slack refuses the file); odd ids arrive as the wild
     // transport — one gzip member per record, concatenated.
-    "mm_warc_records" -> ((s, d) =>
+    Q("mm_warc_records", ((s, d) =>
       Multimodal.warcInventory(Multimodal.syntheticWarcBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"), col("rec_idx"))),
+        .orderBy(col("doc_id"), col("rec_idx"))), Some(
+      // record replay: warcinfo + response geometry/sums from the
+      // analytic payload rules — identical for plain and gzip transport
+      // (the transport must be invisible, which the parity of doc_id
+      // deliberately exercises).
+      """WITH d AS (SELECT doc_id, 1 + doc_id % 3 AS nresp FROM documents),
+        |info AS (SELECT doc_id, 0 AS rec_idx, 'warcinfo' AS rec_type, '' AS uri,
+        |           10 + doc_id % 5 AS len, 0 AS base FROM d),
+        |resp AS (SELECT doc_id, 1 + r AS rec_idx, 'response' AS rec_type,
+        |           'https://ex.com/' || CAST(doc_id AS VARCHAR) || '/' ||
+        |             CAST(r AS VARCHAR) AS uri,
+        |           20 + (doc_id + 3 * r) % 30 AS len,
+        |           11 * (r + 1) AS base
+        |         FROM (SELECT doc_id, unnest(range(0, nresp)) AS r FROM d)),
+        |recs AS (SELECT * FROM info UNION ALL SELECT * FROM resp),
+        |bj AS (SELECT doc_id, rec_idx, rec_type, uri, len, base,
+        |         unnest(range(0, len)) AS j FROM recs)
+        |SELECT doc_id, CAST(rec_idx AS BIGINT) AS rec_idx, rec_type, uri,
+        |  CAST(len AS BIGINT) AS n_bytes,
+        |  CAST(sum((doc_id + base + j) % 256) AS BIGINT) AS sum_bytes
+        |FROM bj GROUP BY doc_id, rec_idx, rec_type, uri, len, base
+        |ORDER BY doc_id, rec_idx""".stripMargin)),
 
     // WARC → HTTP envelope → Content-Encoding body decode: response
     // records carrying full HTTP responses (identity / gzip /
@@ -1158,42 +2603,91 @@ object SparkEntry {
     // the content-coding × transport-coding matrix). The body md5
     // pins every decoded byte; a lying inner Content-Length or an
     // unterminated stream drops the record.
-    "mm_warc_http" -> ((s, d) =>
+    Q("mm_warc_http", ((s, d) =>
       Multimodal.warcHttpBodies(Multimodal.syntheticWebWarcBlobs(Tables.documents(s, d)))
         .select(col("doc_id"), col("rec_idx"), col("uri"), col("status"),
           col("content_type"), col("content_encoding"), col("n_body"),
           md5(col("body_text").cast("binary")).as("body_md5"))
-        .orderBy(col("doc_id"), col("rec_idx"))),
+        .orderBy(col("doc_id"), col("rec_idx"))), Some(
+      // Byte-exact replay: the page is rebuilt verbatim in SQL and
+      // md5-compared — the only way a row matches is if the HTTP
+      // envelope parse, the Content-Encoding decode (identity/gzip/
+      // zlib-deflate) and the transport gunzip all returned every byte.
+      s"""WITH $webPageCtesSql
+         |SELECT doc_id, CAST(1 AS BIGINT) AS rec_idx,
+         |  'https://ex.com/web/' || CAST(doc_id AS VARCHAR) AS uri,
+         |  CAST(200 AS BIGINT) AS status, 'text/html' AS content_type,
+         |  (['identity','gzip','deflate'])[CAST(doc_id % 3 AS INTEGER) + 1]
+         |    AS content_encoding,
+         |  CAST(length(html) AS BIGINT) AS n_body, md5(html) AS body_md5
+         |FROM wpage ORDER BY doc_id, rec_idx""".stripMargin)),
 
     // MP3 metadata walk: ID3v2.3 text frames (syncsafe container,
     // per-frame sizes) + the first MPEG1 Layer III header through the
     // real bitrate/samplerate tables — title/artist/bitrate/rate/
     // frame-length stream facts without decoding audio.
-    "mm_audio_mp3_meta" -> ((s, d) =>
+    Q("mm_audio_mp3_meta", ((s, d) =>
       Multimodal.mp3Metadata(Multimodal.syntheticMp3Blobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // table replay: the MPEG1 Layer III bitrate/samplerate tables as
+      // literal lists, frame length by the 144000·kbps // hz rule.
+      """WITH t AS (SELECT doc_id,
+        |    ([32,40,48,56,64,80,96,112,128,160,192,224,256,320])
+        |      [CAST(1 + doc_id % 14 AS INTEGER)] AS kbps,
+        |    ([44100,48000,32000])[CAST(doc_id % 3 AS INTEGER) + 1] AS hz
+        |  FROM documents)
+        |SELECT doc_id,
+        |  'Track ' || CAST(doc_id % 100 AS VARCHAR) AS title,
+        |  'Artist ' || CAST(doc_id % 10 AS VARCHAR) AS artist,
+        |  CAST(kbps AS BIGINT) AS bitrate_kbps,
+        |  CAST(hz AS BIGINT) AS sample_rate,
+        |  CAST(144000 * kbps // hz AS BIGINT) AS frame_bytes
+        |FROM t ORDER BY doc_id""".stripMargin)),
 
     // PDF document walk — the papers/books/scans container: classic
     // xref (strict 20-byte entries, mis-pointed offsets refuse), COS
     // object parse, Catalog→Pages tree with /Count cross-check, /Info
     // producer readback.
-    "mm_pdf_meta" -> ((s, d) =>
+    Q("mm_pdf_meta", ((s, d) =>
       Multimodal.pdfMetadata(Multimodal.syntheticPdfBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // Fixture replay: object census 4 + 2·pages (catalog, page tree,
+      // font, info + page/content pairs), analytic producer.
+      """SELECT doc_id, '1.4' AS version,
+        |  CAST(1 + doc_id % 4 AS BIGINT) AS n_pages,
+        |  CAST(4 + 2 * (1 + doc_id % 4) AS BIGINT) AS n_objects,
+        |  'graft ' || CAST(doc_id % 10 AS VARCHAR) AS producer
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // PDF text extraction — per-page Tj / TJ show-operator strings in
     // stream order (kerning numbers ignored), through plain AND
     // FlateDecode content streams (the filter must be invisible), with
     // the \( \) \\ escape family exercised on a third of the corpus.
-    "mm_pdf_text" -> ((s, d) =>
+    Q("mm_pdf_text", ((s, d) =>
       Multimodal.pdfTextPages(Multimodal.syntheticPdfBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"), col("page"))),
+        .orderBy(col("doc_id"), col("page"))), Some(
+      // Text replay from the analytic chunk rules — the filter
+      // (FlateDecode on odd ids) and the escape family never appear in
+      // the oracle, so a hash match proves both are transparent.
+      """WITH d AS (SELECT doc_id, 1 + doc_id % 4 AS np FROM documents),
+        |pg AS (SELECT doc_id, unnest(range(0, np)) AS p FROM d),
+        |t AS (SELECT doc_id, p,
+        |    'Doc ' || CAST(doc_id AS VARCHAR) || ' page ' || CAST(p AS VARCHAR) ||
+        |    ' body ' || CAST((doc_id * 3 + p) % 50 AS VARCHAR) || ' and ' ||
+        |    CASE WHEN doc_id % 3 = 0
+        |         THEN 'tail (' || CAST((doc_id + p) % 7 AS VARCHAR) || ') \ done.'
+        |         ELSE 'tail ' || CAST((doc_id + p) % 7 AS VARCHAR) || ' done.' END
+        |      AS text
+        |  FROM pg)
+        |SELECT doc_id, CAST(p AS BIGINT) AS page, text,
+        |  CAST(length(text) AS BIGINT) AS n_chars
+        |FROM t ORDER BY doc_id, page""".stripMargin)),
 
     // PDF INCREMENTAL saves — the /Prev xref chain editors write: the
     // newest section overrides the original's /Info and page-0 content
     // stream; a reader that ignores the chain (or resolves oldest-
     // first, or resurrects freed numbers) shows stale values.
-    "mm_pdf_incremental" -> ((s, d) => {
+    Q("mm_pdf_incremental", ((s, d) => {
       val blobs = Multimodal.syntheticPdfIncrementalBlobs(Tables.documents(s, d))
       Multimodal.pdfMetadata(blobs)
         .select(col("doc_id"), col("n_pages"), col("n_objects"), col("producer"))
@@ -1201,33 +2695,116 @@ object SparkEntry {
         .select(col("doc_id"), col("n_pages"), col("n_objects"),
           col("producer"), col("page"), col("text"))
         .orderBy(col("doc_id"), col("page"))
-    }),
+    }), Some(
+      // The update's analytic values for page 0, the ORIGINAL rule for
+      // the rest — only a correct newest-wins chain walk matches both.
+      """WITH d AS (SELECT doc_id, 1 + doc_id % 4 AS np FROM documents),
+        |pg AS (SELECT doc_id, np, unnest(range(0, np)) AS p FROM d),
+        |t AS (SELECT doc_id, np, p,
+        |    CASE WHEN p = 0
+        |      THEN 'UPDATED page 0 of doc ' || CAST(doc_id AS VARCHAR) ||
+        |           ' rev ' || CAST(doc_id % 5 AS VARCHAR) || ' .'
+        |      ELSE 'Doc ' || CAST(doc_id AS VARCHAR) || ' page ' ||
+        |           CAST(p AS VARCHAR) ||
+        |           ' body ' || CAST((doc_id * 3 + p) % 50 AS VARCHAR) || ' and ' ||
+        |           CASE WHEN doc_id % 3 = 0
+        |                THEN 'tail (' || CAST((doc_id + p) % 7 AS VARCHAR) ||
+        |                     ') \ done.'
+        |                ELSE 'tail ' || CAST((doc_id + p) % 7 AS VARCHAR) ||
+        |                     ' done.' END END AS text
+        |  FROM pg)
+        |SELECT doc_id, CAST(np AS BIGINT) AS n_pages,
+        |  CAST(4 + 2 * np AS BIGINT) AS n_objects,
+        |  'graft-v2 ' || CAST(doc_id % 10 AS VARCHAR) AS producer,
+        |  CAST(p AS BIGINT) AS page, text
+        |FROM t ORDER BY doc_id, page""".stripMargin)),
 
     // ALL-frames MP3 census — the first-header walk reports the wrong
     // duration on VBR files; this walks every frame (header-stride
     // hops, strict framing, optional ID3v2 lead / ID3v1 trail), exact
     // 1152-samples-per-frame duration, min/max/mode bitrate, VBR flag,
     // padding count, total audio bytes.
-    "mm_audio_mp3_frames" -> ((s, d) =>
+    Q("mm_audio_mp3_frames", ((s, d) =>
       Multimodal.mp3FrameInventory(
           Multimodal.syntheticMp3VbrBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // Frame-grain replay: every frame's bitrate/padding from the
+      // analytic rule, mode via count-then-rank (ties to the LOWER
+      // bitrate), duration by the 1152-samples rule — integer-exact.
+      """WITH d AS (SELECT doc_id, 3 + doc_id % 6 AS n,
+        |    ([44100,48000,32000])[CAST(doc_id % 3 AS INTEGER) + 1] AS hz
+        |  FROM documents),
+        |fr AS (SELECT doc_id, n, hz, f,
+        |    ([32,40,48,56,64,80,96,112,128,160,192,224,256,320])[
+        |      CAST(CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 14
+        |                ELSE 1 + (doc_id + 3 * f) % 14 END AS INTEGER)] AS kbps,
+        |    (doc_id + f) % 2 AS pad
+        |  FROM (SELECT doc_id, n, hz, unnest(range(0, n)) AS f FROM d)),
+        |m AS (SELECT doc_id, kbps, count(*) AS c FROM fr GROUP BY doc_id, kbps),
+        |md AS (SELECT doc_id, kbps AS kmode,
+        |         row_number() OVER (PARTITION BY doc_id
+        |                            ORDER BY c DESC, kbps ASC) AS rn FROM m),
+        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_frames,
+        |    CAST(min(hz) AS BIGINT) AS sample_rate,
+        |    CAST(min(kbps) AS BIGINT) AS kbps_min,
+        |    CAST(max(kbps) AS BIGINT) AS kbps_max,
+        |    CAST(sum(pad) AS BIGINT) AS n_padded,
+        |    CAST(sum(144000 * kbps // hz + pad) AS BIGINT) AS n_audio_bytes
+        |  FROM fr GROUP BY doc_id)
+        |SELECT a.doc_id AS doc_id, n_frames, sample_rate,
+        |  CAST(1152000 * n_frames // sample_rate AS BIGINT) AS duration_ms,
+        |  kbps_min, kbps_max, CAST(kmode AS BIGINT) AS kbps_mode,
+        |  CAST(CASE WHEN kbps_min <> kbps_max THEN 1 ELSE 0 END AS BIGINT) AS is_vbr,
+        |  n_padded, n_audio_bytes
+        |FROM agg a JOIN md ON md.doc_id = a.doc_id AND md.rn = 1
+        |ORDER BY doc_id""".stripMargin)),
 
     // ZIP entry inventory with VERIFIED decode: EOCD scan → central
     // directory → per-entry stored/raw-deflate decode, CRC32 + size
     // checked against the directory's claims — the epub/docx/jar
     // document-container ingest.
-    "mm_zip_entries" -> ((s, d) =>
+    Q("mm_zip_entries", ((s, d) =>
       Multimodal.zipInventory(Multimodal.syntheticZipBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"), col("entry_idx"))),
+        .orderBy(col("doc_id"), col("entry_idx"))), Some(
+      // inventory replay: names/methods from the entry-parity rule,
+      // sizes and payload byte-sums from the analytic formula — the
+      // CRC verification itself is decoder-side (corruption refusals
+      // spec-pinned; a wrong CRC drops the whole archive, so every
+      // emitted row IS a verified decode).
+      """WITH d AS (SELECT doc_id, 1 + doc_id % 4 AS n FROM documents),
+        |en AS (SELECT doc_id, unnest(range(0, n)) AS e FROM d),
+        |sz AS (SELECT doc_id, e, 10 + (doc_id + e) % 40 AS usize FROM en),
+        |bj AS (SELECT doc_id, e, usize, unnest(range(0, usize)) AS j FROM sz)
+        |SELECT doc_id, CAST(e AS BIGINT) AS entry_idx,
+        |  'doc_' || CAST(doc_id AS VARCHAR) || '_' || CAST(e AS VARCHAR) ||
+        |    CASE WHEN e % 2 = 0 THEN '.txt' ELSE '.json' END AS name,
+        |  CAST(CASE WHEN e % 2 = 0 THEN 0 ELSE 8 END AS BIGINT) AS method,
+        |  CAST(usize AS BIGINT) AS n_bytes,
+        |  CAST(sum((doc_id + 7 * e + j) % 256) AS BIGINT) AS sum_bytes
+        |FROM bj GROUP BY doc_id, e, usize ORDER BY doc_id, entry_idx""".stripMargin)),
 
     // Baseline TIFF decode: standalone-file IFD walk in both byte
     // orders (gray/RGB, multi-strip with offset-indirected
     // StripOffsets/ByteCounts arrays), strips concatenated into
     // channel sums — the scan/document-corpus container.
-    "mm_decode_tiff" -> ((s, d) =>
+    Q("mm_decode_tiff", ((s, d) =>
       Multimodal.decodeTiff(Multimodal.syntheticTiffBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      """WITH d AS (SELECT doc_id, 1 + doc_id % 12 AS w, 1 + doc_id % 8 AS h,
+        |    CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 3 END AS ch FROM documents),
+        |gx AS (SELECT doc_id, w, h, ch, unnest(range(0, w)) AS x FROM d),
+        |px AS (SELECT doc_id, w, h, ch, x, unnest(range(0, h)) AS r FROM gx),
+        |ks AS (SELECT doc_id, w, h, ch, x, r, unnest(range(0, ch)) AS k FROM px),
+        |sv AS (SELECT doc_id, w, h, ch, k,
+        |         (doc_id + 2 * x + 3 * r + 5 * k) % 256 AS v FROM ks)
+        |SELECT doc_id,
+        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |       CAST(ch AS BIGINT) AS channels,
+        |       CAST(w * h AS BIGINT) AS n_pixels,
+        |       CAST(sum(CASE WHEN k = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
+        |       CAST(sum(CASE WHEN k = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
+        |       CAST(sum(CASE WHEN k = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b
+        |FROM sv GROUP BY doc_id, w, h, ch ORDER BY doc_id""".stripMargin)),
 
     // COMPRESSED TIFF decode — what scanned-document corpora actually
     // carry: per-row PackBits packets and per-strip early-change LZW
@@ -1236,16 +2813,35 @@ object SparkEntry {
     // arrays are genuinely variable (compressed sizes). Channel sums
     // of the analytic pixel grid pin every packet walk, code width
     // transition and predictor undo.
-    "mm_decode_tiff_compressed" -> ((s, d) =>
+    Q("mm_decode_tiff_compressed", ((s, d) =>
       Multimodal.decodeTiff(
           Multimodal.syntheticTiffCompressedBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // Same analytic pixel replay — compression/predictor are
+      // decoder-side concerns the oracle must be blind to: a row can
+      // only hash-match if PackBits/LZW/predictor reconstructed every
+      // sample the uncompressed rule prescribes.
+      """WITH d AS (SELECT doc_id, 1 + doc_id % 12 AS w, 1 + doc_id % 8 AS h,
+        |    CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 3 END AS ch FROM documents),
+        |gx AS (SELECT doc_id, w, h, ch, unnest(range(0, w)) AS x FROM d),
+        |px AS (SELECT doc_id, w, h, ch, x, unnest(range(0, h)) AS r FROM gx),
+        |ks AS (SELECT doc_id, w, h, ch, x, r, unnest(range(0, ch)) AS k FROM px),
+        |sv AS (SELECT doc_id, w, h, ch, k,
+        |         (doc_id + 2 * x + 3 * r + 5 * k) % 256 AS v FROM ks)
+        |SELECT doc_id,
+        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |       CAST(ch AS BIGINT) AS channels,
+        |       CAST(w * h AS BIGINT) AS n_pixels,
+        |       CAST(sum(CASE WHEN k = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
+        |       CAST(sum(CASE WHEN k = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
+        |       CAST(sum(CASE WHEN k = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b
+        |FROM sv GROUP BY doc_id, w, h, ch ORDER BY doc_id""".stripMargin)),
 
     // 16-BIT PNG decode: bytewise unfilter at the 2-byte sample
     // stride, big-endian sample assembly — channel sums are of the
     // 16-bit VALUES, so one byte-order or stride slip anywhere flips
     // the row.
-    "mm_decode_png16" -> ((s, d) => {
+    Q("mm_decode_png16", ((s, d) => {
       Multimodal.decodePng(Multimodal.syntheticPng16Blobs(Tables.documents(s, d)))
         .select(col("doc_id"),
           col("width").cast("long").as("width"),
@@ -1253,21 +2849,70 @@ object SparkEntry {
           col("channels").cast("long").as("channels"),
           col("n_pixels"), col("sum_r"), col("sum_g"), col("sum_b"), col("sum_a"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      """WITH d AS (SELECT doc_id,
+        |    1 + doc_id % 10 AS w,
+        |    1 + doc_id % 7 AS h,
+        |    CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END AS ch
+        |  FROM documents),
+        |gx AS (SELECT doc_id, w, h, ch, unnest(range(0, w)) AS x FROM d),
+        |px AS (SELECT doc_id, w, h, ch, x, unnest(range(0, h)) AS r FROM gx),
+        |ks AS (SELECT doc_id, w, h, ch, x, r, unnest(range(0, ch)) AS k FROM px),
+        |sv AS (SELECT doc_id, w, h, ch, k,
+        |         (doc_id * 131 + 257 * x + 509 * r + 769 * k) % 65536 AS v FROM ks)
+        |SELECT doc_id,
+        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |       CAST(ch AS BIGINT) AS channels,
+        |       CAST(w * h AS BIGINT) AS n_pixels,
+        |       CAST(sum(CASE WHEN k = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
+        |       CAST(sum(CASE WHEN k = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
+        |       CAST(sum(CASE WHEN k = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
+        |       CAST(sum(CASE WHEN k = 3 THEN v ELSE 0 END) AS BIGINT) AS sum_a
+        |FROM sv GROUP BY doc_id, w, h, ch ORDER BY doc_id""".stripMargin)),
 
     // ANIMATED GIF frame inventory: block-grammar walk (NETSCAPE loop
     // + per-frame GCE + sub-rectangle image descriptors), each frame
     // LZW-decoded for real — frame count, geometry, delay pacing and
     // per-frame pixel sums, the video-adjacent curation readout.
-    "mm_gif_frames" -> ((s, d) =>
+    Q("mm_gif_frames", ((s, d) =>
       Multimodal.gifFrames(Multimodal.syntheticAnimatedGifBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"), col("frame_idx"))),
+        .orderBy(col("doc_id"), col("frame_idx"))), Some(
+      // frame-walk replay: geometry from the analytic sub-rectangle
+      // rule, sums by substituting the palette formula into each
+      // frame's LOCAL index grid, delays from the GCE formula.
+      """WITH d AS (SELECT doc_id, 2 + doc_id % 9 AS cw, 2 + doc_id % 6 AS chh,
+        |             1 + doc_id % 4 AS nf FROM documents),
+        |fr AS (SELECT doc_id, cw, chh, unnest(range(0, nf)) AS f FROM d),
+        |geo AS (SELECT doc_id, cw, chh, f,
+        |         CASE WHEN f = 0 THEN cw ELSE 1 + (doc_id + f) % cw END AS w,
+        |         CASE WHEN f = 0 THEN chh ELSE 1 + (doc_id + 2 * f) % chh END AS h
+        |       FROM fr),
+        |geo2 AS (SELECT doc_id, cw, chh, f, w, h,
+        |          CASE WHEN f = 0 THEN 0 ELSE (doc_id + 3 * f) % (cw - w + 1) END AS x0,
+        |          CASE WHEN f = 0 THEN 0 ELSE (doc_id + 5 * f) % (chh - h + 1) END AS y0
+        |        FROM geo),
+        |gx AS (SELECT doc_id, cw, chh, f, w, h, x0, y0, unnest(range(0, w)) AS x FROM geo2),
+        |px AS (SELECT doc_id, cw, chh, f, w, h, x0, y0, x, unnest(range(0, h)) AS r FROM gx),
+        |pj AS (SELECT doc_id, cw, chh, f, w, h, x0, y0,
+        |         (doc_id + x + 3 * r + 5 * f) % 16 AS j FROM px)
+        |SELECT doc_id,
+        |  CAST(cw AS BIGINT) AS canvas_w, CAST(chh AS BIGINT) AS canvas_h,
+        |  CAST(f AS BIGINT) AS frame_idx,
+        |  CAST(x0 AS BIGINT) AS x, CAST(y0 AS BIGINT) AS y,
+        |  CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
+        |  CAST(3 + (doc_id + 7 * f) % 50 AS BIGINT) AS delay_cs,
+        |  CAST(count(*) AS BIGINT) AS n_pixels,
+        |  CAST(sum((doc_id + 3 * j) % 256) AS BIGINT) AS sum_r,
+        |  CAST(sum((doc_id + 5 * j) % 256) AS BIGINT) AS sum_g,
+        |  CAST(sum((doc_id + 7 * j) % 256) AS BIGINT) AS sum_b
+        |FROM pj GROUP BY doc_id, cw, chh, f, w, h, x0, y0
+        |ORDER BY doc_id, frame_idx""".stripMargin)),
 
     // ADAM7-INTERLACED decode: the same pixels as mm_decode_png in
     // seven-pass interlaced encoding (each sub-image independently
     // filtered) — the query shares the sequential oracle VERBATIM,
     // so the hash match proves the pass walk is transparent.
-    "mm_decode_png_interlaced" -> ((s, d) => {
+    Q("mm_decode_png_interlaced", ((s, d) => {
       Multimodal.decodePng(Multimodal.syntheticInterlacedPngBlobs(Tables.documents(s, d)))
         .select(col("doc_id"),
           col("width").cast("long").as("width"),
@@ -1275,13 +2920,17 @@ object SparkEntry {
           col("channels").cast("long").as("channels"),
           col("n_pixels"), col("sum_r"), col("sum_g"), col("sum_b"), col("sum_a"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // ADAM7 must be invisible: SAME oracle (the sequential pixel
+      // grid), so the hash match proves the seven-pass de-interlace
+      // reads back exactly the pixels the sequential encoding carries.
+      pngDecodeOracle)),
 
     // Modality inventory of a mixed-blob corpus (the corpus-management
     // face of the header walk): per detected format, doc count, byte
     // volume and corpus share — what a multimodal ingest reports
     // before routing each modality to its pipeline.
-    "corpus_modality_mix" -> ((s, d) => {
+    Q("corpus_modality_mix", ((s, d) => {
       val hdr = Multimodal.decodeHeaders(
         Multimodal.syntheticBlobs(Tables.documents(s, d)))
       val mix = hdr.groupBy(col("format"))
@@ -1291,42 +2940,130 @@ object SparkEntry {
         .withColumn("share_permille", expr("(n_docs * 1000) div __n"))
         .drop("__n")
         .orderBy(col("format"))
-    }),
+    }), Some(
+      // the id-class arithmetic of the mixed-blob fixture grouped per
+      // format (byte sizes are the analytic header-only blob lengths).
+      """WITH f AS (SELECT doc_id,
+        |    CASE WHEN doc_id % 2 = 0 THEN 'bmp' WHEN doc_id % 4 = 1 THEN 'wav'
+        |         WHEN doc_id % 8 = 3 THEN 'png' ELSE 'jpeg' END AS format,
+        |    CASE WHEN doc_id % 2 = 0 THEN 54 WHEN doc_id % 4 = 1 THEN 44
+        |         WHEN doc_id % 8 = 3 THEN 33
+        |         ELSE 32 + 3 * (CASE (doc_id // 8) % 2 WHEN 0 THEN 1 ELSE 3 END)
+        |    END AS nb
+        |  FROM documents),
+        |t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f)
+        |SELECT f.format, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(sum(f.nb) AS BIGINT) AS total_bytes,
+        |  (CAST(count(*) AS BIGINT) * 1000) // t.n AS share_permille
+        |FROM f CROSS JOIN t GROUP BY f.format, t.n
+        |ORDER BY f.format""".stripMargin)),
 
     // Orientation-AWARE aHash: the same upright 64×64 scene stored
     // under all 8 EXIF orientations (block grid physically permuted
     // in the scan) must hash to the upright value — the oracle has NO
     // orientation dependence, so a hash match proves the EXIF read +
     // inverse display transform + decode all compose correctly.
-    "mm_image_ahash_oriented" -> ((s, d) =>
+    Q("mm_image_ahash_oriented", ((s, d) =>
       Multimodal.imageAHashOriented(
           Multimodal.syntheticOrientedJpegBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // the box tree's encoded values recomputed analytically — a hash
+      // match proves the walk read every offset back (sizes, nesting,
+      // 16.16 dims, the truncating duration→ms rule).
+      // upright-scene aHash with NO orientation term: cell mean =
+      // 2·DC+128 exactly (flat blocks, quantizer 16), the 63rd bit via
+      // the signed-min trick (1<<63 overflows BIGINT).
+      """WITH rr AS (SELECT doc_id, unnest(range(0, 8)) AS r FROM documents),
+        |cells AS (SELECT doc_id, r, unnest(range(0, 8)) AS c FROM rr),
+        |m AS (SELECT doc_id, r, c,
+        |        2 * ((doc_id + 3 * c + 5 * r) % 121 - 60) + 128 AS m FROM cells),
+        |gm AS (SELECT doc_id, CAST(sum(m) // 64 AS BIGINT) AS gmean
+        |       FROM m GROUP BY doc_id),
+        |hb AS (SELECT m.doc_id, r * 8 + c AS cell,
+        |         CASE WHEN m.m > gm.gmean THEN 1 ELSE 0 END AS bit
+        |       FROM m JOIN gm ON gm.doc_id = m.doc_id),
+        |ah AS (SELECT doc_id,
+        |         CAST(sum(CASE WHEN cell < 63
+        |                       THEN bit * (CAST(1 AS BIGINT) << CAST(cell AS INTEGER))
+        |                       ELSE 0 END)
+        |           + sum(CASE WHEN cell = 63 AND bit = 1
+        |                      THEN -9223372036854775808 ELSE 0 END) AS BIGINT) AS ahash
+        |       FROM hb GROUP BY doc_id)
+        |SELECT doc_id, CAST(1 + doc_id % 8 AS BIGINT) AS orientation, ahash
+        |FROM ah ORDER BY doc_id""".stripMargin)),
 
     // EXIF metadata walk: APP1 → TIFF IFD graph in BOTH byte orders
     // (II even ids / MM odd), Make via ASCII offset indirection,
     // Orientation inline SHORT, capture dims behind the ExifIFD
     // pointer — the rotate/slice metadata an image corpus needs
     // before hashing. Fixtures stay fully pixel-decodable.
-    "mm_exif" -> ((s, d) =>
+    Q("mm_exif", ((s, d) =>
       Multimodal.exifMetadata(Multimodal.syntheticExifJpegBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      """SELECT doc_id,
+        |  CASE WHEN doc_id % 2 = 1 THEN 'MM' ELSE 'II' END AS endian,
+        |  'CAM-' || CAST(doc_id % 10 AS VARCHAR) AS make,
+        |  CAST(1 + doc_id % 8 AS BIGINT) AS orientation,
+        |  CAST(16 * (1 + doc_id % 80) AS BIGINT) AS pixel_x,
+        |  CAST(16 * (1 + doc_id % 45) AS BIGINT) AS pixel_y
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // MP4/ISO-BMFF box walk: duration, track inventory, codec fourcc
     // and display dims off the typed box tree — video-corpus curation
     // metadata without decoding a frame. Complete analytic fixtures
     // (ftyp/moov/mvhd/trak/tkhd/mdhd/hdlr/stsd/mdat, real box sizes).
-    "mm_video_meta" -> ((s, d) =>
+    Q("mm_video_meta", ((s, d) =>
       Multimodal.mp4Metadata(Multimodal.syntheticMp4Blobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      """WITH d AS (SELECT doc_id,
+        |    CASE WHEN doc_id % 2 = 0 THEN 'isom' ELSE 'mp42' END AS brand,
+        |    600 * (1 + doc_id % 5) AS ts,
+        |    600 + (doc_id * 7) % 100000 AS du,
+        |    CASE WHEN doc_id % 2 = 0 THEN 'avc1' ELSE 'hvc1' END AS video_codec,
+        |    16 * (1 + doc_id % 80) AS w,
+        |    16 * (1 + doc_id % 45) AS h,
+        |    CASE WHEN doc_id % 3 = 0 THEN 0 ELSE 1 END AS na
+        |  FROM documents)
+        |SELECT doc_id, brand, CAST(ts AS BIGINT) AS timescale,
+        |  CAST(du * 1000 // ts AS BIGINT) AS duration_ms,
+        |  CAST(1 + na AS BIGINT) AS n_tracks, CAST(1 AS BIGINT) AS n_video,
+        |  CAST(na AS BIGINT) AS n_audio, video_codec,
+        |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height
+        |FROM d ORDER BY doc_id""".stripMargin)),
 
     // G.711 (µ-law even ids / A-law odd) expanded to linear samples —
     // the 8-bit companded telephony codecs a voice corpus actually
     // ships: exact integer expansion (complement/XOR, segment-scaled
     // mantissa), so the oracle replays the decode byte for byte.
-    "mm_audio_g711" -> ((s, d) =>
+    Q("mm_audio_g711", ((s, d) =>
       Multimodal.g711Stats(Multimodal.syntheticG711Audio(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // the exact G.711 expansion rules in SQL: µ-law u = 255−b,
+      // ((man·8+132)·2^exp)−132, sign from u≥128 (negative); A-law
+      // a = b XOR 85, segment-scaled mantissa, sign from a≥128 (POSITIVE
+      // — A-law's inverted sign convention).
+      """WITH d AS (SELECT doc_id, 48 + doc_id % 48 AS n FROM documents),
+        |sj AS (SELECT doc_id, n, unnest(range(0, n)) AS j FROM d),
+        |bt AS (SELECT doc_id, n, (doc_id * 29 + j * 23) % 256 AS b FROM sj),
+        |sm AS (SELECT doc_id, n,
+        |  CASE WHEN doc_id % 2 = 0 THEN
+        |    (CASE WHEN (255 - b) >= 128 THEN -1 ELSE 1 END) *
+        |      ((((255 - b) % 16) * 8 + 132) * (1 << (((255 - b) // 16) % 8)) - 132)
+        |  ELSE
+        |    (CASE WHEN xor(b, 85) >= 128 THEN 1 ELSE -1 END) *
+        |      (CASE WHEN (xor(b, 85) // 16) % 8 = 0
+        |            THEN (xor(b, 85) % 16) * 16 + 8
+        |            ELSE ((xor(b, 85) % 16) * 16 + 264)
+        |                   * (1 << (((xor(b, 85) // 16) % 8) - 1)) END)
+        |  END AS s
+        |FROM bt)
+        |SELECT doc_id,
+        |  CASE WHEN doc_id % 2 = 0 THEN 'ulaw' ELSE 'alaw' END AS fmt,
+        |  CAST(max(n) AS BIGINT) AS n_samples,
+        |  CAST(max(abs(s)) AS BIGINT) AS peak,
+        |  CAST(sum(s) AS BIGINT) AS sum_samples,
+        |  CAST(sum(s * s) // max(n) AS BIGINT) AS energy
+        |FROM sm GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // CAPSTONE modality router: one mixed corpus (id%8 picks TIFF /
     // WARC / ZIP / MP3 / ADPCM / animated GIF / EXIF'd JPEG / 16-bit
@@ -1334,25 +3071,56 @@ object SparkEntry {
     // format: doc count, verified count, and the payload-grain sum
     // (pixels/records/entries/frames/samples). One query exercising
     // every container decoder in the engine.
-    "corpus_modality_mix2" -> ((s, d) =>
+    Q("corpus_modality_mix2", ((s, d) =>
       Multimodal.routeInventory(Multimodal.syntheticMixedBlobs(Tables.documents(s, d)))
         .groupBy(col("format"))
         .agg(count(lit(1)).as("n_docs"), sum(col("verified")).as("n_verified"),
           sum(col("units")).as("units_sum"))
-        .orderBy(col("format"))),
+        .orderBy(col("format"))), Some(
+      // router replay: format + payload grain per id class, verified ≡
+      // counted (every fixture parses — the refusal paths are the
+      // specs' job; here the hash pins that NOTHING silently dropped).
+      """WITH u AS (SELECT doc_id,
+        |  CASE doc_id % 8
+        |    WHEN 0 THEN 'tiff' WHEN 1 THEN 'warc' WHEN 2 THEN 'zip'
+        |    WHEN 3 THEN 'mp3' WHEN 4 THEN 'adpcm' WHEN 5 THEN 'gif'
+        |    WHEN 6 THEN 'jpeg' ELSE 'png' END AS format,
+        |  CASE doc_id % 8
+        |    WHEN 0 THEN (1 + doc_id % 12) * (1 + doc_id % 8)
+        |    WHEN 1 THEN 2 + doc_id % 3
+        |    WHEN 2 THEN 1 + doc_id % 4
+        |    WHEN 3 THEN 1
+        |    WHEN 4 THEN (1 + doc_id % 3) * (1 + 2 * (16 + doc_id % 24))
+        |    WHEN 5 THEN 1 + doc_id % 4
+        |    WHEN 6 THEN CASE doc_id % 3
+        |      WHEN 0 THEN (1 + doc_id % 21) * (1 + doc_id % 13)
+        |      WHEN 1 THEN (1 + doc_id % 19) * (1 + doc_id % 11)
+        |      ELSE (1 + doc_id % 23) * (1 + doc_id % 17) END
+        |    ELSE (1 + doc_id % 10) * (1 + doc_id % 7) END AS units
+        |  FROM documents)
+        |SELECT format, CAST(count(*) AS BIGINT) AS n_docs,
+        |  CAST(count(*) AS BIGINT) AS n_verified,
+        |  CAST(sum(units) AS BIGINT) AS units_sum
+        |FROM u GROUP BY format ORDER BY format""".stripMargin)),
 
     // FLAC STREAMINFO: typed metadata-block walk + the non-byte-
     // aligned bit unpack (20-bit rate | 3-bit channels | 5-bit bits |
     // 36-bit total samples) — lossless-audio corpus facts.
-    "mm_audio_flac_meta" -> ((s, d) =>
+    Q("mm_audio_flac_meta", ((s, d) =>
       Multimodal.flacMetadata(Multimodal.syntheticFlacBlobs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      """SELECT doc_id,
+        |  CAST(8000 + (doc_id * 37) % 90000 AS BIGINT) AS sample_rate,
+        |  CAST(1 + doc_id % 8 AS BIGINT) AS channels,
+        |  CAST(16 + doc_id % 9 AS BIGINT) AS bits,
+        |  CAST((doc_id * 1009) % 1073741824 AS BIGINT) AS total_samples
+        |FROM documents ORDER BY doc_id""".stripMargin)),
 
     // BMP RLE8 decode: cursor-driven run-length decoding (encoded
     // runs on even file rows, word-padded ABSOLUTE mode on odd rows,
     // EOL/EOB escapes) resolved through the 16-entry palette — the
     // legacy-tooling BMP variant the plain stride walk can't read.
-    "mm_decode_bmp_rle" -> ((s, d) => {
+    Q("mm_decode_bmp_rle", ((s, d) => {
       Multimodal.decodeBmpRle(Multimodal.syntheticRleBmpBlobs(Tables.documents(s, d)))
         .select(col("doc_id"),
           col("width").cast("long").as("width"),
@@ -1360,14 +3128,41 @@ object SparkEntry {
           col("channels").cast("long").as("channels"),
           col("n_pixels"), col("sum_r"), col("sum_g"), col("sum_b"), col("sum_a"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // RLE replay: the analytic palette substituted into the period-3
+      // index grid — encoded/absolute row parity is an ENCODING choice
+      // the oracle never sees, so the hash match proves both decode
+      // paths and the escape walk reconstruct the same grid.
+      """WITH d AS (SELECT doc_id, 1 + doc_id % 14 AS w, 1 + doc_id % 9 AS h
+        |           FROM documents),
+        |gx AS (SELECT doc_id, w, h, unnest(range(0, w)) AS x FROM d),
+        |px AS (SELECT doc_id, w, h, x, unnest(range(0, h)) AS fr FROM gx),
+        |pj AS (SELECT doc_id, w, h, (doc_id + x // 3 + 3 * fr) % 16 AS j FROM px)
+        |SELECT doc_id,
+        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |       CAST(3 AS BIGINT) AS channels,
+        |       CAST(count(*) AS BIGINT) AS n_pixels,
+        |       CAST(sum((doc_id + 3 * j) % 256) AS BIGINT) AS sum_r,
+        |       CAST(sum((doc_id + 5 * j) % 256) AS BIGINT) AS sum_g,
+        |       CAST(sum((doc_id + 7 * j) % 256) AS BIGINT) AS sum_b,
+        |       CAST(0 AS BIGINT) AS sum_a
+        |FROM pj GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin)),
 
     // 24-bit PCM decode: 3-byte little-endian signed samples at the
     // studio depth — full-range fixture values make a dropped sign
     // extension or byte-order slip flip every stat.
-    "mm_audio_pcm24" -> ((s, d) =>
+    Q("mm_audio_pcm24", ((s, d) =>
       Multimodal.pcm24Stats(Multimodal.syntheticPcm24Audio(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      """WITH d AS (SELECT doc_id, 40 + doc_id % 40 AS n FROM documents),
+        |sj AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM d),
+        |sm AS (SELECT doc_id, n,
+        |         (doc_id * 9973 + i * 5501) % 16777216 - 8388608 AS s FROM sj)
+        |SELECT doc_id, CAST(max(n) AS BIGINT) AS n_samples,
+        |  CAST(max(abs(s)) AS BIGINT) AS peak,
+        |  CAST(sum(s) AS BIGINT) AS sum_samples,
+        |  CAST(sum(s * s) // max(n) AS BIGINT) AS energy
+        |FROM sm GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // IMA ADPCM (WAVE 0x11) decode: per-block header-seeded adaptive
     // 4-bit recurrence through the 89-entry step table — exact
@@ -1375,30 +3170,132 @@ object SparkEntry {
     // recursive CTE (seed → nibble step → clamp → table hop), and a
     // hash match proves every intermediate sample, both clamp walls,
     // nibble order, and the multi-block header restart.
-    "mm_audio_adpcm" -> ((s, d) =>
+    Q("mm_audio_adpcm", ((s, d) =>
       Multimodal.adpcmStats(Multimodal.syntheticAdpcmAudio(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // The ENTIRE IMA ADPCM decoder in SQL: a recursive CTE carries
+      // (predictor, step index, running sum/peak/energy) through every
+      // nibble of every block — diff = step>>3 (+step>>2/+step>>1/+step
+      // per mantissa bit) as floor divisions, both clamps as
+      // GREATEST/LEAST, the step table as a literal list. Terminal rows
+      // (j = nnib) aggregate per doc; the last block's terminal state
+      // is the final_predictor/final_index pin.
+      """WITH RECURSIVE d AS (
+        |  SELECT doc_id, 16 + doc_id % 24 AS nbytes, 1 + doc_id % 3 AS nblk FROM documents),
+        |blk AS (
+        |  SELECT doc_id, nbytes, unnest(range(0, nblk)) AS b FROM d),
+        |seed AS (
+        |  SELECT doc_id, b, 2 * nbytes AS nnib,
+        |    CAST((doc_id * 211 + b * 97) % 4096 - 2048 AS BIGINT) AS pred,
+        |    CAST((doc_id + 31 * b) % 89 AS BIGINT) AS idx
+        |  FROM blk),
+        |dec AS (
+        |  SELECT doc_id, b, nnib, 0 AS j, pred, idx,
+        |    CAST(pred AS BIGINT) AS s_sum, CAST(abs(pred) AS BIGINT) AS s_peak,
+        |    CAST(pred * pred AS BIGINT) AS s_en
+        |  FROM seed
+        |  UNION ALL
+        |  SELECT doc_id, b, nnib, j + 1, np, ni,
+        |    s_sum + np, GREATEST(s_peak, abs(np)), s_en + np * np
+        |  FROM (
+        |    SELECT doc_id, b, nnib, j, s_sum, s_peak, s_en,
+        |      GREATEST(-32768, LEAST(32767,
+        |        pred + CASE WHEN nib >= 8 THEN -diff ELSE diff END)) AS np,
+        |      GREATEST(0, LEAST(88, idx + ([-1,-1,-1,-1,2,4,6,8])[(nib % 8) + 1])) AS ni
+        |    FROM (
+        |      SELECT *, (step // 8)
+        |        + CASE WHEN nib % 2 = 1 THEN step // 4 ELSE 0 END
+        |        + CASE WHEN (nib // 2) % 2 = 1 THEN step // 2 ELSE 0 END
+        |        + CASE WHEN (nib // 4) % 2 = 1 THEN step ELSE 0 END AS diff
+        |      FROM (
+        |        SELECT doc_id, b, nnib, j, pred, idx, s_sum, s_peak, s_en,
+        |          (doc_id * 7 + b * 11 + j * 5) % 16 AS nib,
+        |          ([7,8,9,10,11,12,13,14,16,17,19,21,23,25,28,31,34,37,41,45,
+        |            50,55,60,66,73,80,88,97,107,118,130,143,157,173,190,209,
+        |            230,253,279,307,337,371,408,449,494,544,598,658,724,796,
+        |            876,963,1060,1166,1282,1411,1552,1707,1878,2066,2272,2499,
+        |            2749,3024,3327,3660,4026,4428,4871,5358,5894,6484,7132,
+        |            7845,8630,9493,10442,11487,12635,13899,15289,16818,18500,
+        |            20350,22385,24623,27086,29794,32767])[idx + 1] AS step
+        |        FROM dec WHERE j < nnib)))
+        |),
+        |fin AS (SELECT * FROM dec WHERE j = nnib),
+        |agg AS (
+        |  SELECT doc_id,
+        |    CAST(count(*) AS BIGINT) AS n_blocks,
+        |    CAST(sum(nnib + 1) AS BIGINT) AS n_samples,
+        |    CAST(max(s_peak) AS BIGINT) AS peak,
+        |    CAST(sum(s_sum) AS BIGINT) AS sum_samples,
+        |    CAST(sum(s_en) // sum(nnib + 1) AS BIGINT) AS energy
+        |  FROM fin GROUP BY doc_id),
+        |lastb AS (
+        |  SELECT f.doc_id, CAST(f.pred AS BIGINT) AS final_predictor,
+        |         CAST(f.idx AS BIGINT) AS final_index
+        |  FROM fin f JOIN (SELECT doc_id, max(b) AS mb FROM fin GROUP BY doc_id) m
+        |    ON m.doc_id = f.doc_id AND m.mb = f.b)
+        |SELECT agg.doc_id, agg.n_blocks, agg.n_samples, agg.peak, agg.sum_samples,
+        |       agg.energy, lastb.final_predictor, lastb.final_index
+        |FROM agg JOIN lastb ON lastb.doc_id = agg.doc_id
+        |ORDER BY agg.doc_id""".stripMargin)),
 
     // Per-channel stereo PCM16 stats: samples deinterleaved by the fmt
     // chunk's channel count, exact integer energy/peak/crossings per
     // channel — channel-imbalance detection; analytic-sequence oracle.
-    "mm_audio_channels" -> ((s, d) => {
+    Q("mm_audio_channels", ((s, d) => {
       Multimodal.pcm16ChannelStats(Multimodal.syntheticStereoAudio(Tables.documents(s, d)))
         .orderBy(col("doc_id"), col("channel"))
-    }),
+    }), Some(
+      """WITH d AS (SELECT doc_id, 32 + doc_id % 32 AS n FROM documents),
+        |ch AS (SELECT doc_id, n, unnest([0, 1]) AS channel FROM d),
+        |sj AS (SELECT doc_id, n, channel, unnest(range(0, n)) AS j FROM ch),
+        |sv AS (SELECT doc_id, channel, j,
+        |         (doc_id * 37 + (2 * j + channel) * 13) % 2048 - 1024 AS s FROM sj),
+        |sl AS (SELECT doc_id, channel, j, s,
+        |         lag(s) OVER (PARTITION BY doc_id, channel ORDER BY j) AS prev FROM sv)
+        |SELECT doc_id, CAST(channel AS BIGINT) AS channel,
+        |       CAST(count(*) AS BIGINT) AS n_samples,
+        |       CAST(sum(s * s) // count(*) AS BIGINT) AS energy,
+        |       CAST(max(abs(s)) AS BIGINT) AS peak,
+        |       CAST(coalesce(sum(CASE WHEN prev IS NOT NULL AND prev * s < 0
+        |                             THEN 1 ELSE 0 END), 0) AS BIGINT) AS zero_crossings
+        |FROM sl GROUP BY doc_id, channel ORDER BY doc_id, channel""".stripMargin)),
 
     // Autocorrelation periodicity over decoded PCM16: exact integer
     // ac(lag) for lag 2..16, argmax lag (smallest ties), permille
     // score vs energy — tonal-vs-noise curation on real bytes.
-    "mm_audio_pitch" -> ((s, d) =>
+    Q("mm_audio_pitch", ((s, d) =>
       Multimodal.pcm16Autocorr(Multimodal.syntheticAudio(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // Analytic-sample replay of pcm16Autocorr: products joined on
+      // (doc, i, i+lag); floor division for the (possibly negative)
+      // permille score matches Math.floorDiv.
+      """WITH dm AS (SELECT doc_id, 64 + doc_id % 64 AS n FROM documents),
+        |si AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM dm),
+        |sm AS (SELECT doc_id, n, i,
+        |         (doc_id * 31 + i * 17) % 2048 - 1024 AS s FROM si),
+        |en AS (SELECT doc_id, CAST(max(n) AS BIGINT) AS n_samples,
+        |         CAST(sum(s * s) AS BIGINT) AS energy FROM sm GROUP BY doc_id),
+        |lg AS (SELECT doc_id, unnest(range(2, 17)) AS lag FROM dm),
+        |ac AS (SELECT a.doc_id, l.lag, CAST(sum(a.s * b.s) AS BIGINT) AS ac
+        |       FROM lg l
+        |       JOIN sm a ON a.doc_id = l.doc_id
+        |       JOIN sm b ON b.doc_id = l.doc_id AND b.i = a.i + l.lag
+        |       GROUP BY a.doc_id, l.lag),
+        |best AS (SELECT doc_id, lag, ac FROM (
+        |           SELECT doc_id, lag, ac,
+        |             row_number() OVER (PARTITION BY doc_id ORDER BY ac DESC, lag) AS rn
+        |           FROM ac) x WHERE rn = 1)
+        |SELECT en.doc_id, en.n_samples, en.energy,
+        |       CAST(best.lag AS BIGINT) AS best_lag, best.ac AS ac_best,
+        |       (best.ac * 1000) // en.energy AS periodicity_permille
+        |FROM en JOIN best ON best.doc_id = en.doc_id
+        |ORDER BY en.doc_id""".stripMargin)),
 
     // Indexed (palette) PNG: 1 index byte per pixel resolved through
     // the PLTE chunk — the third real PNG decode path (grey/truecolor
     // chains above). The oracle substitutes the analytic palette
     // formula into the analytic index formula.
-    "mm_decode_png_palette" -> ((s, d) => {
+    Q("mm_decode_png_palette", ((s, d) => {
       Multimodal.decodePng(Multimodal.syntheticPalettePngBlobs(Tables.documents(s, d)))
         .select(col("doc_id"),
           col("width").cast("long").as("width"),
@@ -1406,12 +3303,25 @@ object SparkEntry {
           col("channels").cast("long").as("channels"),
           col("n_pixels"), col("sum_r"), col("sum_g"), col("sum_b"), col("sum_a"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      """WITH d AS (SELECT doc_id, 1 + doc_id % 11 AS w, 1 + doc_id % 7 AS h FROM documents),
+        |gx AS (SELECT doc_id, w, h, unnest(range(0, w)) AS x FROM d),
+        |px AS (SELECT doc_id, w, h, x, unnest(range(0, h)) AS r FROM gx),
+        |pj AS (SELECT doc_id, w, h, (doc_id + x + r) % 16 AS j FROM px)
+        |SELECT doc_id,
+        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |       CAST(3 AS BIGINT) AS channels,
+        |       CAST(count(*) AS BIGINT) AS n_pixels,
+        |       CAST(sum((doc_id + 3 * j) % 256) AS BIGINT) AS sum_r,
+        |       CAST(sum((doc_id + 5 * j) % 256) AS BIGINT) AS sum_g,
+        |       CAST(sum((doc_id + 7 * j) % 256) AS BIGINT) AS sum_b,
+        |       CAST(0 AS BIGINT) AS sum_a
+        |FROM pj GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin)),
 
     // GIF87a pixel decode: full variable-width LZW (the spec-mandated
     // compression — hand-rolled; the JDK has no standalone LZW) over
     // complete fixture GIFs with an analytic palette + index grid.
-    "mm_decode_gif" -> ((s, d) => {
+    Q("mm_decode_gif", ((s, d) => {
       Multimodal.decodeGif(Multimodal.syntheticGifBlobs(Tables.documents(s, d)))
         .select(col("doc_id"),
           col("width").cast("long").as("width"),
@@ -1419,7 +3329,23 @@ object SparkEntry {
           col("channels").cast("long").as("channels"),
           col("n_pixels"), col("sum_r"), col("sum_g"), col("sum_b"), col("sum_a"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // GIF LZW decode: the oracle substitutes the analytic 16-entry
+      // palette into the analytic index grid — a hash match proves the
+      // variable-width LZW decode read every pixel back correctly.
+      """WITH d AS (SELECT doc_id, 1 + doc_id % 12 AS w, 1 + doc_id % 8 AS h FROM documents),
+        |gx AS (SELECT doc_id, w, h, unnest(range(0, w)) AS x FROM d),
+        |px AS (SELECT doc_id, w, h, x, unnest(range(0, h)) AS r FROM gx),
+        |pj AS (SELECT doc_id, w, h, (doc_id + x + 3 * r) % 16 AS j FROM px)
+        |SELECT doc_id,
+        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |       CAST(3 AS BIGINT) AS channels,
+        |       CAST(count(*) AS BIGINT) AS n_pixels,
+        |       CAST(sum((doc_id + 3 * j) % 256) AS BIGINT) AS sum_r,
+        |       CAST(sum((doc_id + 5 * j) % 256) AS BIGINT) AS sum_g,
+        |       CAST(sum((doc_id + 7 * j) % 256) AS BIGINT) AS sum_b,
+        |       CAST(0 AS BIGINT) AS sum_a
+        |FROM pj GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin)),
 
     // Baseline JPEG pixel decode: full marker walk + huffman scan +
     // DC prediction + dequantize + IDCT + YCbCr→RGB over complete
@@ -1428,7 +3354,7 @@ object SparkEntry {
     // at 2·dc+128, zero chroma ⇒ R=G=B=Y) — the oracle re-enumerates
     // the analytic per-block grid; the AC/huffman general path is
     // differential-tested vs javax.imageio in MultimodalHeaderSpec.
-    "mm_decode_jpeg" -> ((s, d) => {
+    Q("mm_decode_jpeg", ((s, d) => {
       Multimodal.decodeJpeg(Multimodal.syntheticJpegBlobs(Tables.documents(s, d)))
         .select(col("doc_id"),
           col("width").cast("long").as("width"),
@@ -1436,14 +3362,22 @@ object SparkEntry {
           col("channels").cast("long").as("channels"),
           col("n_pixels"), col("sum_r"), col("sum_g"), col("sum_b"), col("sum_a"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // JPEG decode replay: the DC-only fixture decodes to the exact
+      // flat value 2·dc(bx,by)+128 per 8×8 block (quantizer 16 ⇒ no
+      // IDCT rounding; zero chroma ⇒ R=G=B=Y) — the oracle substitutes
+      // the analytic DC grid into the block coordinates of every
+      // visible pixel, so a hash match proves the huffman scan, DC
+      // prediction chain, MCU interleave (incl. 4:2:0), dequantize,
+      // IDCT, color convert and edge crop all read back correctly.
+      jpegDecodeOracle)),
 
     // PROGRESSIVE (SOF2) decode: the same coefficients as
     // mm_decode_jpeg in multi-scan encoding (DC first + refinement +
     // per-component AC scans) — the query shares the baseline oracle
     // VERBATIM, so the hash match proves encoding is transparent to
     // decoded pixels, cross-engine.
-    "mm_decode_jpeg_progressive" -> ((s, d) => {
+    Q("mm_decode_jpeg_progressive", ((s, d) => {
       Multimodal.decodeJpeg(
           Multimodal.syntheticJpegProgressiveBlobs(Tables.documents(s, d)))
         .select(col("doc_id"),
@@ -1452,16 +3386,27 @@ object SparkEntry {
           col("channels").cast("long").as("channels"),
           col("n_pixels"), col("sum_r"), col("sum_g"), col("sum_b"), col("sum_a"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // progressive encoding must be invisible: SAME oracle (the
+      // rel_disorder_bucketed same-oracle equivalence idiom).
+      jpegDecodeOracle)),
 
     // Perceptual average-hash over DECODED pixels (gray → 8×8 block
     // means → shift-invariant threshold → 64-bit pack) — image
     // near-dup detection on the real decode path.
-    "mm_image_ahash" -> ((s, d) =>
+    Q("mm_image_ahash", ((s, d) =>
       Multimodal.imageAHash(Multimodal.syntheticAHashBlobs(Tables.documents(s, d)))
         .select(col("doc_id"), col("width").cast("long").as("width"),
           col("height").cast("long").as("height"), col("ahash"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // aHash replay: analytic gray grid → integer block means →
+      // floor-mean threshold → bit pack (bit 63 emitted as the signed
+      // Long's min-value term — DuckDB BIGINT << 63 overflow-checks).
+      aHashOracleCtes +
+      """
+        |SELECT doc_id, CAST(dim AS BIGINT) AS width, CAST(dim AS BIGINT) AS height,
+        |       ahash
+        |FROM ah ORDER BY doc_id""".stripMargin)),
 
     // Delta-vs-corpus image dedup against the STORED hash index (the
     // dedupeAgainstIndex contract on the multimodal axis): the index
@@ -1472,7 +3417,7 @@ object SparkEntry {
     // the rest read unique — storage must be transparent to results,
     // so the oracle replays hashes for BOTH sides and joins on
     // hamming ≤ 1 with no knowledge of segments or compaction.
-    "mm_index_probe" -> ((s, d) => {
+    Q("mm_index_probe", ((s, d) => {
       val idx = Multimodal.readImageIndex(s, storedImageIndexDir(s, d))
       val probe = Multimodal.imageAHash(Multimodal.syntheticJpegAHashBlobs(
           Tables.documents(s, d).filter(col("doc_id") >= 400)))
@@ -1490,7 +3435,46 @@ object SparkEntry {
             .when(coalesce(col("__nn"), lit(0L)) > 0, "dup_near_image")
             .otherwise("unique").as("verdict"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Stored-index probe replay: hashes for BOTH sides from the
+      // analytic dc field (the oracle knows nothing of segments,
+      // appends or compaction — storage must be transparent), hamming
+      // join at ≤ 1 (pigeonhole-complete), per-probe verdict arithmetic.
+      """WITH c AS (SELECT doc_id, unnest(range(0, 64)) AS cell FROM documents),
+        |m AS (SELECT doc_id, cell,
+        |        2 * ((doc_id * (1 + cell % 8) + (doc_id + 5) * (cell // 8) * (cell // 8)
+        |              + 3 * (cell % 8) * (cell // 8)) % 121 - 60)
+        |          + 128 AS m
+        |      FROM c),
+        |mn AS (SELECT doc_id, CAST(sum(m) // 64 AS BIGINT) AS mean
+        |       FROM m GROUP BY 1),
+        |b AS (SELECT m.doc_id, m.cell,
+        |        CASE WHEN m.m > mn.mean THEN 1 ELSE 0 END AS bit
+        |      FROM m JOIN mn ON m.doc_id = mn.doc_id),
+        |ah AS (SELECT doc_id,
+        |         CAST(sum(CASE WHEN cell < 63
+        |               THEN bit * (CAST(1 AS BIGINT) << CAST(cell AS INTEGER))
+        |               ELSE 0 END)
+        |           + sum(CASE WHEN cell = 63 AND bit = 1
+        |                 THEN -9223372036854775808 ELSE 0 END) AS BIGINT) AS ahash
+        |       FROM b GROUP BY doc_id),
+        |idx AS (SELECT doc_id, ahash FROM ah WHERE doc_id < 100),
+        |pr AS (SELECT doc_id, ahash FROM ah WHERE doc_id >= 400),
+        |mt AS (SELECT pr.doc_id,
+        |         CAST(sum(CASE WHEN bit_count(xor(pr.ahash, idx.ahash)) = 0
+        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
+        |         CAST(sum(CASE WHEN bit_count(xor(pr.ahash, idx.ahash)) = 1
+        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_near
+        |       FROM pr JOIN idx
+        |         ON bit_count(xor(pr.ahash, idx.ahash)) <= 1
+        |       GROUP BY 1)
+        |SELECT pr.doc_id, coalesce(mt.n_exact, 0) AS n_exact,
+        |  coalesce(mt.n_near, 0) AS n_near,
+        |  CASE WHEN coalesce(mt.n_exact, 0) > 0 THEN 'dup_exact_image'
+        |       WHEN coalesce(mt.n_near, 0) > 0 THEN 'dup_near_image'
+        |       ELSE 'unique' END AS verdict
+        |FROM pr LEFT JOIN mt ON pr.doc_id = mt.doc_id
+        |ORDER BY pr.doc_id""".stripMargin)),
 
     // WHOLE image-curation pipeline as ONE query (the corpus_e2e
     // discipline on the multimodal side): JPEG decode gate → aHash →
@@ -1499,7 +3483,7 @@ object SparkEntry {
     // so ids ≡ (mod 121) are EXACT duplicates — ~121 clusters over
     // 500 docs, a real curation signal, all replayed by the oracle
     // (analytic hashes → hamming pairs → recursive-CTE closure).
-    "mm_e2e_curate" -> ((s, d) => {
+    Q("mm_e2e_curate", ((s, d) => {
       // hashes feed the pair stage AND the doc count; pairs feed the
       // component loop AND the pair count — materialize each once
       // (round-10, the corpus_e2e_curate discipline) instead of
@@ -1519,13 +3503,55 @@ object SparkEntry {
         .select(col("n_docs"), col("n_dup_pairs"), col("n_clusters"),
           (col("__clustered") - col("n_clusters")).as("n_removed"),
           (col("n_docs") - (col("__clustered") - col("n_clusters"))).as("n_kept"))
-    }),
+    }), Some(
+      // The whole image-curation chain replayed: analytic hashes →
+      // hamming pairs (pigeonhole banding is COMPLETE for d < bands, so
+      // the plain ≤3 filter is the same pair set) → recursive-CTE
+      // closure → cluster survivor arithmetic.
+      """WITH RECURSIVE
+        |c AS (SELECT doc_id, unnest(range(0, 64)) AS cell FROM documents),
+        |m AS (SELECT doc_id, cell,
+        |        2 * ((doc_id * (1 + cell % 8) + (doc_id + 5) * (cell // 8) * (cell // 8)
+        |              + 3 * (cell % 8) * (cell // 8)) % 121 - 60)
+        |          + 128 AS m
+        |      FROM c),
+        |mn AS (SELECT doc_id, CAST(sum(m) // 64 AS BIGINT) AS mean
+        |       FROM m GROUP BY 1),
+        |b AS (SELECT m.doc_id, m.cell,
+        |        CASE WHEN m.m > mn.mean THEN 1 ELSE 0 END AS bit
+        |      FROM m JOIN mn ON m.doc_id = mn.doc_id),
+        |ah AS (SELECT doc_id,
+        |         CAST(sum(CASE WHEN cell < 63
+        |               THEN bit * (CAST(1 AS BIGINT) << CAST(cell AS INTEGER))
+        |               ELSE 0 END)
+        |           + sum(CASE WHEN cell = 63 AND bit = 1
+        |                 THEN -9223372036854775808 ELSE 0 END) AS BIGINT) AS ahash
+        |       FROM b GROUP BY doc_id),
+        |pairs AS (SELECT a.doc_id AS u, bb.doc_id AS v
+        |          FROM ah a JOIN ah bb
+        |            ON a.doc_id < bb.doc_id
+        |           AND bit_count(xor(a.ahash, bb.ahash)) <= 1),
+        |edges AS (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
+        |nodes AS (SELECT DISTINCT u AS node FROM edges),
+        |reach AS (
+        |  SELECT node, node AS label FROM nodes
+        |  UNION
+        |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node),
+        |comp AS (SELECT node, min(label) AS label FROM reach GROUP BY node),
+        |cs AS (SELECT CAST(count(DISTINCT label) AS BIGINT) AS n_clusters,
+        |         CAST(count(*) AS BIGINT) AS clustered FROM comp),
+        |np AS (SELECT CAST(count(*) AS BIGINT) AS n_dup_pairs FROM pairs),
+        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM ah)
+        |SELECT n_docs, n_dup_pairs, n_clusters,
+        |  clustered - n_clusters AS n_removed,
+        |  n_docs - (clustered - n_clusters) AS n_kept
+        |FROM nd CROSS JOIN np CROSS JOIN cs""".stripMargin)),
 
     // Resize over JPEG blobs — the vision-preprocessing step on the
     // majority web codec (previously BMP-only): same operator, codec
     // dispatch samples the decoded planes at the identical integer NN
     // rule; flat fixture blocks make every resized pixel analytic.
-    "mm_image_resize_jpeg" -> ((s, d) =>
+    Q("mm_image_resize_jpeg", ((s, d) =>
       Multimodal.imageResize(Multimodal.syntheticJpegBlobs(Tables.documents(s, d)))
         .select(col("doc_id"),
           col("width").cast("long").as("width"),
@@ -1533,36 +3559,111 @@ object SparkEntry {
           col("out_w").cast("long").as("out_w"),
           col("out_h").cast("long").as("out_h"),
           col("sum_r"), col("sum_g"), col("sum_b"), col("checksum"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // JPEG resize replay: source pixel (sx,sy) = (x·w div 16,
+      // y·h div 16) lands in block (sx div 8, sy div 8), flat at
+      // 2·dc+128; zero chroma ⇒ r=g=b=p, so the positional checksum
+      // weight collapses to p·65793 (1 + 2⁸ + 2¹⁶).
+      """WITH d AS (SELECT doc_id,
+        |    CASE doc_id % 3 WHEN 0 THEN 1 + doc_id % 21
+        |                    WHEN 1 THEN 1 + doc_id % 19
+        |                    ELSE 1 + doc_id % 23 END AS w,
+        |    CASE doc_id % 3 WHEN 0 THEN 1 + doc_id % 13
+        |                    WHEN 1 THEN 1 + doc_id % 11
+        |                    ELSE 1 + doc_id % 17 END AS h
+        |  FROM documents),
+        |gx AS (SELECT doc_id, w, h, unnest(range(0, 16)) AS x FROM d),
+        |px AS (SELECT doc_id, w, h, x, unnest(range(0, 16)) AS y FROM gx),
+        |sv AS (SELECT doc_id, w, h, x, y,
+        |         (x * w) // 16 AS sx, (y * h) // 16 AS sy FROM px),
+        |pv AS (SELECT doc_id, w, h, x, y,
+        |         2 * ((doc_id + 3 * (sx // 8) + 5 * (sy // 8)) % 121 - 60)
+        |           + 128 AS p
+        |       FROM sv)
+        |SELECT doc_id,
+        |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
+        |  CAST(16 AS BIGINT) AS out_w, CAST(16 AS BIGINT) AS out_h,
+        |  CAST(sum(p) AS BIGINT) AS sum_r,
+        |  CAST(sum(p) AS BIGINT) AS sum_g,
+        |  CAST(sum(p) AS BIGINT) AS sum_b,
+        |  CAST(sum((y * 16 + x + 1) * p * 65793) AS BIGINT) AS checksum
+        |FROM pv GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin)),
 
     // The perceptual hash over JPEG blobs — the majority web codec the
     // hash family previously skipped: same aHash operator, codec
     // dispatch decodes the JPEG luma plane into the gray block mesh.
     // Fixture: 64×64 grayscale, one flat JPEG block per hash cell, so
     // the oracle replays means/threshold/bits in closed form.
-    "mm_image_ahash_jpeg" -> ((s, d) =>
+    Q("mm_image_ahash_jpeg", ((s, d) =>
       Multimodal.imageAHash(Multimodal.syntheticJpegAHashBlobs(Tables.documents(s, d)))
         .select(col("doc_id"), col("width").cast("long").as("width"),
           col("height").cast("long").as("height"), col("ahash"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // JPEG aHash replay: cell (bx,by) = one flat JPEG block at
+      // 2·dc+128, mean = truncating sum/64, bit = m > mean, bit 63 via
+      // the signed min-value term (the aHash oracle convention).
+      """WITH c AS (SELECT doc_id, unnest(range(0, 64)) AS cell FROM documents),
+        |m AS (SELECT doc_id, cell,
+        |        2 * ((doc_id * (1 + cell % 8) + (doc_id + 5) * (cell // 8) * (cell // 8)
+        |              + 3 * (cell % 8) * (cell // 8)) % 121 - 60)
+        |          + 128 AS m
+        |      FROM c),
+        |mn AS (SELECT doc_id, CAST(sum(m) // 64 AS BIGINT) AS mean
+        |       FROM m GROUP BY 1),
+        |b AS (SELECT m.doc_id, m.cell,
+        |        CASE WHEN m.m > mn.mean THEN 1 ELSE 0 END AS bit
+        |      FROM m JOIN mn ON m.doc_id = mn.doc_id)
+        |SELECT doc_id, CAST(64 AS BIGINT) AS width, CAST(64 AS BIGINT) AS height,
+        |  CAST(sum(CASE WHEN cell < 63
+        |                THEN bit * (CAST(1 AS BIGINT) << CAST(cell AS INTEGER))
+        |                ELSE 0 END)
+        |    + sum(CASE WHEN cell = 63 AND bit = 1
+        |               THEN -9223372036854775808 ELSE 0 END) AS BIGINT) AS ahash
+        |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // Gradient-sign difference hash on the same decoded block mesh:
     // bit(r,c) = mean[r][(c+1) mod 8] > mean[r][c] — invariant to any
     // monotone global brightness shift, aHash's second opinion.
-    "mm_image_dhash" -> ((s, d) =>
+    Q("mm_image_dhash", ((s, d) =>
       Multimodal.imageDHash(Multimodal.syntheticDHashBlobs(Tables.documents(s, d)))
         .select(col("doc_id"), col("width").cast("long").as("width"),
           col("height").cast("long").as("height"), col("dhash"))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // dHash from its own fixture's block-mean CTE (id-dependent
+      // gradient structure): the right-neighbor (wrap) compare is a
+      // self-join of bm on the neighbor cell id.
+      dHashOracleCtes +
+      """,
+        |db AS (SELECT a.doc_id, a.dim, a.cell,
+        |         CASE WHEN b.m > a.m THEN 1 ELSE 0 END AS bit
+        |       FROM bm a JOIN bm b
+        |         ON b.doc_id = a.doc_id
+        |        AND b.cell = (a.cell // 8) * 8 + ((a.cell % 8) + 1) % 8),
+        |dh AS (SELECT doc_id, max(dim) AS dim,
+        |         CAST(sum(CASE WHEN cell < 63
+        |                       THEN bit * (CAST(1 AS BIGINT) << CAST(cell AS INTEGER))
+        |                       ELSE 0 END)
+        |           + sum(CASE WHEN cell = 63 AND bit = 1
+        |                      THEN -9223372036854775808 ELSE 0 END) AS BIGINT) AS dhash
+        |       FROM db GROUP BY doc_id)
+        |SELECT doc_id, CAST(dim AS BIGINT) AS width, CAST(dim AS BIGINT) AS height,
+        |       dhash
+        |FROM dh ORDER BY doc_id""".stripMargin)),
 
     // Near-dup image pairs by the Hamming PIGEONHOLE banding (4×16-bit
     // slices — COMPLETE for hamming ≤ 3, proof not s-curve), verified
     // with the native hamming64.
-    "mm_image_neardup" -> ((s, d) =>
+    Q("mm_image_neardup", ((s, d) =>
       Multimodal.aHashPairs(
           Multimodal.imageAHash(Multimodal.syntheticAHashBlobs(Tables.documents(s, d))),
           maxDistance = 3)
-        .orderBy(col("doc_a"), col("doc_b"))),
+        .orderBy(col("doc_a"), col("doc_b"))), Some(aHashOracleCtes +
+      """,
+        |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+        |         CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
+        |       FROM ah a JOIN ah b ON a.doc_id < b.doc_id)
+        |SELECT doc_a, doc_b, hamming FROM pr WHERE hamming <= 3
+        |ORDER BY doc_a, doc_b""".stripMargin)),
 
     // ─────────── end-to-end curation as ONE oracle-checked query ───────────
     // The whole batch pipeline — Gopher quality gate → exact dedup
@@ -1571,7 +3672,7 @@ object SparkEntry {
     // chained and hash-matched as a single result: the "a user can run
     // their pipeline on this engine" proof, not just per-stage rows.
     // (keep-best survivor selection is the dedup_keep_best variant.)
-    "corpus_e2e_curate" -> ((s, d) => {
+    Q("corpus_e2e_curate", ((s, d) => {
       val docs = Tables.documents(s, d)
       val gated = TextAnalysis.gopherGate(docs) // narrow gate, no shuffle
       // the gate→exact prefix feeds the near-dup pair stage AND the
@@ -1588,7 +3689,39 @@ object SparkEntry {
       afterExact.join(dropNear, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), md5(col("text").cast("binary")).as("fingerprint"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH RECURSIVE gf AS (SELECT doc_id,
+         |    CAST(len($tokSql) AS BIGINT) AS n_words,
+         |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_alpha_chars,
+         |    CAST(len(regexp_extract_all(text, '#|[.][.][.]')) AS BIGINT) AS n_sym,
+         |    CAST(len(list_filter($tokSql,
+         |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
+         |    CAST(len(list_filter($tokSql,
+         |      w -> w IN ('the', 'a', 'an', 'of', 'to', 'and', 'in'))) AS BIGINT) AS n_stop
+         |  FROM documents),
+         |gk AS (SELECT doc_id FROM gf
+         |  WHERE n_words BETWEEN 50 AND 100000
+         |    AND (CASE WHEN n_words > 0 THEN (n_alpha_chars * 1000) // n_words ELSE 0 END)
+         |        BETWEEN 3000 AND 10000
+         |    AND (CASE WHEN n_words > 0 THEN (n_sym * 1000) // n_words ELSE 0 END) <= 100
+         |    AND (CASE WHEN n_words > 0 THEN (n_alpha_words * 1000) // n_words ELSE 0 END) >= 800
+         |    AND n_stop >= 2),
+         |ex AS (SELECT min(doc_id) AS doc_id FROM documents
+         |       WHERE doc_id IN (SELECT doc_id FROM gk) GROUP BY md5(text)),
+         |${bandedPairsCtes(tokSql, " WHERE doc_id IN (SELECT doc_id FROM ex)", 900)},
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |cnodes AS (SELECT DISTINCT u AS node FROM edges),
+         |reach AS (
+         |  SELECT node, node AS label FROM cnodes
+         |  UNION
+         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node),
+         |comp AS (SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node)
+         |SELECT ex.doc_id, md5(dd.text) AS fingerprint
+         |FROM ex JOIN documents dd ON dd.doc_id = ex.doc_id
+         |LEFT JOIN comp c ON c.doc_id = ex.doc_id
+         |WHERE c.doc_id IS NULL OR c.component = ex.doc_id
+         |ORDER BY ex.doc_id""".stripMargin)),
 
     // v2 of the pipeline — the round-6 screening stages chained on:
     // Gopher gate → exact dedup → banded near-dedup → winnow EXCERPT
@@ -1607,7 +3740,7 @@ object SparkEntry {
     // The text md5 pins the extracted bytes; every feature is
     // recomputed independently by the oracle on the analytically
     // rebuilt kept text.
-    "corpus_e2e_web" -> ((s, d) => {
+    Q("corpus_e2e_web", ((s, d) => {
       val bodies = Multimodal.warcHttpBodies(
           Multimodal.syntheticWebWarcBlobs(Tables.documents(s, d)))
         .filter(col("content_type") === "text/html")
@@ -1621,13 +3754,60 @@ object SparkEntry {
           col("symbol_permille"), col("alpha_word_permille"), col("n_stop"),
           col("keep"), md5(col("text").cast("binary")).as("text_md5"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Kept-set replay (same analytic rules as text_html_extract) +
+      // independent recomputation of every Gopher feature on the
+      // rebuilt text — both engines derive the keep decision from
+      // their own parse of the same strings.
+      """WITH d AS (SELECT doc_id, 2 + doc_id % 4 AS np FROM documents),
+        |paras AS (SELECT doc_id, p * 2 AS ord,
+        |    'the quick data point ' || CAST((doc_id * 7 + p) % 1000 AS VARCHAR) ||
+        |    ' is on the record & file and the value ' ||
+        |    CAST((doc_id + p) % 100 AS VARCHAR) ||
+        |    ' stays in the set for now .' AS txt
+        |  FROM (SELECT doc_id, unnest(range(0, np)) AS p FROM d)),
+        |figs AS (SELECT doc_id, 1 AS ord,
+        |    'Figure ' || CAST(doc_id % 10 AS VARCHAR) AS txt
+        |  FROM d WHERE doc_id % 2 = 0),
+        |kept AS (SELECT * FROM paras UNION ALL SELECT * FROM figs),
+        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
+        |          string_agg(txt, chr(10) ORDER BY ord) AS text
+        |        FROM kept GROUP BY doc_id),
+        |fl AS (SELECT doc_id, n_kept, text,
+        |         replace(text, chr(10), ' ') AS flat FROM agg),
+        |ft AS (SELECT doc_id, n_kept, text,
+        |    CAST(len(list_filter(string_split(flat, ' '), w -> w <> '')) AS BIGINT) AS n_words,
+        |    CAST(length(replace(flat, ' ', '')) AS BIGINT) AS nospace,
+        |    CAST(len(regexp_extract_all(flat, '#|[.][.][.]')) AS BIGINT) AS n_sym,
+        |    CAST(len(list_filter(string_split(flat, ' '),
+        |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS n_alpha,
+        |    CAST(len(list_filter(string_split(flat, ' '),
+        |      w -> w IN ('the', 'a', 'an', 'of', 'to', 'and', 'in'))) AS BIGINT) AS n_stop
+        |  FROM fl),
+        |g AS (SELECT doc_id, n_kept, text, n_words,
+        |    nospace * 1000 // n_words AS mwl,
+        |    n_sym * 1000 // n_words AS sym,
+        |    n_alpha * 1000 // n_words AS alw, n_stop FROM ft)
+        |SELECT doc_id,
+        |  (['identity','gzip','deflate'])[CAST(doc_id % 3 AS INTEGER) + 1]
+        |    AS content_encoding,
+        |  CAST(9 + doc_id % 4 + doc_id % 2 AS BIGINT) AS n_blocks,
+        |  n_kept, n_words,
+        |  CAST(mwl AS BIGINT) AS mean_word_len_permille,
+        |  CAST(sym AS BIGINT) AS symbol_permille,
+        |  CAST(alw AS BIGINT) AS alpha_word_permille, n_stop,
+        |  CAST(CASE WHEN n_words BETWEEN 50 AND 100000
+        |             AND mwl BETWEEN 3000 AND 10000 AND sym <= 100
+        |             AND alw >= 800 AND n_stop >= 2
+        |       THEN 1 ELSE 0 END AS BIGINT) AS keep,
+        |  md5(text) AS text_md5
+        |FROM g ORDER BY doc_id""".stripMargin)),
 
     // The PDF ingest seam: container walk → per-page Tj/TJ text →
     // pages joined at line grain → C4 line rules. One shuffle total
     // (the per-doc page join), the rest narrow; page text ends '.'
     // so pages survive the line gate and the page COUNT drives keep.
-    "corpus_e2e_pdf" -> ((s, d) => {
+    Q("corpus_e2e_pdf", ((s, d) => {
       val pages = Multimodal.pdfTextPages(
         Multimodal.syntheticPdfBlobs(Tables.documents(s, d)))
       val docsTx = pages.groupBy(col("doc_id"))
@@ -1636,7 +3816,47 @@ object SparkEntry {
             collect_list(struct(col("page"), col("text"))))
             .getField("text")).as("text"))
       TextAnalysis.c4Rules(docsTx).orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // v1's chain + the winnow excerpt screen + embedding-space
+      // decontamination, replayed as one program.
+      // Page-grain replay: rebuild each page's analytic text, classify
+      // with the same single-level-lambda line rules, join in page
+      // order — the PDF walk, Flate transparency and page ordering are
+      // all upstream of the md5.
+      """WITH d AS (SELECT doc_id, 1 + doc_id % 4 AS np FROM documents),
+        |pg AS (SELECT doc_id, unnest(range(0, np)) AS p FROM d),
+        |t AS (SELECT doc_id, p,
+        |    'Doc ' || CAST(doc_id AS VARCHAR) || ' page ' || CAST(p AS VARCHAR) ||
+        |    ' body ' || CAST((doc_id * 3 + p) % 50 AS VARCHAR) || ' and ' ||
+        |    CASE WHEN doc_id % 3 = 0
+        |         THEN 'tail (' || CAST((doc_id + p) % 7 AS VARCHAR) || ') \ done.'
+        |         ELSE 'tail ' || CAST((doc_id + p) % 7 AS VARCHAR) || ' done.' END
+        |      AS text
+        |  FROM pg),
+        |lk AS (SELECT doc_id, p, text,
+        |    len(list_filter(string_split(text, ' '), w -> w <> '')) AS nw,
+        |    CASE WHEN len(list_filter(string_split(text, ' '), w -> w <> '')) >= 4
+        |          AND substr(text, length(text), 1) IN ('.', '!', '?', '"')
+        |         THEN 1 ELSE 0 END AS k
+        |  FROM t),
+        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines,
+        |    CAST(sum(k) AS BIGINT) AS n_kept_lines,
+        |    CAST(coalesce(sum(CASE WHEN k = 1 THEN nw END), 0) AS BIGINT)
+        |      AS n_kept_words,
+        |    string_agg(text, chr(10) ORDER BY p) AS fulltext,
+        |    md5(coalesce(string_agg(CASE WHEN k = 1 THEN text END,
+        |          chr(10) ORDER BY p), '')) AS kept_md5
+        |  FROM lk GROUP BY doc_id)
+        |SELECT doc_id, n_lines, n_kept_lines, n_kept_words,
+        |  CAST(CASE WHEN position('lorem ipsum' IN lower(fulltext)) > 0
+        |       THEN 1 ELSE 0 END AS BIGINT) AS has_lorem,
+        |  CAST(CASE WHEN position('{' IN fulltext) > 0 THEN 1 ELSE 0 END AS BIGINT)
+        |    AS has_brace,
+        |  CAST(CASE WHEN position('lorem ipsum' IN lower(fulltext)) = 0
+        |        AND position('{' IN fulltext) = 0 AND n_kept_lines >= 3
+        |       THEN 1 ELSE 0 END AS BIGINT) AS keep,
+        |  kept_md5
+        |FROM agg ORDER BY doc_id""".stripMargin)),
 
     // The web seam composed one stage further: extraction's '\n'-joined
     // block output IS the C4 gate's line grain, so the chain
@@ -1644,16 +3864,47 @@ object SparkEntry {
     // (and still zero shuffles). Paragraph blocks end '.', figure/
     // title-less fragments don't — the line gate's survival varies
     // within one page, which the kept-text md5 pins.
-    "corpus_e2e_web2" -> ((s, d) => {
+    Q("corpus_e2e_web2", ((s, d) => {
       val bodies = Multimodal.warcHttpBodies(
           Multimodal.syntheticWebWarcBlobs(Tables.documents(s, d)))
         .filter(col("content_type") === "text/html")
       val extracted = WebExtract.htmlExtract(bodies, htmlCol = "body_text")
       TextAnalysis.c4Rules(extracted)
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Block-grain replay: the extractor's kept blocks ARE the C4
+      // gate's lines, so the oracle classifies each analytic block with
+      // the same (single-level-lambda) line rules — paragraph blocks
+      // survive (≥4 words, terminal '.'), figure labels don't, and the
+      // page keep flips on np ≥ 3.
+      """WITH d AS (SELECT doc_id, 2 + doc_id % 4 AS np FROM documents),
+        |paras AS (SELECT doc_id, p * 2 AS ord,
+        |    'the quick data point ' || CAST((doc_id * 7 + p) % 1000 AS VARCHAR) ||
+        |    ' is on the record & file and the value ' ||
+        |    CAST((doc_id + p) % 100 AS VARCHAR) ||
+        |    ' stays in the set for now .' AS txt
+        |  FROM (SELECT doc_id, unnest(range(0, np)) AS p FROM d)),
+        |figs AS (SELECT doc_id, 1 AS ord,
+        |    'Figure ' || CAST(doc_id % 10 AS VARCHAR) AS txt
+        |  FROM d WHERE doc_id % 2 = 0),
+        |kept AS (SELECT * FROM paras UNION ALL SELECT * FROM figs),
+        |lk AS (SELECT doc_id, txt, ord,
+        |    CASE WHEN len(list_filter(string_split(txt, ' '), w -> w <> '')) >= 4
+        |          AND substr(txt, length(txt), 1) IN ('.', '!', '?', '"')
+        |         THEN 1 ELSE 0 END AS k,
+        |    len(list_filter(string_split(txt, ' '), w -> w <> '')) AS nw
+        |  FROM kept)
+        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines,
+        |  CAST(sum(k) AS BIGINT) AS n_kept_lines,
+        |  CAST(coalesce(sum(CASE WHEN k = 1 THEN nw END), 0) AS BIGINT)
+        |    AS n_kept_words,
+        |  CAST(0 AS BIGINT) AS has_lorem, CAST(0 AS BIGINT) AS has_brace,
+        |  CAST(CASE WHEN sum(k) >= 3 THEN 1 ELSE 0 END AS BIGINT) AS keep,
+        |  md5(coalesce(string_agg(CASE WHEN k = 1 THEN txt END,
+        |        chr(10) ORDER BY ord), '')) AS kept_md5
+        |FROM lk GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
-    "corpus_e2e_curate2" -> ((s, d) => {
+    Q("corpus_e2e_curate2", ((s, d) => {
       val docs = Tables.documents(s, d)
       val gated = TextAnalysis.gopherGate(docs)
       // the gate→exact prefix feeds the near-dup pair stage AND every
@@ -1683,114 +3934,358 @@ object SparkEntry {
         .join(sem, Seq("doc_id"), "left_anti")
         .select(col("doc_id"), md5(col("text").cast("binary")).as("fingerprint"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH RECURSIVE gf AS (SELECT doc_id,
+         |    CAST(len($tokSql) AS BIGINT) AS n_words,
+         |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_alpha_chars,
+         |    CAST(len(regexp_extract_all(text, '#|[.][.][.]')) AS BIGINT) AS n_sym,
+         |    CAST(len(list_filter($tokSql,
+         |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
+         |    CAST(len(list_filter($tokSql,
+         |      w -> w IN ('the', 'a', 'an', 'of', 'to', 'and', 'in'))) AS BIGINT) AS n_stop
+         |  FROM documents),
+         |gk AS (SELECT doc_id FROM gf
+         |  WHERE n_words BETWEEN 50 AND 100000
+         |    AND (CASE WHEN n_words > 0 THEN (n_alpha_chars * 1000) // n_words ELSE 0 END)
+         |        BETWEEN 3000 AND 10000
+         |    AND (CASE WHEN n_words > 0 THEN (n_sym * 1000) // n_words ELSE 0 END) <= 100
+         |    AND (CASE WHEN n_words > 0 THEN (n_alpha_words * 1000) // n_words ELSE 0 END) >= 800
+         |    AND n_stop >= 2),
+         |ex AS (SELECT min(doc_id) AS doc_id FROM documents
+         |       WHERE doc_id IN (SELECT doc_id FROM gk) GROUP BY md5(text)),
+         |${bandedPairsCtes(tokSql, " WHERE doc_id IN (SELECT doc_id FROM ex)", 900)},
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |cnodes AS (SELECT DISTINCT u AS node FROM edges),
+         |reach AS (
+         |  SELECT node, node AS label FROM cnodes
+         |  UNION
+         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node),
+         |comp AS (SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node),
+         |kn AS (SELECT ex.doc_id FROM ex LEFT JOIN comp c ON c.doc_id = ex.doc_id
+         |       WHERE c.doc_id IS NULL OR c.component = ex.doc_id),
+         |${winnowSelCtesWhere(" AND doc_id IN (SELECT doc_id FROM kn)")},
+         |wf AS (SELECT doc_id, unnest(sl) AS fp FROM sel),
+         |wc AS (SELECT fp, CAST(count(*) AS BIGINT) AS df FROM wf GROUP BY fp),
+         |wkept AS (SELECT wf.doc_id, wf.fp FROM wf JOIN wc USING (fp) WHERE df <= 50),
+         |wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
+         |         CAST(count(*) AS BIGINT) AS n_shared
+         |       FROM wkept a JOIN wkept b ON a.fp = b.fp AND a.doc_id < b.doc_id
+         |       GROUP BY 1, 2),
+         |dropx AS (SELECT DISTINCT doc_b AS doc_id FROM wp WHERE n_shared >= 5),
+         |k2 AS (SELECT doc_id FROM kn
+         |       WHERE doc_id NOT IN (SELECT doc_id FROM dropx)),
+         |e2 AS (SELECT vec_id, label, embedding,
+         |         ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
+         |te2 AS (SELECT * FROM e2 WHERE vec_id % 10 = 0),
+         |tr2 AS (SELECT e2.* FROM e2 JOIN k2 ON k2.doc_id = e2.vec_id
+         |        WHERE vec_id % 10 <> 0),
+         |sem AS (SELECT DISTINCT tr2.vec_id AS doc_id
+         |        FROM tr2 JOIN te2 ON tr2.label = te2.label
+         |        WHERE round(${dotSql("tr2.embedding", "te2.embedding")}
+         |                / sqrt(tr2.n2 * te2.n2), 4) >= 0.4)
+         |SELECT k2.doc_id, md5(dd.text) AS fingerprint
+         |FROM k2 JOIN documents dd ON dd.doc_id = k2.doc_id
+         |WHERE k2.doc_id % 10 <> 0
+         |  AND k2.doc_id NOT IN (SELECT doc_id FROM sem)
+         |ORDER BY k2.doc_id""".stripMargin)),
 
     // ──────────────────── corpus management (splits / sampling / QA) ────────────────────
 
-    "corpus_split" -> ((s, d) => {
+    Q("corpus_split", ((s, d) => {
       Corpus.split(Tables.documents(s, d))
         .select(col("doc_id"), col("bucket"), col("split"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH h AS (SELECT doc_id, md5('split|' || CAST(doc_id AS VARCHAR)) AS m FROM documents),
+         |b AS (SELECT doc_id, (${hexSliceSql("m", 1)}) % 1000 AS bucket FROM h)
+         |SELECT doc_id, bucket,
+         |       CASE WHEN bucket < 900 THEN 'train'
+         |            WHEN bucket < 950 THEN 'val'
+         |            ELSE 'test' END AS split
+         |FROM b ORDER BY doc_id""".stripMargin)),
 
     // Leakage-safe split: the hash decision rides the near-dup CLUSTER
     // representative (min doc_id via connected components over banded
     // Jaccard pairs), so near-copies can never straddle train/test;
     // docs with no near-dup hash identically to corpus_split.
-    "corpus_split_leakage_safe" -> ((s, d) => {
+    Q("corpus_split_leakage_safe", ((s, d) => {
       val docs = Tables.documents(s, d)
       val pairs = sharedNearDupPairs(s, d)
       Corpus.leakageSafeSplit(docs, pairs)
         .select(col("doc_id"), col("component"), col("bucket"), col("split"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH RECURSIVE ${bandedPairsCtes(tokSql, "", 900)},
+         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
+         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
+         |cnodes AS (SELECT DISTINCT u AS node FROM edges),
+         |reach AS (
+         |  SELECT node, node AS label FROM cnodes
+         |  UNION
+         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node),
+         |comp AS (SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node),
+         |asg AS (SELECT dd.doc_id, coalesce(c.component, dd.doc_id) AS component
+         |        FROM documents dd LEFT JOIN comp c ON c.doc_id = dd.doc_id),
+         |hh AS (SELECT doc_id, component,
+         |        md5('split|' || CAST(component AS VARCHAR)) AS m FROM asg),
+         |bb AS (SELECT doc_id, component, (${hexSliceSql("m", 1)}) % 1000 AS bucket FROM hh)
+         |SELECT doc_id, component, bucket,
+         |       CASE WHEN bucket < 900 THEN 'train'
+         |            WHEN bucket < 950 THEN 'val'
+         |            ELSE 'test' END AS split
+         |FROM bb ORDER BY doc_id""".stripMargin)),
 
     // Linear quality model in basis-point integers: the trained-
     // classifier slot of a curation pipeline, scoring form only.
-    "text_quality_model" -> ((s, d) => {
+    Q("text_quality_model", ((s, d) => {
       TextAnalysis.modelQualityScore(Tables.documents(s, d),
           weightsBp = Map("n_tokens" -> 5L, "mean_tok_len_permille" -> -1L,
             "stop_permille" -> 3L, "distinct_permille" -> 2L),
           biasBp = -2000L)
         .select(col("doc_id"), col("logit_bp"), col("keep"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH f AS (SELECT doc_id,
+         |    CAST(len($tokSql) AS BIGINT) AS n_tokens,
+         |    CAST(len(list_distinct($tokSql)) AS BIGINT) AS n_distinct,
+         |    CAST(len(list_filter(string_split(text, ' '),
+         |      x -> x = 'the' OR x = 'a' OR x = 'an' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in')) AS BIGINT) AS n_stop,
+         |    length(replace(text, ' ', '')) AS tok_chars
+         |  FROM documents),
+         |g AS (SELECT doc_id,
+         |    -2000 + 5 * n_tokens
+         |          - 1 * CAST(floor(tok_chars * 1000 / n_tokens) AS BIGINT)
+         |          + 3 * CAST(floor(n_stop * 1000 / n_tokens) AS BIGINT)
+         |          + 2 * CAST(floor(n_distinct * 1000 / n_tokens) AS BIGINT) AS logit_bp
+         |  FROM f)
+         |SELECT doc_id, CAST(logit_bp AS BIGINT) AS logit_bp,
+         |       CAST(CASE WHEN logit_bp >= 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
+         |FROM g ORDER BY doc_id""".stripMargin)),
 
     // Closed-form least-squares fit of token count from (char length,
     // vowel count; the synthetic texts carry no punctuation): one
     // sufficient-statistics pass + exact
     // wide-integer Cramer solve; weights as exact rationals.
-    "text_linear_fit" -> ((s, d) => {
+    Q("text_linear_fit", ((s, d) => {
       TextAnalysis.fitLinear(Tables.documents(s, d),
           yCol = size(Dedup.tokens(col("text"))),
           x1 = length(col("text")),
           x2 = length(regexp_replace(col("text"), "[^aeiou]", "")),
           names = ("intercept", "char_len", "vowels"))
         .orderBy(col("feature"))
+    }), Some {
+      // Same Cramer formula TEXT as the Spark side (TextAnalysis.cramer3Sql),
+      // evaluated over HUGEINT instead of DECIMAL(38,0).
+      val f = operators.TextAnalysis.cramer3Sql(c => s"CAST($c AS HUGEINT)")
+      s"""WITH f AS (SELECT CAST(len($tokSql) AS BIGINT) AS y,
+         |             CAST(length(text) AS BIGINT) AS x1,
+         |             CAST(length(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS x2
+         |           FROM documents),
+         |s AS (SELECT CAST(count(*) AS HUGEINT) AS n,
+         |        sum(x1) AS s1, sum(x2) AS s2,
+         |        sum(x1*x1) AS s11, sum(x1*x2) AS s12, sum(x2*x2) AS s22,
+         |        sum(y) AS sy, sum(x1*y) AS s1y, sum(x2*y) AS s2y FROM f),
+         |dt AS (SELECT ${f("det")} AS det, ${f("det0")} AS det0,
+         |         ${f("det1")} AS det1, ${f("det2")} AS det2 FROM s),
+         |nm AS (SELECT
+         |    CAST(CASE WHEN det < 0 THEN -det0 ELSE det0 END AS VARCHAR) AS w0,
+         |    CAST(CASE WHEN det < 0 THEN -det1 ELSE det1 END AS VARCHAR) AS w1,
+         |    CAST(CASE WHEN det < 0 THEN -det2 ELSE det2 END AS VARCHAR) AS w2,
+         |    CAST(abs(det) AS VARCHAR) AS w_den FROM dt)
+         |SELECT 'intercept' AS feature, w0 AS w_num, w_den FROM nm
+         |UNION ALL SELECT 'char_len', w1, w_den FROM nm
+         |UNION ALL SELECT 'vowels', w2, w_den FROM nm
+         |ORDER BY feature""".stripMargin
     }),
 
     // Encoding-corruption signal. The corpus is clean, so mojibake is
     // injected deterministically by doc_id (as with text_pii_scrub):
     // UTF-8-as-Latin-1 digraphs and U+FFFD replacement chars.
-    "text_mojibake" -> ((s, d) => {
+    Q("text_mojibake", ((s, d) => {
       val injected = Tables.documents(s, d).withColumn("text",
         when(pmod(col("doc_id"), lit(4)) === 0, concat(lit("cafÃ© "), col("text")))
           .when(pmod(col("doc_id"), lit(4)) === 1, concat(lit("��bytes "), col("text")))
           .when(pmod(col("doc_id"), lit(4)) === 2, concat(lit("itâs "), col("text")))
           .otherwise(col("text")))
       TextAnalysis.mojibake(injected).orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH inj AS (SELECT doc_id,
+         |    CASE WHEN doc_id % 4 = 0 THEN 'cafÃ© ' || text
+         |         WHEN doc_id % 4 = 1 THEN '��bytes ' || text
+         |         WHEN doc_id % 4 = 2 THEN 'itâs ' || text
+         |         ELSE text END AS text
+         |  FROM documents),
+         |m AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
+         |    CAST(length(regexp_replace(text, '[^�]', '', 'g')) AS BIGINT) AS n_replacement,
+         |    CAST(length(regexp_replace(text, '[^ÃÂâ]', '', 'g')) AS BIGINT) AS n_latin1_markers
+         |  FROM inj)
+         |SELECT doc_id, n_chars, n_replacement, n_latin1_markers,
+         |  CAST(CASE WHEN n_chars = 0 THEN 0
+         |       ELSE (n_replacement + n_latin1_markers) * 1000 // n_chars END AS BIGINT) AS mojibake_permille
+         |FROM m ORDER BY doc_id""".stripMargin)),
 
     // Train→apply in one pipeline: the fitted model (4 wide integers)
     // inlined as literals, per-doc residual r = den·(y − ŷ) exactly.
-    "text_linear_residuals" -> ((s, d) => {
+    Q("text_linear_residuals", ((s, d) => {
       TextAnalysis.linearResiduals(Tables.documents(s, d),
           yCol = size(Dedup.tokens(col("text"))),
           x1 = length(col("text")),
           x2 = length(regexp_replace(col("text"), "[^aeiou]", "")))
         .orderBy(col("doc_id"))
+    }), Some {
+      val f = operators.TextAnalysis.cramer3Sql(c => s"CAST($c AS HUGEINT)")
+      s"""WITH f AS (SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS y,
+         |             CAST(length(text) AS BIGINT) AS x1,
+         |             CAST(length(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS x2
+         |           FROM documents),
+         |s AS (SELECT CAST(count(*) AS HUGEINT) AS n,
+         |        sum(x1) AS s1, sum(x2) AS s2,
+         |        sum(x1*x1) AS s11, sum(x1*x2) AS s12, sum(x2*x2) AS s22,
+         |        sum(y) AS sy, sum(x1*y) AS s1y, sum(x2*y) AS s2y FROM f),
+         |dt AS (SELECT ${f("det")} AS det, ${f("det0")} AS det0,
+         |         ${f("det1")} AS det1, ${f("det2")} AS det2 FROM s),
+         |nm AS (SELECT CASE WHEN det < 0 THEN -det0 ELSE det0 END AS n0,
+         |         CASE WHEN det < 0 THEN -det1 ELSE det1 END AS n1,
+         |         CASE WHEN det < 0 THEN -det2 ELSE det2 END AS n2,
+         |         abs(det) AS den FROM dt)
+         |SELECT doc_id,
+         |  CAST(CAST(y AS HUGEINT)*den - (n0 + n1*CAST(x1 AS HUGEINT) + n2*CAST(x2 AS HUGEINT)) AS VARCHAR) AS resid
+         |FROM f, nm ORDER BY doc_id""".stripMargin
     }),
 
     // Sliding-window chunking into 16-token sequences, stride 8 (50%
     // overlap) — the doc→training-sequence step; chunk text md5-pinned.
-    "corpus_chunk" -> ((s, d) => {
+    Q("corpus_chunk", ((s, d) => {
       Corpus.chunk(Tables.documents(s, d), chunkTokens = 16, strideTokens = 8)
         .select(col("doc_id"), col("chunk_idx"), col("n_chunk_tokens"),
           md5(col("chunk_text").cast("binary")).as("chunk_md5"))
         .orderBy(col("doc_id"), col("chunk_idx"))
-    }),
+    }), Some(
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |n AS (SELECT doc_id, tk, len(tk) AS ln,
+         |        CASE WHEN len(tk) = 0 THEN 0
+         |             ELSE (greatest(len(tk) - 16, 0) + 7) // 8 + 1 END AS nch
+         |      FROM t),
+         |s AS (SELECT doc_id, tk, ln,
+         |        unnest(list_transform(range(0, nch),
+         |          i -> {'chunk_idx': i, 'st': i * 8}), recursive := true)
+         |      FROM n)
+         |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
+         |       CAST(least(16, ln - st) AS BIGINT) AS n_chunk_tokens,
+         |       md5(array_to_string(tk[st+1 : st+16], ' ')) AS chunk_md5
+         |FROM s ORDER BY doc_id, chunk_idx""".stripMargin)),
 
     // Content-defined chunking (FastCDC/rsync on token streams):
     // boundaries where the 4-token window fingerprint ≡ 0 mod 32, so
     // chunk hashes survive insertions (boundaries resync) — the
     // sub-document dedup fixed-stride chunking structurally misses.
     // `stale` marks chunks first seen in an earlier doc.
-    "corpus_cdc_chunks" -> ((s, d) => {
+    Q("corpus_cdc_chunks", ((s, d) => {
       Corpus.cdcChunks(Tables.documents(s, d), window = 4, modulus = 32)
         .orderBy(col("doc_id"), col("chunk_idx"))
+    }), Some {
+      // CDC replayed: per-position windowed md5 fingerprints, modulus
+      // boundary flags, running chunk index (window sum to 1 PRECEDING),
+      // order-pinned chunk reassembly, first-seen stale marker.
+      val winFp = hexSliceSql("md5(array_to_string(tk[CAST(i - 3 AS INTEGER) : CAST(i AS INTEGER)], ' '))", 1)
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |fl AS (SELECT doc_id, tk,
+         |         list_transform(range(1, len(tk) + 1),
+         |           i -> CASE WHEN i >= 4 AND ($winFp) % 32 = 0
+         |                THEN 1 ELSE 0 END) AS flags
+         |       FROM t WHERE len(tk) >= 1),
+         |pe AS (SELECT doc_id, unnest(list_transform(range(1, len(tk) + 1),
+         |         i -> {'pos': i, 'tok': tk[CAST(i AS INTEGER)],
+         |               'flag': flags[CAST(i AS INTEGER)]}), recursive := true)
+         |       FROM fl),
+         |cx AS (SELECT doc_id, pos, tok,
+         |         coalesce(sum(flag) OVER (PARTITION BY doc_id ORDER BY pos
+         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_idx
+         |       FROM pe),
+         |ch AS (SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
+         |         CAST(count(*) AS BIGINT) AS n_chunk_tokens,
+         |         md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_md5
+         |       FROM cx GROUP BY doc_id, chunk_idx),
+         |ow AS (SELECT chunk_md5, min(doc_id) AS owner FROM ch GROUP BY chunk_md5)
+         |SELECT ch.doc_id, ch.chunk_idx, ch.n_chunk_tokens, ch.chunk_md5,
+         |       CAST(CASE WHEN ow.owner < ch.doc_id THEN 1 ELSE 0 END AS BIGINT) AS stale
+         |FROM ch JOIN ow USING (chunk_md5)
+         |ORDER BY doc_id, chunk_idx""".stripMargin
     }),
 
     // Synthetic crawl URLs injected per doc (the table carries none):
     // mixed-case scheme/host, tracking params bracketing a real one,
     // fragment — normalization must fix all of it.
-    "text_url_normalize" -> ((s, d) => {
+    Q("text_url_normalize", ((s, d) => {
       Corpus.urlParts(withUrls(Tables.documents(s, d)))
         .select(col("doc_id"), col("host"), col("domain"), col("url_norm"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Mirrors Corpus.normalizeUrl's fixed pass order; DuckDB backrefs
+      // are \1 where Spark's are $1 (same semantics).
+      s"""WITH d AS (SELECT doc_id, $urlInjectSql AS url FROM documents),
+         |n1 AS (SELECT doc_id,
+         |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*://[A-Za-z0-9.-]+)', 1)) ||
+         |    regexp_replace(url, '^[A-Za-z][A-Za-z0-9+.-]*://[A-Za-z0-9.-]+', '') AS u
+         |  FROM d),
+         |n2 AS (SELECT doc_id, regexp_replace(u, '#.*$$', '') AS u FROM n1),
+         |n3 AS (SELECT doc_id, regexp_replace(u, '\\?', '&', 'g') AS u FROM n2),
+         |n4 AS (SELECT doc_id,
+         |    regexp_replace(u, '&(utm_[A-Za-z]+|fbclid|gclid)=[^&]*', '', 'g') AS u FROM n3),
+         |n5 AS (SELECT doc_id, regexp_replace(u, '^([^&]*)&', '\\1?') AS u FROM n4),
+         |n6 AS (SELECT doc_id, regexp_replace(u, '[?&]$$', '') AS url_norm FROM n5),
+         |h AS (SELECT doc_id, url_norm,
+         |    regexp_extract(url_norm, '^[a-z][a-z0-9+.-]*://([a-z0-9.-]+)', 1) AS host FROM n6)
+         |SELECT doc_id, host,
+         |       regexp_extract(host, '([a-z0-9-]+\\.[a-z0-9-]+)$$', 1) AS domain, url_norm
+         |FROM h ORDER BY doc_id""".stripMargin)),
 
     // URL-quality frontier gate: integer-permille score from path
     // depth / param count / session-ids / media extensions / spam-TLD
     // classes, computed by BOTH engines from the raw URL string with
     // their own regex engines — a genuine cross-engine parse, not a
     // fixture replay. The varied fixture sweeps every signal.
-    "text_url_quality" -> ((s, d) => {
+    Q("text_url_quality", ((s, d) => {
       Corpus.urlQuality(withVariedUrls(Tables.documents(s, d)))
         .select(col("doc_id"), col("host"), col("path_depth"), col("n_params"),
           col("has_session"), col("bad_ext"), col("bad_tld"), col("long_path"),
           col("url_score"), col("keep"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Independent re-parse of the same URL string with DuckDB's RE2 —
+      // both engines extract host/path/query and score with the same
+      // integer penalty table; nothing is replayed from fixture rules.
+      s"""WITH u AS (SELECT doc_id, $variedUrlSql AS url FROM documents),
+         |p AS (SELECT doc_id,
+         |    lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)) AS host,
+         |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS pth,
+         |    regexp_extract(url, '\\?([^#]*)', 1) AS qry
+         |  FROM u),
+         |f AS (SELECT doc_id, host,
+         |    CAST(length(pth) - length(replace(pth, '/', '')) AS BIGINT) AS path_depth,
+         |    CAST(CASE WHEN qry = '' THEN 0
+         |              ELSE len(string_split(qry, '&')) END AS BIGINT) AS n_params,
+         |    CAST(CASE WHEN regexp_matches(lower(qry),
+         |             '(^|&)(sid|sessionid|phpsessid|jsessionid)=')
+         |           OR regexp_matches(lower(pth), '[0-9a-f]{24}')
+         |         THEN 1 ELSE 0 END AS BIGINT) AS has_session,
+         |    CAST(CASE WHEN regexp_matches(lower(pth),
+         |             '[.](jpg|jpeg|png|gif|zip|exe|css|js|ico|svg|mp4|mp3)$$')
+         |         THEN 1 ELSE 0 END AS BIGINT) AS bad_ext,
+         |    CAST(CASE WHEN regexp_matches(lower(host), '[.](click|top|xxx|gq|tk|loan)$$')
+         |         THEN 1 ELSE 0 END AS BIGINT) AS bad_tld,
+         |    CAST(CASE WHEN length(pth) > 80 THEN 1 ELSE 0 END AS BIGINT) AS long_path
+         |  FROM p),
+         |s AS (SELECT *, greatest(0,
+         |    1000 - (CASE WHEN path_depth > 4 THEN 150 ELSE 0 END)
+         |         - (CASE WHEN n_params >= 3 THEN 150 ELSE 0 END)
+         |         - has_session * 300 - bad_ext * 400 - bad_tld * 300
+         |         - long_path * 100) AS sc FROM f)
+         |SELECT doc_id, host, path_depth, n_params, has_session, bad_ext,
+         |       bad_tld, long_path, CAST(sc AS BIGINT) AS url_score,
+         |       CAST(CASE WHEN sc >= 500 THEN 1 ELSE 0 END AS BIGINT) AS keep
+         |FROM s ORDER BY doc_id""".stripMargin)),
 
     // C4 line-level rules (Raffel et al. 2020) — the line-grain
     // complement to the Gopher word-grain gate: terminal-punctuation +
@@ -1798,90 +4293,258 @@ object SparkEntry {
     // text md5-pinned. The injected 5-line fixture sweeps every rule
     // (always-kept lead, too-short line, lorem vs clean, brace vs
     // clean, a punctuation-less slice of the real document text).
-    "text_c4_rules" -> ((s, d) => {
+    Q("text_c4_rules", ((s, d) => {
       TextAnalysis.c4Rules(withLines(Tables.documents(s, d)))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Line-grain replay with SINGLE-LEVEL lambdas only (the DuckDB
+      // nested-lambda-capture bug forces the flat unnest-with-subscripts
+      // form — see text_wordpiece_encode's oracle note): every line
+      // classified as a plain column, kept text re-joined in subscript
+      // order.
+      s"""WITH t AS (SELECT doc_id, $linesInjectSql AS tx FROM documents),
+         |f AS (SELECT doc_id, tx, string_split(tx, chr(10)) AS ls FROM t),
+         |ln AS (SELECT doc_id, unnest(ls) AS l,
+         |         generate_subscripts(ls, 1) AS i FROM f),
+         |lk AS (SELECT doc_id, l, i,
+         |         CASE WHEN len(list_filter(string_split(l, ' '), w -> w <> '')) >= 4
+         |               AND substr(l, length(l), 1) IN ('.', '!', '?', '"')
+         |              THEN 1 ELSE 0 END AS k,
+         |         len(list_filter(string_split(l, ' '), w -> w <> '')) AS nw
+         |       FROM ln),
+         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines,
+         |          CAST(sum(k) AS BIGINT) AS n_kept_lines,
+         |          CAST(coalesce(sum(CASE WHEN k = 1 THEN nw END), 0) AS BIGINT)
+         |            AS n_kept_words,
+         |          md5(coalesce(string_agg(CASE WHEN k = 1 THEN l END,
+         |                chr(10) ORDER BY i), '')) AS kept_md5
+         |        FROM lk GROUP BY doc_id),
+         |pg AS (SELECT doc_id,
+         |         CAST(CASE WHEN position('lorem ipsum' IN lower(tx)) > 0
+         |              THEN 1 ELSE 0 END AS BIGINT) AS has_lorem,
+         |         CAST(CASE WHEN position('{' IN tx) > 0
+         |              THEN 1 ELSE 0 END AS BIGINT) AS has_brace
+         |       FROM t)
+         |SELECT agg.doc_id AS doc_id, n_lines, n_kept_lines, n_kept_words,
+         |  has_lorem, has_brace,
+         |  CAST(CASE WHEN has_lorem = 0 AND has_brace = 0 AND n_kept_lines >= 3
+         |       THEN 1 ELSE 0 END AS BIGINT) AS keep,
+         |  kept_md5
+         |FROM agg JOIN pg ON pg.doc_id = agg.doc_id
+         |ORDER BY doc_id""".stripMargin)),
 
     // robots.txt gate — crawl compliance over the same frontier: RFC
     // 9309 longest-match (Allow wins ties, '$' anchors, decoy bad-bot
     // group ignored, no-match default-allow) with the per-host rule
     // arrays broadcast into the scan (the frontier never shuffles).
-    "text_robots_gate" -> ((s, d) => {
+    Q("text_robots_gate", ((s, d) => {
       WebExtract.robotsGate(withVariedUrls(Tables.documents(s, d)),
           WebExtract.syntheticRobots(s))
         .select(col("doc_id"), col("host"), col("allowed"), col("rule_len"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Analytic decision-table replay (the strata-shortcut precedent:
+      // the PARSER itself is pinned by WebExtractSpec's hand fixtures —
+      // group selection, tie-breaks, '$' anchor, wildcards-skipped; this
+      // oracle checks the longest-match DECISION and rule-length per
+      // frontier URL against the fixture's m%3 rule families).
+      """WITH u AS (SELECT doc_id, doc_id % 23 AS m, 1 + doc_id % 7 AS d
+        |           FROM documents),
+        |g AS (SELECT doc_id,
+        |    'www.site' || CAST(m AS VARCHAR) ||
+        |    (['.com','.org','.click','.info'])[CAST(doc_id % 4 AS INTEGER) + 1]
+        |      AS host,
+        |    CASE CAST(m % 3 AS INTEGER)
+        |      WHEN 0 THEN CASE WHEN d = 3 THEN 0 ELSE 1 END
+        |      WHEN 1 THEN CASE WHEN d >= 6 THEN 0 ELSE 1 END
+        |      ELSE CASE WHEN d >= 5 THEN 0 ELSE 1 END END AS allowed,
+        |    CASE CAST(m % 3 AS INTEGER)
+        |      WHEN 0 THEN CASE WHEN d = 3 THEN 12 WHEN d >= 4 THEN 16 ELSE 0 END
+        |      WHEN 1 THEN CASE WHEN d >= 6 THEN 24 ELSE 0 END
+        |      ELSE CASE WHEN d >= 5 THEN 20 ELSE 4 END END AS rule_len
+        |  FROM u)
+        |SELECT doc_id, host, CAST(allowed AS BIGINT) AS allowed,
+        |       CAST(rule_len AS BIGINT) AS rule_len
+        |FROM g ORDER BY doc_id""".stripMargin)),
 
     // Anti-domination cap: at most 10 docs per registered domain,
     // hash-order deterministic within the domain.
-    "corpus_domain_cap" -> ((s, d) => {
+    Q("corpus_domain_cap", ((s, d) => {
       Corpus.capPerDomain(withUrls(Tables.documents(s, d)), k = 10)
         .select(col("doc_id"), col("domain"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // The strata shortcut ('example{N}.com') is valid because
+      // text_url_normalize independently pins the extraction chain; this
+      // oracle checks the CAP semantics (hash-order k per domain).
+      s"""WITH t AS (SELECT doc_id,
+         |             'example' || CAST(doc_id % 37 AS VARCHAR) || '.com' AS domain,
+         |             md5('ksample|' || CAST(doc_id AS VARCHAR)) AS m FROM documents),
+         |b AS (SELECT doc_id, domain, (${hexSliceSql("m", 1)}) % 1000000 AS bk FROM t),
+         |r AS (SELECT doc_id, domain,
+         |        row_number() OVER (PARTITION BY domain ORDER BY bk, doc_id) AS rn
+         |      FROM b)
+         |SELECT doc_id, domain FROM r WHERE rn <= 10 ORDER BY doc_id""".stripMargin)),
 
     // Reproducible epoch shuffle: hash-derived global training order,
     // totally ordered by range partitioning (no global row_number).
-    "corpus_shuffle" -> ((s, d) => {
+    Q("corpus_shuffle", ((s, d) => {
       Corpus.shuffleOrder(Tables.documents(s, d), seed = "epoch0")
         .select(col("doc_id"), col("shuf_key"))
         .orderBy(col("shuf_key"), col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH h AS (SELECT doc_id,
+         |             md5('shuf|epoch0|' || CAST(doc_id AS VARCHAR)) AS m FROM documents)
+         |SELECT doc_id, (${hexSliceSql("m", 1)}) AS shuf_key
+         |FROM h ORDER BY shuf_key, doc_id""".stripMargin)),
 
     // Short-to-long curriculum: 50-token length bands ascending,
     // hash-shuffled within each band.
-    "corpus_curriculum" -> ((s, d) => {
+    Q("corpus_curriculum", ((s, d) => {
       Corpus.curriculum(Tables.documents(s, d),
           bandCol = floor(size(Dedup.tokens(col("text"))) / 50),
           seed = "epoch0")
         .select(col("doc_id"), col("band"), col("shuf_key"))
         .orderBy(col("band"), col("shuf_key"), col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH h AS (SELECT doc_id,
+         |             CAST(len($tokSql) // 50 AS BIGINT) AS band,
+         |             md5('curr|epoch0|' || CAST(doc_id AS VARCHAR)) AS m FROM documents)
+         |SELECT doc_id, band, (${hexSliceSql("m", 1)}) AS shuf_key
+         |FROM h ORDER BY band, shuf_key, doc_id""".stripMargin)),
 
-    "corpus_sample" -> ((s, d) => {
+    Q("corpus_sample", ((s, d) => {
       Corpus.stratifiedSample(Tables.documents(s, d), "source",
         Map("src0" -> 300, "src1" -> 700), defaultPermille = 100)
         .select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH h AS (SELECT doc_id, source,
+         |             md5('sample|' || CAST(doc_id AS VARCHAR)) AS m FROM documents),
+         |b AS (SELECT doc_id, source, (${hexSliceSql("m", 1)}) % 1000 AS bucket FROM h)
+         |SELECT doc_id, source FROM b
+         |WHERE bucket < (CASE source WHEN 'src0' THEN 300 WHEN 'src1' THEN 700 ELSE 100 END)
+         |ORDER BY doc_id""".stripMargin)),
 
-    "corpus_sample_k" -> ((s, d) => {
+    Q("corpus_sample_k", ((s, d) => {
       Corpus.sampleKPerStratum(Tables.documents(s, d), "source", k = 10)
         .select(col("doc_id"), col("source"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH h AS (SELECT doc_id, source,
+         |             md5('ksample|' || CAST(doc_id AS VARCHAR)) AS m FROM documents),
+         |b AS (SELECT doc_id, source, (${hexSliceSql("m", 1)}) % 1000000 AS bk FROM h),
+         |r AS (SELECT doc_id, source,
+         |        row_number() OVER (PARTITION BY source ORDER BY bk, doc_id) AS rn
+         |      FROM b)
+         |SELECT doc_id, source FROM r WHERE rn <= 10 ORDER BY doc_id""".stripMargin)),
 
     // Training-mix upsampling: weights over 1000‰ duplicate docs
     // (epoch-style), 0 drops the stratum, fractional tails are
     // hash-bucketed per (doc, copy).
-    "corpus_mixture" -> ((s, d) => {
+    Q("corpus_mixture", ((s, d) => {
       Corpus.upsample(Tables.documents(s, d), "source",
         Map("src0" -> 2500, "src1" -> 800, "src2" -> 0), defaultPermille = 1000)
         .select(col("doc_id"), col("copy_idx"), col("source"))
         .orderBy(col("doc_id"), col("copy_idx"))
-    }),
+    }), Some(
+      s"""WITH w AS (SELECT doc_id, source,
+         |             CASE source WHEN 'src0' THEN 2500 WHEN 'src1' THEN 800
+         |                         WHEN 'src2' THEN 0 ELSE 1000 END AS w
+         |           FROM documents),
+         |c AS (SELECT doc_id, source, w,
+         |        unnest(range(0, CAST((w + 999) // 1000 AS BIGINT))) AS copy_idx
+         |      FROM w WHERE w > 0),
+         |h AS (SELECT doc_id, source, w, copy_idx,
+         |        md5('mix|' || CAST(doc_id AS VARCHAR) || '#' || CAST(copy_idx AS VARCHAR)) AS m
+         |      FROM c)
+         |SELECT doc_id, copy_idx, source FROM h
+         |WHERE (copy_idx + 1) * 1000 <= w OR (${hexSliceSql("m", 1)}) % 1000 < w % 1000
+         |ORDER BY doc_id, copy_idx""".stripMargin)),
 
     // DSIR importance weights (hashed-unigram log-likelihood ratio)
     // toward the English subcorpus as the target domain —
     // resample-ready pretraining-data targeting.
-    "corpus_dsir_weights" -> ((s, d) =>
+    Q("corpus_dsir_weights", ((s, d) =>
       Corpus.dsirWeights(Tables.documents(s, d), col("lang") === "en")
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // Twin of Corpus.dsirWeights (target = lang 'en'): engine-portable
+      // md5 hash buckets, integer-argument ln only, per-doc fold over
+      // bucket-id-sorted structs — Spark's exact float-op sequence.
+      s"""WITH tk AS (SELECT doc_id, lang = 'en' AS t, unnest($tokSql) AS w FROM documents),
+         |h AS (SELECT doc_id, t, md5('dsir|' || w) AS m FROM tk),
+         |fx AS (SELECT doc_id, t, (${hexSliceSql("m", 1)}) % 64 AS f FROM h),
+         |pd AS (SELECT doc_id, f, CAST(count(*) AS BIGINT) AS c FROM fx GROUP BY doc_id, f),
+         |g AS (SELECT f, CAST(count(*) AS BIGINT) AS cr,
+         |        CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS ct FROM fx GROUP BY f),
+         |tt AS (SELECT CAST(sum(cr) AS BIGINT) AS tr, CAST(sum(ct) AS BIGINT) AS tt FROM g),
+         |j AS (SELECT pd.doc_id, pd.f, pd.c, g.ct, g.cr, tt.tr, tt.tt
+         |      FROM pd JOIN g USING (f), tt),
+         |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats, max(tr) AS tr, max(tt) AS tt,
+         |        list_sort(list({'f': f, 'c': c, 'ct': ct, 'cr': cr})) AS bs
+         |      FROM j GROUP BY doc_id)
+         |SELECT doc_id, n_feats,
+         |       round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(bs,
+         |           p -> CAST(p.c AS DOUBLE) * (ln(CAST(p.ct + 1 AS DOUBLE)) - ln(CAST(tt + 64 AS DOUBLE))
+         |                 - ln(CAST(p.cr + 1 AS DOUBLE)) + ln(CAST(tr + 64 AS DOUBLE))))),
+         |         (a,b) -> a + b), 4) AS dsir_logw_q4
+         |FROM a ORDER BY doc_id""".stripMargin)),
 
     // mT5-style temperature-scaled mixture weights over sources at
     // α = ½ (inside IEEE-exact sqrt): the low-resource upsampling
     // table a multilingual mix is drawn from.
-    "corpus_temperature" -> ((s, d) =>
-      Corpus.temperatureMixture(Tables.documents(s, d)).orderBy(col("source"))),
+    Q("corpus_temperature", ((s, d) =>
+      Corpus.temperatureMixture(Tables.documents(s, d)).orderBy(col("source"))), Some(
+      // Twin of Corpus.temperatureMixture: α = ½ inside IEEE-exact
+      // sqrt; the Σ√p normalizer folds in sorted stratum order.
+      s"""WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
+         |               CAST(sum(len($tokSql)) AS BIGINT) AS n_tokens
+         |             FROM documents GROUP BY source),
+         |one AS (SELECT list_sort(list({'source': source, 'n_docs': n_docs,
+         |                               'n_tokens': n_tokens})) AS s FROM per),
+         |t2 AS (SELECT s, list_reduce(list_prepend(CAST(0 AS BIGINT),
+         |         list_transform(s, p -> p.n_tokens)), (a,b) -> a + b) AS tot FROM one),
+         |t3 AS (SELECT s, tot, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
+         |         list_transform(s, p -> sqrt(CAST(p.n_tokens AS DOUBLE) / CAST(tot AS DOUBLE)))),
+         |         (a,b) -> a + b) AS z FROM t2),
+         |u AS (SELECT unnest(s) AS p, tot, z FROM t3)
+         |SELECT p.source AS source, p.n_docs AS n_docs, p.n_tokens AS n_tokens,
+         |       round(CAST(p.n_tokens AS DOUBLE) / CAST(tot AS DOUBLE), 4) AS share_q4,
+         |       round(sqrt(CAST(p.n_tokens AS DOUBLE) / CAST(tot AS DOUBLE)) / z, 4)
+         |         AS temp_share_q4
+         |FROM u ORDER BY source""".stripMargin)),
 
     // UniMax (epoch-capped uniform) token-budget allocation: greedy
     // waterfill ascending by source size, all integer arithmetic.
-    "corpus_unimax" -> ((s, d) =>
+    Q("corpus_unimax", ((s, d) =>
       Corpus.unimaxAllocation(Tables.documents(s, d),
           budgetPermille = 900, maxEpochsPermille = 900)
-        .orderBy(col("source"))),
+        .orderBy(col("source"))), Some(
+      s"""WITH RECURSIVE per AS (SELECT source,
+         |        CAST(sum(len($tokSql)) AS BIGINT) AS n_tokens
+         |      FROM documents GROUP BY source),
+         |ord AS (SELECT source, n_tokens,
+         |          CAST(row_number() OVER (ORDER BY n_tokens, source) AS BIGINT) AS i
+         |        FROM per),
+         |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
+         |               CAST(sum(n_tokens) AS BIGINT) AS t FROM ord),
+         |alloc AS (
+         |  SELECT CAST(0 AS BIGINT) AS i, CAST(NULL AS VARCHAR) AS source,
+         |         CAST(0 AS BIGINT) AS n_tokens, CAST(0 AS BIGINT) AS quota,
+         |         (t * 900) // 1000 AS remaining
+         |  FROM tot
+         |  UNION ALL
+         |  SELECT o.i, o.source, o.n_tokens,
+         |         least((o.n_tokens * 900) // 1000,
+         |               a.remaining // (tot.n - o.i + 1)) AS quota,
+         |         a.remaining - least((o.n_tokens * 900) // 1000,
+         |               a.remaining // (tot.n - o.i + 1)) AS remaining
+         |  FROM alloc a JOIN ord o ON o.i = a.i + 1 CROSS JOIN tot
+         |)
+         |SELECT source, n_tokens, quota AS quota_tokens,
+         |       CASE WHEN n_tokens = 0 THEN 0
+         |            ELSE (quota * 1000) // n_tokens END AS epochs_permille
+         |FROM alloc WHERE i >= 1 ORDER BY source""".stripMargin)),
 
     // Repeated-epoch value curve (data-constrained scaling): epoch k
     // of a source priced at the exact integer decay recurrence
@@ -1889,46 +4552,151 @@ object SparkEntry {
     // tokens and per-epoch marginal permille — the table that chooses
     // UniMax's epoch cap. Oracle replays the recurrence with a
     // recursive CTE.
-    "corpus_repeat_curve" -> ((s, d) =>
+    Q("corpus_repeat_curve", ((s, d) =>
       Corpus.repeatValueCurve(Tables.documents(s, d))
-        .orderBy(col("source"), col("epochs"))),
+        .orderBy(col("source"), col("epochs"))), Some(
+      // UniMax waterfill replayed as a recursive CTE: one row per fold
+      // step, ordered ascending by (n_tokens, source); remaining budget
+      // threads through the recursion in exact integers.
+      // epoch-value recurrence replayed level by level: the recursive
+      // member carries (epoch_value, effective) and steps both with the
+      // same floor rule the Spark fold applies.
+      s"""WITH RECURSIVE u AS (
+         |  SELECT source, CAST(sum(len($tokSql)) AS BIGINT) AS ut
+         |  FROM documents GROUP BY source),
+         |v AS (
+         |  SELECT source, ut, CAST(1 AS BIGINT) AS epochs,
+         |         ut AS epoch_value, ut AS eff FROM u
+         |  UNION ALL
+         |  SELECT source, ut, epochs + 1, (epoch_value * 700) // 1000,
+         |         eff + (epoch_value * 700) // 1000
+         |  FROM v WHERE epochs < 8)
+         |SELECT source, ut AS unique_tokens, epochs, epoch_value,
+         |  eff AS effective_tokens,
+         |  CAST(CASE WHEN ut > 0 THEN (epoch_value * 1000) // ut
+         |            ELSE 0 END AS BIGINT) AS marginal_permille
+         |FROM v ORDER BY source, epochs""".stripMargin)),
 
     // Topic-mixture audit: per-(source × k-means cluster) counts +
     // permille shares under the integer-exact trained quantizer — the
     // "what does each source actually contribute" curation table.
-    "corpus_topic_mix" -> ((s, d) =>
+    Q("corpus_topic_mix", ((s, d) =>
       Corpus.topicMix(Tables.documents(s, d), Tables.embeddings(s, d), k = 4, iters = 2)
-        .orderBy(col("source"), col("cell"))),
+        .orderBy(col("source"), col("cell"))), Some(
+      // Topic-mix audit: replays the sim_ivf_assign chain (identical
+      // integer-exact Lloyd model), then joins documents on id and
+      // groups at (source, cell) with floor-permille shares.
+      s"""${ivfCtes(k = 4, iters = 2)},
+         |afin AS (SELECT vec_id, cell,
+         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
+         |  FROM (SELECT q.vec_id, c.cell,
+         |          list_sum(list_transform(range(1, 65),
+         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
+         |        FROM q, c2 c) x),
+         |asg AS (SELECT vec_id, cell FROM afin WHERE rn = 1),
+         |j AS (SELECT d.source, a.cell FROM documents d JOIN asg a ON d.doc_id = a.vec_id),
+         |per AS (SELECT source, cell, count(*) AS cnt FROM j GROUP BY source, cell),
+         |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n FROM per GROUP BY source)
+         |SELECT per.source, per.cell, per.cnt,
+         |       CAST(floor(per.cnt * 1000 / tot.n) AS BIGINT) AS permille
+         |FROM per JOIN tot ON per.source = tot.source
+         |ORDER BY per.source, per.cell""".stripMargin)),
 
     // Topical-anomaly score: per-source L1 distance (permille) between
     // the source's cluster mix and the corpus-wide mix — the
     // outlier-source detector next to the mix audit.
-    "corpus_topic_drift" -> ((s, d) =>
+    Q("corpus_topic_drift", ((s, d) =>
       Corpus.topicDrift(Tables.documents(s, d), Tables.embeddings(s, d), k = 4, iters = 2)
-        .orderBy(col("source"))),
+        .orderBy(col("source"))), Some(
+      // Per-source L1 distance vs the corpus-wide mix over the same
+      // replayed model; missing (source, cell) combos count their full
+      // corpus share via the dense grid.
+      s"""${ivfCtes(k = 4, iters = 2)},
+         |afin AS (SELECT vec_id, cell,
+         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
+         |  FROM (SELECT q.vec_id, c.cell,
+         |          list_sum(list_transform(range(1, 65),
+         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
+         |        FROM q, c2 c) x),
+         |asg AS (SELECT vec_id, cell FROM afin WHERE rn = 1),
+         |j AS (SELECT d.source, a.cell FROM documents d JOIN asg a ON d.doc_id = a.vec_id),
+         |per AS (SELECT source, cell, CAST(count(*) AS BIGINT) AS cnt FROM j GROUP BY source, cell),
+         |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n FROM per GROUP BY source),
+         |mix AS (SELECT per.source, per.cell,
+         |          CAST(floor(per.cnt * 1000 / tot.n) AS BIGINT) AS permille
+         |        FROM per JOIN tot ON per.source = tot.source),
+         |gcl AS (SELECT cell, CAST(sum(cnt) AS BIGINT) AS gcnt FROM per GROUP BY cell),
+         |gt AS (SELECT CAST(sum(gcnt) AS BIGINT) AS g FROM gcl),
+         |gp AS (SELECT cell, CAST(floor(gcnt * 1000 / g) AS BIGINT) AS g_permille
+         |       FROM gcl, gt),
+         |grid AS (SELECT s.source, gp.cell, gp.g_permille
+         |         FROM (SELECT DISTINCT source FROM per) s, gp),
+         |dl AS (SELECT grid.source, grid.cell, coalesce(mix.permille, 0) AS permille,
+         |         grid.g_permille
+         |       FROM grid LEFT JOIN mix ON mix.source = grid.source AND mix.cell = grid.cell)
+         |SELECT source, CAST(sum(abs(permille - g_permille)) AS BIGINT) AS l1_permille
+         |FROM dl GROUP BY source ORDER BY source""".stripMargin)),
 
     // Duplication profile: how many clusters of each multiplicity the
     // exact-dedup pass found (the corpus-health report a curation run
     // logs).
-    "dedup_cluster_sizes" -> ((s, d) => {
+    Q("dedup_cluster_sizes", ((s, d) => {
       Dedup.exact(Tables.documents(s, d))
         .groupBy(col("n_copies")).agg(count(lit(1)).as("n_clusters"))
         .orderBy(col("n_copies"))
-    }),
+    }), Some(
+      """WITH g AS (SELECT md5(text) AS h, CAST(count(*) AS BIGINT) AS n_copies
+        |           FROM documents GROUP BY 1)
+        |SELECT n_copies, CAST(count(*) AS BIGINT) AS n_clusters
+        |FROM g GROUP BY n_copies ORDER BY n_copies""".stripMargin)),
 
-    "text_repetition" -> ((s, d) => {
+    Q("text_repetition", ((s, d) => {
       Corpus.repetition(Tables.documents(s, d)).orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH f AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |g AS (SELECT doc_id,
+         |        CAST(len(tk) AS BIGINT) AS n_tokens,
+         |        CAST(len(list_distinct(tk)) AS BIGINT) AS n_distinct_tokens,
+         |        CAST(len(tk) - 1 AS BIGINT) AS n2_raw,
+         |        list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1]) AS grams
+         |      FROM f)
+         |SELECT doc_id, n_tokens, n_distinct_tokens,
+         |  CAST(CASE WHEN n2_raw > 0 THEN n2_raw ELSE 0 END AS BIGINT) AS n_2grams,
+         |  CAST(len(list_distinct(grams)) AS BIGINT) AS n_distinct_2grams,
+         |  CAST(CASE WHEN n_tokens > 0
+         |       THEN floor((n_tokens - n_distinct_tokens) * 1000 / n_tokens)
+         |       ELSE 0 END AS BIGINT) AS dup_token_permille,
+         |  CAST(CASE WHEN n2_raw > 0
+         |       THEN floor((n2_raw - len(list_distinct(grams))) * 1000 / n2_raw)
+         |       ELSE 0 END AS BIGINT) AS dup_2gram_permille
+         |FROM g ORDER BY doc_id""".stripMargin)),
 
     // CCNet-style boilerplate strip over 4-word segments: segments
     // verbatim-repeated in >= 3 docs are removed everywhere; the full
     // cleaned text is md5-checked cross-engine.
-    "dedup_boilerplate" -> ((s, d) => {
+    Q("dedup_boilerplate", ((s, d) => {
       Corpus.stripBoilerplate(Tables.documents(s, d), segWords = 4, minDocs = 3)
         .select(col("doc_id"), col("n_segments"), col("n_dropped"),
           md5(col("clean_text").cast("binary")).as("clean_md5"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |s AS (SELECT doc_id,
+         |        unnest(list_transform(
+         |          range(0, greatest(CAST(ceil(len(tk) / 4.0) AS BIGINT), 1)),
+         |          i -> {'seg_idx': i,
+         |                'seg': array_to_string(tk[i*4+1 : i*4+4], ' ')}),
+         |          recursive := true)
+         |      FROM t),
+         |common AS (SELECT seg FROM (SELECT DISTINCT doc_id, seg FROM s)
+         |           GROUP BY seg HAVING count(*) >= 3)
+         |SELECT s.doc_id,
+         |  CAST(count(*) AS BIGINT) AS n_segments,
+         |  CAST(sum(CASE WHEN c.seg IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
+         |  md5(coalesce(string_agg(CASE WHEN c.seg IS NULL THEN s.seg END,
+         |        ' ' ORDER BY s.seg_idx), '')) AS clean_md5
+         |FROM s LEFT JOIN common c ON s.seg = c.seg
+         |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin)),
 
     // Synthetic PII injected per doc (the table itself carries none) so
     // the count AND the full scrubbed-text hash are non-trivially
@@ -1937,7 +4705,7 @@ object SparkEntry {
     // VALID 16-digit number (check digit computed by the same fold)
     // into every 5th doc and an INVALID one into the next — the
     // detector must count both as candidates but scrub only the valid.
-    "text_pii_luhn" -> ((s, d) => {
+    Q("text_pii_luhn", ((s, d) => {
       val genSum =
         """aggregate(transform(sequence(1, 15),
           |  j -> CASE WHEN j % 2 = 1 THEN
@@ -1958,9 +4726,53 @@ object SparkEntry {
         .withColumn("scrub_md5", md5(col("scrubbed").cast("binary")))
         .select(col("doc_id"), col("n_cc_candidates"), col("n_cc_valid"), col("scrub_md5"))
         .orderBy(col("doc_id"))
+    }), Some {
+      // Luhn folds run FLAT (candidates unnested to rows) — the DuckDB
+      // nested-lambda capture hazard, see text_wordpiece_encode's note.
+      def luhnSql(v: String, n: String): String =
+        s"""(list_sum(list_transform(range(1, $n + 1),
+           |  i -> CASE WHEN i % 2 = 0 THEN
+           |         CASE WHEN CAST(substr(reverse($v), CAST(i AS INTEGER), 1) AS INTEGER) * 2 > 9
+           |              THEN CAST(substr(reverse($v), CAST(i AS INTEGER), 1) AS INTEGER) * 2 - 9
+           |              ELSE CAST(substr(reverse($v), CAST(i AS INTEGER), 1) AS INTEGER) * 2 END
+           |       ELSE CAST(substr(reverse($v), CAST(i AS INTEGER), 1) AS INTEGER) END)) % 10)""".stripMargin
+      def genSql(v: String): String =
+        s"""list_sum(list_transform(range(1, 16),
+           |  j -> CASE WHEN j % 2 = 1 THEN
+           |         CASE WHEN CAST(substr(reverse($v), CAST(j AS INTEGER), 1) AS INTEGER) * 2 > 9
+           |              THEN CAST(substr(reverse($v), CAST(j AS INTEGER), 1) AS INTEGER) * 2 - 9
+           |              ELSE CAST(substr(reverse($v), CAST(j AS INTEGER), 1) AS INTEGER) * 2 END
+           |       ELSE CAST(substr(reverse($v), CAST(j AS INTEGER), 1) AS INTEGER) END))""".stripMargin
+      s"""WITH base AS (SELECT doc_id, text,
+         |    '4' || lpad(CAST(doc_id AS VARCHAR), 14, '0') AS pay FROM documents),
+         |gs AS (SELECT doc_id, text, pay, ${genSql("pay")} AS s FROM base),
+         |inj AS (SELECT doc_id,
+         |    CASE WHEN doc_id % 5 = 0
+         |           THEN text || ' ' || pay || CAST((10 - (s % 10)) % 10 AS VARCHAR)
+         |         WHEN doc_id % 5 = 1
+         |           THEN text || ' ' || pay || CAST(((10 - (s % 10)) % 10 + 1) % 10 AS VARCHAR)
+         |         ELSE text END AS t
+         |  FROM gs),
+         |sc AS (SELECT doc_id, t, regexp_extract_all(t, '[0-9]{13,19}') AS cands FROM inj),
+         |cx AS (SELECT doc_id, unnest(cands) AS v FROM sc),
+         |cv AS (SELECT doc_id, v,
+         |    CASE WHEN ${luhnSql("v", "len(v)")} = 0 THEN 1 ELSE 0 END AS ok FROM cx),
+         |agg AS (SELECT doc_id,
+         |    CAST(count(*) AS BIGINT) AS n_cc_candidates,
+         |    CAST(sum(ok) AS BIGINT) AS n_cc_valid,
+         |    list(v ORDER BY v) FILTER (WHERE ok = 1) AS valids
+         |  FROM cv GROUP BY doc_id)
+         |SELECT i.doc_id,
+         |       coalesce(a.n_cc_candidates, 0) AS n_cc_candidates,
+         |       coalesce(a.n_cc_valid, 0) AS n_cc_valid,
+         |       md5(CASE WHEN a.valids IS NULL THEN i.t
+         |                ELSE list_reduce(list_prepend(i.t, a.valids),
+         |                       (acc, v) -> replace(acc, v, '[CC]')) END) AS scrub_md5
+         |FROM inj i LEFT JOIN agg a ON a.doc_id = i.doc_id
+         |ORDER BY i.doc_id""".stripMargin
     }),
 
-    "text_pii_scrub" -> ((s, d) => {
+    Q("text_pii_scrub", ((s, d) => {
       val injected = Tables.documents(s, d).withColumn("text",
         concat(lit("contact user"), col("doc_id").cast("string"),
           lit("@example.com or +1 555 000 1234 : "), col("text")))
@@ -1968,17 +4780,33 @@ object SparkEntry {
         .withColumn("scrub_md5", md5(col("scrubbed").cast("binary")))
         .select(col("doc_id"), col("n_emails"), col("n_phones"), col("scrub_md5"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      """WITH d AS (SELECT doc_id,
+        |    'contact user' || CAST(doc_id AS VARCHAR) || '@example.com or +1 555 000 1234 : ' || text AS t
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
+        |  CAST(len(regexp_extract_all(t, '\+?[0-9][0-9 -]{7,}[0-9]')) AS BIGINT) AS n_phones,
+        |  md5(regexp_replace(regexp_replace(t,
+        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
+        |        '\+?[0-9][0-9 -]{7,}[0-9]', '[PHONE]', 'g')) AS scrub_md5
+        |FROM d ORDER BY doc_id""".stripMargin)),
 
-    "text_vocab" -> ((s, d) => {
+    Q("text_vocab", ((s, d) => {
       Corpus.vocabulary(Tables.documents(s, d), 100).orderBy(col("rank"))
-    }),
+    }), Some(
+      s"""WITH tok AS (SELECT unnest($tokSql) AS token FROM documents),
+         |c AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY token),
+         |r AS (SELECT token, cnt,
+         |        CAST(row_number() OVER (ORDER BY cnt DESC, token) AS BIGINT) AS rank
+         |      FROM c)
+         |SELECT token, cnt, rank FROM r WHERE rank <= 100 ORDER BY rank""".stripMargin)),
 
     // Misra–Gries heavy hitters in the exact regime (k=50 ≥ the 31
     // distinct tokens of this corpus, so estimates equal true counts
     // and hash-match the exact oracle); the approximate regime is
     // bounds-checked in SketchBoundsSpec.
-    "text_heavy_hitters" -> ((s, d) => {
+    Q("text_heavy_hitters", ((s, d) => {
       graft.plans.GraftExtensions.register(s)
       Tables.documents(s, d)
         .select(explode(Dedup.tokens(col("text"))).as("t"))
@@ -1986,118 +4814,221 @@ object SparkEntry {
         .select(explode(col("hh")).as("x"))
         .select(col("x.item").as("token"), col("x.est").as("cnt"))
         .orderBy(col("token"))
-    }),
+    }), Some(
+      s"""SELECT token, CAST(count(*) AS BIGINT) AS cnt
+         |FROM (SELECT unnest($tokSql) AS token FROM documents)
+         |GROUP BY token ORDER BY token""".stripMargin)),
 
     // Decontaminate training docs (id ≥ 50) against a fake eval set
     // (id < 50) on 8-gram overlap.
-    "corpus_decontaminate" -> ((s, d) => {
+    Q("corpus_decontaminate", ((s, d) => {
       val docs = Tables.documents(s, d)
       Corpus.decontaminate(docs.filter(col("doc_id") >= 50),
         docs.filter(col("doc_id") < 50), n = 8)
         .select(col("doc_id")).orderBy(col("doc_id"))
+    }), Some {
+      val gram8 = {
+        val parts = (0 until 8).map(j => if (j == 0) "tk[i]" else s"tk[i+$j]")
+          .mkString(" || ' ' || ")
+        s"list_transform(range(1, len(tk) - 6), i -> $parts)"
+      }
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |eg AS (SELECT DISTINCT unnest($gram8) AS g FROM t WHERE doc_id < 50),
+         |tg AS (SELECT doc_id, unnest($gram8) AS g FROM t WHERE doc_id >= 50),
+         |hit AS (SELECT DISTINCT doc_id FROM tg JOIN eg USING (g))
+         |SELECT doc_id FROM documents
+         |WHERE doc_id >= 50 AND doc_id NOT IN (SELECT doc_id FROM hit)
+         |ORDER BY doc_id""".stripMargin
     }),
 
     // Embedding-space decontamination: train vectors (vec_id % 10
     // != 0) cosine-screened against the held-out benchmark slice
     // (vec_id % 10 == 0), cell-blocked on label — catches paraphrased
     // leakage that shares no n-gram.
-    "corpus_semantic_decon" -> ((s, d) => {
+    Q("corpus_semantic_decon", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.semanticDecontaminate(
           emb.filter(col("vec_id") % 10 =!= 0), emb.filter(col("vec_id") % 10 === 0),
           minCos = 0.4, cellCol = "label")
         .orderBy(col("train_id"))
-    }),
+    }), Some(
+      // Cell-blocked train×benchmark cosine screen, one row per
+      // contaminated train vector.
+      s"""WITH e AS (SELECT vec_id, label, embedding,
+         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
+         |tr AS (SELECT * FROM e WHERE vec_id % 10 <> 0),
+         |te AS (SELECT * FROM e WHERE vec_id % 10 = 0),
+         |hits AS (SELECT tr.vec_id AS train_id,
+         |           round(${dotSql("tr.embedding", "te.embedding")}
+         |             / sqrt(tr.n2 * te.n2), 4) AS cos
+         |         FROM tr JOIN te ON tr.label = te.label)
+         |SELECT train_id, CAST(count(*) AS BIGINT) AS n_hits, max(cos) AS max_cos
+         |FROM hits WHERE cos >= 0.4
+         |GROUP BY train_id ORDER BY train_id""".stripMargin)),
 
     // Audit twin of decontaminate: per-doc leaked-gram counts +
     // permille share, zero-hit docs included.
-    "corpus_contamination_report" -> ((s, d) => {
+    Q("corpus_contamination_report", ((s, d) => {
       val docs = Tables.documents(s, d)
       Corpus.contaminationReport(docs.filter(col("doc_id") >= 50),
         docs.filter(col("doc_id") < 50), n = 8)
         .orderBy(col("doc_id"))
+    }), Some {
+      val gram8 = {
+        val parts = (0 until 8).map(j => if (j == 0) "tk[i]" else s"tk[i+$j]")
+          .mkString(" || ' ' || ")
+        s"list_transform(range(1, len(tk) - 6), i -> $parts)"
+      }
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |eg AS (SELECT DISTINCT unnest($gram8) AS g FROM t WHERE doc_id < 50),
+         |tg AS (SELECT DISTINCT doc_id, g
+         |       FROM (SELECT doc_id, unnest($gram8) AS g FROM t WHERE doc_id >= 50)),
+         |h AS (SELECT tg.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
+         |        CAST(sum(CASE WHEN eg.g IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated
+         |      FROM tg LEFT JOIN eg ON tg.g = eg.g GROUP BY tg.doc_id)
+         |SELECT d.doc_id,
+         |       CAST(COALESCE(h.n_grams, 0) AS BIGINT) AS n_grams,
+         |       CAST(COALESCE(h.n_contaminated, 0) AS BIGINT) AS n_contaminated,
+         |       CAST(CASE WHEN COALESCE(h.n_grams, 0) = 0 THEN 0
+         |            ELSE COALESCE(h.n_contaminated, 0) * 1000 // h.n_grams END AS BIGINT)
+         |         AS contamination_permille
+         |FROM documents d LEFT JOIN h USING (doc_id)
+         |WHERE d.doc_id >= 50 ORDER BY d.doc_id""".stripMargin
     }),
 
-    "corpus_pack" -> ((s, d) => {
+    Q("corpus_pack", ((s, d) => {
       Corpus.pack(Tables.documents(s, d), budgetTokens = 512)
         .select(col("doc_id"), col("source"), col("n_tokens"), col("pack_id"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH t AS (SELECT doc_id, source, CAST(len($tokSql) AS BIGINT) AS n_tokens
+         |           FROM documents),
+         |c AS (SELECT doc_id, source, n_tokens,
+         |        sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
+         |                            ROWS UNBOUNDED PRECEDING) AS cum
+         |      FROM t)
+         |SELECT doc_id, source, n_tokens,
+         |       CAST(floor((cum - n_tokens) / 512) AS BIGINT) AS pack_id
+         |FROM c ORDER BY doc_id""".stripMargin)),
 
     // Packing denominated in the LEARNED tokenizer's tokens (BPE
     // fertility included) — a whitespace-word budget overflows a real
     // context window; this is the production pack.
-    "corpus_pack_bpe" -> ((s, d) => {
+    Q("corpus_pack_bpe", ((s, d) => {
       val docs = Tables.documents(s, d)
       val enc = TextAnalysis.bpeEncode(docs, TextAnalysis.bpeMerges(docs, merges = 3))
       Corpus.packBy(docs, enc, budgetTokens = 2048, tokensCol = "n_bpe_tokens")
         .select(col("doc_id"), col("source"), col("n_bpe_tokens"), col("pack_id"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH $bpeEncodeCtes,
+         |pt AS (SELECT e.doc_id, d2.source, e.n_bpe_tokens,
+         |         sum(e.n_bpe_tokens) OVER (PARTITION BY d2.source ORDER BY e.doc_id
+         |                                   ROWS UNBOUNDED PRECEDING) AS cum
+         |       FROM e JOIN documents d2 ON d2.doc_id = e.doc_id)
+         |SELECT doc_id, source, n_bpe_tokens,
+         |       CAST(floor((cum - n_bpe_tokens) / 2048) AS BIGINT) AS pack_id
+         |FROM pt ORDER BY doc_id""".stripMargin)),
 
     // Trained IVF coarse quantizer: deterministic quantized k-means
     // (fixed-point integers → bit-identical across engines; seeds = k
     // smallest ids, ties break toward the smaller cell).
-    "sim_ivf_train" -> ((s, d) => {
+    Q("sim_ivf_train", ((s, d) => {
       val cents = Similarity.ivfTrain(Tables.embeddings(s, d), k = 4, iters = 2)
       Similarity.ivfCentroidRows(cents).orderBy(col("cell"), col("dim"))
-    }),
+    }), Some(
+      s"""${ivfCtes(k = 4, iters = 2)}
+         |SELECT cell, dim, cq AS centroid_q FROM u2 ORDER BY cell, dim""".stripMargin)),
 
     // k-means|| initialization (Bahmani et al., VLDB 2012) + Lloyd:
     // md5-coin oversampling (exact-integer probability test evaluated
     // in DECIMAL(38)/HUGEINT), assignment-count weighting, greedy
     // top-k reduction — the scalable seeding path; the oracle replays
     // every candidate round, the weighting, and both Lloyd rounds.
-    "sim_ivf_train_pp" -> ((s, d) => {
+    Q("sim_ivf_train_pp", ((s, d) => {
       val cents = Similarity.ivfTrainPP(Tables.embeddings(s, d),
         k = 4, l = 8, rounds = 2, iters = 2)
       Similarity.ivfCentroidRows(cents).orderBy(col("cell"), col("dim"))
-    }),
+    }), Some(
+      s"""WITH $qCte,
+         |${kppSeedCtes(k = 4, l = 8, rounds = 2)},
+         |${ivfChain(k = 4, iters = 2, emitC0 = false)}
+         |SELECT cell, dim, cq AS centroid_q FROM u2 ORDER BY cell, dim""".stripMargin)),
 
-    "sim_ivf_assign" -> ((s, d) => {
+    Q("sim_ivf_assign", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cents = Similarity.ivfTrain(emb, k = 4, iters = 2)
       Similarity.ivfAssign(emb, cents).orderBy(col("vec_id"))
-    }),
+    }), Some(
+      s"""${ivfCtes(k = 4, iters = 2)},
+         |afin AS (SELECT vec_id, cell,
+         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
+         |  FROM (SELECT q.vec_id, c.cell,
+         |          list_sum(list_transform(range(1, 65),
+         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
+         |        FROM q, c2 c) x)
+         |SELECT vec_id, cell FROM afin WHERE rn = 1 ORDER BY vec_id""".stripMargin)),
 
     // Product quantization (faiss PQ): m=4 subspace codebooks of k=4
     // centroids over the 64-dim embeddings, engine-exact like ivfTrain.
-    "sim_pq_train" -> ((s, d) => {
+    Q("sim_pq_train", ((s, d) => {
       Similarity.pqTrain(Tables.embeddings(s, d), m = 4, k = 4, iters = 2)
         .select(col("sub"), col("cell"), posexplode(col("cv")).as(Seq("dim", "centroid_q")))
         .select(col("sub"), col("cell"), col("dim").cast("long").as("dim"),
           col("centroid_q"))
         .orderBy(col("sub"), col("cell"), col("dim"))
-    }),
+    }), Some(
+      s"""${pqCtes(m = 4, k = 4, iters = 2)}
+         |SELECT s AS sub, cell, dim, cq AS centroid_q FROM pu2
+         |ORDER BY sub, cell, dim""".stripMargin)),
 
-    "sim_pq_codes" -> ((s, d) => {
+    Q("sim_pq_codes", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val book = Similarity.pqTrain(emb, m = 4, k = 4, iters = 2)
       Similarity.pqEncode(emb, book, m = 4)
         .select(col("vec_id"), posexplode(col("codes")).as(Seq("sub", "code")))
         .select(col("vec_id"), col("sub").cast("long").as("sub"), col("code"))
         .orderBy(col("vec_id"), col("sub"))
-    }),
+    }), Some(
+      s"""${pqCtes(m = 4, k = 4, iters = 2)}
+         |SELECT vec_id, s AS sub, cell AS code FROM pf WHERE rn = 1
+         |ORDER BY vec_id, sub""".stripMargin)),
 
     // ADC retrieval: candidates scored from their codes alone (the
     // vectors are never read on the candidate side).
-    "sim_ann_pq" -> ((s, d) => {
+    Q("sim_ann_pq", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val book = Similarity.pqTrain(emb, m = 4, k = 4, iters = 2)
       val codes = Similarity.pqEncode(emb, book, m = 4)
       Similarity.pqTopK(emb.filter(col("vec_id") < 10), codes, book, m = 4, k = 5)
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      s"""${pqCtes(m = 4, k = 4, iters = 2)},
+         |dt AS (SELECT qx.vec_id AS query_id, c.s, c.cell,
+         |         list_sum(list_transform(range(1, 17),
+         |           i -> (qx.sqv[i] - c.cv[i]) * (qx.sqv[i] - c.cv[i]))) AS d
+         |       FROM (SELECT * FROM sq WHERE vec_id < 10) qx
+         |       JOIN p2 c ON qx.s = c.s),
+         |cd AS (SELECT vec_id AS cand_id, s, cell AS code FROM pf WHERE rn = 1),
+         |sc AS (SELECT dt.query_id, cd.cand_id, CAST(sum(dt.d) AS BIGINT) AS adc
+         |       FROM cd JOIN dt ON cd.s = dt.s AND cd.code = dt.cell
+         |       WHERE dt.query_id <> cd.cand_id
+         |       GROUP BY dt.query_id, cd.cand_id),
+         |rk AS (SELECT query_id, cand_id, adc,
+         |         row_number() OVER (PARTITION BY query_id ORDER BY adc, cand_id) AS rnk
+         |       FROM sc)
+         |SELECT query_id, cand_id, CAST(rnk AS BIGINT) AS rnk, adc
+         |FROM rk WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin)),
 
     // IVF-ADC composite (faiss IVFPQ): coarse trained cells prune the
     // candidate set to the query's cell; PQ codes score inside it.
-    "sim_ann_ivfpq" -> ((s, d) => {
+    Q("sim_ann_ivfpq", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val coarse = Similarity.ivfTrain(emb, k = 4, iters = 2)
       val book = Similarity.pqTrain(emb, m = 4, k = 4, iters = 2)
       Similarity.ivfPqTopK(emb.filter(col("vec_id") < 10), emb, coarse, book, m = 4, k = 5)
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(ivfPqOracle)),
 
     // The SERVING shape of IVFPQ: the first call per (JVM, sf dir)
     // builds and parquets the FULL index — trained centroids, PQ
@@ -2107,35 +5038,41 @@ object SparkEntry {
     // the corpus embeddings: query cost is the query-side broadcasts
     // + one (cell, code) equi-join. Same deterministic result as
     // sim_ann_ivfpq.
-    "sim_ann_ivfpq_stored" -> ((s, d) => {
+    Q("sim_ann_ivfpq_stored", ((s, d) => {
       val idx = Similarity.readAnnIndex(s, storedAnnIndexDir(s, d))
       Similarity.ivfPqTopKIndexed(
           Tables.embeddings(s, d).filter(col("vec_id") < 10), idx, k = 5)
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      // Stored-model serving twin: identical deterministic result — the
+      // model parquet round-trip changes WHERE the centroids come from,
+      // not what they are.
+      ivfPqOracle)),
 
     // Multi-probe serving on the stored index: each query ADC-scores
     // its 2 nearest coarse cells — the recall dial turned one notch,
     // still zero training and zero corpus-embedding reads.
-    "sim_ann_ivfpq_nprobe" -> ((s, d) => {
+    Q("sim_ann_ivfpq_nprobe", ((s, d) => {
       val idx = Similarity.readAnnIndex(s, storedAnnIndexDir(s, d))
       Similarity.ivfPqTopKIndexedProbes(
           Tables.embeddings(s, d).filter(col("vec_id") < 10), idx, k = 5, nprobe = 2)
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      // Multi-probe serving: query side probes its 2 nearest cells.
+      ivfPqOracleProbes(2))),
 
     // Exact re-rank refine on the stored index — faiss
     // IndexRefineFlat: ADC top-(5·4) shortlist from the code table,
     // re-scored exactly against the original vectors (a
     // broadcast-shortlist delta read, never a corpus scan), final
     // top-5 by true cosine.
-    "sim_ann_ivfpq_refine" -> ((s, d) => {
+    Q("sim_ann_ivfpq_refine", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val idx = Similarity.readAnnIndex(s, storedAnnIndexDir(s, d))
       Similarity.ivfPqTopKRefined(
           emb.filter(col("vec_id") < 10), idx, emb, k = 5, refine = 4)
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(ivfPqOracleRefine)),
 
     // Incremental index ingestion: encode ONLY a delta against the
     // FROZEN stored model — the ANN append path, priced as a bench
@@ -2144,7 +5081,7 @@ object SparkEntry {
     // table are never read (vs sim_ann_ivfpq_stored, which scans the
     // full code table to serve queries). The append≡rebuild proof and
     // the actual dir append/compact live in AnnRecallSpec.
-    "sim_ann_index_append" -> ((s, d) => {
+    Q("sim_ann_index_append", ((s, d) => {
       val idx = Similarity.readAnnIndex(s, storedAnnIndexDir(s, d))
       Similarity.annEncode(
           Tables.embeddings(s, d).filter(col("vec_id") < 25), idx.model)
@@ -2153,7 +5090,23 @@ object SparkEntry {
         .select(col("vec_id"), col("cell"), col("sub").cast("long").as("sub"),
           col("code"))
         .orderBy(col("vec_id"), col("sub"))
-    }),
+    }), Some(
+      // delta encode against the frozen full-corpus model: coarse cell =
+      // nearest trained centroid, codes = per-subspace nearest codebook
+      // cell — the same deterministic chains the other IVFPQ oracles
+      // replay, emitted for the 25 delta vectors only
+      s"""${pqCtes(m = 4, k = 4, iters = 2)},
+         |${ivfChain(k = 4, iters = 2)},
+         |afin AS (SELECT vec_id, cell,
+         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
+         |  FROM (SELECT q.vec_id, c.cell,
+         |          list_sum(list_transform(range(1, 65),
+         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
+         |        FROM q, c2 c) x)
+         |SELECT f.vec_id, a.cell, f.s AS sub, f.cell AS code
+         |FROM pf f JOIN (SELECT vec_id, cell FROM afin WHERE rn = 1) a USING (vec_id)
+         |WHERE f.rn = 1 AND f.vec_id < 25
+         |ORDER BY vec_id, sub""".stripMargin)),
 
     // Residual IVFPQ — faiss's by_residual=true default: the PQ
     // codebook is trained on (vector − assigned centroid) residuals,
@@ -2161,17 +5114,54 @@ object SparkEntry {
     // re-coding the cell position the coarse index already knows;
     // ADC runs in residual space per probed cell. Same deterministic
     // Lloyd chains as sim_ann_ivfpq.
-    "sim_ann_ivfpq_residual" -> ((s, d) => {
+    Q("sim_ann_ivfpq_residual", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val model = Similarity.annTrainResidual(emb, coarseK = 4, m = 4, pqK = 4, iters = 2)
       Similarity.ivfPqResidualTopK(emb.filter(col("vec_id") < 10), emb, model, k = 5)
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      // Residual IVFPQ (faiss by_residual): the PQ chain replays over
+      // rv = qv − assigned-centroid residuals instead of raw vectors;
+      // queries ADC-score their OWN residual (nprobe=1 probes the
+      // query's cell) against the residual codes, same-cell gated.
+      s"""WITH $qCte,
+         |${ivfChain(k = 4, iters = 2)},
+         |afin AS (SELECT vec_id, cell,
+         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
+         |  FROM (SELECT q.vec_id, c.cell,
+         |          list_sum(list_transform(range(1, 65),
+         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
+         |        FROM q, c2 c) x),
+         |cellof AS (SELECT vec_id, cell FROM afin WHERE rn = 1),
+         |rq AS (SELECT q.vec_id, a.cell,
+         |         list_transform(range(1, 65), i -> q.qv[i] - c.cv[i]) AS rv
+         |       FROM q JOIN cellof a USING (vec_id) JOIN c2 c ON a.cell = c.cell),
+         |rsq AS (SELECT vec_id, s, list_transform(range(1, 17),
+         |          i -> rv[s * 16 + i]) AS sqv
+         |        FROM rq, range(0, 4) t(s)),
+         |${pqChain("rsq", k = 4, iters = 2, sd = 16)},
+         |dt AS (SELECT sq.vec_id AS query_id, c.s, c.cell,
+         |         list_sum(list_transform(range(1, 17),
+         |           i -> (sq.sqv[i] - c.cv[i]) * (sq.sqv[i] - c.cv[i]))) AS d
+         |       FROM rsq sq JOIN p2 c ON sq.s = c.s
+         |       WHERE sq.vec_id < 10),
+         |cd AS (SELECT vec_id AS cand_id, s, cell AS code FROM pf WHERE rn = 1),
+         |sc AS (SELECT dt.query_id, cd.cand_id, CAST(sum(dt.d) AS BIGINT) AS adc
+         |       FROM cd JOIN dt ON cd.s = dt.s AND cd.code = dt.cell
+         |       JOIN cellof qa ON qa.vec_id = dt.query_id
+         |       JOIN cellof ca ON ca.vec_id = cd.cand_id
+         |       WHERE qa.cell = ca.cell AND dt.query_id <> cd.cand_id
+         |       GROUP BY dt.query_id, cd.cand_id),
+         |rk AS (SELECT query_id, cand_id, adc,
+         |         row_number() OVER (PARTITION BY query_id ORDER BY adc, cand_id) AS rnk
+         |       FROM sc)
+         |SELECT query_id, cand_id, CAST(rnk AS BIGINT) AS rnk, adc
+         |FROM rk WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin)),
 
     // Markup injected per doc so normalization is non-trivially checked
     // (the synthetic corpus carries none); the md5 pins the whole
     // normalized text, not just counts.
-    "text_normalize" -> ((s, d) => {
+    Q("text_normalize", ((s, d) => {
       val injected = Tables.documents(s, d).withColumn("text",
         concat(lit("<p>Start  HERE</p>\t"), col("text"), lit("  <br/>\nEnd ")))
       Corpus.normalizeText(injected)
@@ -2179,7 +5169,16 @@ object SparkEntry {
         .withColumn("n_norm_chars", length(col("norm_text")).cast("long"))
         .select(col("doc_id"), col("norm_md5"), col("n_norm_chars"))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      """WITH d AS (SELECT doc_id,
+        |    '<p>Start  HERE</p>' || chr(9) || text || '  <br/>' || chr(10) || 'End ' AS t
+        |  FROM documents),
+        |n AS (SELECT doc_id,
+        |    trim(regexp_replace(lower(regexp_replace(t, '<[^>]*>', ' ', 'g')),
+        |         '[ \t\r\n]+', ' ', 'g')) AS nt
+        |  FROM d)
+        |SELECT doc_id, md5(nt) AS norm_md5, CAST(length(nt) AS BIGINT) AS n_norm_chars
+        |FROM n ORDER BY doc_id""".stripMargin)),
 
     // HTML main-content extraction — the WARC-payload → training-text
     // seam: block segmentation on full synthetic pages (head/script/
@@ -2188,25 +5187,72 @@ object SparkEntry {
     // integer jusText classification (link-density / stopword-share /
     // length permille), kept-run text hashed whole — entity decode,
     // subtree skips and the two-sided gap-fill all pinned by the hash.
-    "text_html_extract" -> ((s, d) =>
+    Q("text_html_extract", ((s, d) =>
       WebExtract.htmlExtract(WebExtract.syntheticHtmlDocs(Tables.documents(s, d)))
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // Extraction replay from the fixture's analytic rules: the kept
+      // set is exactly the 2+id%4 paragraphs (+ the gap-filled figure
+      // label for even ids, ordinal 1 between paragraphs 0 and 1); the
+      // block census counts header(1) + nav(3) + paragraphs + ad(1) +
+      // figure(even) or tags+aside(odd) + footer(1). The paragraph text
+      // is re-spelled verbatim — including the decoded '&' — so the
+      // string_agg comparison proves tokenizer, entity decode, subtree
+      // skips, classification and gap-fill end to end.
+      """WITH d AS (SELECT doc_id, 2 + doc_id % 4 AS np FROM documents),
+        |paras AS (SELECT doc_id, p * 2 AS ord,
+        |    'the quick data point ' || CAST((doc_id * 7 + p) % 1000 AS VARCHAR) ||
+        |    ' is on the record & file and the value ' ||
+        |    CAST((doc_id + p) % 100 AS VARCHAR) ||
+        |    ' stays in the set for now .' AS txt,
+        |    22 AS words
+        |  FROM (SELECT doc_id, unnest(range(0, np)) AS p FROM d)),
+        |figs AS (SELECT doc_id, 1 AS ord,
+        |    'Figure ' || CAST(doc_id % 10 AS VARCHAR) AS txt, 2 AS words
+        |  FROM d WHERE doc_id % 2 = 0),
+        |kept AS (SELECT * FROM paras UNION ALL SELECT * FROM figs)
+        |SELECT doc_id,
+        |  'Doc ' || CAST(doc_id AS VARCHAR) AS title,
+        |  CAST(9 + doc_id % 4 + doc_id % 2 AS BIGINT) AS n_blocks,
+        |  CAST(count(*) AS BIGINT) AS n_kept,
+        |  CAST(sum(length(txt)) AS BIGINT) AS n_chars,
+        |  CAST(sum(words) AS BIGINT) AS n_words,
+        |  string_agg(txt, chr(10) ORDER BY ord) AS text
+        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin)),
 
     // Longest repeated substring per doc (suffix array + Kasai LCP):
     // the any-grain repetition screen — looped generation and pasted
     // boilerplate surface as one long repeat that fixed-n-gram
     // signals straddle. Capped at 200 chars ONLY so the brute-force
     // SQL oracle (all O(n²) substrings, grouped) stays replayable.
-    "text_longest_repeat" -> ((s, d) =>
+    Q("text_longest_repeat", ((s, d) =>
       TextAnalysis.longestRepeat(Tables.documents(s, d), maxChars = 200)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // LRS replay by brute force: every substring of the 200-char
+      // slice, grouped; repeats (count ≥ 2, overlaps included) ranked
+      // by length DESC then lexicographically — the suffix-array
+      // result must match the exhaustive enumeration exactly.
+      """WITH t AS (SELECT doc_id, substr(text, 1, 200) AS s FROM documents),
+        |pos AS (SELECT doc_id, s, length(s) AS n,
+        |          unnest(range(1, length(s) + 1)) AS i FROM t),
+        |ss AS (SELECT doc_id, substr(s, CAST(i AS INTEGER), CAST(L AS INTEGER)) AS sub, L
+        |       FROM (SELECT doc_id, s, i, unnest(range(1, n - i + 2)) AS L FROM pos)),
+        |rep AS (SELECT doc_id, sub, L FROM ss
+        |        GROUP BY doc_id, sub, L HAVING count(*) >= 2),
+        |best AS (SELECT doc_id, L, sub,
+        |         row_number() OVER (PARTITION BY doc_id ORDER BY L DESC, sub ASC) AS rn
+        |         FROM rep)
+        |SELECT t.doc_id, CAST(coalesce(b.L, 0) AS BIGINT) AS lrs_len,
+        |       coalesce(b.sub, '') AS lrs
+        |FROM t LEFT JOIN (SELECT doc_id, L, sub FROM best WHERE rn = 1) b
+        |  ON b.doc_id = t.doc_id
+        |ORDER BY t.doc_id""".stripMargin)),
 
     // Unicode NFC audit: injected combining-mark suffixes (decomposed
     // e+acute on id%4=0, precomposed on 1, katakana + voiced mark on
     // 2, pure ASCII on 3) — is_nfc flag, codepoint deltas, and the
     // md5 of the NFC form pin the JDK normalizer against DuckDB's
     // utf8proc byte for byte.
-    "text_nfc_audit" -> ((s, d) => {
+    Q("text_nfc_audit", ((s, d) => {
       val injected = Tables.documents(s, d).withColumn("text",
         concat(col("text"),
           when(col("doc_id") % 4 === 0, lit(" café"))
@@ -2217,131 +5263,364 @@ object SparkEntry {
         .withColumn("nfc_md5", md5(col("nfc_text").cast("binary")))
         .drop("nfc_text")
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // NFC audit replay: the same injected suffixes built from chr()
+      // codepoints (769 = combining acute, 233 = precomposed e-acute,
+      // 12459/12441 = katakana KA + combining voiced mark), normalized
+      // by DuckDB's utf8proc — md5 of the NFC form must match the JDK
+      // normalizer's output byte for byte.
+      """WITH t AS (SELECT doc_id,
+        |  text || CASE doc_id % 4
+        |    WHEN 0 THEN ' cafe' || chr(769)
+        |    WHEN 1 THEN ' caf' || chr(233)
+        |    WHEN 2 THEN ' ' || chr(12459) || chr(12441)
+        |    ELSE '' END AS s
+        |  FROM documents)
+        |SELECT doc_id,
+        |  CAST(CASE WHEN s = nfc_normalize(s) THEN 1 ELSE 0 END AS BIGINT) AS is_nfc,
+        |  CAST(length(s) AS BIGINT) AS cp_raw,
+        |  CAST(length(nfc_normalize(s)) AS BIGINT) AS cp_nfc,
+        |  md5(nfc_normalize(s)) AS nfc_md5
+        |FROM t ORDER BY doc_id""".stripMargin)),
 
     // Full IVF ANN: train → assign → cell-pruned exact top-k. The query
     // set is a subset of the candidates, so one assignment pass over
     // the candidates serves both sides (ivfTopKTrained assigns each
     // side independently for the general disjoint-sets case).
-    "sim_ann_ivf_trained" -> ((s, d) => {
+    Q("sim_ann_ivf_trained", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cents = Similarity.ivfTrain(emb, k = 4, iters = 2)
       val assigned = emb.join(Similarity.ivfAssign(emb, cents), "vec_id")
       Similarity.ivfTopK(assigned.filter(col("vec_id") < 10), assigned, k = 5, cellCol = "cell")
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"), col("cos"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      s"""${ivfCtes(k = 4, iters = 2)},
+         |$ivfServeCtes""".stripMargin)),
 
     // The same single-cell serve over the k-means||-trained quantizer
     // (scalable seeding feeding the production path end to end).
-    "sim_ann_ivf_pp" -> ((s, d) => {
+    Q("sim_ann_ivf_pp", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cents = Similarity.ivfTrainPP(emb, k = 4, l = 8, rounds = 2, iters = 2)
       val assigned = emb.join(Similarity.ivfAssign(emb, cents), "vec_id")
       Similarity.ivfTopK(assigned.filter(col("vec_id") < 10), assigned, k = 5, cellCol = "cell")
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"), col("cos"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      // Same serving chain over the k-means||-trained quantizer: proves
+      // the scalable seeding feeds the production single-cell serve end
+      // to end (oracle replays candidate rounds + weighting + Lloyd +
+      // assignment + cosine top-k).
+      s"""WITH $qCte,
+         |${kppSeedCtes(k = 4, l = 8, rounds = 2)},
+         |${ivfChain(k = 4, iters = 2, emitC0 = false)},
+         |$ivfServeCtes""".stripMargin)),
 
     // Multi-probe IVF: each query probes its 2 nearest trained cells —
     // the recall dial between ivf_trained (nprobe=1) and brute force.
-    "sim_ann_ivf_nprobe" -> ((s, d) => {
+    Q("sim_ann_ivf_nprobe", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cents = Similarity.ivfTrain(emb, k = 4, iters = 2)
       Similarity.ivfTopKProbes(emb.filter(col("vec_id") < 10), emb, k = 5,
           cents, nprobe = 2)
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"), col("cos"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(ivfNprobeOracle)),
 
     // STORED IVF-Flat serving (faiss IndexIVFFlat): same probe dial,
     // EXACT cosine off the persisted cell table — zero training per
     // query, zero quantization error. Same params as sim_ann_ivf_nprobe
     // so the oracle is shared verbatim: stored serving ≡ the in-memory
     // pipeline is itself the law under test.
-    "sim_ann_ivf_flat_stored" -> ((s, d) => {
+    Q("sim_ann_ivf_flat_stored", ((s, d) => {
       val idx = Similarity.readIvfFlatIndex(s, storedIvfFlatDir(s, d))
       Similarity.ivfFlatTopK(Tables.embeddings(s, d).filter(col("vec_id") < 10),
           idx, k = 5, nprobe = 2)
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"), col("cos"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      // Stored serving must equal the in-memory trained pipeline — the
+      // flat-index twin shares the oracle verbatim.
+      ivfNprobeOracle)),
 
     // The probe dial measured: recall@5 per (nprobe, query) against
     // brute force — nprobe = 4 is every cell, pinned at 1000. The
     // serving-quality curve a production index publishes.
-    "sim_nprobe_recall" -> ((s, d) => {
+    Q("sim_nprobe_recall", ((s, d) => {
       val idx = Similarity.readIvfFlatIndex(s, storedIvfFlatDir(s, d))
       Similarity.nprobeRecall(Tables.embeddings(s, d).filter(col("vec_id") < 10),
           idx, k = 5, nprobes = Seq(1, 2, 4))
         .orderBy(col("nprobe"), col("query_id"))
-    }),
+    }), Some(
+      // The same IVF chain with the nprobe list unnested, intersected
+      // against the brute-force top-5 truth per (nprobe, query).
+      s"""${ivfCtes(k = 4, iters = 2)},
+         |afin AS (SELECT vec_id, cell,
+         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
+         |  FROM (SELECT q.vec_id, c.cell,
+         |          list_sum(list_transform(range(1, 65),
+         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
+         |        FROM q, c2 c) x),
+         |asg AS (SELECT vec_id, cell FROM afin WHERE rn = 1),
+         |e AS (SELECT e0.vec_id, e0.embedding, a.cell,
+         |        ${dotSql("e0.embedding", "e0.embedding")} AS n2
+         |      FROM embeddings e0 JOIN asg a ON e0.vec_id = a.vec_id),
+         |np AS (SELECT unnest([1, 2, 4]) AS nprobe),
+         |probes AS (SELECT np.nprobe, a.vec_id AS query_id, a.cell
+         |           FROM afin a CROSS JOIN np
+         |           WHERE a.rn <= np.nprobe AND a.vec_id < 10),
+         |qq AS (SELECT p.nprobe, p.query_id, e.embedding AS qv, e.n2 AS qn2,
+         |              p.cell AS qcell
+         |       FROM probes p JOIN e ON p.query_id = e.vec_id),
+         |scored AS (SELECT nprobe, query_id, e.vec_id AS cand_id,
+         |             round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
+         |           FROM qq JOIN e ON qcell = e.cell AND query_id <> e.vec_id),
+         |ak AS (SELECT nprobe, query_id, cand_id FROM (
+         |         SELECT nprobe, query_id, cand_id, row_number() OVER (
+         |           PARTITION BY nprobe, query_id ORDER BY cos DESC, cand_id) AS rnk
+         |         FROM scored) x WHERE rnk <= 5),
+         |tq AS (SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2
+         |       FROM e WHERE vec_id < 10),
+         |tsc AS (SELECT query_id, e.vec_id AS cand_id,
+         |          round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
+         |        FROM tq JOIN e ON query_id <> e.vec_id),
+         |tk AS (SELECT query_id, cand_id FROM (
+         |         SELECT query_id, cand_id, row_number() OVER (
+         |           PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
+         |         FROM tsc) x WHERE rnk <= 5),
+         |hits AS (SELECT ak.nprobe, ak.query_id, CAST(count(*) AS BIGINT) AS n_hits
+         |         FROM tk JOIN ak ON tk.query_id = ak.query_id
+         |                        AND tk.cand_id = ak.cand_id
+         |         GROUP BY 1, 2)
+         |SELECT np.nprobe, q.query_id,
+         |  CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
+         |  CAST(coalesce(h.n_hits, 0) * 1000 // 5 AS BIGINT) AS recall_permille
+         |FROM (SELECT DISTINCT query_id FROM tk) q CROSS JOIN np
+         |LEFT JOIN hits h ON h.nprobe = np.nprobe AND h.query_id = q.query_id
+         |ORDER BY np.nprobe, q.query_id""".stripMargin)),
 
     // SemDeDup: paraphrase-level dedup — trained k-means cells as the
     // blocking, intra-cell cosine >= 0.3, smallest id survives per
     // near-dup relation. k=16 cells (vs the ANN queries' k=4): the
     // pair stage costs Σ cell_size², so the cell count must grow with
     // the corpus — more cells = quadratically fewer pairs per cell.
-    "dedup_semantic" -> ((s, d) => {
+    Q("dedup_semantic", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cents = Similarity.ivfTrain(emb, k = 16, iters = 2)
       Similarity.semanticDedup(emb, cents, minCos = 0.3).orderBy(col("vec_id"))
-    }),
+    }), Some(
+      s"""${ivfCtes(k = 16, iters = 2)},
+         |afin AS (SELECT vec_id, cell,
+         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
+         |  FROM (SELECT q.vec_id, c.cell,
+         |          list_sum(list_transform(range(1, 65),
+         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
+         |        FROM q, c2 c) x),
+         |asg AS (SELECT vec_id, cell FROM afin WHERE rn = 1),
+         |e AS (SELECT e0.vec_id, e0.embedding, a.cell,
+         |        ${dotSql("e0.embedding", "e0.embedding")} AS n2
+         |      FROM embeddings e0 JOIN asg a ON e0.vec_id = a.vec_id),
+         |losers AS (SELECT DISTINCT b.vec_id
+         |           FROM e a JOIN e b ON a.cell = b.cell AND a.vec_id < b.vec_id
+         |           WHERE round(${dotSql("a.embedding", "b.embedding")}
+         |                       / sqrt(a.n2 * b.n2), 4) >= 0.3)
+         |SELECT vec_id, cell FROM e
+         |WHERE vec_id NOT IN (SELECT vec_id FROM losers)
+         |ORDER BY vec_id""".stripMargin)),
 
     // Int8 scalar quantization of the embedding table: per-vector
     // codes pinned by md5, scale + squared-norm exact integers.
-    "sim_quantize" -> ((s, d) => {
+    Q("sim_quantize", ((s, d) => {
       Similarity.sq8Quantize(Tables.embeddings(s, d))
         .select(col("vec_id"), col("amax"), col("csq"),
           md5(concat_ws(",", col("codes").cast("array<string>")).cast("binary"))
             .as("codes_md5"))
         .orderBy(col("vec_id"))
-    }),
+    }), Some(
+      s"""WITH q0 AS (SELECT vec_id, list_transform(range(1, 65),
+         |        i -> CAST(floor(embedding[i]::DOUBLE * 10000 + 0.5) AS BIGINT)) AS qv
+         |      FROM embeddings),
+         |mx AS (SELECT vec_id, qv,
+         |         list_max(list_transform(qv, x -> abs(x))) AS amax FROM q0),
+         |cd AS (SELECT vec_id, amax,
+         |         CASE WHEN amax = 0 THEN list_transform(qv, x -> CAST(0 AS BIGINT))
+         |              ELSE list_transform(qv,
+         |                x -> CAST(floor(x * 127.0 / amax) AS BIGINT)) END AS codes
+         |       FROM mx)
+         |SELECT vec_id, amax,
+         |  CAST(list_sum(list_transform(codes, x -> x * x)) AS BIGINT) AS csq,
+         |  md5(array_to_string(codes, ',')) AS codes_md5
+         |FROM cd ORDER BY vec_id""".stripMargin)),
 
     // ANN over the quantized codes (asymmetric distance): queries full
     // precision, candidates int8 — the 1/4-memory scale path.
-    "sim_ann_sq8" -> ((s, d) => {
+    Q("sim_ann_sq8", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.sq8TopK(emb.filter(col("vec_id") < 10), emb, k = 5)
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"), col("cos"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      s"""WITH q0 AS (SELECT vec_id, list_transform(range(1, 65),
+         |        i -> CAST(floor(embedding[i]::DOUBLE * 10000 + 0.5) AS BIGINT)) AS qv
+         |      FROM embeddings),
+         |mx AS (SELECT vec_id, qv,
+         |         list_max(list_transform(qv, x -> abs(x))) AS amax FROM q0),
+         |cd AS (SELECT vec_id, amax,
+         |         CASE WHEN amax = 0 THEN list_transform(qv, x -> CAST(0 AS BIGINT))
+         |              ELSE list_transform(qv,
+         |                x -> CAST(floor(x * 127.0 / amax) AS BIGINT)) END AS codes
+         |       FROM mx),
+         |c AS (SELECT vec_id AS cand_id, codes,
+         |        list_sum(list_transform(codes, x -> x * x)) AS csq FROM cd),
+         |qq AS (SELECT vec_id AS query_id, qv,
+         |         list_sum(list_transform(qv, x -> x * x)) AS qn2
+         |       FROM q0 WHERE vec_id < 10),
+         |scored AS (SELECT query_id, cand_id,
+         |             round(list_sum(list_transform(range(1, 65),
+         |                     i -> qv[i] * codes[i]))
+         |                   / sqrt(csq::DOUBLE * qn2::DOUBLE), 4) AS cos
+         |           FROM qq JOIN c ON query_id <> cand_id
+         |           WHERE csq > 0 AND qn2 > 0),
+         |ranked AS (SELECT query_id, cand_id, cos,
+         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
+         |           FROM scored)
+         |SELECT query_id, cand_id, rnk, cos FROM ranked WHERE rnk <= 5
+         |ORDER BY query_id, rnk""".stripMargin)),
 
     // Binary (1-bit) quantization: 64 float dims → two 32-bit sign
     // words per vector (32× compression), Hamming shortlist via the
     // native XOR+popcount expression, exact cosine re-rank of the
     // top k·4 — the cheapest-serving end of the quantization family.
-    "sim_ann_binary" -> ((s, d) => {
+    Q("sim_ann_binary", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       Similarity.binaryTopK(emb.filter(col("vec_id") < 10), emb, k = 5, rerankFactor = 4)
         .select(col("query_id"), col("cand_id"), col("rank").cast("long").as("rnk"),
           col("cos"), col("ham"))
         .orderBy(col("query_id"), col("rnk"))
-    }),
+    }), Some(
+      // Binary quantization replayed end-to-end: per-dim integer mean
+      // thresholds (x·N > Σ, no division), sign bits packed as sums of
+      // distinct 2^(31−pos%32) masks into two 32-bit words, Hamming
+      // shortlist (bit_count ∘ xor per word), exact cosine re-rank.
+      s"""WITH q0 AS (SELECT vec_id, list_transform(range(1, 65),
+         |        i -> CAST(floor(embedding[i]::DOUBLE * 10000 + 0.5) AS BIGINT)) AS qv
+         |      FROM embeddings),
+         |pe AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos, qv[CAST(i AS INTEGER)] AS x
+         |       FROM q0, range(1, 65) t(i)),
+         |thr AS (SELECT pos, CAST(sum(x) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n,
+         |          pos // 32 AS word,
+         |          CAST(1 AS BIGINT) << CAST(31 - pos % 32 AS INTEGER) AS w
+         |        FROM pe GROUP BY pos),
+         |bits AS (SELECT pe.vec_id, thr.word,
+         |           CAST(sum(CASE WHEN pe.x * thr.n > thr.s THEN thr.w ELSE 0 END) AS BIGINT) AS wv
+         |         FROM pe JOIN thr USING (pos) GROUP BY pe.vec_id, thr.word),
+         |codes AS (SELECT vec_id, list(wv ORDER BY word) AS code FROM bits GROUP BY vec_id),
+         |qc AS (SELECT vec_id AS query_id, code AS qcode FROM codes WHERE vec_id < 10),
+         |scored AS (SELECT query_id, c.vec_id AS cand_id,
+         |             CAST(bit_count(xor(qcode[1], c.code[1])) +
+         |                  bit_count(xor(qcode[2], c.code[2])) AS BIGINT) AS ham
+         |           FROM qc, codes c WHERE query_id <> c.vec_id),
+         |short AS (SELECT query_id, cand_id, ham FROM (
+         |            SELECT query_id, cand_id, ham,
+         |              row_number() OVER (PARTITION BY query_id ORDER BY ham, cand_id) AS hrank
+         |            FROM scored) x WHERE hrank <= 20),
+         |e AS (SELECT vec_id, embedding, ${dotSql("embedding", "embedding")} AS n2
+         |      FROM embeddings),
+         |rr AS (SELECT s.query_id, s.cand_id, s.ham,
+         |         round(${dotSql("qe.embedding", "ce.embedding")} / sqrt(qe.n2 * ce.n2), 4) AS cos
+         |       FROM short s JOIN e qe ON qe.vec_id = s.query_id
+         |                    JOIN e ce ON ce.vec_id = s.cand_id),
+         |ranked AS (SELECT query_id, cand_id, ham, cos,
+         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
+         |           FROM rr)
+         |SELECT query_id, cand_id, rnk, cos, ham FROM ranked WHERE rnk <= 5
+         |ORDER BY query_id, rnk""".stripMargin)),
 
     // REAL sample-level PCM16 decode: per-frame energy / peak / zero
     // crossings read back from actual WAV data-chunk bytes (the
     // silence-detection primitive; PCM needs no codec).
-    "mm_audio_energy" -> ((s, d) =>
+    Q("mm_audio_energy", ((s, d) =>
       Multimodal.pcm16Frames(
           Multimodal.syntheticAudio(Tables.documents(s, d)), frameSamples = 25)
-        .orderBy(col("doc_id"), col("frame_idx"))),
+        .orderBy(col("doc_id"), col("frame_idx"))), Some(
+      // Recomputes the synthetic sawtooth analytically (the fixture is
+      // arithmetic in doc_id) — a hash-match proves the Spark side read
+      // the REAL PCM bytes back out of the data chunk.
+      """WITH s AS (SELECT doc_id,
+        |  unnest(list_transform(range(0, 64 + doc_id % 64),
+        |    i -> {'i': i, 'v': (doc_id * 31 + i * 17) % 2048 - 1024}),
+        |    recursive := true) FROM documents),
+        |f AS (SELECT doc_id, i // 25 AS frame_idx, v,
+        |        lag(v) OVER (PARTITION BY doc_id, i // 25 ORDER BY i) AS pv
+        |      FROM s)
+        |SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx,
+        |  CAST(count(*) AS BIGINT) AS n_samples,
+        |  CAST(sum(v * v) AS BIGINT) // CAST(count(*) AS BIGINT) AS energy,
+        |  CAST(max(abs(v)) AS BIGINT) AS peak,
+        |  CAST(coalesce(sum(CASE WHEN pv * v < 0 THEN 1 END), 0) AS BIGINT)
+        |    AS zero_crossings
+        |FROM f GROUP BY doc_id, frame_idx ORDER BY doc_id, frame_idx""".stripMargin)),
 
     // Silence segmentation over the decoded frames: maximal low-energy
     // frame runs per blob (trim/split cut points).
-    "mm_audio_silence" -> ((s, d) =>
+    Q("mm_audio_silence", ((s, d) =>
       Multimodal.silenceSegments(
           Multimodal.pcm16Frames(
             Multimodal.syntheticAudio(Tables.documents(s, d)), frameSamples = 25),
           maxEnergy = 250000L)
-        .orderBy(col("doc_id"), col("seg_start"))),
+        .orderBy(col("doc_id"), col("seg_start"))), Some(
+      """WITH s AS (SELECT doc_id,
+        |  unnest(list_transform(range(0, 64 + doc_id % 64),
+        |    i -> {'i': i, 'v': (doc_id * 31 + i * 17) % 2048 - 1024}),
+        |    recursive := true) FROM documents),
+        |f AS (SELECT doc_id, i // 25 AS frame_idx, v FROM s),
+        |e AS (SELECT doc_id, frame_idx,
+        |        CAST(sum(v * v) AS BIGINT) // CAST(count(*) AS BIGINT) AS energy
+        |      FROM f GROUP BY doc_id, frame_idx),
+        |q AS (SELECT doc_id, frame_idx,
+        |        frame_idx - row_number() OVER (PARTITION BY doc_id
+        |          ORDER BY frame_idx) AS grp
+        |      FROM e WHERE energy <= 250000)
+        |SELECT doc_id, CAST(min(frame_idx) AS BIGINT) AS seg_start,
+        |       CAST(max(frame_idx) AS BIGINT) AS seg_end,
+        |       CAST(count(*) AS BIGINT) AS n_frames
+        |FROM q GROUP BY doc_id, grp ORDER BY doc_id, seg_start""".stripMargin)),
 
     // BPE tokenizer training: the first 3 merge steps, engine-exact
     // (total-ordered pair selection; the corpus is scanned once, the
     // merge loop runs on the vocabulary).
-    "text_bpe_merges" -> ((s, d) =>
+    Q("text_bpe_merges", ((s, d) =>
       TextAnalysis.bpeMerges(Tables.documents(s, d), merges = 3)
-        .orderBy(col("merge_rank"))),
+        .orderBy(col("merge_rank"))), Some {
+      // NB DuckDB list slicing is INCLUSIVE at negative ends (acc[:-1]
+      // keeps the last element) — all-but-last must be acc[:len(acc)-1].
+      def iter(i: Int): String =
+        s"""p$i AS (SELECT l, r, CAST(sum(cnt) AS BIGINT) AS pair_cnt
+           |       FROM (SELECT cnt, unnest(list_transform(range(1, len(syms)),
+           |               j -> {'l': syms[j], 'r': syms[j+1]}), recursive := true)
+           |             FROM w${i - 1} WHERE len(syms) >= 2)
+           |       GROUP BY l, r),
+           |m$i AS (SELECT l, r, pair_cnt FROM p$i
+           |        ORDER BY pair_cnt DESC, l, r LIMIT 1),
+           |w$i AS (SELECT cnt, list_reduce(list_transform(syms, s -> [s]),
+           |         (acc, x) -> CASE WHEN acc[-1] = l AND x[1] = r
+           |                     THEN list_append(acc[:len(acc)-1], l || r)
+           |                     ELSE list_concat(acc, x) END) AS syms
+           |       FROM w${i - 1} CROSS JOIN m$i)""".stripMargin
+      s"""WITH tok AS (SELECT unnest($tokSql) AS word FROM documents),
+         |w0 AS (SELECT CAST(count(*) AS BIGINT) AS cnt,
+         |         list_transform(range(1, len(word)+1), i -> word[i:i]) AS syms
+         |       FROM tok GROUP BY word),
+         |${iter(1)},
+         |${iter(2)},
+         |${iter(3)},
+         |u AS (SELECT CAST(1 AS BIGINT) AS merge_rank, l AS "left", r AS "right",
+         |             l || r AS merged, pair_cnt AS cnt FROM m1
+         |      UNION ALL SELECT 2, l, r, l || r, pair_cnt FROM m2
+         |      UNION ALL SELECT 3, l, r, l || r, pair_cnt FROM m3)
+         |SELECT * FROM u ORDER BY merge_rank""".stripMargin
+    }),
 
     // Production-scale BPE training: 100 merges on the iterative
     // (vocabulary-materializing) trainer — corpus scanned once,
@@ -2355,58 +5634,107 @@ object SparkEntry {
     // for the ~10^4-word sf0.1 vocab), so the 200 per-merge jobs never
     // inherit the corpus scan's partition count. Results are
     // partition-count independent (total-ordered argmax; BpeScaleSpec).
-    "text_bpe_merges100" -> ((s, d) =>
+    Q("text_bpe_merges100", ((s, d) =>
       TextAnalysis.bpeMergesIter(Tables.documents(s, d), merges = 100)
-        .orderBy(col("merge_rank"))),
+        .orderBy(col("merge_rank"))), None),
 
     // Apply the learned merges back to the corpus: per-doc BPE token
     // counts + compression vs raw chars (tokenizer fertility check).
     // Train (3 merges) + apply in one lazy plan; apply is one narrow
     // scan with the k-row merge table constant-folded in.
-    "text_bpe_encode" -> ((s, d) => {
+    Q("text_bpe_encode", ((s, d) => {
       val docs = Tables.documents(s, d)
       TextAnalysis.bpeEncode(docs, TextAnalysis.bpeMerges(docs, merges = 3))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      s"""WITH $bpeEncodeCtes
+         |SELECT doc_id, n_words, n_chars, n_bpe_tokens,
+         |  CASE WHEN n_bpe_tokens > 0 THEN (n_chars * 1000) // n_bpe_tokens
+         |       ELSE 0 END AS compression_permille
+         |FROM e ORDER BY doc_id""".stripMargin)),
 
     // WordPiece family (vs BPE: frequency-SELECTED pieces, greedy
     // longest-match segmentation) — vocab train + apply, all-integer
     // so both are hash-exact against the oracle.
-    "text_wordpiece_vocab" -> ((s, d) =>
-      TextAnalysis.wordpieceVocab(Tables.documents(s, d)).orderBy(col("piece"))),
+    Q("text_wordpiece_vocab", ((s, d) =>
+      TextAnalysis.wordpieceVocab(Tables.documents(s, d)).orderBy(col("piece"))), Some(
+      s"""WITH $wpVocabCtes
+         |SELECT piece, cnt FROM wvocab ORDER BY piece""".stripMargin)),
 
-    "text_wordpiece_encode" -> ((s, d) => {
+    Q("text_wordpiece_encode", ((s, d) => {
       val docs = Tables.documents(s, d)
       TextAnalysis.wordpieceEncode(docs, TextAnalysis.wordpieceVocab(docs))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // NOTE the per-word fold runs FLAT over the distinct-word rows and
+      // joins back per doc (the Spark plan's own shape) — NOT nested as
+      // list_transform(tk, w -> list_reduce(...)): DuckDB 1.0's lambda
+      // vectorization evaluates a two-level capture of `w` against
+      // misaligned rows (observed: the same word folding to 4 in one
+      // list position and 5 in another), so the nested form is wrong
+      // nondeterministically. Single-level captures (w, vs as plain
+      // columns) are sound — the bpe_encode oracle's nested lambdas
+      // survive because their inner fold only captures its own
+      // transform variable.
+      s"""WITH $wpVocabCtes,
+         |$wpEncodeCtes,
+         |e2 AS (SELECT d.doc_id, CAST(len($tokSql) AS BIGINT) AS n_words,
+         |         CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_chars,
+         |         coalesce(pd.n_wp_tokens, 0) AS n_wp_tokens
+         |       FROM documents d LEFT JOIN pd ON pd.doc_id = d.doc_id)
+         |SELECT doc_id, n_words, n_chars, n_wp_tokens,
+         |  CASE WHEN n_wp_tokens > 0 THEN (n_chars * 1000) // n_wp_tokens
+         |       ELSE 0 END AS compression_permille
+         |FROM e2 ORDER BY doc_id""".stripMargin)),
 
     // POSITIONAL WordPiece (the real "##" semantic): start-position and
     // continuation occurrences of a substring are separate vocabulary
     // entries competing in one frequency pool; the greedy fold matches
     // the cursor against the position-appropriate set.
-    "text_wordpiece_vocab_pos" -> ((s, d) =>
+    Q("text_wordpiece_vocab_pos", ((s, d) =>
       TextAnalysis.wordpieceVocabPositional(Tables.documents(s, d))
-        .orderBy(col("piece"), col("at_start"))),
+        .orderBy(col("piece"), col("at_start"))), Some(
+      s"""WITH $wpPosVocabCtes
+         |SELECT piece, at_start, cnt FROM wvocab ORDER BY piece, at_start""".stripMargin)),
 
-    "text_wordpiece_encode_pos" -> ((s, d) => {
+    Q("text_wordpiece_encode_pos", ((s, d) => {
       val docs = Tables.documents(s, d)
       TextAnalysis.wordpieceEncodePositional(docs,
         TextAnalysis.wordpieceVocabPositional(docs))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(wpPosEncodeOracle)),
 
     // Unigram-LM (SentencePiece-style) tokenizer — completes the trio
     // (BPE merge order / WordPiece greedy / unigram OPTIMAL Viterbi):
     // pieces scored freq×len, segmentation DP-solved per distinct word.
-    "text_unigram_vocab" -> ((s, d) =>
-      TextAnalysis.unigramVocab(Tables.documents(s, d)).orderBy(col("piece"))),
+    Q("text_unigram_vocab", ((s, d) =>
+      TextAnalysis.unigramVocab(Tables.documents(s, d)).orderBy(col("piece"))), Some(
+      s"""WITH $uniVocabCtes
+         |SELECT piece, cnt, score FROM uvocab ORDER BY piece""".stripMargin)),
 
-    "text_unigram_encode" -> ((s, d) => {
+    Q("text_unigram_encode", ((s, d) => {
       val docs = Tables.documents(s, d)
       TextAnalysis.unigramEncode(docs, TextAnalysis.unigramVocab(docs))
         .orderBy(col("doc_id"))
-    }),
+    }), Some(
+      // Viterbi as a recursive CTE: dp arrays (tots, nps) carried per
+      // word, one iteration per character position; candidates at
+      // position i are the score-bearing grid pieces ending there
+      // (single-char OOV at score 0); the argmax is a lexicographic
+      // struct max over (−np, tot, l) — fewest pieces, then highest
+      // score, then longer final piece — the identical comparison the
+      // Spark fold's array_max(struct(m,t,l)) performs.
+      s"""WITH RECURSIVE $uniVocabCtes,
+         |$uniEncodeCtes,
+         |ue2 AS (SELECT d.doc_id, CAST(len($tokSql) AS BIGINT) AS n_words,
+         |          CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_chars,
+         |          coalesce(upd.n_pieces, 0) AS n_pieces,
+         |          coalesce(upd.total_score, 0) AS total_score
+         |        FROM documents d LEFT JOIN upd ON upd.doc_id = d.doc_id)
+         |SELECT doc_id, n_words, n_chars, n_pieces, total_score,
+         |  CASE WHEN n_pieces > 0 THEN (n_chars * 1000) // n_pieces
+         |       ELSE 0 END AS compression_permille
+         |FROM ue2 ORDER BY doc_id""".stripMargin)),
 
     // The tokenizer BAKE-OFF as one query: per doc, token counts under
     // all three self-trained tokenizers (BPE merge-order, WordPiece
@@ -2416,29 +5744,73 @@ object SparkEntry {
     // three encode folds (round-10) — identical rows/values to
     // joining the three standalone operators, one corpus pass instead
     // of six.
-    "corpus_tokenizer_eval" -> ((s, d) =>
-      TextAnalysis.tokenizerEval(Tables.documents(s, d)).orderBy(col("doc_id"))),
+    Q("corpus_tokenizer_eval", ((s, d) =>
+      TextAnalysis.tokenizerEval(Tables.documents(s, d)).orderBy(col("doc_id"))), Some(
+      // All three tokenizer chains replayed in ONE statement (the CTE
+      // sets are disjoint by prefix; aliases shadow same-named CTEs
+      // inside the recursive step).
+      s"""WITH RECURSIVE $bpeEncodeCtes,
+         |$wpVocabCtes,
+         |$wpEncodeCtes,
+         |$uniVocabCtes,
+         |$uniEncodeCtes
+         |SELECT e.doc_id, e.n_words, e.n_chars, e.n_bpe_tokens,
+         |  coalesce(pd.n_wp_tokens, 0) AS n_wp_tokens,
+         |  coalesce(upd.n_pieces, 0) AS n_uni_pieces
+         |FROM e LEFT JOIN pd ON pd.doc_id = e.doc_id
+         |       LEFT JOIN upd ON upd.doc_id = e.doc_id
+         |ORDER BY e.doc_id""".stripMargin)),
 
     // ──────────── LLM pipeline: retrieval / span dedup / diagnostics ────────────
 
     // Per-doc top-5 characteristic terms by the integer-exact tf·idf
     // surrogate (tf·1e6 DIV df). The df side is vocabulary-sized so the
     // term join stays keyed, never broadcast.
-    "text_tfidf" -> ((s, d) =>
+    Q("text_tfidf", ((s, d) =>
       TextAnalysis.tfIdfTopTerms(Tables.documents(s, d), k = 5)
-        .orderBy(col("doc_id"), col("rank"))),
+        .orderBy(col("doc_id"), col("rank"))), Some(
+      s"""WITH tok AS (SELECT doc_id, unnest($tokSql) AS term FROM documents),
+         |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+         |       FROM tok GROUP BY doc_id, term),
+         |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
+         |sc AS (SELECT doc_id, term, tf, df, tf * 1000000 // df AS score_micro
+         |       FROM tf JOIN df USING (term)),
+         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
+         |         ORDER BY score_micro DESC, term) AS BIGINT) AS "rank" FROM sc)
+         |SELECT doc_id, term, tf, df, score_micro, "rank" FROM r
+         |WHERE "rank" <= 5 ORDER BY doc_id, "rank"""".stripMargin)),
 
     // BM25 retrieval (k1=1.2, b=0.75 in exact rational-integer form):
     // top-20 documents for a fixed bag-of-words query. The query-term
     // broadcast prunes the token stream before any shuffle.
-    "sim_bm25" -> ((s, d) =>
+    Q("sim_bm25", ((s, d) =>
       TextAnalysis.bm25TopK(Tables.documents(s, d),
-        Seq("spark", "filter", "join"), k = 20)),
+        Seq("spark", "filter", "join"), k = 20)), Some(
+      s"""WITH tok AS (SELECT doc_id, unnest($tokSql) AS term FROM documents),
+         |dl AS (SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS dl FROM documents),
+         |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+         |         CAST(sum(dl) AS BIGINT) AS total_tokens FROM dl),
+         |q AS (SELECT unnest(['spark', 'filter', 'join']) AS term),
+         |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+         |       FROM tok JOIN q USING (term) GROUP BY doc_id, term),
+         |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
+         |c AS (SELECT tf.doc_id, tf.tf,
+         |        (1000 * (2 * (st.n_docs - df.df) + 1)) // (2 * df.df + 1) AS idf_milli,
+         |        (1000 * dl.dl * st.n_docs) // st.total_tokens AS len_ratio_milli
+         |      FROM tf JOIN df USING (term)
+         |      JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN st),
+         |s AS (SELECT doc_id,
+         |        CAST(sum((idf_milli * 22000 * tf)
+         |          // (10000 * tf + 3000 + 9 * len_ratio_milli)) AS BIGINT) AS score_milli,
+         |        CAST(count(*) AS BIGINT) AS n_hit_terms
+         |      FROM c GROUP BY doc_id)
+         |SELECT doc_id, score_milli, n_hit_terms FROM s
+         |ORDER BY score_milli DESC, doc_id LIMIT 20""".stripMargin)),
 
     // Reciprocal-rank fusion of two lexical rankers (BM25 ⊕
     // query-likelihood) — the standard hybrid-retrieval merge, reading
     // only ranks; integer micro-point RRF with c = 60.
-    "sim_rrf_fusion" -> ((s, d) => {
+    Q("sim_rrf_fusion", ((s, d) => {
       val docs = Tables.documents(s, d)
       val terms = Seq("spark", "filter", "join")
       def ranked(df: org.apache.spark.sql.DataFrame, scoreCol: String) =
@@ -2450,31 +5822,134 @@ object SparkEntry {
       val ql = ranked(TextAnalysis.queryLikelihoodTopK(docs, terms, k = 20), "score_micro")
       TextAnalysis.rrfFuse(Seq(bm, ql), k = 10)
         .orderBy(col("rrf_micro").desc, col("doc_id"))
-    }),
+    }), Some(
+      // both rankers replayed, ranks fused as floor(1e9/(60+rank)) sums
+      s"""WITH tok AS (SELECT doc_id, unnest($tokSql) AS term FROM documents),
+         |dl AS (SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS dl FROM documents),
+         |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
+         |         CAST(sum(dl) AS BIGINT) AS total_tokens FROM dl),
+         |q AS (SELECT unnest(['spark', 'filter', 'join']) AS term),
+         |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
+         |       FROM tok JOIN q USING (term) GROUP BY doc_id, term),
+         |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
+         |c AS (SELECT tf.doc_id, tf.tf,
+         |        (1000 * (2 * (st.n_docs - df.df) + 1)) // (2 * df.df + 1) AS idf_milli,
+         |        (1000 * dl.dl * st.n_docs) // st.total_tokens AS len_ratio_milli
+         |      FROM tf JOIN df USING (term)
+         |      JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN st),
+         |bm0 AS (SELECT doc_id,
+         |          CAST(sum((idf_milli * 22000 * tf)
+         |            // (10000 * tf + 3000 + 9 * len_ratio_milli)) AS BIGINT) AS score_milli
+         |        FROM c GROUP BY doc_id
+         |        ORDER BY score_milli DESC, doc_id LIMIT 20),
+         |bm AS (SELECT doc_id, CAST(row_number() OVER
+         |         (ORDER BY score_milli DESC, doc_id) AS BIGINT) AS rank FROM bm0),
+         |ql0 AS (SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS tf_total
+         |        FROM tf GROUP BY tf.doc_id),
+         |ql1 AS (SELECT ql0.doc_id,
+         |          (1000000 * ql0.tf_total) // dl.dl AS score_micro
+         |        FROM ql0 JOIN dl ON ql0.doc_id = dl.doc_id
+         |        ORDER BY score_micro DESC, ql0.doc_id LIMIT 20),
+         |ql AS (SELECT doc_id, CAST(row_number() OVER
+         |         (ORDER BY score_micro DESC, doc_id) AS BIGINT) AS rank FROM ql1),
+         |u AS (SELECT doc_id, 1000000000 // (60 + rank) AS pt FROM bm
+         |      UNION ALL SELECT doc_id, 1000000000 // (60 + rank) AS pt FROM ql),
+         |f AS (SELECT doc_id, CAST(sum(pt) AS BIGINT) AS rrf_micro,
+         |        CAST(count(*) AS BIGINT) AS n_lists
+         |      FROM u GROUP BY doc_id
+         |      ORDER BY rrf_micro DESC, doc_id LIMIT 10)
+         |SELECT doc_id, rrf_micro, n_lists FROM f
+         |ORDER BY rrf_micro DESC, doc_id""".stripMargin)),
 
     // Exact-substring dedup report: maximal cross-doc repeated spans of
     // ≥ 8 tokens, merged via gaps-and-islands (suffix-array recipe,
     // re-expressed as gram equi-join — never all-pairs).
-    "dedup_substring" -> ((s, d) =>
+    Q("dedup_substring", ((s, d) =>
       Dedup.repeatedSpans(Tables.documents(s, d), spanTokens = 8)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // 1-based positions here vs posexplode's 0-based on the Spark side:
+      // islands and span lengths use only position DIFFERENCES, so the
+      // offset cancels and never reaches the output.
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |g AS (SELECT doc_id, unnest(list_transform(range(1, len(tk) - 6),
+         |        i -> {'pos': i, 'gram': array_to_string(tk[i:i+7], ' ')}),
+         |        recursive := true) FROM t),
+         |sh AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
+         |h AS (SELECT doc_id, pos FROM g JOIN sh USING (gram)),
+         |i AS (SELECT doc_id, pos,
+         |        pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM h),
+         |sp AS (SELECT doc_id, grp, min(pos) AS s, max(pos) AS e,
+         |         count(*) AS n_grams FROM i GROUP BY doc_id, grp),
+         |pd AS (SELECT doc_id, CAST(sum(n_grams) AS BIGINT) AS n_shared_grams,
+         |         CAST(count(*) AS BIGINT) AS n_spans,
+         |         CAST(len(list_distinct(flatten(list(range(s, e + 8)))))
+         |           AS BIGINT) AS covered_tokens,
+         |         CAST(max(e - s + 8) AS BIGINT) AS max_span_tokens
+         |       FROM sp GROUP BY doc_id),
+         |n AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens FROM t)
+         |SELECT pd.doc_id, n_shared_grams, n_spans, covered_tokens, max_span_tokens,
+         |       n_tokens, covered_tokens * 1000 // n_tokens AS repeated_permille
+         |FROM pd JOIN n USING (doc_id) ORDER BY pd.doc_id""".stripMargin)),
 
     // The removal half of exact-substring dedup: non-canonical repeated
     // spans stripped, text rebuilt (md5-pinned), every doc reported.
-    "dedup_substring_strip" -> ((s, d) =>
+    Q("dedup_substring_strip", ((s, d) =>
       Dedup.stripRepeatedSpans(Tables.documents(s, d), spanTokens = 8)
-        .orderBy(col("doc_id"))),
+        .orderBy(col("doc_id"))), Some(
+      // Same 1-based-vs-0-based note as dedup_substring: only position
+      // DIFFERENCES and counts reach the output, so the offset cancels.
+      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
+         |g AS (SELECT doc_id, unnest(list_transform(range(1, len(tk) - 6),
+         |        i -> {'pos': i, 'gram': array_to_string(tk[i:i+7], ' ')}),
+         |        recursive := true) FROM t),
+         |gm AS (SELECT gram, min(doc_id) AS min_doc FROM g GROUP BY gram
+         |       HAVING count(DISTINCT doc_id) >= 2),
+         |rem AS (SELECT g.doc_id, g.pos FROM g JOIN gm USING (gram)
+         |        WHERE g.doc_id <> gm.min_doc),
+         |i AS (SELECT doc_id, pos,
+         |        pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
+         |      FROM rem),
+         |sp AS (SELECT doc_id, min(pos) AS s, max(pos) AS e FROM i
+         |       GROUP BY doc_id, grp),
+         |cov AS (SELECT doc_id, list_distinct(flatten(list(range(s, e + 8)))) AS cv
+         |        FROM sp GROUP BY doc_id),
+         |k AS (SELECT t.doc_id, tk, coalesce(cv, CAST([] AS BIGINT[])) AS cv
+         |      FROM t LEFT JOIN cov USING (doc_id))
+         |SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
+         |  CAST(len(cv) AS BIGINT) AS n_removed,
+         |  md5(coalesce(array_to_string(list_transform(
+         |    list_filter(list_transform(range(1, len(tk) + 1), j -> {'j': j, 'w': tk[j]}),
+         |      x -> NOT list_contains(cv, x.j)),
+         |    x -> x.w), ' '), '')) AS clean_md5
+         |FROM k ORDER BY doc_id""".stripMargin)),
 
     // Ordered funnel over the event stream (view → click → purchase,
     // strictly-after first-occurrence semantics): per-stage survivors
     // and conversion permille. State = one row per surviving user.
-    "rel_funnel" -> ((s, d) =>
+    Q("rel_funnel", ((s, d) =>
       Relational.funnel(Tables.events(s, d), Seq("view", "click", "purchase"))
-        .orderBy(col("stage"))),
+        .orderBy(col("stage"))), Some(
+      """WITH e AS (SELECT user_id, event_type,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
+        |           FROM events),
+        |s1 AS (SELECT user_id, min(sec) AS t FROM e
+        |       WHERE event_type = 'view' GROUP BY user_id),
+        |s2 AS (SELECT e.user_id, min(sec) AS t FROM e JOIN s1 USING (user_id)
+        |       WHERE event_type = 'click' AND sec > s1.t GROUP BY e.user_id),
+        |s3 AS (SELECT e.user_id, min(sec) AS t FROM e JOIN s2 USING (user_id)
+        |       WHERE event_type = 'purchase' AND sec > s2.t GROUP BY e.user_id),
+        |b AS (SELECT CAST(count(*) AS BIGINT) AS base FROM s1),
+        |u AS (SELECT CAST(1 AS BIGINT) AS stage, 'view' AS step,
+        |             CAST(count(*) AS BIGINT) AS n_users FROM s1
+        |      UNION ALL SELECT 2, 'click', count(*) FROM s2
+        |      UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
+        |SELECT stage, step, n_users,
+        |       CASE WHEN base > 0 THEN (n_users * 1000) // base END AS conv_permille
+        |FROM u CROSS JOIN b ORDER BY stage""".stripMargin)),
 
     // Referential-integrity audit across the star schema: per FK edge,
     // child rows / NULL FKs / orphans (anti-join on the key).
-    "rel_fk_audit" -> ((s, d) =>
+    Q("rel_fk_audit", ((s, d) =>
       Relational.fkAudit(Seq(
         ("lineitem.l_orderkey->orders", Tables.lineitem(s, d), "l_orderkey",
           Tables.orders(s, d), "o_orderkey"),
@@ -2484,18 +5959,57 @@ object SparkEntry {
           Tables.nation(s, d), "n_nationkey"),
         ("supplier.s_nationkey->nation", Tables.supplier(s, d), "s_nationkey",
           Tables.nation(s, d), "n_nationkey")))
-        .orderBy(col("relation"))),
+        .orderBy(col("relation"))), Some {
+      def edge(name: String, child: String, fk: String, parent: String,
+               pk: String): String =
+        s"""SELECT '$name' AS relation,
+           |  (SELECT CAST(count(*) AS BIGINT) FROM $child) AS n_rows,
+           |  (SELECT CAST(count(*) - count($fk) AS BIGINT) FROM $child) AS n_null_fk,
+           |  (SELECT CAST(count(*) AS BIGINT) FROM $child c
+           |   WHERE c.$fk IS NOT NULL
+           |     AND NOT EXISTS (SELECT 1 FROM $parent p
+           |                     WHERE p.$pk = c.$fk)) AS n_orphans""".stripMargin
+      Seq(
+        edge("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
+        edge("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
+        edge("customer.c_nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
+        edge("supplier.s_nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"))
+        .mkString("", "\nUNION ALL\n", "\nORDER BY relation")
+    }),
 
     // Daily cohort retention over the event stream: distinct (user,
     // day) activity → first-day cohort → offset counts + permille.
-    "rel_retention" -> ((s, d) =>
+    Q("rel_retention", ((s, d) =>
       Relational.retention(Tables.events(s, d), periodSec = 86400L)
-        .orderBy(col("cohort"), col("offset"))),
+        .orderBy(col("cohort"), col("offset"))), Some(
+      """WITH a AS (SELECT DISTINCT user_id,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) // 86400 AS period
+        |           FROM events),
+        |c AS (SELECT user_id, min(period) AS cohort FROM a GROUP BY user_id),
+        |n AS (SELECT cohort, a.period - cohort AS "offset",
+        |             CAST(count(*) AS BIGINT) AS n_users
+        |      FROM a JOIN c USING (user_id) GROUP BY cohort, a.period - cohort),
+        |b AS (SELECT cohort, n_users AS base_users FROM n WHERE "offset" = 0)
+        |SELECT n.cohort, "offset", n.n_users,
+        |       (n.n_users * 1000) // base_users AS retained_permille
+        |FROM n JOIN b USING (cohort) ORDER BY n.cohort, "offset"""".stripMargin)),
 
     // Key-skew diagnostics on a join key — the pre-flight measurement
     // for saltedJoin/saltedAggregate. Aggregates only; no window.
-    "rel_skew_profile" -> ((s, d) =>
-      Relational.keySkewProfile(Tables.lineitem(s, d), "l_suppkey", topN = 10)),
+    Q("rel_skew_profile", ((s, d) =>
+      Relational.keySkewProfile(Tables.lineitem(s, d), "l_suppkey", topN = 10)), Some(
+      s"""WITH c AS (SELECT l_suppkey, CAST(count(*) AS BIGINT) AS cnt
+         |           FROM lineitem GROUP BY l_suppkey),
+         |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_rows,
+         |        CAST(count(*) AS BIGINT) AS n_keys,
+         |        CAST(max(cnt) AS BIGINT) AS max_cnt FROM c),
+         |tp AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS topn_rows
+         |       FROM (SELECT cnt FROM c ORDER BY cnt DESC, l_suppkey LIMIT 10))
+         |SELECT n_rows, n_keys, max_cnt, n_rows // n_keys AS avg_cnt,
+         |       (max_cnt * n_keys * 1000) // n_rows AS skew_ratio_permille,
+         |       (max_cnt * 1000) // n_rows AS top1_permille,
+         |       (topn_rows * 1000) // n_rows AS topn_permille
+         |FROM t CROSS JOIN tp""".stripMargin)),
 
     // Snapshot reconciliation: classify every key across two table
     // versions as insert/delete/update (hash-compare inside the
@@ -2503,7 +6017,7 @@ object SparkEntry {
     // IS DISTINCT FROM — verdicts are hash-free). The new version is
     // derived deterministically: %7 keys deleted, %5 prices bumped,
     // %11 keys cloned as inserts.
-    "rel_snapshot_diff" -> ((s, d) => {
+    Q("rel_snapshot_diff", ((s, d) => {
       val o = Tables.orders(s, d)
       val vnew = o.filter(col("o_orderkey") % 7 =!= 0)
         .withColumn("o_totalprice",
@@ -2514,7 +6028,25 @@ object SparkEntry {
       Relational.snapshotDiff(o, vnew, Seq("o_orderkey"),
           Seq("o_totalprice", "o_orderstatus"))
         .orderBy(col("o_orderkey"))
-    }),
+    }), Some(
+      // Plain-comparison reconciliation twin of the Spark side's
+      // hash-compare: IS DISTINCT FROM per compared column.
+      """WITH vnew AS (
+        |  SELECT o_orderkey, o_orderstatus,
+        |         o_totalprice + CASE WHEN o_orderkey % 5 = 0 THEN 1 ELSE 0 END AS o_totalprice
+        |  FROM orders WHERE o_orderkey % 7 <> 0
+        |  UNION ALL
+        |  SELECT o_orderkey + 1000000000, o_orderstatus, o_totalprice
+        |  FROM orders WHERE o_orderkey % 11 = 0),
+        |d AS (SELECT coalesce(o.o_orderkey, n.o_orderkey) AS o_orderkey,
+        |        CASE WHEN o.o_orderkey IS NULL THEN 'insert'
+        |             WHEN n.o_orderkey IS NULL THEN 'delete'
+        |             WHEN (o.o_totalprice IS DISTINCT FROM n.o_totalprice)
+        |               OR (o.o_orderstatus IS DISTINCT FROM n.o_orderstatus) THEN 'update'
+        |             ELSE 'same' END AS change
+        |      FROM orders o FULL OUTER JOIN vnew n ON o.o_orderkey = n.o_orderkey)
+        |SELECT o_orderkey, change FROM d WHERE change <> 'same'
+        |ORDER BY o_orderkey""".stripMargin)),
 
     // COUNT DISTINCT incrementally: per-delta-slice distinct-value
     // states, union-merged, EXACT counts read off the merged state —
@@ -2523,7 +6055,7 @@ object SparkEntry {
     // recompute(history) (the rel_incremental_agg pattern). The O(1)-
     // state sketch twin of the same algebra (HLL registers are
     // engine-specific bytes) is bounds-pinned in SketchBoundsSpec.
-    "rel_incremental_distinct" -> ((s, d) => {
+    Q("rel_incremental_distinct", ((s, d) => {
       val ev = Tables.events(s, d)
       val slices = (0 to 2).map(i =>
         Relational.distinctStateExact(ev.filter(col("event_id") % 3 === i),
@@ -2531,7 +6063,12 @@ object SparkEntry {
       Relational.distinctCountExact(
           Relational.mergeDistinctStatesExact(slices), Seq("event_type"))
         .orderBy(col("event_type"))
-    }),
+    }), Some(
+      // Direct COUNT DISTINCT over ALL events — the Spark side merges
+      // three per-slice distinct-value states; hash equality proves
+      // merge(state(deltas)) ≡ recompute(history) for distinct counts.
+      """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
+        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // Incremental QUANTILE maintenance: per-key histogram bucket
     // counts over three delta slices, count-sum merged, bucket-grain
@@ -2539,7 +6076,7 @@ object SparkEntry {
     // oracle buckets ALL events directly and replays the cumulative
     // rule, so the hash match proves merge ≡ recompute for the one
     // profile aggregate order statistics can't give a mergeable state.
-    "rel_incremental_quantiles" -> ((s, d) => {
+    Q("rel_incremental_quantiles", ((s, d) => {
       val ev = Tables.events(s, d)
         .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long"))
       val slices = (0 to 2).map(i =>
@@ -2549,7 +6086,22 @@ object SparkEntry {
           Relational.mergeHistogramStates(slices, Seq("event_type")),
           Seq("event_type"), Seq(500, 900, 990), bucketWidth = 100L)
         .orderBy(col("event_type"), col("q"))
-    }),
+    }), Some(
+      // Direct bucket histogram over ALL events + the cumulative rule —
+      // the Spark side merges three per-slice bucket-count states.
+      """WITH e AS (SELECT event_type,
+        |            CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
+        |b AS (SELECT event_type,
+        |        (cents - ((cents % 100) + 100) % 100) // 100 AS bucket,
+        |        CAST(count(*) AS BIGINT) AS n
+        |      FROM e GROUP BY 1, 2),
+        |c AS (SELECT event_type, bucket, n,
+        |        sum(n) OVER (PARTITION BY event_type ORDER BY bucket) AS cum,
+        |        sum(n) OVER (PARTITION BY event_type) AS total FROM b),
+        |qs AS (SELECT unnest([500, 900, 990]) AS q)
+        |SELECT event_type, q, CAST(min(bucket) * 100 AS BIGINT) AS quantile_lo
+        |FROM c CROSS JOIN qs WHERE cum * 1000 >= q * total
+        |GROUP BY event_type, q ORDER BY event_type, q""".stripMargin)),
 
     // KMV (bottom-k) distinct sketch: the O(k)-state approximate
     // COUNT DISTINCT whose state AND estimate are portable md5
@@ -2557,7 +6109,7 @@ object SparkEntry {
     // hash-match exactly (where HLL register bytes cannot). Merged
     // over three delta slices; accuracy vs exact is pinned in
     // SketchBoundsSpec.
-    "rel_kmv_distinct" -> ((s, d) => {
+    Q("rel_kmv_distinct", ((s, d) => {
       val ev = Tables.events(s, d)
       val slices = (0 to 2).map(i =>
         Relational.kmvState(ev.filter(col("event_id") % 3 === i),
@@ -2566,7 +6118,25 @@ object SparkEntry {
           Relational.mergeKmvStates(slices, Seq("event_type"), k = 64),
           Seq("event_type"), k = 64)
         .orderBy(col("event_type"))
-    }),
+    }), Some(
+      // Bottom-64 of the md5-prefix hashes of distinct user_ids — the
+      // KMV state and its (k-1)*2^32/h_k estimate replayed in exact
+      // integer arithmetic; sketch-of-union ≡ union-of-sketches is
+      // inherent, so the direct replay IS the merge-law proof.
+      s"""WITH v AS (SELECT DISTINCT event_type,
+         |             md5('kmv|' || CAST(user_id AS VARCHAR)) AS m
+         |           FROM events WHERE user_id IS NOT NULL),
+         |h AS (SELECT DISTINCT event_type, (${hexSliceSql("m", 1)}) AS hv FROM v),
+         |r AS (SELECT event_type, hv,
+         |        row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
+         |      FROM h),
+         |kq AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_state,
+         |         max(hv) AS hk
+         |       FROM r WHERE rn <= 64 GROUP BY 1)
+         |SELECT event_type, n_state,
+         |  CAST(CASE WHEN n_state < 64 THEN n_state
+         |       ELSE (63 * 4294967296) // hk END AS BIGINT) AS est_distinct
+         |FROM kq ORDER BY event_type""".stripMargin)),
 
     // PRIORITY SAMPLE (Duffield–Lund–Thorup): per-priority-class
     // k=64 weight-biased order sample, built per parity slice and
@@ -2577,7 +6147,7 @@ object SparkEntry {
     // is estimated off 64 rows per class via Σ max(w, τ̂) and scored
     // against the exact scan in the same output row. State and
     // estimate are md5 integer arithmetic the oracle replays exactly.
-    "rel_priority_sample" -> ((s, d) => {
+    Q("rel_priority_sample", ((s, d) => {
       val o = Tables.orders(s, d)
         .withColumn("cents", floor(col("o_totalprice") * 100 + 0.5).cast("long"))
       val slices = (0 to 2).map(i =>
@@ -2596,7 +6166,44 @@ object SparkEntry {
           expr("(abs(est_sum - coalesce(exact_sum, 0)) * 1000) div " +
             "greatest(coalesce(exact_sum, 0), 1)").as("err_permille"))
         .orderBy(col("o_orderpriority"))
-    }),
+    }), Some(
+      // DLT priority sample replayed row for row: sort key
+      // (u32·2²⁰)//cents off the samp| digest, bottom-64 per class
+      // ordered by (skey, id-string), τ̂ = 2⁵²//skey₆₅, estimate
+      // Σ max(cents, τ̂) over sampled 'F' rows — identical integer
+      // rules both engines.
+      s"""WITH o AS (SELECT o_orderpriority, o_orderstatus,
+         |             CAST(o_orderkey AS VARCHAR) AS id,
+         |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
+         |           FROM orders),
+         |h AS (SELECT o_orderpriority, o_orderstatus, id, cents,
+         |        (${hexSliceSql("m", 1)}) + 1 AS u32
+         |      FROM (SELECT *, md5('samp|' || id) AS m FROM o WHERE cents > 0)),
+         |rk AS (SELECT *, (u32 * 1048576) // cents AS skey FROM h),
+         |rn AS (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
+         |         ORDER BY skey, id) AS rn FROM rk),
+         |t AS (SELECT o_orderpriority,
+         |        max(CASE WHEN rn = 65 THEN skey END) AS k1
+         |      FROM rn GROUP BY 1),
+         |est AS (SELECT rn.o_orderpriority,
+         |          CAST(count(*) AS BIGINT) AS n_sample,
+         |          CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)
+         |            AS BIGINT) AS n_match,
+         |          CAST(sum(CASE WHEN o_orderstatus = 'F' THEN
+         |              greatest(cents, CASE WHEN t.k1 IS NULL THEN 0
+         |                ELSE 4503599627370496 //
+         |                  (CASE WHEN t.k1 > 0 THEN t.k1 ELSE 1 END) END)
+         |            ELSE 0 END) AS BIGINT) AS est_sum
+         |        FROM rn JOIN t USING (o_orderpriority)
+         |        WHERE rn <= 64 GROUP BY 1),
+         |ex AS (SELECT o_orderpriority, CAST(sum(cents) AS BIGINT) AS exact_sum
+         |       FROM o WHERE o_orderstatus = 'F' GROUP BY 1)
+         |SELECT est.o_orderpriority, n_sample, n_match, est_sum,
+         |  coalesce(exact_sum, 0) AS exact_sum,
+         |  (abs(est_sum - coalesce(exact_sum, 0)) * 1000) //
+         |    greatest(coalesce(exact_sum, 0), 1) AS err_permille
+         |FROM est LEFT JOIN ex ON est.o_orderpriority = ex.o_orderpriority
+         |ORDER BY est.o_orderpriority""".stripMargin)),
 
     // AMS JOIN-SIZE estimate: |orders ⋈ lineitem| on the order key
     // from each side's 64 sign counters (same coins) — the planner's
@@ -2604,7 +6211,7 @@ object SparkEntry {
     // or co-locating the join; the exact join count and permille
     // error ride in the same row. Floor-division mean-of-8 so the
     // (possibly negative) products replay exactly in DuckDB.
-    "rel_ams_join_size" -> ((s, d) => {
+    Q("rel_ams_join_size", ((s, d) => {
       val a = Tables.orders(s, d).select(col("o_orderkey"))
       val b = Tables.lineitem(s, d).select(col("l_orderkey"))
       val est = Relational.amsJoinSizeEstimate(
@@ -2617,7 +6224,38 @@ object SparkEntry {
           expr("(abs(join_size_est - join_size_exact) * 1000) div join_size_exact")
             .as("err_permille"))
         .orderBy(col("join_size_exact"))
-    }),
+    }), Some(
+      // AMS join-size replay: both sides' counters off the same coins,
+      // truncating-division group means (DuckDB integer `//` truncates
+      // toward zero exactly like Spark `div`), lower median.
+      s"""WITH a AS (SELECT CAST(o_orderkey AS VARCHAR) AS v FROM orders),
+         |b AS (SELECT CAST(l_orderkey AS VARCHAR) AS v FROM lineitem),
+         |ca AS (SELECT v, CAST(count(*) AS BIGINT) AS n FROM a GROUP BY 1),
+         |cb AS (SELECT v, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY 1),
+         |js AS (SELECT unnest(range(0, 64)) AS j),
+         |ha AS (SELECT v, n, (${hexSliceSql("md5('ams|' || v)", 1)}) AS h1,
+         |         (${hexSliceSql("md5('ams|' || v)", 9)}) AS h2 FROM ca),
+         |hb AS (SELECT v, n, (${hexSliceSql("md5('ams|' || v)", 1)}) AS h1,
+         |         (${hexSliceSql("md5('ams|' || v)", 9)}) AS h2 FROM cb),
+         |za AS (SELECT j, CAST(sum((((CASE WHEN j < 32 THEN h1 ELSE h2 END
+         |                 >> (j % 32)) & 1) * 2 - 1) * n) AS BIGINT) AS z
+         |       FROM ha CROSS JOIN js GROUP BY 1),
+         |zb AS (SELECT j, CAST(sum((((CASE WHEN j < 32 THEN h1 ELSE h2 END
+         |                 >> (j % 32)) & 1) * 2 - 1) * n) AS BIGINT) AS z
+         |       FROM hb CROSS JOIN js GROUP BY 1),
+         |pm AS (SELECT za.j, za.z * zb.z AS p FROM za JOIN zb ON za.j = zb.j),
+         |gm AS (SELECT j // 8 AS grp, CAST(sum(p) // 8 AS BIGINT) AS gm
+         |       FROM pm GROUP BY 1),
+         |med AS (SELECT gm AS join_size_est FROM (
+         |          SELECT gm, grp, row_number() OVER (ORDER BY gm, grp) AS rn
+         |          FROM gm) WHERE rn = 4),
+         |ex AS (SELECT CAST(count(*) AS BIGINT) AS join_size_exact
+         |       FROM a JOIN b ON a.v = b.v)
+         |SELECT ex.join_size_exact, med.join_size_est,
+         |  CAST((abs(med.join_size_est - ex.join_size_exact) * 1000)
+         |       // ex.join_size_exact AS BIGINT) AS err_permille
+         |FROM ex CROSS JOIN med
+         |ORDER BY join_size_exact""".stripMargin)),
 
     // Bloom membership sketch: the orders key set as a 2^17-bit
     // 4-hash position-set relation (built per parity slice, OR-merged
@@ -2625,7 +6263,7 @@ object SparkEntry {
     // 'absent' (+5e8 shifted) classes — no false negatives by
     // construction, false-positive mass measured in-row; every bit is
     // md5 integer arithmetic the oracle replays exactly.
-    "rel_bloom_filter" -> ((s, d) => {
+    Q("rel_bloom_filter", ((s, d) => {
       val keys = Tables.orders(s, d).select(col("o_orderkey"))
       val slices = (0 to 1).map(i =>
         Relational.bloomState(keys.filter(pmod(col("o_orderkey"), lit(2)) === i),
@@ -2643,7 +6281,36 @@ object SparkEntry {
         .agg(count(lit(1)).as("n_probes"),
           sum(when(col("might_contain"), 1L).otherwise(0L)).as("n_pass"))
         .orderBy(col("probe_class"))
-    }),
+    }), Some(
+      // Bloom replay: the 4 position hashes are the 4 32-bit slices of
+      // ONE md5 per value, mod 2^17; same distinct position set, a
+      // probe passes iff all 4 of its positions are set.
+      s"""WITH k AS (SELECT o_orderkey AS kk FROM orders),
+         |di AS (SELECT unnest([0, 1, 2, 3]) AS i),
+         |km AS (SELECT md5('bloom|' || CAST(kk AS VARCHAR)) AS m FROM k),
+         |hp AS (SELECT DISTINCT unnest([
+         |         ${hexSliceSql("m", 1)}, ${hexSliceSql("m", 9)},
+         |         ${hexSliceSql("m", 17)}, ${hexSliceSql("m", 25)}])
+         |           % 131072 AS pos
+         |       FROM km),
+         |base AS (SELECT kk FROM k WHERE kk % 3 = 0),
+         |pr AS (SELECT CAST(kk AS VARCHAR) AS v, 'present' AS probe_class FROM base
+         |       UNION ALL
+         |       SELECT CAST(kk + 500000000 AS VARCHAR), 'absent' FROM base),
+         |pp AS (SELECT v, probe_class, i,
+         |         (CASE i WHEN 0 THEN ${hexSliceSql("m", 1)}
+         |            WHEN 1 THEN ${hexSliceSql("m", 9)}
+         |            WHEN 2 THEN ${hexSliceSql("m", 17)}
+         |            ELSE ${hexSliceSql("m", 25)} END) % 131072 AS pos
+         |       FROM (SELECT v, probe_class, md5('bloom|' || v) AS m FROM pr) pm
+         |       CROSS JOIN di),
+         |hit AS (SELECT pp.v, pp.probe_class, count(DISTINCT pp.i) AS found
+         |        FROM pp JOIN hp ON pp.pos = hp.pos GROUP BY 1, 2)
+         |SELECT pr.probe_class, CAST(count(*) AS BIGINT) AS n_probes,
+         |  CAST(sum(CASE WHEN hit.found = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
+         |FROM pr LEFT JOIN hit
+         |  ON pr.v = hit.v AND pr.probe_class = hit.probe_class
+         |GROUP BY 1 ORDER BY 1""".stripMargin)),
 
     // AMS second-frequency-moment sketch: F2 = Σf(v)² (the SELF-JOIN
     // SIZE on user_id — the pre-shuffle skew/explosion statistic) from
@@ -2652,7 +6319,7 @@ object SparkEntry {
     // same row — state, estimator (mean-of-8, lower median-of-8) and
     // error are deterministic md5 integer arithmetic the oracle
     // replays exactly.
-    "rel_ams_f2" -> ((s, d) => {
+    Q("rel_ams_f2", ((s, d) => {
       val ev = Tables.events(s, d).select(col("event_type"), col("user_id"))
       val slices = (0 to 1).map(i =>
         Relational.amsState(ev.filter(pmod(col("user_id"), lit(2)) === i),
@@ -2670,16 +6337,88 @@ object SparkEntry {
           col("f2_est"),
           expr("(abs(f2_est - f2_exact) * 1000) div f2_exact").as("err_permille"))
         .orderBy(col("event_type"))
-    }),
+    }), Some(
+      // AMS replay: same sign coins (bit j of the digest's first two
+      // 32-bit slices), same
+      // linear counters, same mean-of-8 / lower-median-of-8 estimator.
+      s"""WITH ev AS (SELECT event_type, CAST(user_id AS VARCHAR) AS v FROM events),
+         |cnt AS (SELECT event_type, v, CAST(count(*) AS BIGINT) AS n
+         |        FROM ev GROUP BY 1, 2),
+         |js AS (SELECT unnest(range(0, 64)) AS j),
+         |hh AS (SELECT event_type, v, n,
+         |         (${hexSliceSql("md5('ams|' || v)", 1)}) AS h1,
+         |         (${hexSliceSql("md5('ams|' || v)", 9)}) AS h2
+         |       FROM cnt),
+         |z AS (SELECT event_type, j,
+         |        CAST(sum((((CASE WHEN j < 32 THEN h1 ELSE h2 END
+         |                    >> (j % 32)) & 1) * 2 - 1) * n) AS BIGINT) AS z
+         |      FROM hh CROSS JOIN js GROUP BY 1, 2),
+         |gm AS (SELECT event_type, j // 8 AS grp,
+         |         CAST(sum(z * z) // 8 AS BIGINT) AS gm
+         |       FROM z GROUP BY 1, 2),
+         |med AS (SELECT event_type, gm AS f2_est FROM (
+         |          SELECT event_type, gm, grp, row_number() OVER (
+         |            PARTITION BY event_type ORDER BY gm, grp) AS rn FROM gm)
+         |        WHERE rn = 4),
+         |ex AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS n_rows,
+         |         CAST(sum(n * n) AS BIGINT) AS f2_exact
+         |       FROM cnt GROUP BY 1)
+         |SELECT ex.event_type, ex.n_rows, ex.f2_exact, med.f2_est,
+         |  CAST((abs(med.f2_est - ex.f2_exact) * 1000) // ex.f2_exact AS BIGINT)
+         |    AS err_permille
+         |FROM ex JOIN med ON ex.event_type = med.event_type
+         |ORDER BY ex.event_type""".stripMargin)),
 
     // Cross-source lexical-overlap matrix: KMV set algebra gives
     // union/intersection/Jaccard estimates for every source PAIR from
     // the per-source bottom-64 sketches alone — the mix-or-not audit
     // at sketch cost (the corpus is scanned once; pair math never
     // touches it). Estimator accuracy pinned in SketchBoundsSpec.
-    "corpus_source_overlap" -> ((s, d) =>
+    Q("corpus_source_overlap", ((s, d) =>
       Corpus.sourceOverlap(Tables.documents(s, d), k = 64)
-        .orderBy(col("source_a"), col("source_b"))),
+        .orderBy(col("source_a"), col("source_b"))), Some(
+      // KMV set algebra replayed pairwise: per-source bottom-64 sketches
+      // of the word-3-gram space, the pair union's sketch = bottom-64 of
+      // the two hash sets' union, ρ = state rows carried by both sides;
+      // every estimate is the same integer arithmetic as the Spark side.
+      s"""WITH t3 AS (SELECT source, $tokSql AS tk FROM documents),
+         |v AS (SELECT DISTINCT source,
+         |             md5('kmv|' || t) AS m
+         |           FROM (SELECT source,
+         |                   unnest(list_transform(range(1, len(tk) - 1),
+         |                     i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS t
+         |                 FROM t3)),
+         |h AS (SELECT DISTINCT source, (${hexSliceSql("m", 1)}) AS hv FROM v),
+         |sk AS (SELECT source, hv FROM (
+         |         SELECT source, hv,
+         |           row_number() OVER (PARTITION BY source ORDER BY hv) AS rn
+         |         FROM h) x WHERE rn <= 64),
+         |ks AS (SELECT DISTINCT source FROM sk),
+         |memb AS (SELECT key_a, key_b, hv,
+         |           max(in_a) AS in_a, max(in_b) AS in_b
+         |         FROM (
+         |           SELECT sk.source AS key_a, ks.source AS key_b, hv,
+         |                  1 AS in_a, 0 AS in_b
+         |           FROM sk JOIN ks ON sk.source < ks.source
+         |           UNION ALL
+         |           SELECT ks.source, sk.source, hv, 0, 1
+         |           FROM sk JOIN ks ON ks.source < sk.source
+         |         ) u GROUP BY 1, 2, 3),
+         |r AS (SELECT *, row_number() OVER (
+         |        PARTITION BY key_a, key_b ORDER BY hv) AS rn FROM memb),
+         |st AS (SELECT key_a, key_b, CAST(count(*) AS BIGINT) AS n_state,
+         |         max(hv) AS hk,
+         |         CAST(sum(in_a * in_b) AS BIGINT) AS n_shared
+         |       FROM r WHERE rn <= 64 GROUP BY 1, 2),
+         |est AS (SELECT key_a, key_b, n_state, n_shared,
+         |          CAST(CASE WHEN n_state < 64 THEN n_state
+         |               ELSE (63 * 4294967296) // hk END AS BIGINT) AS est_union
+         |        FROM st)
+         |SELECT key_a AS source_a, key_b AS source_b, n_state, n_shared,
+         |  est_union,
+         |  CAST((n_shared * est_union) // n_state AS BIGINT) AS est_inter,
+         |  CAST((1000 * n_shared) // n_state AS BIGINT) AS jaccard_permille
+         |FROM est ORDER BY source_a, source_b""".stripMargin)),
 
     // COUNT-MIN point-frequency sketch: per-event-type bucket-count
     // state (depth 4 × width 128 — O(1) per key at any event volume),
@@ -2687,7 +6426,7 @@ object SparkEntry {
     // heavy users — every estimate is deterministic md5 integer
     // arithmetic, so the oracle replays the sketch AND its one-sided
     // error (n_est ≥ n_exact, pinned in SketchBoundsSpec) exactly.
-    "rel_cms_topk" -> ((s, d) => {
+    Q("rel_cms_topk", ((s, d) => {
       val ev = Tables.events(s, d).select(col("event_type"), col("user_id"))
       val slices = (0 to 1).map(i =>
         Relational.cmsState(ev.filter(pmod(col("user_id"), lit(2)) === i),
@@ -2708,7 +6447,47 @@ object SparkEntry {
           coalesce(col("n_exact"), lit(0L)).as("n_exact"), col("n_est"),
           (col("n_est") - coalesce(col("n_exact"), lit(0L))).as("overcount"))
         .orderBy(col("event_type"), col("user_id"))
-    }),
+    }), Some(
+      // Count-min sketch replayed bucket for bucket: row i reads the
+      // i-th 32-bit slice of ONE md5 per value (the digest economy),
+      // same mod positions, same count sums, same min-over-rows
+      // estimate (a probe missing any of its 4 buckets counts 0).
+      s"""WITH ev AS (SELECT event_type, CAST(user_id AS VARCHAR) AS v FROM events),
+         |cnt AS (SELECT event_type, v, CAST(count(*) AS BIGINT) AS n
+         |        FROM ev GROUP BY 1, 2),
+         |top AS (SELECT v FROM (SELECT v, CAST(sum(n) AS BIGINT) AS tn
+         |                       FROM cnt GROUP BY 1)
+         |        ORDER BY tn DESC, v LIMIT 12),
+         |di AS (SELECT unnest([0, 1, 2, 3]) AS i),
+         |mm AS (SELECT event_type, v, n, md5('cms|' || v) AS m FROM cnt),
+         |st AS (SELECT event_type, i,
+         |         (CASE i WHEN 0 THEN ${hexSliceSql("m", 1)}
+         |            WHEN 1 THEN ${hexSliceSql("m", 9)}
+         |            WHEN 2 THEN ${hexSliceSql("m", 17)}
+         |            ELSE ${hexSliceSql("m", 25)} END) % 128 AS pos,
+         |         CAST(sum(n) AS BIGINT) AS bn
+         |       FROM mm CROSS JOIN di GROUP BY 1, 2, 3),
+         |keys AS (SELECT DISTINCT event_type FROM ev),
+         |pr AS (SELECT event_type, v, i,
+         |         (CASE i WHEN 0 THEN ${hexSliceSql("m", 1)}
+         |            WHEN 1 THEN ${hexSliceSql("m", 9)}
+         |            WHEN 2 THEN ${hexSliceSql("m", 17)}
+         |            ELSE ${hexSliceSql("m", 25)} END) % 128 AS pos
+         |       FROM (SELECT event_type, v, md5('cms|' || v) AS m
+         |             FROM keys CROSS JOIN top) kt CROSS JOIN di),
+         |est AS (SELECT pr.event_type, pr.v,
+         |          CAST(CASE WHEN count(st.bn) = 4 THEN min(st.bn)
+         |               ELSE 0 END AS BIGINT) AS n_est
+         |        FROM pr LEFT JOIN st
+         |          ON pr.event_type = st.event_type AND pr.i = st.i
+         |         AND pr.pos = st.pos
+         |        GROUP BY 1, 2)
+         |SELECT est.event_type, CAST(est.v AS BIGINT) AS user_id,
+         |  CAST(coalesce(cnt.n, 0) AS BIGINT) AS n_exact, est.n_est,
+         |  CAST(est.n_est - coalesce(cnt.n, 0) AS BIGINT) AS overcount
+         |FROM est LEFT JOIN cnt
+         |  ON est.event_type = cnt.event_type AND est.v = cnt.v
+         |ORDER BY est.event_type, user_id""".stripMargin)),
 
     // MISRA–GRIES frequent-items state: per-event-type ≤ 16 candidate
     // heavy users with one-sided UNDERcounts — the bracketing partner
@@ -2719,7 +6498,7 @@ object SparkEntry {
     // n̂ ≤ n ≤ n̂ + n_total div (k+1) guarantee sits in-row. No hashing
     // anywhere — the state is a pure function of the input multiset,
     // so the oracle replays every counter exactly.
-    "rel_mg_heavy_hitters" -> ((s, d) => {
+    Q("rel_mg_heavy_hitters", ((s, d) => {
       val ev = Tables.events(s, d).select(col("event_type"), col("user_id"))
       val slices = (0 to 2).map(i =>
         Relational.mgState(ev.filter(pmod(col("user_id"), lit(3)) === i),
@@ -2736,7 +6515,37 @@ object SparkEntry {
           (col("n_exact") - col("n")).as("deficit"),
           expr("n_total div 17").as("bound"))
         .orderBy(col("event_type"), col("user_id"))
-    }),
+    }), Some(
+      // Misra–Gries replayed counter for counter: per-slice exact counts,
+      // per-slice trim (subtract the 17th-largest count, keep > 0), sum,
+      // one re-trim — no hashing, every number an exact integer.
+      """WITH c AS (SELECT event_type, user_id % 3 AS sl,
+        |             CAST(user_id AS VARCHAR) AS v, CAST(count(*) AS BIGINT) AS n
+        |           FROM events GROUP BY 1, 2, 3),
+        |t1 AS (SELECT event_type, v, n,
+        |         max(CASE WHEN rn = 17 THEN n END)
+        |           OVER (PARTITION BY event_type, sl) AS ck1
+        |       FROM (SELECT *, row_number() OVER (PARTITION BY event_type, sl
+        |               ORDER BY n DESC, v) AS rn FROM c)),
+        |s AS (SELECT event_type, v, n - coalesce(ck1, 0) AS n FROM t1
+        |      WHERE n - coalesce(ck1, 0) > 0),
+        |m AS (SELECT event_type, v, CAST(sum(n) AS BIGINT) AS n FROM s GROUP BY 1, 2),
+        |t2 AS (SELECT event_type, v, n,
+        |         max(CASE WHEN rn = 17 THEN n END)
+        |           OVER (PARTITION BY event_type) AS ck1
+        |       FROM (SELECT *, row_number() OVER (PARTITION BY event_type
+        |               ORDER BY n DESC, v) AS rn FROM m)),
+        |st AS (SELECT event_type, v, n - coalesce(ck1, 0) AS n FROM t2
+        |       WHERE n - coalesce(ck1, 0) > 0),
+        |ex AS (SELECT event_type, CAST(user_id AS VARCHAR) AS v,
+        |         CAST(count(*) AS BIGINT) AS n_exact FROM events GROUP BY 1, 2),
+        |tot AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_total
+        |        FROM events GROUP BY 1)
+        |SELECT st.event_type, CAST(st.v AS BIGINT) AS user_id, st.n AS n_lb,
+        |  ex.n_exact, ex.n_exact - st.n AS deficit, tot.n_total // 17 AS bound
+        |FROM st JOIN ex ON st.event_type = ex.event_type AND st.v = ex.v
+        |JOIN tot ON st.event_type = tot.event_type
+        |ORDER BY st.event_type, user_id""".stripMargin)),
 
     // INTERVAL UNION COVERAGE — the reference's occupancy question
     // (README.md:10) asked in range form: per event_type ("room"),
@@ -2745,10 +6554,32 @@ object SparkEntry {
     // observed span. One window sweep (running max of ends cuts
     // islands), one shuffle on the key; tie order can renumber islands
     // but never re-cut them, so the aggregate is deterministic.
-    "rel_interval_coverage" -> ((s, d) =>
+    Q("rel_interval_coverage", ((s, d) =>
       Relational.intervalCoverage(Tables.events(s, d),
           Seq(col("event_type")), col("ts_sec"), col("ts_sec") + 1800)
-        .orderBy(col("event_type"))),
+        .orderBy(col("event_type"))), Some(
+      // Interval union coverage: running max of previous ends cuts
+      // islands; island extents sum to the covered length.
+      """WITH e AS (SELECT event_type,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS s,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) + 1800 AS e
+        |           FROM events),
+        |isl AS (SELECT event_type, s, e,
+        |          CAST(sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
+        |            OVER (PARTITION BY event_type ORDER BY s, e
+        |                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS isl
+        |        FROM (SELECT *, max(e) OVER (PARTITION BY event_type ORDER BY s, e
+        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
+        |              FROM e)),
+        |g AS (SELECT event_type, isl, CAST(count(*) AS BIGINT) AS n,
+        |        min(s) AS i_s, max(e) AS i_e
+        |      FROM isl GROUP BY 1, 2)
+        |SELECT event_type, CAST(sum(n) AS BIGINT) AS n_intervals,
+        |  count(*) AS n_islands, CAST(sum(i_e - i_s) AS BIGINT) AS covered,
+        |  CAST(max(i_e) - min(i_s) AS BIGINT) AS span,
+        |  (CAST(sum(i_e - i_s) AS BIGINT) * 1000) //
+        |    greatest(CAST(max(i_e) - min(i_s) AS BIGINT), 1) AS utilization_permille
+        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // TRAILING Z-SCORE ANOMALY detection over the hourly event-rate
     // series: z² as the pure integer ratio (m·x − s1)²/(m·s2 − s1²)
@@ -2756,7 +6587,7 @@ object SparkEntry {
     // gaps age out by time, not row count) — no float mean/stddev
     // anywhere, so the oracle replays every flag. The ops staple:
     // traffic spike/drop detection per stream.
-    "rel_anomaly_zscore" -> ((s, d) => {
+    Q("rel_anomaly_zscore", ((s, d) => {
       val hourly = Tables.events(s, d)
         .groupBy(col("event_type"), expr("ts_sec div 3600").as("hour_num"))
         .agg(count(lit(1)).as("n"))
@@ -2765,14 +6596,35 @@ object SparkEntry {
         .select(col("event_type"), col("t").as("hour_num"), col("x").as("n"),
           col("m_window"), col("z2_permille"), col("is_anomaly"))
         .orderBy(col("event_type"), col("hour_num"))
-    }),
+    }), Some(
+      // z² replayed as the same integer ratio; RANGE frame over the
+      // hour axis both sides.
+      """WITH h AS (SELECT event_type,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) // 3600 AS t,
+        |             CAST(count(*) AS BIGINT) AS x
+        |           FROM events GROUP BY 1, 2),
+        |w AS (SELECT event_type, t, x,
+        |        CAST(count(x) OVER win AS BIGINT) AS m,
+        |        CAST(sum(x) OVER win AS BIGINT) AS s1,
+        |        CAST(sum(x * x) OVER win AS BIGINT) AS s2
+        |      FROM h WINDOW win AS (PARTITION BY event_type ORDER BY t
+        |        RANGE BETWEEN 24 PRECEDING AND 1 PRECEDING))
+        |SELECT event_type, t AS hour_num, x AS n, m AS m_window,
+        |  CAST(CASE WHEN m >= 12 AND (m * s2 - s1 * s1) > 0
+        |       THEN ((m * x - s1) * (m * x - s1) * 1000) // (m * s2 - s1 * s1)
+        |       ELSE -1 END AS BIGINT) AS z2_permille,
+        |  (m >= 12 AND ((m * s2 - s1 * s1) > 0
+        |       AND (m * x - s1) * (m * x - s1) > 4 * (m * s2 - s1 * s1)
+        |    OR (m * s2 - s1 * s1) = 0 AND (m * x - s1) * (m * x - s1) > 0))
+        |    AS is_anomaly
+        |FROM w ORDER BY event_type, hour_num""".stripMargin)),
 
     // PER-KEY LINEAR TREND (integer least squares): is each event
     // stream's hourly rate drifting — slope in ppm/hour and fit
     // quality, every statistic a pure integer ratio off one aggregate
     // (time axis re-based per key so the sums never overflow or
     // catastrophically cancel). zscoreFlags' level companion.
-    "rel_rate_trend" -> ((s, d) => {
+    Q("rel_rate_trend", ((s, d) => {
       val hourly = Tables.events(s, d)
         .groupBy(col("event_type"), expr("ts_sec div 3600").as("hour_num"))
         .agg(count(lit(1)).as("n"))
@@ -2781,7 +6633,10 @@ object SparkEntry {
         .select(col("event_type"), col("m"), col("slope_ppm"),
           col("r2_permille"))
         .orderBy(col("event_type"))
-    }),
+    }), Some(
+      // integer least squares replayed sum for sum; integer // truncates
+      // toward zero exactly like Spark div, so negative slopes agree.
+      rateTrendOracle)),
 
     // OUT-OF-ORDER AUDIT — the watermark-sizing measurement: per
     // stream, how many events arrive with an event time older than
@@ -2793,7 +6648,7 @@ object SparkEntry {
     // 600 s ((event_id·48271) mod 600 — pure integer arithmetic the
     // oracle replays); the audit then recommends the watermark that
     // would hold the measured loss.
-    "rel_disorder_audit" -> ((s, d) => {
+    Q("rel_disorder_audit", ((s, d) => {
       val ev = Tables.events(s, d)
         .withColumn("__arrival",
           (col("ts_sec") + pmod(col("event_id") * 48271, lit(600)))
@@ -2801,14 +6656,17 @@ object SparkEntry {
       Relational.disorderAudit(ev, Seq(col("event_type")),
           col("__arrival"), col("ts_sec"))
         .orderBy(col("event_type"))
-    }),
+    }), Some(
+      // running max in arrival order; p95 as the lower-index order
+      // statistic over the late rows — replayed window for window.
+      disorderOracle)),
 
     // The 100 TB form of the same audit: arrival-bucketed two-pass
     // lateness (bucket maxima → broadcast prefix-max → in-bucket
     // window) — no per-key serial window, so one hot key can't
     // serialize it. SAME oracle as rel_disorder_audit: the hash match
     // is a cross-engine proof the bucketed twin equals the exact form.
-    "rel_disorder_bucketed" -> ((s, d) => {
+    Q("rel_disorder_bucketed", ((s, d) => {
       val ev = Tables.events(s, d)
         .withColumn("__arrival",
           (col("ts_sec") + pmod(col("event_id") * 48271, lit(600)))
@@ -2816,46 +6674,120 @@ object SparkEntry {
       Relational.disorderAuditBucketed(ev, Seq(col("event_type")),
           col("__arrival"), col("ts_sec"), numBuckets = 64)
         .orderBy(col("event_type"))
-    }),
+    }), Some(
+      // the bucketed twin replays the SAME exact-window oracle — the
+      // hash match is a cross-engine equivalence proof.
+      disorderOracle)),
 
     // FIRST-DIGIT (Benford) AUDIT over order totals: observed
     // leading-digit shares vs the Benford permille table, per priority
     // class — the fabricated-data screen; deviation is the finding,
     // and the synthetic fixture deviates (correctly). Exact string
     // arithmetic, no float log anywhere.
-    "rel_benford" -> ((s, d) => {
+    Q("rel_benford", ((s, d) => {
       val cents = Tables.orders(s, d)
         .filter(col("o_totalprice") > 0)
         .select(col("o_orderpriority"),
           floor(col("o_totalprice") * 100 + 0.5).cast("long").as("c"))
       Relational.firstDigitAudit(cents, Seq(col("o_orderpriority")), col("c"))
         .orderBy(col("o_orderpriority"), col("digit"))
-    }),
+    }), Some(
+      // leading digit as exact string arithmetic; all 9 digits
+      // scaffolded so missing digits audit as 0.
+      """WITH v AS (SELECT o_orderpriority AS k,
+        |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c
+        |           FROM orders WHERE o_totalprice > 0),
+        |d AS (SELECT k, CAST(substr(CAST(c AS VARCHAR), 1, 1) AS BIGINT) AS digit
+        |      FROM v),
+        |cnt AS (SELECT k, digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1, 2),
+        |tot AS (SELECT k, CAST(count(*) AS BIGINT) AS total FROM d GROUP BY 1),
+        |bf AS (SELECT CAST(digit AS BIGINT) AS digit,
+        |         CAST(([301, 176, 125, 97, 79, 67, 58, 51, 46])[digit] AS BIGINT)
+        |           AS benford_permille
+        |       FROM (SELECT unnest(range(1, 10)) AS digit))
+        |SELECT tot.k AS o_orderpriority, bf.digit, coalesce(cnt.n, 0) AS n,
+        |  (coalesce(cnt.n, 0) * 1000) // total AS obs_permille,
+        |  bf.benford_permille,
+        |  (coalesce(cnt.n, 0) * 1000) // total - bf.benford_permille
+        |    AS dev_permille
+        |FROM tot CROSS JOIN bf
+        |LEFT JOIN cnt ON cnt.k = tot.k AND cnt.digit = bf.digit
+        |ORDER BY o_orderpriority, bf.digit""".stripMargin)),
 
     // SECOND-DIGIT Benford: the screen that catches fabrication the
     // first-digit test passes (invented numbers anchor the leading
     // digit on magnitude and miss the second). Values < 10 excluded
     // by convention; digits 0..9 scaffolded.
-    "rel_benford2" -> ((s, d) => {
+    Q("rel_benford2", ((s, d) => {
       val cents = Tables.orders(s, d)
         .filter(col("o_totalprice") > 0)
         .select(col("o_orderpriority"),
           floor(col("o_totalprice") * 100 + 0.5).cast("long").as("c"))
       Relational.secondDigitAudit(cents, Seq(col("o_orderpriority")), col("c"))
         .orderBy(col("o_orderpriority"), col("digit"))
-    }),
+    }), Some(
+      // second digit as exact string arithmetic (values < 10 excluded);
+      // digits 0..9 scaffolded against the fixed [120..85] table.
+      """WITH v AS (SELECT o_orderpriority AS k,
+        |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c
+        |           FROM orders WHERE o_totalprice > 0),
+        |d AS (SELECT k, CAST(substr(CAST(c AS VARCHAR), 2, 1) AS BIGINT) AS digit
+        |      FROM v WHERE c >= 10),
+        |cnt AS (SELECT k, digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1, 2),
+        |tot AS (SELECT k, CAST(count(*) AS BIGINT) AS total FROM d GROUP BY 1),
+        |bf AS (SELECT CAST(digit AS BIGINT) AS digit,
+        |         CAST(([120, 114, 109, 104, 100, 97, 93, 90, 88, 85])[digit + 1]
+        |           AS BIGINT) AS benford_permille
+        |       FROM (SELECT unnest(range(0, 10)) AS digit))
+        |SELECT tot.k AS o_orderpriority, bf.digit, coalesce(cnt.n, 0) AS n,
+        |  (coalesce(cnt.n, 0) * 1000) // total AS obs_permille,
+        |  bf.benford_permille,
+        |  (coalesce(cnt.n, 0) * 1000) // total - bf.benford_permille
+        |    AS dev_permille
+        |FROM tot CROSS JOIN bf
+        |LEFT JOIN cnt ON cnt.k = tot.k AND cnt.digit = bf.digit
+        |ORDER BY o_orderpriority, bf.digit""".stripMargin)),
 
     // FIRST-TWO-DIGITS (digit-pair) Benford: the fine-grained member
     // (Nigrini's practitioner standard) — 90 scaffolded pairs per key,
     // fixed permille table in both engines (no float log anywhere).
-    "rel_benford_pairs" -> ((s, d) => {
+    Q("rel_benford_pairs", ((s, d) => {
       val cents = Tables.orders(s, d)
         .filter(col("o_totalprice") > 0)
         .select(col("o_orderpriority"),
           floor(col("o_totalprice") * 100 + 0.5).cast("long").as("c"))
       Relational.digitPairAudit(cents, Seq(col("o_orderpriority")), col("c"))
         .orderBy(col("o_orderpriority"), col("pair"))
-    }),
+    }), Some(
+      // leading pair 10..99 against the fixed 90-entry permille table
+      // (hard-coded both sides — no float log in either engine).
+      """WITH v AS (SELECT o_orderpriority AS k,
+        |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c
+        |           FROM orders WHERE o_totalprice > 0),
+        |d AS (SELECT k, CAST(substr(CAST(c AS VARCHAR), 1, 2) AS BIGINT) AS pair
+        |      FROM v WHERE c >= 10),
+        |cnt AS (SELECT k, pair, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1, 2),
+        |tot AS (SELECT k, CAST(count(*) AS BIGINT) AS total FROM d GROUP BY 1),
+        |bf AS (SELECT CAST(pair AS BIGINT) AS pair,
+        |         CAST(([41, 38, 35, 32, 30, 28, 26, 25, 23, 22,
+        |                21, 20, 19, 18, 18, 17, 16, 16, 15, 15,
+        |                14, 14, 13, 13, 13, 12, 12, 12, 11, 11,
+        |                11, 10, 10, 10, 10, 10, 9, 9, 9, 9,
+        |                9, 8, 8, 8, 8, 8, 8, 8, 7, 7,
+        |                7, 7, 7, 7, 7, 7, 7, 6, 6, 6,
+        |                6, 6, 6, 6, 6, 6, 6, 6, 6, 5,
+        |                5, 5, 5, 5, 5, 5, 5, 5, 5, 5,
+        |                5, 5, 5, 5, 5, 5, 5, 4, 4, 4])[pair - 9]
+        |           AS BIGINT) AS benford_permille
+        |       FROM (SELECT unnest(range(10, 100)) AS pair))
+        |SELECT tot.k AS o_orderpriority, bf.pair, coalesce(cnt.n, 0) AS n,
+        |  (coalesce(cnt.n, 0) * 1000) // total AS obs_permille,
+        |  bf.benford_permille,
+        |  (coalesce(cnt.n, 0) * 1000) // total - bf.benford_permille
+        |    AS dev_permille
+        |FROM tot CROSS JOIN bf
+        |LEFT JOIN cnt ON cnt.k = tot.k AND cnt.pair = bf.pair
+        |ORDER BY o_orderpriority, bf.pair""".stripMargin)),
 
     // WATERMARK LOSS CURVE — the decision artifact on top of the
     // disorder audit: for each candidate watermark delay, the exact
@@ -2863,7 +6795,7 @@ object SparkEntry {
     // MORE than the delay). The threshold-sweep idiom: candidate
     // delays explode against the per-event lateness scores, one
     // aggregate per (event_type, delay).
-    "rel_watermark_curve" -> ((s, d) => {
+    Q("rel_watermark_curve", ((s, d) => {
       val ev = Tables.events(s, d)
         .withColumn("__arrival",
           (col("ts_sec") + pmod(col("event_id") * 48271, lit(600)))
@@ -2872,7 +6804,28 @@ object SparkEntry {
           col("__arrival"), col("ts_sec"),
           delays = Seq(30L, 60L, 120L, 300L, 600L))
         .orderBy(col("event_type"), col("delay_sec"))
-    }),
+    }), Some(
+      // the same lateness scores crossed with the candidate delays.
+      """WITH e AS (SELECT event_type,
+        |             (CAST(epoch(date_trunc('second', ts)) AS BIGINT)
+        |               + (event_id * 48271) % 600) * 1000000
+        |               + event_id % 1000000 AS arr,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS t
+        |           FROM events),
+        |s AS (SELECT event_type, arr,
+        |        greatest(coalesce(max(t) OVER (PARTITION BY event_type
+        |          ORDER BY arr RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
+        |          - t, 0), 0) AS late
+        |      FROM e),
+        |dl AS (SELECT unnest([30, 60, 120, 300, 600]) AS delay_sec)
+        |SELECT event_type, CAST(delay_sec AS BIGINT) AS delay_sec,
+        |  CAST(count(*) AS BIGINT) AS n_events,
+        |  CAST(sum(CASE WHEN late > delay_sec THEN 1 ELSE 0 END) AS BIGINT)
+        |    AS n_dropped,
+        |  (CAST(sum(CASE WHEN late > delay_sec THEN 1 ELSE 0 END) AS BIGINT)
+        |    * 1000) // count(*) AS drop_permille
+        |FROM s CROSS JOIN dl GROUP BY 1, 2
+        |ORDER BY event_type, delay_sec""".stripMargin)),
 
     // INCREMENTAL trend maintenance: the five moment sums merge
     // EXACTLY across deltas once shifted to a common time base
@@ -2880,7 +6833,7 @@ object SparkEntry {
     // three disjoint slices, each with its own t_base, merge to the
     // direct fit digit for digit; the oracle recomputes directly, so
     // the hash match IS the merge ≡ recompute proof.
-    "rel_trend_incremental" -> ((s, d) => {
+    Q("rel_trend_incremental", ((s, d) => {
       val hourly = Tables.events(s, d)
         .groupBy(col("event_type"), expr("ts_sec div 3600").as("hour_num"))
         .agg(count(lit(1)).as("n"))
@@ -2890,7 +6843,10 @@ object SparkEntry {
       Relational.trendReadout(
           Relational.mergeTrendStates(slices, Seq("event_type")))
         .orderBy(col("event_type"))
-    }),
+    }), Some(
+      // the SAME direct recompute is the oracle for the merged-state
+      // form: hash match ⇔ merge(state(deltas)) ≡ recompute(all).
+      rateTrendOracle)),
 
     // INCREMENTAL coverage maintenance: the island set is a mergeable
     // AND idempotent state (coverage is a point-set union; islands are
@@ -2898,7 +6854,7 @@ object SparkEntry {
     // direct answer — the oracle recomputes over all events, and the
     // hash match IS the merge ≡ recompute proof. A 100 TB occupancy
     // map updates from each day's delta without rescanning history.
-    "rel_coverage_incremental" -> ((s, d) => {
+    Q("rel_coverage_incremental", ((s, d) => {
       val ev = Tables.events(s, d)
       val slices = (0 to 2).map(i =>
         Relational.coverageState(ev.filter(col("event_id") % 3 === i),
@@ -2907,7 +6863,28 @@ object SparkEntry {
           Relational.mergeCoverageStates(slices, Seq("event_type")),
           Seq("event_type"))
         .orderBy(col("event_type"))
-    }),
+    }), Some(
+      // merge(islands(deltas)) ≡ islands(all): the oracle recomputes
+      // directly over every event — the hash match is the proof.
+      """WITH e AS (SELECT event_type,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS s,
+        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) + 1800 AS e
+        |           FROM events),
+        |isl AS (SELECT event_type, s, e,
+        |          CAST(sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
+        |            OVER (PARTITION BY event_type ORDER BY s, e
+        |                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS isl
+        |        FROM (SELECT *, max(e) OVER (PARTITION BY event_type ORDER BY s, e
+        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
+        |              FROM e)),
+        |g AS (SELECT event_type, isl, min(s) AS i_s, max(e) AS i_e
+        |      FROM isl GROUP BY 1, 2)
+        |SELECT event_type, count(*) AS n_islands,
+        |  CAST(sum(i_e - i_s) AS BIGINT) AS covered,
+        |  CAST(max(i_e) - min(i_s) AS BIGINT) AS span,
+        |  (CAST(sum(i_e - i_s) AS BIGINT) * 1000) //
+        |    greatest(CAST(max(i_e) - min(i_s) AS BIGINT), 1) AS utilization_permille
+        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // COMPACTION PLAN — the daily small-files maintenance pass of any
     // streaming-ingested 100 TB table: per source partition, documents
@@ -2916,18 +6893,29 @@ object SparkEntry {
     // driver loop; the executing rewrite is
     // Partitioning.compactionRewrite (one file per bin, spec-proven).
     // Non-last bins land within one input file of the target.
-    "rel_compaction_plan" -> ((s, d) =>
+    Q("rel_compaction_plan", ((s, d) =>
       Relational.compactionPlan(Tables.documents(s, d),
           Seq(col("source")), col("doc_id"), col("n_chars"),
           targetBytes = 2048L)
-        .orderBy(col("source"), col("bin"))),
+        .orderBy(col("source"), col("bin"))), Some(
+      // Compaction plan: bin = bytes-before-this-file div target — one
+      // window cumsum, replayed exactly.
+      """WITH f AS (SELECT source, doc_id, n_chars AS b FROM documents
+        |           WHERE n_chars > 0),
+        |c AS (SELECT source, b,
+        |        CAST(sum(b) OVER (PARTITION BY source ORDER BY doc_id
+        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM f)
+        |SELECT source, (cum - b) // 2048 AS bin, count(*) AS n_files,
+        |  CAST(sum(b) AS BIGINT) AS bytes,
+        |  (CAST(sum(b) AS BIGINT) * 1000) // 2048 AS fill_permille
+        |FROM c GROUP BY 1, 2 ORDER BY source, bin""".stripMargin)),
 
     // Incremental materialized-view maintenance: per-key mergeable
     // state (count/sum/min/max in exact cents) computed over three
     // disjoint delta slices, then MERGED — the oracle recomputes the
     // aggregate directly over all rows, so the hash match IS the
     // proof that merge(state(deltas)) ≡ recompute(history).
-    "rel_incremental_agg" -> ((s, d) => {
+    Q("rel_incremental_agg", ((s, d) => {
       val ev = Tables.events(s, d)
         .withColumn("cents", floor(col("value") * 100 + 0.5).cast("long"))
       val slices = (0 to 2).map(i =>
@@ -2936,17 +6924,34 @@ object SparkEntry {
       Relational.mergeAggStates(slices, Seq("event_type"))
         .withColumn("avg_cents", expr("sum_cents DIV n_rows"))
         .orderBy(col("event_type"))
-    }),
+    }), Some(
+      // Direct recompute over ALL events — the Spark side merges three
+      // delta states instead; hash equality proves the merge law.
+      """WITH e AS (SELECT event_type,
+        |            CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
+        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
+        |       CAST(sum(cents) AS BIGINT) AS sum_cents,
+        |       min(cents) AS min_cents, max(cents) AS max_cents,
+        |       CAST(sum(cents) // count(*) AS BIGINT) AS avg_cents
+        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin)),
 
     // Exact per-source token-length order statistics (packing-budget
     // audit): quantiles as order statistics, integer-exact.
-    "corpus_length_quantiles" -> ((s, d) =>
-      Corpus.lengthQuantiles(Tables.documents(s, d)).orderBy(col("source")))
+    Q("corpus_length_quantiles", ((s, d) =>
+      Corpus.lengthQuantiles(Tables.documents(s, d)).orderBy(col("source"))), Some(
+      s"""WITH dl AS (SELECT source, doc_id, CAST(len($tokSql) AS BIGINT) AS n_tokens
+         |            FROM documents),
+         |r AS (SELECT source, n_tokens, CAST(row_number() OVER (PARTITION BY source
+         |        ORDER BY n_tokens, doc_id) AS BIGINT) AS rn FROM dl),
+         |c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs FROM dl GROUP BY source)
+         |SELECT r.source, max(c.n_docs) AS n_docs, min(n_tokens) AS min_tokens,
+         |  max(CASE WHEN rn = ((n_docs - 1) * 50) // 100 + 1 THEN n_tokens END) AS p50_tokens,
+         |  max(CASE WHEN rn = ((n_docs - 1) * 90) // 100 + 1 THEN n_tokens END) AS p90_tokens,
+         |  max(CASE WHEN rn = ((n_docs - 1) * 99) // 100 + 1 THEN n_tokens END) AS p99_tokens,
+         |  max(n_tokens) AS max_tokens
+         |FROM r JOIN c USING (source) GROUP BY r.source ORDER BY r.source""".stripMargin))
   )
 
-  /** Integer least squares over the hourly event-rate series — the
-    * direct recompute serving as oracle for BOTH the one-shot
-    * `rel_rate_trend` and the merged-state `rel_trend_incremental`. */
   // exact-window disorder replay, shared by rel_disorder_audit and
   // its bucketed twin (same oracle = cross-engine equivalence proof)
   private val disorderOracle: String =
@@ -3027,6 +7032,9 @@ object SparkEntry {
         |       CAST(0 AS BIGINT) AS sum_a
         |FROM pv GROUP BY doc_id, w, h, ch ORDER BY doc_id""".stripMargin
 
+  /** Integer least squares over the hourly event-rate series — the
+    * direct recompute serving as oracle for BOTH the one-shot
+    * `rel_rate_trend` and the merged-state `rel_trend_incremental`. */
   private val rateTrendOracle: String =
     """WITH h AS (SELECT event_type,
       |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) // 3600 AS t0,
@@ -4014,4495 +8022,4 @@ object SparkEntry {
          |        FROM $src sq JOIN p$iters c ON sq.s = c.s) x)""".stripMargin
     (base ++ rounds :+ fin).mkString(",\n")
   }
-
-  def oracleSql: Map[String, String] = ListMap(
-
-    "cdc_filter" ->
-      """SELECT event_id, user_id, event_type, date_trunc('second', ts) AS ts
-        |FROM events WHERE event_type IN ('signup','purchase')
-        |ORDER BY event_id""".stripMargin,
-
-    "cdc_parse" ->
-      """SELECT event_id, CAST(regexp_extract(props, '[0-9]+', 0) AS INTEGER) AS k, event_type
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "cdc_project" ->
-      """SELECT event_id, user_id, round(value, 2) AS value,
-        |       upper(event_type) AS etype, date_trunc('second', ts) AS ts
-        |FROM events ORDER BY event_id""".stripMargin,
-
-    "cdc_enrich" ->
-      """SELECT event_id, user_id, event_type, c_name, nation, region
-        |FROM events LEFT JOIN (
-        |  SELECT c_custkey, c_name, n_name AS nation, r_name AS region
-        |  FROM customer
-        |  LEFT JOIN nation ON c_nationkey = n_nationkey
-        |  LEFT JOIN region ON n_regionkey = r_regionkey) dim
-        |ON user_id = c_custkey
-        |ORDER BY event_id""".stripMargin,
-
-    "cdc_active_at" ->
-      """SELECT event_type, count(*) AS n_active
-        |FROM events
-        |WHERE date_trunc('second', ts) <= TIMESTAMP '2024-01-03 12:00:00'
-        |  AND TIMESTAMP '2024-01-03 12:00:00'
-        |      < date_trunc('second', ts) + CAST(round(value) AS INTEGER) * INTERVAL '1 minute'
-        |GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    "cdc_occupancy_rate" ->
-      """SELECT c_nationkey,
-        |       CAST(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) AS BIGINT) AS n_open,
-        |       count(*) AS n_orders,
-        |       round(sum(CASE WHEN o_orderstatus = 'O' THEN 1 ELSE 0 END) * 1.0 / count(*), 4) AS open_rate
-        |FROM orders JOIN customer ON o_custkey = c_custkey
-        |GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-
-    "cdc_latest_by_key" ->
-      """SELECT user_id, event_id, event_type, round(value, 2) AS value,
-        |       date_trunc('second', ts) AS ts
-        |FROM (
-        |  SELECT *, row_number() OVER (
-        |    PARTITION BY user_id
-        |    ORDER BY date_trunc('second', ts) DESC, event_id DESC) AS rn
-        |  FROM events) t
-        |WHERE rn = 1 ORDER BY user_id""".stripMargin,
-
-    "cdc_asof_join" ->
-      """WITH e AS (SELECT event_id, user_id,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec, event_type
-        |           FROM events)
-        |SELECT p.event_id, p.user_id, p.ts_sec,
-        |       (SELECT arg_max(v.event_id, v.ts_sec * 10000000 + v.event_id)
-        |        FROM e v
-        |        WHERE v.event_type = 'view' AND v.user_id = p.user_id
-        |          AND v.ts_sec <= p.ts_sec) AS view_id
-        |FROM e p WHERE p.event_type = 'purchase'
-        |ORDER BY p.event_id""".stripMargin,
-
-    "cdc_scd2" ->
-      """WITH e AS (SELECT user_id, event_id,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec
-        |           FROM events)
-        |SELECT user_id, event_id, ts_sec AS valid_from,
-        |       lead(ts_sec) OVER w AS valid_to,
-        |       lead(ts_sec) OVER w IS NULL AS is_current
-        |FROM e WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec, event_id)
-        |ORDER BY user_id, valid_from, event_id""".stripMargin,
-
-    // MERGE replay: same delta arithmetic, last-writer window, full
-    // outer join + CASE — op D drops, any other delta op takes the
-    // delta's values, untouched keys pass through.
-    "cdc_merge_upsert" ->
-      """WITH t AS (SELECT o_orderkey, o_orderstatus,
-        |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents
-        |           FROM orders),
-        |d AS (
-        |  SELECT o_orderkey, CAST(NULL AS VARCHAR) AS o_orderstatus,
-        |         CAST(NULL AS BIGINT) AS total_cents, 'D' AS op, 1 AS seq
-        |  FROM t WHERE o_orderkey % 10 = 0
-        |  UNION ALL SELECT o_orderkey, o_orderstatus, total_cents + 1, 'U', 1
-        |  FROM t WHERE o_orderkey % 10 = 1
-        |  UNION ALL SELECT o_orderkey + 1000000000, o_orderstatus, total_cents, 'I', 1
-        |  FROM t WHERE o_orderkey % 10 = 2
-        |  UNION ALL SELECT o_orderkey, o_orderstatus, total_cents + 7, 'U', 1
-        |  FROM t WHERE o_orderkey % 10 = 3
-        |  UNION ALL SELECT o_orderkey, CAST(NULL AS VARCHAR),
-        |         CAST(NULL AS BIGINT), 'D', 2
-        |  FROM t WHERE o_orderkey % 10 = 3
-        |  UNION ALL SELECT o_orderkey, CAST(NULL AS VARCHAR),
-        |         CAST(NULL AS BIGINT), 'D', 1
-        |  FROM t WHERE o_orderkey % 10 = 4
-        |  UNION ALL SELECT o_orderkey, o_orderstatus, total_cents + 9, 'U', 2
-        |  FROM t WHERE o_orderkey % 10 = 4),
-        |latest AS (SELECT * FROM (
-        |    SELECT *, row_number() OVER (PARTITION BY o_orderkey
-        |                                 ORDER BY seq DESC) AS rn FROM d)
-        |  WHERE rn = 1),
-        |m AS (SELECT coalesce(t.o_orderkey, l.o_orderkey) AS o_orderkey,
-        |        CASE WHEN l.op IS NOT NULL THEN l.o_orderstatus
-        |             ELSE t.o_orderstatus END AS o_orderstatus,
-        |        CASE WHEN l.op IS NOT NULL THEN l.total_cents
-        |             ELSE t.total_cents END AS total_cents,
-        |        l.op AS op
-        |      FROM t FULL OUTER JOIN latest l ON t.o_orderkey = l.o_orderkey)
-        |SELECT o_orderkey, o_orderstatus, total_cents
-        |FROM m WHERE op IS NULL OR op <> 'D'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // CDF replay: the NET op per key derived from orders directly —
-    // %10∈{0,3} → D (two different delta paths, same net), %10=1 →
-    // U +1¢, %10=4 → U +9¢ (delete-then-update), %10=2 → I clone.
-    "cdc_changelog" ->
-      """WITH t AS (SELECT o_orderkey, o_orderstatus,
-        |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS total_cents
-        |           FROM orders)
-        |SELECT o_orderkey, 'D' AS op, CAST(NULL AS VARCHAR) AS o_orderstatus,
-        |       CAST(NULL AS BIGINT) AS total_cents
-        |FROM t WHERE o_orderkey % 10 IN (0, 3)
-        |UNION ALL
-        |SELECT o_orderkey, 'U', o_orderstatus, total_cents + 1
-        |FROM t WHERE o_orderkey % 10 = 1
-        |UNION ALL
-        |SELECT o_orderkey + 1000000000, 'I', o_orderstatus, total_cents
-        |FROM t WHERE o_orderkey % 10 = 2
-        |UNION ALL
-        |SELECT o_orderkey, 'U', o_orderstatus, total_cents + 9
-        |FROM t WHERE o_orderkey % 10 = 4
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "rel_pricing_summary" ->
-      """SELECT l_returnflag, l_linestatus,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty,
-        |       CAST(sum(CAST(l_extendedprice AS DECIMAL(18,2))) AS DOUBLE) AS sum_base_price,
-        |       (CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0) AS sum_disc_price,
-        |       round(avg(l_quantity), 2) AS avg_qty,
-        |       count(*) AS count_order
-        |FROM lineitem WHERE l_shipdate <= TIMESTAMP '1998-09-01'
-        |GROUP BY l_returnflag, l_linestatus
-        |ORDER BY l_returnflag, l_linestatus""".stripMargin,
-
-    "rel_grouping_sets" ->
-      """SELECT l_returnflag, l_linestatus, count(*) AS n,
-        |       CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS qty_cents
-        |FROM lineitem
-        |GROUP BY GROUPING SETS ((l_returnflag, l_linestatus), (l_returnflag), ())
-        |ORDER BY l_returnflag ASC NULLS FIRST, l_linestatus ASC NULLS FIRST""".stripMargin,
-
-    "rel_ntile" ->
-      """WITH r AS (
-        |  SELECT o_orderkey, o_orderstatus,
-        |         ntile(4) OVER w AS quartile,
-        |         rank() OVER w AS rnk,
-        |         count(*) OVER (PARTITION BY o_orderstatus) AS n
-        |  FROM orders
-        |  WINDOW w AS (PARTITION BY o_orderstatus ORDER BY o_totalprice, o_orderkey))
-        |SELECT o_orderkey, o_orderstatus, CAST(quartile AS BIGINT) AS quartile,
-        |       CAST(CASE WHEN n = 1 THEN 0 ELSE (rnk - 1) * 1000 // (n - 1) END AS BIGINT) AS pct_permille
-        |FROM r ORDER BY o_orderkey""".stripMargin,
-
-    "rel_salted_agg" ->
-      """SELECT l_returnflag,
-        |       CAST(sum(CAST(round(l_quantity * 100) AS BIGINT)) AS BIGINT) AS sum_value,
-        |       count(*) AS n
-        |FROM lineitem GROUP BY l_returnflag ORDER BY l_returnflag""".stripMargin,
-
-    "rel_filter_project" ->
-      """SELECT l_orderkey, l_linenumber, l_quantity, l_extendedprice, l_shipdate
-        |FROM lineitem
-        |WHERE l_shipdate >= TIMESTAMP '1995-01-01' AND l_shipdate < TIMESTAMP '1997-01-01'
-        |  AND l_discount >= 0.05 AND l_discount <= 0.07 AND l_quantity < 24
-        |ORDER BY l_orderkey, l_linenumber""".stripMargin,
-
-    "rel_join_agg" ->
-      """SELECT c_mktsegment,
-        |       count(DISTINCT o_orderkey) AS n_orders,
-        |       (CAST(sum(CAST(round(l_extendedprice * 100) AS BIGINT) * (100 - CAST(round(l_discount * 100) AS BIGINT))) AS DOUBLE) / 10000.0) AS revenue
-        |FROM customer
-        |JOIN orders ON c_custkey = o_custkey
-        |JOIN lineitem ON o_orderkey = l_orderkey
-        |GROUP BY c_mktsegment ORDER BY c_mktsegment""".stripMargin,
-
-    "rel_semi_join" ->
-      """SELECT o_orderkey, o_totalprice, o_orderstatus
-        |FROM orders
-        |WHERE EXISTS (SELECT 1 FROM lineitem
-        |              WHERE l_orderkey = o_orderkey AND l_quantity > 45)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "rel_anti_join" ->
-      """SELECT c_custkey, c_name, c_mktsegment
-        |FROM customer
-        |WHERE NOT EXISTS (SELECT 1 FROM orders WHERE o_custkey = c_custkey)
-        |ORDER BY c_custkey""".stripMargin,
-
-    "rel_window_topn" ->
-      """SELECT o_custkey, o_orderkey, rn, run_total FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |         row_number() OVER (PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey) AS rn,
-        |         CAST(sum(CAST(o_totalprice AS DECIMAL(18,2))) OVER (
-        |           PARTITION BY o_custkey ORDER BY o_orderdate, o_orderkey
-        |           ROWS UNBOUNDED PRECEDING) AS DOUBLE) AS run_total
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-
-    "rel_topn_agg" ->
-      """SELECT o_custkey, rn, o_orderkey FROM (
-        |  SELECT o_custkey, o_orderkey,
-        |         row_number() OVER (PARTITION BY o_custkey
-        |                            ORDER BY o_orderdate, o_orderkey) AS rn
-        |  FROM orders) t
-        |WHERE rn <= 3 ORDER BY o_custkey, rn""".stripMargin,
-
-    "rel_topk" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders ORDER BY o_totalprice DESC, o_orderkey LIMIT 100""".stripMargin,
-
-    "rel_setops" ->
-      """SELECT 'both' AS tag, nationkey FROM (
-        |  SELECT c_nationkey AS nationkey FROM customer
-        |  INTERSECT SELECT s_nationkey FROM supplier) a
-        |UNION ALL
-        |SELECT 'customer_only' AS tag, nationkey FROM (
-        |  SELECT c_nationkey AS nationkey FROM customer
-        |  EXCEPT SELECT s_nationkey FROM supplier) b
-        |UNION ALL
-        |SELECT 'supplier_only' AS tag, nationkey FROM (
-        |  SELECT s_nationkey AS nationkey FROM supplier
-        |  EXCEPT SELECT c_nationkey FROM customer) c
-        |ORDER BY tag, nationkey""".stripMargin,
-
-    "rel_distinct_agg" ->
-      """SELECT c_nationkey, count(DISTINCT c_mktsegment) AS n_segments,
-        |       count(*) AS n_customers
-        |FROM customer GROUP BY c_nationkey ORDER BY c_nationkey""".stripMargin,
-
-    "rel_scalar_funcs" ->
-      """SELECT p_partkey,
-        |       upper(p_brand) AS brand_u,
-        |       lower(p_type) AS type_l,
-        |       substr(p_name, 1, 8) AS name8,
-        |       concat(p_brand, '#', CAST(p_size AS VARCHAR)) AS brand_size,
-        |       length(p_name) AS name_len,
-        |       CASE WHEN p_size > 25 THEN 'L' WHEN p_size > 10 THEN 'M' ELSE 'S' END AS size_class,
-        |       round(p_retailprice, 1) AS price_r,
-        |       abs(p_size - 25) AS size_dist
-        |FROM part ORDER BY p_partkey""".stripMargin,
-
-    "rel_rollup" ->
-      """SELECT c_nationkey, c_mktsegment, count(*) AS n
-        |FROM customer GROUP BY ROLLUP (c_nationkey, c_mktsegment)
-        |ORDER BY c_nationkey ASC NULLS FIRST, c_mktsegment ASC NULLS FIRST""".stripMargin,
-
-    "rel_cube" ->
-      """SELECT c_nationkey, c_mktsegment, count(*) AS n,
-        |       CAST(grouping(c_nationkey) * 2 + grouping(c_mktsegment) AS BIGINT) AS gid
-        |FROM customer GROUP BY CUBE (c_nationkey, c_mktsegment)
-        |ORDER BY c_nationkey ASC NULLS FIRST, c_mktsegment ASC NULLS FIRST, gid""".stripMargin,
-
-    "rel_broadcast_join" ->
-      """SELECT p_brand, count(*) AS n_items,
-        |       CAST(sum(CAST(l_quantity AS DECIMAL(18,2))) AS DOUBLE) AS sum_qty
-        |FROM lineitem JOIN part ON l_partkey = p_partkey
-        |GROUP BY p_brand ORDER BY p_brand""".stripMargin,
-
-    "rel_range_join" ->
-      """SELECT a.user_id AS user_id, count(*) AS n_pairs
-        |FROM (SELECT user_id, epoch(date_trunc('second', ts)) AS a_sec FROM events) a
-        |JOIN (SELECT user_id AS b_user, epoch(date_trunc('second', ts)) AS b_sec FROM events) b
-        |  ON a.user_id = b_user AND b_sec > a_sec AND b_sec <= a_sec + 300
-        |GROUP BY a.user_id ORDER BY user_id""".stripMargin,
-
-    "rel_window_nav" ->
-      """WITH o AS (SELECT o_orderkey, o_orderstatus,
-        |             CAST(round(o_totalprice * 100) AS BIGINT) AS price_cents
-        |           FROM orders)
-        |SELECT o_orderkey, o_orderstatus, price_cents,
-        |       lag(price_cents, 1) OVER w AS prev_cents,
-        |       lead(price_cents, 1) OVER w AS next_cents,
-        |       first_value(o_orderkey) OVER wf AS cheapest_key,
-        |       last_value(o_orderkey) OVER wf AS dearest_key,
-        |       nth_value(o_orderkey, 2) OVER wf AS second_key
-        |FROM o
-        |WINDOW w AS (PARTITION BY o_orderstatus ORDER BY price_cents, o_orderkey),
-        |       wf AS (PARTITION BY o_orderstatus ORDER BY price_cents, o_orderkey
-        |              ROWS BETWEEN UNBOUNDED PRECEDING AND UNBOUNDED FOLLOWING)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "rel_window_range" ->
-      """WITH e AS (SELECT event_id, user_id,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS ts_sec,
-        |             CAST(round(value * 100) AS BIGINT) AS v_cents
-        |           FROM events)
-        |SELECT event_id, user_id, ts_sec,
-        |       CAST(sum(v_cents) OVER w AS BIGINT) AS sum_5m_cents,
-        |       CAST(count(*) OVER w AS BIGINT) AS n_5m
-        |FROM e
-        |WINDOW w AS (PARTITION BY user_id ORDER BY ts_sec
-        |             RANGE BETWEEN 300 PRECEDING AND CURRENT ROW)
-        |ORDER BY event_id""".stripMargin,
-
-    "rel_sessionize" ->
-      """WITH e AS (
-        |  SELECT user_id, event_id, CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
-        |  FROM events),
-        |flags AS (
-        |  SELECT user_id,
-        |         CASE WHEN lag(sec) OVER w IS NULL
-        |              OR sec - lag(sec) OVER w > 21600 THEN 1 ELSE 0 END AS is_new
-        |  FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec, event_id))
-        |SELECT user_id, CAST(sum(is_new) AS BIGINT) AS n_sessions, count(*) AS n_events
-        |FROM flags GROUP BY user_id ORDER BY user_id""".stripMargin,
-
-    "rel_window_tumbling" ->
-      """SELECT date_trunc('hour', ts) AS hour, event_type, count(*) AS n,
-        |       CAST(sum(CAST(value AS DECIMAL(18,2))) AS DOUBLE) AS sum_value
-        |FROM events GROUP BY 1, 2 ORDER BY hour, event_type""".stripMargin,
-
-    // session_window twin: a session breaks only when the inter-event
-    // gap EXCEEDS 21600 s — Spark merges touching windows (an event at
-    // exactly prev + gap extends the session; found empirically at
-    // sf0.1, where one event pair sits exactly one gap apart); session
-    // end = last event + gap.
-    "rel_window_session" ->
-      """WITH e AS (SELECT user_id, date_trunc('second', ts) AS t,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
-        |           FROM events),
-        |f AS (SELECT user_id, t, sec,
-        |        CASE WHEN lag(sec) OVER w IS NULL
-        |             OR sec - lag(sec) OVER w > 21600 THEN 1 ELSE 0 END AS is_new
-        |      FROM e WINDOW w AS (PARTITION BY user_id ORDER BY sec)),
-        |s AS (SELECT user_id, t,
-        |        sum(is_new) OVER (PARTITION BY user_id ORDER BY sec
-        |                          ROWS UNBOUNDED PRECEDING) AS sid
-        |      FROM f)
-        |SELECT user_id, min(t) AS sess_start,
-        |       max(t) + INTERVAL 21600 SECOND AS sess_end,
-        |       count(*) AS n_events
-        |FROM s GROUP BY user_id, sid ORDER BY user_id, sess_start""".stripMargin,
-
-    // Each event lands in exactly two 1h/30min sliding windows:
-    // starts floor1800(ts) and floor1800(ts) - 1800 (epoch-aligned,
-    // matching Spark's window() alignment).
-    "rel_window_sliding" ->
-      """WITH e AS (SELECT event_type,
-        |             CAST(floor(epoch(ts) / 1800) * 1800 AS BIGINT) AS f FROM events),
-        |w AS (SELECT event_type, f - k * 1800 AS s
-        |      FROM e, (VALUES (0), (1)) t(k))
-        |SELECT make_timestamp(s * 1000000) AS win_start,
-        |       make_timestamp((s + 3600) * 1000000) AS win_end,
-        |       event_type, count(*) AS n
-        |FROM w GROUP BY s, event_type ORDER BY win_start, event_type""".stripMargin,
-
-    "rel_profile" ->
-      Seq("event_id", "user_id", "event_type", "props")
-        .map(profileColSql).mkString("SELECT * FROM (\n", "\nUNION ALL\n",
-          "\n) ORDER BY \"column\""),
-
-    "rel_zorder" ->
-      s"""SELECT l_orderkey, l_linenumber,
-         |       CAST(${mortonSql("l_partkey", "l_suppkey", 16)} AS BIGINT) AS zorder
-         |FROM lineitem
-         |ORDER BY zorder, l_orderkey, l_linenumber""".stripMargin,
-
-    // Hilbert xy2d walk as chained CTE steps — one per bit level,
-    // generated; the list_reduce lambda form mis-evaluates on
-    // multi-row data (the documented DuckDB vectorizer bug), so the
-    // fold is FLAT like the wordpiece oracle.
-    "rel_hilbert" ->
-      s"""WITH ${hilbertCtes("l_partkey", "l_suppkey", 16)}
-         |SELECT l_orderkey, l_linenumber, d AS hilbert
-         |FROM h16 ORDER BY hilbert, l_orderkey, l_linenumber""".stripMargin,
-
-    // Layout audit replayed end to end: the three layout keys (plain,
-    // morton, hilbert walk), value-banded files, min/max manifest,
-    // probe ranges, and the readPruned skip rule — all integer.
-    "rel_layout_audit" ->
-      s"""WITH ${hilbertCtes("l_partkey", "l_suppkey", 16,
-              carry = Seq("l_partkey", "l_suppkey"))},
-         |hk AS (SELECT l_partkey, l_suppkey, d FROM h16),
-         |lay AS (
-         |  SELECT 'single' AS layout, l_partkey AS pk, l_suppkey AS sp,
-         |         CAST(l_partkey AS BIGINT) AS k FROM lineitem
-         |  UNION ALL
-         |  SELECT 'zorder', l_partkey, l_suppkey,
-         |         CAST(${mortonSql("l_partkey", "l_suppkey", 16)} AS BIGINT)
-         |  FROM lineitem
-         |  UNION ALL
-         |  SELECT 'hilbert', l_partkey, l_suppkey, d FROM hk),
-         |mxk AS (SELECT layout, max(k) AS mxk FROM lay GROUP BY 1),
-         |filed AS (SELECT lay.layout, pk, sp, (k * 64) // (mxk + 1) AS file
-         |          FROM lay JOIN mxk ON lay.layout = mxk.layout),
-         |man AS (SELECT layout, file,
-         |          CAST(min(pk) AS BIGINT) AS mn_pk, CAST(max(pk) AS BIGINT) AS mx_pk,
-         |          CAST(min(sp) AS BIGINT) AS mn_sp, CAST(max(sp) AS BIGINT) AS mx_sp
-         |        FROM filed GROUP BY 1, 2),
-         |lf AS (SELECT layout, file, 'l_partkey' AS on_col, mn_pk AS mn, mx_pk AS mx
-         |       FROM man
-         |       UNION ALL
-         |       SELECT layout, file, 'l_suppkey', mn_sp, mx_sp FROM man),
-         |b AS (SELECT CAST(max(l_partkey) AS BIGINT) AS mp,
-         |        CAST(max(l_suppkey) AS BIGINT) AS ms FROM lineitem),
-         |ii AS (SELECT unnest(range(0, 16)) AS i),
-         |pr AS (SELECT 'by_part' AS workload, 'l_partkey' AS on_col,
-         |         ((mp + 1) * i) // 16 AS lo,
-         |         ((mp + 1) * i) // 16 + (mp + 1) // 256 AS hi
-         |       FROM b CROSS JOIN ii
-         |       UNION ALL
-         |       SELECT 'by_supp', 'l_suppkey',
-         |         ((ms + 1) * i) // 16, ((ms + 1) * i) // 16 + (ms + 1) // 256
-         |       FROM b CROSS JOIN ii)
-         |SELECT layout, workload, CAST(count(DISTINCT file) AS BIGINT) AS n_files,
-         |  count(*) AS file_probe_pairs,
-         |  CAST(sum(CASE WHEN mx < lo OR mn > hi THEN 1 ELSE 0 END) AS BIGINT)
-         |    AS skipped,
-         |  (CAST(sum(CASE WHEN mx < lo OR mn > hi THEN 1 ELSE 0 END) AS BIGINT)
-         |    * 1000) // count(*) AS skip_permille
-         |FROM lf JOIN pr ON lf.on_col = pr.on_col
-         |GROUP BY 1, 2 ORDER BY layout, workload""".stripMargin,
-
-    "rel_pivot" ->
-      """SELECT CAST(ts AS DATE) AS day,
-        |       count(*) FILTER (WHERE event_type = 'click') AS n_click,
-        |       count(*) FILTER (WHERE event_type = 'error') AS n_error,
-        |       count(*) FILTER (WHERE event_type = 'purchase') AS n_purchase,
-        |       count(*) FILTER (WHERE event_type = 'signup') AS n_signup,
-        |       count(*) FILTER (WHERE event_type = 'view') AS n_view
-        |FROM events GROUP BY 1 ORDER BY day""".stripMargin,
-
-    // pivot's inverse: the long form INCLUDING zero cells, so the
-    // oracle scaffolds day × type and left-joins the counts.
-    "rel_unpivot" ->
-      """WITH days AS (SELECT DISTINCT CAST(ts AS DATE) AS day FROM events),
-        |t AS (SELECT unnest(['click','error','purchase','signup','view']) AS event_type),
-        |c AS (SELECT CAST(ts AS DATE) AS day, event_type,
-        |        CAST(count(*) AS BIGINT) AS n
-        |      FROM events GROUP BY 1, 2)
-        |SELECT days.day, t.event_type, CAST(coalesce(c.n, 0) AS BIGINT) AS n
-        |FROM days CROSS JOIN t
-        |LEFT JOIN c ON c.day = days.day AND c.event_type = t.event_type
-        |ORDER BY days.day, t.event_type""".stripMargin,
-
-    "rel_scalar_subquery" ->
-      """SELECT o_orderkey, o_custkey, o_totalprice
-        |FROM orders o
-        |WHERE o_totalprice > (SELECT 1.5 * avg(o2.o_totalprice)
-        |                      FROM orders o2 WHERE o2.o_custkey = o.o_custkey)
-        |ORDER BY o_orderkey""".stripMargin,
-
-    "dedup_exact" ->
-      """SELECT md5(text) AS text_hash, min(doc_id) AS keep_id, count(*) AS n_copies
-        |FROM documents GROUP BY md5(text) ORDER BY text_hash""".stripMargin,
-
-    "dedup_rate_by_source" ->
-      """WITH h AS (SELECT source, md5(text) AS h, CAST(count(*) AS BIGINT) AS n
-        |           FROM documents GROUP BY source, md5(text))
-        |SELECT source, CAST(sum(n) AS BIGINT) AS n_docs,
-        |       CAST(count(*) AS BIGINT) AS n_unique,
-        |       CAST(sum(n) - count(*) AS BIGINT) AS n_dups,
-        |       CAST((sum(n) - count(*)) * 1000 // sum(n) AS BIGINT) AS dup_permille
-        |FROM h GROUP BY source ORDER BY source""".stripMargin,
-
-    "dedup_minhash_lsh" -> minhashOracle,
-
-    "dedup_jaccard" ->
-      s"""WITH ${bandedPairsCtes(tokSql, "", 900)}
-         |SELECT doc_a, doc_b, inter, uni, jac_permille FROM pairs
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "dedup_char_ngram" ->
-      s"""WITH ${bandedPairsCtes(charGramSql, " WHERE length(text) >= 5", 800)}
-         |SELECT doc_a, doc_b, inter, uni, jac_permille FROM pairs
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // weighted verification over the same banded candidates: Σmin via
-    // a token-grain join (independent of Spark's in-row merge scan),
-    // Σmax = |A| + |B| − Σmin from raw token totals
-    "dedup_weighted_jaccard" ->
-      s"""WITH ${bandedCandCtes(tokSql, "")},
-         |bag AS (SELECT doc_id, token, CAST(count(*) AS BIGINT) AS cnt
-         |        FROM (SELECT doc_id, unnest($tokSql) AS token FROM documents)
-         |        GROUP BY doc_id, token),
-         |tt AS (SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS tot FROM documents),
-         |mn AS (SELECT c.doc_a, c.doc_b, CAST(sum(least(a.cnt, b.cnt)) AS BIGINT) AS min_sum
-         |       FROM cand c JOIN bag a ON a.doc_id = c.doc_a
-         |                   JOIN bag b ON b.doc_id = c.doc_b AND a.token = b.token
-         |       GROUP BY c.doc_a, c.doc_b),
-         |pv AS (SELECT c.doc_a, c.doc_b, coalesce(m.min_sum, 0) AS min_sum,
-         |         ta.tot + tb.tot - coalesce(m.min_sum, 0) AS max_sum
-         |       FROM cand c
-         |       JOIN d da ON da.doc_id = c.doc_a JOIN d db ON db.doc_id = c.doc_b
-         |       JOIN tt ta ON ta.doc_id = c.doc_a JOIN tt tb ON tb.doc_id = c.doc_b
-         |       LEFT JOIN mn m ON m.doc_a = c.doc_a AND m.doc_b = c.doc_b
-         |       WHERE da.source = db.source AND da.lang = db.lang)
-         |SELECT doc_a, doc_b, min_sum, max_sum,
-         |       CAST(floor(min_sum * 1000 / max_sum) AS BIGINT) AS wjac_permille
-         |FROM pv WHERE floor(min_sum * 1000 / max_sum) >= 500
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // Prefix-filter containment over char-5-gram sets: global
-    // (freq, gram) order, per-doc rarest-gram prefixes probe the
-    // strata-blocked inverted index, exact intersection over min-size
-    // on candidates — mirrors the Spark operator including the
-    // maxPostings=10000 governor.
-    "dedup_containment" ->
-      s"""WITH d AS (SELECT doc_id, source, lang, list_distinct($charGramSql) AS ts
-         |           FROM documents),
-         |base AS (SELECT doc_id, source, lang, ts
-         |         FROM d WHERE len(ts) >= 1),
-         |tok AS (SELECT doc_id, source, lang, unnest(ts) AS t FROM base),
-         |gh AS (SELECT doc_id, source, lang, ${hexSliceSql("m", 1)} AS gh
-         |       FROM (SELECT doc_id, source, lang, md5(t) AS m FROM tok) mx),
-         |ghs AS (SELECT doc_id, source, lang,
-         |          list_sort(list(DISTINCT gh)) AS hs
-         |        FROM gh GROUP BY doc_id, source, lang),
-         |tokh AS (SELECT doc_id, source, lang, CAST(len(hs) AS BIGINT) AS hsz,
-         |           unnest(hs) AS gh FROM ghs),
-         |cnt AS (SELECT gh, CAST(count(*) AS BIGINT) AS c FROM tokh GROUP BY gh),
-         |tokc AS (SELECT tokh.doc_id, tokh.source, tokh.lang, tokh.hsz, tokh.gh, cnt.c
-         |         FROM tokh JOIN cnt USING (gh)),
-         |rk AS (SELECT doc_id, source, lang, gh, c, hsz,
-         |         CAST(row_number() OVER (PARTITION BY doc_id ORDER BY c, gh) AS BIGINT) AS rn
-         |       FROM tokc),
-         |pref AS (SELECT doc_id, source, lang, gh, hsz FROM rk
-         |         WHERE rn <= hsz - ((800 * hsz + 999) // 1000) + 1),
-         |post AS (SELECT doc_id, source, lang, gh, hsz FROM tokc WHERE c <= 10000),
-         |cand AS (SELECT DISTINCT least(p.doc_id, q.doc_id) AS doc_a,
-         |                greatest(p.doc_id, q.doc_id) AS doc_b
-         |         FROM pref p JOIN post q
-         |           ON p.gh = q.gh AND p.source = q.source AND p.lang = q.lang
-         |         WHERE p.hsz < q.hsz
-         |            OR (p.hsz = q.hsz AND p.doc_id < q.doc_id)),
-         |v AS (SELECT cand.doc_a, cand.doc_b,
-         |        CAST(len(list_filter(a.hs, x -> list_contains(b.hs, x))) AS BIGINT) AS inter,
-         |        least(CAST(len(a.hs) AS BIGINT), CAST(len(b.hs) AS BIGINT)) AS minsz
-         |      FROM cand JOIN ghs a ON a.doc_id = cand.doc_a
-         |                JOIN ghs b ON b.doc_id = cand.doc_b)
-         |SELECT doc_a, doc_b, inter, minsz,
-         |       CAST(floor(inter * 1000 / minsz) AS BIGINT) AS cont_permille
-         |FROM v WHERE floor(inter * 1000 / minsz) >= 800
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "dedup_hot_buckets" ->
-      s"""WITH ${bandedBucketCtes(tokSql, "")}
-         |SELECT CAST(band AS BIGINT) AS band, bv, source, lang, bucket_docs
-         |FROM bsz WHERE bucket_docs > 8
-         |ORDER BY band, bv, source, lang""".stripMargin,
-
-    // Analytic verdict for the synthetic clone corpus (the input is
-    // generated in-query, not from the tables): 100k identical docs
-    // share one minhash signature → one hot bucket per band (8 hashes
-    // / 2 rows per band = 4 bands) of population 100k, all over the
-    // 1000 cap → dropped; the 1000 distinct docs share no shingles →
-    // no candidates → zero verified pairs.
-    "dedup_governor_clones" ->
-      """SELECT CAST(0 AS BIGINT) AS n_pairs,
-        |       CAST(4 AS BIGINT) AS n_hot_buckets,
-        |       CAST(400000 AS BIGINT) AS hot_docs""".stripMargin,
-
-    // the capped pair set: candidates may only meet in buckets whose
-    // population is within the cap; verification is unchanged
-    "dedup_jaccard_capped" ->
-      s"""WITH ${bandedBucketCtes(tokSql, "")},
-         |cold AS (SELECT band, bv, source, lang FROM bsz WHERE bucket_docs <= 8),
-         |cb AS (SELECT s.* FROM sbands s JOIN cold c
-         |         ON s.band = c.band AND s.bv = c.bv
-         |        AND s.source = c.source AND s.lang = c.lang),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |         FROM cb a JOIN cb b
-         |           ON a.band = b.band AND a.bv = b.bv
-         |          AND a.source = b.source AND a.lang = b.lang
-         |          AND a.doc_id < b.doc_id),
-         |pv AS (SELECT c.doc_a, c.doc_b,
-         |         CAST(len(list_filter(a.ts, x -> list_contains(b.ts, x))) AS BIGINT) AS inter,
-         |         CAST(len(a.ts) + len(b.ts) AS BIGINT) AS sz
-         |       FROM cand c JOIN d a ON a.doc_id = c.doc_a
-         |                   JOIN d b ON b.doc_id = c.doc_b)
-         |SELECT doc_a, doc_b, inter, sz - inter AS uni,
-         |       CAST(floor(inter * 1000 / (sz - inter)) AS BIGINT) AS jac_permille
-         |FROM pv WHERE floor(inter * 1000 / (sz - inter)) >= 900
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "dedup_incremental" -> incrementalDedupOracle,
-
-    // Bloom pruning never changes the anti-join result (no false
-    // negatives) — the core variant shares the oracle verbatim.
-    "dedup_incremental_core" -> incrementalDedupOracle,
-
-    "dedup_components" ->
-      s"""WITH RECURSIVE ${bandedPairsCtes(tokSql, "", 900)},
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT u AS node FROM edges),
-         |reach AS (
-         |  SELECT node, node AS label FROM nodes
-         |  UNION
-         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node)
-         |SELECT node AS doc_id, min(label) AS component
-         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin,
-
-    // The incremental update must equal the full recompute — the
-    // oracle IS the dedup_components closure over all pairs.
-    "dedup_components_incremental" ->
-      s"""WITH RECURSIVE ${bandedPairsCtes(tokSql, "", 900)},
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT u AS node FROM edges),
-         |reach AS (
-         |  SELECT node, node AS label FROM nodes
-         |  UNION
-         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node)
-         |SELECT node AS doc_id, min(label) AS component
-         |FROM reach GROUP BY node ORDER BY doc_id""".stripMargin,
-
-    "graph_degrees" ->
-      s"""WITH ${bandedPairsCtes(tokSql, "", 900)},
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs)
-         |SELECT u AS doc_id, CAST(count(*) AS BIGINT) AS degree
-         |FROM edges GROUP BY u ORDER BY doc_id""".stripMargin,
-
-    "graph_pagerank" -> {
-      val rounds = (1 to 3).map { it =>
-        s"""pr$it AS (SELECT n.node, CAST(1500 + (85 * coalesce(s.s, 0)) // 100 AS BIGINT) AS pr
-           |  FROM nodes n LEFT JOIN (
-           |    SELECT e.v, sum(p.pr // dg.deg) AS s
-           |    FROM edges e JOIN pr${it - 1} p ON p.node = e.u
-           |                 JOIN deg dg ON dg.u = e.u
-           |    GROUP BY e.v) s ON s.v = n.node)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ${bandedPairsCtes(tokSql, "", 900)},
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |deg AS (SELECT u, count(*) AS deg FROM edges GROUP BY u),
-         |nodes AS (SELECT DISTINCT u AS node FROM edges),
-         |pr0 AS (SELECT node, CAST(10000 AS BIGINT) AS pr FROM nodes),
-         |$rounds
-         |SELECT node AS doc_id, pr FROM pr3 ORDER BY doc_id""".stripMargin
-    },
-
-    // HITS replay: two unrolled rounds, each = edge-join sum + the
-    // scalar-max L∞ rescale as integer floor division.
-    "graph_hits" -> {
-      val rounds = (1 to 2).map { it =>
-        s"""h${it}r AS (SELECT e.u AS node, sum(a.score) AS raw
-           |  FROM edges e JOIN a${it - 1} a ON a.node = e.v GROUP BY e.u),
-           |h$it AS (SELECT node, raw * 10000 // (SELECT max(raw) FROM h${it}r) AS score
-           |  FROM h${it}r),
-           |a${it}r AS (SELECT e.v AS node, sum(h.score) AS raw
-           |  FROM edges e JOIN h$it h ON h.node = e.u GROUP BY e.v),
-           |a$it AS (SELECT node, raw * 10000 // (SELECT max(raw) FROM a${it}r) AS score
-           |  FROM a${it}r)""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ${bandedPairsCtes(tokSql, "", 900)},
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |          UNION SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT u AS node FROM edges),
-         |a0 AS (SELECT node, CAST(10000 AS BIGINT) AS score FROM nodes),
-         |$rounds
-         |SELECT h2.node AS doc_id, CAST(h2.score AS BIGINT) AS hub,
-         |       CAST(a2.score AS BIGINT) AS auth
-         |FROM h2 JOIN a2 ON a2.node = h2.node ORDER BY doc_id""".stripMargin
-    },
-
-    // char-5-gram banded candidates over the title slice at the
-    // default cap, length prefilter, engine levenshtein verification
-    "dedup_edit_distance" ->
-      s"""WITH ${bandedBucketCtes(
-        "list_transform(range(1, length(substr(text, 1, 80)) - 3), " +
-          "i -> substr(substr(text, 1, 80), CAST(i AS INTEGER), 5))", "")},
-         |cold AS (SELECT band, bv, source, lang FROM bsz WHERE bucket_docs <= 1000),
-         |cb AS (SELECT s.* FROM sbands s JOIN cold c
-         |         ON s.band = c.band AND s.bv = c.bv
-         |        AND s.source = c.source AND s.lang = c.lang),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |         FROM cb a JOIN cb b
-         |           ON a.band = b.band AND a.bv = b.bv
-         |          AND a.source = b.source AND a.lang = b.lang
-         |          AND a.doc_id < b.doc_id),
-         |tx AS (SELECT doc_id, substr(text, 1, 80) AS ttl,
-         |         length(substr(text, 1, 80)) AS ln FROM documents),
-         |v AS (SELECT cand.doc_a, cand.doc_b,
-         |        CAST(levenshtein(a.ttl, b.ttl) AS BIGINT) AS dist
-         |      FROM cand JOIN tx a ON a.doc_id = cand.doc_a
-         |                JOIN tx b ON b.doc_id = cand.doc_b
-         |      WHERE abs(a.ln - b.ln) <= 8)
-         |SELECT doc_a, doc_b, dist FROM v WHERE dist <= 8
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // banded candidates at the default cap + integer odds-idf weights,
-    // weighted intersection/union via pair-bounded token joins
-    "dedup_idf_jaccard" ->
-      s"""WITH ${bandedBucketCtes(tokSql, "")},
-         |cold AS (SELECT band, bv, source, lang FROM bsz WHERE bucket_docs <= 1000),
-         |cb AS (SELECT s.* FROM sbands s JOIN cold c
-         |         ON s.band = c.band AND s.bv = c.bv
-         |        AND s.source = c.source AND s.lang = c.lang),
-         |cand AS (SELECT DISTINCT a.doc_id AS doc_a, b.doc_id AS doc_b
-         |         FROM cb a JOIN cb b
-         |           ON a.band = b.band AND a.bv = b.bv
-         |          AND a.source = b.source AND a.lang = b.lang
-         |          AND a.doc_id < b.doc_id),
-         |tok AS (SELECT doc_id, unnest(ts) AS t FROM d),
-         |nd AS (SELECT CAST(count(*) AS BIGINT) AS n FROM d),
-         |wt AS (SELECT t, (1000 * (2 * (nd.n - x.df) + 1)) // (2 * x.df + 1) AS w
-         |       FROM (SELECT t, CAST(count(*) AS BIGINT) AS df FROM tok GROUP BY t) x, nd),
-         |tw AS (SELECT tok.doc_id, tok.t, wt.w FROM tok JOIN wt USING (t)),
-         |pa AS (SELECT cand.doc_a, cand.doc_b, tw.t, tw.w
-         |       FROM tw JOIN cand ON tw.doc_id = cand.doc_a),
-         |pb AS (SELECT cand.doc_a, cand.doc_b, tw.t, tw.w
-         |       FROM tw JOIN cand ON tw.doc_id = cand.doc_b),
-         |sa AS (SELECT doc_a, doc_b, CAST(sum(w) AS BIGINT) AS swa
-         |       FROM pa GROUP BY doc_a, doc_b),
-         |sb AS (SELECT doc_a, doc_b, CAST(sum(w) AS BIGINT) AS swb
-         |       FROM pb GROUP BY doc_a, doc_b),
-         |si AS (SELECT pa.doc_a, pa.doc_b, CAST(sum(pa.w) AS BIGINT) AS swi
-         |       FROM pa JOIN pb ON pa.doc_a = pb.doc_a
-         |         AND pa.doc_b = pb.doc_b AND pa.t = pb.t
-         |       GROUP BY pa.doc_a, pa.doc_b),
-         |f AS (SELECT sa.doc_a, sa.doc_b,
-         |        CAST(coalesce(si.swi, 0) AS BIGINT) AS w_inter,
-         |        CAST(sa.swa + sb.swb - coalesce(si.swi, 0) AS BIGINT) AS w_union
-         |      FROM sa JOIN sb USING (doc_a, doc_b)
-         |      LEFT JOIN si USING (doc_a, doc_b))
-         |SELECT doc_a, doc_b, w_inter, w_union,
-         |       CAST(w_inter * 1000 // w_union AS BIGINT) AS idfjac_permille
-         |FROM f WHERE w_inter * 1000 // w_union >= 500
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // degree-ordered triangle enumeration replayed: direct each edge
-    // low→high (deg, id) rank, wedge at the source, close on the
-    // directed edge set, unnest the three corners
-    "graph_triangles" ->
-      s"""WITH ${bandedPairsCtes(tokSql, "", 900)},
-         |e0 AS (SELECT DISTINCT least(doc_a, doc_b) AS u, greatest(doc_a, doc_b) AS v
-         |       FROM pairs WHERE doc_a <> doc_b),
-         |sym AS (SELECT u, v FROM e0 UNION SELECT v, u FROM e0),
-         |dg AS (SELECT u, CAST(count(*) AS BIGINT) AS deg FROM sym GROUP BY u),
-         |dire AS (SELECT CASE WHEN a.deg <= b.deg THEN e0.u ELSE e0.v END AS src,
-         |                CASE WHEN a.deg <= b.deg THEN e0.v ELSE e0.u END AS dst,
-         |                CASE WHEN a.deg <= b.deg THEN b.deg ELSE a.deg END AS ddeg
-         |         FROM e0 JOIN dg a ON a.u = e0.u JOIN dg b ON b.u = e0.v),
-         |tri AS (SELECT e1.src AS x, e1.dst AS y, e2.dst AS z
-         |        FROM dire e1 JOIN dire e2 ON e1.src = e2.src
-         |          AND (e1.ddeg < e2.ddeg OR (e1.ddeg = e2.ddeg AND e1.dst < e2.dst))
-         |        JOIN dire e3 ON e3.src = e1.dst AND e3.dst = e2.dst),
-         |corners AS (SELECT unnest([x, y, z]) AS doc_id FROM tri),
-         |tc AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_triangles
-         |       FROM corners GROUP BY doc_id)
-         |SELECT dg.u AS doc_id, dg.deg AS degree,
-         |       CAST(coalesce(tc.n_triangles, 0) AS BIGINT) AS n_triangles,
-         |       CAST(CASE WHEN dg.deg >= 2
-         |            THEN (2000 * coalesce(tc.n_triangles, 0)) // (dg.deg * (dg.deg - 1))
-         |            ELSE 0 END AS BIGINT) AS cc_permille
-         |FROM dg LEFT JOIN tc ON tc.doc_id = dg.u
-         |ORDER BY doc_id""".stripMargin,
-
-    // Recursive BFS walk from the min node, hop bound 12 (eccentricity
-    // within budget is spec-pinned); UNION dedups (v, d) rows so the
-    // closure terminates, min(d) per node is the BFS distance.
-    "graph_bfs" ->
-      s"""WITH RECURSIVE ${bandedPairsCtes(tokSql, "", 900)},
-         |e0 AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |       UNION SELECT doc_b, doc_a FROM pairs),
-         |src AS (SELECT min(u) AS s FROM e0),
-         |walk AS (
-         |  SELECT s AS v, 0 AS d FROM src
-         |  UNION
-         |  SELECT e.v, w.d + 1 FROM walk w JOIN e0 e ON e.u = w.v WHERE w.d < 12
-         |)
-         |SELECT v AS doc_id, CAST(min(d) AS BIGINT) AS dist
-         |FROM walk GROUP BY v ORDER BY doc_id""".stripMargin,
-
-    // k=3 peeling, 10 rounds unrolled (fixpoint within 10 is
-    // spec-pinned at both test SFs; post-convergence rounds no-op).
-    // Every round CTE is MATERIALIZED: DuckDB inlines CTEs per
-    // reference, and each round referencing the previous 3× would
-    // otherwise expand 3^10 copies of the whole pairs pipeline
-    // (observed as a too-many-open-files parquet-scan explosion).
-    "graph_kcore" -> {
-      val rounds = (0 until 10).map { i =>
-        s"""r$i AS MATERIALIZED (SELECT u FROM e$i GROUP BY u HAVING count(*) < 3),
-           |e${i + 1} AS MATERIALIZED (SELECT e.u, e.v FROM e$i e
-           |        WHERE e.u NOT IN (SELECT u FROM r$i)
-           |          AND e.v NOT IN (SELECT u FROM r$i))""".stripMargin
-      }.mkString(",\n")
-      s"""WITH ${bandedPairsCtes(tokSql, "", 900)},
-         |e0 AS MATERIALIZED (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |       UNION SELECT doc_b, doc_a FROM pairs),
-         |$rounds
-         |SELECT u AS doc_id, CAST(count(*) AS BIGINT) AS core_degree
-         |FROM e10 GROUP BY u ORDER BY doc_id""".stripMargin
-    },
-
-    "dedup_keep_best" ->
-      s"""WITH RECURSIVE ${bandedPairsCtes(tokSql, "", 900)},
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |nodes AS (SELECT DISTINCT u AS node FROM edges),
-         |reach AS (
-         |  SELECT node, node AS label FROM nodes
-         |  UNION
-         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node),
-         |comp AS (SELECT node AS doc_id, min(label) AS component
-         |         FROM reach GROUP BY node),
-         |sc AS (SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS score FROM documents),
-         |lab AS (SELECT sc.doc_id, coalesce(c.component, sc.doc_id) AS component, sc.score
-         |        FROM sc LEFT JOIN comp c ON c.doc_id = sc.doc_id),
-         |win AS (SELECT doc_id, row_number() OVER
-         |          (PARTITION BY component ORDER BY score DESC, doc_id ASC) AS rn
-         |        FROM lab)
-         |SELECT doc_id FROM win WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "dedup_simhash" -> simhashOracle,
-
-    "dedup_simhash_pairs" ->
-      s"""WITH sig AS ($simhashOracleBody)
-         |SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |       a.simhash16 AS sig_a, b.simhash16 AS sig_b,
-         |       CAST(bit_count(xor(a.simhash16, b.simhash16)) AS BIGINT) AS hamming
-         |FROM sig a JOIN sig b
-         |  ON (a.simhash16 >> 8) = (b.simhash16 >> 8) AND a.doc_id < b.doc_id
-         |WHERE bit_count(xor(a.simhash16, b.simhash16)) <= 3
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    "dedup_embedding" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding,
-         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings)
-         |SELECT a.vec_id AS id_a, b.vec_id AS id_b, a.label AS cell,
-         |       round(${dotSql("a.embedding", "b.embedding")} / sqrt(a.n2 * b.n2), 4) AS cos
-         |FROM e a JOIN e b ON a.label = b.label AND a.vec_id < b.vec_id
-         |WHERE cos >= 0.4
-         |ORDER BY id_a, id_b""".stripMargin,
-
-    // Cell-blocked train×benchmark cosine screen, one row per
-    // contaminated train vector.
-    "corpus_semantic_decon" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding,
-         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
-         |tr AS (SELECT * FROM e WHERE vec_id % 10 <> 0),
-         |te AS (SELECT * FROM e WHERE vec_id % 10 = 0),
-         |hits AS (SELECT tr.vec_id AS train_id,
-         |           round(${dotSql("tr.embedding", "te.embedding")}
-         |             / sqrt(tr.n2 * te.n2), 4) AS cos
-         |         FROM tr JOIN te ON tr.label = te.label)
-         |SELECT train_id, CAST(count(*) AS BIGINT) AS n_hits, max(cos) AS max_cos
-         |FROM hits WHERE cos >= 0.4
-         |GROUP BY train_id ORDER BY train_id""".stripMargin,
-
-    "sim_ann_brute" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding,
-         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2 FROM e WHERE vec_id < 10),
-         |scored AS (SELECT query_id, e.vec_id AS cand_id,
-         |             round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
-         |           FROM q, e WHERE query_id <> e.vec_id),
-         |ranked AS (SELECT query_id, cand_id, cos,
-         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-         |           FROM scored)
-         |SELECT query_id, cand_id, rnk, cos FROM ranked WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
-
-    // Matryoshka serving replayed: 16-dim-prefix cosine shortlist
-    // (rounded, cand_id tie-break), exact 64-dim re-rank of the 20.
-    "sim_ann_truncated" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv FROM e WHERE vec_id < 10),
-         |st AS (SELECT query_id, e.vec_id AS cand_id,
-         |         round(${dotSqlN("qv", "e.embedding", "16")}
-         |           / sqrt(${dotSqlN("qv", "qv", "16")}
-         |                  * ${dotSqlN("e.embedding", "e.embedding", "16")}), 4) AS cos_t
-         |       FROM q, e WHERE query_id <> e.vec_id),
-         |sl AS (SELECT query_id, cand_id FROM (
-         |         SELECT query_id, cand_id,
-         |           row_number() OVER (PARTITION BY query_id ORDER BY cos_t DESC, cand_id) AS srnk
-         |         FROM st) x WHERE srnk <= 20),
-         |rr AS (SELECT sl.query_id, sl.cand_id,
-         |         round(${dotSql("q.qv", "e.embedding")}
-         |           / sqrt(${dotSql("q.qv", "q.qv")}
-         |                  * ${dotSql("e.embedding", "e.embedding")}), 4) AS cos
-         |       FROM sl JOIN q USING (query_id) JOIN e ON e.vec_id = sl.cand_id),
-         |rk AS (SELECT query_id, cand_id, cos,
-         |         row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-         |       FROM rr)
-         |SELECT query_id, cand_id, rnk, cos FROM rk WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
-
-    // MRL recall curve: per-(dim, query) overlap of truncated-prefix
-    // top-5 with the full-dim truth; the dim list unnests so all dims
-    // score in one scored frame, as the Spark side explodes.
-    "sim_dim_recall" ->
-      s"""WITH e AS (SELECT vec_id, embedding FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv FROM e WHERE vec_id < 10),
-         |truth AS (SELECT query_id, cand_id FROM (
-         |            SELECT query_id, e.vec_id AS cand_id,
-         |              row_number() OVER (PARTITION BY query_id ORDER BY
-         |                round(${dotSql("qv", "e.embedding")}
-         |                  / sqrt(${dotSql("qv", "qv")}
-         |                         * ${dotSql("e.embedding", "e.embedding")}), 4) DESC,
-         |                e.vec_id) AS rnk
-         |            FROM q, e WHERE query_id <> e.vec_id) t WHERE rnk <= 5),
-         |dims AS (SELECT unnest([8, 16, 32, 64]) AS td),
-         |st AS (SELECT td, query_id, e.vec_id AS cand_id,
-         |         round(${dotSqlN("qv", "e.embedding", "td")}
-         |           / sqrt(${dotSqlN("qv", "qv", "td")}
-         |                  * ${dotSqlN("e.embedding", "e.embedding", "td")}), 4) AS cos_t
-         |       FROM dims, q, e WHERE query_id <> e.vec_id),
-         |ak AS (SELECT td, query_id, cand_id FROM (
-         |         SELECT td, query_id, cand_id,
-         |           row_number() OVER (PARTITION BY td, query_id ORDER BY cos_t DESC, cand_id) AS rn
-         |         FROM st) y WHERE rn <= 5),
-         |h AS (SELECT ak.td, ak.query_id,
-         |        CAST(sum(CASE WHEN truth.cand_id IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_hits
-         |      FROM ak LEFT JOIN truth
-         |        ON ak.query_id = truth.query_id AND ak.cand_id = truth.cand_id
-         |      GROUP BY ak.td, ak.query_id)
-         |SELECT CAST(td AS BIGINT) AS trunc_dim, query_id, n_hits,
-         |       (n_hits * 1000) // 5 AS recall_permille
-         |FROM h ORDER BY trunc_dim, query_id""".stripMargin,
-
-    // Brute-force truth and label-IVF candidates replayed side by
-    // side, semi-joined per (query, cand) — queries the approx side
-    // missed still appear via the truth-side left join.
-    "sim_eval_recall" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding,
-         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, label AS qlabel, embedding AS qv, n2 AS qn2
-         |      FROM e WHERE vec_id < 10),
-         |bs AS (SELECT query_id, e.vec_id AS cand_id,
-         |         round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
-         |       FROM q, e WHERE query_id <> e.vec_id),
-         |bt AS (SELECT query_id, cand_id FROM (
-         |         SELECT query_id, cand_id,
-         |           row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-         |         FROM bs) x WHERE rnk <= 5),
-         |ivs AS (SELECT query_id, e.vec_id AS cand_id,
-         |          round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
-         |        FROM q JOIN e ON qlabel = e.label AND query_id <> e.vec_id),
-         |ivt AS (SELECT query_id, cand_id FROM (
-         |          SELECT query_id, cand_id,
-         |            row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-         |          FROM ivs) y WHERE rnk <= 5),
-         |h AS (SELECT bt.query_id, CAST(count(ivt.cand_id) AS BIGINT) AS n_hits
-         |      FROM bt LEFT JOIN ivt
-         |        ON bt.query_id = ivt.query_id AND bt.cand_id = ivt.cand_id
-         |      GROUP BY bt.query_id)
-         |SELECT query_id, n_hits, CAST(floor(n_hits * 1000 / 5) AS BIGINT) AS recall_permille
-         |FROM h ORDER BY query_id""".stripMargin,
-
-    "sim_hard_negatives" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding,
-         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, label AS qlabel, embedding AS qv, n2 AS qn2
-         |      FROM e WHERE vec_id < 10),
-         |scored AS (SELECT query_id, e.vec_id AS cand_id,
-         |             round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
-         |           FROM q JOIN e ON qlabel <> e.label),
-         |ranked AS (SELECT query_id, cand_id, cos,
-         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-         |           FROM scored)
-         |SELECT query_id, cand_id, rnk, cos FROM ranked WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
-
-    "sim_ann_ivf" ->
-      s"""WITH e AS (SELECT vec_id, label, embedding,
-         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2, label AS qlabel
-         |      FROM e WHERE vec_id < 10),
-         |scored AS (SELECT query_id, e.vec_id AS cand_id,
-         |             round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
-         |           FROM q JOIN e ON qlabel = e.label AND query_id <> e.vec_id),
-         |ranked AS (SELECT query_id, cand_id, cos,
-         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-         |           FROM scored)
-         |SELECT query_id, cand_id, rnk, cos FROM ranked WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
-
-    "sim_ann_lsh" ->
-      s"""WITH planes AS (
-         |  SELECT h, list_transform(range(1, 65),
-         |    d -> strpos('0123456789abcdef',
-         |           substr(md5(CAST(h AS VARCHAR) || ',' || CAST(d AS VARCHAR)), 1, 1)) - 8.5) AS p
-         |  FROM range(0, 16) t(h)),
-         |e AS (SELECT vec_id, embedding,
-         |        ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
-         |sigs AS (
-         |  SELECT vec_id,
-         |    CAST(sum(CASE WHEN list_sum(list_transform(range(1, 65),
-         |           i -> embedding[i]::DOUBLE * p[i])) > 0
-         |         THEN (CAST(1 AS BIGINT) << h) ELSE CAST(0 AS BIGINT) END) AS BIGINT) AS sig
-         |  FROM e, planes GROUP BY vec_id),
-         |q AS (SELECT e.vec_id AS query_id, e.embedding AS qv, e.n2 AS qn2, s.sig >> 8 AS qblock
-         |      FROM e JOIN sigs s ON e.vec_id = s.vec_id WHERE e.vec_id < 10),
-         |c AS (SELECT e.vec_id AS cand_id, e.embedding AS cv, e.n2 AS cn2, s.sig >> 8 AS cblock
-         |      FROM e JOIN sigs s ON e.vec_id = s.vec_id),
-         |scored AS (SELECT query_id, cand_id,
-         |             round(${dotSql("qv", "cv")} / sqrt(qn2 * cn2), 4) AS cos
-         |           FROM q JOIN c ON qblock = cblock AND query_id <> cand_id),
-         |ranked AS (SELECT query_id, cand_id, cos,
-         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-         |           FROM scored)
-         |SELECT query_id, cand_id, rnk, cos FROM ranked WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
-
-    // Unrolls mmrTopK's k=3 greedy rounds: shortlist by raw cosine,
-    // pairwise sims within the shortlist, then per round argmax of
-    // 700·rel_m − 300·max-sim-to-picked (pure BIGINT arithmetic,
-    // cand_id tie-break) — the same integer fixed-point the Spark
-    // side computes.
-    "sim_mmr" ->
-      s"""WITH e AS (SELECT vec_id, embedding,
-         |             ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
-         |q AS (SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2 FROM e WHERE vec_id < 5),
-         |scored AS (SELECT query_id, e.vec_id AS cand_id,
-         |             round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
-         |           FROM q, e WHERE query_id <> e.vec_id),
-         |sl AS (SELECT query_id, cand_id, CAST(round(cos * 10000) AS BIGINT) AS rel_m
-         |       FROM (SELECT query_id, cand_id, cos,
-         |               row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rn
-         |             FROM scored) WHERE rn <= 8),
-         |pr AS (SELECT a.query_id, a.cand_id AS pa, b.cand_id AS pb,
-         |         CAST(round(round(${dotSql("ea.embedding", "eb.embedding")}
-         |           / sqrt(ea.n2 * eb.n2), 4) * 10000) AS BIGINT) AS sim_m
-         |       FROM sl a JOIN sl b ON a.query_id = b.query_id AND a.cand_id <> b.cand_id
-         |       JOIN e ea ON ea.vec_id = a.cand_id JOIN e eb ON eb.vec_id = b.cand_id),
-         |r1 AS (SELECT query_id, cand_id, rel_m, CAST(1 AS BIGINT) AS rnk
-         |       FROM (SELECT query_id, cand_id, rel_m,
-         |               row_number() OVER (PARTITION BY query_id ORDER BY rel_m DESC, cand_id) AS rn
-         |             FROM sl) WHERE rn = 1),
-         |c2 AS (SELECT s.query_id, s.cand_id, s.rel_m, max(p.sim_m) AS msim
-         |       FROM sl s
-         |       JOIN pr p ON p.query_id = s.query_id AND p.pa = s.cand_id
-         |       JOIN r1 ON r1.query_id = p.query_id AND r1.cand_id = p.pb
-         |       WHERE NOT EXISTS (SELECT 1 FROM r1 x
-         |                         WHERE x.query_id = s.query_id AND x.cand_id = s.cand_id)
-         |       GROUP BY s.query_id, s.cand_id, s.rel_m),
-         |r2 AS (SELECT query_id, cand_id, rel_m, CAST(2 AS BIGINT) AS rnk
-         |       FROM (SELECT query_id, cand_id, rel_m,
-         |               row_number() OVER (PARTITION BY query_id
-         |                 ORDER BY 700 * rel_m - 300 * msim DESC, cand_id) AS rn
-         |             FROM c2) WHERE rn = 1),
-         |p2 AS (SELECT query_id, cand_id FROM r1 UNION ALL SELECT query_id, cand_id FROM r2),
-         |c3 AS (SELECT s.query_id, s.cand_id, s.rel_m, max(p.sim_m) AS msim
-         |       FROM sl s
-         |       JOIN pr p ON p.query_id = s.query_id AND p.pa = s.cand_id
-         |       JOIN p2 ON p2.query_id = p.query_id AND p2.cand_id = p.pb
-         |       WHERE NOT EXISTS (SELECT 1 FROM p2 x
-         |                         WHERE x.query_id = s.query_id AND x.cand_id = s.cand_id)
-         |       GROUP BY s.query_id, s.cand_id, s.rel_m),
-         |r3 AS (SELECT query_id, cand_id, rel_m, CAST(3 AS BIGINT) AS rnk
-         |       FROM (SELECT query_id, cand_id, rel_m,
-         |               row_number() OVER (PARTITION BY query_id
-         |                 ORDER BY 700 * rel_m - 300 * msim DESC, cand_id) AS rn
-         |             FROM c3) WHERE rn = 1)
-         |SELECT query_id, cand_id, rel_m, rnk FROM r1
-         |UNION ALL SELECT query_id, cand_id, rel_m, rnk FROM r2
-         |UNION ALL SELECT query_id, cand_id, rel_m, rnk FROM r3
-         |ORDER BY query_id, rnk""".stripMargin,
-
-    "text_tokens" ->
-      s"""SELECT doc_id,
-         |       CAST(len($tokSql) AS BIGINT) AS n_ws_tokens,
-         |       CAST(len(regexp_extract_all(text, '[A-Za-z]+|[0-9]+|[^A-Za-z0-9 ]')) AS BIGINT) AS n_re_tokens,
-         |       CAST(length(text) AS BIGINT) AS n_chars_measured,
-         |       n_chars AS n_chars_meta
-         |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "text_quality" ->
-      s"""WITH f AS (SELECT doc_id,
-         |    CAST(len($tokSql) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_distinct($tokSql)) AS BIGINT) AS n_distinct,
-         |    CAST(len(list_filter(string_split(text, ' '),
-         |      x -> x = 'the' OR x = 'a' OR x = 'an' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in')) AS BIGINT) AS n_stop,
-         |    length(replace(text, ' ', '')) AS tok_chars
-         |  FROM documents)
-         |SELECT doc_id, n_tokens, n_distinct, n_stop,
-         |  CAST(floor(tok_chars * 1000 / n_tokens) AS BIGINT) AS mean_tok_len_permille,
-         |  CAST(floor(n_stop * 1000 / n_tokens) AS BIGINT) AS stop_permille,
-         |  CAST(floor(n_distinct * 1000 / n_tokens) AS BIGINT) AS distinct_permille,
-         |  CAST((CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 250 ELSE 0 END) +
-         |       (CASE WHEN floor(tok_chars * 1000 / n_tokens) BETWEEN 3000 AND 9000 THEN 250 ELSE 0 END) +
-         |       (CASE WHEN floor(n_stop * 1000 / n_tokens) BETWEEN 10 AND 400 THEN 250 ELSE 0 END) +
-         |       (CASE WHEN floor(n_distinct * 1000 / n_tokens) >= 300 THEN 250 ELSE 0 END) AS BIGINT) AS quality_score
-         |FROM f ORDER BY doc_id""".stripMargin,
-
-    "text_quality_sweep" ->
-      s"""WITH q AS (SELECT doc_id,
-         |    CAST(len($tokSql) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_distinct($tokSql)) AS BIGINT) AS n_distinct,
-         |    CAST(len(list_filter(string_split(text, ' '),
-         |      x -> x = 'the' OR x = 'a' OR x = 'an' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in')) AS BIGINT) AS n_stop,
-         |    length(replace(text, ' ', '')) AS tok_chars
-         |  FROM documents),
-         |qs AS (SELECT doc_id,
-         |  CAST((CASE WHEN n_tokens BETWEEN 20 AND 1000 THEN 250 ELSE 0 END) +
-         |       (CASE WHEN floor(tok_chars * 1000 / n_tokens) BETWEEN 3000 AND 9000 THEN 250 ELSE 0 END) +
-         |       (CASE WHEN floor(n_stop * 1000 / n_tokens) BETWEEN 10 AND 400 THEN 250 ELSE 0 END) +
-         |       (CASE WHEN floor(n_distinct * 1000 / n_tokens) >= 300 THEN 250 ELSE 0 END) AS BIGINT) AS quality_score
-         |  FROM q),
-         |gf AS (SELECT doc_id,
-         |    CAST(len($tokSql) AS BIGINT) AS n_words,
-         |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_alpha_chars,
-         |    CAST(len(regexp_extract_all(text, '#|[.][.][.]')) AS BIGINT) AS n_sym,
-         |    CAST(len(list_filter($tokSql,
-         |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
-         |    CAST(len(list_filter($tokSql,
-         |      w -> w IN ('the', 'a', 'an', 'of', 'to', 'and', 'in'))) AS BIGINT) AS n_stop
-         |  FROM documents),
-         |gk AS (SELECT doc_id,
-         |  CAST(CASE WHEN n_words BETWEEN 50 AND 100000
-         |        AND (CASE WHEN n_words > 0 THEN (n_alpha_chars * 1000) // n_words ELSE 0 END) BETWEEN 3000 AND 10000
-         |        AND (CASE WHEN n_words > 0 THEN (n_sym * 1000) // n_words ELSE 0 END) <= 100
-         |        AND (CASE WHEN n_words > 0 THEN (n_alpha_words * 1000) // n_words ELSE 0 END) >= 800
-         |        AND n_stop >= 2 THEN 1 ELSE 0 END AS BIGINT) AS keep
-         |  FROM gf),
-         |j AS (SELECT qs.quality_score, gk.keep
-         |      FROM qs JOIN gk ON qs.doc_id = gk.doc_id),
-         |th AS (SELECT unnest([250, 500, 750, 1000]) AS threshold),
-         |c AS (SELECT CAST(th.threshold AS BIGINT) AS threshold,
-         |        CAST(sum(CASE WHEN quality_score >= th.threshold AND keep = 1 THEN 1 ELSE 0 END) AS BIGINT) AS tp,
-         |        CAST(sum(CASE WHEN quality_score >= th.threshold AND keep = 0 THEN 1 ELSE 0 END) AS BIGINT) AS fp,
-         |        CAST(sum(CASE WHEN quality_score <  th.threshold AND keep = 1 THEN 1 ELSE 0 END) AS BIGINT) AS fn,
-         |        CAST(sum(CASE WHEN quality_score <  th.threshold AND keep = 0 THEN 1 ELSE 0 END) AS BIGINT) AS tn
-         |      FROM j CROSS JOIN th GROUP BY th.threshold)
-         |SELECT threshold, tp, fp, fn, tn,
-         |  CAST(CASE WHEN tp + fp > 0 THEN (tp * 1000) // (tp + fp) ELSE 0 END AS BIGINT) AS precision_permille,
-         |  CAST(CASE WHEN tp + fn > 0 THEN (tp * 1000) // (tp + fn) ELSE 0 END AS BIGINT) AS recall_permille
-         |FROM c ORDER BY threshold""".stripMargin,
-
-    "text_langid" ->
-      s"""WITH tok AS (SELECT doc_id, lang, unnest($tokSql) AS t FROM documents),
-         |freq AS (SELECT lang, t, count(*) AS cnt FROM tok GROUP BY lang, t),
-         |prof AS (SELECT lang AS cand_lang, t FROM (
-         |    SELECT lang, t, row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, t) AS rn
-         |    FROM freq) x WHERE rn <= 20),
-         |hits AS (SELECT doc_id, cand_lang, count(*) AS hits
-         |         FROM (SELECT doc_id, t FROM tok) tk JOIN prof USING (t)
-         |         GROUP BY doc_id, cand_lang)
-         |SELECT doc_id, cand_lang AS pred_lang, hits FROM (
-         |  SELECT doc_id, cand_lang, hits,
-         |         row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, cand_lang) AS rn
-         |  FROM hits) y
-         |WHERE rn = 1 ORDER BY doc_id""".stripMargin,
-
-    "text_lang_spans" ->
-      s"""WITH tok AS (SELECT doc_id, lang, unnest($tokSql) AS t FROM documents),
-         |freq AS (SELECT lang, t, count(*) AS cnt FROM tok GROUP BY lang, t),
-         |prof AS (SELECT lang AS cand_lang, t FROM (
-         |    SELECT lang, t, row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, t) AS rn
-         |    FROM freq) x WHERE rn <= 20),
-         |d2 AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |tp AS (SELECT doc_id, tk, unnest(range(1, len(tk) + 1)) AS pos FROM d2),
-         |tpx AS (SELECT doc_id, (pos - 1) // 10 AS win_idx,
-         |          tk[CAST(pos AS INTEGER)] AS t FROM tp),
-         |wins AS (SELECT DISTINCT doc_id, win_idx FROM tpx),
-         |whits AS (SELECT doc_id, win_idx, cand_lang, CAST(count(*) AS BIGINT) AS hits
-         |          FROM tpx JOIN prof USING (t) GROUP BY doc_id, win_idx, cand_lang),
-         |wpred AS (SELECT doc_id, win_idx, cand_lang FROM (
-         |    SELECT doc_id, win_idx, cand_lang,
-         |           row_number() OVER (PARTITION BY doc_id, win_idx
-         |                              ORDER BY hits DESC, cand_lang) AS rn
-         |    FROM whits) y WHERE rn = 1),
-         |lab AS (SELECT w.doc_id, w.win_idx, coalesce(p.cand_lang, 'und') AS span_lang
-         |        FROM wins w LEFT JOIN wpred p
-         |          ON p.doc_id = w.doc_id AND p.win_idx = w.win_idx),
-         |lgrp AS (SELECT doc_id, win_idx, span_lang,
-         |           win_idx - row_number() OVER (PARTITION BY doc_id, span_lang
-         |                                        ORDER BY win_idx) AS g
-         |         FROM lab)
-         |SELECT doc_id, span_lang, CAST(min(win_idx) AS BIGINT) AS win_start,
-         |       CAST(max(win_idx) AS BIGINT) AS win_end,
-         |       CAST(count(*) AS BIGINT) AS n_windows
-         |FROM lgrp GROUP BY doc_id, span_lang, g
-         |ORDER BY doc_id, win_start""".stripMargin,
-
-    "text_langid_confusion" ->
-      s"""WITH tok AS (SELECT doc_id, lang, unnest($tokSql) AS t FROM documents),
-         |freq AS (SELECT lang, t, count(*) AS cnt FROM tok GROUP BY lang, t),
-         |prof AS (SELECT lang AS cand_lang, t FROM (
-         |    SELECT lang, t, row_number() OVER (PARTITION BY lang ORDER BY cnt DESC, t) AS rn
-         |    FROM freq) x WHERE rn <= 20),
-         |hits AS (SELECT doc_id, cand_lang, count(*) AS hits
-         |         FROM (SELECT doc_id, t FROM tok) tk JOIN prof USING (t)
-         |         GROUP BY doc_id, cand_lang),
-         |pred AS (SELECT doc_id, cand_lang AS pred_lang FROM (
-         |  SELECT doc_id, cand_lang,
-         |         row_number() OVER (PARTITION BY doc_id ORDER BY hits DESC, cand_lang) AS rn
-         |  FROM hits) y WHERE rn = 1)
-         |SELECT d.lang, pred_lang, CAST(count(*) AS BIGINT) AS n_docs
-         |FROM pred JOIN documents d USING (doc_id)
-         |GROUP BY d.lang, pred_lang ORDER BY d.lang, pred_lang""".stripMargin,
-
-    "text_gopher_rules" ->
-      s"""WITH f AS (SELECT doc_id,
-         |    CAST(len($tokSql) AS BIGINT) AS n_words,
-         |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_alpha_chars,
-         |    CAST(len(regexp_extract_all(text, '#|[.][.][.]')) AS BIGINT) AS n_sym,
-         |    CAST(len(list_filter($tokSql,
-         |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
-         |    CAST(len(list_filter($tokSql,
-         |      w -> w IN ('the', 'a', 'an', 'of', 'to', 'and', 'in'))) AS BIGINT) AS n_stop
-         |  FROM documents),
-         |g AS (SELECT doc_id, n_words,
-         |    CASE WHEN n_words > 0 THEN (n_alpha_chars * 1000) // n_words
-         |         ELSE 0 END AS mean_word_len_permille,
-         |    CASE WHEN n_words > 0 THEN (n_sym * 1000) // n_words
-         |         ELSE 0 END AS symbol_permille,
-         |    CASE WHEN n_words > 0 THEN (n_alpha_words * 1000) // n_words
-         |         ELSE 0 END AS alpha_word_permille,
-         |    n_stop
-         |  FROM f)
-         |SELECT doc_id, n_words, mean_word_len_permille, symbol_permille,
-         |  alpha_word_permille, n_stop,
-         |  CAST(CASE WHEN n_words BETWEEN 50 AND 100000
-         |        AND mean_word_len_permille BETWEEN 3000 AND 10000
-         |        AND symbol_permille <= 100
-         |        AND alpha_word_permille >= 800
-         |        AND n_stop >= 2 THEN 1 ELSE 0 END AS BIGINT) AS keep
-         |FROM g ORDER BY doc_id""".stripMargin,
-
-    "text_bigram_lm" ->
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-         |                                            i -> tk[i] || ' ' || tk[i+1])) AS b
-         |       FROM t WHERE len(tk) >= 2),
-         |c AS (SELECT b, CAST(count(*) AS BIGINT) AS cnt FROM bg GROUP BY b),
-         |s AS (SELECT bg.doc_id, CAST(count(*) AS BIGINT) AS n_bigrams,
-         |        sum(c.cnt) AS sc
-         |      FROM bg JOIN c USING (b) GROUP BY bg.doc_id)
-         |SELECT doc_id, n_bigrams, CAST(sc // n_bigrams AS BIGINT) AS mean_freq
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    // Same trigram construction as the minhash chain; DISTINCT grams
-    // per doc, min-id first owner, staleness = grams owned earlier.
-    "text_ngram_novelty" ->
-      s"""WITH toks AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |shg AS (SELECT DISTINCT doc_id, g FROM (
-         |          SELECT doc_id, unnest(list_transform(range(1, len(tk) - 1),
-         |            i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
-         |          FROM toks WHERE len(tk) >= 3) s),
-         |own AS (SELECT g, min(doc_id) AS owner FROM shg GROUP BY g),
-         |per AS (SELECT shg.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-         |          CAST(sum(CASE WHEN own.owner < shg.doc_id THEN 1 ELSE 0 END) AS BIGINT) AS n_stale
-         |        FROM shg JOIN own USING (g) GROUP BY shg.doc_id)
-         |SELECT doc_id, n_grams, n_stale,
-         |       CAST(floor(n_stale * 1000 / n_grams) AS BIGINT) AS stale_permille
-         |FROM per ORDER BY doc_id""".stripMargin,
-
-    "text_oov" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($tokSql) AS t FROM documents),
-         |c AS (SELECT t, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY t),
-         |v AS (SELECT t FROM c ORDER BY cnt DESC, t LIMIT 20),
-         |s AS (SELECT tok.doc_id, CAST(count(*) AS BIGINT) AS n_tokens,
-         |        CAST(sum(CASE WHEN v.t IS NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_oov
-         |      FROM tok LEFT JOIN v ON tok.t = v.t GROUP BY tok.doc_id)
-         |SELECT doc_id, n_tokens, n_oov,
-         |       CAST(n_oov * 1000 // n_tokens AS BIGINT) AS oov_permille
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    "corpus_source_stats" ->
-      s"""SELECT source, count(*) AS n_docs,
-         |       CAST(sum(len($tokSql)) AS BIGINT) AS n_tokens,
-         |       CAST(count(*) - count(DISTINCT md5(text)) AS BIGINT) AS n_dup_docs
-         |FROM documents GROUP BY source ORDER BY source""".stripMargin,
-
-    "text_fingerprint" ->
-      s"""WITH d AS (SELECT doc_id, list_sort(list_distinct($tokSql)) AS ts FROM documents)
-         |SELECT doc_id, md5(array_to_string(ts, ' ')) AS fp,
-         |       ts[1] AS tok_min, ts[-1] AS tok_max,
-         |       CAST(len(ts) AS BIGINT) AS n_distinct
-         |FROM d ORDER BY doc_id""".stripMargin,
-
-    // FK grade replayed: same char-class regexes, same floor chain.
-    "text_readability" ->
-      s"""WITH f AS (SELECT doc_id,
-         |    CAST(len($tokSql) AS BIGINT) AS n_words,
-         |    greatest(CAST(len(regexp_extract_all(text, '[.!?]+')) AS BIGINT),
-         |             CAST(1 AS BIGINT)) AS n_sentences,
-         |    CAST(len(regexp_extract_all(lower(text), '[aeiouy]+')) AS BIGINT)
-         |      AS n_syllables
-         |  FROM documents)
-         |SELECT doc_id, n_words, n_sentences, n_syllables,
-         |       (390 * n_words) // n_sentences
-         |         + (11800 * n_syllables) // n_words - 15590 AS fk_milli
-         |FROM f WHERE n_words > 0 ORDER BY doc_id""".stripMargin,
-
-    // Winnowing (k=5, w=4): char-5-gram 32-bit md5 hashes, window-of-4
-    // minima, distinct selected values — the selected VALUE set is
-    // tie-break-independent, so list_min per window replays the
-    // native deque exactly.
-    "text_winnow" ->
-      s"""WITH $winnowSelCtes
-         |SELECT doc_id, CAST(n_grams AS BIGINT) AS n_grams,
-         |       CAST(len(sl) AS BIGINT) AS n_selected,
-         |       sl[1] AS min_fp, sl[-1] AS max_fp,
-         |       CAST(list_sum(sl) AS BIGINT) AS sum_fp
-         |FROM sel ORDER BY doc_id""".stripMargin,
-
-    // Delta-vs-corpus winnow probe: corpus postings census (governor
-    // df <= 50 on the INDEX side), delta fingerprints equi-join.
-    "dedup_excerpt_index" ->
-      s"""WITH $winnowSelCtes,
-         |f AS (SELECT doc_id, unnest(sl) AS fp FROM sel),
-         |idx AS (SELECT doc_id, fp FROM f WHERE doc_id < 250),
-         |c AS (SELECT fp, CAST(count(*) AS BIGINT) AS df FROM idx GROUP BY fp),
-         |kept AS (SELECT idx.doc_id, idx.fp FROM idx JOIN c USING (fp) WHERE df <= 50),
-         |dl AS (SELECT doc_id, fp FROM f WHERE doc_id >= 250),
-         |p AS (SELECT dl.doc_id AS new_id, kept.doc_id AS index_id,
-         |        CAST(count(*) AS BIGINT) AS n_shared
-         |      FROM dl JOIN kept ON dl.fp = kept.fp GROUP BY 1, 2)
-         |SELECT new_id, index_id, n_shared FROM p WHERE n_shared >= 5
-         |ORDER BY new_id, index_id""".stripMargin,
-
-    // Winnowed inverted index: unnest selected fingerprints, governor
-    // on document frequency, self-join, shared-count >= 5.
-    "dedup_winnow_pairs" ->
-      s"""WITH $winnowSelCtes,
-         |f AS (SELECT doc_id, unnest(sl) AS fp FROM sel),
-         |c AS (SELECT fp, CAST(count(*) AS BIGINT) AS df FROM f GROUP BY fp),
-         |kept AS (SELECT f.doc_id, f.fp FROM f JOIN c USING (fp) WHERE df <= 50),
-         |p AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |        CAST(count(*) AS BIGINT) AS n_shared
-         |      FROM kept a JOIN kept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |      GROUP BY a.doc_id, b.doc_id)
-         |SELECT doc_a, doc_b, n_shared FROM p WHERE n_shared >= 5
-         |ORDER BY doc_a, doc_b""".stripMargin,
-
-    // Twin of TextAnalysis.lexicalStats: the Σ c·ln c fold runs over
-    // the SORTED count multiset via transform-then-reduce with a 0.0
-    // seed — the identical float-op sequence as Spark's aggregate().
-    "text_entropy" ->
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |c AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
-         |        CAST(len(list_distinct(tk)) AS BIGINT) AS n_types,
-         |        list_sort(list_transform(list_distinct(tk),
-         |          u -> CAST(len(list_filter(tk, x -> x = u)) AS DOUBLE))) AS cnts
-         |      FROM t WHERE len(tk) > 0)
-         |SELECT doc_id, n_tokens, n_types,
-         |       n_types * 1000 // n_tokens AS ttr_permille,
-         |       round(ln(CAST(n_tokens AS DOUBLE)) -
-         |         list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |           list_transform(cnts, y -> y * ln(y))), (a,b) -> a + b) / n_tokens,
-         |         4) AS entropy_q4
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    // Twin of TextAnalysis.bigramPerplexity: same add-one bigram LM
-    // (V from its own unigram CTE = Spark's inlined literal), per-doc
-    // fold over struct-sorted (c12, c1) pairs, ln over integer
-    // arguments only.
-    "text_perplexity" ->
-      s"""WITH $pplCtes
-         |SELECT doc_id, n_bigrams, round(nll, 4) AS nll_q4,
-         |       round(exp(nll), 4) AS ppl_q4
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    // Kneser–Ney with D = 3/4: every transition's log-prob decomposes
-    // as ln(4·c1·B) − ln((4·c12 − 3)·B + 3·n1f·n1p) — integer ln
-    // arguments, same fold order as the Spark aggregate.
-    "text_kn_perplexity" ->
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |bg AS (SELECT doc_id, unnest(list_transform(range(1, len(tk)),
-         |         i -> tk[i] || ' ' || tk[i+1])) AS b
-         |       FROM t WHERE len(tk) >= 2),
-         |c AS (SELECT b, CAST(count(*) AS BIGINT) AS c12 FROM bg GROUP BY b),
-         |cx AS (SELECT string_split(b, ' ')[1] AS w1,
-         |         CAST(sum(c12) AS BIGINT) AS c1, CAST(count(*) AS BIGINT) AS n1f
-         |       FROM c GROUP BY 1),
-         |ct AS (SELECT string_split(b, ' ')[2] AS w2,
-         |         CAST(count(*) AS BIGINT) AS n1p
-         |       FROM c GROUP BY 1),
-         |bt AS (SELECT CAST(count(*) AS BIGINT) AS bt FROM c),
-         |j AS (SELECT bg.doc_id, c.c12, cx.c1, cx.n1f, ct.n1p, bt.bt
-         |      FROM bg JOIN c USING (b)
-         |        JOIN cx ON cx.w1 = string_split(bg.b, ' ')[1]
-         |        JOIN ct ON ct.w2 = string_split(bg.b, ' ')[2], bt),
-         |g AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_bigrams, max(bt) AS bt,
-         |        list_sort(list({'c12': c12, 'c1': c1, 'n1f': n1f, 'n1p': n1p})) AS ps
-         |      FROM j GROUP BY doc_id),
-         |s AS (SELECT doc_id, n_bigrams,
-         |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(ps,
-         |          p -> ln(CAST(p.c1 * 4 * bt AS DOUBLE)) -
-         |               ln(CAST((p.c12 * 4 - 3) * bt + 3 * p.n1f * p.n1p AS DOUBLE)))),
-         |          (a,b) -> a + b) / n_bigrams AS nll
-         |      FROM g)
-         |SELECT doc_id, n_bigrams, round(nll, 4) AS kn_nll_q4,
-         |       round(exp(nll), 4) AS kn_ppl_q4
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    // Zipf replayed: per-source counts, rank window, quantized lns,
-    // integer sufficient statistics, one closed-form division
-    "text_zipf_fit" ->
-      s"""WITH tok AS (SELECT source, unnest($tokSql) AS w FROM documents),
-         |c AS (SELECT source, w, CAST(count(*) AS BIGINT) AS c
-         |      FROM tok GROUP BY source, w),
-         |r AS (SELECT source, c,
-         |        CAST(row_number() OVER (PARTITION BY source
-         |          ORDER BY c DESC, w) AS BIGINT) AS r
-         |      FROM c),
-         |q AS (SELECT source,
-         |        CAST(floor(ln(CAST(r AS DOUBLE)) * 10000) AS BIGINT) AS x,
-         |        CAST(floor(ln(CAST(c AS DOUBLE)) * 10000) AS BIGINT) AS y
-         |      FROM r),
-         |s AS (SELECT source, CAST(count(*) AS BIGINT) AS n_types,
-         |        CAST(sum(x) AS BIGINT) AS sx, CAST(sum(y) AS BIGINT) AS sy,
-         |        CAST(sum(x * y) AS BIGINT) AS sxy,
-         |        CAST(sum(x * x) AS BIGINT) AS sxx
-         |      FROM q GROUP BY source),
-         |f AS (SELECT source, n_types, sx, sy,
-         |        n_types * sxy - sx * sy AS num,
-         |        n_types * sxx - sx * sx AS den
-         |      FROM s)
-         |SELECT source, n_types,
-         |       round(CAST(num AS DOUBLE) / den, 4) AS slope_q4,
-         |       round((sy - CAST(num AS DOUBLE) / den * sx) / n_types / 10000, 4) AS intercept_q4
-         |FROM f WHERE den <> 0 ORDER BY source""".stripMargin,
-
-    // PMI replayed: bigram/unigram counts, exact ratio ranking
-    "text_pmi" ->
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |bg AS (SELECT unnest(list_transform(range(1, len(tk)),
-         |         i -> tk[i] || ' ' || tk[i+1])) AS b
-         |       FROM t WHERE len(tk) >= 2),
-         |c AS (SELECT b, CAST(count(*) AS BIGINT) AS cab FROM bg
-         |      GROUP BY b HAVING count(*) >= 5),
-         |u AS (SELECT w, CAST(count(*) AS BIGINT) AS c1
-         |      FROM (SELECT unnest(tk) AS w FROM t) x GROUP BY w),
-         |nn AS (SELECT CAST(coalesce(sum(c1), 0) AS BIGINT) AS n FROM u),
-         |sc AS (SELECT string_split(c.b, ' ')[1] AS w1,
-         |         string_split(c.b, ' ')[2] AS w2, c.cab,
-         |         (c.cab * nn.n * 1000000) // (a.c1 * b2.c1) AS ratio_micro,
-         |         round(ln(CAST(c.cab * nn.n AS DOUBLE)) -
-         |               ln(CAST(a.c1 * b2.c1 AS DOUBLE)), 4) AS pmi_q4
-         |       FROM c JOIN u a ON a.w = string_split(c.b, ' ')[1]
-         |              JOIN u b2 ON b2.w = string_split(c.b, ' ')[2], nn)
-         |SELECT w1, w2, cab, ratio_micro, pmi_q4 FROM sc
-         |ORDER BY ratio_micro DESC, w1, w2 LIMIT 25""".stripMargin,
-
-    // Stupid Backoff replayed: even-id count tables, odd-id trigram
-    // stream, four LEFT joins, tier CASE with (ln 5 − ln 2) backoff
-    // penalties — integer ln arguments throughout, same fold order.
-    "text_stupid_backoff" ->
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |tr AS (SELECT doc_id, tk FROM t WHERE doc_id % 2 = 0),
-         |sc AS (SELECT doc_id, tk FROM t WHERE doc_id % 2 = 1),
-         |t3 AS (SELECT g3, CAST(count(*) AS BIGINT) AS c123 FROM (
-         |        SELECT unnest(list_transform(range(1, len(tk) - 1),
-         |          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g3
-         |        FROM tr WHERE len(tk) >= 3) x GROUP BY g3),
-         |t2 AS (SELECT g2, CAST(count(*) AS BIGINT) AS c2g FROM (
-         |        SELECT unnest(list_transform(range(1, len(tk)),
-         |          i -> tk[i] || ' ' || tk[i+1])) AS g2
-         |        FROM tr WHERE len(tk) >= 2) x GROUP BY g2),
-         |t1 AS (SELECT w, CAST(count(*) AS BIGINT) AS c1 FROM (
-         |        SELECT unnest(tk) AS w FROM tr) x GROUP BY w),
-         |nn AS (SELECT CAST(sum(c1) AS BIGINT) AS n FROM t1),
-         |tg AS (SELECT doc_id, g AS tgm, string_split(g, ' ') AS ws FROM (
-         |        SELECT doc_id, unnest(list_transform(range(1, len(tk) - 1),
-         |          i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS g
-         |        FROM sc WHERE len(tk) >= 3) x),
-         |j AS (SELECT tg.doc_id,
-         |        CAST(coalesce(t3.c123, -1) AS BIGINT) AS c123,
-         |        CAST(coalesce(p12.c2g, -1) AS BIGINT) AS c12,
-         |        CAST(coalesce(p23.c2g, -1) AS BIGINT) AS c23,
-         |        CAST(coalesce(u2.c1, -1) AS BIGINT) AS c2,
-         |        CAST(coalesce(u3.c1, -1) AS BIGINT) AS c3,
-         |        nn.n
-         |      FROM tg
-         |      LEFT JOIN t3 ON t3.g3 = tg.tgm
-         |      LEFT JOIN t2 p12 ON p12.g2 = ws[1] || ' ' || ws[2]
-         |      LEFT JOIN t2 p23 ON p23.g2 = ws[2] || ' ' || ws[3]
-         |      LEFT JOIN t1 u2 ON u2.w = ws[2]
-         |      LEFT JOIN t1 u3 ON u3.w = ws[3], nn),
-         |g AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_trigrams,
-         |        CAST(sum(CASE WHEN c123 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_tri_hit,
-         |        CAST(sum(CASE WHEN c123 <= 0 AND c23 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_bi_hit,
-         |        CAST(sum(CASE WHEN c123 <= 0 AND c23 <= 0 AND c3 > 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_uni_hit,
-         |        CAST(sum(CASE WHEN c3 <= 0 THEN 1 ELSE 0 END) AS BIGINT) AS n_oov,
-         |        max(n) AS n,
-         |        list_sort(list({'c123': c123, 'c12': c12, 'c23': c23,
-         |                        'c2': c2, 'c3': c3})) AS ps
-         |      FROM j GROUP BY doc_id),
-         |s AS (SELECT doc_id, n_trigrams, n_tri_hit, n_bi_hit, n_uni_hit, n_oov,
-         |        list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(ps,
-         |          p -> CASE
-         |            WHEN p.c123 > 0 THEN ln(CAST(p.c12 AS DOUBLE)) - ln(CAST(p.c123 AS DOUBLE))
-         |            WHEN p.c23 > 0 THEN (ln(5.0) - ln(2.0)) +
-         |              (ln(CAST(p.c2 AS DOUBLE)) - ln(CAST(p.c23 AS DOUBLE)))
-         |            WHEN p.c3 > 0 THEN (ln(5.0) - ln(2.0)) * 2.0 +
-         |              (ln(CAST(n AS DOUBLE)) - ln(CAST(p.c3 AS DOUBLE)))
-         |            ELSE (ln(5.0) - ln(2.0)) * 3.0 + ln(CAST(n AS DOUBLE)) END)),
-         |          (a,b) -> a + b) / n_trigrams AS nll
-         |      FROM g)
-         |SELECT doc_id, n_trigrams, n_tri_hit, n_bi_hit, n_uni_hit, n_oov,
-         |       round(nll, 4) AS sb_nll_q4, round(exp(nll), 4) AS sb_ppl_q4
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    "text_perplexity_buckets" ->
-      s"""WITH $pplCtes,
-         |pp AS (SELECT doc_id, round(exp(nll), 4) AS ppl_q4 FROM s),
-         |sb AS (SELECT d.doc_id, d.source, pp.ppl_q4,
-         |         CAST(ntile(3) OVER (PARTITION BY d.source
-         |           ORDER BY pp.ppl_q4, d.doc_id) AS BIGINT) AS bucket
-         |       FROM pp JOIN documents d USING (doc_id))
-         |SELECT doc_id, source, ppl_q4, bucket, bucket < 3 AS keep
-         |FROM sb ORDER BY doc_id""".stripMargin,
-
-    "mm_blob_meta" ->
-      """SELECT doc_id, CAST(octet_length(CAST(text AS BLOB)) AS BIGINT) AS n_bytes,
-        |       md5(text) AS digest
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "mm_frames" ->
-      """SELECT doc_id, i AS frame_idx, md5(substr(text, CAST(i * 32 + 1 AS INTEGER), 32)) AS frame_md5
-        |FROM documents, range(0, 4) t(i)
-        |WHERE i * 32 < length(text)
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    "mm_scene_changes" ->
-      """WITH f AS (
-        |  SELECT doc_id, i AS frame_idx,
-        |         md5(substr(text, CAST(i * 32 + 1 AS INTEGER), 32)) AS frame_md5
-        |  FROM documents, range(0, 4) t(i)
-        |  WHERE i * 32 < length(text)),
-        |c AS (
-        |  SELECT doc_id, frame_idx, frame_md5,
-        |         CAST(CASE WHEN lag(frame_md5) OVER w IS NULL
-        |              OR lag(frame_md5) OVER w <> frame_md5 THEN 1 ELSE 0 END AS BIGINT) AS is_cut
-        |  FROM f WINDOW w AS (PARTITION BY doc_id ORDER BY frame_idx))
-        |SELECT doc_id, frame_idx, is_cut,
-        |       CAST(sum(is_cut) OVER (PARTITION BY doc_id ORDER BY frame_idx
-        |                              ROWS UNBOUNDED PRECEDING) - 1 AS BIGINT) AS scene_id
-        |FROM c ORDER BY doc_id, frame_idx""".stripMargin,
-
-    // Byte-histogram buckets = high nibble of each UTF-8 byte. DuckDB:
-    // hex() the blob (uppercase), bucket b's count = occurrences of hex
-    // digit b at ODD positions (2i-1 = byte i's high nibble). Exact-int
-    // count / exact-int length → bit-identical double division.
-    "mm_featurize" -> {
-      val buckets = Seq(0, 7, 15).map { b =>
-        val digit = "0123456789ABCDEF".charAt(b)
-        s"""       CAST(len(list_filter(range(1, n + 1), i -> substr(hx, 2*i - 1, 1) = '$digit')) AS DOUBLE) / n AS f$b"""
-      }.mkString(",\n")
-      s"""WITH h AS (SELECT doc_id, hex(CAST(text AS BLOB)) AS hx,
-         |             octet_length(CAST(text AS BLOB)) AS n
-         |           FROM documents WHERE doc_id < 200 AND length(text) > 0)
-         |SELECT doc_id,
-         |$buckets
-         |FROM h ORDER BY doc_id""".stripMargin
-    },
-
-    // The oracle recomputes the synthetic-blob generator's formulas
-    // analytically — a hash match proves the decoder read the actual
-    // header bytes (bmp: even ids; wav: id%4==1; png: id%8==3 with
-    // color type cycling grey/RGB/RGBA → channels 1/3/4; jpeg:
-    // id%8==7 with components cycling grey/YCbCr → channels 1/3,
-    // n_bytes 32+3·ch).
-    "mm_decode_headers" ->
-      """SELECT doc_id,
-        |       CASE WHEN doc_id % 2 = 0 THEN 'bmp'
-        |            WHEN doc_id % 4 = 1 THEN 'wav'
-        |            WHEN doc_id % 8 = 3 THEN 'png' ELSE 'jpeg' END AS format,
-        |       CASE WHEN doc_id % 2 = 0 THEN CAST(1 + doc_id % 64 AS BIGINT)
-        |            WHEN doc_id % 8 = 3 THEN CAST(1 + doc_id % 128 AS BIGINT)
-        |            WHEN doc_id % 8 = 7 THEN CAST(1 + doc_id % 96 AS BIGINT) END AS width,
-        |       CASE WHEN doc_id % 2 = 0 THEN CAST(1 + doc_id % 32 AS BIGINT)
-        |            WHEN doc_id % 8 = 3 THEN CAST(1 + doc_id % 64 AS BIGINT)
-        |            WHEN doc_id % 8 = 7 THEN CAST(1 + doc_id % 48 AS BIGINT) END AS height,
-        |       CASE WHEN doc_id % 2 = 0 THEN CAST(3 AS BIGINT)
-        |            WHEN doc_id % 4 = 1 THEN CAST(1 + (doc_id // 2) % 2 AS BIGINT)
-        |            WHEN doc_id % 8 = 3 THEN CAST(CASE (doc_id // 4) % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END AS BIGINT)
-        |            ELSE CAST(CASE (doc_id // 8) % 2 WHEN 0 THEN 1 ELSE 3 END AS BIGINT)
-        |       END AS channels,
-        |       CASE WHEN doc_id % 4 = 1 THEN CAST(8000 + (doc_id % 8) * 1000 AS BIGINT) END AS sample_rate,
-        |       CASE WHEN doc_id % 4 = 1 THEN CAST(16 AS BIGINT)
-        |            WHEN doc_id % 4 = 3 THEN CAST(8 AS BIGINT) END AS bits_per_sample,
-        |       CASE WHEN doc_id % 2 = 0 THEN CAST(54 AS BIGINT)
-        |            WHEN doc_id % 4 = 1 THEN CAST(44 AS BIGINT)
-        |            WHEN doc_id % 8 = 3 THEN CAST(33 AS BIGINT)
-        |            ELSE CAST(32 + 3 * (CASE (doc_id // 8) % 2 WHEN 0 THEN 1 ELSE 3 END) AS BIGINT)
-        |       END AS n_bytes
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Re-enumerates the generator's pixel grid: dims from doc_id
-    // parity, x over [0, w), file row r over [0, h), channel bytes
-    // B=(id+2x+3r)%256 G=(id+5x+r)%256 R=(id+x+7r)%256 A=(id+x+r)%256
-    // (A only at 32 bpp / odd ids).
-    "mm_decode_pixels" ->
-      """WITH d AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 16 ELSE 1 + doc_id % 12 END AS w,
-        |    CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 8 ELSE 1 + doc_id % 6 END AS h,
-        |    CASE WHEN doc_id % 2 = 0 THEN 3 ELSE 4 END AS ch
-        |  FROM documents),
-        |gx AS (SELECT doc_id, w, h, ch, unnest(range(0, w)) AS x FROM d),
-        |px AS (SELECT doc_id, w, h, ch, x, unnest(range(0, h)) AS r FROM gx)
-        |SELECT doc_id,
-        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |       CAST(ch AS BIGINT) AS channels,
-        |       CAST(count(*) AS BIGINT) AS n_pixels,
-        |       CAST(sum((doc_id + 2 * x + 3 * r) % 256) AS BIGINT) AS sum_b,
-        |       CAST(sum((doc_id + 5 * x + r) % 256) AS BIGINT) AS sum_g,
-        |       CAST(sum((doc_id + x + 7 * r) % 256) AS BIGINT) AS sum_r,
-        |       CAST(sum(CASE WHEN ch = 4 THEN (doc_id + x + r) % 256 ELSE 0 END) AS BIGINT) AS sum_a
-        |FROM px GROUP BY doc_id, w, h, ch ORDER BY doc_id""".stripMargin,
-
-    // NN-resize replay: the analytic source-pixel formulas evaluated
-    // at sx = (x·w)//16, file row fr = h−1−((y·h)//16) (bottom-up BMP,
-    // image orientation) — same index mapping, same positional
-    // checksum weights.
-    "mm_image_resize" ->
-      """WITH d AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 16 ELSE 1 + doc_id % 12 END AS w,
-        |    CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 8 ELSE 1 + doc_id % 6 END AS h
-        |  FROM documents),
-        |gx AS (SELECT doc_id, w, h, unnest(range(0, 16)) AS x FROM d),
-        |gy AS (SELECT doc_id, w, h, x, unnest(range(0, 16)) AS y FROM gx),
-        |ix AS (SELECT doc_id, w, h, x, y,
-        |         (x * w) // 16 AS sx, h - 1 - ((y * h) // 16) AS fr FROM gy),
-        |ch AS (SELECT doc_id, w, h, x, y,
-        |         (doc_id + 2 * sx + 3 * fr) % 256 AS b,
-        |         (doc_id + 5 * sx + fr) % 256 AS g,
-        |         (doc_id + sx + 7 * fr) % 256 AS r
-        |       FROM ix)
-        |SELECT doc_id,
-        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |       CAST(16 AS BIGINT) AS out_w, CAST(16 AS BIGINT) AS out_h,
-        |       CAST(sum(r) AS BIGINT) AS sum_r,
-        |       CAST(sum(g) AS BIGINT) AS sum_g,
-        |       CAST(sum(b) AS BIGINT) AS sum_b,
-        |       CAST(sum((y * 16 + x + 1) * (b + 256 * g + 65536 * r)) AS BIGINT) AS checksum
-        |FROM ch GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin,
-
-    // record replay: warcinfo + response geometry/sums from the
-    // analytic payload rules — identical for plain and gzip transport
-    // (the transport must be invisible, which the parity of doc_id
-    // deliberately exercises).
-    "mm_warc_records" ->
-      """WITH d AS (SELECT doc_id, 1 + doc_id % 3 AS nresp FROM documents),
-        |info AS (SELECT doc_id, 0 AS rec_idx, 'warcinfo' AS rec_type, '' AS uri,
-        |           10 + doc_id % 5 AS len, 0 AS base FROM d),
-        |resp AS (SELECT doc_id, 1 + r AS rec_idx, 'response' AS rec_type,
-        |           'https://ex.com/' || CAST(doc_id AS VARCHAR) || '/' ||
-        |             CAST(r AS VARCHAR) AS uri,
-        |           20 + (doc_id + 3 * r) % 30 AS len,
-        |           11 * (r + 1) AS base
-        |         FROM (SELECT doc_id, unnest(range(0, nresp)) AS r FROM d)),
-        |recs AS (SELECT * FROM info UNION ALL SELECT * FROM resp),
-        |bj AS (SELECT doc_id, rec_idx, rec_type, uri, len, base,
-        |         unnest(range(0, len)) AS j FROM recs)
-        |SELECT doc_id, CAST(rec_idx AS BIGINT) AS rec_idx, rec_type, uri,
-        |  CAST(len AS BIGINT) AS n_bytes,
-        |  CAST(sum((doc_id + base + j) % 256) AS BIGINT) AS sum_bytes
-        |FROM bj GROUP BY doc_id, rec_idx, rec_type, uri, len, base
-        |ORDER BY doc_id, rec_idx""".stripMargin,
-
-    // Byte-exact replay: the page is rebuilt verbatim in SQL and
-    // md5-compared — the only way a row matches is if the HTTP
-    // envelope parse, the Content-Encoding decode (identity/gzip/
-    // zlib-deflate) and the transport gunzip all returned every byte.
-    "mm_warc_http" ->
-      s"""WITH $webPageCtesSql
-         |SELECT doc_id, CAST(1 AS BIGINT) AS rec_idx,
-         |  'https://ex.com/web/' || CAST(doc_id AS VARCHAR) AS uri,
-         |  CAST(200 AS BIGINT) AS status, 'text/html' AS content_type,
-         |  (['identity','gzip','deflate'])[CAST(doc_id % 3 AS INTEGER) + 1]
-         |    AS content_encoding,
-         |  CAST(length(html) AS BIGINT) AS n_body, md5(html) AS body_md5
-         |FROM wpage ORDER BY doc_id, rec_idx""".stripMargin,
-
-    // table replay: the MPEG1 Layer III bitrate/samplerate tables as
-    // literal lists, frame length by the 144000·kbps // hz rule.
-    "mm_audio_mp3_meta" ->
-      """WITH t AS (SELECT doc_id,
-        |    ([32,40,48,56,64,80,96,112,128,160,192,224,256,320])
-        |      [CAST(1 + doc_id % 14 AS INTEGER)] AS kbps,
-        |    ([44100,48000,32000])[CAST(doc_id % 3 AS INTEGER) + 1] AS hz
-        |  FROM documents)
-        |SELECT doc_id,
-        |  'Track ' || CAST(doc_id % 100 AS VARCHAR) AS title,
-        |  'Artist ' || CAST(doc_id % 10 AS VARCHAR) AS artist,
-        |  CAST(kbps AS BIGINT) AS bitrate_kbps,
-        |  CAST(hz AS BIGINT) AS sample_rate,
-        |  CAST(144000 * kbps // hz AS BIGINT) AS frame_bytes
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    // Fixture replay: object census 4 + 2·pages (catalog, page tree,
-    // font, info + page/content pairs), analytic producer.
-    "mm_pdf_meta" ->
-      """SELECT doc_id, '1.4' AS version,
-        |  CAST(1 + doc_id % 4 AS BIGINT) AS n_pages,
-        |  CAST(4 + 2 * (1 + doc_id % 4) AS BIGINT) AS n_objects,
-        |  'graft ' || CAST(doc_id % 10 AS VARCHAR) AS producer
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // Text replay from the analytic chunk rules — the filter
-    // (FlateDecode on odd ids) and the escape family never appear in
-    // the oracle, so a hash match proves both are transparent.
-    "mm_pdf_text" ->
-      """WITH d AS (SELECT doc_id, 1 + doc_id % 4 AS np FROM documents),
-        |pg AS (SELECT doc_id, unnest(range(0, np)) AS p FROM d),
-        |t AS (SELECT doc_id, p,
-        |    'Doc ' || CAST(doc_id AS VARCHAR) || ' page ' || CAST(p AS VARCHAR) ||
-        |    ' body ' || CAST((doc_id * 3 + p) % 50 AS VARCHAR) || ' and ' ||
-        |    CASE WHEN doc_id % 3 = 0
-        |         THEN 'tail (' || CAST((doc_id + p) % 7 AS VARCHAR) || ') \ done.'
-        |         ELSE 'tail ' || CAST((doc_id + p) % 7 AS VARCHAR) || ' done.' END
-        |      AS text
-        |  FROM pg)
-        |SELECT doc_id, CAST(p AS BIGINT) AS page, text,
-        |  CAST(length(text) AS BIGINT) AS n_chars
-        |FROM t ORDER BY doc_id, page""".stripMargin,
-
-    // The update's analytic values for page 0, the ORIGINAL rule for
-    // the rest — only a correct newest-wins chain walk matches both.
-    "mm_pdf_incremental" ->
-      """WITH d AS (SELECT doc_id, 1 + doc_id % 4 AS np FROM documents),
-        |pg AS (SELECT doc_id, np, unnest(range(0, np)) AS p FROM d),
-        |t AS (SELECT doc_id, np, p,
-        |    CASE WHEN p = 0
-        |      THEN 'UPDATED page 0 of doc ' || CAST(doc_id AS VARCHAR) ||
-        |           ' rev ' || CAST(doc_id % 5 AS VARCHAR) || ' .'
-        |      ELSE 'Doc ' || CAST(doc_id AS VARCHAR) || ' page ' ||
-        |           CAST(p AS VARCHAR) ||
-        |           ' body ' || CAST((doc_id * 3 + p) % 50 AS VARCHAR) || ' and ' ||
-        |           CASE WHEN doc_id % 3 = 0
-        |                THEN 'tail (' || CAST((doc_id + p) % 7 AS VARCHAR) ||
-        |                     ') \ done.'
-        |                ELSE 'tail ' || CAST((doc_id + p) % 7 AS VARCHAR) ||
-        |                     ' done.' END END AS text
-        |  FROM pg)
-        |SELECT doc_id, CAST(np AS BIGINT) AS n_pages,
-        |  CAST(4 + 2 * np AS BIGINT) AS n_objects,
-        |  'graft-v2 ' || CAST(doc_id % 10 AS VARCHAR) AS producer,
-        |  CAST(p AS BIGINT) AS page, text
-        |FROM t ORDER BY doc_id, page""".stripMargin,
-
-    // Frame-grain replay: every frame's bitrate/padding from the
-    // analytic rule, mode via count-then-rank (ties to the LOWER
-    // bitrate), duration by the 1152-samples rule — integer-exact.
-    "mm_audio_mp3_frames" ->
-      """WITH d AS (SELECT doc_id, 3 + doc_id % 6 AS n,
-        |    ([44100,48000,32000])[CAST(doc_id % 3 AS INTEGER) + 1] AS hz
-        |  FROM documents),
-        |fr AS (SELECT doc_id, n, hz, f,
-        |    ([32,40,48,56,64,80,96,112,128,160,192,224,256,320])[
-        |      CAST(CASE WHEN doc_id % 2 = 0 THEN 1 + doc_id % 14
-        |                ELSE 1 + (doc_id + 3 * f) % 14 END AS INTEGER)] AS kbps,
-        |    (doc_id + f) % 2 AS pad
-        |  FROM (SELECT doc_id, n, hz, unnest(range(0, n)) AS f FROM d)),
-        |m AS (SELECT doc_id, kbps, count(*) AS c FROM fr GROUP BY doc_id, kbps),
-        |md AS (SELECT doc_id, kbps AS kmode,
-        |         row_number() OVER (PARTITION BY doc_id
-        |                            ORDER BY c DESC, kbps ASC) AS rn FROM m),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_frames,
-        |    CAST(min(hz) AS BIGINT) AS sample_rate,
-        |    CAST(min(kbps) AS BIGINT) AS kbps_min,
-        |    CAST(max(kbps) AS BIGINT) AS kbps_max,
-        |    CAST(sum(pad) AS BIGINT) AS n_padded,
-        |    CAST(sum(144000 * kbps // hz + pad) AS BIGINT) AS n_audio_bytes
-        |  FROM fr GROUP BY doc_id)
-        |SELECT a.doc_id AS doc_id, n_frames, sample_rate,
-        |  CAST(1152000 * n_frames // sample_rate AS BIGINT) AS duration_ms,
-        |  kbps_min, kbps_max, CAST(kmode AS BIGINT) AS kbps_mode,
-        |  CAST(CASE WHEN kbps_min <> kbps_max THEN 1 ELSE 0 END AS BIGINT) AS is_vbr,
-        |  n_padded, n_audio_bytes
-        |FROM agg a JOIN md ON md.doc_id = a.doc_id AND md.rn = 1
-        |ORDER BY doc_id""".stripMargin,
-
-    // inventory replay: names/methods from the entry-parity rule,
-    // sizes and payload byte-sums from the analytic formula — the
-    // CRC verification itself is decoder-side (corruption refusals
-    // spec-pinned; a wrong CRC drops the whole archive, so every
-    // emitted row IS a verified decode).
-    "mm_zip_entries" ->
-      """WITH d AS (SELECT doc_id, 1 + doc_id % 4 AS n FROM documents),
-        |en AS (SELECT doc_id, unnest(range(0, n)) AS e FROM d),
-        |sz AS (SELECT doc_id, e, 10 + (doc_id + e) % 40 AS usize FROM en),
-        |bj AS (SELECT doc_id, e, usize, unnest(range(0, usize)) AS j FROM sz)
-        |SELECT doc_id, CAST(e AS BIGINT) AS entry_idx,
-        |  'doc_' || CAST(doc_id AS VARCHAR) || '_' || CAST(e AS VARCHAR) ||
-        |    CASE WHEN e % 2 = 0 THEN '.txt' ELSE '.json' END AS name,
-        |  CAST(CASE WHEN e % 2 = 0 THEN 0 ELSE 8 END AS BIGINT) AS method,
-        |  CAST(usize AS BIGINT) AS n_bytes,
-        |  CAST(sum((doc_id + 7 * e + j) % 256) AS BIGINT) AS sum_bytes
-        |FROM bj GROUP BY doc_id, e, usize ORDER BY doc_id, entry_idx""".stripMargin,
-
-    "mm_decode_tiff" ->
-      """WITH d AS (SELECT doc_id, 1 + doc_id % 12 AS w, 1 + doc_id % 8 AS h,
-        |    CASE WHEN doc_id % 3 = 0 THEN 1 ELSE 3 END AS ch FROM documents),
-        |gx AS (SELECT doc_id, w, h, ch, unnest(range(0, w)) AS x FROM d),
-        |px AS (SELECT doc_id, w, h, ch, x, unnest(range(0, h)) AS r FROM gx),
-        |ks AS (SELECT doc_id, w, h, ch, x, r, unnest(range(0, ch)) AS k FROM px),
-        |sv AS (SELECT doc_id, w, h, ch, k,
-        |         (doc_id + 2 * x + 3 * r + 5 * k) % 256 AS v FROM ks)
-        |SELECT doc_id,
-        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |       CAST(ch AS BIGINT) AS channels,
-        |       CAST(w * h AS BIGINT) AS n_pixels,
-        |       CAST(sum(CASE WHEN k = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
-        |       CAST(sum(CASE WHEN k = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-        |       CAST(sum(CASE WHEN k = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b
-        |FROM sv GROUP BY doc_id, w, h, ch ORDER BY doc_id""".stripMargin,
-
-    // Same analytic pixel replay — compression/predictor are
-    // decoder-side concerns the oracle must be blind to: a row can
-    // only hash-match if PackBits/LZW/predictor reconstructed every
-    // sample the uncompressed rule prescribes.
-    "mm_decode_tiff_compressed" ->
-      """WITH d AS (SELECT doc_id, 1 + doc_id % 12 AS w, 1 + doc_id % 8 AS h,
-        |    CASE WHEN doc_id % 5 = 0 THEN 1 ELSE 3 END AS ch FROM documents),
-        |gx AS (SELECT doc_id, w, h, ch, unnest(range(0, w)) AS x FROM d),
-        |px AS (SELECT doc_id, w, h, ch, x, unnest(range(0, h)) AS r FROM gx),
-        |ks AS (SELECT doc_id, w, h, ch, x, r, unnest(range(0, ch)) AS k FROM px),
-        |sv AS (SELECT doc_id, w, h, ch, k,
-        |         (doc_id + 2 * x + 3 * r + 5 * k) % 256 AS v FROM ks)
-        |SELECT doc_id,
-        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |       CAST(ch AS BIGINT) AS channels,
-        |       CAST(w * h AS BIGINT) AS n_pixels,
-        |       CAST(sum(CASE WHEN k = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
-        |       CAST(sum(CASE WHEN k = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-        |       CAST(sum(CASE WHEN k = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b
-        |FROM sv GROUP BY doc_id, w, h, ch ORDER BY doc_id""".stripMargin,
-
-    "mm_decode_png16" ->
-      """WITH d AS (SELECT doc_id,
-        |    1 + doc_id % 10 AS w,
-        |    1 + doc_id % 7 AS h,
-        |    CASE doc_id % 3 WHEN 0 THEN 1 WHEN 1 THEN 3 ELSE 4 END AS ch
-        |  FROM documents),
-        |gx AS (SELECT doc_id, w, h, ch, unnest(range(0, w)) AS x FROM d),
-        |px AS (SELECT doc_id, w, h, ch, x, unnest(range(0, h)) AS r FROM gx),
-        |ks AS (SELECT doc_id, w, h, ch, x, r, unnest(range(0, ch)) AS k FROM px),
-        |sv AS (SELECT doc_id, w, h, ch, k,
-        |         (doc_id * 131 + 257 * x + 509 * r + 769 * k) % 65536 AS v FROM ks)
-        |SELECT doc_id,
-        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |       CAST(ch AS BIGINT) AS channels,
-        |       CAST(w * h AS BIGINT) AS n_pixels,
-        |       CAST(sum(CASE WHEN k = 0 THEN v ELSE 0 END) AS BIGINT) AS sum_r,
-        |       CAST(sum(CASE WHEN k = 1 THEN v ELSE 0 END) AS BIGINT) AS sum_g,
-        |       CAST(sum(CASE WHEN k = 2 THEN v ELSE 0 END) AS BIGINT) AS sum_b,
-        |       CAST(sum(CASE WHEN k = 3 THEN v ELSE 0 END) AS BIGINT) AS sum_a
-        |FROM sv GROUP BY doc_id, w, h, ch ORDER BY doc_id""".stripMargin,
-
-    // frame-walk replay: geometry from the analytic sub-rectangle
-    // rule, sums by substituting the palette formula into each
-    // frame's LOCAL index grid, delays from the GCE formula.
-    "mm_gif_frames" ->
-      """WITH d AS (SELECT doc_id, 2 + doc_id % 9 AS cw, 2 + doc_id % 6 AS chh,
-        |             1 + doc_id % 4 AS nf FROM documents),
-        |fr AS (SELECT doc_id, cw, chh, unnest(range(0, nf)) AS f FROM d),
-        |geo AS (SELECT doc_id, cw, chh, f,
-        |         CASE WHEN f = 0 THEN cw ELSE 1 + (doc_id + f) % cw END AS w,
-        |         CASE WHEN f = 0 THEN chh ELSE 1 + (doc_id + 2 * f) % chh END AS h
-        |       FROM fr),
-        |geo2 AS (SELECT doc_id, cw, chh, f, w, h,
-        |          CASE WHEN f = 0 THEN 0 ELSE (doc_id + 3 * f) % (cw - w + 1) END AS x0,
-        |          CASE WHEN f = 0 THEN 0 ELSE (doc_id + 5 * f) % (chh - h + 1) END AS y0
-        |        FROM geo),
-        |gx AS (SELECT doc_id, cw, chh, f, w, h, x0, y0, unnest(range(0, w)) AS x FROM geo2),
-        |px AS (SELECT doc_id, cw, chh, f, w, h, x0, y0, x, unnest(range(0, h)) AS r FROM gx),
-        |pj AS (SELECT doc_id, cw, chh, f, w, h, x0, y0,
-        |         (doc_id + x + 3 * r + 5 * f) % 16 AS j FROM px)
-        |SELECT doc_id,
-        |  CAST(cw AS BIGINT) AS canvas_w, CAST(chh AS BIGINT) AS canvas_h,
-        |  CAST(f AS BIGINT) AS frame_idx,
-        |  CAST(x0 AS BIGINT) AS x, CAST(y0 AS BIGINT) AS y,
-        |  CAST(w AS BIGINT) AS w, CAST(h AS BIGINT) AS h,
-        |  CAST(3 + (doc_id + 7 * f) % 50 AS BIGINT) AS delay_cs,
-        |  CAST(count(*) AS BIGINT) AS n_pixels,
-        |  CAST(sum((doc_id + 3 * j) % 256) AS BIGINT) AS sum_r,
-        |  CAST(sum((doc_id + 5 * j) % 256) AS BIGINT) AS sum_g,
-        |  CAST(sum((doc_id + 7 * j) % 256) AS BIGINT) AS sum_b
-        |FROM pj GROUP BY doc_id, cw, chh, f, w, h, x0, y0
-        |ORDER BY doc_id, frame_idx""".stripMargin,
-
-    "mm_decode_png" -> pngDecodeOracle,
-
-    // ADAM7 must be invisible: SAME oracle (the sequential pixel
-    // grid), so the hash match proves the seven-pass de-interlace
-    // reads back exactly the pixels the sequential encoding carries.
-    "mm_decode_png_interlaced" -> pngDecodeOracle,
-
-    // the id-class arithmetic of the mixed-blob fixture grouped per
-    // format (byte sizes are the analytic header-only blob lengths).
-    "corpus_modality_mix" ->
-      """WITH f AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 2 = 0 THEN 'bmp' WHEN doc_id % 4 = 1 THEN 'wav'
-        |         WHEN doc_id % 8 = 3 THEN 'png' ELSE 'jpeg' END AS format,
-        |    CASE WHEN doc_id % 2 = 0 THEN 54 WHEN doc_id % 4 = 1 THEN 44
-        |         WHEN doc_id % 8 = 3 THEN 33
-        |         ELSE 32 + 3 * (CASE (doc_id // 8) % 2 WHEN 0 THEN 1 ELSE 3 END)
-        |    END AS nb
-        |  FROM documents),
-        |t AS (SELECT CAST(count(*) AS BIGINT) AS n FROM f)
-        |SELECT f.format, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(sum(f.nb) AS BIGINT) AS total_bytes,
-        |  (CAST(count(*) AS BIGINT) * 1000) // t.n AS share_permille
-        |FROM f CROSS JOIN t GROUP BY f.format, t.n
-        |ORDER BY f.format""".stripMargin,
-
-    // the box tree's encoded values recomputed analytically — a hash
-    // match proves the walk read every offset back (sizes, nesting,
-    // 16.16 dims, the truncating duration→ms rule).
-    // upright-scene aHash with NO orientation term: cell mean =
-    // 2·DC+128 exactly (flat blocks, quantizer 16), the 63rd bit via
-    // the signed-min trick (1<<63 overflows BIGINT).
-    "mm_image_ahash_oriented" ->
-      """WITH rr AS (SELECT doc_id, unnest(range(0, 8)) AS r FROM documents),
-        |cells AS (SELECT doc_id, r, unnest(range(0, 8)) AS c FROM rr),
-        |m AS (SELECT doc_id, r, c,
-        |        2 * ((doc_id + 3 * c + 5 * r) % 121 - 60) + 128 AS m FROM cells),
-        |gm AS (SELECT doc_id, CAST(sum(m) // 64 AS BIGINT) AS gmean
-        |       FROM m GROUP BY doc_id),
-        |hb AS (SELECT m.doc_id, r * 8 + c AS cell,
-        |         CASE WHEN m.m > gm.gmean THEN 1 ELSE 0 END AS bit
-        |       FROM m JOIN gm ON gm.doc_id = m.doc_id),
-        |ah AS (SELECT doc_id,
-        |         CAST(sum(CASE WHEN cell < 63
-        |                       THEN bit * (CAST(1 AS BIGINT) << CAST(cell AS INTEGER))
-        |                       ELSE 0 END)
-        |           + sum(CASE WHEN cell = 63 AND bit = 1
-        |                      THEN -9223372036854775808 ELSE 0 END) AS BIGINT) AS ahash
-        |       FROM hb GROUP BY doc_id)
-        |SELECT doc_id, CAST(1 + doc_id % 8 AS BIGINT) AS orientation, ahash
-        |FROM ah ORDER BY doc_id""".stripMargin,
-
-    "mm_exif" ->
-      """SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 1 THEN 'MM' ELSE 'II' END AS endian,
-        |  'CAM-' || CAST(doc_id % 10 AS VARCHAR) AS make,
-        |  CAST(1 + doc_id % 8 AS BIGINT) AS orientation,
-        |  CAST(16 * (1 + doc_id % 80) AS BIGINT) AS pixel_x,
-        |  CAST(16 * (1 + doc_id % 45) AS BIGINT) AS pixel_y
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    "mm_video_meta" ->
-      """WITH d AS (SELECT doc_id,
-        |    CASE WHEN doc_id % 2 = 0 THEN 'isom' ELSE 'mp42' END AS brand,
-        |    600 * (1 + doc_id % 5) AS ts,
-        |    600 + (doc_id * 7) % 100000 AS du,
-        |    CASE WHEN doc_id % 2 = 0 THEN 'avc1' ELSE 'hvc1' END AS video_codec,
-        |    16 * (1 + doc_id % 80) AS w,
-        |    16 * (1 + doc_id % 45) AS h,
-        |    CASE WHEN doc_id % 3 = 0 THEN 0 ELSE 1 END AS na
-        |  FROM documents)
-        |SELECT doc_id, brand, CAST(ts AS BIGINT) AS timescale,
-        |  CAST(du * 1000 // ts AS BIGINT) AS duration_ms,
-        |  CAST(1 + na AS BIGINT) AS n_tracks, CAST(1 AS BIGINT) AS n_video,
-        |  CAST(na AS BIGINT) AS n_audio, video_codec,
-        |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    // the exact G.711 expansion rules in SQL: µ-law u = 255−b,
-    // ((man·8+132)·2^exp)−132, sign from u≥128 (negative); A-law
-    // a = b XOR 85, segment-scaled mantissa, sign from a≥128 (POSITIVE
-    // — A-law's inverted sign convention).
-    "mm_audio_g711" ->
-      """WITH d AS (SELECT doc_id, 48 + doc_id % 48 AS n FROM documents),
-        |sj AS (SELECT doc_id, n, unnest(range(0, n)) AS j FROM d),
-        |bt AS (SELECT doc_id, n, (doc_id * 29 + j * 23) % 256 AS b FROM sj),
-        |sm AS (SELECT doc_id, n,
-        |  CASE WHEN doc_id % 2 = 0 THEN
-        |    (CASE WHEN (255 - b) >= 128 THEN -1 ELSE 1 END) *
-        |      ((((255 - b) % 16) * 8 + 132) * (1 << (((255 - b) // 16) % 8)) - 132)
-        |  ELSE
-        |    (CASE WHEN xor(b, 85) >= 128 THEN 1 ELSE -1 END) *
-        |      (CASE WHEN (xor(b, 85) // 16) % 8 = 0
-        |            THEN (xor(b, 85) % 16) * 16 + 8
-        |            ELSE ((xor(b, 85) % 16) * 16 + 264)
-        |                   * (1 << (((xor(b, 85) // 16) % 8) - 1)) END)
-        |  END AS s
-        |FROM bt)
-        |SELECT doc_id,
-        |  CASE WHEN doc_id % 2 = 0 THEN 'ulaw' ELSE 'alaw' END AS fmt,
-        |  CAST(max(n) AS BIGINT) AS n_samples,
-        |  CAST(max(abs(s)) AS BIGINT) AS peak,
-        |  CAST(sum(s) AS BIGINT) AS sum_samples,
-        |  CAST(sum(s * s) // max(n) AS BIGINT) AS energy
-        |FROM sm GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // router replay: format + payload grain per id class, verified ≡
-    // counted (every fixture parses — the refusal paths are the
-    // specs' job; here the hash pins that NOTHING silently dropped).
-    "corpus_modality_mix2" ->
-      """WITH u AS (SELECT doc_id,
-        |  CASE doc_id % 8
-        |    WHEN 0 THEN 'tiff' WHEN 1 THEN 'warc' WHEN 2 THEN 'zip'
-        |    WHEN 3 THEN 'mp3' WHEN 4 THEN 'adpcm' WHEN 5 THEN 'gif'
-        |    WHEN 6 THEN 'jpeg' ELSE 'png' END AS format,
-        |  CASE doc_id % 8
-        |    WHEN 0 THEN (1 + doc_id % 12) * (1 + doc_id % 8)
-        |    WHEN 1 THEN 2 + doc_id % 3
-        |    WHEN 2 THEN 1 + doc_id % 4
-        |    WHEN 3 THEN 1
-        |    WHEN 4 THEN (1 + doc_id % 3) * (1 + 2 * (16 + doc_id % 24))
-        |    WHEN 5 THEN 1 + doc_id % 4
-        |    WHEN 6 THEN CASE doc_id % 3
-        |      WHEN 0 THEN (1 + doc_id % 21) * (1 + doc_id % 13)
-        |      WHEN 1 THEN (1 + doc_id % 19) * (1 + doc_id % 11)
-        |      ELSE (1 + doc_id % 23) * (1 + doc_id % 17) END
-        |    ELSE (1 + doc_id % 10) * (1 + doc_id % 7) END AS units
-        |  FROM documents)
-        |SELECT format, CAST(count(*) AS BIGINT) AS n_docs,
-        |  CAST(count(*) AS BIGINT) AS n_verified,
-        |  CAST(sum(units) AS BIGINT) AS units_sum
-        |FROM u GROUP BY format ORDER BY format""".stripMargin,
-
-    "mm_audio_flac_meta" ->
-      """SELECT doc_id,
-        |  CAST(8000 + (doc_id * 37) % 90000 AS BIGINT) AS sample_rate,
-        |  CAST(1 + doc_id % 8 AS BIGINT) AS channels,
-        |  CAST(16 + doc_id % 9 AS BIGINT) AS bits,
-        |  CAST((doc_id * 1009) % 1073741824 AS BIGINT) AS total_samples
-        |FROM documents ORDER BY doc_id""".stripMargin,
-
-    // RLE replay: the analytic palette substituted into the period-3
-    // index grid — encoded/absolute row parity is an ENCODING choice
-    // the oracle never sees, so the hash match proves both decode
-    // paths and the escape walk reconstruct the same grid.
-    "mm_decode_bmp_rle" ->
-      """WITH d AS (SELECT doc_id, 1 + doc_id % 14 AS w, 1 + doc_id % 9 AS h
-        |           FROM documents),
-        |gx AS (SELECT doc_id, w, h, unnest(range(0, w)) AS x FROM d),
-        |px AS (SELECT doc_id, w, h, x, unnest(range(0, h)) AS fr FROM gx),
-        |pj AS (SELECT doc_id, w, h, (doc_id + x // 3 + 3 * fr) % 16 AS j FROM px)
-        |SELECT doc_id,
-        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |       CAST(3 AS BIGINT) AS channels,
-        |       CAST(count(*) AS BIGINT) AS n_pixels,
-        |       CAST(sum((doc_id + 3 * j) % 256) AS BIGINT) AS sum_r,
-        |       CAST(sum((doc_id + 5 * j) % 256) AS BIGINT) AS sum_g,
-        |       CAST(sum((doc_id + 7 * j) % 256) AS BIGINT) AS sum_b,
-        |       CAST(0 AS BIGINT) AS sum_a
-        |FROM pj GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin,
-
-    "mm_audio_pcm24" ->
-      """WITH d AS (SELECT doc_id, 40 + doc_id % 40 AS n FROM documents),
-        |sj AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM d),
-        |sm AS (SELECT doc_id, n,
-        |         (doc_id * 9973 + i * 5501) % 16777216 - 8388608 AS s FROM sj)
-        |SELECT doc_id, CAST(max(n) AS BIGINT) AS n_samples,
-        |  CAST(max(abs(s)) AS BIGINT) AS peak,
-        |  CAST(sum(s) AS BIGINT) AS sum_samples,
-        |  CAST(sum(s * s) // max(n) AS BIGINT) AS energy
-        |FROM sm GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // The ENTIRE IMA ADPCM decoder in SQL: a recursive CTE carries
-    // (predictor, step index, running sum/peak/energy) through every
-    // nibble of every block — diff = step>>3 (+step>>2/+step>>1/+step
-    // per mantissa bit) as floor divisions, both clamps as
-    // GREATEST/LEAST, the step table as a literal list. Terminal rows
-    // (j = nnib) aggregate per doc; the last block's terminal state
-    // is the final_predictor/final_index pin.
-    "mm_audio_adpcm" ->
-      """WITH RECURSIVE d AS (
-        |  SELECT doc_id, 16 + doc_id % 24 AS nbytes, 1 + doc_id % 3 AS nblk FROM documents),
-        |blk AS (
-        |  SELECT doc_id, nbytes, unnest(range(0, nblk)) AS b FROM d),
-        |seed AS (
-        |  SELECT doc_id, b, 2 * nbytes AS nnib,
-        |    CAST((doc_id * 211 + b * 97) % 4096 - 2048 AS BIGINT) AS pred,
-        |    CAST((doc_id + 31 * b) % 89 AS BIGINT) AS idx
-        |  FROM blk),
-        |dec AS (
-        |  SELECT doc_id, b, nnib, 0 AS j, pred, idx,
-        |    CAST(pred AS BIGINT) AS s_sum, CAST(abs(pred) AS BIGINT) AS s_peak,
-        |    CAST(pred * pred AS BIGINT) AS s_en
-        |  FROM seed
-        |  UNION ALL
-        |  SELECT doc_id, b, nnib, j + 1, np, ni,
-        |    s_sum + np, GREATEST(s_peak, abs(np)), s_en + np * np
-        |  FROM (
-        |    SELECT doc_id, b, nnib, j, s_sum, s_peak, s_en,
-        |      GREATEST(-32768, LEAST(32767,
-        |        pred + CASE WHEN nib >= 8 THEN -diff ELSE diff END)) AS np,
-        |      GREATEST(0, LEAST(88, idx + ([-1,-1,-1,-1,2,4,6,8])[(nib % 8) + 1])) AS ni
-        |    FROM (
-        |      SELECT *, (step // 8)
-        |        + CASE WHEN nib % 2 = 1 THEN step // 4 ELSE 0 END
-        |        + CASE WHEN (nib // 2) % 2 = 1 THEN step // 2 ELSE 0 END
-        |        + CASE WHEN (nib // 4) % 2 = 1 THEN step ELSE 0 END AS diff
-        |      FROM (
-        |        SELECT doc_id, b, nnib, j, pred, idx, s_sum, s_peak, s_en,
-        |          (doc_id * 7 + b * 11 + j * 5) % 16 AS nib,
-        |          ([7,8,9,10,11,12,13,14,16,17,19,21,23,25,28,31,34,37,41,45,
-        |            50,55,60,66,73,80,88,97,107,118,130,143,157,173,190,209,
-        |            230,253,279,307,337,371,408,449,494,544,598,658,724,796,
-        |            876,963,1060,1166,1282,1411,1552,1707,1878,2066,2272,2499,
-        |            2749,3024,3327,3660,4026,4428,4871,5358,5894,6484,7132,
-        |            7845,8630,9493,10442,11487,12635,13899,15289,16818,18500,
-        |            20350,22385,24623,27086,29794,32767])[idx + 1] AS step
-        |        FROM dec WHERE j < nnib)))
-        |),
-        |fin AS (SELECT * FROM dec WHERE j = nnib),
-        |agg AS (
-        |  SELECT doc_id,
-        |    CAST(count(*) AS BIGINT) AS n_blocks,
-        |    CAST(sum(nnib + 1) AS BIGINT) AS n_samples,
-        |    CAST(max(s_peak) AS BIGINT) AS peak,
-        |    CAST(sum(s_sum) AS BIGINT) AS sum_samples,
-        |    CAST(sum(s_en) // sum(nnib + 1) AS BIGINT) AS energy
-        |  FROM fin GROUP BY doc_id),
-        |lastb AS (
-        |  SELECT f.doc_id, CAST(f.pred AS BIGINT) AS final_predictor,
-        |         CAST(f.idx AS BIGINT) AS final_index
-        |  FROM fin f JOIN (SELECT doc_id, max(b) AS mb FROM fin GROUP BY doc_id) m
-        |    ON m.doc_id = f.doc_id AND m.mb = f.b)
-        |SELECT agg.doc_id, agg.n_blocks, agg.n_samples, agg.peak, agg.sum_samples,
-        |       agg.energy, lastb.final_predictor, lastb.final_index
-        |FROM agg JOIN lastb ON lastb.doc_id = agg.doc_id
-        |ORDER BY agg.doc_id""".stripMargin,
-
-    "mm_audio_channels" ->
-      """WITH d AS (SELECT doc_id, 32 + doc_id % 32 AS n FROM documents),
-        |ch AS (SELECT doc_id, n, unnest([0, 1]) AS channel FROM d),
-        |sj AS (SELECT doc_id, n, channel, unnest(range(0, n)) AS j FROM ch),
-        |sv AS (SELECT doc_id, channel, j,
-        |         (doc_id * 37 + (2 * j + channel) * 13) % 2048 - 1024 AS s FROM sj),
-        |sl AS (SELECT doc_id, channel, j, s,
-        |         lag(s) OVER (PARTITION BY doc_id, channel ORDER BY j) AS prev FROM sv)
-        |SELECT doc_id, CAST(channel AS BIGINT) AS channel,
-        |       CAST(count(*) AS BIGINT) AS n_samples,
-        |       CAST(sum(s * s) // count(*) AS BIGINT) AS energy,
-        |       CAST(max(abs(s)) AS BIGINT) AS peak,
-        |       CAST(coalesce(sum(CASE WHEN prev IS NOT NULL AND prev * s < 0
-        |                             THEN 1 ELSE 0 END), 0) AS BIGINT) AS zero_crossings
-        |FROM sl GROUP BY doc_id, channel ORDER BY doc_id, channel""".stripMargin,
-
-    // Analytic-sample replay of pcm16Autocorr: products joined on
-    // (doc, i, i+lag); floor division for the (possibly negative)
-    // permille score matches Math.floorDiv.
-    "mm_audio_pitch" ->
-      """WITH dm AS (SELECT doc_id, 64 + doc_id % 64 AS n FROM documents),
-        |si AS (SELECT doc_id, n, unnest(range(0, n)) AS i FROM dm),
-        |sm AS (SELECT doc_id, n, i,
-        |         (doc_id * 31 + i * 17) % 2048 - 1024 AS s FROM si),
-        |en AS (SELECT doc_id, CAST(max(n) AS BIGINT) AS n_samples,
-        |         CAST(sum(s * s) AS BIGINT) AS energy FROM sm GROUP BY doc_id),
-        |lg AS (SELECT doc_id, unnest(range(2, 17)) AS lag FROM dm),
-        |ac AS (SELECT a.doc_id, l.lag, CAST(sum(a.s * b.s) AS BIGINT) AS ac
-        |       FROM lg l
-        |       JOIN sm a ON a.doc_id = l.doc_id
-        |       JOIN sm b ON b.doc_id = l.doc_id AND b.i = a.i + l.lag
-        |       GROUP BY a.doc_id, l.lag),
-        |best AS (SELECT doc_id, lag, ac FROM (
-        |           SELECT doc_id, lag, ac,
-        |             row_number() OVER (PARTITION BY doc_id ORDER BY ac DESC, lag) AS rn
-        |           FROM ac) x WHERE rn = 1)
-        |SELECT en.doc_id, en.n_samples, en.energy,
-        |       CAST(best.lag AS BIGINT) AS best_lag, best.ac AS ac_best,
-        |       (best.ac * 1000) // en.energy AS periodicity_permille
-        |FROM en JOIN best ON best.doc_id = en.doc_id
-        |ORDER BY en.doc_id""".stripMargin,
-
-    "mm_decode_png_palette" ->
-      """WITH d AS (SELECT doc_id, 1 + doc_id % 11 AS w, 1 + doc_id % 7 AS h FROM documents),
-        |gx AS (SELECT doc_id, w, h, unnest(range(0, w)) AS x FROM d),
-        |px AS (SELECT doc_id, w, h, x, unnest(range(0, h)) AS r FROM gx),
-        |pj AS (SELECT doc_id, w, h, (doc_id + x + r) % 16 AS j FROM px)
-        |SELECT doc_id,
-        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |       CAST(3 AS BIGINT) AS channels,
-        |       CAST(count(*) AS BIGINT) AS n_pixels,
-        |       CAST(sum((doc_id + 3 * j) % 256) AS BIGINT) AS sum_r,
-        |       CAST(sum((doc_id + 5 * j) % 256) AS BIGINT) AS sum_g,
-        |       CAST(sum((doc_id + 7 * j) % 256) AS BIGINT) AS sum_b,
-        |       CAST(0 AS BIGINT) AS sum_a
-        |FROM pj GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin,
-
-    // GIF LZW decode: the oracle substitutes the analytic 16-entry
-    // palette into the analytic index grid — a hash match proves the
-    // variable-width LZW decode read every pixel back correctly.
-    "mm_decode_gif" ->
-      """WITH d AS (SELECT doc_id, 1 + doc_id % 12 AS w, 1 + doc_id % 8 AS h FROM documents),
-        |gx AS (SELECT doc_id, w, h, unnest(range(0, w)) AS x FROM d),
-        |px AS (SELECT doc_id, w, h, x, unnest(range(0, h)) AS r FROM gx),
-        |pj AS (SELECT doc_id, w, h, (doc_id + x + 3 * r) % 16 AS j FROM px)
-        |SELECT doc_id,
-        |       CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |       CAST(3 AS BIGINT) AS channels,
-        |       CAST(count(*) AS BIGINT) AS n_pixels,
-        |       CAST(sum((doc_id + 3 * j) % 256) AS BIGINT) AS sum_r,
-        |       CAST(sum((doc_id + 5 * j) % 256) AS BIGINT) AS sum_g,
-        |       CAST(sum((doc_id + 7 * j) % 256) AS BIGINT) AS sum_b,
-        |       CAST(0 AS BIGINT) AS sum_a
-        |FROM pj GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin,
-
-    // JPEG decode replay: the DC-only fixture decodes to the exact
-    // flat value 2·dc(bx,by)+128 per 8×8 block (quantizer 16 ⇒ no
-    // IDCT rounding; zero chroma ⇒ R=G=B=Y) — the oracle substitutes
-    // the analytic DC grid into the block coordinates of every
-    // visible pixel, so a hash match proves the huffman scan, DC
-    // prediction chain, MCU interleave (incl. 4:2:0), dequantize,
-    // IDCT, color convert and edge crop all read back correctly.
-    "mm_decode_jpeg" -> jpegDecodeOracle,
-
-    // progressive encoding must be invisible: SAME oracle (the
-    // rel_disorder_bucketed same-oracle equivalence idiom).
-    "mm_decode_jpeg_progressive" -> jpegDecodeOracle,
-
-    // aHash replay: analytic gray grid → integer block means →
-    // floor-mean threshold → bit pack (bit 63 emitted as the signed
-    // Long's min-value term — DuckDB BIGINT << 63 overflow-checks).
-    "mm_image_ahash" -> (aHashOracleCtes +
-      """
-        |SELECT doc_id, CAST(dim AS BIGINT) AS width, CAST(dim AS BIGINT) AS height,
-        |       ahash
-        |FROM ah ORDER BY doc_id""".stripMargin),
-
-    // Stored-index probe replay: hashes for BOTH sides from the
-    // analytic dc field (the oracle knows nothing of segments,
-    // appends or compaction — storage must be transparent), hamming
-    // join at ≤ 1 (pigeonhole-complete), per-probe verdict arithmetic.
-    "mm_index_probe" ->
-      """WITH c AS (SELECT doc_id, unnest(range(0, 64)) AS cell FROM documents),
-        |m AS (SELECT doc_id, cell,
-        |        2 * ((doc_id * (1 + cell % 8) + (doc_id + 5) * (cell // 8) * (cell // 8)
-        |              + 3 * (cell % 8) * (cell // 8)) % 121 - 60)
-        |          + 128 AS m
-        |      FROM c),
-        |mn AS (SELECT doc_id, CAST(sum(m) // 64 AS BIGINT) AS mean
-        |       FROM m GROUP BY 1),
-        |b AS (SELECT m.doc_id, m.cell,
-        |        CASE WHEN m.m > mn.mean THEN 1 ELSE 0 END AS bit
-        |      FROM m JOIN mn ON m.doc_id = mn.doc_id),
-        |ah AS (SELECT doc_id,
-        |         CAST(sum(CASE WHEN cell < 63
-        |               THEN bit * (CAST(1 AS BIGINT) << CAST(cell AS INTEGER))
-        |               ELSE 0 END)
-        |           + sum(CASE WHEN cell = 63 AND bit = 1
-        |                 THEN -9223372036854775808 ELSE 0 END) AS BIGINT) AS ahash
-        |       FROM b GROUP BY doc_id),
-        |idx AS (SELECT doc_id, ahash FROM ah WHERE doc_id < 100),
-        |pr AS (SELECT doc_id, ahash FROM ah WHERE doc_id >= 400),
-        |mt AS (SELECT pr.doc_id,
-        |         CAST(sum(CASE WHEN bit_count(xor(pr.ahash, idx.ahash)) = 0
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_exact,
-        |         CAST(sum(CASE WHEN bit_count(xor(pr.ahash, idx.ahash)) = 1
-        |                       THEN 1 ELSE 0 END) AS BIGINT) AS n_near
-        |       FROM pr JOIN idx
-        |         ON bit_count(xor(pr.ahash, idx.ahash)) <= 1
-        |       GROUP BY 1)
-        |SELECT pr.doc_id, coalesce(mt.n_exact, 0) AS n_exact,
-        |  coalesce(mt.n_near, 0) AS n_near,
-        |  CASE WHEN coalesce(mt.n_exact, 0) > 0 THEN 'dup_exact_image'
-        |       WHEN coalesce(mt.n_near, 0) > 0 THEN 'dup_near_image'
-        |       ELSE 'unique' END AS verdict
-        |FROM pr LEFT JOIN mt ON pr.doc_id = mt.doc_id
-        |ORDER BY pr.doc_id""".stripMargin,
-
-    // The whole image-curation chain replayed: analytic hashes →
-    // hamming pairs (pigeonhole banding is COMPLETE for d < bands, so
-    // the plain ≤3 filter is the same pair set) → recursive-CTE
-    // closure → cluster survivor arithmetic.
-    "mm_e2e_curate" ->
-      """WITH RECURSIVE
-        |c AS (SELECT doc_id, unnest(range(0, 64)) AS cell FROM documents),
-        |m AS (SELECT doc_id, cell,
-        |        2 * ((doc_id * (1 + cell % 8) + (doc_id + 5) * (cell // 8) * (cell // 8)
-        |              + 3 * (cell % 8) * (cell // 8)) % 121 - 60)
-        |          + 128 AS m
-        |      FROM c),
-        |mn AS (SELECT doc_id, CAST(sum(m) // 64 AS BIGINT) AS mean
-        |       FROM m GROUP BY 1),
-        |b AS (SELECT m.doc_id, m.cell,
-        |        CASE WHEN m.m > mn.mean THEN 1 ELSE 0 END AS bit
-        |      FROM m JOIN mn ON m.doc_id = mn.doc_id),
-        |ah AS (SELECT doc_id,
-        |         CAST(sum(CASE WHEN cell < 63
-        |               THEN bit * (CAST(1 AS BIGINT) << CAST(cell AS INTEGER))
-        |               ELSE 0 END)
-        |           + sum(CASE WHEN cell = 63 AND bit = 1
-        |                 THEN -9223372036854775808 ELSE 0 END) AS BIGINT) AS ahash
-        |       FROM b GROUP BY doc_id),
-        |pairs AS (SELECT a.doc_id AS u, bb.doc_id AS v
-        |          FROM ah a JOIN ah bb
-        |            ON a.doc_id < bb.doc_id
-        |           AND bit_count(xor(a.ahash, bb.ahash)) <= 1),
-        |edges AS (SELECT u, v FROM pairs UNION ALL SELECT v, u FROM pairs),
-        |nodes AS (SELECT DISTINCT u AS node FROM edges),
-        |reach AS (
-        |  SELECT node, node AS label FROM nodes
-        |  UNION
-        |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node),
-        |comp AS (SELECT node, min(label) AS label FROM reach GROUP BY node),
-        |cs AS (SELECT CAST(count(DISTINCT label) AS BIGINT) AS n_clusters,
-        |         CAST(count(*) AS BIGINT) AS clustered FROM comp),
-        |np AS (SELECT CAST(count(*) AS BIGINT) AS n_dup_pairs FROM pairs),
-        |nd AS (SELECT CAST(count(*) AS BIGINT) AS n_docs FROM ah)
-        |SELECT n_docs, n_dup_pairs, n_clusters,
-        |  clustered - n_clusters AS n_removed,
-        |  n_docs - (clustered - n_clusters) AS n_kept
-        |FROM nd CROSS JOIN np CROSS JOIN cs""".stripMargin,
-
-    // JPEG resize replay: source pixel (sx,sy) = (x·w div 16,
-    // y·h div 16) lands in block (sx div 8, sy div 8), flat at
-    // 2·dc+128; zero chroma ⇒ r=g=b=p, so the positional checksum
-    // weight collapses to p·65793 (1 + 2⁸ + 2¹⁶).
-    "mm_image_resize_jpeg" ->
-      """WITH d AS (SELECT doc_id,
-        |    CASE doc_id % 3 WHEN 0 THEN 1 + doc_id % 21
-        |                    WHEN 1 THEN 1 + doc_id % 19
-        |                    ELSE 1 + doc_id % 23 END AS w,
-        |    CASE doc_id % 3 WHEN 0 THEN 1 + doc_id % 13
-        |                    WHEN 1 THEN 1 + doc_id % 11
-        |                    ELSE 1 + doc_id % 17 END AS h
-        |  FROM documents),
-        |gx AS (SELECT doc_id, w, h, unnest(range(0, 16)) AS x FROM d),
-        |px AS (SELECT doc_id, w, h, x, unnest(range(0, 16)) AS y FROM gx),
-        |sv AS (SELECT doc_id, w, h, x, y,
-        |         (x * w) // 16 AS sx, (y * h) // 16 AS sy FROM px),
-        |pv AS (SELECT doc_id, w, h, x, y,
-        |         2 * ((doc_id + 3 * (sx // 8) + 5 * (sy // 8)) % 121 - 60)
-        |           + 128 AS p
-        |       FROM sv)
-        |SELECT doc_id,
-        |  CAST(w AS BIGINT) AS width, CAST(h AS BIGINT) AS height,
-        |  CAST(16 AS BIGINT) AS out_w, CAST(16 AS BIGINT) AS out_h,
-        |  CAST(sum(p) AS BIGINT) AS sum_r,
-        |  CAST(sum(p) AS BIGINT) AS sum_g,
-        |  CAST(sum(p) AS BIGINT) AS sum_b,
-        |  CAST(sum((y * 16 + x + 1) * p * 65793) AS BIGINT) AS checksum
-        |FROM pv GROUP BY doc_id, w, h ORDER BY doc_id""".stripMargin,
-
-    // JPEG aHash replay: cell (bx,by) = one flat JPEG block at
-    // 2·dc+128, mean = truncating sum/64, bit = m > mean, bit 63 via
-    // the signed min-value term (the aHash oracle convention).
-    "mm_image_ahash_jpeg" ->
-      """WITH c AS (SELECT doc_id, unnest(range(0, 64)) AS cell FROM documents),
-        |m AS (SELECT doc_id, cell,
-        |        2 * ((doc_id * (1 + cell % 8) + (doc_id + 5) * (cell // 8) * (cell // 8)
-        |              + 3 * (cell % 8) * (cell // 8)) % 121 - 60)
-        |          + 128 AS m
-        |      FROM c),
-        |mn AS (SELECT doc_id, CAST(sum(m) // 64 AS BIGINT) AS mean
-        |       FROM m GROUP BY 1),
-        |b AS (SELECT m.doc_id, m.cell,
-        |        CASE WHEN m.m > mn.mean THEN 1 ELSE 0 END AS bit
-        |      FROM m JOIN mn ON m.doc_id = mn.doc_id)
-        |SELECT doc_id, CAST(64 AS BIGINT) AS width, CAST(64 AS BIGINT) AS height,
-        |  CAST(sum(CASE WHEN cell < 63
-        |                THEN bit * (CAST(1 AS BIGINT) << CAST(cell AS INTEGER))
-        |                ELSE 0 END)
-        |    + sum(CASE WHEN cell = 63 AND bit = 1
-        |               THEN -9223372036854775808 ELSE 0 END) AS BIGINT) AS ahash
-        |FROM b GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // dHash from its own fixture's block-mean CTE (id-dependent
-    // gradient structure): the right-neighbor (wrap) compare is a
-    // self-join of bm on the neighbor cell id.
-    "mm_image_dhash" -> (dHashOracleCtes +
-      """,
-        |db AS (SELECT a.doc_id, a.dim, a.cell,
-        |         CASE WHEN b.m > a.m THEN 1 ELSE 0 END AS bit
-        |       FROM bm a JOIN bm b
-        |         ON b.doc_id = a.doc_id
-        |        AND b.cell = (a.cell // 8) * 8 + ((a.cell % 8) + 1) % 8),
-        |dh AS (SELECT doc_id, max(dim) AS dim,
-        |         CAST(sum(CASE WHEN cell < 63
-        |                       THEN bit * (CAST(1 AS BIGINT) << CAST(cell AS INTEGER))
-        |                       ELSE 0 END)
-        |           + sum(CASE WHEN cell = 63 AND bit = 1
-        |                      THEN -9223372036854775808 ELSE 0 END) AS BIGINT) AS dhash
-        |       FROM db GROUP BY doc_id)
-        |SELECT doc_id, CAST(dim AS BIGINT) AS width, CAST(dim AS BIGINT) AS height,
-        |       dhash
-        |FROM dh ORDER BY doc_id""".stripMargin),
-
-    "mm_image_neardup" -> (aHashOracleCtes +
-      """,
-        |pr AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-        |         CAST(bit_count(xor(a.ahash, b.ahash)) AS BIGINT) AS hamming
-        |       FROM ah a JOIN ah b ON a.doc_id < b.doc_id)
-        |SELECT doc_a, doc_b, hamming FROM pr WHERE hamming <= 3
-        |ORDER BY doc_a, doc_b""".stripMargin),
-
-    "corpus_split" ->
-      s"""WITH h AS (SELECT doc_id, md5('split|' || CAST(doc_id AS VARCHAR)) AS m FROM documents),
-         |b AS (SELECT doc_id, (${hexSliceSql("m", 1)}) % 1000 AS bucket FROM h)
-         |SELECT doc_id, bucket,
-         |       CASE WHEN bucket < 900 THEN 'train'
-         |            WHEN bucket < 950 THEN 'val'
-         |            ELSE 'test' END AS split
-         |FROM b ORDER BY doc_id""".stripMargin,
-
-    "corpus_e2e_curate" ->
-      s"""WITH RECURSIVE gf AS (SELECT doc_id,
-         |    CAST(len($tokSql) AS BIGINT) AS n_words,
-         |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_alpha_chars,
-         |    CAST(len(regexp_extract_all(text, '#|[.][.][.]')) AS BIGINT) AS n_sym,
-         |    CAST(len(list_filter($tokSql,
-         |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
-         |    CAST(len(list_filter($tokSql,
-         |      w -> w IN ('the', 'a', 'an', 'of', 'to', 'and', 'in'))) AS BIGINT) AS n_stop
-         |  FROM documents),
-         |gk AS (SELECT doc_id FROM gf
-         |  WHERE n_words BETWEEN 50 AND 100000
-         |    AND (CASE WHEN n_words > 0 THEN (n_alpha_chars * 1000) // n_words ELSE 0 END)
-         |        BETWEEN 3000 AND 10000
-         |    AND (CASE WHEN n_words > 0 THEN (n_sym * 1000) // n_words ELSE 0 END) <= 100
-         |    AND (CASE WHEN n_words > 0 THEN (n_alpha_words * 1000) // n_words ELSE 0 END) >= 800
-         |    AND n_stop >= 2),
-         |ex AS (SELECT min(doc_id) AS doc_id FROM documents
-         |       WHERE doc_id IN (SELECT doc_id FROM gk) GROUP BY md5(text)),
-         |${bandedPairsCtes(tokSql, " WHERE doc_id IN (SELECT doc_id FROM ex)", 900)},
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |cnodes AS (SELECT DISTINCT u AS node FROM edges),
-         |reach AS (
-         |  SELECT node, node AS label FROM cnodes
-         |  UNION
-         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node),
-         |comp AS (SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node)
-         |SELECT ex.doc_id, md5(dd.text) AS fingerprint
-         |FROM ex JOIN documents dd ON dd.doc_id = ex.doc_id
-         |LEFT JOIN comp c ON c.doc_id = ex.doc_id
-         |WHERE c.doc_id IS NULL OR c.component = ex.doc_id
-         |ORDER BY ex.doc_id""".stripMargin,
-
-    // v1's chain + the winnow excerpt screen + embedding-space
-    // decontamination, replayed as one program.
-    // Page-grain replay: rebuild each page's analytic text, classify
-    // with the same single-level-lambda line rules, join in page
-    // order — the PDF walk, Flate transparency and page ordering are
-    // all upstream of the md5.
-    "corpus_e2e_pdf" ->
-      """WITH d AS (SELECT doc_id, 1 + doc_id % 4 AS np FROM documents),
-        |pg AS (SELECT doc_id, unnest(range(0, np)) AS p FROM d),
-        |t AS (SELECT doc_id, p,
-        |    'Doc ' || CAST(doc_id AS VARCHAR) || ' page ' || CAST(p AS VARCHAR) ||
-        |    ' body ' || CAST((doc_id * 3 + p) % 50 AS VARCHAR) || ' and ' ||
-        |    CASE WHEN doc_id % 3 = 0
-        |         THEN 'tail (' || CAST((doc_id + p) % 7 AS VARCHAR) || ') \ done.'
-        |         ELSE 'tail ' || CAST((doc_id + p) % 7 AS VARCHAR) || ' done.' END
-        |      AS text
-        |  FROM pg),
-        |lk AS (SELECT doc_id, p, text,
-        |    len(list_filter(string_split(text, ' '), w -> w <> '')) AS nw,
-        |    CASE WHEN len(list_filter(string_split(text, ' '), w -> w <> '')) >= 4
-        |          AND substr(text, length(text), 1) IN ('.', '!', '?', '"')
-        |         THEN 1 ELSE 0 END AS k
-        |  FROM t),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines,
-        |    CAST(sum(k) AS BIGINT) AS n_kept_lines,
-        |    CAST(coalesce(sum(CASE WHEN k = 1 THEN nw END), 0) AS BIGINT)
-        |      AS n_kept_words,
-        |    string_agg(text, chr(10) ORDER BY p) AS fulltext,
-        |    md5(coalesce(string_agg(CASE WHEN k = 1 THEN text END,
-        |          chr(10) ORDER BY p), '')) AS kept_md5
-        |  FROM lk GROUP BY doc_id)
-        |SELECT doc_id, n_lines, n_kept_lines, n_kept_words,
-        |  CAST(CASE WHEN position('lorem ipsum' IN lower(fulltext)) > 0
-        |       THEN 1 ELSE 0 END AS BIGINT) AS has_lorem,
-        |  CAST(CASE WHEN position('{' IN fulltext) > 0 THEN 1 ELSE 0 END AS BIGINT)
-        |    AS has_brace,
-        |  CAST(CASE WHEN position('lorem ipsum' IN lower(fulltext)) = 0
-        |        AND position('{' IN fulltext) = 0 AND n_kept_lines >= 3
-        |       THEN 1 ELSE 0 END AS BIGINT) AS keep,
-        |  kept_md5
-        |FROM agg ORDER BY doc_id""".stripMargin,
-
-    // Block-grain replay: the extractor's kept blocks ARE the C4
-    // gate's lines, so the oracle classifies each analytic block with
-    // the same (single-level-lambda) line rules — paragraph blocks
-    // survive (≥4 words, terminal '.'), figure labels don't, and the
-    // page keep flips on np ≥ 3.
-    "corpus_e2e_web2" ->
-      """WITH d AS (SELECT doc_id, 2 + doc_id % 4 AS np FROM documents),
-        |paras AS (SELECT doc_id, p * 2 AS ord,
-        |    'the quick data point ' || CAST((doc_id * 7 + p) % 1000 AS VARCHAR) ||
-        |    ' is on the record & file and the value ' ||
-        |    CAST((doc_id + p) % 100 AS VARCHAR) ||
-        |    ' stays in the set for now .' AS txt
-        |  FROM (SELECT doc_id, unnest(range(0, np)) AS p FROM d)),
-        |figs AS (SELECT doc_id, 1 AS ord,
-        |    'Figure ' || CAST(doc_id % 10 AS VARCHAR) AS txt
-        |  FROM d WHERE doc_id % 2 = 0),
-        |kept AS (SELECT * FROM paras UNION ALL SELECT * FROM figs),
-        |lk AS (SELECT doc_id, txt, ord,
-        |    CASE WHEN len(list_filter(string_split(txt, ' '), w -> w <> '')) >= 4
-        |          AND substr(txt, length(txt), 1) IN ('.', '!', '?', '"')
-        |         THEN 1 ELSE 0 END AS k,
-        |    len(list_filter(string_split(txt, ' '), w -> w <> '')) AS nw
-        |  FROM kept)
-        |SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines,
-        |  CAST(sum(k) AS BIGINT) AS n_kept_lines,
-        |  CAST(coalesce(sum(CASE WHEN k = 1 THEN nw END), 0) AS BIGINT)
-        |    AS n_kept_words,
-        |  CAST(0 AS BIGINT) AS has_lorem, CAST(0 AS BIGINT) AS has_brace,
-        |  CAST(CASE WHEN sum(k) >= 3 THEN 1 ELSE 0 END AS BIGINT) AS keep,
-        |  md5(coalesce(string_agg(CASE WHEN k = 1 THEN txt END,
-        |        chr(10) ORDER BY ord), '')) AS kept_md5
-        |FROM lk GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // Kept-set replay (same analytic rules as text_html_extract) +
-    // independent recomputation of every Gopher feature on the
-    // rebuilt text — both engines derive the keep decision from
-    // their own parse of the same strings.
-    "corpus_e2e_web" ->
-      """WITH d AS (SELECT doc_id, 2 + doc_id % 4 AS np FROM documents),
-        |paras AS (SELECT doc_id, p * 2 AS ord,
-        |    'the quick data point ' || CAST((doc_id * 7 + p) % 1000 AS VARCHAR) ||
-        |    ' is on the record & file and the value ' ||
-        |    CAST((doc_id + p) % 100 AS VARCHAR) ||
-        |    ' stays in the set for now .' AS txt
-        |  FROM (SELECT doc_id, unnest(range(0, np)) AS p FROM d)),
-        |figs AS (SELECT doc_id, 1 AS ord,
-        |    'Figure ' || CAST(doc_id % 10 AS VARCHAR) AS txt
-        |  FROM d WHERE doc_id % 2 = 0),
-        |kept AS (SELECT * FROM paras UNION ALL SELECT * FROM figs),
-        |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_kept,
-        |          string_agg(txt, chr(10) ORDER BY ord) AS text
-        |        FROM kept GROUP BY doc_id),
-        |fl AS (SELECT doc_id, n_kept, text,
-        |         replace(text, chr(10), ' ') AS flat FROM agg),
-        |ft AS (SELECT doc_id, n_kept, text,
-        |    CAST(len(list_filter(string_split(flat, ' '), w -> w <> '')) AS BIGINT) AS n_words,
-        |    CAST(length(replace(flat, ' ', '')) AS BIGINT) AS nospace,
-        |    CAST(len(regexp_extract_all(flat, '#|[.][.][.]')) AS BIGINT) AS n_sym,
-        |    CAST(len(list_filter(string_split(flat, ' '),
-        |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS n_alpha,
-        |    CAST(len(list_filter(string_split(flat, ' '),
-        |      w -> w IN ('the', 'a', 'an', 'of', 'to', 'and', 'in'))) AS BIGINT) AS n_stop
-        |  FROM fl),
-        |g AS (SELECT doc_id, n_kept, text, n_words,
-        |    nospace * 1000 // n_words AS mwl,
-        |    n_sym * 1000 // n_words AS sym,
-        |    n_alpha * 1000 // n_words AS alw, n_stop FROM ft)
-        |SELECT doc_id,
-        |  (['identity','gzip','deflate'])[CAST(doc_id % 3 AS INTEGER) + 1]
-        |    AS content_encoding,
-        |  CAST(9 + doc_id % 4 + doc_id % 2 AS BIGINT) AS n_blocks,
-        |  n_kept, n_words,
-        |  CAST(mwl AS BIGINT) AS mean_word_len_permille,
-        |  CAST(sym AS BIGINT) AS symbol_permille,
-        |  CAST(alw AS BIGINT) AS alpha_word_permille, n_stop,
-        |  CAST(CASE WHEN n_words BETWEEN 50 AND 100000
-        |             AND mwl BETWEEN 3000 AND 10000 AND sym <= 100
-        |             AND alw >= 800 AND n_stop >= 2
-        |       THEN 1 ELSE 0 END AS BIGINT) AS keep,
-        |  md5(text) AS text_md5
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    "corpus_e2e_curate2" ->
-      s"""WITH RECURSIVE gf AS (SELECT doc_id,
-         |    CAST(len($tokSql) AS BIGINT) AS n_words,
-         |    CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_alpha_chars,
-         |    CAST(len(regexp_extract_all(text, '#|[.][.][.]')) AS BIGINT) AS n_sym,
-         |    CAST(len(list_filter($tokSql,
-         |      w -> regexp_matches(w, '[A-Za-z]'))) AS BIGINT) AS n_alpha_words,
-         |    CAST(len(list_filter($tokSql,
-         |      w -> w IN ('the', 'a', 'an', 'of', 'to', 'and', 'in'))) AS BIGINT) AS n_stop
-         |  FROM documents),
-         |gk AS (SELECT doc_id FROM gf
-         |  WHERE n_words BETWEEN 50 AND 100000
-         |    AND (CASE WHEN n_words > 0 THEN (n_alpha_chars * 1000) // n_words ELSE 0 END)
-         |        BETWEEN 3000 AND 10000
-         |    AND (CASE WHEN n_words > 0 THEN (n_sym * 1000) // n_words ELSE 0 END) <= 100
-         |    AND (CASE WHEN n_words > 0 THEN (n_alpha_words * 1000) // n_words ELSE 0 END) >= 800
-         |    AND n_stop >= 2),
-         |ex AS (SELECT min(doc_id) AS doc_id FROM documents
-         |       WHERE doc_id IN (SELECT doc_id FROM gk) GROUP BY md5(text)),
-         |${bandedPairsCtes(tokSql, " WHERE doc_id IN (SELECT doc_id FROM ex)", 900)},
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |cnodes AS (SELECT DISTINCT u AS node FROM edges),
-         |reach AS (
-         |  SELECT node, node AS label FROM cnodes
-         |  UNION
-         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node),
-         |comp AS (SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node),
-         |kn AS (SELECT ex.doc_id FROM ex LEFT JOIN comp c ON c.doc_id = ex.doc_id
-         |       WHERE c.doc_id IS NULL OR c.component = ex.doc_id),
-         |${winnowSelCtesWhere(" AND doc_id IN (SELECT doc_id FROM kn)")},
-         |wf AS (SELECT doc_id, unnest(sl) AS fp FROM sel),
-         |wc AS (SELECT fp, CAST(count(*) AS BIGINT) AS df FROM wf GROUP BY fp),
-         |wkept AS (SELECT wf.doc_id, wf.fp FROM wf JOIN wc USING (fp) WHERE df <= 50),
-         |wp AS (SELECT a.doc_id AS doc_a, b.doc_id AS doc_b,
-         |         CAST(count(*) AS BIGINT) AS n_shared
-         |       FROM wkept a JOIN wkept b ON a.fp = b.fp AND a.doc_id < b.doc_id
-         |       GROUP BY 1, 2),
-         |dropx AS (SELECT DISTINCT doc_b AS doc_id FROM wp WHERE n_shared >= 5),
-         |k2 AS (SELECT doc_id FROM kn
-         |       WHERE doc_id NOT IN (SELECT doc_id FROM dropx)),
-         |e2 AS (SELECT vec_id, label, embedding,
-         |         ${dotSql("embedding", "embedding")} AS n2 FROM embeddings),
-         |te2 AS (SELECT * FROM e2 WHERE vec_id % 10 = 0),
-         |tr2 AS (SELECT e2.* FROM e2 JOIN k2 ON k2.doc_id = e2.vec_id
-         |        WHERE vec_id % 10 <> 0),
-         |sem AS (SELECT DISTINCT tr2.vec_id AS doc_id
-         |        FROM tr2 JOIN te2 ON tr2.label = te2.label
-         |        WHERE round(${dotSql("tr2.embedding", "te2.embedding")}
-         |                / sqrt(tr2.n2 * te2.n2), 4) >= 0.4)
-         |SELECT k2.doc_id, md5(dd.text) AS fingerprint
-         |FROM k2 JOIN documents dd ON dd.doc_id = k2.doc_id
-         |WHERE k2.doc_id % 10 <> 0
-         |  AND k2.doc_id NOT IN (SELECT doc_id FROM sem)
-         |ORDER BY k2.doc_id""".stripMargin,
-
-    "corpus_split_leakage_safe" ->
-      s"""WITH RECURSIVE ${bandedPairsCtes(tokSql, "", 900)},
-         |edges AS (SELECT doc_a AS u, doc_b AS v FROM pairs
-         |          UNION ALL SELECT doc_b, doc_a FROM pairs),
-         |cnodes AS (SELECT DISTINCT u AS node FROM edges),
-         |reach AS (
-         |  SELECT node, node AS label FROM cnodes
-         |  UNION
-         |  SELECT e.u AS node, r.label FROM edges e JOIN reach r ON e.v = r.node),
-         |comp AS (SELECT node AS doc_id, min(label) AS component FROM reach GROUP BY node),
-         |asg AS (SELECT dd.doc_id, coalesce(c.component, dd.doc_id) AS component
-         |        FROM documents dd LEFT JOIN comp c ON c.doc_id = dd.doc_id),
-         |hh AS (SELECT doc_id, component,
-         |        md5('split|' || CAST(component AS VARCHAR)) AS m FROM asg),
-         |bb AS (SELECT doc_id, component, (${hexSliceSql("m", 1)}) % 1000 AS bucket FROM hh)
-         |SELECT doc_id, component, bucket,
-         |       CASE WHEN bucket < 900 THEN 'train'
-         |            WHEN bucket < 950 THEN 'val'
-         |            ELSE 'test' END AS split
-         |FROM bb ORDER BY doc_id""".stripMargin,
-
-    "text_quality_model" ->
-      s"""WITH f AS (SELECT doc_id,
-         |    CAST(len($tokSql) AS BIGINT) AS n_tokens,
-         |    CAST(len(list_distinct($tokSql)) AS BIGINT) AS n_distinct,
-         |    CAST(len(list_filter(string_split(text, ' '),
-         |      x -> x = 'the' OR x = 'a' OR x = 'an' OR x = 'of' OR x = 'to' OR x = 'and' OR x = 'in')) AS BIGINT) AS n_stop,
-         |    length(replace(text, ' ', '')) AS tok_chars
-         |  FROM documents),
-         |g AS (SELECT doc_id,
-         |    -2000 + 5 * n_tokens
-         |          - 1 * CAST(floor(tok_chars * 1000 / n_tokens) AS BIGINT)
-         |          + 3 * CAST(floor(n_stop * 1000 / n_tokens) AS BIGINT)
-         |          + 2 * CAST(floor(n_distinct * 1000 / n_tokens) AS BIGINT) AS logit_bp
-         |  FROM f)
-         |SELECT doc_id, CAST(logit_bp AS BIGINT) AS logit_bp,
-         |       CAST(CASE WHEN logit_bp >= 0 THEN 1 ELSE 0 END AS BIGINT) AS keep
-         |FROM g ORDER BY doc_id""".stripMargin,
-
-    // Same Cramer formula TEXT as the Spark side (TextAnalysis.cramer3Sql),
-    // evaluated over HUGEINT instead of DECIMAL(38,0).
-    "text_linear_fit" -> {
-      val f = operators.TextAnalysis.cramer3Sql(c => s"CAST($c AS HUGEINT)")
-      s"""WITH f AS (SELECT CAST(len($tokSql) AS BIGINT) AS y,
-         |             CAST(length(text) AS BIGINT) AS x1,
-         |             CAST(length(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS x2
-         |           FROM documents),
-         |s AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-         |        sum(x1) AS s1, sum(x2) AS s2,
-         |        sum(x1*x1) AS s11, sum(x1*x2) AS s12, sum(x2*x2) AS s22,
-         |        sum(y) AS sy, sum(x1*y) AS s1y, sum(x2*y) AS s2y FROM f),
-         |dt AS (SELECT ${f("det")} AS det, ${f("det0")} AS det0,
-         |         ${f("det1")} AS det1, ${f("det2")} AS det2 FROM s),
-         |nm AS (SELECT
-         |    CAST(CASE WHEN det < 0 THEN -det0 ELSE det0 END AS VARCHAR) AS w0,
-         |    CAST(CASE WHEN det < 0 THEN -det1 ELSE det1 END AS VARCHAR) AS w1,
-         |    CAST(CASE WHEN det < 0 THEN -det2 ELSE det2 END AS VARCHAR) AS w2,
-         |    CAST(abs(det) AS VARCHAR) AS w_den FROM dt)
-         |SELECT 'intercept' AS feature, w0 AS w_num, w_den FROM nm
-         |UNION ALL SELECT 'char_len', w1, w_den FROM nm
-         |UNION ALL SELECT 'vowels', w2, w_den FROM nm
-         |ORDER BY feature""".stripMargin
-    },
-
-    "text_mojibake" ->
-      s"""WITH inj AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 4 = 0 THEN 'cafÃ© ' || text
-         |         WHEN doc_id % 4 = 1 THEN '��bytes ' || text
-         |         WHEN doc_id % 4 = 2 THEN 'itâs ' || text
-         |         ELSE text END AS text
-         |  FROM documents),
-         |m AS (SELECT doc_id, CAST(length(text) AS BIGINT) AS n_chars,
-         |    CAST(length(regexp_replace(text, '[^�]', '', 'g')) AS BIGINT) AS n_replacement,
-         |    CAST(length(regexp_replace(text, '[^ÃÂâ]', '', 'g')) AS BIGINT) AS n_latin1_markers
-         |  FROM inj)
-         |SELECT doc_id, n_chars, n_replacement, n_latin1_markers,
-         |  CAST(CASE WHEN n_chars = 0 THEN 0
-         |       ELSE (n_replacement + n_latin1_markers) * 1000 // n_chars END AS BIGINT) AS mojibake_permille
-         |FROM m ORDER BY doc_id""".stripMargin,
-
-    "text_linear_residuals" -> {
-      val f = operators.TextAnalysis.cramer3Sql(c => s"CAST($c AS HUGEINT)")
-      s"""WITH f AS (SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS y,
-         |             CAST(length(text) AS BIGINT) AS x1,
-         |             CAST(length(regexp_replace(text, '[^aeiou]', '', 'g')) AS BIGINT) AS x2
-         |           FROM documents),
-         |s AS (SELECT CAST(count(*) AS HUGEINT) AS n,
-         |        sum(x1) AS s1, sum(x2) AS s2,
-         |        sum(x1*x1) AS s11, sum(x1*x2) AS s12, sum(x2*x2) AS s22,
-         |        sum(y) AS sy, sum(x1*y) AS s1y, sum(x2*y) AS s2y FROM f),
-         |dt AS (SELECT ${f("det")} AS det, ${f("det0")} AS det0,
-         |         ${f("det1")} AS det1, ${f("det2")} AS det2 FROM s),
-         |nm AS (SELECT CASE WHEN det < 0 THEN -det0 ELSE det0 END AS n0,
-         |         CASE WHEN det < 0 THEN -det1 ELSE det1 END AS n1,
-         |         CASE WHEN det < 0 THEN -det2 ELSE det2 END AS n2,
-         |         abs(det) AS den FROM dt)
-         |SELECT doc_id,
-         |  CAST(CAST(y AS HUGEINT)*den - (n0 + n1*CAST(x1 AS HUGEINT) + n2*CAST(x2 AS HUGEINT)) AS VARCHAR) AS resid
-         |FROM f, nm ORDER BY doc_id""".stripMargin
-    },
-
-    "corpus_chunk" ->
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |n AS (SELECT doc_id, tk, len(tk) AS ln,
-         |        CASE WHEN len(tk) = 0 THEN 0
-         |             ELSE (greatest(len(tk) - 16, 0) + 7) // 8 + 1 END AS nch
-         |      FROM t),
-         |s AS (SELECT doc_id, tk, ln,
-         |        unnest(list_transform(range(0, nch),
-         |          i -> {'chunk_idx': i, 'st': i * 8}), recursive := true)
-         |      FROM n)
-         |SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-         |       CAST(least(16, ln - st) AS BIGINT) AS n_chunk_tokens,
-         |       md5(array_to_string(tk[st+1 : st+16], ' ')) AS chunk_md5
-         |FROM s ORDER BY doc_id, chunk_idx""".stripMargin,
-
-    // CDC replayed: per-position windowed md5 fingerprints, modulus
-    // boundary flags, running chunk index (window sum to 1 PRECEDING),
-    // order-pinned chunk reassembly, first-seen stale marker.
-    "corpus_cdc_chunks" -> {
-      val winFp = hexSliceSql("md5(array_to_string(tk[CAST(i - 3 AS INTEGER) : CAST(i AS INTEGER)], ' '))", 1)
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |fl AS (SELECT doc_id, tk,
-         |         list_transform(range(1, len(tk) + 1),
-         |           i -> CASE WHEN i >= 4 AND ($winFp) % 32 = 0
-         |                THEN 1 ELSE 0 END) AS flags
-         |       FROM t WHERE len(tk) >= 1),
-         |pe AS (SELECT doc_id, unnest(list_transform(range(1, len(tk) + 1),
-         |         i -> {'pos': i, 'tok': tk[CAST(i AS INTEGER)],
-         |               'flag': flags[CAST(i AS INTEGER)]}), recursive := true)
-         |       FROM fl),
-         |cx AS (SELECT doc_id, pos, tok,
-         |         coalesce(sum(flag) OVER (PARTITION BY doc_id ORDER BY pos
-         |           ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING), 0) AS chunk_idx
-         |       FROM pe),
-         |ch AS (SELECT doc_id, CAST(chunk_idx AS BIGINT) AS chunk_idx,
-         |         CAST(count(*) AS BIGINT) AS n_chunk_tokens,
-         |         md5(string_agg(tok, ' ' ORDER BY pos)) AS chunk_md5
-         |       FROM cx GROUP BY doc_id, chunk_idx),
-         |ow AS (SELECT chunk_md5, min(doc_id) AS owner FROM ch GROUP BY chunk_md5)
-         |SELECT ch.doc_id, ch.chunk_idx, ch.n_chunk_tokens, ch.chunk_md5,
-         |       CAST(CASE WHEN ow.owner < ch.doc_id THEN 1 ELSE 0 END AS BIGINT) AS stale
-         |FROM ch JOIN ow USING (chunk_md5)
-         |ORDER BY doc_id, chunk_idx""".stripMargin
-    },
-
-    // Mirrors Corpus.normalizeUrl's fixed pass order; DuckDB backrefs
-    // are \1 where Spark's are $1 (same semantics).
-    "text_url_normalize" ->
-      s"""WITH d AS (SELECT doc_id, $urlInjectSql AS url FROM documents),
-         |n1 AS (SELECT doc_id,
-         |    lower(regexp_extract(url, '^([A-Za-z][A-Za-z0-9+.-]*://[A-Za-z0-9.-]+)', 1)) ||
-         |    regexp_replace(url, '^[A-Za-z][A-Za-z0-9+.-]*://[A-Za-z0-9.-]+', '') AS u
-         |  FROM d),
-         |n2 AS (SELECT doc_id, regexp_replace(u, '#.*$$', '') AS u FROM n1),
-         |n3 AS (SELECT doc_id, regexp_replace(u, '\\?', '&', 'g') AS u FROM n2),
-         |n4 AS (SELECT doc_id,
-         |    regexp_replace(u, '&(utm_[A-Za-z]+|fbclid|gclid)=[^&]*', '', 'g') AS u FROM n3),
-         |n5 AS (SELECT doc_id, regexp_replace(u, '^([^&]*)&', '\\1?') AS u FROM n4),
-         |n6 AS (SELECT doc_id, regexp_replace(u, '[?&]$$', '') AS url_norm FROM n5),
-         |h AS (SELECT doc_id, url_norm,
-         |    regexp_extract(url_norm, '^[a-z][a-z0-9+.-]*://([a-z0-9.-]+)', 1) AS host FROM n6)
-         |SELECT doc_id, host,
-         |       regexp_extract(host, '([a-z0-9-]+\\.[a-z0-9-]+)$$', 1) AS domain, url_norm
-         |FROM h ORDER BY doc_id""".stripMargin,
-
-    // Independent re-parse of the same URL string with DuckDB's RE2 —
-    // both engines extract host/path/query and score with the same
-    // integer penalty table; nothing is replayed from fixture rules.
-    "text_url_quality" ->
-      s"""WITH u AS (SELECT doc_id, $variedUrlSql AS url FROM documents),
-         |p AS (SELECT doc_id,
-         |    lower(regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://([^/?#]+)', 1)) AS host,
-         |    regexp_extract(url, '^[A-Za-z][A-Za-z0-9+.-]*://[^/?#]+([^?#]*)', 1) AS pth,
-         |    regexp_extract(url, '\\?([^#]*)', 1) AS qry
-         |  FROM u),
-         |f AS (SELECT doc_id, host,
-         |    CAST(length(pth) - length(replace(pth, '/', '')) AS BIGINT) AS path_depth,
-         |    CAST(CASE WHEN qry = '' THEN 0
-         |              ELSE len(string_split(qry, '&')) END AS BIGINT) AS n_params,
-         |    CAST(CASE WHEN regexp_matches(lower(qry),
-         |             '(^|&)(sid|sessionid|phpsessid|jsessionid)=')
-         |           OR regexp_matches(lower(pth), '[0-9a-f]{24}')
-         |         THEN 1 ELSE 0 END AS BIGINT) AS has_session,
-         |    CAST(CASE WHEN regexp_matches(lower(pth),
-         |             '[.](jpg|jpeg|png|gif|zip|exe|css|js|ico|svg|mp4|mp3)$$')
-         |         THEN 1 ELSE 0 END AS BIGINT) AS bad_ext,
-         |    CAST(CASE WHEN regexp_matches(lower(host), '[.](click|top|xxx|gq|tk|loan)$$')
-         |         THEN 1 ELSE 0 END AS BIGINT) AS bad_tld,
-         |    CAST(CASE WHEN length(pth) > 80 THEN 1 ELSE 0 END AS BIGINT) AS long_path
-         |  FROM p),
-         |s AS (SELECT *, greatest(0,
-         |    1000 - (CASE WHEN path_depth > 4 THEN 150 ELSE 0 END)
-         |         - (CASE WHEN n_params >= 3 THEN 150 ELSE 0 END)
-         |         - has_session * 300 - bad_ext * 400 - bad_tld * 300
-         |         - long_path * 100) AS sc FROM f)
-         |SELECT doc_id, host, path_depth, n_params, has_session, bad_ext,
-         |       bad_tld, long_path, CAST(sc AS BIGINT) AS url_score,
-         |       CAST(CASE WHEN sc >= 500 THEN 1 ELSE 0 END AS BIGINT) AS keep
-         |FROM s ORDER BY doc_id""".stripMargin,
-
-    // Line-grain replay with SINGLE-LEVEL lambdas only (the DuckDB
-    // nested-lambda-capture bug forces the flat unnest-with-subscripts
-    // form — see text_wordpiece_encode's oracle note): every line
-    // classified as a plain column, kept text re-joined in subscript
-    // order.
-    "text_c4_rules" ->
-      s"""WITH t AS (SELECT doc_id, $linesInjectSql AS tx FROM documents),
-         |f AS (SELECT doc_id, tx, string_split(tx, chr(10)) AS ls FROM t),
-         |ln AS (SELECT doc_id, unnest(ls) AS l,
-         |         generate_subscripts(ls, 1) AS i FROM f),
-         |lk AS (SELECT doc_id, l, i,
-         |         CASE WHEN len(list_filter(string_split(l, ' '), w -> w <> '')) >= 4
-         |               AND substr(l, length(l), 1) IN ('.', '!', '?', '"')
-         |              THEN 1 ELSE 0 END AS k,
-         |         len(list_filter(string_split(l, ' '), w -> w <> '')) AS nw
-         |       FROM ln),
-         |agg AS (SELECT doc_id, CAST(count(*) AS BIGINT) AS n_lines,
-         |          CAST(sum(k) AS BIGINT) AS n_kept_lines,
-         |          CAST(coalesce(sum(CASE WHEN k = 1 THEN nw END), 0) AS BIGINT)
-         |            AS n_kept_words,
-         |          md5(coalesce(string_agg(CASE WHEN k = 1 THEN l END,
-         |                chr(10) ORDER BY i), '')) AS kept_md5
-         |        FROM lk GROUP BY doc_id),
-         |pg AS (SELECT doc_id,
-         |         CAST(CASE WHEN position('lorem ipsum' IN lower(tx)) > 0
-         |              THEN 1 ELSE 0 END AS BIGINT) AS has_lorem,
-         |         CAST(CASE WHEN position('{' IN tx) > 0
-         |              THEN 1 ELSE 0 END AS BIGINT) AS has_brace
-         |       FROM t)
-         |SELECT agg.doc_id AS doc_id, n_lines, n_kept_lines, n_kept_words,
-         |  has_lorem, has_brace,
-         |  CAST(CASE WHEN has_lorem = 0 AND has_brace = 0 AND n_kept_lines >= 3
-         |       THEN 1 ELSE 0 END AS BIGINT) AS keep,
-         |  kept_md5
-         |FROM agg JOIN pg ON pg.doc_id = agg.doc_id
-         |ORDER BY doc_id""".stripMargin,
-
-    // Analytic decision-table replay (the strata-shortcut precedent:
-    // the PARSER itself is pinned by WebExtractSpec's hand fixtures —
-    // group selection, tie-breaks, '$' anchor, wildcards-skipped; this
-    // oracle checks the longest-match DECISION and rule-length per
-    // frontier URL against the fixture's m%3 rule families).
-    "text_robots_gate" ->
-      """WITH u AS (SELECT doc_id, doc_id % 23 AS m, 1 + doc_id % 7 AS d
-        |           FROM documents),
-        |g AS (SELECT doc_id,
-        |    'www.site' || CAST(m AS VARCHAR) ||
-        |    (['.com','.org','.click','.info'])[CAST(doc_id % 4 AS INTEGER) + 1]
-        |      AS host,
-        |    CASE CAST(m % 3 AS INTEGER)
-        |      WHEN 0 THEN CASE WHEN d = 3 THEN 0 ELSE 1 END
-        |      WHEN 1 THEN CASE WHEN d >= 6 THEN 0 ELSE 1 END
-        |      ELSE CASE WHEN d >= 5 THEN 0 ELSE 1 END END AS allowed,
-        |    CASE CAST(m % 3 AS INTEGER)
-        |      WHEN 0 THEN CASE WHEN d = 3 THEN 12 WHEN d >= 4 THEN 16 ELSE 0 END
-        |      WHEN 1 THEN CASE WHEN d >= 6 THEN 24 ELSE 0 END
-        |      ELSE CASE WHEN d >= 5 THEN 20 ELSE 4 END END AS rule_len
-        |  FROM u)
-        |SELECT doc_id, host, CAST(allowed AS BIGINT) AS allowed,
-        |       CAST(rule_len AS BIGINT) AS rule_len
-        |FROM g ORDER BY doc_id""".stripMargin,
-
-    // The strata shortcut ('example{N}.com') is valid because
-    // text_url_normalize independently pins the extraction chain; this
-    // oracle checks the CAP semantics (hash-order k per domain).
-    "corpus_domain_cap" ->
-      s"""WITH t AS (SELECT doc_id,
-         |             'example' || CAST(doc_id % 37 AS VARCHAR) || '.com' AS domain,
-         |             md5('ksample|' || CAST(doc_id AS VARCHAR)) AS m FROM documents),
-         |b AS (SELECT doc_id, domain, (${hexSliceSql("m", 1)}) % 1000000 AS bk FROM t),
-         |r AS (SELECT doc_id, domain,
-         |        row_number() OVER (PARTITION BY domain ORDER BY bk, doc_id) AS rn
-         |      FROM b)
-         |SELECT doc_id, domain FROM r WHERE rn <= 10 ORDER BY doc_id""".stripMargin,
-
-    "corpus_curriculum" ->
-      s"""WITH h AS (SELECT doc_id,
-         |             CAST(len($tokSql) // 50 AS BIGINT) AS band,
-         |             md5('curr|epoch0|' || CAST(doc_id AS VARCHAR)) AS m FROM documents)
-         |SELECT doc_id, band, (${hexSliceSql("m", 1)}) AS shuf_key
-         |FROM h ORDER BY band, shuf_key, doc_id""".stripMargin,
-
-    "corpus_shuffle" ->
-      s"""WITH h AS (SELECT doc_id,
-         |             md5('shuf|epoch0|' || CAST(doc_id AS VARCHAR)) AS m FROM documents)
-         |SELECT doc_id, (${hexSliceSql("m", 1)}) AS shuf_key
-         |FROM h ORDER BY shuf_key, doc_id""".stripMargin,
-
-    "corpus_sample" ->
-      s"""WITH h AS (SELECT doc_id, source,
-         |             md5('sample|' || CAST(doc_id AS VARCHAR)) AS m FROM documents),
-         |b AS (SELECT doc_id, source, (${hexSliceSql("m", 1)}) % 1000 AS bucket FROM h)
-         |SELECT doc_id, source FROM b
-         |WHERE bucket < (CASE source WHEN 'src0' THEN 300 WHEN 'src1' THEN 700 ELSE 100 END)
-         |ORDER BY doc_id""".stripMargin,
-
-    "corpus_mixture" ->
-      s"""WITH w AS (SELECT doc_id, source,
-         |             CASE source WHEN 'src0' THEN 2500 WHEN 'src1' THEN 800
-         |                         WHEN 'src2' THEN 0 ELSE 1000 END AS w
-         |           FROM documents),
-         |c AS (SELECT doc_id, source, w,
-         |        unnest(range(0, CAST((w + 999) // 1000 AS BIGINT))) AS copy_idx
-         |      FROM w WHERE w > 0),
-         |h AS (SELECT doc_id, source, w, copy_idx,
-         |        md5('mix|' || CAST(doc_id AS VARCHAR) || '#' || CAST(copy_idx AS VARCHAR)) AS m
-         |      FROM c)
-         |SELECT doc_id, copy_idx, source FROM h
-         |WHERE (copy_idx + 1) * 1000 <= w OR (${hexSliceSql("m", 1)}) % 1000 < w % 1000
-         |ORDER BY doc_id, copy_idx""".stripMargin,
-
-    // Twin of Corpus.dsirWeights (target = lang 'en'): engine-portable
-    // md5 hash buckets, integer-argument ln only, per-doc fold over
-    // bucket-id-sorted structs — Spark's exact float-op sequence.
-    "corpus_dsir_weights" ->
-      s"""WITH tk AS (SELECT doc_id, lang = 'en' AS t, unnest($tokSql) AS w FROM documents),
-         |h AS (SELECT doc_id, t, md5('dsir|' || w) AS m FROM tk),
-         |fx AS (SELECT doc_id, t, (${hexSliceSql("m", 1)}) % 64 AS f FROM h),
-         |pd AS (SELECT doc_id, f, CAST(count(*) AS BIGINT) AS c FROM fx GROUP BY doc_id, f),
-         |g AS (SELECT f, CAST(count(*) AS BIGINT) AS cr,
-         |        CAST(sum(CASE WHEN t THEN 1 ELSE 0 END) AS BIGINT) AS ct FROM fx GROUP BY f),
-         |tt AS (SELECT CAST(sum(cr) AS BIGINT) AS tr, CAST(sum(ct) AS BIGINT) AS tt FROM g),
-         |j AS (SELECT pd.doc_id, pd.f, pd.c, g.ct, g.cr, tt.tr, tt.tt
-         |      FROM pd JOIN g USING (f), tt),
-         |a AS (SELECT doc_id, CAST(sum(c) AS BIGINT) AS n_feats, max(tr) AS tr, max(tt) AS tt,
-         |        list_sort(list({'f': f, 'c': c, 'ct': ct, 'cr': cr})) AS bs
-         |      FROM j GROUP BY doc_id)
-         |SELECT doc_id, n_feats,
-         |       round(list_reduce(list_prepend(CAST(0.0 AS DOUBLE), list_transform(bs,
-         |           p -> CAST(p.c AS DOUBLE) * (ln(CAST(p.ct + 1 AS DOUBLE)) - ln(CAST(tt + 64 AS DOUBLE))
-         |                 - ln(CAST(p.cr + 1 AS DOUBLE)) + ln(CAST(tr + 64 AS DOUBLE))))),
-         |         (a,b) -> a + b), 4) AS dsir_logw_q4
-         |FROM a ORDER BY doc_id""".stripMargin,
-
-    // Twin of Corpus.temperatureMixture: α = ½ inside IEEE-exact
-    // sqrt; the Σ√p normalizer folds in sorted stratum order.
-    "corpus_temperature" ->
-      s"""WITH per AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs,
-         |               CAST(sum(len($tokSql)) AS BIGINT) AS n_tokens
-         |             FROM documents GROUP BY source),
-         |one AS (SELECT list_sort(list({'source': source, 'n_docs': n_docs,
-         |                               'n_tokens': n_tokens})) AS s FROM per),
-         |t2 AS (SELECT s, list_reduce(list_prepend(CAST(0 AS BIGINT),
-         |         list_transform(s, p -> p.n_tokens)), (a,b) -> a + b) AS tot FROM one),
-         |t3 AS (SELECT s, tot, list_reduce(list_prepend(CAST(0.0 AS DOUBLE),
-         |         list_transform(s, p -> sqrt(CAST(p.n_tokens AS DOUBLE) / CAST(tot AS DOUBLE)))),
-         |         (a,b) -> a + b) AS z FROM t2),
-         |u AS (SELECT unnest(s) AS p, tot, z FROM t3)
-         |SELECT p.source AS source, p.n_docs AS n_docs, p.n_tokens AS n_tokens,
-         |       round(CAST(p.n_tokens AS DOUBLE) / CAST(tot AS DOUBLE), 4) AS share_q4,
-         |       round(sqrt(CAST(p.n_tokens AS DOUBLE) / CAST(tot AS DOUBLE)) / z, 4)
-         |         AS temp_share_q4
-         |FROM u ORDER BY source""".stripMargin,
-
-    // UniMax waterfill replayed as a recursive CTE: one row per fold
-    // step, ordered ascending by (n_tokens, source); remaining budget
-    // threads through the recursion in exact integers.
-    // epoch-value recurrence replayed level by level: the recursive
-    // member carries (epoch_value, effective) and steps both with the
-    // same floor rule the Spark fold applies.
-    "corpus_repeat_curve" ->
-      s"""WITH RECURSIVE u AS (
-         |  SELECT source, CAST(sum(len($tokSql)) AS BIGINT) AS ut
-         |  FROM documents GROUP BY source),
-         |v AS (
-         |  SELECT source, ut, CAST(1 AS BIGINT) AS epochs,
-         |         ut AS epoch_value, ut AS eff FROM u
-         |  UNION ALL
-         |  SELECT source, ut, epochs + 1, (epoch_value * 700) // 1000,
-         |         eff + (epoch_value * 700) // 1000
-         |  FROM v WHERE epochs < 8)
-         |SELECT source, ut AS unique_tokens, epochs, epoch_value,
-         |  eff AS effective_tokens,
-         |  CAST(CASE WHEN ut > 0 THEN (epoch_value * 1000) // ut
-         |            ELSE 0 END AS BIGINT) AS marginal_permille
-         |FROM v ORDER BY source, epochs""".stripMargin,
-
-    "corpus_unimax" ->
-      s"""WITH RECURSIVE per AS (SELECT source,
-         |        CAST(sum(len($tokSql)) AS BIGINT) AS n_tokens
-         |      FROM documents GROUP BY source),
-         |ord AS (SELECT source, n_tokens,
-         |          CAST(row_number() OVER (ORDER BY n_tokens, source) AS BIGINT) AS i
-         |        FROM per),
-         |tot AS (SELECT CAST(count(*) AS BIGINT) AS n,
-         |               CAST(sum(n_tokens) AS BIGINT) AS t FROM ord),
-         |alloc AS (
-         |  SELECT CAST(0 AS BIGINT) AS i, CAST(NULL AS VARCHAR) AS source,
-         |         CAST(0 AS BIGINT) AS n_tokens, CAST(0 AS BIGINT) AS quota,
-         |         (t * 900) // 1000 AS remaining
-         |  FROM tot
-         |  UNION ALL
-         |  SELECT o.i, o.source, o.n_tokens,
-         |         least((o.n_tokens * 900) // 1000,
-         |               a.remaining // (tot.n - o.i + 1)) AS quota,
-         |         a.remaining - least((o.n_tokens * 900) // 1000,
-         |               a.remaining // (tot.n - o.i + 1)) AS remaining
-         |  FROM alloc a JOIN ord o ON o.i = a.i + 1 CROSS JOIN tot
-         |)
-         |SELECT source, n_tokens, quota AS quota_tokens,
-         |       CASE WHEN n_tokens = 0 THEN 0
-         |            ELSE (quota * 1000) // n_tokens END AS epochs_permille
-         |FROM alloc WHERE i >= 1 ORDER BY source""".stripMargin,
-
-    "dedup_cluster_sizes" ->
-      """WITH g AS (SELECT md5(text) AS h, CAST(count(*) AS BIGINT) AS n_copies
-        |           FROM documents GROUP BY 1)
-        |SELECT n_copies, CAST(count(*) AS BIGINT) AS n_clusters
-        |FROM g GROUP BY n_copies ORDER BY n_copies""".stripMargin,
-
-    "corpus_sample_k" ->
-      s"""WITH h AS (SELECT doc_id, source,
-         |             md5('ksample|' || CAST(doc_id AS VARCHAR)) AS m FROM documents),
-         |b AS (SELECT doc_id, source, (${hexSliceSql("m", 1)}) % 1000000 AS bk FROM h),
-         |r AS (SELECT doc_id, source,
-         |        row_number() OVER (PARTITION BY source ORDER BY bk, doc_id) AS rn
-         |      FROM b)
-         |SELECT doc_id, source FROM r WHERE rn <= 10 ORDER BY doc_id""".stripMargin,
-
-    "text_repetition" ->
-      s"""WITH f AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |g AS (SELECT doc_id,
-         |        CAST(len(tk) AS BIGINT) AS n_tokens,
-         |        CAST(len(list_distinct(tk)) AS BIGINT) AS n_distinct_tokens,
-         |        CAST(len(tk) - 1 AS BIGINT) AS n2_raw,
-         |        list_transform(range(1, len(tk)), i -> tk[i] || ' ' || tk[i+1]) AS grams
-         |      FROM f)
-         |SELECT doc_id, n_tokens, n_distinct_tokens,
-         |  CAST(CASE WHEN n2_raw > 0 THEN n2_raw ELSE 0 END AS BIGINT) AS n_2grams,
-         |  CAST(len(list_distinct(grams)) AS BIGINT) AS n_distinct_2grams,
-         |  CAST(CASE WHEN n_tokens > 0
-         |       THEN floor((n_tokens - n_distinct_tokens) * 1000 / n_tokens)
-         |       ELSE 0 END AS BIGINT) AS dup_token_permille,
-         |  CAST(CASE WHEN n2_raw > 0
-         |       THEN floor((n2_raw - len(list_distinct(grams))) * 1000 / n2_raw)
-         |       ELSE 0 END AS BIGINT) AS dup_2gram_permille
-         |FROM g ORDER BY doc_id""".stripMargin,
-
-    "dedup_boilerplate" ->
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |s AS (SELECT doc_id,
-         |        unnest(list_transform(
-         |          range(0, greatest(CAST(ceil(len(tk) / 4.0) AS BIGINT), 1)),
-         |          i -> {'seg_idx': i,
-         |                'seg': array_to_string(tk[i*4+1 : i*4+4], ' ')}),
-         |          recursive := true)
-         |      FROM t),
-         |common AS (SELECT seg FROM (SELECT DISTINCT doc_id, seg FROM s)
-         |           GROUP BY seg HAVING count(*) >= 3)
-         |SELECT s.doc_id,
-         |  CAST(count(*) AS BIGINT) AS n_segments,
-         |  CAST(sum(CASE WHEN c.seg IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_dropped,
-         |  md5(coalesce(string_agg(CASE WHEN c.seg IS NULL THEN s.seg END,
-         |        ' ' ORDER BY s.seg_idx), '')) AS clean_md5
-         |FROM s LEFT JOIN common c ON s.seg = c.seg
-         |GROUP BY s.doc_id ORDER BY s.doc_id""".stripMargin,
-
-    // Luhn folds run FLAT (candidates unnested to rows) — the DuckDB
-    // nested-lambda capture hazard, see text_wordpiece_encode's note.
-    "text_pii_luhn" -> {
-      def luhnSql(v: String, n: String): String =
-        s"""(list_sum(list_transform(range(1, $n + 1),
-           |  i -> CASE WHEN i % 2 = 0 THEN
-           |         CASE WHEN CAST(substr(reverse($v), CAST(i AS INTEGER), 1) AS INTEGER) * 2 > 9
-           |              THEN CAST(substr(reverse($v), CAST(i AS INTEGER), 1) AS INTEGER) * 2 - 9
-           |              ELSE CAST(substr(reverse($v), CAST(i AS INTEGER), 1) AS INTEGER) * 2 END
-           |       ELSE CAST(substr(reverse($v), CAST(i AS INTEGER), 1) AS INTEGER) END)) % 10)""".stripMargin
-      def genSql(v: String): String =
-        s"""list_sum(list_transform(range(1, 16),
-           |  j -> CASE WHEN j % 2 = 1 THEN
-           |         CASE WHEN CAST(substr(reverse($v), CAST(j AS INTEGER), 1) AS INTEGER) * 2 > 9
-           |              THEN CAST(substr(reverse($v), CAST(j AS INTEGER), 1) AS INTEGER) * 2 - 9
-           |              ELSE CAST(substr(reverse($v), CAST(j AS INTEGER), 1) AS INTEGER) * 2 END
-           |       ELSE CAST(substr(reverse($v), CAST(j AS INTEGER), 1) AS INTEGER) END))""".stripMargin
-      s"""WITH base AS (SELECT doc_id, text,
-         |    '4' || lpad(CAST(doc_id AS VARCHAR), 14, '0') AS pay FROM documents),
-         |gs AS (SELECT doc_id, text, pay, ${genSql("pay")} AS s FROM base),
-         |inj AS (SELECT doc_id,
-         |    CASE WHEN doc_id % 5 = 0
-         |           THEN text || ' ' || pay || CAST((10 - (s % 10)) % 10 AS VARCHAR)
-         |         WHEN doc_id % 5 = 1
-         |           THEN text || ' ' || pay || CAST(((10 - (s % 10)) % 10 + 1) % 10 AS VARCHAR)
-         |         ELSE text END AS t
-         |  FROM gs),
-         |sc AS (SELECT doc_id, t, regexp_extract_all(t, '[0-9]{13,19}') AS cands FROM inj),
-         |cx AS (SELECT doc_id, unnest(cands) AS v FROM sc),
-         |cv AS (SELECT doc_id, v,
-         |    CASE WHEN ${luhnSql("v", "len(v)")} = 0 THEN 1 ELSE 0 END AS ok FROM cx),
-         |agg AS (SELECT doc_id,
-         |    CAST(count(*) AS BIGINT) AS n_cc_candidates,
-         |    CAST(sum(ok) AS BIGINT) AS n_cc_valid,
-         |    list(v ORDER BY v) FILTER (WHERE ok = 1) AS valids
-         |  FROM cv GROUP BY doc_id)
-         |SELECT i.doc_id,
-         |       coalesce(a.n_cc_candidates, 0) AS n_cc_candidates,
-         |       coalesce(a.n_cc_valid, 0) AS n_cc_valid,
-         |       md5(CASE WHEN a.valids IS NULL THEN i.t
-         |                ELSE list_reduce(list_prepend(i.t, a.valids),
-         |                       (acc, v) -> replace(acc, v, '[CC]')) END) AS scrub_md5
-         |FROM inj i LEFT JOIN agg a ON a.doc_id = i.doc_id
-         |ORDER BY i.doc_id""".stripMargin
-    },
-
-    "text_pii_scrub" ->
-      """WITH d AS (SELECT doc_id,
-        |    'contact user' || CAST(doc_id AS VARCHAR) || '@example.com or +1 555 000 1234 : ' || text AS t
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(len(regexp_extract_all(t, '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}')) AS BIGINT) AS n_emails,
-        |  CAST(len(regexp_extract_all(t, '\+?[0-9][0-9 -]{7,}[0-9]')) AS BIGINT) AS n_phones,
-        |  md5(regexp_replace(regexp_replace(t,
-        |        '[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}', '[EMAIL]', 'g'),
-        |        '\+?[0-9][0-9 -]{7,}[0-9]', '[PHONE]', 'g')) AS scrub_md5
-        |FROM d ORDER BY doc_id""".stripMargin,
-
-    "text_vocab" ->
-      s"""WITH tok AS (SELECT unnest($tokSql) AS token FROM documents),
-         |c AS (SELECT token, CAST(count(*) AS BIGINT) AS cnt FROM tok GROUP BY token),
-         |r AS (SELECT token, cnt,
-         |        CAST(row_number() OVER (ORDER BY cnt DESC, token) AS BIGINT) AS rank
-         |      FROM c)
-         |SELECT token, cnt, rank FROM r WHERE rank <= 100 ORDER BY rank""".stripMargin,
-
-    "text_heavy_hitters" ->
-      s"""SELECT token, CAST(count(*) AS BIGINT) AS cnt
-         |FROM (SELECT unnest($tokSql) AS token FROM documents)
-         |GROUP BY token ORDER BY token""".stripMargin,
-
-    "corpus_decontaminate" -> {
-      val gram8 = {
-        val parts = (0 until 8).map(j => if (j == 0) "tk[i]" else s"tk[i+$j]")
-          .mkString(" || ' ' || ")
-        s"list_transform(range(1, len(tk) - 6), i -> $parts)"
-      }
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |eg AS (SELECT DISTINCT unnest($gram8) AS g FROM t WHERE doc_id < 50),
-         |tg AS (SELECT doc_id, unnest($gram8) AS g FROM t WHERE doc_id >= 50),
-         |hit AS (SELECT DISTINCT doc_id FROM tg JOIN eg USING (g))
-         |SELECT doc_id FROM documents
-         |WHERE doc_id >= 50 AND doc_id NOT IN (SELECT doc_id FROM hit)
-         |ORDER BY doc_id""".stripMargin
-    },
-
-    "corpus_contamination_report" -> {
-      val gram8 = {
-        val parts = (0 until 8).map(j => if (j == 0) "tk[i]" else s"tk[i+$j]")
-          .mkString(" || ' ' || ")
-        s"list_transform(range(1, len(tk) - 6), i -> $parts)"
-      }
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |eg AS (SELECT DISTINCT unnest($gram8) AS g FROM t WHERE doc_id < 50),
-         |tg AS (SELECT DISTINCT doc_id, g
-         |       FROM (SELECT doc_id, unnest($gram8) AS g FROM t WHERE doc_id >= 50)),
-         |h AS (SELECT tg.doc_id, CAST(count(*) AS BIGINT) AS n_grams,
-         |        CAST(sum(CASE WHEN eg.g IS NOT NULL THEN 1 ELSE 0 END) AS BIGINT) AS n_contaminated
-         |      FROM tg LEFT JOIN eg ON tg.g = eg.g GROUP BY tg.doc_id)
-         |SELECT d.doc_id,
-         |       CAST(COALESCE(h.n_grams, 0) AS BIGINT) AS n_grams,
-         |       CAST(COALESCE(h.n_contaminated, 0) AS BIGINT) AS n_contaminated,
-         |       CAST(CASE WHEN COALESCE(h.n_grams, 0) = 0 THEN 0
-         |            ELSE COALESCE(h.n_contaminated, 0) * 1000 // h.n_grams END AS BIGINT)
-         |         AS contamination_permille
-         |FROM documents d LEFT JOIN h USING (doc_id)
-         |WHERE d.doc_id >= 50 ORDER BY d.doc_id""".stripMargin
-    },
-
-    "corpus_pack" ->
-      s"""WITH t AS (SELECT doc_id, source, CAST(len($tokSql) AS BIGINT) AS n_tokens
-         |           FROM documents),
-         |c AS (SELECT doc_id, source, n_tokens,
-         |        sum(n_tokens) OVER (PARTITION BY source ORDER BY doc_id
-         |                            ROWS UNBOUNDED PRECEDING) AS cum
-         |      FROM t)
-         |SELECT doc_id, source, n_tokens,
-         |       CAST(floor((cum - n_tokens) / 512) AS BIGINT) AS pack_id
-         |FROM c ORDER BY doc_id""".stripMargin,
-
-    "sim_ivf_train" ->
-      s"""${ivfCtes(k = 4, iters = 2)}
-         |SELECT cell, dim, cq AS centroid_q FROM u2 ORDER BY cell, dim""".stripMargin,
-
-    "sim_ivf_train_pp" ->
-      s"""WITH $qCte,
-         |${kppSeedCtes(k = 4, l = 8, rounds = 2)},
-         |${ivfChain(k = 4, iters = 2, emitC0 = false)}
-         |SELECT cell, dim, cq AS centroid_q FROM u2 ORDER BY cell, dim""".stripMargin,
-
-    "sim_ann_ivfpq" -> ivfPqOracle,
-
-    // Stored-model serving twin: identical deterministic result — the
-    // model parquet round-trip changes WHERE the centroids come from,
-    // not what they are.
-    "sim_ann_ivfpq_stored" -> ivfPqOracle,
-
-    // delta encode against the frozen full-corpus model: coarse cell =
-    // nearest trained centroid, codes = per-subspace nearest codebook
-    // cell — the same deterministic chains the other IVFPQ oracles
-    // replay, emitted for the 25 delta vectors only
-    "sim_ann_index_append" ->
-      s"""${pqCtes(m = 4, k = 4, iters = 2)},
-         |${ivfChain(k = 4, iters = 2)},
-         |afin AS (SELECT vec_id, cell,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
-         |  FROM (SELECT q.vec_id, c.cell,
-         |          list_sum(list_transform(range(1, 65),
-         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
-         |        FROM q, c2 c) x)
-         |SELECT f.vec_id, a.cell, f.s AS sub, f.cell AS code
-         |FROM pf f JOIN (SELECT vec_id, cell FROM afin WHERE rn = 1) a USING (vec_id)
-         |WHERE f.rn = 1 AND f.vec_id < 25
-         |ORDER BY vec_id, sub""".stripMargin,
-
-    // Multi-probe serving: query side probes its 2 nearest cells.
-    "sim_ann_ivfpq_nprobe" -> ivfPqOracleProbes(2),
-
-    "sim_ann_ivfpq_refine" -> ivfPqOracleRefine,
-
-    // Residual IVFPQ (faiss by_residual): the PQ chain replays over
-    // rv = qv − assigned-centroid residuals instead of raw vectors;
-    // queries ADC-score their OWN residual (nprobe=1 probes the
-    // query's cell) against the residual codes, same-cell gated.
-    "sim_ann_ivfpq_residual" ->
-      s"""WITH $qCte,
-         |${ivfChain(k = 4, iters = 2)},
-         |afin AS (SELECT vec_id, cell,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
-         |  FROM (SELECT q.vec_id, c.cell,
-         |          list_sum(list_transform(range(1, 65),
-         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
-         |        FROM q, c2 c) x),
-         |cellof AS (SELECT vec_id, cell FROM afin WHERE rn = 1),
-         |rq AS (SELECT q.vec_id, a.cell,
-         |         list_transform(range(1, 65), i -> q.qv[i] - c.cv[i]) AS rv
-         |       FROM q JOIN cellof a USING (vec_id) JOIN c2 c ON a.cell = c.cell),
-         |rsq AS (SELECT vec_id, s, list_transform(range(1, 17),
-         |          i -> rv[s * 16 + i]) AS sqv
-         |        FROM rq, range(0, 4) t(s)),
-         |${pqChain("rsq", k = 4, iters = 2, sd = 16)},
-         |dt AS (SELECT sq.vec_id AS query_id, c.s, c.cell,
-         |         list_sum(list_transform(range(1, 17),
-         |           i -> (sq.sqv[i] - c.cv[i]) * (sq.sqv[i] - c.cv[i]))) AS d
-         |       FROM rsq sq JOIN p2 c ON sq.s = c.s
-         |       WHERE sq.vec_id < 10),
-         |cd AS (SELECT vec_id AS cand_id, s, cell AS code FROM pf WHERE rn = 1),
-         |sc AS (SELECT dt.query_id, cd.cand_id, CAST(sum(dt.d) AS BIGINT) AS adc
-         |       FROM cd JOIN dt ON cd.s = dt.s AND cd.code = dt.cell
-         |       JOIN cellof qa ON qa.vec_id = dt.query_id
-         |       JOIN cellof ca ON ca.vec_id = cd.cand_id
-         |       WHERE qa.cell = ca.cell AND dt.query_id <> cd.cand_id
-         |       GROUP BY dt.query_id, cd.cand_id),
-         |rk AS (SELECT query_id, cand_id, adc,
-         |         row_number() OVER (PARTITION BY query_id ORDER BY adc, cand_id) AS rnk
-         |       FROM sc)
-         |SELECT query_id, cand_id, CAST(rnk AS BIGINT) AS rnk, adc
-         |FROM rk WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
-    "sim_pq_train" ->
-      s"""${pqCtes(m = 4, k = 4, iters = 2)}
-         |SELECT s AS sub, cell, dim, cq AS centroid_q FROM pu2
-         |ORDER BY sub, cell, dim""".stripMargin,
-
-    "sim_pq_codes" ->
-      s"""${pqCtes(m = 4, k = 4, iters = 2)}
-         |SELECT vec_id, s AS sub, cell AS code FROM pf WHERE rn = 1
-         |ORDER BY vec_id, sub""".stripMargin,
-
-    "sim_ann_pq" ->
-      s"""${pqCtes(m = 4, k = 4, iters = 2)},
-         |dt AS (SELECT qx.vec_id AS query_id, c.s, c.cell,
-         |         list_sum(list_transform(range(1, 17),
-         |           i -> (qx.sqv[i] - c.cv[i]) * (qx.sqv[i] - c.cv[i]))) AS d
-         |       FROM (SELECT * FROM sq WHERE vec_id < 10) qx
-         |       JOIN p2 c ON qx.s = c.s),
-         |cd AS (SELECT vec_id AS cand_id, s, cell AS code FROM pf WHERE rn = 1),
-         |sc AS (SELECT dt.query_id, cd.cand_id, CAST(sum(dt.d) AS BIGINT) AS adc
-         |       FROM cd JOIN dt ON cd.s = dt.s AND cd.code = dt.cell
-         |       WHERE dt.query_id <> cd.cand_id
-         |       GROUP BY dt.query_id, cd.cand_id),
-         |rk AS (SELECT query_id, cand_id, adc,
-         |         row_number() OVER (PARTITION BY query_id ORDER BY adc, cand_id) AS rnk
-         |       FROM sc)
-         |SELECT query_id, cand_id, CAST(rnk AS BIGINT) AS rnk, adc
-         |FROM rk WHERE rnk <= 5 ORDER BY query_id, rnk""".stripMargin,
-
-    // Topic-mix audit: replays the sim_ivf_assign chain (identical
-    // integer-exact Lloyd model), then joins documents on id and
-    // groups at (source, cell) with floor-permille shares.
-    "corpus_topic_mix" ->
-      s"""${ivfCtes(k = 4, iters = 2)},
-         |afin AS (SELECT vec_id, cell,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
-         |  FROM (SELECT q.vec_id, c.cell,
-         |          list_sum(list_transform(range(1, 65),
-         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
-         |        FROM q, c2 c) x),
-         |asg AS (SELECT vec_id, cell FROM afin WHERE rn = 1),
-         |j AS (SELECT d.source, a.cell FROM documents d JOIN asg a ON d.doc_id = a.vec_id),
-         |per AS (SELECT source, cell, count(*) AS cnt FROM j GROUP BY source, cell),
-         |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n FROM per GROUP BY source)
-         |SELECT per.source, per.cell, per.cnt,
-         |       CAST(floor(per.cnt * 1000 / tot.n) AS BIGINT) AS permille
-         |FROM per JOIN tot ON per.source = tot.source
-         |ORDER BY per.source, per.cell""".stripMargin,
-
-    // Per-source L1 distance vs the corpus-wide mix over the same
-    // replayed model; missing (source, cell) combos count their full
-    // corpus share via the dense grid.
-    "corpus_topic_drift" ->
-      s"""${ivfCtes(k = 4, iters = 2)},
-         |afin AS (SELECT vec_id, cell,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
-         |  FROM (SELECT q.vec_id, c.cell,
-         |          list_sum(list_transform(range(1, 65),
-         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
-         |        FROM q, c2 c) x),
-         |asg AS (SELECT vec_id, cell FROM afin WHERE rn = 1),
-         |j AS (SELECT d.source, a.cell FROM documents d JOIN asg a ON d.doc_id = a.vec_id),
-         |per AS (SELECT source, cell, CAST(count(*) AS BIGINT) AS cnt FROM j GROUP BY source, cell),
-         |tot AS (SELECT source, CAST(sum(cnt) AS BIGINT) AS n FROM per GROUP BY source),
-         |mix AS (SELECT per.source, per.cell,
-         |          CAST(floor(per.cnt * 1000 / tot.n) AS BIGINT) AS permille
-         |        FROM per JOIN tot ON per.source = tot.source),
-         |gcl AS (SELECT cell, CAST(sum(cnt) AS BIGINT) AS gcnt FROM per GROUP BY cell),
-         |gt AS (SELECT CAST(sum(gcnt) AS BIGINT) AS g FROM gcl),
-         |gp AS (SELECT cell, CAST(floor(gcnt * 1000 / g) AS BIGINT) AS g_permille
-         |       FROM gcl, gt),
-         |grid AS (SELECT s.source, gp.cell, gp.g_permille
-         |         FROM (SELECT DISTINCT source FROM per) s, gp),
-         |dl AS (SELECT grid.source, grid.cell, coalesce(mix.permille, 0) AS permille,
-         |         grid.g_permille
-         |       FROM grid LEFT JOIN mix ON mix.source = grid.source AND mix.cell = grid.cell)
-         |SELECT source, CAST(sum(abs(permille - g_permille)) AS BIGINT) AS l1_permille
-         |FROM dl GROUP BY source ORDER BY source""".stripMargin,
-
-    "sim_ivf_assign" ->
-      s"""${ivfCtes(k = 4, iters = 2)},
-         |afin AS (SELECT vec_id, cell,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
-         |  FROM (SELECT q.vec_id, c.cell,
-         |          list_sum(list_transform(range(1, 65),
-         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
-         |        FROM q, c2 c) x)
-         |SELECT vec_id, cell FROM afin WHERE rn = 1 ORDER BY vec_id""".stripMargin,
-
-    "text_normalize" ->
-      """WITH d AS (SELECT doc_id,
-        |    '<p>Start  HERE</p>' || chr(9) || text || '  <br/>' || chr(10) || 'End ' AS t
-        |  FROM documents),
-        |n AS (SELECT doc_id,
-        |    trim(regexp_replace(lower(regexp_replace(t, '<[^>]*>', ' ', 'g')),
-        |         '[ \t\r\n]+', ' ', 'g')) AS nt
-        |  FROM d)
-        |SELECT doc_id, md5(nt) AS norm_md5, CAST(length(nt) AS BIGINT) AS n_norm_chars
-        |FROM n ORDER BY doc_id""".stripMargin,
-
-    // Extraction replay from the fixture's analytic rules: the kept
-    // set is exactly the 2+id%4 paragraphs (+ the gap-filled figure
-    // label for even ids, ordinal 1 between paragraphs 0 and 1); the
-    // block census counts header(1) + nav(3) + paragraphs + ad(1) +
-    // figure(even) or tags+aside(odd) + footer(1). The paragraph text
-    // is re-spelled verbatim — including the decoded '&' — so the
-    // string_agg comparison proves tokenizer, entity decode, subtree
-    // skips, classification and gap-fill end to end.
-    "text_html_extract" ->
-      """WITH d AS (SELECT doc_id, 2 + doc_id % 4 AS np FROM documents),
-        |paras AS (SELECT doc_id, p * 2 AS ord,
-        |    'the quick data point ' || CAST((doc_id * 7 + p) % 1000 AS VARCHAR) ||
-        |    ' is on the record & file and the value ' ||
-        |    CAST((doc_id + p) % 100 AS VARCHAR) ||
-        |    ' stays in the set for now .' AS txt,
-        |    22 AS words
-        |  FROM (SELECT doc_id, unnest(range(0, np)) AS p FROM d)),
-        |figs AS (SELECT doc_id, 1 AS ord,
-        |    'Figure ' || CAST(doc_id % 10 AS VARCHAR) AS txt, 2 AS words
-        |  FROM d WHERE doc_id % 2 = 0),
-        |kept AS (SELECT * FROM paras UNION ALL SELECT * FROM figs)
-        |SELECT doc_id,
-        |  'Doc ' || CAST(doc_id AS VARCHAR) AS title,
-        |  CAST(9 + doc_id % 4 + doc_id % 2 AS BIGINT) AS n_blocks,
-        |  CAST(count(*) AS BIGINT) AS n_kept,
-        |  CAST(sum(length(txt)) AS BIGINT) AS n_chars,
-        |  CAST(sum(words) AS BIGINT) AS n_words,
-        |  string_agg(txt, chr(10) ORDER BY ord) AS text
-        |FROM kept GROUP BY doc_id ORDER BY doc_id""".stripMargin,
-
-    // LRS replay by brute force: every substring of the 200-char
-    // slice, grouped; repeats (count ≥ 2, overlaps included) ranked
-    // by length DESC then lexicographically — the suffix-array
-    // result must match the exhaustive enumeration exactly.
-    "text_longest_repeat" ->
-      """WITH t AS (SELECT doc_id, substr(text, 1, 200) AS s FROM documents),
-        |pos AS (SELECT doc_id, s, length(s) AS n,
-        |          unnest(range(1, length(s) + 1)) AS i FROM t),
-        |ss AS (SELECT doc_id, substr(s, CAST(i AS INTEGER), CAST(L AS INTEGER)) AS sub, L
-        |       FROM (SELECT doc_id, s, i, unnest(range(1, n - i + 2)) AS L FROM pos)),
-        |rep AS (SELECT doc_id, sub, L FROM ss
-        |        GROUP BY doc_id, sub, L HAVING count(*) >= 2),
-        |best AS (SELECT doc_id, L, sub,
-        |         row_number() OVER (PARTITION BY doc_id ORDER BY L DESC, sub ASC) AS rn
-        |         FROM rep)
-        |SELECT t.doc_id, CAST(coalesce(b.L, 0) AS BIGINT) AS lrs_len,
-        |       coalesce(b.sub, '') AS lrs
-        |FROM t LEFT JOIN (SELECT doc_id, L, sub FROM best WHERE rn = 1) b
-        |  ON b.doc_id = t.doc_id
-        |ORDER BY t.doc_id""".stripMargin,
-
-    // NFC audit replay: the same injected suffixes built from chr()
-    // codepoints (769 = combining acute, 233 = precomposed e-acute,
-    // 12459/12441 = katakana KA + combining voiced mark), normalized
-    // by DuckDB's utf8proc — md5 of the NFC form must match the JDK
-    // normalizer's output byte for byte.
-    "text_nfc_audit" ->
-      """WITH t AS (SELECT doc_id,
-        |  text || CASE doc_id % 4
-        |    WHEN 0 THEN ' cafe' || chr(769)
-        |    WHEN 1 THEN ' caf' || chr(233)
-        |    WHEN 2 THEN ' ' || chr(12459) || chr(12441)
-        |    ELSE '' END AS s
-        |  FROM documents)
-        |SELECT doc_id,
-        |  CAST(CASE WHEN s = nfc_normalize(s) THEN 1 ELSE 0 END AS BIGINT) AS is_nfc,
-        |  CAST(length(s) AS BIGINT) AS cp_raw,
-        |  CAST(length(nfc_normalize(s)) AS BIGINT) AS cp_nfc,
-        |  md5(nfc_normalize(s)) AS nfc_md5
-        |FROM t ORDER BY doc_id""".stripMargin,
-
-    "sim_ann_ivf_trained" ->
-      s"""${ivfCtes(k = 4, iters = 2)},
-         |$ivfServeCtes""".stripMargin,
-
-    // Same serving chain over the k-means||-trained quantizer: proves
-    // the scalable seeding feeds the production single-cell serve end
-    // to end (oracle replays candidate rounds + weighting + Lloyd +
-    // assignment + cosine top-k).
-    "sim_ann_ivf_pp" ->
-      s"""WITH $qCte,
-         |${kppSeedCtes(k = 4, l = 8, rounds = 2)},
-         |${ivfChain(k = 4, iters = 2, emitC0 = false)},
-         |$ivfServeCtes""".stripMargin,
-
-    "sim_ann_ivf_nprobe" -> ivfNprobeOracle,
-
-    // Stored serving must equal the in-memory trained pipeline — the
-    // flat-index twin shares the oracle verbatim.
-    "sim_ann_ivf_flat_stored" -> ivfNprobeOracle,
-
-    // The same IVF chain with the nprobe list unnested, intersected
-    // against the brute-force top-5 truth per (nprobe, query).
-    "sim_nprobe_recall" ->
-      s"""${ivfCtes(k = 4, iters = 2)},
-         |afin AS (SELECT vec_id, cell,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
-         |  FROM (SELECT q.vec_id, c.cell,
-         |          list_sum(list_transform(range(1, 65),
-         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
-         |        FROM q, c2 c) x),
-         |asg AS (SELECT vec_id, cell FROM afin WHERE rn = 1),
-         |e AS (SELECT e0.vec_id, e0.embedding, a.cell,
-         |        ${dotSql("e0.embedding", "e0.embedding")} AS n2
-         |      FROM embeddings e0 JOIN asg a ON e0.vec_id = a.vec_id),
-         |np AS (SELECT unnest([1, 2, 4]) AS nprobe),
-         |probes AS (SELECT np.nprobe, a.vec_id AS query_id, a.cell
-         |           FROM afin a CROSS JOIN np
-         |           WHERE a.rn <= np.nprobe AND a.vec_id < 10),
-         |qq AS (SELECT p.nprobe, p.query_id, e.embedding AS qv, e.n2 AS qn2,
-         |              p.cell AS qcell
-         |       FROM probes p JOIN e ON p.query_id = e.vec_id),
-         |scored AS (SELECT nprobe, query_id, e.vec_id AS cand_id,
-         |             round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
-         |           FROM qq JOIN e ON qcell = e.cell AND query_id <> e.vec_id),
-         |ak AS (SELECT nprobe, query_id, cand_id FROM (
-         |         SELECT nprobe, query_id, cand_id, row_number() OVER (
-         |           PARTITION BY nprobe, query_id ORDER BY cos DESC, cand_id) AS rnk
-         |         FROM scored) x WHERE rnk <= 5),
-         |tq AS (SELECT vec_id AS query_id, embedding AS qv, n2 AS qn2
-         |       FROM e WHERE vec_id < 10),
-         |tsc AS (SELECT query_id, e.vec_id AS cand_id,
-         |          round(${dotSql("qv", "e.embedding")} / sqrt(qn2 * e.n2), 4) AS cos
-         |        FROM tq JOIN e ON query_id <> e.vec_id),
-         |tk AS (SELECT query_id, cand_id FROM (
-         |         SELECT query_id, cand_id, row_number() OVER (
-         |           PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-         |         FROM tsc) x WHERE rnk <= 5),
-         |hits AS (SELECT ak.nprobe, ak.query_id, CAST(count(*) AS BIGINT) AS n_hits
-         |         FROM tk JOIN ak ON tk.query_id = ak.query_id
-         |                        AND tk.cand_id = ak.cand_id
-         |         GROUP BY 1, 2)
-         |SELECT np.nprobe, q.query_id,
-         |  CAST(coalesce(h.n_hits, 0) AS BIGINT) AS n_hits,
-         |  CAST(coalesce(h.n_hits, 0) * 1000 // 5 AS BIGINT) AS recall_permille
-         |FROM (SELECT DISTINCT query_id FROM tk) q CROSS JOIN np
-         |LEFT JOIN hits h ON h.nprobe = np.nprobe AND h.query_id = q.query_id
-         |ORDER BY np.nprobe, q.query_id""".stripMargin,
-
-    "dedup_semantic" ->
-      s"""${ivfCtes(k = 16, iters = 2)},
-         |afin AS (SELECT vec_id, cell,
-         |    row_number() OVER (PARTITION BY vec_id ORDER BY s, cell) AS rn
-         |  FROM (SELECT q.vec_id, c.cell,
-         |          list_sum(list_transform(range(1, 65),
-         |            i -> (q.qv[i] - c.cv[i]) * (q.qv[i] - c.cv[i]))) AS s
-         |        FROM q, c2 c) x),
-         |asg AS (SELECT vec_id, cell FROM afin WHERE rn = 1),
-         |e AS (SELECT e0.vec_id, e0.embedding, a.cell,
-         |        ${dotSql("e0.embedding", "e0.embedding")} AS n2
-         |      FROM embeddings e0 JOIN asg a ON e0.vec_id = a.vec_id),
-         |losers AS (SELECT DISTINCT b.vec_id
-         |           FROM e a JOIN e b ON a.cell = b.cell AND a.vec_id < b.vec_id
-         |           WHERE round(${dotSql("a.embedding", "b.embedding")}
-         |                       / sqrt(a.n2 * b.n2), 4) >= 0.3)
-         |SELECT vec_id, cell FROM e
-         |WHERE vec_id NOT IN (SELECT vec_id FROM losers)
-         |ORDER BY vec_id""".stripMargin,
-
-    "sim_quantize" ->
-      s"""WITH q0 AS (SELECT vec_id, list_transform(range(1, 65),
-         |        i -> CAST(floor(embedding[i]::DOUBLE * 10000 + 0.5) AS BIGINT)) AS qv
-         |      FROM embeddings),
-         |mx AS (SELECT vec_id, qv,
-         |         list_max(list_transform(qv, x -> abs(x))) AS amax FROM q0),
-         |cd AS (SELECT vec_id, amax,
-         |         CASE WHEN amax = 0 THEN list_transform(qv, x -> CAST(0 AS BIGINT))
-         |              ELSE list_transform(qv,
-         |                x -> CAST(floor(x * 127.0 / amax) AS BIGINT)) END AS codes
-         |       FROM mx)
-         |SELECT vec_id, amax,
-         |  CAST(list_sum(list_transform(codes, x -> x * x)) AS BIGINT) AS csq,
-         |  md5(array_to_string(codes, ',')) AS codes_md5
-         |FROM cd ORDER BY vec_id""".stripMargin,
-
-    "sim_ann_sq8" ->
-      s"""WITH q0 AS (SELECT vec_id, list_transform(range(1, 65),
-         |        i -> CAST(floor(embedding[i]::DOUBLE * 10000 + 0.5) AS BIGINT)) AS qv
-         |      FROM embeddings),
-         |mx AS (SELECT vec_id, qv,
-         |         list_max(list_transform(qv, x -> abs(x))) AS amax FROM q0),
-         |cd AS (SELECT vec_id, amax,
-         |         CASE WHEN amax = 0 THEN list_transform(qv, x -> CAST(0 AS BIGINT))
-         |              ELSE list_transform(qv,
-         |                x -> CAST(floor(x * 127.0 / amax) AS BIGINT)) END AS codes
-         |       FROM mx),
-         |c AS (SELECT vec_id AS cand_id, codes,
-         |        list_sum(list_transform(codes, x -> x * x)) AS csq FROM cd),
-         |qq AS (SELECT vec_id AS query_id, qv,
-         |         list_sum(list_transform(qv, x -> x * x)) AS qn2
-         |       FROM q0 WHERE vec_id < 10),
-         |scored AS (SELECT query_id, cand_id,
-         |             round(list_sum(list_transform(range(1, 65),
-         |                     i -> qv[i] * codes[i]))
-         |                   / sqrt(csq::DOUBLE * qn2::DOUBLE), 4) AS cos
-         |           FROM qq JOIN c ON query_id <> cand_id
-         |           WHERE csq > 0 AND qn2 > 0),
-         |ranked AS (SELECT query_id, cand_id, cos,
-         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-         |           FROM scored)
-         |SELECT query_id, cand_id, rnk, cos FROM ranked WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
-
-    // Binary quantization replayed end-to-end: per-dim integer mean
-    // thresholds (x·N > Σ, no division), sign bits packed as sums of
-    // distinct 2^(31−pos%32) masks into two 32-bit words, Hamming
-    // shortlist (bit_count ∘ xor per word), exact cosine re-rank.
-    "sim_ann_binary" ->
-      s"""WITH q0 AS (SELECT vec_id, list_transform(range(1, 65),
-         |        i -> CAST(floor(embedding[i]::DOUBLE * 10000 + 0.5) AS BIGINT)) AS qv
-         |      FROM embeddings),
-         |pe AS (SELECT vec_id, CAST(i - 1 AS BIGINT) AS pos, qv[CAST(i AS INTEGER)] AS x
-         |       FROM q0, range(1, 65) t(i)),
-         |thr AS (SELECT pos, CAST(sum(x) AS BIGINT) AS s, CAST(count(*) AS BIGINT) AS n,
-         |          pos // 32 AS word,
-         |          CAST(1 AS BIGINT) << CAST(31 - pos % 32 AS INTEGER) AS w
-         |        FROM pe GROUP BY pos),
-         |bits AS (SELECT pe.vec_id, thr.word,
-         |           CAST(sum(CASE WHEN pe.x * thr.n > thr.s THEN thr.w ELSE 0 END) AS BIGINT) AS wv
-         |         FROM pe JOIN thr USING (pos) GROUP BY pe.vec_id, thr.word),
-         |codes AS (SELECT vec_id, list(wv ORDER BY word) AS code FROM bits GROUP BY vec_id),
-         |qc AS (SELECT vec_id AS query_id, code AS qcode FROM codes WHERE vec_id < 10),
-         |scored AS (SELECT query_id, c.vec_id AS cand_id,
-         |             CAST(bit_count(xor(qcode[1], c.code[1])) +
-         |                  bit_count(xor(qcode[2], c.code[2])) AS BIGINT) AS ham
-         |           FROM qc, codes c WHERE query_id <> c.vec_id),
-         |short AS (SELECT query_id, cand_id, ham FROM (
-         |            SELECT query_id, cand_id, ham,
-         |              row_number() OVER (PARTITION BY query_id ORDER BY ham, cand_id) AS hrank
-         |            FROM scored) x WHERE hrank <= 20),
-         |e AS (SELECT vec_id, embedding, ${dotSql("embedding", "embedding")} AS n2
-         |      FROM embeddings),
-         |rr AS (SELECT s.query_id, s.cand_id, s.ham,
-         |         round(${dotSql("qe.embedding", "ce.embedding")} / sqrt(qe.n2 * ce.n2), 4) AS cos
-         |       FROM short s JOIN e qe ON qe.vec_id = s.query_id
-         |                    JOIN e ce ON ce.vec_id = s.cand_id),
-         |ranked AS (SELECT query_id, cand_id, ham, cos,
-         |             row_number() OVER (PARTITION BY query_id ORDER BY cos DESC, cand_id) AS rnk
-         |           FROM rr)
-         |SELECT query_id, cand_id, rnk, cos, ham FROM ranked WHERE rnk <= 5
-         |ORDER BY query_id, rnk""".stripMargin,
-
-    // Recomputes the synthetic sawtooth analytically (the fixture is
-    // arithmetic in doc_id) — a hash-match proves the Spark side read
-    // the REAL PCM bytes back out of the data chunk.
-    "mm_audio_energy" ->
-      """WITH s AS (SELECT doc_id,
-        |  unnest(list_transform(range(0, 64 + doc_id % 64),
-        |    i -> {'i': i, 'v': (doc_id * 31 + i * 17) % 2048 - 1024}),
-        |    recursive := true) FROM documents),
-        |f AS (SELECT doc_id, i // 25 AS frame_idx, v,
-        |        lag(v) OVER (PARTITION BY doc_id, i // 25 ORDER BY i) AS pv
-        |      FROM s)
-        |SELECT doc_id, CAST(frame_idx AS BIGINT) AS frame_idx,
-        |  CAST(count(*) AS BIGINT) AS n_samples,
-        |  CAST(sum(v * v) AS BIGINT) // CAST(count(*) AS BIGINT) AS energy,
-        |  CAST(max(abs(v)) AS BIGINT) AS peak,
-        |  CAST(coalesce(sum(CASE WHEN pv * v < 0 THEN 1 END), 0) AS BIGINT)
-        |    AS zero_crossings
-        |FROM f GROUP BY doc_id, frame_idx ORDER BY doc_id, frame_idx""".stripMargin,
-
-    "mm_audio_silence" ->
-      """WITH s AS (SELECT doc_id,
-        |  unnest(list_transform(range(0, 64 + doc_id % 64),
-        |    i -> {'i': i, 'v': (doc_id * 31 + i * 17) % 2048 - 1024}),
-        |    recursive := true) FROM documents),
-        |f AS (SELECT doc_id, i // 25 AS frame_idx, v FROM s),
-        |e AS (SELECT doc_id, frame_idx,
-        |        CAST(sum(v * v) AS BIGINT) // CAST(count(*) AS BIGINT) AS energy
-        |      FROM f GROUP BY doc_id, frame_idx),
-        |q AS (SELECT doc_id, frame_idx,
-        |        frame_idx - row_number() OVER (PARTITION BY doc_id
-        |          ORDER BY frame_idx) AS grp
-        |      FROM e WHERE energy <= 250000)
-        |SELECT doc_id, CAST(min(frame_idx) AS BIGINT) AS seg_start,
-        |       CAST(max(frame_idx) AS BIGINT) AS seg_end,
-        |       CAST(count(*) AS BIGINT) AS n_frames
-        |FROM q GROUP BY doc_id, grp ORDER BY doc_id, seg_start""".stripMargin,
-
-    // NB DuckDB list slicing is INCLUSIVE at negative ends (acc[:-1]
-    // keeps the last element) — all-but-last must be acc[:len(acc)-1].
-    "text_bpe_merges" -> {
-      def iter(i: Int): String =
-        s"""p$i AS (SELECT l, r, CAST(sum(cnt) AS BIGINT) AS pair_cnt
-           |       FROM (SELECT cnt, unnest(list_transform(range(1, len(syms)),
-           |               j -> {'l': syms[j], 'r': syms[j+1]}), recursive := true)
-           |             FROM w${i - 1} WHERE len(syms) >= 2)
-           |       GROUP BY l, r),
-           |m$i AS (SELECT l, r, pair_cnt FROM p$i
-           |        ORDER BY pair_cnt DESC, l, r LIMIT 1),
-           |w$i AS (SELECT cnt, list_reduce(list_transform(syms, s -> [s]),
-           |         (acc, x) -> CASE WHEN acc[-1] = l AND x[1] = r
-           |                     THEN list_append(acc[:len(acc)-1], l || r)
-           |                     ELSE list_concat(acc, x) END) AS syms
-           |       FROM w${i - 1} CROSS JOIN m$i)""".stripMargin
-      s"""WITH tok AS (SELECT unnest($tokSql) AS word FROM documents),
-         |w0 AS (SELECT CAST(count(*) AS BIGINT) AS cnt,
-         |         list_transform(range(1, len(word)+1), i -> word[i:i]) AS syms
-         |       FROM tok GROUP BY word),
-         |${iter(1)},
-         |${iter(2)},
-         |${iter(3)},
-         |u AS (SELECT CAST(1 AS BIGINT) AS merge_rank, l AS "left", r AS "right",
-         |             l || r AS merged, pair_cnt AS cnt FROM m1
-         |      UNION ALL SELECT 2, l, r, l || r, pair_cnt FROM m2
-         |      UNION ALL SELECT 3, l, r, l || r, pair_cnt FROM m3)
-         |SELECT * FROM u ORDER BY merge_rank""".stripMargin
-    },
-
-    "text_bpe_encode" ->
-      s"""WITH $bpeEncodeCtes
-         |SELECT doc_id, n_words, n_chars, n_bpe_tokens,
-         |  CASE WHEN n_bpe_tokens > 0 THEN (n_chars * 1000) // n_bpe_tokens
-         |       ELSE 0 END AS compression_permille
-         |FROM e ORDER BY doc_id""".stripMargin,
-
-    "text_wordpiece_vocab" ->
-      s"""WITH $wpVocabCtes
-         |SELECT piece, cnt FROM wvocab ORDER BY piece""".stripMargin,
-
-    "text_unigram_vocab" ->
-      s"""WITH $uniVocabCtes
-         |SELECT piece, cnt, score FROM uvocab ORDER BY piece""".stripMargin,
-
-    // Viterbi as a recursive CTE: dp arrays (tots, nps) carried per
-    // word, one iteration per character position; candidates at
-    // position i are the score-bearing grid pieces ending there
-    // (single-char OOV at score 0); the argmax is a lexicographic
-    // struct max over (−np, tot, l) — fewest pieces, then highest
-    // score, then longer final piece — the identical comparison the
-    // Spark fold's array_max(struct(m,t,l)) performs.
-    "text_unigram_encode" ->
-      s"""WITH RECURSIVE $uniVocabCtes,
-         |$uniEncodeCtes,
-         |ue2 AS (SELECT d.doc_id, CAST(len($tokSql) AS BIGINT) AS n_words,
-         |          CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_chars,
-         |          coalesce(upd.n_pieces, 0) AS n_pieces,
-         |          coalesce(upd.total_score, 0) AS total_score
-         |        FROM documents d LEFT JOIN upd ON upd.doc_id = d.doc_id)
-         |SELECT doc_id, n_words, n_chars, n_pieces, total_score,
-         |  CASE WHEN n_pieces > 0 THEN (n_chars * 1000) // n_pieces
-         |       ELSE 0 END AS compression_permille
-         |FROM ue2 ORDER BY doc_id""".stripMargin,
-
-    "text_wordpiece_vocab_pos" ->
-      s"""WITH $wpPosVocabCtes
-         |SELECT piece, at_start, cnt FROM wvocab ORDER BY piece, at_start""".stripMargin,
-
-    "text_wordpiece_encode_pos" -> wpPosEncodeOracle,
-
-    // NOTE the per-word fold runs FLAT over the distinct-word rows and
-    // joins back per doc (the Spark plan's own shape) — NOT nested as
-    // list_transform(tk, w -> list_reduce(...)): DuckDB 1.0's lambda
-    // vectorization evaluates a two-level capture of `w` against
-    // misaligned rows (observed: the same word folding to 4 in one
-    // list position and 5 in another), so the nested form is wrong
-    // nondeterministically. Single-level captures (w, vs as plain
-    // columns) are sound — the bpe_encode oracle's nested lambdas
-    // survive because their inner fold only captures its own
-    // transform variable.
-    "text_wordpiece_encode" ->
-      s"""WITH $wpVocabCtes,
-         |$wpEncodeCtes,
-         |e2 AS (SELECT d.doc_id, CAST(len($tokSql) AS BIGINT) AS n_words,
-         |         CAST(length(replace(text, ' ', '')) AS BIGINT) AS n_chars,
-         |         coalesce(pd.n_wp_tokens, 0) AS n_wp_tokens
-         |       FROM documents d LEFT JOIN pd ON pd.doc_id = d.doc_id)
-         |SELECT doc_id, n_words, n_chars, n_wp_tokens,
-         |  CASE WHEN n_wp_tokens > 0 THEN (n_chars * 1000) // n_wp_tokens
-         |       ELSE 0 END AS compression_permille
-         |FROM e2 ORDER BY doc_id""".stripMargin,
-
-    // All three tokenizer chains replayed in ONE statement (the CTE
-    // sets are disjoint by prefix; aliases shadow same-named CTEs
-    // inside the recursive step).
-    "corpus_tokenizer_eval" ->
-      s"""WITH RECURSIVE $bpeEncodeCtes,
-         |$wpVocabCtes,
-         |$wpEncodeCtes,
-         |$uniVocabCtes,
-         |$uniEncodeCtes
-         |SELECT e.doc_id, e.n_words, e.n_chars, e.n_bpe_tokens,
-         |  coalesce(pd.n_wp_tokens, 0) AS n_wp_tokens,
-         |  coalesce(upd.n_pieces, 0) AS n_uni_pieces
-         |FROM e LEFT JOIN pd ON pd.doc_id = e.doc_id
-         |       LEFT JOIN upd ON upd.doc_id = e.doc_id
-         |ORDER BY e.doc_id""".stripMargin,
-
-    "corpus_pack_bpe" ->
-      s"""WITH $bpeEncodeCtes,
-         |pt AS (SELECT e.doc_id, d2.source, e.n_bpe_tokens,
-         |         sum(e.n_bpe_tokens) OVER (PARTITION BY d2.source ORDER BY e.doc_id
-         |                                   ROWS UNBOUNDED PRECEDING) AS cum
-         |       FROM e JOIN documents d2 ON d2.doc_id = e.doc_id)
-         |SELECT doc_id, source, n_bpe_tokens,
-         |       CAST(floor((cum - n_bpe_tokens) / 2048) AS BIGINT) AS pack_id
-         |FROM pt ORDER BY doc_id""".stripMargin,
-
-    "text_tfidf" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($tokSql) AS term FROM documents),
-         |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |       FROM tok GROUP BY doc_id, term),
-         |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-         |sc AS (SELECT doc_id, term, tf, df, tf * 1000000 // df AS score_micro
-         |       FROM tf JOIN df USING (term)),
-         |r AS (SELECT *, CAST(row_number() OVER (PARTITION BY doc_id
-         |         ORDER BY score_micro DESC, term) AS BIGINT) AS "rank" FROM sc)
-         |SELECT doc_id, term, tf, df, score_micro, "rank" FROM r
-         |WHERE "rank" <= 5 ORDER BY doc_id, "rank"""".stripMargin,
-
-    "sim_bm25" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($tokSql) AS term FROM documents),
-         |dl AS (SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS dl FROM documents),
-         |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |         CAST(sum(dl) AS BIGINT) AS total_tokens FROM dl),
-         |q AS (SELECT unnest(['spark', 'filter', 'join']) AS term),
-         |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |       FROM tok JOIN q USING (term) GROUP BY doc_id, term),
-         |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-         |c AS (SELECT tf.doc_id, tf.tf,
-         |        (1000 * (2 * (st.n_docs - df.df) + 1)) // (2 * df.df + 1) AS idf_milli,
-         |        (1000 * dl.dl * st.n_docs) // st.total_tokens AS len_ratio_milli
-         |      FROM tf JOIN df USING (term)
-         |      JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN st),
-         |s AS (SELECT doc_id,
-         |        CAST(sum((idf_milli * 22000 * tf)
-         |          // (10000 * tf + 3000 + 9 * len_ratio_milli)) AS BIGINT) AS score_milli,
-         |        CAST(count(*) AS BIGINT) AS n_hit_terms
-         |      FROM c GROUP BY doc_id)
-         |SELECT doc_id, score_milli, n_hit_terms FROM s
-         |ORDER BY score_milli DESC, doc_id LIMIT 20""".stripMargin,
-
-    // both rankers replayed, ranks fused as floor(1e9/(60+rank)) sums
-    "sim_rrf_fusion" ->
-      s"""WITH tok AS (SELECT doc_id, unnest($tokSql) AS term FROM documents),
-         |dl AS (SELECT doc_id, CAST(len($tokSql) AS BIGINT) AS dl FROM documents),
-         |st AS (SELECT CAST(count(*) AS BIGINT) AS n_docs,
-         |         CAST(sum(dl) AS BIGINT) AS total_tokens FROM dl),
-         |q AS (SELECT unnest(['spark', 'filter', 'join']) AS term),
-         |tf AS (SELECT doc_id, term, CAST(count(*) AS BIGINT) AS tf
-         |       FROM tok JOIN q USING (term) GROUP BY doc_id, term),
-         |df AS (SELECT term, CAST(count(*) AS BIGINT) AS df FROM tf GROUP BY term),
-         |c AS (SELECT tf.doc_id, tf.tf,
-         |        (1000 * (2 * (st.n_docs - df.df) + 1)) // (2 * df.df + 1) AS idf_milli,
-         |        (1000 * dl.dl * st.n_docs) // st.total_tokens AS len_ratio_milli
-         |      FROM tf JOIN df USING (term)
-         |      JOIN dl ON tf.doc_id = dl.doc_id CROSS JOIN st),
-         |bm0 AS (SELECT doc_id,
-         |          CAST(sum((idf_milli * 22000 * tf)
-         |            // (10000 * tf + 3000 + 9 * len_ratio_milli)) AS BIGINT) AS score_milli
-         |        FROM c GROUP BY doc_id
-         |        ORDER BY score_milli DESC, doc_id LIMIT 20),
-         |bm AS (SELECT doc_id, CAST(row_number() OVER
-         |         (ORDER BY score_milli DESC, doc_id) AS BIGINT) AS rank FROM bm0),
-         |ql0 AS (SELECT tf.doc_id, CAST(sum(tf.tf) AS BIGINT) AS tf_total
-         |        FROM tf GROUP BY tf.doc_id),
-         |ql1 AS (SELECT ql0.doc_id,
-         |          (1000000 * ql0.tf_total) // dl.dl AS score_micro
-         |        FROM ql0 JOIN dl ON ql0.doc_id = dl.doc_id
-         |        ORDER BY score_micro DESC, ql0.doc_id LIMIT 20),
-         |ql AS (SELECT doc_id, CAST(row_number() OVER
-         |         (ORDER BY score_micro DESC, doc_id) AS BIGINT) AS rank FROM ql1),
-         |u AS (SELECT doc_id, 1000000000 // (60 + rank) AS pt FROM bm
-         |      UNION ALL SELECT doc_id, 1000000000 // (60 + rank) AS pt FROM ql),
-         |f AS (SELECT doc_id, CAST(sum(pt) AS BIGINT) AS rrf_micro,
-         |        CAST(count(*) AS BIGINT) AS n_lists
-         |      FROM u GROUP BY doc_id
-         |      ORDER BY rrf_micro DESC, doc_id LIMIT 10)
-         |SELECT doc_id, rrf_micro, n_lists FROM f
-         |ORDER BY rrf_micro DESC, doc_id""".stripMargin,
-
-    // 1-based positions here vs posexplode's 0-based on the Spark side:
-    // islands and span lengths use only position DIFFERENCES, so the
-    // offset cancels and never reaches the output.
-    "dedup_substring" ->
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |g AS (SELECT doc_id, unnest(list_transform(range(1, len(tk) - 6),
-         |        i -> {'pos': i, 'gram': array_to_string(tk[i:i+7], ' ')}),
-         |        recursive := true) FROM t),
-         |sh AS (SELECT gram FROM g GROUP BY gram HAVING count(DISTINCT doc_id) >= 2),
-         |h AS (SELECT doc_id, pos FROM g JOIN sh USING (gram)),
-         |i AS (SELECT doc_id, pos,
-         |        pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp FROM h),
-         |sp AS (SELECT doc_id, grp, min(pos) AS s, max(pos) AS e,
-         |         count(*) AS n_grams FROM i GROUP BY doc_id, grp),
-         |pd AS (SELECT doc_id, CAST(sum(n_grams) AS BIGINT) AS n_shared_grams,
-         |         CAST(count(*) AS BIGINT) AS n_spans,
-         |         CAST(len(list_distinct(flatten(list(range(s, e + 8)))))
-         |           AS BIGINT) AS covered_tokens,
-         |         CAST(max(e - s + 8) AS BIGINT) AS max_span_tokens
-         |       FROM sp GROUP BY doc_id),
-         |n AS (SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens FROM t)
-         |SELECT pd.doc_id, n_shared_grams, n_spans, covered_tokens, max_span_tokens,
-         |       n_tokens, covered_tokens * 1000 // n_tokens AS repeated_permille
-         |FROM pd JOIN n USING (doc_id) ORDER BY pd.doc_id""".stripMargin,
-
-    // Same 1-based-vs-0-based note as dedup_substring: only position
-    // DIFFERENCES and counts reach the output, so the offset cancels.
-    "dedup_substring_strip" ->
-      s"""WITH t AS (SELECT doc_id, $tokSql AS tk FROM documents),
-         |g AS (SELECT doc_id, unnest(list_transform(range(1, len(tk) - 6),
-         |        i -> {'pos': i, 'gram': array_to_string(tk[i:i+7], ' ')}),
-         |        recursive := true) FROM t),
-         |gm AS (SELECT gram, min(doc_id) AS min_doc FROM g GROUP BY gram
-         |       HAVING count(DISTINCT doc_id) >= 2),
-         |rem AS (SELECT g.doc_id, g.pos FROM g JOIN gm USING (gram)
-         |        WHERE g.doc_id <> gm.min_doc),
-         |i AS (SELECT doc_id, pos,
-         |        pos - row_number() OVER (PARTITION BY doc_id ORDER BY pos) AS grp
-         |      FROM rem),
-         |sp AS (SELECT doc_id, min(pos) AS s, max(pos) AS e FROM i
-         |       GROUP BY doc_id, grp),
-         |cov AS (SELECT doc_id, list_distinct(flatten(list(range(s, e + 8)))) AS cv
-         |        FROM sp GROUP BY doc_id),
-         |k AS (SELECT t.doc_id, tk, coalesce(cv, CAST([] AS BIGINT[])) AS cv
-         |      FROM t LEFT JOIN cov USING (doc_id))
-         |SELECT doc_id, CAST(len(tk) AS BIGINT) AS n_tokens,
-         |  CAST(len(cv) AS BIGINT) AS n_removed,
-         |  md5(coalesce(array_to_string(list_transform(
-         |    list_filter(list_transform(range(1, len(tk) + 1), j -> {'j': j, 'w': tk[j]}),
-         |      x -> NOT list_contains(cv, x.j)),
-         |    x -> x.w), ' '), '')) AS clean_md5
-         |FROM k ORDER BY doc_id""".stripMargin,
-
-    "rel_funnel" ->
-      """WITH e AS (SELECT user_id, event_type,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS sec
-        |           FROM events),
-        |s1 AS (SELECT user_id, min(sec) AS t FROM e
-        |       WHERE event_type = 'view' GROUP BY user_id),
-        |s2 AS (SELECT e.user_id, min(sec) AS t FROM e JOIN s1 USING (user_id)
-        |       WHERE event_type = 'click' AND sec > s1.t GROUP BY e.user_id),
-        |s3 AS (SELECT e.user_id, min(sec) AS t FROM e JOIN s2 USING (user_id)
-        |       WHERE event_type = 'purchase' AND sec > s2.t GROUP BY e.user_id),
-        |b AS (SELECT CAST(count(*) AS BIGINT) AS base FROM s1),
-        |u AS (SELECT CAST(1 AS BIGINT) AS stage, 'view' AS step,
-        |             CAST(count(*) AS BIGINT) AS n_users FROM s1
-        |      UNION ALL SELECT 2, 'click', count(*) FROM s2
-        |      UNION ALL SELECT 3, 'purchase', count(*) FROM s3)
-        |SELECT stage, step, n_users,
-        |       CASE WHEN base > 0 THEN (n_users * 1000) // base END AS conv_permille
-        |FROM u CROSS JOIN b ORDER BY stage""".stripMargin,
-
-    "rel_fk_audit" -> {
-      def edge(name: String, child: String, fk: String, parent: String,
-               pk: String): String =
-        s"""SELECT '$name' AS relation,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM $child) AS n_rows,
-           |  (SELECT CAST(count(*) - count($fk) AS BIGINT) FROM $child) AS n_null_fk,
-           |  (SELECT CAST(count(*) AS BIGINT) FROM $child c
-           |   WHERE c.$fk IS NOT NULL
-           |     AND NOT EXISTS (SELECT 1 FROM $parent p
-           |                     WHERE p.$pk = c.$fk)) AS n_orphans""".stripMargin
-      Seq(
-        edge("lineitem.l_orderkey->orders", "lineitem", "l_orderkey", "orders", "o_orderkey"),
-        edge("orders.o_custkey->customer", "orders", "o_custkey", "customer", "c_custkey"),
-        edge("customer.c_nationkey->nation", "customer", "c_nationkey", "nation", "n_nationkey"),
-        edge("supplier.s_nationkey->nation", "supplier", "s_nationkey", "nation", "n_nationkey"))
-        .mkString("", "\nUNION ALL\n", "\nORDER BY relation")
-    },
-
-    "rel_retention" ->
-      """WITH a AS (SELECT DISTINCT user_id,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) // 86400 AS period
-        |           FROM events),
-        |c AS (SELECT user_id, min(period) AS cohort FROM a GROUP BY user_id),
-        |n AS (SELECT cohort, a.period - cohort AS "offset",
-        |             CAST(count(*) AS BIGINT) AS n_users
-        |      FROM a JOIN c USING (user_id) GROUP BY cohort, a.period - cohort),
-        |b AS (SELECT cohort, n_users AS base_users FROM n WHERE "offset" = 0)
-        |SELECT n.cohort, "offset", n.n_users,
-        |       (n.n_users * 1000) // base_users AS retained_permille
-        |FROM n JOIN b USING (cohort) ORDER BY n.cohort, "offset"""".stripMargin,
-
-    "rel_skew_profile" ->
-      s"""WITH c AS (SELECT l_suppkey, CAST(count(*) AS BIGINT) AS cnt
-         |           FROM lineitem GROUP BY l_suppkey),
-         |t AS (SELECT CAST(sum(cnt) AS BIGINT) AS n_rows,
-         |        CAST(count(*) AS BIGINT) AS n_keys,
-         |        CAST(max(cnt) AS BIGINT) AS max_cnt FROM c),
-         |tp AS (SELECT CAST(coalesce(sum(cnt), 0) AS BIGINT) AS topn_rows
-         |       FROM (SELECT cnt FROM c ORDER BY cnt DESC, l_suppkey LIMIT 10))
-         |SELECT n_rows, n_keys, max_cnt, n_rows // n_keys AS avg_cnt,
-         |       (max_cnt * n_keys * 1000) // n_rows AS skew_ratio_permille,
-         |       (max_cnt * 1000) // n_rows AS top1_permille,
-         |       (topn_rows * 1000) // n_rows AS topn_permille
-         |FROM t CROSS JOIN tp""".stripMargin,
-
-    // Plain-comparison reconciliation twin of the Spark side's
-    // hash-compare: IS DISTINCT FROM per compared column.
-    "rel_snapshot_diff" ->
-      """WITH vnew AS (
-        |  SELECT o_orderkey, o_orderstatus,
-        |         o_totalprice + CASE WHEN o_orderkey % 5 = 0 THEN 1 ELSE 0 END AS o_totalprice
-        |  FROM orders WHERE o_orderkey % 7 <> 0
-        |  UNION ALL
-        |  SELECT o_orderkey + 1000000000, o_orderstatus, o_totalprice
-        |  FROM orders WHERE o_orderkey % 11 = 0),
-        |d AS (SELECT coalesce(o.o_orderkey, n.o_orderkey) AS o_orderkey,
-        |        CASE WHEN o.o_orderkey IS NULL THEN 'insert'
-        |             WHEN n.o_orderkey IS NULL THEN 'delete'
-        |             WHEN (o.o_totalprice IS DISTINCT FROM n.o_totalprice)
-        |               OR (o.o_orderstatus IS DISTINCT FROM n.o_orderstatus) THEN 'update'
-        |             ELSE 'same' END AS change
-        |      FROM orders o FULL OUTER JOIN vnew n ON o.o_orderkey = n.o_orderkey)
-        |SELECT o_orderkey, change FROM d WHERE change <> 'same'
-        |ORDER BY o_orderkey""".stripMargin,
-
-    // Direct recompute over ALL events — the Spark side merges three
-    // delta states instead; hash equality proves the merge law.
-    "rel_incremental_agg" ->
-      """WITH e AS (SELECT event_type,
-        |            CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events)
-        |SELECT event_type, CAST(count(*) AS BIGINT) AS n_rows,
-        |       CAST(sum(cents) AS BIGINT) AS sum_cents,
-        |       min(cents) AS min_cents, max(cents) AS max_cents,
-        |       CAST(sum(cents) // count(*) AS BIGINT) AS avg_cents
-        |FROM e GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // Direct COUNT DISTINCT over ALL events — the Spark side merges
-    // three per-slice distinct-value states; hash equality proves
-    // merge(state(deltas)) ≡ recompute(history) for distinct counts.
-    "rel_incremental_distinct" ->
-      """SELECT event_type, CAST(count(DISTINCT user_id) AS BIGINT) AS n_distinct
-        |FROM events GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // Direct bucket histogram over ALL events + the cumulative rule —
-    // the Spark side merges three per-slice bucket-count states.
-    "rel_incremental_quantiles" ->
-      """WITH e AS (SELECT event_type,
-        |            CAST(floor(value * 100 + 0.5) AS BIGINT) AS cents FROM events),
-        |b AS (SELECT event_type,
-        |        (cents - ((cents % 100) + 100) % 100) // 100 AS bucket,
-        |        CAST(count(*) AS BIGINT) AS n
-        |      FROM e GROUP BY 1, 2),
-        |c AS (SELECT event_type, bucket, n,
-        |        sum(n) OVER (PARTITION BY event_type ORDER BY bucket) AS cum,
-        |        sum(n) OVER (PARTITION BY event_type) AS total FROM b),
-        |qs AS (SELECT unnest([500, 900, 990]) AS q)
-        |SELECT event_type, q, CAST(min(bucket) * 100 AS BIGINT) AS quantile_lo
-        |FROM c CROSS JOIN qs WHERE cum * 1000 >= q * total
-        |GROUP BY event_type, q ORDER BY event_type, q""".stripMargin,
-
-    // Bottom-64 of the md5-prefix hashes of distinct user_ids — the
-    // KMV state and its (k-1)*2^32/h_k estimate replayed in exact
-    // integer arithmetic; sketch-of-union ≡ union-of-sketches is
-    // inherent, so the direct replay IS the merge-law proof.
-    "rel_kmv_distinct" ->
-      s"""WITH v AS (SELECT DISTINCT event_type,
-         |             md5('kmv|' || CAST(user_id AS VARCHAR)) AS m
-         |           FROM events WHERE user_id IS NOT NULL),
-         |h AS (SELECT DISTINCT event_type, (${hexSliceSql("m", 1)}) AS hv FROM v),
-         |r AS (SELECT event_type, hv,
-         |        row_number() OVER (PARTITION BY event_type ORDER BY hv) AS rn
-         |      FROM h),
-         |kq AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_state,
-         |         max(hv) AS hk
-         |       FROM r WHERE rn <= 64 GROUP BY 1)
-         |SELECT event_type, n_state,
-         |  CAST(CASE WHEN n_state < 64 THEN n_state
-         |       ELSE (63 * 4294967296) // hk END AS BIGINT) AS est_distinct
-         |FROM kq ORDER BY event_type""".stripMargin,
-
-    // DLT priority sample replayed row for row: sort key
-    // (u32·2²⁰)//cents off the samp| digest, bottom-64 per class
-    // ordered by (skey, id-string), τ̂ = 2⁵²//skey₆₅, estimate
-    // Σ max(cents, τ̂) over sampled 'F' rows — identical integer
-    // rules both engines.
-    "rel_priority_sample" ->
-      s"""WITH o AS (SELECT o_orderpriority, o_orderstatus,
-         |             CAST(o_orderkey AS VARCHAR) AS id,
-         |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS cents
-         |           FROM orders),
-         |h AS (SELECT o_orderpriority, o_orderstatus, id, cents,
-         |        (${hexSliceSql("m", 1)}) + 1 AS u32
-         |      FROM (SELECT *, md5('samp|' || id) AS m FROM o WHERE cents > 0)),
-         |rk AS (SELECT *, (u32 * 1048576) // cents AS skey FROM h),
-         |rn AS (SELECT *, row_number() OVER (PARTITION BY o_orderpriority
-         |         ORDER BY skey, id) AS rn FROM rk),
-         |t AS (SELECT o_orderpriority,
-         |        max(CASE WHEN rn = 65 THEN skey END) AS k1
-         |      FROM rn GROUP BY 1),
-         |est AS (SELECT rn.o_orderpriority,
-         |          CAST(count(*) AS BIGINT) AS n_sample,
-         |          CAST(sum(CASE WHEN o_orderstatus = 'F' THEN 1 ELSE 0 END)
-         |            AS BIGINT) AS n_match,
-         |          CAST(sum(CASE WHEN o_orderstatus = 'F' THEN
-         |              greatest(cents, CASE WHEN t.k1 IS NULL THEN 0
-         |                ELSE 4503599627370496 //
-         |                  (CASE WHEN t.k1 > 0 THEN t.k1 ELSE 1 END) END)
-         |            ELSE 0 END) AS BIGINT) AS est_sum
-         |        FROM rn JOIN t USING (o_orderpriority)
-         |        WHERE rn <= 64 GROUP BY 1),
-         |ex AS (SELECT o_orderpriority, CAST(sum(cents) AS BIGINT) AS exact_sum
-         |       FROM o WHERE o_orderstatus = 'F' GROUP BY 1)
-         |SELECT est.o_orderpriority, n_sample, n_match, est_sum,
-         |  coalesce(exact_sum, 0) AS exact_sum,
-         |  (abs(est_sum - coalesce(exact_sum, 0)) * 1000) //
-         |    greatest(coalesce(exact_sum, 0), 1) AS err_permille
-         |FROM est LEFT JOIN ex ON est.o_orderpriority = ex.o_orderpriority
-         |ORDER BY est.o_orderpriority""".stripMargin,
-
-    // KMV set algebra replayed pairwise: per-source bottom-64 sketches
-    // of the word-3-gram space, the pair union's sketch = bottom-64 of
-    // the two hash sets' union, ρ = state rows carried by both sides;
-    // every estimate is the same integer arithmetic as the Spark side.
-    "corpus_source_overlap" ->
-      s"""WITH t3 AS (SELECT source, $tokSql AS tk FROM documents),
-         |v AS (SELECT DISTINCT source,
-         |             md5('kmv|' || t) AS m
-         |           FROM (SELECT source,
-         |                   unnest(list_transform(range(1, len(tk) - 1),
-         |                     i -> tk[i] || ' ' || tk[i+1] || ' ' || tk[i+2])) AS t
-         |                 FROM t3)),
-         |h AS (SELECT DISTINCT source, (${hexSliceSql("m", 1)}) AS hv FROM v),
-         |sk AS (SELECT source, hv FROM (
-         |         SELECT source, hv,
-         |           row_number() OVER (PARTITION BY source ORDER BY hv) AS rn
-         |         FROM h) x WHERE rn <= 64),
-         |ks AS (SELECT DISTINCT source FROM sk),
-         |memb AS (SELECT key_a, key_b, hv,
-         |           max(in_a) AS in_a, max(in_b) AS in_b
-         |         FROM (
-         |           SELECT sk.source AS key_a, ks.source AS key_b, hv,
-         |                  1 AS in_a, 0 AS in_b
-         |           FROM sk JOIN ks ON sk.source < ks.source
-         |           UNION ALL
-         |           SELECT ks.source, sk.source, hv, 0, 1
-         |           FROM sk JOIN ks ON ks.source < sk.source
-         |         ) u GROUP BY 1, 2, 3),
-         |r AS (SELECT *, row_number() OVER (
-         |        PARTITION BY key_a, key_b ORDER BY hv) AS rn FROM memb),
-         |st AS (SELECT key_a, key_b, CAST(count(*) AS BIGINT) AS n_state,
-         |         max(hv) AS hk,
-         |         CAST(sum(in_a * in_b) AS BIGINT) AS n_shared
-         |       FROM r WHERE rn <= 64 GROUP BY 1, 2),
-         |est AS (SELECT key_a, key_b, n_state, n_shared,
-         |          CAST(CASE WHEN n_state < 64 THEN n_state
-         |               ELSE (63 * 4294967296) // hk END AS BIGINT) AS est_union
-         |        FROM st)
-         |SELECT key_a AS source_a, key_b AS source_b, n_state, n_shared,
-         |  est_union,
-         |  CAST((n_shared * est_union) // n_state AS BIGINT) AS est_inter,
-         |  CAST((1000 * n_shared) // n_state AS BIGINT) AS jaccard_permille
-         |FROM est ORDER BY source_a, source_b""".stripMargin,
-
-    // AMS join-size replay: both sides' counters off the same coins,
-    // truncating-division group means (DuckDB integer `//` truncates
-    // toward zero exactly like Spark `div`), lower median.
-    "rel_ams_join_size" ->
-      s"""WITH a AS (SELECT CAST(o_orderkey AS VARCHAR) AS v FROM orders),
-         |b AS (SELECT CAST(l_orderkey AS VARCHAR) AS v FROM lineitem),
-         |ca AS (SELECT v, CAST(count(*) AS BIGINT) AS n FROM a GROUP BY 1),
-         |cb AS (SELECT v, CAST(count(*) AS BIGINT) AS n FROM b GROUP BY 1),
-         |js AS (SELECT unnest(range(0, 64)) AS j),
-         |ha AS (SELECT v, n, (${hexSliceSql("md5('ams|' || v)", 1)}) AS h1,
-         |         (${hexSliceSql("md5('ams|' || v)", 9)}) AS h2 FROM ca),
-         |hb AS (SELECT v, n, (${hexSliceSql("md5('ams|' || v)", 1)}) AS h1,
-         |         (${hexSliceSql("md5('ams|' || v)", 9)}) AS h2 FROM cb),
-         |za AS (SELECT j, CAST(sum((((CASE WHEN j < 32 THEN h1 ELSE h2 END
-         |                 >> (j % 32)) & 1) * 2 - 1) * n) AS BIGINT) AS z
-         |       FROM ha CROSS JOIN js GROUP BY 1),
-         |zb AS (SELECT j, CAST(sum((((CASE WHEN j < 32 THEN h1 ELSE h2 END
-         |                 >> (j % 32)) & 1) * 2 - 1) * n) AS BIGINT) AS z
-         |       FROM hb CROSS JOIN js GROUP BY 1),
-         |pm AS (SELECT za.j, za.z * zb.z AS p FROM za JOIN zb ON za.j = zb.j),
-         |gm AS (SELECT j // 8 AS grp, CAST(sum(p) // 8 AS BIGINT) AS gm
-         |       FROM pm GROUP BY 1),
-         |med AS (SELECT gm AS join_size_est FROM (
-         |          SELECT gm, grp, row_number() OVER (ORDER BY gm, grp) AS rn
-         |          FROM gm) WHERE rn = 4),
-         |ex AS (SELECT CAST(count(*) AS BIGINT) AS join_size_exact
-         |       FROM a JOIN b ON a.v = b.v)
-         |SELECT ex.join_size_exact, med.join_size_est,
-         |  CAST((abs(med.join_size_est - ex.join_size_exact) * 1000)
-         |       // ex.join_size_exact AS BIGINT) AS err_permille
-         |FROM ex CROSS JOIN med
-         |ORDER BY join_size_exact""".stripMargin,
-
-    // Bloom replay: the 4 position hashes are the 4 32-bit slices of
-    // ONE md5 per value, mod 2^17; same distinct position set, a
-    // probe passes iff all 4 of its positions are set.
-    "rel_bloom_filter" ->
-      s"""WITH k AS (SELECT o_orderkey AS kk FROM orders),
-         |di AS (SELECT unnest([0, 1, 2, 3]) AS i),
-         |km AS (SELECT md5('bloom|' || CAST(kk AS VARCHAR)) AS m FROM k),
-         |hp AS (SELECT DISTINCT unnest([
-         |         ${hexSliceSql("m", 1)}, ${hexSliceSql("m", 9)},
-         |         ${hexSliceSql("m", 17)}, ${hexSliceSql("m", 25)}])
-         |           % 131072 AS pos
-         |       FROM km),
-         |base AS (SELECT kk FROM k WHERE kk % 3 = 0),
-         |pr AS (SELECT CAST(kk AS VARCHAR) AS v, 'present' AS probe_class FROM base
-         |       UNION ALL
-         |       SELECT CAST(kk + 500000000 AS VARCHAR), 'absent' FROM base),
-         |pp AS (SELECT v, probe_class, i,
-         |         (CASE i WHEN 0 THEN ${hexSliceSql("m", 1)}
-         |            WHEN 1 THEN ${hexSliceSql("m", 9)}
-         |            WHEN 2 THEN ${hexSliceSql("m", 17)}
-         |            ELSE ${hexSliceSql("m", 25)} END) % 131072 AS pos
-         |       FROM (SELECT v, probe_class, md5('bloom|' || v) AS m FROM pr) pm
-         |       CROSS JOIN di),
-         |hit AS (SELECT pp.v, pp.probe_class, count(DISTINCT pp.i) AS found
-         |        FROM pp JOIN hp ON pp.pos = hp.pos GROUP BY 1, 2)
-         |SELECT pr.probe_class, CAST(count(*) AS BIGINT) AS n_probes,
-         |  CAST(sum(CASE WHEN hit.found = 4 THEN 1 ELSE 0 END) AS BIGINT) AS n_pass
-         |FROM pr LEFT JOIN hit
-         |  ON pr.v = hit.v AND pr.probe_class = hit.probe_class
-         |GROUP BY 1 ORDER BY 1""".stripMargin,
-
-    // AMS replay: same sign coins (bit j of the digest's first two
-    // 32-bit slices), same
-    // linear counters, same mean-of-8 / lower-median-of-8 estimator.
-    "rel_ams_f2" ->
-      s"""WITH ev AS (SELECT event_type, CAST(user_id AS VARCHAR) AS v FROM events),
-         |cnt AS (SELECT event_type, v, CAST(count(*) AS BIGINT) AS n
-         |        FROM ev GROUP BY 1, 2),
-         |js AS (SELECT unnest(range(0, 64)) AS j),
-         |hh AS (SELECT event_type, v, n,
-         |         (${hexSliceSql("md5('ams|' || v)", 1)}) AS h1,
-         |         (${hexSliceSql("md5('ams|' || v)", 9)}) AS h2
-         |       FROM cnt),
-         |z AS (SELECT event_type, j,
-         |        CAST(sum((((CASE WHEN j < 32 THEN h1 ELSE h2 END
-         |                    >> (j % 32)) & 1) * 2 - 1) * n) AS BIGINT) AS z
-         |      FROM hh CROSS JOIN js GROUP BY 1, 2),
-         |gm AS (SELECT event_type, j // 8 AS grp,
-         |         CAST(sum(z * z) // 8 AS BIGINT) AS gm
-         |       FROM z GROUP BY 1, 2),
-         |med AS (SELECT event_type, gm AS f2_est FROM (
-         |          SELECT event_type, gm, grp, row_number() OVER (
-         |            PARTITION BY event_type ORDER BY gm, grp) AS rn FROM gm)
-         |        WHERE rn = 4),
-         |ex AS (SELECT event_type, CAST(sum(n) AS BIGINT) AS n_rows,
-         |         CAST(sum(n * n) AS BIGINT) AS f2_exact
-         |       FROM cnt GROUP BY 1)
-         |SELECT ex.event_type, ex.n_rows, ex.f2_exact, med.f2_est,
-         |  CAST((abs(med.f2_est - ex.f2_exact) * 1000) // ex.f2_exact AS BIGINT)
-         |    AS err_permille
-         |FROM ex JOIN med ON ex.event_type = med.event_type
-         |ORDER BY ex.event_type""".stripMargin,
-
-    // Count-min sketch replayed bucket for bucket: row i reads the
-    // i-th 32-bit slice of ONE md5 per value (the digest economy),
-    // same mod positions, same count sums, same min-over-rows
-    // estimate (a probe missing any of its 4 buckets counts 0).
-    "rel_cms_topk" ->
-      s"""WITH ev AS (SELECT event_type, CAST(user_id AS VARCHAR) AS v FROM events),
-         |cnt AS (SELECT event_type, v, CAST(count(*) AS BIGINT) AS n
-         |        FROM ev GROUP BY 1, 2),
-         |top AS (SELECT v FROM (SELECT v, CAST(sum(n) AS BIGINT) AS tn
-         |                       FROM cnt GROUP BY 1)
-         |        ORDER BY tn DESC, v LIMIT 12),
-         |di AS (SELECT unnest([0, 1, 2, 3]) AS i),
-         |mm AS (SELECT event_type, v, n, md5('cms|' || v) AS m FROM cnt),
-         |st AS (SELECT event_type, i,
-         |         (CASE i WHEN 0 THEN ${hexSliceSql("m", 1)}
-         |            WHEN 1 THEN ${hexSliceSql("m", 9)}
-         |            WHEN 2 THEN ${hexSliceSql("m", 17)}
-         |            ELSE ${hexSliceSql("m", 25)} END) % 128 AS pos,
-         |         CAST(sum(n) AS BIGINT) AS bn
-         |       FROM mm CROSS JOIN di GROUP BY 1, 2, 3),
-         |keys AS (SELECT DISTINCT event_type FROM ev),
-         |pr AS (SELECT event_type, v, i,
-         |         (CASE i WHEN 0 THEN ${hexSliceSql("m", 1)}
-         |            WHEN 1 THEN ${hexSliceSql("m", 9)}
-         |            WHEN 2 THEN ${hexSliceSql("m", 17)}
-         |            ELSE ${hexSliceSql("m", 25)} END) % 128 AS pos
-         |       FROM (SELECT event_type, v, md5('cms|' || v) AS m
-         |             FROM keys CROSS JOIN top) kt CROSS JOIN di),
-         |est AS (SELECT pr.event_type, pr.v,
-         |          CAST(CASE WHEN count(st.bn) = 4 THEN min(st.bn)
-         |               ELSE 0 END AS BIGINT) AS n_est
-         |        FROM pr LEFT JOIN st
-         |          ON pr.event_type = st.event_type AND pr.i = st.i
-         |         AND pr.pos = st.pos
-         |        GROUP BY 1, 2)
-         |SELECT est.event_type, CAST(est.v AS BIGINT) AS user_id,
-         |  CAST(coalesce(cnt.n, 0) AS BIGINT) AS n_exact, est.n_est,
-         |  CAST(est.n_est - coalesce(cnt.n, 0) AS BIGINT) AS overcount
-         |FROM est LEFT JOIN cnt
-         |  ON est.event_type = cnt.event_type AND est.v = cnt.v
-         |ORDER BY est.event_type, user_id""".stripMargin,
-
-    // Misra–Gries replayed counter for counter: per-slice exact counts,
-    // per-slice trim (subtract the 17th-largest count, keep > 0), sum,
-    // one re-trim — no hashing, every number an exact integer.
-    "rel_mg_heavy_hitters" ->
-      """WITH c AS (SELECT event_type, user_id % 3 AS sl,
-        |             CAST(user_id AS VARCHAR) AS v, CAST(count(*) AS BIGINT) AS n
-        |           FROM events GROUP BY 1, 2, 3),
-        |t1 AS (SELECT event_type, v, n,
-        |         max(CASE WHEN rn = 17 THEN n END)
-        |           OVER (PARTITION BY event_type, sl) AS ck1
-        |       FROM (SELECT *, row_number() OVER (PARTITION BY event_type, sl
-        |               ORDER BY n DESC, v) AS rn FROM c)),
-        |s AS (SELECT event_type, v, n - coalesce(ck1, 0) AS n FROM t1
-        |      WHERE n - coalesce(ck1, 0) > 0),
-        |m AS (SELECT event_type, v, CAST(sum(n) AS BIGINT) AS n FROM s GROUP BY 1, 2),
-        |t2 AS (SELECT event_type, v, n,
-        |         max(CASE WHEN rn = 17 THEN n END)
-        |           OVER (PARTITION BY event_type) AS ck1
-        |       FROM (SELECT *, row_number() OVER (PARTITION BY event_type
-        |               ORDER BY n DESC, v) AS rn FROM m)),
-        |st AS (SELECT event_type, v, n - coalesce(ck1, 0) AS n FROM t2
-        |       WHERE n - coalesce(ck1, 0) > 0),
-        |ex AS (SELECT event_type, CAST(user_id AS VARCHAR) AS v,
-        |         CAST(count(*) AS BIGINT) AS n_exact FROM events GROUP BY 1, 2),
-        |tot AS (SELECT event_type, CAST(count(*) AS BIGINT) AS n_total
-        |        FROM events GROUP BY 1)
-        |SELECT st.event_type, CAST(st.v AS BIGINT) AS user_id, st.n AS n_lb,
-        |  ex.n_exact, ex.n_exact - st.n AS deficit, tot.n_total // 17 AS bound
-        |FROM st JOIN ex ON st.event_type = ex.event_type AND st.v = ex.v
-        |JOIN tot ON st.event_type = tot.event_type
-        |ORDER BY st.event_type, user_id""".stripMargin,
-
-    // Interval union coverage: running max of previous ends cuts
-    // islands; island extents sum to the covered length.
-    "rel_interval_coverage" ->
-      """WITH e AS (SELECT event_type,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS s,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) + 1800 AS e
-        |           FROM events),
-        |isl AS (SELECT event_type, s, e,
-        |          CAST(sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY event_type ORDER BY s, e
-        |                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS isl
-        |        FROM (SELECT *, max(e) OVER (PARTITION BY event_type ORDER BY s, e
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |              FROM e)),
-        |g AS (SELECT event_type, isl, CAST(count(*) AS BIGINT) AS n,
-        |        min(s) AS i_s, max(e) AS i_e
-        |      FROM isl GROUP BY 1, 2)
-        |SELECT event_type, CAST(sum(n) AS BIGINT) AS n_intervals,
-        |  count(*) AS n_islands, CAST(sum(i_e - i_s) AS BIGINT) AS covered,
-        |  CAST(max(i_e) - min(i_s) AS BIGINT) AS span,
-        |  (CAST(sum(i_e - i_s) AS BIGINT) * 1000) //
-        |    greatest(CAST(max(i_e) - min(i_s) AS BIGINT), 1) AS utilization_permille
-        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // z² replayed as the same integer ratio; RANGE frame over the
-    // hour axis both sides.
-    "rel_anomaly_zscore" ->
-      """WITH h AS (SELECT event_type,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) // 3600 AS t,
-        |             CAST(count(*) AS BIGINT) AS x
-        |           FROM events GROUP BY 1, 2),
-        |w AS (SELECT event_type, t, x,
-        |        CAST(count(x) OVER win AS BIGINT) AS m,
-        |        CAST(sum(x) OVER win AS BIGINT) AS s1,
-        |        CAST(sum(x * x) OVER win AS BIGINT) AS s2
-        |      FROM h WINDOW win AS (PARTITION BY event_type ORDER BY t
-        |        RANGE BETWEEN 24 PRECEDING AND 1 PRECEDING))
-        |SELECT event_type, t AS hour_num, x AS n, m AS m_window,
-        |  CAST(CASE WHEN m >= 12 AND (m * s2 - s1 * s1) > 0
-        |       THEN ((m * x - s1) * (m * x - s1) * 1000) // (m * s2 - s1 * s1)
-        |       ELSE -1 END AS BIGINT) AS z2_permille,
-        |  (m >= 12 AND ((m * s2 - s1 * s1) > 0
-        |       AND (m * x - s1) * (m * x - s1) > 4 * (m * s2 - s1 * s1)
-        |    OR (m * s2 - s1 * s1) = 0 AND (m * x - s1) * (m * x - s1) > 0))
-        |    AS is_anomaly
-        |FROM w ORDER BY event_type, hour_num""".stripMargin,
-
-    // integer least squares replayed sum for sum; integer // truncates
-    // toward zero exactly like Spark div, so negative slopes agree.
-    "rel_rate_trend" -> rateTrendOracle,
-
-    // the SAME direct recompute is the oracle for the merged-state
-    // form: hash match ⇔ merge(state(deltas)) ≡ recompute(all).
-    "rel_trend_incremental" -> rateTrendOracle,
-
-    // leading digit as exact string arithmetic; all 9 digits
-    // scaffolded so missing digits audit as 0.
-    "rel_benford" ->
-      """WITH v AS (SELECT o_orderpriority AS k,
-        |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c
-        |           FROM orders WHERE o_totalprice > 0),
-        |d AS (SELECT k, CAST(substr(CAST(c AS VARCHAR), 1, 1) AS BIGINT) AS digit
-        |      FROM v),
-        |cnt AS (SELECT k, digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1, 2),
-        |tot AS (SELECT k, CAST(count(*) AS BIGINT) AS total FROM d GROUP BY 1),
-        |bf AS (SELECT CAST(digit AS BIGINT) AS digit,
-        |         CAST(([301, 176, 125, 97, 79, 67, 58, 51, 46])[digit] AS BIGINT)
-        |           AS benford_permille
-        |       FROM (SELECT unnest(range(1, 10)) AS digit))
-        |SELECT tot.k AS o_orderpriority, bf.digit, coalesce(cnt.n, 0) AS n,
-        |  (coalesce(cnt.n, 0) * 1000) // total AS obs_permille,
-        |  bf.benford_permille,
-        |  (coalesce(cnt.n, 0) * 1000) // total - bf.benford_permille
-        |    AS dev_permille
-        |FROM tot CROSS JOIN bf
-        |LEFT JOIN cnt ON cnt.k = tot.k AND cnt.digit = bf.digit
-        |ORDER BY o_orderpriority, bf.digit""".stripMargin,
-
-    // second digit as exact string arithmetic (values < 10 excluded);
-    // digits 0..9 scaffolded against the fixed [120..85] table.
-    "rel_benford2" ->
-      """WITH v AS (SELECT o_orderpriority AS k,
-        |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c
-        |           FROM orders WHERE o_totalprice > 0),
-        |d AS (SELECT k, CAST(substr(CAST(c AS VARCHAR), 2, 1) AS BIGINT) AS digit
-        |      FROM v WHERE c >= 10),
-        |cnt AS (SELECT k, digit, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1, 2),
-        |tot AS (SELECT k, CAST(count(*) AS BIGINT) AS total FROM d GROUP BY 1),
-        |bf AS (SELECT CAST(digit AS BIGINT) AS digit,
-        |         CAST(([120, 114, 109, 104, 100, 97, 93, 90, 88, 85])[digit + 1]
-        |           AS BIGINT) AS benford_permille
-        |       FROM (SELECT unnest(range(0, 10)) AS digit))
-        |SELECT tot.k AS o_orderpriority, bf.digit, coalesce(cnt.n, 0) AS n,
-        |  (coalesce(cnt.n, 0) * 1000) // total AS obs_permille,
-        |  bf.benford_permille,
-        |  (coalesce(cnt.n, 0) * 1000) // total - bf.benford_permille
-        |    AS dev_permille
-        |FROM tot CROSS JOIN bf
-        |LEFT JOIN cnt ON cnt.k = tot.k AND cnt.digit = bf.digit
-        |ORDER BY o_orderpriority, bf.digit""".stripMargin,
-
-    // leading pair 10..99 against the fixed 90-entry permille table
-    // (hard-coded both sides — no float log in either engine).
-    "rel_benford_pairs" ->
-      """WITH v AS (SELECT o_orderpriority AS k,
-        |             CAST(floor(o_totalprice * 100 + 0.5) AS BIGINT) AS c
-        |           FROM orders WHERE o_totalprice > 0),
-        |d AS (SELECT k, CAST(substr(CAST(c AS VARCHAR), 1, 2) AS BIGINT) AS pair
-        |      FROM v WHERE c >= 10),
-        |cnt AS (SELECT k, pair, CAST(count(*) AS BIGINT) AS n FROM d GROUP BY 1, 2),
-        |tot AS (SELECT k, CAST(count(*) AS BIGINT) AS total FROM d GROUP BY 1),
-        |bf AS (SELECT CAST(pair AS BIGINT) AS pair,
-        |         CAST(([41, 38, 35, 32, 30, 28, 26, 25, 23, 22,
-        |                21, 20, 19, 18, 18, 17, 16, 16, 15, 15,
-        |                14, 14, 13, 13, 13, 12, 12, 12, 11, 11,
-        |                11, 10, 10, 10, 10, 10, 9, 9, 9, 9,
-        |                9, 8, 8, 8, 8, 8, 8, 8, 7, 7,
-        |                7, 7, 7, 7, 7, 7, 7, 6, 6, 6,
-        |                6, 6, 6, 6, 6, 6, 6, 6, 6, 5,
-        |                5, 5, 5, 5, 5, 5, 5, 5, 5, 5,
-        |                5, 5, 5, 5, 5, 5, 5, 4, 4, 4])[pair - 9]
-        |           AS BIGINT) AS benford_permille
-        |       FROM (SELECT unnest(range(10, 100)) AS pair))
-        |SELECT tot.k AS o_orderpriority, bf.pair, coalesce(cnt.n, 0) AS n,
-        |  (coalesce(cnt.n, 0) * 1000) // total AS obs_permille,
-        |  bf.benford_permille,
-        |  (coalesce(cnt.n, 0) * 1000) // total - bf.benford_permille
-        |    AS dev_permille
-        |FROM tot CROSS JOIN bf
-        |LEFT JOIN cnt ON cnt.k = tot.k AND cnt.pair = bf.pair
-        |ORDER BY o_orderpriority, bf.pair""".stripMargin,
-
-    // the same lateness scores crossed with the candidate delays.
-    "rel_watermark_curve" ->
-      """WITH e AS (SELECT event_type,
-        |             (CAST(epoch(date_trunc('second', ts)) AS BIGINT)
-        |               + (event_id * 48271) % 600) * 1000000
-        |               + event_id % 1000000 AS arr,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS t
-        |           FROM events),
-        |s AS (SELECT event_type, arr,
-        |        greatest(coalesce(max(t) OVER (PARTITION BY event_type
-        |          ORDER BY arr RANGE BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING)
-        |          - t, 0), 0) AS late
-        |      FROM e),
-        |dl AS (SELECT unnest([30, 60, 120, 300, 600]) AS delay_sec)
-        |SELECT event_type, CAST(delay_sec AS BIGINT) AS delay_sec,
-        |  CAST(count(*) AS BIGINT) AS n_events,
-        |  CAST(sum(CASE WHEN late > delay_sec THEN 1 ELSE 0 END) AS BIGINT)
-        |    AS n_dropped,
-        |  (CAST(sum(CASE WHEN late > delay_sec THEN 1 ELSE 0 END) AS BIGINT)
-        |    * 1000) // count(*) AS drop_permille
-        |FROM s CROSS JOIN dl GROUP BY 1, 2
-        |ORDER BY event_type, delay_sec""".stripMargin,
-
-    // running max in arrival order; p95 as the lower-index order
-    // statistic over the late rows — replayed window for window.
-    "rel_disorder_audit" -> disorderOracle,
-
-    // the bucketed twin replays the SAME exact-window oracle — the
-    // hash match is a cross-engine equivalence proof.
-    "rel_disorder_bucketed" -> disorderOracle,
-
-
-    // merge(islands(deltas)) ≡ islands(all): the oracle recomputes
-    // directly over every event — the hash match is the proof.
-    "rel_coverage_incremental" ->
-      """WITH e AS (SELECT event_type,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) AS s,
-        |             CAST(epoch(date_trunc('second', ts)) AS BIGINT) + 1800 AS e
-        |           FROM events),
-        |isl AS (SELECT event_type, s, e,
-        |          CAST(sum(CASE WHEN pm IS NULL OR s > pm THEN 1 ELSE 0 END)
-        |            OVER (PARTITION BY event_type ORDER BY s, e
-        |                  ROWS UNBOUNDED PRECEDING) AS BIGINT) AS isl
-        |        FROM (SELECT *, max(e) OVER (PARTITION BY event_type ORDER BY s, e
-        |                ROWS BETWEEN UNBOUNDED PRECEDING AND 1 PRECEDING) AS pm
-        |              FROM e)),
-        |g AS (SELECT event_type, isl, min(s) AS i_s, max(e) AS i_e
-        |      FROM isl GROUP BY 1, 2)
-        |SELECT event_type, count(*) AS n_islands,
-        |  CAST(sum(i_e - i_s) AS BIGINT) AS covered,
-        |  CAST(max(i_e) - min(i_s) AS BIGINT) AS span,
-        |  (CAST(sum(i_e - i_s) AS BIGINT) * 1000) //
-        |    greatest(CAST(max(i_e) - min(i_s) AS BIGINT), 1) AS utilization_permille
-        |FROM g GROUP BY event_type ORDER BY event_type""".stripMargin,
-
-    // Compaction plan: bin = bytes-before-this-file div target — one
-    // window cumsum, replayed exactly.
-    "rel_compaction_plan" ->
-      """WITH f AS (SELECT source, doc_id, n_chars AS b FROM documents
-        |           WHERE n_chars > 0),
-        |c AS (SELECT source, b,
-        |        CAST(sum(b) OVER (PARTITION BY source ORDER BY doc_id
-        |          ROWS UNBOUNDED PRECEDING) AS BIGINT) AS cum FROM f)
-        |SELECT source, (cum - b) // 2048 AS bin, count(*) AS n_files,
-        |  CAST(sum(b) AS BIGINT) AS bytes,
-        |  (CAST(sum(b) AS BIGINT) * 1000) // 2048 AS fill_permille
-        |FROM c GROUP BY 1, 2 ORDER BY source, bin""".stripMargin,
-
-    "corpus_length_quantiles" ->
-      s"""WITH dl AS (SELECT source, doc_id, CAST(len($tokSql) AS BIGINT) AS n_tokens
-         |            FROM documents),
-         |r AS (SELECT source, n_tokens, CAST(row_number() OVER (PARTITION BY source
-         |        ORDER BY n_tokens, doc_id) AS BIGINT) AS rn FROM dl),
-         |c AS (SELECT source, CAST(count(*) AS BIGINT) AS n_docs FROM dl GROUP BY source)
-         |SELECT r.source, max(c.n_docs) AS n_docs, min(n_tokens) AS min_tokens,
-         |  max(CASE WHEN rn = ((n_docs - 1) * 50) // 100 + 1 THEN n_tokens END) AS p50_tokens,
-         |  max(CASE WHEN rn = ((n_docs - 1) * 90) // 100 + 1 THEN n_tokens END) AS p90_tokens,
-         |  max(CASE WHEN rn = ((n_docs - 1) * 99) // 100 + 1 THEN n_tokens END) AS p99_tokens,
-         |  max(n_tokens) AS max_tokens
-         |FROM r JOIN c USING (source) GROUP BY r.source ORDER BY r.source""".stripMargin
-  )
 }

@@ -193,7 +193,7 @@ class AnnRecallSpec extends SparkSpec {
 
   test("stored AnnModel round-trips: parquet-served IVFPQ ≡ fresh-trained") {
     val model = Similarity.annTrain(clustered, coarseK = nClusters, m = 4, pqK = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_model_spec").toString
+    val dir = tempDir("graft_ann_model_spec")
     Similarity.writeAnnModel(model, dir)
     val back = Similarity.readAnnModel(spark, dir)
     assert(back.m === 4, "m must survive the round-trip (DedupIndex.k precedent)")
@@ -211,7 +211,7 @@ class AnnRecallSpec extends SparkSpec {
   test("stored AnnIndex (model + corpus codes) serves identically, corpus never re-read") {
     val index = Similarity.annIndexBuild(clustered, coarseK = nClusters,
       m = 4, pqK = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_index_spec").toString
+    val dir = tempDir("graft_ann_index_spec")
     Similarity.writeAnnIndex(index, dir)
     val back = Similarity.readAnnIndex(spark, dir)
     val queries = clustered.filter(col("vec_id") < 10)
@@ -246,7 +246,7 @@ class AnnRecallSpec extends SparkSpec {
       m = 4, pqK = 4, iters = 2)
     val encoded = Similarity.annEncodeResidual(clustered, model)
     // a residual index round-trips through the UNCHANGED AnnIndex layout
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_resid_spec").toString
+    val dir = tempDir("graft_ann_resid_spec")
     Similarity.writeAnnIndex(Similarity.AnnIndex(model, encoded), dir)
     val back = Similarity.readAnnIndex(spark, dir)
     val queries = clustered.filter(col("vec_id") % 16 === 0)
@@ -299,7 +299,7 @@ class AnnRecallSpec extends SparkSpec {
     // different centroids.
     val head = clustered.filter(col("vec_id") % 4 =!= 3)
     val delta = clustered.filter(col("vec_id") % 4 === 3)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_append_spec").toString
+    val dir = tempDir("graft_ann_append_spec")
     Similarity.writeAnnIndex(Similarity.annIndexBuild(head,
       coarseK = nClusters, m = 4, pqK = 4, iters = 2), dir)
     val frozen = Similarity.readAnnModel(spark, dir)
@@ -342,7 +342,7 @@ class AnnRecallSpec extends SparkSpec {
   test("refine (exact re-rank) recall >= raw stored-index serving at equal k") {
     val index = Similarity.annIndexBuild(clustered, coarseK = nClusters,
       m = 4, pqK = 4, iters = 2)
-    val dir = java.nio.file.Files.createTempDirectory("graft_ann_refine_spec").toString
+    val dir = tempDir("graft_ann_refine_spec")
     Similarity.writeAnnIndex(index, dir)
     val back = Similarity.readAnnIndex(spark, dir)
     val queries = clustered.filter(col("vec_id") % 16 === 0)
@@ -487,7 +487,7 @@ class AnnRecallSpec extends SparkSpec {
   test("nprobeRecall on the stored flat index: monotone in nprobe, full probe = 1000") {
     import graft.sources.Tables
     val emb = Tables.embeddings(spark, sf)
-    val dir = java.nio.file.Files.createTempDirectory("ivfflat_recall").toString
+    val dir = tempDir("ivfflat_recall")
     Similarity.writeIvfFlatIndex(Similarity.ivfFlatBuild(emb, k = 4, iters = 2), dir)
     val idx = Similarity.readIvfFlatIndex(spark, dir)
     val rec = Similarity.nprobeRecall(emb.filter(col("vec_id") < 8), idx,

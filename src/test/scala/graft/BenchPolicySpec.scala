@@ -232,4 +232,22 @@ class BenchPolicySpec extends AnyFunSuite {
     assert(BenchPolicy.normalizeFlags(flagged, Some(2.41), Some(1.0)).flags ===
       List("exceeds_prior_steady"))
   }
+
+  test("steady ref: the query timings of a ref taken at the bench's sf") {
+    val ref = BenchPolicy.steadyRef("""{"sf":"/d/sf0.1","cdc_filter":0.631,"rel_topk":2}""", "/d/sf0.1")
+    assert(ref === Map("cdc_filter" -> 0.631, "rel_topk" -> 2.0))
+  }
+
+  test("steady ref: empty for another sf, garbage or a missing file") {
+    val txt = """{"sf":"/d/sf0.01","cdc_filter":0.631}"""
+    assert(BenchPolicy.steadyRef(txt, "/d/sf0.1").isEmpty)
+    assert(BenchPolicy.steadyRef("{\"sf\":\"/d/sf0.1\", cdc_filter", "/d/sf0.1").isEmpty)
+    assert(BenchPolicy.steadyRef("[1, 2]", "/d/sf0.1").isEmpty)
+    assert(BenchPolicy.steadyRef("", "/d/sf0.1").isEmpty)
+  }
+
+  test("steady ref: a pretty-printed ref is read like a compact one") {
+    val txt = "{\n  \"sf\": \"/d/sf0.1\",\n  \"cdc_filter\": 0.631,\n  \"rel_topk\": 2.0\n}\n"
+    assert(BenchPolicy.steadyRef(txt, "/d/sf0.1") === Map("cdc_filter" -> 0.631, "rel_topk" -> 2.0))
+  }
 }

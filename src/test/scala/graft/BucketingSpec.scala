@@ -1,7 +1,5 @@
 package graft
 
-import java.nio.file.{Files => JFiles}
-
 import org.apache.spark.sql.functions._
 
 /** Bucketing: the co-located-join layout decision that matters at
@@ -11,7 +9,7 @@ import org.apache.spark.sql.functions._
 class BucketingSpec extends SparkSpec {
 
   test("bucketed tables join without exchanges") {
-    val wh = JFiles.createTempDirectory("wh").toString
+    val wh = tempDir("wh")
     val orders = graft.sources.Tables.orders(spark, sf)
     val customer = graft.sources.Tables.customer(spark, sf)
     orders.write.mode("overwrite")

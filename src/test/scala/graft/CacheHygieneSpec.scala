@@ -90,7 +90,7 @@ class CacheHygieneSpec extends SparkSpec {
 
   test("graph pairs cache: a rewritten documents.parquet serves fresh pairs") {
     import graft.operators.Graph
-    val dir = java.nio.file.Files.createTempDirectory("pairs_cache").toString
+    val dir = tempDir("pairs_cache")
     def publish(docs: org.apache.spark.sql.DataFrame): Unit =
       docs.write.mode("overwrite").parquet(s"$dir/documents.parquet")
     def expected(docs: org.apache.spark.sql.DataFrame) =

@@ -173,7 +173,7 @@ class GraphSpec extends SparkSpec {
 
   test("componentsMaintain: stored map maintained across deltas ≡ recompute, " +
     "bootstrap + atomic swap + replay") {
-    val dir = java.nio.file.Files.createTempDirectory("cc_maint").toString + "/map"
+    val dir = tempDir("cc_maint") + "/map"
     val rnd = new scala.util.Random(41)
     val all = Seq.fill(60)((rnd.nextLong(40) + 3, rnd.nextLong(40) + 3))
       .filter { case (a, b) => a != b }

@@ -2205,7 +2205,7 @@ class MultimodalHeaderSpec extends SparkSpec {
   }
 
   test("image index lifecycle: replayed append folds away, probe finds an exact dup") {
-    val indexDir = java.nio.file.Files.createTempDirectory("img_index").toString + "/index"
+    val indexDir = tempDir("img_index") + "/index"
     // base segment ids < 50, appended segment 50..99 (appended TWICE —
     // an at-least-once replay must fold away), then compact
     val ids = (0L until 100L).toDF("doc_id")

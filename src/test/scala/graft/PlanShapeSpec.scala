@@ -533,7 +533,7 @@ class PlanShapeSpec extends SparkSpec {
     val mem = MemoryStream[String]
     val q = graft.streaming.CdcStreamJob.start(
       graft.streaming.CdcStreamJob.enriched(mem.toDF(), dim),
-      java.nio.file.Files.createTempDirectory("jobbudget").toString,
+      tempDir("jobbudget"),
       graft.sinks.JdbcUpsertSink.writer(url, "meeting_result", keyCols = Seq("meeting_id"),
         valCols = Seq("meeting_code", "meetingroom_id", "meetingroom_name", "location_name", "city"),
         opCol = Some("op"), versionCol = Some("es")),

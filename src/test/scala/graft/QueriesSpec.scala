@@ -13,10 +13,15 @@ class QueriesSpec extends SparkSpec {
       "text_bpe_merges100")  // 100 chained greedy folds aren't SQL-expressible;
                              // parity with the oracle-checked k≤8 form is
                              // spec-pinned in BpeScaleSpec
-    val missing = SparkEntry.queries.keySet -- SparkEntry.oracleSql.keySet -- rowsOnly
-    assert(missing.isEmpty, s"queries without oracle SQL: $missing")
-    val orphans = SparkEntry.oracleSql.keySet -- SparkEntry.queries.keySet
-    assert(orphans.isEmpty, s"oracle SQL without query: $orphans")
+    assert(SparkEntry.suite.filter(_.oracle.isEmpty).map(_.name).toSet === rowsOnly)
+  }
+
+  test("suite names are unique") {
+    // the name-keyed views keep one entry per name, so a duplicate
+    // would silently drop a query
+    val names = SparkEntry.suite.map(_.name)
+    val dups = names.diff(names.distinct)
+    assert(dups.isEmpty, s"duplicate query names: $dups")
   }
 
   test("entry returns rows") {

@@ -1,6 +1,5 @@
 package graft
 
-import java.nio.file.{Files => JFiles}
 import java.sql.DriverManager
 
 import org.apache.spark.sql.functions._
@@ -45,7 +44,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("csv and json round-trip with explicit schema") {
-    val dir = JFiles.createTempDirectory("fmt").toString
+    val dir = tempDir("fmt")
     val df = Seq((1L, "x", 1.5), (2L, "y", 2.5)).toDF("id", "s", "v")
     df.write.mode("overwrite").option("header", "true").csv(s"$dir/csv")
     df.write.mode("overwrite").json(s"$dir/json")
@@ -56,7 +55,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("partitioned parquet sink prunes partitions on read") {
-    val dir = JFiles.createTempDirectory("part").toString + "/t"
+    val dir = tempDir("part") + "/t"
     val df = Seq((1, "a", 10), (2, "b", 20), (3, "a", 30)).toDF("id", "grp", "v")
     Sinks.parquet(df, dir, partitionBy = Seq("grp"))
     val pruned = Files.parquet(spark, dir).filter(col("grp") === "a")
@@ -79,9 +78,9 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("streaming parquet file source + parquet sink round-trip") {
-    val in = JFiles.createTempDirectory("sin").toString
-    val out = JFiles.createTempDirectory("sout").toString
-    val ckpt = JFiles.createTempDirectory("sckpt").toString
+    val in = tempDir("sin")
+    val out = tempDir("sout")
+    val ckpt = tempDir("sckpt")
     val df = Seq((1L, "a"), (2L, "b")).toDF("id", "s")
     df.write.mode("overwrite").parquet(in)
     val stream = Files.parquetStream(spark, in, df.schema)
@@ -94,7 +93,7 @@ class SourcesSinksSpec extends SparkSpec {
   }
 
   test("dynamic partition overwrite rewrites only the delta's partitions") {
-    val dir = JFiles.createTempDirectory("dpo").toString + "/t"
+    val dir = tempDir("dpo") + "/t"
     Seq((1L, "2024-01-01", "a"), (2L, "2024-01-02", "b"), (3L, "2024-01-03", "c"))
       .toDF("id", "day", "v")
       .write.partitionBy("day").parquet(dir)
@@ -130,7 +129,7 @@ class SourcesSinksSpec extends SparkSpec {
   test("fileStatsIndex + readPruned skip files outside the predicate range, results identical") {
     import spark.implicits._
     import graft.operators.Partitioning
-    val dir = java.nio.file.Files.createTempDirectory("skip_idx").toString + "/t"
+    val dir = tempDir("skip_idx") + "/t"
     // range-clustered layout: 8 files, each a disjoint id range
     (0L until 800L).map(i => (i, s"v$i")).toDF("id", "v")
       .repartitionByRange(8, col("id")).sortWithinPartitions(col("id"))
@@ -157,7 +156,7 @@ class SourcesSinksSpec extends SparkSpec {
   test("compactionRewrite: one file per planned bin, read-back ≡ input, cluster order kept") {
     import spark.implicits._
     import graft.operators.{Partitioning, Relational}
-    val dir = java.nio.file.Files.createTempDirectory("compact_rw").toString + "/t"
+    val dir = tempDir("compact_rw") + "/t"
     // a small-files inventory: 2 sources, skewed sizes in ingest order
     val files = (0 until 300).map(i =>
       ("s" + (i % 2), i.toLong, 10L + (i * 7 % 50))).toDF("source", "fid", "bytes")
@@ -200,7 +199,7 @@ class SourcesSinksSpec extends SparkSpec {
   test("indexAppend computes stats only for new files and equals a full rebuild") {
     import spark.implicits._
     import graft.operators.Partitioning
-    val dir = java.nio.file.Files.createTempDirectory("skip_app").toString + "/t"
+    val dir = tempDir("skip_app") + "/t"
     (0L until 200L).map(i => (i, i * 2)).toDF("id", "v")
       .repartitionByRange(4, col("id")).write.mode("overwrite").parquet(dir)
     val index0 = Partitioning.fileStatsIndex(spark.read.parquet(dir), Seq("id"))
@@ -222,7 +221,7 @@ class SourcesSinksSpec extends SparkSpec {
 
   test("orc round-trips and pushes filters down to the scan") {
     import spark.implicits._
-    val dir = java.nio.file.Files.createTempDirectory("orc_rt").toString + "/docs"
+    val dir = tempDir("orc_rt") + "/docs"
     val docs = graft.sources.Tables.documents(spark, sf)
       .select("doc_id", "source", "n_chars")
     docs.write.mode("overwrite").orc(dir)
@@ -257,7 +256,7 @@ class SourcesSinksSpec extends SparkSpec {
     def dataFiles(dir: String): Seq[java.io.File] =
       new java.io.File(dir).listFiles().toSeq.filter(_.getName.endsWith(".parquet"))
     // a store dir accumulated as 24 tiny appends
-    val dir = java.nio.file.Files.createTempDirectory("compact_planned").toString + "/s"
+    val dir = tempDir("compact_planned") + "/s"
     (1 to 24).foreach(i =>
       Seq((i.toLong, s"payload $i")).toDF("id", "v")
         .coalesce(1).write.mode("append").parquet(dir))
@@ -274,7 +273,7 @@ class SourcesSinksSpec extends SparkSpec {
     assert(plannedBins === 1L)
     assert(Partitioning.plannedFileCount(spark, dir, target) === 1)
     // tiny target: the plan cuts multiple bins
-    val dir2 = java.nio.file.Files.createTempDirectory("compact_planned2").toString + "/s"
+    val dir2 = tempDir("compact_planned2") + "/s"
     (1 to 12).foreach(i =>
       Seq.tabulate(50)(j => (i * 100L + j, s"padding padding $i $j"))
         .toDF("id", "v").coalesce(1).write.mode("append").parquet(dir2))
@@ -285,8 +284,8 @@ class SourcesSinksSpec extends SparkSpec {
 
   test("compactTo merges many small files into few, content preserved") {
     import spark.implicits._
-    val inDir = java.nio.file.Files.createTempDirectory("compact_in").toString
-    val outDir = java.nio.file.Files.createTempDirectory("compact_out").toString + "/out"
+    val inDir = tempDir("compact_in")
+    val outDir = tempDir("compact_out") + "/out"
     // 20 tiny files
     (1 to 20).foreach(i =>
       Seq((i.toLong, s"row $i")).toDF("id", "v").write.mode("append").parquet(inDir))

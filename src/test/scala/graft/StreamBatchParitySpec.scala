@@ -16,7 +16,7 @@ class StreamBatchParitySpec extends SparkSpec {
   test("streaming tumbling window over events parquet equals the batch aggregate") {
     val raw = Tables.table(spark, sf, "events") // ts: nanos long OR timestamp
     // the streaming file source wants a directory of files
-    val dir = java.nio.file.Files.createTempDirectory("evstream")
+    val dir = java.nio.file.Paths.get(tempDir("evstream"))
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     val stream = Files.parquetStream(spark, dir.toString, raw.schema)
@@ -43,7 +43,7 @@ class StreamBatchParitySpec extends SparkSpec {
 
   test("streaming session_window over events parquet equals the batch sessions") {
     val raw = Tables.table(spark, sf, "events")
-    val dir = java.nio.file.Files.createTempDirectory("sessstream")
+    val dir = java.nio.file.Paths.get(tempDir("sessstream"))
     java.nio.file.Files.copy(java.nio.file.Paths.get(s"$sf/events.parquet"),
       dir.resolve("events.parquet"))
     val stream = Files.parquetStream(spark, dir.toString, raw.schema)

@@ -47,7 +47,7 @@ class StreamingSpec extends SparkSpec {
 
     val mem = MemoryStream[String]
     val enriched = CdcStreamJob.enriched(mem.toDF().withColumnRenamed("value", "value"), dim)
-    val ckpt = java.nio.file.Files.createTempDirectory("ckpt").toString
+    val ckpt = tempDir("ckpt")
     val q = CdcStreamJob.start(enriched, ckpt,
       JdbcUpsertSink.writer(url, "meeting_result",
         keyCols = Seq("meeting_id"),
@@ -288,7 +288,7 @@ class StreamingSpec extends SparkSpec {
     // the batch-shaped run of a streaming pipeline: process everything
     // present, commit the checkpoint, exit — how a nightly backfill
     // reuses the exact streaming code path
-    val inDir = java.nio.file.Files.createTempDirectory("an_in").toString
+    val inDir = tempDir("an_in")
     (1 to 3).foreach(i =>
       Seq((i.toLong, s"v$i")).toDF("id", "v").write.mode("append").parquet(inDir))
     val schema = spark.read.parquet(inDir).schema

@@ -9,8 +9,9 @@ derives the prior-steady reference from it in one step:
 
     python3 tools/refresh_steady_ref.py [bench_last_c32.json] [bench_steady_ref.json]
 
-The reference format is COMPACT on purpose — Bench's sf guard is an
-exact '"sf":"<dir>"' substring match (no spaces after colons).
+Bench parses the reference as JSON, compact or pretty-printed
+(BenchPolicy.steadyRef), and honors it only when its "sf" field equals
+the bench's sf directory.
 """
 import json
 import sys
