@@ -29,34 +29,37 @@ object SparkEntry {
   private val D = DecimalType(18, 2)
 
   /** orders keyed snapshot in exact cents — the MERGE family's target. */
-  private def ordersCentsSnapshot(s: SparkSession, d: String): DataFrame =
+  private[graft] def ordersCentsSnapshot(s: SparkSession, d: String): DataFrame =
     Tables.orders(s, d).select(col("o_orderkey"), col("o_orderstatus"),
       floor(col("o_totalprice") * 100 + 0.5).cast("long").as("total_cents"))
 
   /** The deterministic I/U/D fixture delta shared by `cdc_merge_upsert`
     * and `cdc_changelog`: deletes (%10=0), +1¢ updates (%10=1), +1e9
     * key-clone inserts (%10=2), and in-delta conflicts — update then
-    * delete (%10=3, net D), delete then update (%10=4, net U +9¢). */
-  private def mergeFixtureDelta(t: DataFrame): DataFrame = {
-    def piece(pred: org.apache.spark.sql.Column, key: org.apache.spark.sql.Column,
-              status: org.apache.spark.sql.Column, cents: org.apache.spark.sql.Column,
-              op: String, seq: Int): DataFrame =
-      t.filter(pred).select(key.as("o_orderkey"), status.as("o_orderstatus"),
-        cents.as("total_cents"), lit(op).as("op"), lit(seq).as("seq"))
+    * delete (%10=3, net D), delete then update (%10=4, net U +9¢).
+    * One scan of `t`: each row explodes into the cases its key matches
+    * (two for the conflicts), the others are null and dropped. */
+  private[graft] def mergeFixtureDelta(t: DataFrame): DataFrame = {
     val m = pmod(col("o_orderkey"), lit(10))
+    // long whatever the file's key type, as the +1e9 clones need
+    val key = col("o_orderkey").cast("long")
+    val status = col("o_orderstatus"); val cents = col("total_cents")
     val nullS = lit(null).cast("string"); val nullC = lit(null).cast("long")
-    Seq(
-      piece(m === 0, col("o_orderkey"), nullS, nullC, "D", 1),
-      piece(m === 1, col("o_orderkey"), col("o_orderstatus"),
-        col("total_cents") + 1, "U", 1),
-      piece(m === 2, col("o_orderkey") + 1000000000L, col("o_orderstatus"),
-        col("total_cents"), "I", 1),
-      piece(m === 3, col("o_orderkey"), col("o_orderstatus"),
-        col("total_cents") + 7, "U", 1),
-      piece(m === 3, col("o_orderkey"), nullS, nullC, "D", 2),
-      piece(m === 4, col("o_orderkey"), nullS, nullC, "D", 1),
-      piece(m === 4, col("o_orderkey"), col("o_orderstatus"),
-        col("total_cents") + 9, "U", 2)).reduce(_ unionByName _)
+    def piece(pred: org.apache.spark.sql.Column, k: org.apache.spark.sql.Column,
+              st: org.apache.spark.sql.Column, ct: org.apache.spark.sql.Column,
+              op: String, seq: Int): org.apache.spark.sql.Column =
+      when(pred, struct(k.as("o_orderkey"), st.as("o_orderstatus"),
+        ct.as("total_cents"), lit(op).as("op"), lit(seq).as("seq")))
+    t.select(explode(array(
+        piece(m === 0, key, nullS, nullC, "D", 1),
+        piece(m === 1, key, status, cents + 1, "U", 1),
+        piece(m === 2, key + 1000000000L, status, cents, "I", 1),
+        piece(m === 3, key, status, cents + 7, "U", 1),
+        piece(m === 3, key, nullS, nullC, "D", 2),
+        piece(m === 4, key, nullS, nullC, "D", 1),
+        piece(m === 4, key, status, cents + 9, "U", 2))).as("c"))
+      .filter(col("c").isNotNull)
+      .select("c.*")
   }
 
   /** Flagship: the reference's end-to-end enrichment pipeline
@@ -75,8 +78,13 @@ object SparkEntry {
   final case class Q(name: String, build: (SparkSession, String) => DataFrame,
                      oracle: Option[String])
 
+  /** The suite's builders by name, in suite order. Each frame's final
+    * ORDER BY sorts on one partition when its inputs are small
+    * ([[org.apache.spark.sql.GraftColumnBridge.singlePartitionSort]]):
+    * no range-bounds sampling job, same rows in the same order. */
   lazy val queries: Map[String, (SparkSession, String) => DataFrame] =
-    ListMap(suite.map(q => q.name -> q.build): _*)
+    ListMap(suite.map(q => q.name -> ((s: SparkSession, d: String) =>
+      org.apache.spark.sql.GraftColumnBridge.singlePartitionSort(q.build(s, d)))): _*)
 
   lazy val oracleSql: Map[String, String] =
     ListMap(suite.flatMap(q => q.oracle.map(q.name -> _)): _*)
@@ -7108,12 +7116,12 @@ object SparkEntry {
     * checkpointed input. Correctness is unaffected: identical rows,
     * and the pipeline itself stays independently benchmarked by
     * dedup_jaccard. Each (session, dir) holds one entry tagged with the
-    * documents file's [[contentFingerprint]]: documents rewritten at the
+    * documents file's [[Tables.contentFingerprint]]: documents rewritten at the
     * same path rebuild the pairs and release the replaced checkpoint. */
   private val pairsCache = new java.util.concurrent.ConcurrentHashMap[
     String, (String, org.apache.spark.sql.DataFrame)]()
   private def sharedNearDupPairs(s: SparkSession, d: String): org.apache.spark.sql.DataFrame = {
-    val fp = contentFingerprint(s, d, "documents.parquet")
+    val fp = Tables.contentFingerprint(s, d, "documents.parquet")
     pairsCache.compute(System.identityHashCode(s) + "|" + d, (_, old) =>
       if (old != null && old._1 == fp) old
       else {
@@ -7659,21 +7667,6 @@ object SparkEntry {
         Multimodal.compactImageIndex(s, tmp)
       }, srcFile = "documents.parquet")
 
-  /** Content fingerprint of `d/srcFile` (file names + lengths +
-    * mtimes), recomputed per call — a cheap FS stat. */
-  private def contentFingerprint(s: SparkSession, d: String, srcFile: String): String = {
-    val src = new org.apache.hadoop.fs.Path(s"$d/$srcFile")
-    val sfs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
-    val stat = sfs.getFileStatus(src)
-    val parts =
-      if (stat.isDirectory)
-        sfs.listStatus(src).map(f =>
-          s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}").sorted.mkString("|")
-      else s"${stat.getLen}:${stat.getModificationTime}"
-    java.security.MessageDigest.getInstance("MD5")
-      .digest(s"$d|$parts".getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
-  }
-
   private def storedIndexDir(s: SparkSession, d: String, tag: String,
                              doneMarker: String, build: String => Unit,
                              srcFile: String = "embeddings.parquet"): String = {
@@ -7683,7 +7676,7 @@ object SparkEntry {
     // by the directory path would serve a stale index to the second
     // read and hash-diverge from an oracle on the current data
     val conf = s.sparkContext.hadoopConfiguration
-    val fp = contentFingerprint(s, d, srcFile)
+    val fp = Tables.contentFingerprint(s, d, srcFile)
     annIndexDirs.computeIfAbsent(s"$tag|$fp", _ => {
       val dir = new java.io.File(sys.props("java.io.tmpdir"),
         s"graft_${tag}_$fp").getAbsolutePath

@@ -1,16 +1,23 @@
 package graft.sources
 
+import java.util.concurrent.ConcurrentHashMap
+
+import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{DataFrame, SparkSession}
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.types.StructType
 
 /** Loaders for the harness parquet tables (TESTDATA.md) and the session
   * normalization every graft job needs.
   *
-  * Scale posture: every loader is a plain parquet scan, so Catalyst's
-  * predicate pushdown / column pruning reach the scan (`PushedFilters`,
-  * `ReadSchema` in `.explain("formatted")`). Nothing here assumes a
-  * single file — at cluster scale the same code reads a partitioned
-  * directory tree.
+  * Scale posture: every loader is a parquet scan under a declared
+  * schema, so Catalyst's predicate pushdown / column pruning reach the
+  * scan (`PushedFilters`, `ReadSchema` in `.explain("formatted")`). The
+  * schema is inferred from the footers once per file content and then
+  * passed to `read.schema(…)`: a read without one runs a footer-merge
+  * Spark job every time it is called. Nothing here assumes a single
+  * file — at cluster scale the same code reads a partitioned directory
+  * tree.
   */
 object Tables {
 
@@ -30,8 +37,38 @@ object Tables {
     spark
   }
 
-  def table(spark: SparkSession, sfDir: String, name: String): DataFrame =
-    normalize(spark).read.parquet(s"$sfDir/$name.parquet")
+  /** Content fingerprint of `d/srcFile` (file names + lengths +
+    * mtimes), recomputed per call — a cheap FS stat. Caches of anything
+    * derived from a file key by it, so a file rewritten at the same
+    * path is never served stale state. */
+  def contentFingerprint(s: SparkSession, d: String, srcFile: String): String = {
+    val src = new Path(s"$d/$srcFile")
+    val sfs = src.getFileSystem(s.sparkContext.hadoopConfiguration)
+    val stat = sfs.getFileStatus(src)
+    val parts =
+      if (stat.isDirectory)
+        sfs.listStatus(src).map(f =>
+          s"${f.getPath.getName}:${f.getLen}:${f.getModificationTime}").sorted.mkString("|")
+      else s"${stat.getLen}:${stat.getModificationTime}"
+    java.security.MessageDigest.getInstance("MD5")
+      .digest(s"$d|$parts".getBytes("UTF-8")).take(6).map("%02x".format(_)).mkString
+  }
+
+  /** Inferred schema per (path, `nanosAsLong`), tagged with the content
+    * fingerprint it was inferred from; a rewritten file replaces its
+    * entry, so the map holds one schema per path and setting. */
+  private val schemas = new ConcurrentHashMap[String, (String, StructType)]()
+
+  def table(spark: SparkSession, sfDir: String, name: String): DataFrame = {
+    val reader = normalize(spark).read
+    val path = s"$sfDir/$name.parquet"
+    val fp = contentFingerprint(spark, sfDir, s"$name.parquet")
+    val nanosAsLong = spark.conf.get("spark.sql.legacy.parquet.nanosAsLong")
+    val schema = schemas.compute(s"$path|$nanosAsLong", (_, old) =>
+      if (old != null && old._1 == fp) old
+      else fp -> reader.parquet(path).schema)._2
+    reader.schema(schema).parquet(path)
+  }
 
   def region(s: SparkSession, d: String): DataFrame   = table(s, d, "region")
   def nation(s: SparkSession, d: String): DataFrame   = table(s, d, "nation")

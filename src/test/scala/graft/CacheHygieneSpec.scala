@@ -109,4 +109,33 @@ class CacheHygieneSpec extends SparkSpec {
     assert(spark.sparkContext.getPersistentRDDs.size === persisted,
       "the replaced pairs' checkpoint must be released")
   }
+
+  test("table schemas: a file rewritten at the same path is read under its new schema") {
+    val dir = tempDir("schema_cache")
+    val region = spark.read.parquet(s"$sf/region.parquet")
+    region.write.parquet(s"$dir/region.parquet")
+    assert(Tables.region(spark, dir).columns === region.columns)
+    val wider = region.withColumn("r_extra", col("r_regionkey") * 10)
+    wider.write.mode("overwrite").parquet(s"$dir/region.parquet")
+    val fresh = Tables.region(spark, dir)
+    assert(fresh.columns === wider.columns, "the rewritten file's schema must be served")
+    assert(fresh.orderBy("r_regionkey").collect().toSeq ===
+      wider.orderBy("r_regionkey").collect().toSeq)
+
+    // events under both `ts` encodings, switched at one path: long
+    // nanos (what nanosAsLong reads TIMESTAMP(NANOS) as) and plain
+    // timestamp micros — the same canonical columns either way
+    val events = spark.read.parquet(s"$sf/events.parquet")
+    val nanos = events.withColumn("ts", unix_micros(col("ts").cast("timestamp")) * 1000L)
+    val expected = Tables.events(spark, sf)
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("event_id").collect().toSeq
+    for ((encoding, raw) <- Seq("nanos" -> nanos, "micros" -> events, "nanos again" -> nanos)) {
+      raw.write.mode("overwrite").parquet(s"$dir/events.parquet")
+      val got = Tables.events(spark, dir)
+      withClue(encoding) {
+        assert(got.schema === expected.schema)
+        assert(rows(got) === rows(expected))
+      }
+    }
+  }
 }

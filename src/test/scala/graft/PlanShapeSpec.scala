@@ -573,4 +573,56 @@ class PlanShapeSpec extends SparkSpec {
       spark.sparkContext.removeSparkListener(listener)
     }
   }
+
+  /** Spark jobs started by this thread while `body` ran. Listener
+    * events arrive in order: once a marker job run after `body` is seen,
+    * every job `body` started has been counted. */
+  private def jobsDuring(body: => Unit): Int = {
+    import java.util.concurrent.{CountDownLatch, TimeUnit}
+    import java.util.concurrent.atomic.AtomicInteger
+    import org.apache.spark.scheduler.{SparkListener, SparkListenerJobStart}
+    val run = java.util.UUID.randomUUID().toString
+    val jobs = new AtomicInteger()
+    val marked = new CountDownLatch(1)
+    val listener = new SparkListener {
+      override def onJobStart(e: SparkListenerJobStart): Unit =
+        Option(e.properties).flatMap(p => Option(p.getProperty("jobs.run"))).foreach {
+          case `run` => jobs.incrementAndGet()
+          case r if r == run + "-marker" => marked.countDown()
+          case _ =>
+        }
+    }
+    val sc = spark.sparkContext
+    sc.addSparkListener(listener)
+    try {
+      sc.setLocalProperty("jobs.run", run)
+      try body finally sc.setLocalProperty("jobs.run", run + "-marker")
+      try spark.range(1).collect() finally sc.setLocalProperty("jobs.run", null)
+      assert(marked.await(30, TimeUnit.SECONDS), "marker job never reached the listener")
+      jobs.get
+    } finally sc.removeSparkListener(listener)
+  }
+
+  test("a small suite query's final ORDER BY sorts on one partition, without range sampling") {
+    def plan() = SparkEntry.queries("cdc_filter")(spark, sf).queryExecution.executedPlan.toString
+    val small = plan()
+    assert(small.split("Exchange SinglePartition").length - 1 === 1, small.take(2000))
+    assert(!small.contains("rangepartitioning"), small.take(2000))
+    // -1 switches the rewrite off with broadcasting: range partitioning is back
+    val key = "spark.sql.autoBroadcastJoinThreshold"
+    val prev = spark.conf.getOption(key)
+    spark.conf.set(key, "-1")
+    val off = try plan() finally prev.fold(spark.conf.unset(key))(spark.conf.set(key, _))
+    assert(off.split("Exchange rangepartitioning").length - 1 === 1, off.take(2000))
+    assert(!off.contains("SinglePartition"), off.take(2000))
+  }
+
+  test("cdc_filter runs at most 2 Spark jobs per run: no schema-inference or range-sampling job") {
+    def run(): Unit = SparkEntry.queries("cdc_filter")(spark, sf)
+      .write.format("noop").mode("overwrite").save()
+    run() // the first read of a file infers its schema once
+    val jobs = jobsDuring(run())
+    info(s"cdc_filter: $jobs jobs per run")
+    assert(jobs >= 1 && jobs <= 2, s"cdc_filter ran $jobs jobs")
+  }
 }

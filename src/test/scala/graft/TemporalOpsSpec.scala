@@ -231,6 +231,38 @@ class TemporalOpsSpec extends SparkSpec {
     assert(Cdc.changelogFrom(old, old, Seq("k")).isEmpty)
   }
 
+  test("the merge fixture's single-scan delta ≡ its seven-piece union, conflicts included") {
+    // the reference: one filtered projection of the snapshot per case
+    val t = SparkEntry.ordersCentsSnapshot(spark, sf)
+    def piece(pred: org.apache.spark.sql.Column, key: org.apache.spark.sql.Column,
+              status: org.apache.spark.sql.Column, cents: org.apache.spark.sql.Column,
+              op: String, seq: Int) =
+      t.filter(pred).select(key.as("o_orderkey"), status.as("o_orderstatus"),
+        cents.as("total_cents"), lit(op).as("op"), lit(seq).as("seq"))
+    val m = pmod(col("o_orderkey"), lit(10))
+    val nullS = lit(null).cast("string"); val nullC = lit(null).cast("long")
+    val union = Seq(
+      piece(m === 0, col("o_orderkey"), nullS, nullC, "D", 1),
+      piece(m === 1, col("o_orderkey"), col("o_orderstatus"), col("total_cents") + 1, "U", 1),
+      piece(m === 2, col("o_orderkey") + 1000000000L, col("o_orderstatus"),
+        col("total_cents"), "I", 1),
+      piece(m === 3, col("o_orderkey"), col("o_orderstatus"), col("total_cents") + 7, "U", 1),
+      piece(m === 3, col("o_orderkey"), nullS, nullC, "D", 2),
+      piece(m === 4, col("o_orderkey"), nullS, nullC, "D", 1),
+      piece(m === 4, col("o_orderkey"), col("o_orderstatus"), col("total_cents") + 9, "U", 2))
+      .reduce(_ unionByName _)
+    val delta = SparkEntry.mergeFixtureDelta(t)
+    assert(delta.schema.map(f => f.name -> f.dataType) === union.schema.map(f => f.name -> f.dataType))
+    assert(delta.queryExecution.executedPlan.toString.split("Scan parquet").length - 1 === 1)
+    def multiset(df: org.apache.spark.sql.DataFrame) =
+      df.collect().toSeq.map(_.toSeq).groupBy(identity).view.mapValues(_.size).toMap
+    assert(multiset(delta) === multiset(union))
+    // both in-delta conflicts are present: U then D (%10=3), D then U (%10=4)
+    val conflicts = delta.filter(m.isin(3, 4)).groupBy(m.as("m"), col("op"), col("seq"))
+      .count().as[(Long, String, Int, Long)].collect().map(r => (r._1, r._2, r._3)).toSet
+    assert(conflicts === Set((3L, "U", 1), (3L, "D", 2), (4L, "D", 1), (4L, "U", 2)))
+  }
+
   test("saltedJoin returns exactly the plain join's result") {
     val orders = graft.sources.Tables.orders(spark, sf)
     val customer = graft.sources.Tables.customer(spark, sf)
