@@ -838,7 +838,7 @@ object SparkEntry {
     }), Some(
       // Layout audit replayed end to end: the three layout keys (plain,
       // morton, hilbert walk), value-banded files, min/max manifest,
-      // probe ranges, and the readPruned skip rule — all integer.
+      // probe ranges, and the min/max skip rule — all integer.
       s"""WITH ${hilbertCtes("l_partkey", "l_suppkey", 16,
               carry = Seq("l_partkey", "l_suppkey"))},
          |hk AS (SELECT l_partkey, l_suppkey, d FROM h16),
@@ -5293,8 +5293,8 @@ object SparkEntry {
 
     // Full IVF ANN: train → assign → cell-pruned exact top-k. The query
     // set is a subset of the candidates, so one assignment pass over
-    // the candidates serves both sides (ivfTopKTrained assigns each
-    // side independently for the general disjoint-sets case).
+    // the candidates serves both sides (disjoint sets would assign
+    // each side independently).
     Q("sim_ann_ivf_trained", ((s, d) => {
       val emb = Tables.embeddings(s, d)
       val cents = Similarity.ivfTrain(emb, k = 4, iters = 2)
@@ -6003,7 +6003,7 @@ object SparkEntry {
         |FROM n JOIN b USING (cohort) ORDER BY n.cohort, "offset"""".stripMargin)),
 
     // Key-skew diagnostics on a join key — the pre-flight measurement
-    // for saltedJoin/saltedAggregate. Aggregates only; no window.
+    // for salting (saltedAggregate). Aggregates only; no window.
     Q("rel_skew_profile", ((s, d) =>
       Relational.keySkewProfile(Tables.lineitem(s, d), "l_suppkey", topN = 10)), Some(
       s"""WITH c AS (SELECT l_suppkey, CAST(count(*) AS BIGINT) AS cnt
@@ -6898,9 +6898,8 @@ object SparkEntry {
     // streaming-ingested 100 TB table: per source partition, documents
     // (standing in for ingest files) are laid on a byte axis in ingest
     // order and cut into ~2 KB output bins by one window cumsum — no
-    // driver loop; the executing rewrite is
-    // Partitioning.compactionRewrite (one file per bin, spec-proven).
-    // Non-last bins land within one input file of the target.
+    // driver loop. Non-last bins land within one input file of the
+    // target.
     Q("rel_compaction_plan", ((s, d) =>
       Relational.compactionPlan(Tables.documents(s, d),
           Seq(col("source")), col("doc_id"), col("n_chars"),

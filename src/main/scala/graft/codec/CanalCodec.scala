@@ -79,14 +79,6 @@ object CanalCodec {
         when(col("op") === "UPDATE", try_element_at(col("old"), col("__pos") + 1)))
       .drop("old", "__pos")
 
-  /** The set of columns an UPDATE actually changed (= the keys of its
-    * aligned `old` entry); null for non-UPDATE rows and for streams
-    * where Canal's `old` capture is off. Narrow. */
-  def changedColumns(rows: DataFrame): DataFrame =
-    rows.withColumn("changed_cols",
-      when(col("op") === "UPDATE" && col("old_row").isNotNull,
-        map_keys(col("old_row"))))
-
   /** Drop UPDATE events that touched none of the projected columns —
     * the events that would otherwise churn the sink with identical
     * rows (a real CDC user hits this daily: MySQL tables carry

@@ -1,9 +1,8 @@
 package graft.functions
 
-import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.Column
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
@@ -109,109 +108,24 @@ case class NearestCell(first: Expression, second: Expression, third: Expression)
   override def prettyName: String = "nearest_cell"
 }
 
-/** [[NearestCell]] with the centroid table carried by a BROADCAST
-  * VARIABLE instead of a plan literal — the transport for large k:
-  * a literal ships with every serialized task closure, while a
-  * broadcast is fetched once per executor (the MLlib model-transport
-  * shape). Same argmin, same tie-break, same NULL contract —
-  * differentially proven against [[NearestCell]] in NearestCellSpec.
-  *
-  * The broadcast handle rides the expression as a curried
-  * constructor argument (it is not a child — there is no Expression
-  * for it), so this variant is built directly from the Column API
-  * ([[NearestCell.nearest_cell_bcast]]), not through the function
-  * registry. Rows are (sub, cell, cv). */
-// the Broadcast HANDLE serializes with the expression (it is a small
-// stub — the table itself is fetched from the executor block manager
-// on first access); only the parsed table is @transient
-case class NearestCellBcast(left: Expression, right: Expression, bcastId: Long)(
-    val cents: Broadcast[Array[(Long, Long, Array[Long])]])
-    extends BinaryExpression {
-  // bcastId (the broadcast's unique id) sits in the FIRST parameter
-  // list so expression equality/canonicalization distinguishes two
-  // assignments against different centroid tables over the same
-  // child columns — otherwise common-subexpression elimination could
-  // unify them.
-
-  override def checkInputDataTypes(): TypeCheckResult =
-    (left.dataType, right.dataType) match {
-      case (LongType, ArrayType(LongType, _)) => TypeCheckResult.TypeCheckSuccess
-      case (a, b) => TypeCheckResult.TypeCheckFailure(
-        s"nearest_cell_bcast expects (BIGINT, ARRAY<BIGINT>), got ($a, $b)")
-    }
-
-  override def dataType: DataType = LongType
-  override def nullable: Boolean = true
-
-  // the broadcast handle must survive tree copies and serialization:
-  // curried args are not copied by TreeNode.makeCopy unless listed
-  override protected def otherCopyArgs: Seq[AnyRef] = cents :: Nil
-
-  @transient private lazy val table: NearestCell.CentTable =
-    NearestCell.parseRows(cents.value)
-
-  def evalRow(sub: Long, vec: ArrayData): java.lang.Long =
-    NearestCell.argmin(table, sub, vec)
-
-  override def nullSafeEval(subAny: Any, vecAny: Any): Any =
-    evalRow(subAny.asInstanceOf[Long], vecAny.asInstanceOf[ArrayData])
-
-  override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    val refTerm = ctx.addReferenceObj("nearestCellBcast", this,
-      classOf[NearestCellBcast].getName)
-    val subGen = left.genCode(ctx)
-    val vecGen = right.genCode(ctx)
-    val boxed = ctx.freshName("cell")
-    ev.copy(code =
-      code"""
-        ${subGen.code}
-        ${vecGen.code}
-        boolean ${ev.isNull} = true;
-        long ${ev.value} = -1L;
-        if (!${subGen.isNull} && !${vecGen.isNull}) {
-          java.lang.Long $boxed = $refTerm.evalRow(${subGen.value}, ${vecGen.value});
-          if ($boxed != null) {
-            ${ev.isNull} = false;
-            ${ev.value} = $boxed.longValue();
-          }
-        }
-      """)
-  }
-
-  override protected def withNewChildrenInternal(
-      newLeft: Expression, newRight: Expression): NearestCellBcast =
-    copy(left = newLeft, right = newRight, bcastId = bcastId)(cents)
-
-  override def prettyName: String = "nearest_cell_bcast"
-}
-
 object NearestCell {
   /** sub → candidates sorted by cell ascending, csq precomputed. */
   type CentTable = Map[Long, Array[(Long, Array[Long], Long)]]
 
-  private[functions] def parse(arr: ArrayData): CentTable = {
+  private[functions] def parse(arr: ArrayData): CentTable =
     if (arr == null) Map.empty
-    else {
-      val n = arr.numElements()
-      val rows = (0 until n).map { i =>
-        val st = arr.getStruct(i, 3)
-        (st.getLong(0), st.getLong(1), st.getArray(2).toLongArray())
-      }
-      parseRows(rows.toArray)
-    }
-  }
-
-  private[functions] def parseRows(rows: Array[(Long, Long, Array[Long])]): CentTable =
-    rows.map { case (s, cell, cv) =>
+    else (0 until arr.numElements()).map { i =>
+      val st = arr.getStruct(i, 3)
+      val cv = st.getArray(2).toLongArray()
       var csq = 0L
       var j = 0
       while (j < cv.length) { csq += cv(j) * cv(j); j += 1 }
-      (s, (cell, cv, csq))
+      (st.getLong(0), (st.getLong(1), cv, csq))
     }.groupBy(_._1).map { case (s, grp) =>
-      s -> grp.map(_._2).sortBy(_._1)
+      s -> grp.map(_._2).sortBy(_._1).toArray
     }
 
-  /** Shared argmin kernel: ascending-cell strict-improvement scan ≡
+  /** Argmin kernel: ascending-cell strict-improvement scan ≡
     * min(struct(s, cell, …)). */
   private[functions] def argmin(table: CentTable, sub: Long,
                                 vec: ArrayData): java.lang.Long = {
@@ -238,14 +152,4 @@ object NearestCell {
   /** Column-API form. Requires graft.plans.GraftExtensions.register. */
   def nearest_cell(sub: Column, vec: Column, cents: Column): Column =
     call_function("nearest_cell", sub, vec, cents)
-
-  /** Broadcast-backed form — built directly (no registry: the handle
-    * is not an Expression). */
-  def nearest_cell_bcast(sub: Column, vec: Column,
-                         cents: Broadcast[Array[(Long, Long, Array[Long])]]): Column =
-    org.apache.spark.sql.GraftColumnBridge.column(
-      NearestCellBcast(
-        org.apache.spark.sql.GraftColumnBridge.expression(sub),
-        org.apache.spark.sql.GraftColumnBridge.expression(vec),
-        cents.id)(cents))
 }

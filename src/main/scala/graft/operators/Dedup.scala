@@ -112,42 +112,11 @@ object Dedup {
       .distinct()
   }
 
-  /** Blocked token-set Jaccard: self-join within blocking keys, exact
-    * Jaccard on distinct-token arrays, keep pairs ≥ threshold (permille
-    * — integer arithmetic end-to-end so results are engine-exact).
-    * Blocking bounds the pair count; at scale the block key should be
-    * an LSH band or (source, shard) — never unblocked.
-    *
-    * A PPJoin-style length filter runs BEFORE the intersection:
-    * J(A,B) ≥ t/1000 implies min(|A|,|B|)·1000 ≥ t·max(|A|,|B|)
-    * (inter ≤ min, union ≥ max), so length-incompatible pairs are
-    * pruned with two integer comparisons instead of an O(|A|+|B|)
-    * hash intersection — output provably unchanged. */
-  def jaccardPairs(docs: DataFrame, blockCols: Seq[String],
-                   thresholdPermille: Int, idCol: String = "doc_id"): DataFrame =
-    jaccardPairsOn(docs, array_distinct(tokens(col("text"))), blockCols,
-      thresholdPermille, idCol)
-
-  /** Character n-gram Jaccard pairs: [[jaccardPairs]] over distinct
-    * char k-gram sets instead of word-token sets — catches near-dups
-    * that word-level misses (punctuation/casing edits, inserted
-    * whitespace, agglutinative scripts with few "words"). Grams come
-    * from the native one-pass [[graft.functions.CharShingles]]
-    * expression; the pair-generation/verification machinery (block
-    * equi-join + PPJoin length prefilter + exact intersection) is the
-    * same code path. */
-  def charNgramPairs(docs: DataFrame, blockCols: Seq[String],
-                     thresholdPermille: Int, k: Int = 5,
-                     idCol: String = "doc_id"): DataFrame = {
-    import graft.functions.CharShingles.char_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
-    jaccardPairsOn(docs, array_distinct(char_shingles(col("text"), k)), blockCols,
-      thresholdPermille, idCol)
-  }
-
-  /** [[jaccardPairs]] with a SCALE-CORRECT block key: a candidate pair
-    * must share `strataCols` AND collide in at least one MinHash LSH
-    * band computed over the very set whose Jaccard is verified.
+  /** Token-set Jaccard pairs (exact Jaccard on distinct-token arrays,
+    * pairs ≥ threshold permille, integer arithmetic end to end) under a
+    * SCALE-CORRECT block key: a candidate pair must share `strataCols`
+    * AND collide in at least one MinHash LSH band computed over the
+    * very set whose Jaccard is verified.
     *
     * Why this exists: blocking on fixed strata alone (e.g.
     * (source, lang) with a fixed 20×5 cross) means block population
@@ -207,8 +176,11 @@ object Dedup {
     bandedPairsOn(docs, array_distinct(tokens(col("text"))), strataCols,
       thresholdPermille, idCol, numHashes, rowsPerBand, maxBucket)
 
-  /** [[charNgramPairs]] with the [[jaccardPairsBanded]] block key —
-    * the minhash runs over the char k-gram set itself, so banding
+  /** Character n-gram Jaccard pairs: [[jaccardPairsBanded]] over
+    * distinct char k-gram sets instead of word-token sets — catches
+    * near-dups that word-level misses (punctuation/casing edits,
+    * inserted whitespace). The minhash runs over the char k-gram set
+    * itself, so banding
     * recall tracks the char-gram similarity being verified. Same
     * geometry/cap knobs as [[jaccardPairsBanded]]. */
   def charNgramPairsBanded(docs: DataFrame, strataCols: Seq[String],
@@ -450,7 +422,7 @@ object Dedup {
                                  numHashes: Int = 8, rowsPerBand: Int = 2,
                                  maxBucket: Int = DefaultMaxBucket): BandedPairs = {
     require(thresholdPermille >= 1, "thresholdPermille must be >= 1")
-    import graft.functions.BagFunctions.{bag_overlap, token_counts}
+    import graft.functions.BagFunctions.token_counts
     graft.plans.GraftExtensions.register(docs.sparkSession)
     val base = Partitioning.fanOut(docs)
       .withColumn("__tk", tokens(col("text")))
@@ -532,28 +504,14 @@ object Dedup {
     * (candidates must share the strata — same discipline as
     * [[jaccardPairsBanded]]; pass Nil for a corpus-wide sweep).
     * Verification is per-pair in-row `array_intersect` on the
-    * (already materialized) distinct-token sets. */
-  def containmentPairsAccounted(docs: DataFrame, strataCols: Seq[String],
-                                thresholdPermille: Int,
-                                idCol: String = "doc_id",
-                                maxPostings: Int = 10000): ContainmentPairs =
-    containmentPairsOn(docs, array_distinct(tokens(col("text"))), strataCols,
-      thresholdPermille, idCol, maxPostings)
-
-  /** [[containmentPairsAccounted]] without the accounting. */
-  def containmentPairs(docs: DataFrame, strataCols: Seq[String],
-                       thresholdPermille: Int, idCol: String = "doc_id",
-                       maxPostings: Int = 10000): DataFrame =
-    containmentPairsAccounted(docs, strataCols, thresholdPermille, idCol,
-      maxPostings).pairs
-
-  /** [[containmentPairsAccounted]] over char k-gram sets — the
-    * excerpt detector that survives token-poor/agglutinative text and
-    * a SMALL shared vocabulary (on a corpus drawn from few distinct
-    * words, word-SET containment is near-vacuous: most sets are
-    * subsets of most others; char grams keep the universe large
-    * enough that containment means shared SUBSTANCE, not shared
-    * vocabulary). */
+    * (already materialized) distinct-gram sets.
+    *
+    * The sets are char k-gram sets: this excerpt detector survives
+    * token-poor/agglutinative text and a SMALL shared vocabulary (on a
+    * corpus drawn from few distinct words, word-SET containment is
+    * near-vacuous: most sets are subsets of most others; char grams
+    * keep the universe large enough that containment means shared
+    * SUBSTANCE, not shared vocabulary). */
   def charNgramContainmentAccounted(docs: DataFrame, strataCols: Seq[String],
                                     thresholdPermille: Int, k: Int = 5,
                                     idCol: String = "doc_id",
@@ -665,31 +623,6 @@ object Dedup {
     * [[BandedPairs.droppedBuckets]]. */
   final case class ContainmentPairs(pairs: DataFrame, droppedTokens: DataFrame)
 
-  /** PERSISTENT maintenance of the component map — the daily-ingest
-    * form of [[componentsUpdate]]: read the stored map at `dir`,
-    * fold in the delta edges, swap the new generation in atomically
-    * ([[Partitioning.swapInDir]] — a crash mid-write leaves the old
-    * generation live). First call (no dir yet) bootstraps from the
-    * delta alone. Replaying the same delta batch is HARMLESS — edges
-    * are constraints and re-adding one changes no label
-    * (idempotence proven in `GraphSpec`), so at-least-once delivery
-    * needs no segment bookkeeping here. */
-  def componentsMaintain(spark: org.apache.spark.sql.SparkSession, dir: String,
-                         deltaPairs: DataFrame,
-                         aCol: String = "doc_a", bCol: String = "doc_b"): Unit = {
-    val path = new org.apache.hadoop.fs.Path(dir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    if (!fs.exists(path)) {
-      connectedComponents(deltaPairs, aCol, bCol)
-        .write.mode("overwrite").parquet(dir)
-    } else {
-      val updated = componentsUpdate(spark.read.parquet(dir), deltaPairs, aCol, bCol)
-        .localCheckpoint() // materialize before the swap renames dir away
-      Partitioning.swapInDir(spark, dir)(tmp =>
-        updated.write.mode("overwrite").parquet(tmp))
-    }
-  }
-
   /** Near-dup candidate pairs over WINNOWED fingerprints (Schleimer
     * et al. 2003): each document contributes only its winnow-selected
     * 32-bit gram hashes ([[TextAnalysis.winnowStats]] — expected
@@ -697,8 +630,8 @@ object Dedup {
     * ≥ w + k − 1), and pairs sharing at least `minShared` selected
     * fingerprints surface with their shared count. The plagiarism /
     * excerpt detector at index scale: vs the full-gram inverted index
-    * ([[containmentPairs]]) the posting list is ~2/(w+1) the size for
-    * the same guarantee floor.
+    * ([[charNgramContainmentAccounted]]) the posting list is ~2/(w+1)
+    * the size for the same guarantee floor.
     *
     * Scale shape: narrow in-row selection (no token-grain exchange on
     * the build), one fingerprint-grain count for the frequency
@@ -776,36 +709,6 @@ object Dedup {
       .groupBy(col("new_id"), col("index_id"))
       .agg(count(lit(1)).as("n_shared"))
       .filter(col("n_shared") >= minShared)
-  }
-
-  private def jaccardPairsOn(docs: DataFrame, tsetExpr: Column,
-                             blockCols: Seq[String], thresholdPermille: Int,
-                             idCol: String): DataFrame = {
-    require(blockCols.nonEmpty,
-      "jaccardPairs needs at least one blocking column — an unblocked " +
-        "self-join is O(n²) and will not survive scale. For an explicit " +
-        "candidate-pair set (e.g. LSH candidates) use jaccardVerifySets.")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
-    val base = Partitioning.fanOut(docs)
-      .withColumn("tset", tsetExpr)
-      .withColumn("tsz", size(col("tset")).cast("long"))
-      .select((idCol +: "tset" +: "tsz" +: blockCols).map(col): _*)
-    // per-doc array_sort at the projection → zero-allocation
-    // fp_inter_count per pair (see jaccardVerifySetsFull)
-    val a = base.select(col(idCol).as("doc_a") +: array_sort(col("tset")).as("ta") +:
-      col("tsz").as("sza") +: blockCols.map(col): _*)
-    val b = base.select(col(idCol).as("doc_b") +: array_sort(col("tset")).as("tb") +:
-      col("tsz").as("szb") +: blockCols.map(c => col(c).as(s"__b_$c")): _*)
-    val cond = blockCols.map(c => col(c) === col(s"__b_$c")).reduce(_ && _) &&
-      col("doc_a") < col("doc_b")
-    a.join(b, cond)
-      .filter(col("sza") * 1000 >= lit(thresholdPermille) * col("szb") &&
-              col("szb") * 1000 >= lit(thresholdPermille) * col("sza"))
-      .withColumn("inter", graft.functions.FpSet.fp_inter_count(col("ta"), col("tb")))
-      .withColumn("uni", col("sza") + col("szb") - col("inter"))
-      .withColumn("jac_permille", floor(col("inter") * 1000 / col("uni")).cast("long"))
-      .filter(col("jac_permille") >= thresholdPermille)
-      .select(col("doc_a"), col("doc_b"), col("inter"), col("uni"), col("jac_permille"))
   }
 
   /** Shared band-bucket projection for LSH joins. Package-visible so
@@ -939,7 +842,7 @@ object Dedup {
     * blocked-pair operators emit. */
   private def jaccardVerifySetsFull(withSets: DataFrame, pairs: DataFrame,
                                     thresholdPermille: Int,
-                                    idCol: String = "doc_id"): DataFrame = {
+                                    idCol: String): DataFrame = {
     graft.plans.GraftExtensions.register(withSets.sparkSession)
     // sets are sorted ONCE PER DOC at the projection (array_sort =
     // UTF8 binary order) so the per-pair intersection is the
@@ -1295,28 +1198,6 @@ object Dedup {
       .withColumn("__kept", expr(
         "filter(transform(__ts, (tok, i) -> struct(i AS i, tok AS tok)), " +
           "x -> NOT array_contains(__cov, x.i))"))
-  }
-
-  /** Bloom-filter prefilter for delta-vs-corpus exact dedup: find the
-    * CORPUS rows whose text collides with a (small) delta batch
-    * without ever shuffling the corpus. The delta's md5 set trains a
-    * Bloom filter (driver-built — the filter is sized by the DELTA,
-    * the small side, never the corpus), which broadcasts into a
-    * narrow `mightContain` prune over the corpus scan; only the
-    * survivors (true matches + fpp false positives) pay the exact
-    * verify join. This is the UDF exception the no-UDF rule allows:
-    * Spark has no Bloom-membership builtin on the read path, the
-    * filter object is opaque, and the alternative is shuffling 100 TB
-    * to an equi-join the prune avoids. */
-  def bloomPrefilter(corpus: DataFrame, delta: DataFrame, fpp: Double = 0.01,
-                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    val dh = delta.select(md5(col(textCol).cast("binary")).as("h"),
-      col(idCol).as("delta_id"))
-    bloomPruned(
-        corpus.select(col(idCol), md5(col(textCol).cast("binary")).as("h")),
-        dh.select(col("h")), "h", fpp)
-      .join(broadcast(dh), "h")
-      .select(col(idCol), col("delta_id"))
   }
 
   /** Narrow Bloom prune of `big` by the key set of `keys` (the small

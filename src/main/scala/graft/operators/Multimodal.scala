@@ -11,9 +11,9 @@ import org.apache.spark.sql.types._
   * fixed-offset parsing, no codec deps); PIXEL decode is real for
   * uncompressed 24/32-bit BMP ([[decodePixels]] — fixed-stride
   * little-endian rows, no codec needed) and sample decode for PCM16
-  * WAV ([[pcm16Frames]]); decode of COMPRESSED codecs remains STUBBED
-  * ([[decodeStub]], a deterministic fake — `ImageIO.read` / ffmpeg /
-  * soundfile slot in there). The Spark-side
+  * WAV ([[pcm16Frames]]); formats no decoder here covers fall back to
+  * deterministic stub dims (`ImageIO.read` / ffmpeg / soundfile would
+  * slot in there). The Spark-side
   * contract is real throughout: binary columns, explicit output
   * schema, `mapPartitions` batch shape (the Scala analog of
   * `mapInPandas`), lazy per-partition iteration so a 100 TB blob
@@ -30,33 +30,6 @@ object Multimodal {
       col(payloadCol).cast("binary").as("blob"),
       octet_length(col(payloadCol)).cast("long").as("n_bytes"),
       md5(col(payloadCol).cast("binary")).as("digest"))
-
-  val decodedSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("mean_byte", DoubleType, nullable = false)))
-
-  /** STUB decoder: stands in for an image/audio decode
-    * (`ImageIO.read` / ffmpeg / soundfile would slot in here). The
-    * fake dims are a deterministic function of the payload bytes so
-    * tests can assert plumbing end-to-end. Signature and batch shape
-    * (Iterator→Iterator per partition, constant memory) are the real
-    * contract. */
-  def decodeStub(blobs: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(decodedSchema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val bytes = r.getAs[Array[Byte]](1)
-        // ??? real decoder goes here — deterministic fake below
-        // (same stub dims as parseHeader's unknown-format fallback)
-        val mean = if (bytes.isEmpty) 0.0 else bytes.map(_ & 0xff).sum.toDouble / bytes.length
-        Row(id, stubW(bytes), stubH(bytes), 3, mean)
-      }
-    }(enc)
-  }
 
   // ---------------------------------------------------------------
   // Real (pure-JVM) header decode: BMP and WAV headers are fixed-
@@ -632,7 +605,7 @@ object Multimodal {
     * beyond width·height, a missing end-of-information, or a truncated
     * sub-block chain all yield `None`, never a throw or a spin.
     * Interlaced images, local color tables, and transparency
-    * extensions stay on the stub seam ([[decodeStub]]). */
+    * extensions stay on the stub seam. */
   private[graft] def decodeGifPixels(bytes0: Array[Byte])
       : Option[(Int, Int, Int, Long, Long, Long, Long, Long)] = {
     val bytes = if (bytes0 == null) Array.emptyByteArray else bytes0
@@ -1652,7 +1625,7 @@ object Multimodal {
     var hitMarker = false
     def fill(): Boolean = {
       if (bp >= bytes.length) return false
-      var b = bytes(bp) & 0xff
+      val b = bytes(bp) & 0xff
       if (b == 0xff) {
         if (bp + 1 >= bytes.length) return false
         val nxt = bytes(bp + 1) & 0xff
@@ -2334,24 +2307,6 @@ object Multimodal {
         }
         (width, height, 3, nPixels, sumR, sumG, sumB, 0L)
       }
-    }
-
-  /** Visible gray plane of a single-component JPEG, row-major —
-    * the per-pixel differential hook (MultimodalHeaderSpec). */
-  private[graft] def decodeJpegGray(bytes: Array[Byte]): Option[Array[Int]] =
-    decodeJpegAny(bytes).collect {
-      case d if d.planes.length == 1 =>
-        val out = new Array[Int](d.width * d.height)
-        var y = 0
-        while (y < d.height) {
-          var x = 0
-          while (x < d.width) {
-            out(y * d.width + x) = d.planes(0)(y * d.planeW(0) + x) & 0xff
-            x += 1
-          }
-          y += 1
-        }
-        out
     }
 
   /** [[decodeJpegPixels]] at scale: constant-memory per-partition

@@ -77,45 +77,14 @@ object Partitioning {
       .sortWithinPartitions(col("hilbert"))
   }
 
-  /** Per-FILE min/max statistics index over `cols` — the manifest a
-    * table format (Iceberg/Delta) would keep, built with one scan and
-    * one aggregation on `input_file_name()`. The index has one row per
-    * data file (thousands of rows for a 100 TB table — metadata-sized,
-    * not data-sized); persist it next to the data and rebuild
-    * incrementally on append. Pays off when the layout clusters the
-    * indexed columns ([[zorderBy]], `repartitionByRange` + sort):
-    * random layout makes every file's [min, max] span everything and
-    * nothing prunes. */
-  def fileStatsIndex(df: DataFrame, cols: Seq[String]): DataFrame = {
-    require(cols.nonEmpty, "index needs at least one column")
-    val aggs = count(lit(1)).as("rows") +:
-      cols.flatMap(c => Seq(min(col(c)).as(s"min_$c"), max(col(c)).as(s"max_$c")))
-    df.groupBy(input_file_name().as("file")).agg(aggs.head, aggs.tail: _*)
-  }
-
-  /** Incremental maintenance of a [[fileStatsIndex]] on append: stats
-    * are computed ONLY for files not yet indexed (data files are
-    * immutable once written — the parquet/lakehouse contract), so the
-    * cost of keeping the index current is proportional to the delta,
-    * not the table. File identity is compared on the URI path (the
-    * listing and `input_file_name()` render the scheme differently). */
-  def indexAppend(spark: org.apache.spark.sql.SparkSession, index: DataFrame,
-                  dir: String, cols: Seq[String]): DataFrame = {
-    def path(s: String): String = new java.net.URI(s).getPath
-    val known = index.select(col("file")).collect().map(r => path(r.getString(0))).toSet
-    val fresh = spark.read.parquet(dir).inputFiles.filterNot(f => known(path(f)))
-    if (fresh.isEmpty) index
-    else index.unionByName(fileStatsIndex(spark.read.parquet(fresh.toSeq: _*), cols))
-  }
-
   /** LAYOUT SKIP AUDIT — the measurement that justifies (or refutes)
     * a clustering choice BEFORE rewriting 100 TB: for each candidate
     * layout, band rows into `nFiles` files by the layout key, build
-    * the [[fileStatsIndex]]-shaped min/max manifest, and score it
-    * against a probe workload — a file is SKIPPABLE for probe
-    * [lo, hi] on column c iff its [min_c, max_c] misses the range
-    * (exactly the [[readPruned]] rule). A single-column sort layout
-    * scores ~perfect on its own column and ~zero on the other;
+    * the per-file min/max manifest a table format (Iceberg/Delta)
+    * keeps, and score it against a probe workload — a file is
+    * SKIPPABLE for probe [lo, hi] on column c iff its [min_c, max_c]
+    * misses the range. A single-column sort layout scores ~perfect on
+    * its own column and ~zero on the other;
     * Z-order/Hilbert trade a little of the first for most of the
     * second — this operator turns that folklore into a number per
     * (layout, workload).
@@ -174,68 +143,6 @@ object Partitioning {
         expr("(skipped * 1000) div file_probe_pairs"))
   }
 
-  /** EXECUTE a [[Relational.compactionPlan]]: rewrite `df` so every
-    * (keys, bin) of the SAME binning rule — bin = bytes-before-this-row
-    * div targetBytes in `orderCol` order — lands as exactly ONE output
-    * file under `dir/key=…/bin=…/`. `repartition(keys :+ bin)` puts
-    * each bin in exactly one shuffle partition and `partitionBy`
-    * splits that partition's writer per directory, so the file count
-    * equals the plan's bin count with no driver loop;
-    * `sortWithinPartitions` keeps rows in cluster order inside each
-    * file (min/max stats stay tight — the [[skipAudit]] property the
-    * compaction must not destroy). `SourcesSinksSpec` proves plan ≡
-    * executed layout and read-back ≡ input. */
-  def compactionRewrite(df: DataFrame, keys: Seq[String], orderCol: Column,
-                        sizeCol: Column, targetBytes: Long,
-                        dir: String): Unit = {
-    require(targetBytes >= 1, s"targetBytes must be >= 1, got $targetBytes")
-    val kc = keys.map(col)
-    val run = org.apache.spark.sql.expressions.Window.partitionBy(kc: _*)
-      .orderBy(orderCol)
-      .rowsBetween(org.apache.spark.sql.expressions.Window.unboundedPreceding,
-        org.apache.spark.sql.expressions.Window.currentRow)
-    df.withColumn("__b", sizeCol.cast("long"))
-      .filter(col("__b") > 0)
-      .withColumn("__cum", sum(col("__b")).over(run))
-      .withColumn("bin", expr(s"(__cum - __b) div ${targetBytes}L"))
-      .drop("__b", "__cum")
-      .repartition(kc :+ col("bin"): _*)
-      .sortWithinPartitions(kc ++ Seq(col("bin"), orderCol): _*)
-      .write.mode("overwrite")
-      .partitionBy(keys :+ "bin": _*)
-      .parquet(dir)
-  }
-
-  /** File-level data skipping without a table format: keep only the
-    * files whose stats row satisfies `keep` (written over the index's
-    * `min_*` / `max_*` columns — for "id between lo and hi" that is
-    * `max_id >= lo AND min_id <= hi`), then scan just those. The file
-    * list materializes on the driver — legitimate, it is the index,
-    * not the data (same class as broadcast k-means centroids). Stats
-    * are file-granular, so the caller re-applies the row-level filter
-    * after the read; [[SourcesSinksSpec]] proves pruned ≡ full-scan
-    * results with strictly fewer input files. */
-  def readPruned(spark: org.apache.spark.sql.SparkSession, index: DataFrame,
-                 keep: Column, basePath: Option[String] = None): DataFrame = {
-    // An explicit file list drops Hive partition-directory columns
-    // unless the reader is told where the partition tree is rooted —
-    // pass `basePath = Some(tableDir)` for a partitioned layout or the
-    // pruned schema silently loses the partition columns the full-dir
-    // scan had. Unpartitioned layouts need no basePath.
-    def reader = basePath.foldLeft(spark.read)((r, b) => r.option("basePath", b))
-    val files = index.filter(keep).select(col("file"))
-      .collect().map(_.getString(0))
-    if (files.nonEmpty) reader.parquet(files: _*)
-    else {
-      // nothing survives the prune: empty frame, but with the DATA
-      // schema (read any indexed file, keep zero rows) so downstream
-      // filters still resolve
-      val any = index.select(col("file")).limit(1).collect().map(_.getString(0))
-      if (any.isEmpty) spark.emptyDataFrame
-      else reader.parquet(any: _*).limit(0)
-    }
-  }
-
   /** Write a NEW generation of `dir` via `write(tmpPath)` and swap it
     * in with the rename-with-backup protocol. Rename returns false
     * instead of throwing on several filesystems, and an unchecked
@@ -279,8 +186,7 @@ object Partitioning {
   /** (file, bytes) inventory of a parquet dir's DATA files (recursive,
     * `_`/`.` metadata skipped) — the [[Relational.compactionPlan]]
     * input for a live store. Driver-side listing is legitimate here:
-    * the inventory IS the metadata (readPruned's index class), never
-    * the data. */
+    * the inventory IS the metadata, never the data. */
   def fileInventory(spark: org.apache.spark.sql.SparkSession,
                     dir: String): DataFrame = {
     import scala.jdk.CollectionConverters._
@@ -316,8 +222,7 @@ object Partitioning {
     * store compaction: the plan's bin
     * count, lower-bounded by ⌈bytes/target⌉ because the plan merges at
     * FILE granularity and cannot split an oversized input file, while
-    * the executing rewrite (a row-level repartition) can. Proven plan
-    * ≡ layout in `SourcesSinksSpec`. */
+    * the executing rewrite (a row-level repartition) can. */
   def plannedFileCount(spark: org.apache.spark.sql.SparkSession, dir: String,
                        targetBytes: Long): Int = {
     val bins = plannedCompaction(spark, dir, targetBytes).count().toInt

@@ -112,66 +112,13 @@ object Relational {
       .withColumn("is_current", col("valid_to").isNull)
   }
 
-  /** Skew-tolerant equi-join: salt the (potentially skewed) left side
-    * into `saltBuckets` sub-keys and replicate the right side once per
-    * bucket, so one hot key spreads over `saltBuckets` reducers.
-    * Deterministic (salt = hash of the whole left row), same result
-    * set as the plain join. AQE's skew handling covers sort-merge
-    * joins; explicit salting is the tool when the skew is in a
-    * broadcast-ineligible build side or a groupBy follows. */
-  def saltedJoin(left: DataFrame, right: DataFrame, leftKey: String, rightKey: String,
-                 saltBuckets: Int, joinType: String = "inner"): DataFrame = {
-    // Replicating the right side once per salt bucket preserves inner /
-    // left-ish semantics (each left row carries exactly one salt), but a
-    // right/full outer join would null-extend every unmatched right
-    // REPLICA — `saltBuckets` duplicate rows per unmatched right key.
-    // Refuse rather than silently corrupt; salt the other side instead.
-    val allowed = Set("inner", "left", "leftouter", "left_outer",
-      "semi", "leftsemi", "left_semi", "anti", "leftanti", "left_anti")
-    require(allowed.contains(joinType.toLowerCase.replace(" ", "_")),
-      s"saltedJoin supports inner/left/left_semi/left_anti, got '$joinType' — " +
-        "right/full outer would duplicate unmatched right rows per salt bucket " +
-        "(swap the sides, or use AQE skew handling for outer joins)")
-    val saltedLeft = left.withColumn("__salt",
-      pmod(hash(struct(left.columns.map(col): _*)), lit(saltBuckets)))
-    val saltedRight = right
-      .withColumn("__salt", explode(sequence(lit(0), lit(saltBuckets - 1))))
-    saltedLeft.join(saltedRight,
-        saltedLeft(leftKey) === saltedRight(rightKey) &&
-        saltedLeft("__salt") === saltedRight("__salt"), joinType)
-      .drop("__salt")
-  }
-
-  /** Measure-then-salt: profile the left key distribution
-    * ([[keySkewProfile]] — one aggregate pass, the measurement a
-    * production job would persist alongside the table) and only pay
-    * the salted-join replication when the measured max/avg skew ratio
-    * crosses `minSkewRatioPermille`; the salt factor is the measured
-    * ratio itself (⌈max/avg⌉, capped), so a 40×-skewed key gets ~40
-    * buckets, not a guessed constant. Below the threshold this is a
-    * plain equi-join — no replication cost for uniform data. */
-  def saltedJoinAuto(left: DataFrame, right: DataFrame,
-                     leftKey: String, rightKey: String,
-                     joinType: String = "inner",
-                     minSkewRatioPermille: Long = 4000,
-                     maxSalt: Int = 64): DataFrame = {
-    val ratio = keySkewProfile(left, leftKey).head()
-      .getAs[Long]("skew_ratio_permille")
-    if (ratio < minSkewRatioPermille)
-      left.join(right, left(leftKey) === right(rightKey), joinType)
-    else {
-      val salt = math.min(maxSalt.toLong, math.max(2L, (ratio + 999) / 1000)).toInt
-      saltedJoin(left, right, leftKey, rightKey, salt, joinType)
-    }
-  }
-
   /** Two-stage skew-safe aggregation: stage 1 pre-aggregates by
     * (keys, salt) — map-side combine plus a `saltBuckets`-way spread of
     * each hot key's rows across reducers — stage 2 merges the partials
     * by the keys alone. For decomposable aggregates (sum/count here)
     * the result is IDENTICAL to a direct groupBy; the win at 100 TB is
-    * that no single reducer materializes a hot key's full row stream
-    * (the aggregation twin of [[saltedJoin]]). The salt derives from
+    * that no single reducer materializes a hot key's full row stream.
+    * The salt derives from
     * `saltFrom` (any well-distributed column, e.g. the row's unique
     * id) so stage 1's grouping is deterministic. */
   def saltedAggregate(df: DataFrame, keys: Seq[String], saltFrom: Column,
@@ -707,8 +654,8 @@ object Relational {
     * targetBytes on either side (a bin undershoots exactly when its
     * successor's first file straddles the cut — measured in
     * `SourcesSinksSpec`), and the whole plan is one window cumsum — no
-    * driver loop, no collect, deterministic for the oracle replay. The
-    * executing rewrite is [[Partitioning.compactionRewrite]]. Output:
+    * driver loop, no collect, deterministic for the oracle replay.
+    * Output:
     * keys, bin, n_files, bytes, fill_permille (bytes·1000 div target). */
   def compactionPlan(files: DataFrame, keys: Seq[Column], orderCol: Column,
                      sizeCol: Column, targetBytes: Long): DataFrame = {
@@ -758,8 +705,8 @@ object Relational {
   }
 
   /** Key-skew diagnostics for a prospective join/aggregation key — the
-    * measurement run BEFORE deciding whether [[saltedJoin]] /
-    * [[saltedAggregate]] is needed. One row: total rows, distinct
+    * measurement run BEFORE deciding whether salting (e.g.
+    * [[saltedAggregate]]) is needed. One row: total rows, distinct
     * keys, max/avg per-key counts, and the share of rows held by the
     * hottest key and the hottest `topN` keys (permille, integer-exact).
     * `skew_ratio_permille` = 1000·max/avg; 1000 means perfectly
@@ -940,42 +887,14 @@ object Relational {
         max(col("max_cents")).as("max_cents"))
   }
 
-  /** COUNT DISTINCT's incremental-MV state — the one aggregate
-    * [[aggState]] cannot carry (distinct does not merge by sum): a
-    * per-key Apache DataSketches HLL sketch (`hll_sketch_agg`,
-    * codegen'd, map-side combinable). Sketches union losslessly, so
-    * merge(state(deltas)) ≡ state(history) EXACTLY — not just within
-    * error bounds — and the estimate is read off the merged sketch.
-    * The nightly "distinct users per type over all history" at
-    * O(delta) cost per day, error ~1.6%/√(2^lgK) (~0.8% at the
-    * default lgK=12), state 2^lgK bytes per key. */
-  def distinctState(df: DataFrame, keys: Seq[Column], valueCol: Column): DataFrame =
-    df.groupBy(keys: _*).agg(hll_sketch_agg(valueCol).as("hll"))
-
-  /** Union [[distinctState]] sketches across slices (associative,
-    * commutative, idempotent per distinct value — re-adding a value
-    * never changes the sketch, which is why replayed deltas are
-    * harmless). */
-  def mergeDistinctStates(states: Seq[DataFrame], keyCols: Seq[String]): DataFrame = {
-    require(states.nonEmpty, "need at least one state to merge")
-    states.reduce(_ unionByName _)
-      .groupBy(keyCols.map(col): _*)
-      .agg(hll_union_agg(col("hll")).as("hll"))
-  }
-
-  /** Read the estimate off a [[distinctState]] table. */
-  def distinctEstimate(state: DataFrame, keyCols: Seq[String]): DataFrame =
-    state.select(keyCols.map(col) :+
-      hll_sketch_estimate(col("hll")).as("approx_distinct"): _*)
-
-  /** EXACT incremental COUNT DISTINCT state — the exact twin of
-    * [[distinctState]]: per-delta state is the distinct (key, value)
-    * pair set, so state size is bounded by the true cardinality
+  /** EXACT incremental COUNT DISTINCT state — the exact twin of a
+    * per-key `hll_sketch_agg` state: per-delta state is the distinct
+    * (key, value) pair set, so state size is bounded by the true cardinality
     * (vs the sketch's O(1) registers at ±2% error — pick per key
     * budget). Same algebra as the sketch: merge is union+distinct —
     * associative, commutative, and idempotent per value, so replayed
     * deltas are harmless. NULL values are excluded, matching SQL
-    * COUNT(DISTINCT) and the HLL twin (both skip nulls); a key whose
+    * COUNT(DISTINCT) and the HLL sketch (both skip nulls); a key whose
     * values are ALL null carries no state and is absent from
     * [[distinctCountExact]] (state-based counting cannot represent
     * empty groups — join against the key dimension if 0-rows are
@@ -1499,9 +1418,8 @@ object Relational {
     * every bit is deterministic md5 integer arithmetic a DuckDB
     * replay reproduces exactly. Use: shipping "does this key exist in
     * that 100 TB table" to the other side of a join at sketch size
-    * (the engine-level twin is `Dedup.bloomPrefilter` / Spark's
-    * runtime bloom join; this one is a MERGEABLE STORED artifact a
-    * daily ingest maintains). */
+    * (the engine-level twin is Spark's runtime bloom join; this one
+    * is a MERGEABLE STORED artifact a daily ingest maintains). */
   /** All `numHashes` bit positions for one value off ⌈n/4⌉ digests
     * (the [[cmsPositions]] economy, prefixes "bloom|"/"bloom2|"). */
   private def bloomPositions(s: Column, numHashes: Int, bits: Int): Seq[Column] = {

@@ -397,7 +397,7 @@ object Similarity {
   private def assignCellsLocal(q: DataFrame, cents: Seq[(Long, Seq[Long])]): DataFrame = {
     graft.plans.GraftExtensions.register(q.sparkSession)
     q.withColumn("cell",
-        nearestCellCol(q, lit(0L), col("qv"), cents.map(c => (0L, c._1, c._2))))
+        nearestCellCol(lit(0L), col("qv"), cents.map(c => (0L, c._1, c._2))))
       .filter(col("cell").isNotNull)
       .select(col("__id"), col("cell"), col("qv"))
   }
@@ -414,27 +414,14 @@ object Similarity {
       lit(null).cast("array<struct<sub:bigint,cell:bigint,cv:array<bigint>>>")
     else typedlit(rows.map { case (s, cell, cv) => (s, cell, cv) })
 
-  /** The assignment argmin column with size-adaptive model transport
-    * (round-10): below `spark.graft.nearestCell.maxLiteralValues`
-    * longs (default 2¹⁶ — every benchmarked model is k≤256 × dims≤64
-    * ≈ 2¹⁴) the centroid table rides the plan as a foldable literal
-    * (zero per-executor coordination; the shape proven in round 9);
-    * above it — a realistic 100 TB IVF runs k ~ 2¹⁶ at high dims —
-    * the same argmin kernel reads a BROADCAST variable
-    * ([[graft.functions.NearestCellBcast]]), fetched once per
-    * executor instead of riding every serialized task closure.
-    * Differential parity between the two transports is pinned in
-    * NearestCellSpec. */
-  private def nearestCellCol(df: DataFrame, sub: Column, vec: Column,
-                             rows: Seq[(Long, Long, Seq[Long])]): Column = {
-    import graft.functions.NearestCell.{nearest_cell, nearest_cell_bcast}
-    val spark = df.sparkSession
-    val nValues = rows.iterator.map(_._3.length + 2L).sum
-    val maxLit = spark.conf.get("spark.graft.nearestCell.maxLiteralValues", "65536").toLong
-    if (rows.isEmpty || nValues <= maxLit) nearest_cell(sub, vec, centsLit(rows))
-    else nearest_cell_bcast(sub, vec, spark.sparkContext.broadcast(
-      rows.map { case (s, c, v) => (s, c, v.toArray) }.toArray))
-  }
+  /** The assignment argmin column: the centroid table rides the plan
+    * as a foldable literal, shipped with every task. Every model the
+    * suite trains is k≤256 × dims≤64 ≈ 2¹⁴ longs; a model far larger
+    * than that (k ~ 2¹⁶ at high dims) would want a broadcast with a
+    * managed lifetime instead. */
+  private def nearestCellCol(sub: Column, vec: Column,
+                             rows: Seq[(Long, Long, Seq[Long])]): Column =
+    graft.functions.NearestCell.nearest_cell(sub, vec, centsLit(rows))
 
   /** Final cell assignment under trained centroids: (id, cell). */
   def ivfAssign(emb: DataFrame, cents: DataFrame,
@@ -445,23 +432,10 @@ object Similarity {
     assignCells(q, cents).select(col("__id").as(idCol), col("cell"))
   }
 
-  /** IVF ANN under TRAINED cells: assign both sides to their nearest
-    * trained centroid, then exact cosine top-k inside the cell — the
-    * full IVF pipeline (train → assign → prune → score) rather than a
-    * label-column stand-in. Same scale shape as [[ivfTopK]]: centroid
-    * assignment is a broadcast (k centroids), the cell equi-join is
-    * the only shuffle of the candidate side. */
-  def ivfTopKTrained(queries: DataFrame, candidates: DataFrame, k: Int, cents: DataFrame,
-                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    val qc = queries.join(ivfAssign(queries, cents, idCol, vecCol), idCol)
-    val cc = candidates.join(ivfAssign(candidates, cents, idCol, vecCol), idCol)
-    ivfTopK(qc, cc, k, "cell", idCol, vecCol)
-  }
-
   /** Multi-probe IVF ANN — the recall/cost dial of a production IVF
     * index: candidates live in exactly ONE cell, but each query probes
-    * its `nprobe` NEAREST trained cells (nprobe=1 degrades to
-    * [[ivfTopKTrained]]; nprobe=#cells degrades to brute force).
+    * its `nprobe` NEAREST trained cells (nprobe=1 scores only the
+    * query's own cell; nprobe=#cells degrades to brute force).
     * Probe selection ranks centroid distances in the same quantized
     * space as [[ivfAssign]] (ties toward the smaller cell), so probe 1
     * is always the query's own cell. Scale shape unchanged: centroids
@@ -903,7 +877,7 @@ object Similarity {
     * the narrow nearest_cell form per subspace. */
   private def assignPqLocal(sub: DataFrame, book: Seq[(Long, Long, Seq[Long])]): DataFrame = {
     graft.plans.GraftExtensions.register(sub.sparkSession)
-    sub.withColumn("cell", nearestCellCol(sub, col("sub"), col("sqv"), book))
+    sub.withColumn("cell", nearestCellCol(col("sub"), col("sqv"), book))
       .filter(col("cell").isNotNull)
       .select(col("__id"), col("sub"), col("cell"), col("sqv"))
   }
@@ -1002,7 +976,7 @@ object Similarity {
           struct(lit(s.toLong).as("sub"),
             slice(col("qv"), s * sd + 1, sd).as("sqv"))): _*)).as("x"))
       .select(col("__id"), col("__ccell"), col("x.sub").as("sub"), col("x.sqv").as("sqv"))
-      .withColumn("code", nearestCellCol(withCell, col("sub"), col("sqv"), book))
+      .withColumn("code", nearestCellCol(col("sub"), col("sqv"), book))
       .filter(col("code").isNotNull)
       .groupBy(col("__id"), col("__ccell"))
       .agg(transform(array_sort(collect_list(struct(col("sub"), col("code").as("cell")))),
@@ -1104,16 +1078,6 @@ object Similarity {
       spark.read.parquet(s"$dir/coarse"),
       spark.read.parquet(s"$dir/codebook"),
       spark.read.parquet(s"$dir/meta").head().getInt(0))
-
-  /** [[ivfPqTopK]] against a STORED model — the serving path: zero
-    * training, query cost is the assignment broadcasts + the
-    * (cell, code) equi-joins (the candidate corpus is still encoded
-    * per call; [[AnnIndex]] stores the codes too). */
-  def ivfPqTopKStored(queries: DataFrame, candidates: DataFrame,
-                      model: AnnModel, k: Int,
-                      idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame =
-    ivfPqTopK(queries, candidates, model.coarse, model.codebook, model.m, k,
-      idCol, vecCol)
 
   /** The FULL stored IVFPQ index — faiss's on-disk layout: the trained
     * [[AnnModel]] plus the corpus's coarse-cell assignments and PQ

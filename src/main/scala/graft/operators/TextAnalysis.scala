@@ -247,13 +247,6 @@ object TextAnalysis {
     profileRows.toDF("cand_lang", "t")
   }
 
-  /** [[langProfileDf]] as a driver map (lang → profile tokens) — the
-    * broadcastable model the narrow/streaming scoring forms inline. */
-  def langProfile(docs: DataFrame, profileSize: Int = 20): Map[String, Seq[String]] =
-    langProfileDf(docs, profileSize).collect()
-      .map(r => (r.getString(0), r.getString(1)))
-      .groupBy(_._1).map { case (l, ts) => l -> ts.map(_._2).toSeq }
-
   def langId(docs: DataFrame, profileSize: Int = 20): DataFrame = {
     val profile = langProfileDf(docs, profileSize)
     // scoring pass (lazy): doc-level term frequencies × broadcast profile
@@ -322,61 +315,6 @@ object TextAnalysis {
       .select(col("doc_id"), col("span_lang"),
         col("win_start"), col("win_end"), col("n_windows"))
   }
-
-  /** NARROW (per-row) twin of [[langSpans]] under a PRE-TRAINED
-    * profile: window scoring, argmax and the island merge all run
-    * inside the row (higher-order expressions over the token array —
-    * profile literals, an in-row span fold), so the operator has ZERO
-    * shuffle and composes into Structured Streaming unchanged
-    * (in-flight language routing of a live ingest). Spans come back as
-    * one array column per doc; `explodeSpans` flattens to
-    * [[langSpans]]' row shape. Identical decisions by construction:
-    * same hits, same (hits desc, lang asc) argmax, same 'und'
-    * fallback — parity proven in `TextOpsSpec`. */
-  def langSpansNarrow(docs: DataFrame, profile: Map[String, Seq[String]],
-                      windowTokens: Int = 10, idCol: String = "doc_id",
-                      textCol: String = "text"): DataFrame = {
-    require(windowTokens > 0, s"windowTokens must be positive, got $windowTokens")
-    val W = windowTokens
-    val spanType = "array<struct<span_lang:string,win_start:bigint,win_end:bigint>>"
-    val withTk = docs.select(col(idCol), tokens(col(textCol)).as("__tk"))
-      .withColumn("__nwin", ceil(size(col("__tk")).cast("double") / W).cast("int"))
-    def labelOf(w: Column): Column = {
-      val best = profile.keys.toSeq.sorted.foldLeft(
-        struct(lit(0L).as("h"), lit("und").as("l"))) { (b, lang) =>
-        val h = size(filter(slice(col("__tk"), (w * W + 1).cast("int"), lit(W)),
-          t => array_contains(typedlit(profile(lang).sorted), t))).cast("long")
-        when(h > b.getField("h"), struct(h.as("h"), lit(lang).as("l"))).otherwise(b)
-      }
-      best.getField("l")
-    }
-    val spans = aggregate(
-      sequence(lit(0), col("__nwin") - 1),
-      expr(s"CAST(array() AS $spanType)"),
-      (acc, w) => {
-        val lbl = labelOf(w)
-        val last = element_at(acc, -1)
-        val extended = concat(slice(acc, lit(1), size(acc) - 1),
-          array(struct(last.getField("span_lang").as("span_lang"),
-            last.getField("win_start").as("win_start"),
-            w.cast("long").as("win_end"))))
-        val appended = concat(acc,
-          array(struct(lbl.as("span_lang"),
-            w.cast("long").as("win_start"), w.cast("long").as("win_end"))))
-        when(size(acc) > 0 && last.getField("span_lang") === lbl, extended)
-          .otherwise(appended)
-      })
-    withTk.filter(col("__nwin") > 0)
-      .select(col(idCol), spans.as("spans"))
-  }
-
-  /** Flatten [[langSpansNarrow]]'s per-doc span array to
-    * [[langSpans]]' row shape. */
-  def explodeSpans(df: DataFrame, idCol: String = "doc_id"): DataFrame =
-    df.select(col(idCol), explode(col("spans")).as("s"))
-      .select(col(idCol), col("s.span_lang").as("span_lang"),
-        col("s.win_start").as("win_start"), col("s.win_end").as("win_end"),
-        (col("s.win_end") - col("s.win_start") + 1).as("n_windows"))
 
   /** Out-of-vocabulary rate per document against the corpus's own
     * top-`vocabSize` token vocabulary — the coverage check run before
@@ -1535,8 +1473,7 @@ object TextAnalysis {
     * passes through, the cursor consumes the longest vocab piece
     * (maxLen..1), unknown chars consume one position. Pure integers —
     * the DuckDB twin runs the identical fold. Shared by
-    * [[wordpieceEncode]] (distinct-word grain) and
-    * [[wordpieceEncodeNarrow]] (per-row, streaming-composable). */
+    * [[wordpieceEncode]] and [[tokenizerEval]] (distinct-word grain). */
   private def wpFoldLen(word: Column, vlit: Column, maxLen: Int): Column =
     aggregate(
       sequence(lit(1), length(word)),
@@ -1588,31 +1525,6 @@ object TextAnalysis {
       length(regexp_replace(col(textCol), " ", "")).cast("long").as("n_chars"))
       .join(perDoc, Seq(idCol), "left")
       .withColumn("n_wp_tokens", coalesce(col("n_wp_tokens"), lit(0L)))
-      .withColumn("compression_permille",
-        when(col("n_wp_tokens") > 0,
-          floor(col("n_chars") * 1000 / col("n_wp_tokens")).cast("long"))
-          .otherwise(lit(0L)))
-  }
-
-  /** NARROW (per-row) twin of [[wordpieceEncode]]: the greedy fold
-    * runs over every token occurrence inside the row instead of once
-    * per distinct word — strictly more compute on repeated words, but
-    * ZERO shuffle, so it composes into Structured Streaming unchanged
-    * (in-flight tokenizer metering: context-budget accounting on a
-    * live ingest before anything lands). Identical results to the
-    * batch form by construction (same fold, proven in
-    * `StreamingSpec`); batch pipelines should prefer
-    * [[wordpieceEncode]]'s distinct-word grain. */
-  def wordpieceEncodeNarrow(docs: DataFrame, vocabPieces: Seq[String],
-                            maxLen: Int = 4, idCol: String = "doc_id",
-                            textCol: String = "text"): DataFrame = {
-    val vlit = typedlit(vocabPieces.sorted)
-    def wpLen(word: Column): Column = wpFoldLen(word, vlit, maxLen)
-    docs.select(col(idCol),
-      size(tokens(col(textCol))).cast("long").as("n_words"),
-      length(regexp_replace(col(textCol), " ", "")).cast("long").as("n_chars"),
-      coalesce(aggregate(transform(tokens(col(textCol)), w => wpLen(w)),
-        lit(0L), (a, x) => a + x), lit(0L)).as("n_wp_tokens"))
       .withColumn("compression_permille",
         when(col("n_wp_tokens") > 0,
           floor(col("n_chars") * 1000 / col("n_wp_tokens")).cast("long"))
@@ -1697,33 +1609,6 @@ object TextAnalysis {
         when(col("n_wp_tokens") > 0,
           floor(col("n_chars") * 1000 / col("n_wp_tokens")).cast("long"))
           .otherwise(lit(0L)))
-  }
-
-  /** The 100 TB form of [[perplexityBuckets]], executable rather than
-    * scaladoc'd: per-stratum band BOUNDARIES from one
-    * `approx_percentile` aggregation (map-side-combinable KLL-style
-    * sketch, boundaries driver-small), then a broadcast range lookup —
-    * the per-stratum SORT the exact ntile pays is gone from the plan
-    * entirely (spec asserts no WindowExec). Band populations are equal
-    * to sketch precision instead of exactly; the keep/drop decision is
-    * identical wherever the sketch's boundary agrees with the exact
-    * tercile (measured in the spec). */
-  def perplexityBucketsApprox(docs: DataFrame, nBuckets: Int = 3,
-                              strataCol: String = "source",
-                              idCol: String = "doc_id",
-                              accuracy: Int = 10000): DataFrame = {
-    require(nBuckets >= 2, s"need at least 2 buckets, got $nBuckets")
-    val scored = docs.select(col(idCol), col(strataCol))
-      .join(bigramPerplexity(docs, idCol), idCol)
-    val probs = (1 until nBuckets).map(_.toDouble / nBuckets)
-    val bounds = scored.groupBy(col(strataCol))
-      .agg(percentile_approx(col("ppl_q4"),
-        typedlit(probs), lit(accuracy)).as("__bounds"))
-    scored.join(broadcast(bounds), strataCol)
-      .withColumn("bucket",
-        (size(filter(col("__bounds"), b => col("ppl_q4") > b)) + 1).cast("long"))
-      .withColumn("keep", col("bucket") < nBuckets)
-      .drop("__bounds")
   }
 
   /** Unigram-LM (SentencePiece-style) piece vocabulary: candidate
@@ -1845,35 +1730,6 @@ object TextAnalysis {
       .join(perDoc, Seq(idCol), "left")
       .withColumn("n_pieces", coalesce(col("n_pieces"), lit(0L)))
       .withColumn("total_score", coalesce(col("total_score"), lit(0L)))
-      .withColumn("compression_permille",
-        when(col("n_pieces") > 0,
-          floor(col("n_chars") * 1000 / col("n_pieces")).cast("long"))
-          .otherwise(lit(0L)))
-  }
-
-  /** NARROW (per-row) twin of [[unigramEncode]]: the Viterbi fold
-    * runs over every token occurrence inside the row — strictly more
-    * compute on repeated words, but ZERO shuffle, so it composes into
-    * Structured Streaming unchanged (in-flight OPTIMAL-tokenizer
-    * metering, the unigram sibling of [[wordpieceEncodeNarrow]]).
-    * Identical results to the batch form by construction (same fold).
-    * `vocabScores` is the driver-collected piece→score model. */
-  def unigramEncodeNarrow(docs: DataFrame, vocabScores: Map[String, Long],
-                          maxLen: Int = 4, idCol: String = "doc_id",
-                          textCol: String = "text"): DataFrame = {
-    val scoreMap = typedlit(vocabScores)
-    docs.select(col(idCol),
-      size(tokens(col(textCol))).cast("long").as("n_words"),
-      length(regexp_replace(col(textCol), " ", "")).cast("long").as("n_chars"),
-      coalesce(aggregate(
-        transform(tokens(col(textCol)),
-          w => unigramViterbi(w, scoreMap, maxLen)),
-        struct(lit(0L).as("np"), lit(0L).as("tot")),
-        (a, x) => struct((a.getField("np") + x.getField("np")).as("np"),
-          (a.getField("tot") + x.getField("tot")).as("tot"))),
-        struct(lit(0L).as("np"), lit(0L).as("tot"))).as("__s"))
-      .select(col(idCol), col("n_words"), col("n_chars"),
-        col("__s.np").as("n_pieces"), col("__s.tot").as("total_score"))
       .withColumn("compression_permille",
         when(col("n_pieces") > 0,
           floor(col("n_chars") * 1000 / col("n_pieces")).cast("long"))
@@ -2028,16 +1884,14 @@ object TextAnalysis {
     lcp
   }
 
-  /** Longest repeated substring of `s` (occurrences may overlap):
-    * (length, lexicographically smallest repeat of that length), or
-    * (0, "") when every substring is unique. Max over the LCP array;
-    * every maximal repeat surfaces as an adjacent suffix pair.
+  /** Longest repeated substring of the codepoints `cps` (occurrences
+    * may overlap): (length, lexicographically smallest repeat of that
+    * length), or (0, "") when every substring is unique. Max over the
+    * LCP array; every maximal repeat surfaces as an adjacent suffix
+    * pair.
     * Length, slicing and tie-break ordering are all in CODEPOINTS so
     * non-BMP text (surrogate pairs) agrees with the oracle's
     * codepoint semantics. */
-  private[graft] def longestRepeatOf(s: String): (Int, String) =
-    longestRepeatOfCps(s.codePoints().toArray)
-
   private[graft] def longestRepeatOfCps(cps: Array[Int]): (Int, String) = {
     val n = cps.length
     if (n < 2) return (0, "")

@@ -401,29 +401,6 @@ object WebExtract {
     out.result()
   }
 
-  /** Longest-match decision for one path against parsed rules:
-    * (allowed, matchedRuleLen — 0 when no rule matches). A rule
-    * matches as a literal prefix, or exactly when '$'-anchored; ties
-    * on length go to Allow. */
-  private[graft] def robotsDecide(path: String,
-      rules: Vector[(String, Boolean)]): (Boolean, Int) = {
-    var bestLen = -1
-    var bestAllow = true
-    rules.foreach { case (rule, isAllow) =>
-      val anchored = rule.endsWith("$")
-      val body = if (anchored) rule.dropRight(1) else rule
-      val matches = if (anchored) path == body else path.startsWith(body)
-      if (matches) {
-        val l = body.length
-        if (l > bestLen || (l == bestLen && isAllow && !bestAllow)) {
-          bestLen = l
-          bestAllow = isAllow
-        }
-      }
-    }
-    if (bestLen < 0) (true, 0) else (bestAllow, bestLen)
-  }
-
   /** Gate a URL frontier against per-host robots.txt bodies:
     * (doc_id, host, allowed, rule_len) per URL. The robots side is
     * model-small (one row per registered host — KB per million docs):

@@ -1,70 +1,13 @@
 package graft.sinks
 
 import org.apache.spark.sql.DataFrame
-import org.apache.spark.sql.streaming.{DataStreamWriter, StreamingQuery, Trigger}
 
-/** The reference's remaining sink surface (O14 console, O16 append
-  * JDBC, O17 Kafka stub) plus the file sinks a batch engine needs.
-  * The upsert path lives in [[JdbcUpsertSink]].
+/** Partition-grain upsert into a parquet lake table. The row-grain
+  * upsert lives in [[JdbcUpsertSink]]; the reference's other sinks are
+  * Spark's own writers — `writeStream.format("console")` (O14),
+  * `write.jdbc` (O16) and `writeStream.format("kafka")` (O17).
   */
 object Sinks {
-
-  /** Console debug sink (reference `stream.print()`, Main.java:134). */
-  def console(df: DataFrame, numRows: Int = 20): DataStreamWriter[org.apache.spark.sql.Row] =
-    df.writeStream.format("console").option("numRows", numRows)
-
-  /** Kafka producer sink (the reference's empty SinkToKafka stub, made
-    * real). `df` must have a `value` (and optionally `key`) column.
-    * Fail-fast when the spark-sql-kafka connector jar is absent (as in
-    * this build environment — see [[graft.sources.KafkaSupport]]). */
-  def kafka(df: DataFrame, brokers: String, topic: String,
-            checkpointDir: String): DataStreamWriter[org.apache.spark.sql.Row] = {
-    graft.sources.KafkaSupport.requireConnector("Sinks.kafka")
-    df.writeStream.format("kafka")
-      .option("kafka.bootstrap.servers", brokers)
-      .option("topic", topic)
-      .option("checkpointLocation", checkpointDir)
-  }
-
-  /** Streaming parquet append sink (exactly-once per file via the
-    * checkpoint + _spark_metadata commit log). */
-  def parquetStream(df: DataFrame, path: String, checkpointDir: String,
-                    trigger: Trigger = Trigger.ProcessingTime("1 second")): StreamingQuery =
-    df.writeStream.format("parquet")
-      .option("path", path)
-      .option("checkpointLocation", checkpointDir)
-      .trigger(trigger)
-      .start()
-
-  /** Batch parquet write, partitioned — the at-rest layout choice that
-    * decides scan pruning at 100 TB. */
-  def parquet(df: DataFrame, path: String, partitionBy: Seq[String] = Nil,
-              mode: String = "overwrite"): Unit = {
-    val w = df.write.mode(mode)
-    (if (partitionBy.nonEmpty) w.partitionBy(partitionBy: _*) else w).parquet(path)
-  }
-
-  /** Small-file compaction for a parquet directory — the OPTIMIZE-style
-    * maintenance pass: streaming sinks and partition upserts accrete
-    * small files, and at 100 TB scan cost is dominated by file-open
-    * overhead and lost row-group statistics. Reads `inDir`, sizes the
-    * output at ⌈input bytes / targetBytes⌉ files, and rewrites to
-    * `outDir` (write-then-swap is the caller's move — compacting
-    * in-place while readers stream the same files is a race).
-    * `repartition` (not `coalesce`) so output files are even-sized:
-    * coalesce concatenates input partitions and reproduces the skew
-    * compaction exists to fix. Returns the output file count. */
-  def compactTo(spark: org.apache.spark.sql.SparkSession, inDir: String,
-                outDir: String, targetBytes: Long): Int = {
-    require(targetBytes > 0, s"targetBytes must be positive, got $targetBytes")
-    val path = new org.apache.hadoop.fs.Path(inDir)
-    val fs = path.getFileSystem(spark.sessionState.newHadoopConf())
-    val bytes = fs.getContentSummary(path).getLength
-    val nFiles = math.max(1L, (bytes + targetBytes - 1) / targetBytes).toInt
-    spark.read.parquet(inDir).repartition(nFiles)
-      .write.mode("overwrite").parquet(outDir)
-    nFiles
-  }
 
   /** Partition-level upsert into a partitioned parquet lake table:
     * DYNAMIC partition overwrite rewrites only the partitions present
@@ -83,10 +26,4 @@ object Sinks {
       .option("partitionOverwriteMode", "dynamic")
       .partitionBy(partitionBy: _*).parquet(path)
   }
-
-  /** Batch JDBC append (reference O16 SinkToGreenplum — at-least-once;
-    * prefer [[JdbcUpsertSink]] for exactly-once upsert). */
-  def jdbcAppend(df: DataFrame, url: String, table: String,
-                 props: java.util.Properties = new java.util.Properties()): Unit =
-    df.write.mode("append").jdbc(url, table, props)
 }

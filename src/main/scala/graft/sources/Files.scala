@@ -1,61 +1,17 @@
 package graft.sources
 
-import org.apache.spark.sql.{DataFrame, DataFrameReader, SparkSession}
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.{DataFrame, SparkSession}
 
-/** File-format sources (SURVEY.md §2.1 gap map): parquet / orc / csv /
-  * json, batch and streaming, always with explicit schemas on
-  * semi-structured input — never `inferSchema` on a feed whose column
-  * order and types must stay stable (the CDC lesson from the
-  * reference).
+/** The file-drop source of the CDC stream. Every other file format is
+  * read through Spark's own `spark.read` / `spark.readStream` with an
+  * explicit schema on semi-structured input — never `inferSchema` on a
+  * feed whose column order and types must stay stable (the CDC lesson
+  * from the reference).
   */
 object Files {
-
-  private def reader(spark: SparkSession, schema: Option[StructType]): DataFrameReader = {
-    val r = Tables.normalize(spark).read
-    schema.map(r.schema).getOrElse(r)
-  }
-
-  def parquet(spark: SparkSession, path: String): DataFrame =
-    reader(spark, None).parquet(path)
-
-  /** ORC — the other columnar format with predicate pushdown and
-    * column pruning at the scan (same `PushedFilters` contract as
-    * parquet; round-trip + pushdown proven in `SourcesSinksSpec`). */
-  def orc(spark: SparkSession, path: String): DataFrame =
-    reader(spark, None).orc(path)
-
-  def csv(spark: SparkSession, path: String, schema: Option[StructType] = None,
-          header: Boolean = true, delimiter: String = ","): DataFrame =
-    reader(spark, schema)
-      .option("header", header).option("delimiter", delimiter)
-      .csv(path)
-
-  def json(spark: SparkSession, path: String, schema: Option[StructType] = None): DataFrame =
-    reader(spark, schema).json(path)
-
-  /** Streaming file source: picks up new files per micro-batch —
-    * the file-drop equivalent of the Kafka feed. Schema mandatory
-    * (Structured Streaming requires it). */
-  def parquetStream(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    Tables.normalize(spark).readStream.schema(schema).parquet(path)
-
-  def jsonStream(spark: SparkSession, path: String, schema: StructType): DataFrame =
-    Tables.normalize(spark).readStream.schema(schema).json(path)
 
   /** Raw line stream (one string column `value`) — the file-drop stand-in
     * for a Kafka topic of Canal flat-JSON. */
   def textStream(spark: SparkSession, path: String): DataFrame =
     Tables.normalize(spark).readStream.text(path)
-
-  /** Register every harness table as a temp view so `spark.sql` works
-    * directly (the reference's registerDataStream/scan surface, O6/O8).
-    */
-  def registerAll(spark: SparkSession, sfDir: String): Unit = {
-    Seq("region", "nation", "customer", "supplier", "part", "orders",
-      "lineitem", "documents", "embeddings").foreach { t =>
-      Tables.table(spark, sfDir, t).createOrReplaceTempView(t)
-    }
-    Tables.events(spark, sfDir).createOrReplaceTempView("events")
-  }
 }

@@ -94,18 +94,6 @@ object Tables {
   private def nanosToSec(ts: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
     ((ts - pmod(ts, lit(1000000000L))) / lit(1000000000L)).cast("long")
 
-  /** Second-truncated TIMESTAMP from a raw `ts` of either physical
-    * encoding (LongType nanos under `nanosAsLong`, or a timestamp
-    * column) — the shared shim for code reading the events parquet
-    * directly, e.g. through a streaming file source. */
-  def secondTimestamp(ts: org.apache.spark.sql.Column,
-                      dt: org.apache.spark.sql.types.DataType): org.apache.spark.sql.Column =
-    dt match {
-      case org.apache.spark.sql.types.LongType =>
-        timestamp_seconds(nanosToSec(ts))
-      case _ => timestamp_seconds(unix_seconds(ts.cast("timestamp")))
-    }
-
   /** `events` with the raw clock kept as `ts_ns` (long nanos) plus two
     * derived columns every operator downstream uses:
     *   - `ts_sec` — integer epoch seconds (stable across engines; used

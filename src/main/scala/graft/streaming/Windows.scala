@@ -1,6 +1,6 @@
 package graft.streaming
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.DataFrame
 import org.apache.spark.sql.functions._
 
 /** Event-time windowed aggregation and sessionization for streams —
@@ -14,17 +14,6 @@ import org.apache.spark.sql.functions._
   */
 object Windows {
 
-  /** Tumbling event-time counts/sums per key with late-data bound
-    * `maxLateness`. Works identically on batch DataFrames (watermark
-    * is a no-op there) — the batch twin is `rel_window_tumbling`. */
-  def tumbling(events: DataFrame, tsCol: String, keyCol: String,
-               windowLen: String, maxLateness: String): DataFrame =
-    events
-      .withWatermark(tsCol, maxLateness)
-      .groupBy(window(col(tsCol), windowLen).as("win"), col(keyCol))
-      .agg(count(lit(1)).as("n"), sum(col("value")).as("sum_value"))
-      .select(col("win.start").as("win_start"), col(keyCol), col("n"), col("sum_value"))
-
   /** Gap-based session windows per user via the native
     * `session_window` (dynamic-gap state handled by Spark's session
     * store; batch twin is Relational.sessionize). */
@@ -36,55 +25,6 @@ object Windows {
       .agg(count(lit(1)).as("n_events"))
       .select(col(userCol), col("win.start").as("sess_start"),
         col("win.end").as("sess_end"), col("n_events"))
-
-  /** Stream–stream inner join: both sides watermarked, right rows
-    * match left rows with the same key within `[leftTs - within,
-    * leftTs]`. The time bound + watermarks let Spark expire join state
-    * on both sides — the genuinely stateful join the reference's gap
-    * map calls out for CDC'd dimensions (SURVEY.md §7.4). */
-  def streamStreamJoin(left: DataFrame, right: DataFrame,
-                       leftKey: String, rightKey: String,
-                       leftTs: String, rightTs: String,
-                       within: String, maxLateness: String): DataFrame =
-    left.withWatermark(leftTs, maxLateness)
-      .join(right.withWatermark(rightTs, maxLateness),
-        col(leftKey) === col(rightKey) &&
-          col(rightTs) >= col(leftTs) - expr(s"INTERVAL $within") &&
-          col(rightTs) <= col(leftTs),
-        "inner")
-
-  /** Stream–stream LEFT OUTER join: like [[streamStreamJoin]], but
-    * left rows with no match emit null-extended once the watermark
-    * passes their join window (Spark holds them in state exactly that
-    * long — the bound that makes outer stream joins feasible at
-    * scale). */
-  def streamStreamLeftJoin(left: DataFrame, right: DataFrame,
-                           leftKey: String, rightKey: String,
-                           leftTs: String, rightTs: String,
-                           within: String, maxLateness: String): DataFrame =
-    left.withWatermark(leftTs, maxLateness)
-      .join(right.withWatermark(rightTs, maxLateness),
-        col(leftKey) === col(rightKey) &&
-          col(rightTs) >= col(leftTs) - expr(s"INTERVAL $within") &&
-          col(rightTs) <= col(leftTs),
-        "left_outer")
-
-  /** Stream–stream FULL OUTER join — completes the join matrix
-    * (inner/left above): unmatched rows from EITHER side emit
-    * null-extended once the watermark passes their join window. Both
-    * sides' state is bounded by the time condition + watermark, same
-    * as the one-sided forms — the property that makes outer stream
-    * joins feasible at scale. */
-  def streamStreamFullJoin(left: DataFrame, right: DataFrame,
-                           leftKey: String, rightKey: String,
-                           leftTs: String, rightTs: String,
-                           within: String, maxLateness: String): DataFrame =
-    left.withWatermark(leftTs, maxLateness)
-      .join(right.withWatermark(rightTs, maxLateness),
-        col(leftKey) === col(rightKey) &&
-          col(rightTs) >= col(leftTs) - expr(s"INTERVAL $within") &&
-          col(rightTs) <= col(leftTs),
-        "full_outer")
 
   /** Sliding-window rates (the dashboard "last N minutes" view). */
   def sliding(events: DataFrame, tsCol: String, keyCol: String,

@@ -7,8 +7,9 @@ import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
   * conversions (`org.apache.spark.sql.classic.ExpressionUtils` is
   * `private[sql]`): the standard Spark-extension idiom for
   * expressions whose constructors carry non-Expression state — here
-  * [[graft.functions.NearestCellBcast]]'s Broadcast handle — which
-  * the FunctionRegistry path cannot transport. Also the one place a
+  * the held dimension that [[graft.streaming.HeldDimension]]'s lookup
+  * expression reads — which the FunctionRegistry path cannot
+  * transport. Also the one place a
   * graft frame is rebuilt from a rewritten logical plan
   * (`classic.Dataset.ofRows` is `private[sql]` too). */
 object GraftColumnBridge {

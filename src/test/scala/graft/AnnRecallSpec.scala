@@ -38,6 +38,16 @@ class AnnRecallSpec extends SparkSpec {
     rows.toDF("vec_id", "label", "embedding")
   }
 
+  /** IVF under trained cells: both sides assigned to their nearest
+    * trained centroid, exact cosine top-k inside the cell. */
+  private def ivfTopKTrained(queries: org.apache.spark.sql.DataFrame,
+                             candidates: org.apache.spark.sql.DataFrame, k: Int,
+                             cents: org.apache.spark.sql.DataFrame) = {
+    val qc = queries.join(Similarity.ivfAssign(queries, cents), "vec_id")
+    val cc = candidates.join(Similarity.ivfAssign(candidates, cents), "vec_id")
+    Similarity.ivfTopK(qc, cc, k, "cell")
+  }
+
   private def topkSets(df: org.apache.spark.sql.DataFrame): Map[Long, Set[Long]] =
     df.select("query_id", "cand_id").as[(Long, Long)].collect()
       .groupBy(_._1).view.mapValues(_.map(_._2).toSet).toMap
@@ -60,7 +70,7 @@ class AnnRecallSpec extends SparkSpec {
     assert(rIvf >= 0.9, f"label-cell IVF recall@5 $rIvf%.2f below floor")
 
     val cents = Similarity.ivfTrain(emb, k = nClusters, iters = 4)
-    val trained = topkSets(Similarity.ivfTopKTrained(queries, emb, k = 5, cents))
+    val trained = topkSets(ivfTopKTrained(queries, emb, k = 5, cents))
     val rTrained = recall(trained, exact)
     assert(rTrained >= 0.8, f"trained-IVF recall@5 $rTrained%.2f below floor")
 
@@ -145,7 +155,7 @@ class AnnRecallSpec extends SparkSpec {
     val queries = emb.filter(col("vec_id") % 16 === 0)
     val cents = Similarity.ivfTrain(emb, k = nClusters, iters = 4)
     val exact = topkSets(Similarity.bruteForceTopK(queries, emb, k = 5))
-    val r1 = recall(topkSets(Similarity.ivfTopKTrained(queries, emb, 5, cents)), exact)
+    val r1 = recall(topkSets(ivfTopKTrained(queries, emb, 5, cents)), exact)
     val r2 = recall(topkSets(
       Similarity.ivfTopKProbes(queries, emb, 5, cents, nprobe = 2)), exact)
     assert(r2 >= r1, f"nprobe=2 recall $r2%.2f below nprobe=1 $r1%.2f")
@@ -204,7 +214,8 @@ class AnnRecallSpec extends SparkSpec {
         .collect().toSeq
     val fresh = rows(Similarity.ivfPqTopK(queries, clustered,
       model.coarse, model.codebook, m = 4, k = 5))
-    val stored = rows(Similarity.ivfPqTopKStored(queries, clustered, back, k = 5))
+    val stored = rows(Similarity.ivfPqTopK(queries, clustered,
+      back.coarse, back.codebook, back.m, k = 5))
     assert(stored === fresh, "stored-model serving must be bit-identical to fresh training")
   }
 

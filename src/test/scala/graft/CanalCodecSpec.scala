@@ -77,17 +77,6 @@ class CanalCodecSpec extends SparkSpec {
     assert(byId("2") === Map("address_id" -> "9"))
   }
 
-  test("changedColumns exposes the UPDATE's changed set; null for INSERT and missing old") {
-    val upd = envOld("UPDATE", """[{"id":"1","meeting_code":"x"}]""",
-      """[{"meeting_code":"old-code"}]""")
-    val df = Seq(upd, insert, update).toDF("value")
-    val cc = CanalCodec.changedColumns(CanalCodec.rows(
-      CanalCodec.changes(CanalCodec.decode(df), "t_meeting_info"))).collect()
-    val withOld = cc.filter(r => !r.isNullAt(r.fieldIndex("changed_cols")))
-    assert(withOld.length === 1)
-    assert(withOld.head.getAs[Seq[String]]("changed_cols") === Seq("meeting_code"))
-  }
-
   test("dropNoOpUpdates keeps only UPDATEs touching projected columns") {
     val touching = envOld("UPDATE", """[{"id":"1","meeting_code":"x"}]""",
       """[{"meeting_code":"was"}]""")

@@ -514,29 +514,30 @@ class CorpusSpec extends SparkSpec {
     assert(got === Map(1L -> "delete", 2L -> "update", 4L -> "update", 5L -> "insert"))
   }
 
-  test("containmentPairs finds a low-Jaccard excerpt and honors the posting governor") {
+  test("char-gram containment finds an excerpt and honors the posting governor") {
+    val excerpt = "alpha beta gamma"
     val docs = Seq(
-      (1L, "alpha beta gamma"),                                     // 3 tokens
-      (2L, ("alpha beta gamma " + (1 to 40).map(i => s"w$i").mkString(" "))), // superset
-      (3L, (41 to 80).map(i => s"w$i").mkString(" "))               // unrelated
+      (1L, excerpt),
+      (2L, excerpt + " " + (1 to 40).map(i => s"w$i").mkString(" ")), // superset
+      (3L, (41 to 80).map(i => s"z$i").mkString(" "))   // every 5-gram holds a 'z'
     ).toDF("doc_id", "text")
-    val pairs = Dedup.containmentPairs(docs, Nil, thresholdPermille = 800)
-      .select("doc_a", "doc_b", "cont_permille")
+    val pairs = Dedup.charNgramContainmentAccounted(docs, Nil, thresholdPermille = 800)
+      .pairs.select("doc_a", "doc_b", "cont_permille")
       .as[(Long, Long, Long)].collect().toSet
-    // J(1,2) = 3/43 ≈ 0.07, but containment = 3/3 = 1.0
+    // J(1,2) is low (12 of doc 2's ~150 grams), but containment = 12/12
     assert(pairs.contains((1L, 2L, 1000L)))
     assert(!pairs.exists(p => p._1 == 3L || p._2 == 3L))
-    // governor: cap 1 drops every token appearing in both docs from
+    // governor: cap 1 drops every gram appearing in both docs from
     // the postings — the excerpt pair is lost, and the accounting says so
-    val acc = Dedup.containmentPairsAccounted(docs, Nil, thresholdPermille = 800,
+    val acc = Dedup.charNgramContainmentAccounted(docs, Nil, thresholdPermille = 800,
       maxPostings = 1)
     assert(acc.pairs.count() === 0L)
-    assert(acc.droppedTokens.count() === 3L) // alpha, beta, gamma
+    assert(acc.droppedTokens.count() === excerpt.sliding(5).toSet.size.toLong)
     // the probe⋈postings stage must stay an EQUI-join even with no
     // strata — a same-attribute-id join key would degenerate to an
     // all-pairs product (caught here by plan shape, not just results)
-    val plan = Dedup.containmentPairs(docs, Nil, thresholdPermille = 800)
-      .queryExecution.executedPlan.toString
+    val plan = Dedup.charNgramContainmentAccounted(docs, Nil, thresholdPermille = 800)
+      .pairs.queryExecution.executedPlan.toString
     assert(!plan.contains("CartesianProduct"), plan.take(2000))
     assert(!plan.contains("BroadcastNestedLoopJoin"), plan.take(2000))
   }

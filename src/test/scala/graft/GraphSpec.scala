@@ -171,23 +171,6 @@ class GraphSpec extends SparkSpec {
     assert(replayed.as[(Long, Long)].collect().toMap === unionFindComponents(all))
   }
 
-  test("componentsMaintain: stored map maintained across deltas ≡ recompute, " +
-    "bootstrap + atomic swap + replay") {
-    val dir = tempDir("cc_maint") + "/map"
-    val rnd = new scala.util.Random(41)
-    val all = Seq.fill(60)((rnd.nextLong(40) + 3, rnd.nextLong(40) + 3))
-      .filter { case (a, b) => a != b }
-    val batches = all.grouped(20).toSeq
-    batches.foreach(b => Dedup.componentsMaintain(spark, dir, b.toDF("doc_a", "doc_b")))
-    def stored(): Map[Long, Long] = spark.read.parquet(dir)
-      .as[(Long, Long)].collect().toMap
-    assert(stored() === unionFindComponents(all),
-      "maintained map diverged from the full recompute")
-    // at-least-once replay of the last batch: no change
-    Dedup.componentsMaintain(spark, dir, batches.last.toDF("doc_a", "doc_b"))
-    assert(stored() === unionFindComponents(all))
-  }
-
   test("keepBest ≡ reference argmax over union-find clusters (randomized)") {
     val rnd = new scala.util.Random(77)
     val n = 80L

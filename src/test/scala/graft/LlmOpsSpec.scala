@@ -75,7 +75,7 @@ class LlmOpsSpec extends SparkSpec {
   test("jaccard of identical docs is 1000 permille; pairs respect blocking") {
     val d = Seq((1L, "a b c d", "s1", "en"), (2L, "a b c d", "s1", "en"),
       (3L, "a b c d", "s2", "en")).toDF("doc_id", "text", "source", "lang")
-    val pairs = Dedup.jaccardPairs(d, Seq("source", "lang"), 900).collect()
+    val pairs = DedupReference.jaccardPairs(d, Seq("source", "lang"), 900).collect()
     assert(pairs.length === 1)
     assert(pairs.head.getAs[Long]("jac_permille") === 1000L)
   }
@@ -251,20 +251,6 @@ class LlmOpsSpec extends SparkSpec {
     val d = Seq((1L, "b a c"), (2L, "c b a")).toDF("doc_id", "text")
     val fps = TextAnalysis.fingerprint(d).select("fp").as[String].collect()
     assert(fps(0) === fps(1))
-  }
-
-  test("multimodal decode stub: schema, one row per blob, deterministic") {
-    val out = Multimodal.decodeStub(Multimodal.asBlob(docs.limit(50)))
-    assert(out.schema === Multimodal.decodedSchema)
-    val rows = out.collect()
-    assert(rows.length === 50)
-    rows.foreach { r =>
-      assert(r.getAs[Int]("width") >= 64 && r.getAs[Int]("width") < 128)
-      assert(r.getAs[Int]("channels") === 3)
-      assert(r.getAs[Double]("mean_byte") > 0)
-    }
-    val again = Multimodal.decodeStub(Multimodal.asBlob(docs.limit(50))).collect()
-    assert(rows.map(_.toString).sorted.sameElements(again.map(_.toString).sorted))
   }
 
   test("featurize: 16 normalized buckets, sums to 1, deterministic") {

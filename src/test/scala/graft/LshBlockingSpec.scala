@@ -29,7 +29,7 @@ class LshBlockingSpec extends SparkSpec {
       .collect().map(r => (r.getLong(0), r.getLong(1))).toSet
 
   test("banded word-Jaccard pairs ⊆ exhaustive stratum pairs, recall ≥ 95% at t=900") {
-    val exhaustive = pairSet(Dedup.jaccardPairs(docs, Seq("source", "lang"), 900))
+    val exhaustive = pairSet(DedupReference.jaccardPairs(docs, Seq("source", "lang"), 900))
     val banded = pairSet(Dedup.jaccardPairsBanded(docs, Seq("source", "lang"), 900))
     assert(banded.subsetOf(exhaustive),
       s"banded emitted pairs the exhaustive form did not: ${(banded -- exhaustive).take(5)}")
@@ -40,7 +40,7 @@ class LshBlockingSpec extends SparkSpec {
   }
 
   test("banded char-5-gram pairs ⊆ exhaustive stratum pairs, recall ≥ 95% at t=800") {
-    val exhaustive = pairSet(Dedup.charNgramPairs(docs, Seq("source", "lang"), 800, k = 5))
+    val exhaustive = pairSet(DedupReference.charNgramPairs(docs, Seq("source", "lang"), 800, k = 5))
     val banded = pairSet(Dedup.charNgramPairsBanded(docs, Seq("source", "lang"), 800, k = 5))
     assert(banded.subsetOf(exhaustive),
       s"banded emitted pairs the exhaustive form did not: ${(banded -- exhaustive).take(5)}")
@@ -231,7 +231,7 @@ class LshBlockingSpec extends SparkSpec {
     }
     val df = rows.toDF("doc_id", "text")
       .withColumn("source", lit("s0")).withColumn("lang", lit("en"))
-    val exhaustive = pairSet(Dedup.jaccardPairs(df, Seq("source", "lang"), 500))
+    val exhaustive = pairSet(DedupReference.jaccardPairs(df, Seq("source", "lang"), 500))
     assert(exhaustive.size === 60, s"every planted pair is above t=500: $exhaustive")
     val got8 = pairSet(Dedup.jaccardPairsBanded(df, Seq("source", "lang"), 500))
     val got16 = pairSet(Dedup.jaccardPairsBanded(df, Seq("source", "lang"), 500,
@@ -349,12 +349,6 @@ class LshBlockingSpec extends SparkSpec {
     val found = planted.select(col("doc_b") - 100000L).as[Long].collect().toSet
     info(s"planted near-dups recovered: ${found.size}/20")
     assert(found.size >= 19, s"only ${found.size}/20 planted near-dups recovered")
-  }
-
-  test("jaccardPairs refuses empty blocking columns") {
-    val d = Seq((1L, "a b c")).toDF("doc_id", "text")
-    val e = intercept[IllegalArgumentException](Dedup.jaccardPairs(d, Seq.empty, 900))
-    assert(e.getMessage.contains("blocking"))
   }
 
   test("jaccardVerifySets scores an explicit candidate-pair set") {

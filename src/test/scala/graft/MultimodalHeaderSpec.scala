@@ -17,6 +17,16 @@ class MultimodalHeaderSpec extends SparkSpec {
   private def le(n: Int): ByteBuffer =
     ByteBuffer.allocate(n).order(ByteOrder.LITTLE_ENDIAN)
 
+  /** Visible gray plane of a single-component JPEG, row-major, through
+    * the suite's `decodeJpegAny` — the per-pixel differential hook. */
+  private def decodeJpegGray(bytes: Array[Byte]): Option[Array[Int]] =
+    Multimodal.decodeJpegAny(bytes).collect {
+      case d if d.planes.length == 1 =>
+        Array.tabulate(d.width * d.height) { i =>
+          d.planes(0)((i / d.width) * d.planeW(0) + i % d.width) & 0xff
+        }
+    }
+
   test("BMP header: width/height/channels from fixed offsets") {
     val b = le(54)
     b.put('B'.toByte).put('M'.toByte).putInt(54).putInt(0).putInt(54)
@@ -811,7 +821,7 @@ class MultimodalHeaderSpec extends SparkSpec {
     val bytes = Multimodal.jpegAssemble(w, h, 0, blk)
     val img = javax.imageio.ImageIO.read(new java.io.ByteArrayInputStream(bytes))
     assert(img != null, "ImageIO must accept the AC fixture")
-    val mine = Multimodal.decodeJpegGray(bytes)
+    val mine = decodeJpegGray(bytes)
     assert(mine.isDefined, "decoder must accept the AC fixture")
     val plane = mine.get
     var maxDiff = 0
@@ -938,7 +948,6 @@ class MultimodalHeaderSpec extends SparkSpec {
 
   test("modality router: every branch detected + verified, corrupt blobs " +
     "report unverified, unknown magics drop") {
-    import spark.implicits._
     // one of each class through the mixed fixture
     import graft.sources.Tables
     val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(16)
@@ -2105,8 +2114,8 @@ class MultimodalHeaderSpec extends SparkSpec {
     }
     val prog = Multimodal.jpegAssembleProgressive(w, h, 0, blk, acAl = 1)
     val base = Multimodal.jpegAssemble(w, h, 0, blk)
-    val pg = Multimodal.decodeJpegGray(prog)
-    val bg = Multimodal.decodeJpegGray(base)
+    val pg = decodeJpegGray(prog)
+    val bg = decodeJpegGray(base)
     assert(pg.isDefined, "AC-refinement fixture must decode")
     assert(pg.get.toSeq === bg.get.toSeq,
       "progressive scans must reconstruct the exact baseline coefficients")

@@ -55,44 +55,15 @@ class NearestCellSpec extends SparkSpec {
     assert(got(2L) === None)     // no candidates in sub 2
   }
 
-  test("broadcast transport matches the literal transport row for row (incl. null subs)") {
-    GraftExtensions.register(spark)
-    val rnd = new scala.util.Random(17)
-    val dims = 4
-    val cents = (0L until 6L).map(c =>
-      (c % 2, c, Seq.fill(dims)(rnd.nextInt(1001).toLong - 500)))
-    val rows = (0 until 300).map(i =>
-      (i.toLong, (i % 3).toLong, Seq.fill(dims)(rnd.nextInt(1001).toLong - 500)))
-    val df = rows.toDF("__id", "sub", "sqv")
-    val bc = spark.sparkContext.broadcast(
-      cents.map { case (s, c, v) => (s, c, v.toArray) }.toArray)
-    val litOut = df.withColumn("cell",
-        nearest_cell(col("sub"), col("sqv"), centsLit(cents)))
-      .select(col("__id"), col("cell")).collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-    val bcOut = df.withColumn("cell",
-        graft.functions.NearestCell.nearest_cell_bcast(col("sub"), col("sqv"), bc))
-      .select(col("__id"), col("cell")).collect()
-      .map(r => r.getLong(0) -> (if (r.isNullAt(1)) -1L else r.getLong(1))).toMap
-    assert(litOut === bcOut)
-    // sub 2 has no candidates in either transport
-    assert(litOut.keySet.exists(id => rows(id.toInt)._2 == 2L) &&
-      rows.filter(_._2 == 2L).forall(r => litOut(r._1) == -1L))
-  }
-
-  test("both transports run inside WholeStageCodegen (no fallback span break)") {
+  test("nearest_cell runs inside WholeStageCodegen (no fallback span break)") {
     GraftExtensions.register(spark)
     val cents = Seq((0L, 0L, Seq(1L, 1L)), (0L, 1L, Seq(5L, 5L)))
-    val bc = spark.sparkContext.broadcast(
-      cents.map { case (s, c, v) => (s, c, v.toArray) }.toArray)
     // spark.range source: a local Seq would be constant-folded into a
     // LocalTableScan, leaving no runtime projection to codegen
     val df = spark.range(50)
       .select(col("id").as("__id"),
         array(pmod(col("id"), lit(7)).cast("long"), lit(3L)).as("qv"))
       .withColumn("c_lit", nearest_cell(lit(0L), col("qv"), centsLit(cents)))
-      .withColumn("c_bc",
-        graft.functions.NearestCell.nearest_cell_bcast(lit(0L), col("qv"), bc))
     df.collect()
     val plan = df.queryExecution.executedPlan.toString
     // the previous CodegenFallback marker kept the whole projection out
@@ -100,21 +71,5 @@ class NearestCellSpec extends SparkSpec {
     // "*(n)" prefix
     assert(plan.linesIterator.exists(l =>
       l.contains("nearest_cell") && l.contains("*(")), plan.take(3000))
-  }
-
-  test("end-to-end assignment identical when the conf forces the broadcast transport") {
-    import graft.operators.Similarity
-    import graft.sources.Tables
-    val emb = Tables.embeddings(spark, sf)
-    val cents = Similarity.ivfTrain(emb, k = 4, iters = 2)
-    def run(): Seq[(Long, Long)] =
-      Similarity.ivfAssign(emb, cents).collect()
-        .map(r => (r.getLong(0), r.getLong(1))).toSeq.sorted
-    val viaLiteral = run()
-    spark.conf.set("spark.graft.nearestCell.maxLiteralValues", "0")
-    try {
-      val viaBcast = run()
-      assert(viaLiteral === viaBcast)
-    } finally spark.conf.unset("spark.graft.nearestCell.maxLiteralValues")
   }
 }

@@ -268,17 +268,4 @@ class RetrievalSpansSpec extends SparkSpec {
     // positions over n=10: p50→⌊9·.5⌋+1=5, p90→⌊9·.9⌋+1=9, p99→⌊9·.99⌋+1=9
     assert(got === (("s", 10L, 1L, 5L, 9L, 9L, 10L)))
   }
-
-  test("bloomPrefilter finds exactly the exact-match collisions") {
-    val corpus = (0 until 200).map(i => (i.toLong, s"corpus text number $i"))
-      .toDF("doc_id", "text")
-    val delta = Seq((1000L, "corpus text number 3"),
-      (1001L, "corpus text number 150"),
-      (1002L, "not present anywhere")).toDF("doc_id", "text")
-    val got = Dedup.bloomPrefilter(corpus, delta)
-      .select("doc_id", "delta_id").as[(Long, Long)].collect().toSet
-    assert(got === Set((3L, 1000L), (150L, 1001L)))
-    val disjoint = Seq((1L, "zzz")).toDF("doc_id", "text")
-    assert(Dedup.bloomPrefilter(corpus, disjoint).count() === 0L)
-  }
 }

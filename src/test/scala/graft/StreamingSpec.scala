@@ -221,26 +221,6 @@ class StreamingSpec extends SparkSpec {
     s.q.stop()
   }
 
-  test("tumbling window with watermark aggregates by event time") {
-    val mem = MemoryStream[(Timestamp, String, Double)]
-    val df = mem.toDF().toDF("ts", "event_type", "value")
-    val out = Windows.tumbling(df, "ts", "event_type", "1 hour", "10 minutes")
-    val q = out.writeStream.outputMode("update").format("memory")
-      .queryName("tumbling_out").start()
-    mem.addData(
-      (Timestamp.valueOf("2024-01-01 10:05:00"), "click", 1.0),
-      (Timestamp.valueOf("2024-01-01 10:55:00"), "click", 2.0),
-      (Timestamp.valueOf("2024-01-01 11:05:00"), "click", 4.0))
-    q.processAllAvailable()
-    val rows = spark.table("tumbling_out")
-      .select("win_start", "n", "sum_value").as[(Timestamp, Long, Double)]
-      .collect().toSet
-    assert(rows === Set(
-      (Timestamp.valueOf("2024-01-01 10:00:00"), 2L, 3.0),
-      (Timestamp.valueOf("2024-01-01 11:00:00"), 1L, 4.0)))
-    q.stop()
-  }
-
   test("session windows split on gap") {
     val mem = MemoryStream[(Timestamp, Long)]
     val df = mem.toDF().toDF("ts", "user_id")

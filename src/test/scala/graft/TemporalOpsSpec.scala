@@ -1,17 +1,12 @@
 package graft
 
-import java.sql.Timestamp
-
-import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
 import org.apache.spark.sql.functions._
 
 import graft.operators.Relational
-import graft.streaming.Windows
 
-/** As-of join, SCD2, salted join, stream–stream join semantics. */
+/** As-of join, SCD2 and the other temporal operators' semantics. */
 class TemporalOpsSpec extends SparkSpec {
   import spark.implicits._
-  implicit lazy val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
 
   test("zscoreFlags: exact integer z², variance-0 rule, gap aging, minPeriods gate") {
     // constant baseline (variance 0) + spike at t=24; alternating 4/6
@@ -261,127 +256,5 @@ class TemporalOpsSpec extends SparkSpec {
     val conflicts = delta.filter(m.isin(3, 4)).groupBy(m.as("m"), col("op"), col("seq"))
       .count().as[(Long, String, Int, Long)].collect().map(r => (r._1, r._2, r._3)).toSet
     assert(conflicts === Set((3L, "U", 1), (3L, "D", 2), (4L, "D", 1), (4L, "U", 2)))
-  }
-
-  test("saltedJoin returns exactly the plain join's result") {
-    val orders = graft.sources.Tables.orders(spark, sf)
-    val customer = graft.sources.Tables.customer(spark, sf)
-    val plain = orders.join(customer, col("o_custkey") === col("c_custkey"))
-      .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
-      .orderBy("c_mktsegment").as[(String, Long)].collect().toSeq
-    val salted = Relational.saltedJoin(orders, customer, "o_custkey", "c_custkey", 4)
-      .groupBy(col("c_mktsegment")).agg(count(lit(1)).as("n"))
-      .orderBy("c_mktsegment").as[(String, Long)].collect().toSeq
-    assert(salted === plain)
-  }
-
-  test("saltedJoin matches the plain join for every allowed join type; refuses outer") {
-    val orders = graft.sources.Tables.orders(spark, sf).select("o_orderkey", "o_custkey")
-    // halve the right side so left/semi/anti exercise unmatched left rows
-    val customer = graft.sources.Tables.customer(spark, sf)
-      .filter(col("c_custkey") % 2 === 0).select("c_custkey", "c_mktsegment")
-    for (jt <- Seq("inner", "left", "left_semi", "left_anti")) {
-      val plain = orders.join(customer, col("o_custkey") === col("c_custkey"), jt)
-      val salted = Relational.saltedJoin(orders, customer, "o_custkey", "c_custkey", 4, jt)
-      assert(salted.count() === plain.count(), s"row count for $jt")
-      assert(salted.exceptAll(plain).isEmpty && plain.exceptAll(salted).isEmpty,
-        s"multiset mismatch for $jt")
-    }
-    for (jt <- Seq("right", "full", "full_outer")) {
-      intercept[IllegalArgumentException](
-        Relational.saltedJoin(orders, customer, "o_custkey", "c_custkey", 4, jt))
-    }
-  }
-
-  test("saltedJoinAuto salts when measured skew crosses the threshold, stays plain when uniform") {
-    // 5000 rows on one hot key + 50 cold keys → max/avg ≈ 99×
-    val skewed = ((1 to 5000).map(_ => (0L, 1L)) ++ (1 to 50).map(i => (i.toLong, 1L)))
-      .toDF("k", "v")
-    val dim = (0 to 50).map(i => (i.toLong, s"d$i")).toDF("k2", "w")
-    val auto = Relational.saltedJoinAuto(skewed, dim, "k", "k2")
-    val plain = skewed.join(dim, col("k") === col("k2"))
-    assert(auto.count() === plain.count())
-    // the salt replication (explode over sequence) is in the plan
-    assert(auto.queryExecution.executedPlan.toString.contains("__salt"),
-      "expected the salted path for 99x skew")
-    // uniform keys: measured ratio under threshold → plain equi-join
-    val uniform = (1 to 1000).map(i => (i.toLong % 50, 1L)).toDF("k", "v")
-    val autoU = Relational.saltedJoinAuto(uniform, dim, "k", "k2")
-    assert(!autoU.queryExecution.executedPlan.toString.contains("__salt"),
-      "uniform data must not pay the replication")
-    assert(autoU.count() === uniform.join(dim, col("k") === col("k2")).count())
-  }
-
-  test("stream-stream LEFT join emits unmatched rows after the watermark closes") {
-    val views = MemoryStream[(Timestamp, Long, String)]
-    val purchases = MemoryStream[(Timestamp, Long, String)]
-    val v = views.toDF().toDF("v_ts", "v_user", "v_id")
-    val p = purchases.toDF().toDF("p_ts", "p_user", "p_id")
-    val joined = Windows.streamStreamLeftJoin(p, v, "p_user", "v_user",
-      "p_ts", "v_ts", within = "1 HOUR", maxLateness = "1 minute")
-    val q = joined.select("p_id", "v_id").writeStream
-      .outputMode("append").format("memory").queryName("sslj_out").start()
-    views.addData((Timestamp.valueOf("2024-01-01 10:00:00"), 7L, "v1"))
-    purchases.addData(
-      (Timestamp.valueOf("2024-01-01 10:30:00"), 7L, "p1"),   // matches v1
-      (Timestamp.valueOf("2024-01-01 10:30:00"), 8L, "p2"))   // no view for user 8
-    q.processAllAvailable()
-    // advance both watermarks far past p2's join window so the
-    // unmatched left row is released as null-extended
-    views.addData((Timestamp.valueOf("2024-01-01 13:00:00"), 99L, "vx"))
-    purchases.addData((Timestamp.valueOf("2024-01-01 13:00:00"), 99L, "px"))
-    q.processAllAvailable()
-    val got = spark.table("sslj_out").as[(String, Option[String])].collect().toSet
-    assert(got.contains(("p1", Some("v1"))))
-    assert(got.contains(("p2", None)))
-    q.stop()
-  }
-
-  test("stream-stream FULL OUTER join null-extends unmatched rows from both sides") {
-    val views = MemoryStream[(Timestamp, Long, String)]
-    val purchases = MemoryStream[(Timestamp, Long, String)]
-    val v = views.toDF().toDF("v_ts", "v_user", "v_id")
-    val p = purchases.toDF().toDF("p_ts", "p_user", "p_id")
-    val joined = Windows.streamStreamFullJoin(p, v, "p_user", "v_user",
-      "p_ts", "v_ts", within = "1 HOUR", maxLateness = "1 minute")
-    val q = joined.select("p_id", "v_id").writeStream
-      .outputMode("append").format("memory").queryName("ssfj_out").start()
-    views.addData(
-      (Timestamp.valueOf("2024-01-01 10:00:00"), 7L, "v1"),   // matches p1
-      (Timestamp.valueOf("2024-01-01 10:00:00"), 9L, "v2"))   // no purchase for user 9
-    purchases.addData(
-      (Timestamp.valueOf("2024-01-01 10:30:00"), 7L, "p1"),
-      (Timestamp.valueOf("2024-01-01 10:30:00"), 8L, "p2"))   // no view for user 8
-    q.processAllAvailable()
-    // push both watermarks past every join window → unmatched rows on
-    // BOTH sides release null-extended
-    views.addData((Timestamp.valueOf("2024-01-01 13:00:00"), 99L, "vx"))
-    purchases.addData((Timestamp.valueOf("2024-01-01 13:00:00"), 99L, "px"))
-    q.processAllAvailable()
-    val got = spark.table("ssfj_out").as[(Option[String], Option[String])].collect().toSet
-    assert(got.contains((Some("p1"), Some("v1"))))
-    assert(got.contains((Some("p2"), None)))   // unmatched left
-    assert(got.contains((None, Some("v2"))))   // unmatched right
-    q.stop()
-  }
-
-  test("stream-stream join matches within the time bound and key") {
-    val views = MemoryStream[(Timestamp, Long, String)]
-    val purchases = MemoryStream[(Timestamp, Long, String)]
-    val v = views.toDF().toDF("v_ts", "v_user", "v_id")
-    val p = purchases.toDF().toDF("p_ts", "p_user", "p_id")
-    val joined = Windows.streamStreamJoin(p, v, "p_user", "v_user",
-      "p_ts", "v_ts", within = "1 HOUR", maxLateness = "10 minutes")
-    val q = joined.select("p_id", "v_id").writeStream
-      .outputMode("append").format("memory").queryName("ssj_out").start()
-    views.addData(
-      (Timestamp.valueOf("2024-01-01 10:00:00"), 7L, "v1"),
-      (Timestamp.valueOf("2024-01-01 08:00:00"), 7L, "v2"), // too old for p1
-      (Timestamp.valueOf("2024-01-01 10:30:00"), 9L, "v3")) // other user
-    purchases.addData((Timestamp.valueOf("2024-01-01 10:45:00"), 7L, "p1"))
-    q.processAllAvailable()
-    val got = spark.table("ssj_out").as[(String, String)].collect().toSet
-    assert(got === Set(("p1", "v1")))
-    q.stop()
   }
 }

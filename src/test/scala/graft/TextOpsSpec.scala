@@ -12,6 +12,10 @@ import graft.operators.{Corpus, Dedup, TextAnalysis}
 class TextOpsSpec extends SparkSpec {
   import spark.implicits._
 
+  /** The suite's longest-repeat kernel over a string's codepoints. */
+  private def longestRepeatOf(s: String): (Int, String) =
+    graft.operators.TextAnalysis.longestRepeatOfCps(s.codePoints().toArray)
+
   test("fitLinear recovers an exact linear relation as exact rationals") {
     // y = 3 + 2·x1 + 5·x2 exactly, non-collinear points → unique exact
     // solution: each numerator must be weight × denominator, as BigInt
@@ -88,11 +92,11 @@ class TextOpsSpec extends SparkSpec {
     val b = a.replace("dog near", "dog, near") // one comma inserted
     val docs = Seq((1L, a, "s"), (2L, b, "s"), (3L, "completely different text here", "s"))
       .toDF("doc_id", "text", "src")
-    val charPairs = Dedup.charNgramPairs(docs, Seq("src"), thresholdPermille = 800, k = 5)
+    val charPairs = DedupReference.charNgramPairs(docs, Seq("src"), thresholdPermille = 800, k = 5)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(charPairs === Set((1L, 2L)))
     // word-level at the same bar: "dog," and "near" vs "dog" "near" differ
-    val wordPairs = Dedup.jaccardPairs(docs, Seq("src"), thresholdPermille = 950)
+    val wordPairs = DedupReference.jaccardPairs(docs, Seq("src"), thresholdPermille = 950)
       .select("doc_a", "doc_b").as[(Long, Long)].collect().toSet
     assert(!wordPairs.contains((1L, 2L)))
   }
@@ -427,35 +431,6 @@ class TextOpsSpec extends SparkSpec {
     }
   }
 
-  test("langSpansNarrow ≡ langSpans on real docs; streams through MemoryStream unchanged") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val docs = graft.sources.Tables.documents(spark, sf)
-    val profMap = TextAnalysis.langProfile(docs, 20)
-    val narrow = TextAnalysis.explodeSpans(TextAnalysis.langSpansNarrow(docs, profMap, 10))
-      .select("doc_id", "span_lang", "win_start", "win_end", "n_windows")
-      .as[(Long, String, Long, Long, Long)].collect().toSet
-    val batch = TextAnalysis.langSpans(docs, 20, 10)
-      .select("doc_id", "span_lang", "win_start", "win_end", "n_windows")
-      .as[(Long, String, Long, Long, Long)].collect().toSet
-    assert(narrow === batch, "narrow in-row segmentation must equal the shuffled form")
-    assert(narrow.nonEmpty)
-    // streaming: two live micro-batches produce exactly the batch spans
-    val rows = docs.limit(40).select("doc_id", "text").as[(Long, String)].collect().toSeq
-    val mem = MemoryStream[(Long, String)]
-    val q = TextAnalysis.explodeSpans(TextAnalysis.langSpansNarrow(
-        mem.toDF.toDF("doc_id", "text"), profMap, 10))
-      .writeStream.outputMode("append").format("memory")
-      .queryName("lang_spans_stream").start()
-    mem.addData(rows.take(20): _*); q.processAllAvailable()
-    mem.addData(rows.drop(20): _*); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("lang_spans_stream")
-      .as[(Long, String, Long, Long, Long)].collect().toSet
-    val ids = rows.map(_._1).toSet
-    assert(streamed === batch.filter(s => ids(s._1)))
-  }
-
   test("positional wordpiece: start/continuation classes split; fold ≡ reference") {
     val docs = graft.sources.Tables.documents(spark, sf)
     val vocab = TextAnalysis.wordpieceVocabPositional(docs)
@@ -488,48 +463,6 @@ class TextOpsSpec extends SparkSpec {
     words.zipWithIndex.foreach { case (w, i) =>
       assert(got(i.toLong) === ref(w), s"positional fold diverged on '$w'")
     }
-  }
-
-  test("wordpieceEncodeNarrow: streaming twin ≡ batch encode on live micro-batches") {
-    implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    import org.apache.spark.sql.execution.streaming.runtime.MemoryStream
-    val docs = graft.sources.Tables.documents(spark, sf).limit(60)
-    val vocab = TextAnalysis.wordpieceVocab(graft.sources.Tables.documents(spark, sf))
-    val pieces = vocab.select("piece").as[String].collect().toSeq
-    val rows = docs.select("doc_id", "text").as[(Long, String)].collect().toSeq
-    val mem = MemoryStream[(Long, String)]
-    val stream = TextAnalysis.wordpieceEncodeNarrow(
-      mem.toDF.toDF("doc_id", "text"), pieces)
-    val q = stream.writeStream.outputMode("append").format("memory")
-      .queryName("wp_stream_out").start()
-    mem.addData(rows.take(30): _*); q.processAllAvailable()
-    mem.addData(rows.drop(30): _*); q.processAllAvailable()
-    q.stop()
-    val streamed = spark.table("wp_stream_out")
-      .select("doc_id", "n_words", "n_chars", "n_wp_tokens", "compression_permille")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    val batch = TextAnalysis.wordpieceEncode(docs, vocab)
-      .select("doc_id", "n_words", "n_chars", "n_wp_tokens", "compression_permille")
-      .as[(Long, Long, Long, Long, Long)].collect().toSet
-    assert(streamed === batch)
-    assert(streamed.size === 60)
-  }
-
-  test("perplexityBucketsApprox: no sort in the plan, decisions ≈ exact ntile") {
-    val docs = graft.sources.Tables.documents(spark, sf)
-    val approx = TextAnalysis.perplexityBucketsApprox(docs)
-    // THE scale claim, executable: banding via sketch boundaries +
-    // broadcast range lookup has no window (per-stratum sort) at all
-    val plan = approx.queryExecution.executedPlan.toString
-    assert(!plan.contains("Window"), "approx banding must not plan a Window sort")
-    val a = approx.select("doc_id", "keep").as[(Long, Boolean)].collect().toMap
-    val e = TextAnalysis.perplexityBuckets(docs)
-      .select("doc_id", "keep").as[(Long, Boolean)].collect().toMap
-    assert(a.keySet === e.keySet)
-    // at accuracy 10000 on ~500 docs/stratum the sketch boundary sits
-    // at (or next to) the exact tercile — decisions agree on ≥ 97%
-    val agree = a.count { case (id, k) => e(id) == k }.toDouble / a.size
-    assert(agree >= 0.97, s"approx/exact keep agreement $agree")
   }
 
   test("unigram Viterbi achieves the minimum piece count; greedy MaxMatch can miss it") {
@@ -568,31 +501,13 @@ class TextOpsSpec extends SparkSpec {
     // compare against greedy under the UNIGRAM vocab pieces): segment
     // each distinct word both ways and assert viterbi ≤ greedy
     val uv = TextAnalysis.unigramVocab(docs)
-    val greedy = TextAnalysis.wordpieceEncodeNarrow(docs,
-      uv.select("piece").as[String].collect().toSeq)
+    val greedy = TextAnalysis.wordpieceEncode(docs, uv.select("piece"))
       .select(col("doc_id"), col("n_wp_tokens"))
     val both = full.select(col("doc_id"), col("n_pieces")).join(greedy, "doc_id")
     val worse = both.filter(col("n_pieces") > col("n_wp_tokens")).count()
     assert(worse === 0L, "Viterbi must never use more pieces than greedy MaxMatch")
     val strictlyBetter = both.filter(col("n_pieces") < col("n_wp_tokens")).count()
     assert(strictlyBetter > 0L, "on this corpus the optimum should beat greedy somewhere")
-  }
-
-  test("unigramEncodeNarrow (zero-shuffle streaming twin) equals the batch encode") {
-    val docs = graft.sources.Tables.documents(spark, sf).limit(80)
-    val vocab = TextAnalysis.unigramVocab(docs)
-    val scores = vocab.select("piece", "score").collect()
-      .map(r => r.getString(0) -> r.getLong(1)).toMap
-    val narrow = TextAnalysis.unigramEncodeNarrow(docs, scores)
-    // zero shuffle: no Exchange anywhere in the narrow plan
-    assert(!narrow.queryExecution.executedPlan.toString.contains("Exchange"),
-      "narrow unigram metering must not shuffle")
-    val a = narrow.orderBy("doc_id").collect().map(_.toSeq).toSeq
-    val b = TextAnalysis.unigramEncode(docs, vocab)
-      .select("doc_id", "n_words", "n_chars", "n_pieces", "total_score",
-        "compression_permille")
-      .orderBy("doc_id").collect().map(_.toSeq).toSeq
-    assert(a === b)
   }
 
   test("readability: hand-computed FK grade, fragment floors at one sentence") {
@@ -612,7 +527,6 @@ class TextOpsSpec extends SparkSpec {
 
   test("longest repeated substring: hand cases, overlap semantics, fuzz vs " +
     "brute force, zero shuffle") {
-    import graft.operators.TextAnalysis.longestRepeatOf
     assert(longestRepeatOf("banana") === ((3, "ana")))     // overlapping "ana"
     assert(longestRepeatOf("aaaa") === ((3, "aaa")))       // max overlap
     assert(longestRepeatOf("abcdef") === ((0, "")))        // all unique
@@ -684,7 +598,6 @@ class TextOpsSpec extends SparkSpec {
 
   test("longest repeated substring: codepoint semantics on non-BMP text " +
     "(surrogate pairs never split, lengths and ties count codepoints)") {
-    import graft.operators.TextAnalysis.longestRepeatOf
     val cat = new String(Character.toChars(0x1F408))  // 🐈 U+1F408, 2 chars
     val dog = new String(Character.toChars(0x1F415))  // 🐕 U+1F415
     // 🐈a🐈a: the repeat is "🐈a" — 2 CODEPOINTS (4 UTF-16 units)

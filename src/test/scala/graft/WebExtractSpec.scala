@@ -156,17 +156,24 @@ class WebExtractSpec extends SparkSpec {
 
   test("robots decision: longest match wins, Allow wins ties, '$' anchors " +
     "exactly, no match allows") {
-    val rules = Vector(("/a", false), ("/a/b", true), ("/a/b/c", false),
-      ("/exact$", false), ("/t", false), ("/t", true))
-    import WebExtract.robotsDecide
-    assert(robotsDecide("/a/x", rules) === ((false, 2)))      // /a
-    assert(robotsDecide("/a/b/x", rules) === ((true, 4)))     // /a/b beats /a
-    assert(robotsDecide("/a/b/c/x", rules) === ((false, 6)))  // longest
-    assert(robotsDecide("/exact", rules) === ((false, 6)))    // anchored hit
-    assert(robotsDecide("/exactly", rules) === ((true, 0)),
-      "'$' must not prefix-match")
-    assert(robotsDecide("/t/x", rules) === ((true, 2)), "Allow wins the tie")
-    assert(robotsDecide("/elsewhere", rules) === ((true, 0)))
+    import spark.implicits._
+    val robots = Seq(("h.test", "User-agent: *\nDisallow: /a\nAllow: /a/b\n" +
+      "Disallow: /a/b/c\nDisallow: /exact$\nDisallow: /t\nAllow: /t\n"))
+      .toDF("host", "robots_txt")
+    val paths = Seq("/a/x", "/a/b/x", "/a/b/c/x", "/exact", "/exactly", "/t/x",
+      "/elsewhere")
+    val urls = paths.zipWithIndex.map { case (p, i) => (i.toLong, "https://h.test" + p) }
+      .toDF("doc_id", "url")
+    val got = WebExtract.robotsGate(urls, robots).collect()
+      .map(r => paths(r.getLong(0).toInt) -> ((r.getLong(2) == 1L, r.getLong(3).toInt)))
+      .toMap
+    assert(got("/a/x") === ((false, 2)))      // /a
+    assert(got("/a/b/x") === ((true, 4)))     // /a/b beats /a
+    assert(got("/a/b/c/x") === ((false, 6)))  // longest
+    assert(got("/exact") === ((false, 6)))    // anchored hit
+    assert(got("/exactly") === ((true, 0)), "'$' must not prefix-match")
+    assert(got("/t/x") === ((true, 2)), "Allow wins the tie")
+    assert(got("/elsewhere") === ((true, 0)))
   }
 
   test("robots gate: frontier decisions match per-id expectations, " +

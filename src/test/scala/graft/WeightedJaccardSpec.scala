@@ -76,7 +76,7 @@ class WeightedJaccardSpec extends SparkSpec {
     assert(got.contains((2L, 3L)), s"set-identical pair missing: $got")
     assert(got((2L, 3L)) === ((16L, 24L, 666L)),
       s"weighted must discriminate repetition: ${got((2L, 3L))}")
-    val setJ = Dedup.jaccardPairs(docs, Seq("source", "lang"), 1000)
+    val setJ = DedupReference.jaccardPairs(docs, Seq("source", "lang"), 1000)
     assert(setJ.filter(col("doc_a") === 2 && col("doc_b") === 3).count() === 1,
       "sanity: (2,3) must be SET-identical at t=1000")
   }
