@@ -183,9 +183,10 @@ object Bench {
     // (steady/gc/flags/flag_detail at fixed precision) goes to the
     // file only. The compact line is still ~6 KB (256 query names
     // alone are ~4 KB — no line carrying every declared name can fit
-    // a 2000-char tail), so it is printed LAST with nothing after it:
-    // the largest possible suffix of it lands in any tail capture,
-    // and any whole-stdout parser gets a complete, small JSON line.
+    // a 2000-char tail), so one SUMMARY line under 200 chars follows
+    // it and is printed last: the contract keys without the per-query
+    // map, the host verdict and the failed-query count, whole in any
+    // tail capture.
     def compactNum(v: Double): String = {
       val s = f"$v%.3f"
       val t = s.reverse.dropWhile(_ == '0').reverse
@@ -204,6 +205,8 @@ object Bench {
     }
     println(
       s"""{"metric":"total","value":${compactNum(total)},"unit":"sec","queries":$qsCompact,"failed":$failed,"degraded_host":$degraded,"flag_count":${flagged.size},"sf":"$sfDir","detail":"$lastPath"}""")
+    println(
+      s"""{"metric":"total","value":${compactNum(total)},"unit":"sec","sf":"$sfDir","detail":"$lastPath","degraded_host":$degraded,"failed_count":${attempts.count(_._2.isLeft)}}""")
     spark.stop()
   }
 }

@@ -3,17 +3,20 @@ package graft
 import org.apache.spark.SparkConf
 import org.apache.spark.sql.SparkSession
 
+import graft.plans.GraftExtensions
+
 /** The one place a graft session is configured — `Bench`, `Verify`,
   * the dev tools, `MeetingStreamJob` and the specs all build theirs
   * here, so what the specs check is what the bench measures. */
 object Session {
 
   /** `local[cpus]` with `cpus` shuffle partitions, UTC, AQE, nano
-    * timestamps read as longs, no UI. A setting spark-submit passed (as
-    * a `spark.*` system property, e.g. its master) wins over these. */
+    * timestamps read as longs, no UI, and graft's SQL function names
+    * ([[GraftExtensions]]). A setting spark-submit passed (as a
+    * `spark.*` system property, e.g. its master) wins over these. */
   def local(cpus: Int, logLevel: String = "WARN"): SparkSession = {
     val submitted = new SparkConf()
-    val builder = SparkSession.builder()
+    val builder = SparkSession.builder().withExtensions(new GraftExtensions)
     Seq("spark.master" -> s"local[$cpus]",
         "spark.sql.shuffle.partitions" -> cpus.toString,
         "spark.sql.session.timeZone" -> "UTC",

@@ -423,7 +423,6 @@ object SparkEntry {
       // map-side partials keep only k rows per group per partition, so
       // the shuffle moves k x groups rows instead of every row (the
       // window row_number form, kept as the oracle, shuffles all).
-      graft.plans.GraftExtensions.register(s)
       Tables.orders(s, d)
         .groupBy(col("o_custkey"))
         .agg(graft.functions.TopKRows.topk_rows(
@@ -813,7 +812,6 @@ object SparkEntry {
     // rewrite before paying for it. Deterministic value banding, so
     // the oracle replays manifest and verdicts exactly.
     Q("rel_layout_audit", ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       import graft.functions.HilbertIndex.hilbert_index
       val li = Tables.lineitem(s, d).select("l_partkey", "l_suppkey")
       val probes = li
@@ -4815,7 +4813,6 @@ object SparkEntry {
     // and hash-match the exact oracle); the approximate regime is
     // bounds-checked in SketchBoundsSpec.
     Q("text_heavy_hitters", ((s, d) => {
-      graft.plans.GraftExtensions.register(s)
       Tables.documents(s, d)
         .select(explode(Dedup.tokens(col("text"))).as("t"))
         .agg(graft.functions.FreqTopK.freq_topk(col("t"), 50).as("hh"))

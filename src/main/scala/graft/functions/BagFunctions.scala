@@ -1,12 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.expressions.GenericInternalRow
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -125,7 +125,8 @@ object BagFunctions {
     case _ => false
   }
 
-  /** Column-API forms. Require graft.plans.GraftExtensions.register. */
-  def token_counts(tokens: Column): Column = call_function("token_counts", tokens)
-  def bag_overlap(a: Column, b: Column): Column = call_function("bag_overlap", a, b)
+  /** Column-API forms. */
+  def token_counts(tokens: Column): Column = column(TokenCounts(expression(tokens)))
+  def bag_overlap(a: Column, b: Column): Column =
+    column(BagOverlap(expression(a), expression(b)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, StructType}
 
 /** `fp32_set(arr)` — the sorted distinct 32-bit md5 fingerprints of a
@@ -20,7 +20,9 @@ import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StringType, St
   * ObjectHashAggregate. Both were measured as the dominant cost of
   * the containment pipeline's index build. This expression keeps the
   * per-document set build NARROW: no token-grain rows ever exist, no
-  * shuffle, one thread-local MessageDigest reused across rows.
+  * shuffle, one thread-local MessageDigest reused across rows. No
+  * optimizer rule rewrites the composition into this expression:
+  * `fp32_set` is the one way to get the fused set.
   *
   * Bit-parity: each fingerprint is the first 4 bytes of
   * `MD5(utf8(x))` read big-endian as an unsigned 32-bit value in a
@@ -300,12 +302,10 @@ object FpSet {
     s
   }
 
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
-  def fp32_set(arr: Column): Column = call_function("fp32_set", arr)
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
+  /** Column-API forms. */
+  def fp32_set(arr: Column): Column = column(FpSet(expression(arr)))
   def fp_inter_count(a: Column, b: Column): Column =
-    call_function("fp_inter_count", a, b)
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
+    column(FpInterCount(expression(a), expression(b)))
   def fp_weighted_inter(a: Column, b: Column): Column =
-    call_function("fp_weighted_inter", a, b)
+    column(FpWeightedInter(expression(a), expression(b)))
 }

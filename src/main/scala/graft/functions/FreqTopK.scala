@@ -6,12 +6,12 @@ import java.nio.ByteBuffer
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.Expression
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types._
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -143,7 +143,7 @@ case class FreqTopK(
 }
 
 object FreqTopK {
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
+  /** Column-API form (an aggregate). */
   def freq_topk(item: Column, k: Int): Column =
-    call_function("freq_topk", item, lit(k))
+    column(FreqTopK(expression(item), Literal(k)).toAggregateExpression())
 }

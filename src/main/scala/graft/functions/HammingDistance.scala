@@ -1,9 +1,9 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, LongType}
 
 /** `hamming64(a, b)` — popcount(a XOR b) over 64-bit signatures
@@ -39,7 +39,7 @@ case class HammingDistance(left: Expression, right: Expression)
 }
 
 object HammingDistance {
-  /** Column-API form. Requires the function to be registered on the
-    * session (graft.plans.GraftExtensions.register — idempotent). */
-  def hamming64(a: Column, b: Column): Column = call_function("hamming64", a, b)
+  /** Column-API form. */
+  def hamming64(a: Column, b: Column): Column =
+    column(HammingDistance(expression(a), expression(b)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType}
 
 /** `hamming_words(a, b)` — Hamming distance between two bit-packed
@@ -64,6 +64,7 @@ case class HammingWords(left: Expression, right: Expression) extends BinaryExpre
 }
 
 object HammingWords {
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
-  def hamming_words(a: Column, b: Column): Column = call_function("hamming_words", a, b)
+  /** Column-API form. */
+  def hamming_words(a: Column, b: Column): Column =
+    column(HammingWords(expression(a), expression(b)))
 }

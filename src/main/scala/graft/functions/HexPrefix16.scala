@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, UnaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -58,6 +58,6 @@ case class HexPrefix16(child: Expression) extends UnaryExpression {
 }
 
 object HexPrefix16 {
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
-  def hex_prefix16(c: Column): Column = call_function("hex_prefix16", c)
+  /** Column-API form. */
+  def hex_prefix16(c: Column): Column = column(HexPrefix16(expression(c)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -78,7 +78,7 @@ case class HexSliceLong(left: Expression, right: Expression)
 }
 
 object HexSliceLong {
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
+  /** Column-API form. */
   def hex_slice_long(c: Column, pos: Int): Column =
-    call_function("hex_slice_long", c, lit(pos))
+    column(HexSliceLong(expression(c), Literal(pos)))
 }

@@ -1,10 +1,10 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{DataType, IntegerType, LongType}
 
 /** `hilbert_index(x, y, bits)` — the Hilbert space-filling-curve index
@@ -104,8 +104,7 @@ case class HilbertIndex(first: Expression, second: Expression, third: Expression
 }
 
 object HilbertIndex {
-  /** Column-API form; `x`/`y` must be non-negative and < 2^bits.
-    * Requires graft.plans.GraftExtensions.register. */
+  /** Column-API form; `x`/`y` must be non-negative and < 2^bits. */
   def hilbert_index(x: Column, y: Column, bits: Int): Column =
-    call_function("hilbert_index", x.cast("long"), y.cast("long"), lit(bits))
+    column(HilbertIndex(expression(x.cast("long")), expression(y.cast("long")), Literal(bits)))
 }

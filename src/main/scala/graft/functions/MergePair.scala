@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.{ArrayData, GenericArrayData}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -82,7 +82,7 @@ case class MergePair(first: Expression, second: Expression, third: Expression)
 }
 
 object MergePair {
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
+  /** Column-API form. */
   def merge_pair(syms: Column, l: String, r: String): Column =
-    call_function("merge_pair", syms, lit(l), lit(r))
+    column(MergePair(expression(syms), Literal(l), Literal(r)))
 }

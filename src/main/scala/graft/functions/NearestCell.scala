@@ -1,12 +1,12 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.expressions.codegen.Block._
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, LongType, StructType}
 
 /** `nearest_cell(sub, vec, cents)` — argmin cell of a quantized vector
@@ -149,7 +149,7 @@ object NearestCell {
     java.lang.Long.valueOf(best)
   }
 
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
+  /** Column-API form. */
   def nearest_cell(sub: Column, vec: Column, cents: Column): Column =
-    call_function("nearest_cell", sub, vec, cents)
+    column(NearestCell(expression(sub), expression(vec), expression(cents)))
 }

@@ -6,12 +6,12 @@ import java.nio.ByteBuffer
 import scala.collection.mutable
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, UnsafeProjection, UnsafeRow}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, UnsafeProjection, UnsafeRow}
 import org.apache.spark.sql.catalyst.expressions.aggregate.TypedImperativeAggregate
 import org.apache.spark.sql.catalyst.util.{GenericArrayData, TypeUtils}
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StructType}
 
 /** `topk_rows(struct(ord…, payload…), k)` — the k smallest input
@@ -118,7 +118,7 @@ case class TopKRows(
 }
 
 object TopKRows {
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
+  /** Column-API form (an aggregate). */
   def topk_rows(struct: Column, k: Int): Column =
-    call_function("topk_rows", struct, lit(k))
+    column(TopKRows(expression(struct), Literal(k)).toAggregateExpression())
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
 import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
 import org.apache.spark.sql.catalyst.expressions.codegen.{CodegenContext, ExprCode}
 import org.apache.spark.sql.catalyst.util.ArrayData
-import org.apache.spark.sql.functions.call_function
 import org.apache.spark.sql.types.{ArrayType, DataType, DoubleType}
 
 /** `vec_dot(a, b)` — dot product of two `array<double>` columns with a
@@ -63,6 +63,6 @@ case class VectorDot(left: Expression, right: Expression) extends BinaryExpressi
 }
 
 object VectorDot {
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
-  def vec_dot(a: Column, b: Column): Column = call_function("vec_dot", a, b)
+  /** Column-API form. */
+  def vec_dot(a: Column, b: Column): Column = column(VectorDot(expression(a), expression(b)))
 }

@@ -1,11 +1,11 @@
 package graft.functions
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{Expression, TernaryExpression}
+import org.apache.spark.sql.catalyst.expressions.{Expression, Literal, TernaryExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, LongType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -118,7 +118,7 @@ case class WinnowFp(first: Expression, second: Expression, third: Expression)
 }
 
 object WinnowFp {
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
+  /** Column-API form. */
   def winnow_fp(text: Column, k: Int, w: Int): Column =
-    call_function("winnow_fp", text, lit(k), lit(w))
+    column(WinnowFp(expression(text), Literal(k), Literal(w)))
 }

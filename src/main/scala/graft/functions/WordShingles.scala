@@ -3,11 +3,11 @@ package graft.functions
 import scala.collection.mutable.ArrayBuffer
 
 import org.apache.spark.sql.Column
+import org.apache.spark.sql.GraftColumnBridge.{column, expression}
 import org.apache.spark.sql.catalyst.analysis.TypeCheckResult
-import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression}
+import org.apache.spark.sql.catalyst.expressions.{BinaryExpression, Expression, Literal}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
 import org.apache.spark.sql.catalyst.util.GenericArrayData
-import org.apache.spark.sql.functions.{call_function, lit}
 import org.apache.spark.sql.types.{ArrayType, DataType, IntegerType, StringType}
 import org.apache.spark.unsafe.types.UTF8String
 
@@ -73,7 +73,7 @@ case class WordShingles(left: Expression, right: Expression)
 }
 
 object WordShingles {
-  /** Column-API form. Requires graft.plans.GraftExtensions.register. */
+  /** Column-API form. */
   def word_shingles(text: Column, k: Int): Column =
-    call_function("word_shingles", text, lit(k))
+    column(WordShingles(expression(text), Literal(k)))
 }

@@ -37,7 +37,6 @@ object Corpus {
   def split(docs: DataFrame, idCol: String = "doc_id",
             trainPermille: Int = 900, valPermille: Int = 50): DataFrame = {
     require(trainPermille + valPermille <= 1000, "split permilles exceed 1000")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     docs
       .withColumn("bucket", hashBucket(col(idCol), 1000, "split|"))
       .withColumn("split",
@@ -65,7 +64,6 @@ object Corpus {
   def leakageSafeSplit(docs: DataFrame, pairs: DataFrame, idCol: String = "doc_id",
                        trainPermille: Int = 900, valPermille: Int = 50): DataFrame = {
     require(trainPermille + valPermille <= 1000, "split permilles exceed 1000")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val comp = graft.operators.Dedup.connectedComponents(pairs)
       .select(col("doc_id").as("__cid"), col("component").as("__component"))
     docs.join(comp, docs(idCol) === col("__cid"), "left")
@@ -86,7 +84,6 @@ object Corpus {
   def stratifiedSample(docs: DataFrame, strataCol: String,
                        ratesPermille: Map[String, Int], defaultPermille: Int,
                        idCol: String = "doc_id"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val rate = ratesPermille.foldLeft(lit(defaultPermille)) { case (acc, (k, v)) =>
       when(col(strataCol) === k, lit(v)).otherwise(acc)
     }
@@ -109,7 +106,6 @@ object Corpus {
                idCol: String = "doc_id"): DataFrame = {
     require(defaultPermille >= 0 && weightsPermille.values.forall(_ >= 0),
       "mixture weights must be non-negative permille")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val w = weightsPermille.foldLeft(lit(defaultPermille)) { case (acc, (k, v)) =>
       when(col(strataCol) === k, lit(v)).otherwise(acc)
     }
@@ -131,7 +127,6 @@ object Corpus {
     * on the stratum key; rows beyond k never leave the window filter. */
   def sampleKPerStratum(docs: DataFrame, strataCol: String, k: Int,
                         idCol: String = "doc_id"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     Relational.topNPerGroup(
       docs.withColumn("__b", hashBucket(col(idCol), 1000000, "ksample|")),
       Seq(col(strataCol)), Seq(col("__b"), col(idCol)), k, rankCol = "__rn")
@@ -145,7 +140,6 @@ object Corpus {
   def repetition(docs: DataFrame, idCol: String = "doc_id",
                  textCol: String = "text"): DataFrame = {
     import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     Partitioning.fanOut(docs)
       .select(col(idCol),
         Dedup.tokens(col(textCol)).as("toks"),
@@ -177,7 +171,6 @@ object Corpus {
   def decontaminate(train: DataFrame, eval: DataFrame, n: Int = 13,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(train.sparkSession)
     val evalGrams = Partitioning.fanOut(eval)
       .select(explode(word_shingles(col(textCol), n)).as("g")).distinct()
     val contaminated = Partitioning.fanOut(train)
@@ -198,7 +191,6 @@ object Corpus {
   def contaminationReport(train: DataFrame, eval: DataFrame, n: Int = 13,
                           idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(train.sparkSession)
     val evalGrams = Partitioning.fanOut(eval)
       .select(explode(word_shingles(col(textCol), n)).as("g")).distinct()
       .withColumn("__hit", lit(1L))
@@ -443,7 +435,6 @@ object Corpus {
   def shuffleOrder(docs: DataFrame, seed: String,
                    idCol: String = "doc_id", partitions: Int = 0): DataFrame = {
     import graft.functions.HexSliceLong.hex_slice_long
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val keyed = docs.withColumn("shuf_key",
       hex_slice_long(md5(concat(lit(s"shuf|$seed|"),
         col(idCol).cast("string")).cast("binary")), 0))
@@ -464,7 +455,6 @@ object Corpus {
   def curriculum(docs: DataFrame, bandCol: Column, seed: String,
                  idCol: String = "doc_id", partitions: Int = 0): DataFrame = {
     import graft.functions.HexSliceLong.hex_slice_long
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val keyed = docs
       .withColumn("band", bandCol.cast("long"))
       .withColumn("shuf_key",
@@ -537,7 +527,6 @@ object Corpus {
             idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(chunkTokens > 0 && strideTokens > 0 && strideTokens <= chunkTokens,
       "need 0 < stride <= chunk")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val n = size(col("__tk"))
     val nch = floor((greatest(n - chunkTokens, lit(0)) + (strideTokens - 1))
       / lit(strideTokens)).cast("long") + 1
@@ -584,7 +573,6 @@ object Corpus {
                 idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
     require(window >= 1 && modulus >= 2, "need window >= 1 and modulus >= 2")
     import graft.functions.CdcChunks.cdc_chunks
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val ch = Partitioning.fanOut(docs)
       .withColumn("__tk", Dedup.tokens(col(textCol)))
       .filter(size(col("__tk")) >= 1)
@@ -660,7 +648,6 @@ object Corpus {
   def sourceOverlap(docs: DataFrame, k: Int = 64, n: Int = 3,
                     byCol: String = "source",
                     textCol: String = "text"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     import graft.functions.WordShingles.word_shingles
     val grams = docs.select(col(byCol),
       explode(word_shingles(col(textCol), n)).as("g"))
@@ -702,7 +689,6 @@ object Corpus {
     * [[hashBucket]]. */
   def dsirWeights(docs: DataFrame, isTarget: Column, buckets: Int = 64,
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val tok = Partitioning.fanOut(docs)
       .select(col(idCol), isTarget.as("__t"),
         explode(Dedup.tokens(col(textCol))).as("w"))

@@ -1,6 +1,8 @@
 package graft.operators
 
-import org.apache.spark.sql.{Column, DataFrame}
+import org.apache.spark.sql.{Column, DataFrame, GraftColumnBridge}
+import org.apache.spark.sql.catalyst.expressions.{BloomFilterMightContain, Literal}
+import org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate
 import org.apache.spark.sql.functions._
 
 /** Deduplication operators for large-scale training-data pipelines:
@@ -40,7 +42,6 @@ object Dedup {
     * shorter than k tokens get an empty array — explode drops them. */
   def shingled(docs: DataFrame, k: Int = 3, textCol: String = "text"): DataFrame = {
     import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     Partitioning.fanOut(docs)
       .withColumn("shingles", word_shingles(col(textCol), k))
   }
@@ -73,7 +74,6 @@ object Dedup {
                        idCol: String = "doc_id",
                        carryCols: Seq[String] = Nil): DataFrame = {
     import graft.functions.HexSliceLong.hex_slice_long
-    graft.plans.GraftExtensions.register(shingled.sparkSession)
     require(numHashes >= 4 && numHashes % 4 == 0,
       s"numHashes must be a positive multiple of 4 (one md5 digest per 4 slices), got $numHashes")
     val nDigests = numHashes / 4
@@ -198,7 +198,6 @@ object Dedup {
                                     numHashes: Int = 8, rowsPerBand: Int = 2,
                                     maxBucket: Int = DefaultMaxBucket): BandedPairs = {
     import graft.functions.CharShingles.char_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     bandedPairsOn(docs, array_distinct(char_shingles(col("text"), k)), strataCols,
       thresholdPermille, idCol, numHashes, rowsPerBand, maxBucket)
   }
@@ -225,7 +224,6 @@ object Dedup {
                             numHashes: Int = 8, rowsPerBand: Int = 2,
                             maxBucket: Int = DefaultMaxBucket): BandedPairs = {
     require(thresholdPermille >= 1, "thresholdPermille must be >= 1")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val base = Partitioning.fanOut(docs)
       .withColumn("tset", array_distinct(tokens(col("text"))))
       .select(col(idCol) +: col("tset") +: strataCols.map(col): _*)
@@ -303,7 +301,6 @@ object Dedup {
                         maxBucket: Int = DefaultMaxBucket): BandedPairs = {
     require(maxDist >= 0, "maxDist must be >= 0")
     import graft.functions.CharShingles.char_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val base = Partitioning.fanOut(docs)
       .withColumn("tset", array_distinct(char_shingles(col("text"), k)))
       .select(col(idCol) +: col("tset") +: col("text") +: strataCols.map(col): _*)
@@ -423,7 +420,6 @@ object Dedup {
                                  maxBucket: Int = DefaultMaxBucket): BandedPairs = {
     require(thresholdPermille >= 1, "thresholdPermille must be >= 1")
     import graft.functions.BagFunctions.token_counts
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val base = Partitioning.fanOut(docs)
       .withColumn("__tk", tokens(col("text")))
       .withColumn("tset", array_distinct(col("__tk")))
@@ -517,7 +513,6 @@ object Dedup {
                                     idCol: String = "doc_id",
                                     maxPostings: Int = 10000): ContainmentPairs = {
     import graft.functions.CharShingles.char_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     containmentPairsOn(docs, array_distinct(char_shingles(col("text"), k)),
       strataCols, thresholdPermille, idCol, maxPostings)
   }
@@ -527,7 +522,6 @@ object Dedup {
                                  idCol: String, maxPostings: Int): ContainmentPairs = {
     require(thresholdPermille >= 1 && thresholdPermille <= 1000,
       s"thresholdPermille in [1,1000], got $thresholdPermille")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     // The ENTIRE pipeline runs on 32-bit gram FINGERPRINTS
     // (hex_slice_long of md5, the minhash slice), not gram strings:
     // frequency counts, the rarity ordering, posting keys and
@@ -648,7 +642,6 @@ object Dedup {
                   minShared: Int = 2, maxPostings: Int = 10000,
                   idCol: String = "doc_id",
                   textCol: String = "text"): ContainmentPairs = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     import graft.functions.WinnowFp.winnow_fp
     val fps = Partitioning.fanOut(docs)
       .select(col(idCol), explode(winnow_fp(col(textCol), k, w)).as("fp"))
@@ -676,7 +669,6 @@ object Dedup {
   def buildWinnowIndex(docs: DataFrame, k: Int = 5, w: Int = 4,
                        idCol: String = "doc_id",
                        textCol: String = "text"): WinnowIndex = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     import graft.functions.WinnowFp.winnow_fp
     WinnowIndex(
       Partitioning.fanOut(docs)
@@ -696,7 +688,6 @@ object Dedup {
                           minShared: Int = 3, maxPostings: Int = 10000,
                           idCol: String = "doc_id",
                           textCol: String = "text"): DataFrame = {
-    graft.plans.GraftExtensions.register(newDocs.sparkSession)
     import graft.functions.WinnowFp.winnow_fp
     val dfp = Partitioning.fanOut(newDocs)
       .select(col(idCol).as("new_id"),
@@ -843,7 +834,6 @@ object Dedup {
   private def jaccardVerifySetsFull(withSets: DataFrame, pairs: DataFrame,
                                     thresholdPermille: Int,
                                     idCol: String): DataFrame = {
-    graft.plans.GraftExtensions.register(withSets.sparkSession)
     // sets are sorted ONCE PER DOC at the projection (array_sort =
     // UTF8 binary order) so the per-pair intersection is the
     // zero-allocation fp_inter_count two-pointer merge instead of
@@ -871,7 +861,6 @@ object Dedup {
     * sums — map-side combinable, portable across engines. */
   def simhash16(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     import graft.functions.HexPrefix16.hex_prefix16
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val tok = Partitioning.fanOut(docs)
       .select(col(idCol), explode(tokens(col("text"))).as("t"))
       .withColumn("v16", hex_prefix16(md5(col("t").cast("binary"))))
@@ -1067,7 +1056,6 @@ object Dedup {
   def simhashPairs(sig: DataFrame, maxDistance: Int,
                    idCol: String = "doc_id"): DataFrame = {
     import graft.functions.HammingDistance.hamming64
-    graft.plans.GraftExtensions.register(sig.sparkSession)
     val a = sig.select(col(idCol).as("doc_a"), col("simhash16").as("sig_a"),
       shiftright(col("simhash16"), 8).as("block"))
     val b = sig.select(col(idCol).as("doc_b"), col("simhash16").as("sig_b"),
@@ -1211,14 +1199,21 @@ object Dedup {
     * `PlanShapeSpec` now bans ScalaUDF on this path). */
   private def bloomPruned(big: DataFrame, keys: DataFrame, keyCol: String,
                           fpp: Double): DataFrame = {
-    graft.plans.GraftExtensions.register(big.sparkSession)
     val n = math.max(keys.count(), 1L)
     // optimal bit count for the target fpp: ceil(-n·ln(p) / ln(2)²)
     val bits = math.max(64L,
       math.ceil(-n * math.log(fpp) / (math.log(2.0) * math.log(2.0))).toLong)
-    val bf = keys.select(call_function("bloom_filter_agg",
-        xxhash64(col(keyCol)), lit(n), lit(bits)).as("bf"))
+    val bf = keys.select(bloomFilterAgg(xxhash64(col(keyCol)), n, bits).as("bf"))
       .head.getAs[Array[Byte]]("bf")
-    big.where(call_function("might_contain", lit(bf), xxhash64(col(keyCol))))
+    big.where(mightContain(bf, xxhash64(col(keyCol))))
   }
+
+  /** Spark's runtime-filter Bloom expressions, which have no public SQL
+    * name: the aggregate that builds a filter of `bits` bits for `n`
+    * keys, and the probe of a built filter. */
+  private[graft] def bloomFilterAgg(key: Column, n: Long, bits: Long): Column =
+    GraftColumnBridge.column(new BloomFilterAggregate(
+      GraftColumnBridge.expression(key), Literal(n), Literal(bits)).toAggregateExpression())
+  private[graft] def mightContain(bf: Array[Byte], key: Column): Column =
+    GraftColumnBridge.column(BloomFilterMightContain(Literal(bf), GraftColumnBridge.expression(key)))
 }

@@ -2839,7 +2839,6 @@ object Multimodal {
     require(bands >= 2 && 64 % bands == 0 && maxDistance < bands,
       s"pigeonhole needs maxDistance < bands and bands | 64, got d=$maxDistance b=$bands")
     import graft.functions.HammingDistance.hamming64
-    graft.plans.GraftExtensions.register(probe.sparkSession)
     val w = 64 / bands
     val mask = if (w == 64) -1L else (1L << w) - 1
     def banded(df: DataFrame, side: String) = df.select(
@@ -2872,7 +2871,6 @@ object Multimodal {
     require(bands >= 2 && 64 % bands == 0 && maxDistance < bands,
       s"pigeonhole needs maxDistance < bands and bands | 64, got d=$maxDistance b=$bands")
     import graft.functions.HammingDistance.hamming64
-    graft.plans.GraftExtensions.register(hashes.sparkSession)
     val w = 64 / bands
     val mask = if (w == 64) -1L else (1L << w) - 1
     // fan the hash frame out BEFORE banding: `hashes` usually arrives

@@ -69,7 +69,6 @@ object Partitioning {
   def hilbertBy(df: DataFrame, aCol: String, bCol: String, bits: Int = 20,
                 partitions: Int = 0): DataFrame = {
     import graft.functions.HilbertIndex.hilbert_index
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val keyed = df.withColumn("hilbert", hilbert_index(col(aCol), col(bCol), bits))
     val n = if (partitions > 0) partitions
             else df.sparkSession.sessionState.conf.numShufflePartitions

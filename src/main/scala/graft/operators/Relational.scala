@@ -981,7 +981,6 @@ object Relational {
   def kmvState(df: DataFrame, keys: Seq[Column], valueCol: Column,
                k: Int): DataFrame = {
     require(k >= 2, "kmv needs k >= 2")
-    graft.plans.GraftExtensions.register(df.sparkSession)
     import graft.functions.HexSliceLong.hex_slice_long
     val hashed = df.select(keys :+ valueCol.cast("string").as("__s"): _*)
       .filter(col("__s").isNotNull)
@@ -1088,7 +1087,6 @@ object Relational {
                   weightCol: Column, k: Int,
                   payload: Seq[Column] = Nil): DataFrame = {
     require(k >= 2, s"priority sample needs k >= 2, got $k")
-    graft.plans.GraftExtensions.register(df.sparkSession)
     import graft.functions.HexSliceLong.hex_slice_long
     // payload columns ride along so a-posteriori predicates can read
     // item attributes off the sample; like `weight`, each must be a
@@ -1268,7 +1266,6 @@ object Relational {
                depth: Int = 4, width: Int = 512): DataFrame = {
     require(depth >= 1 && depth <= 8, s"depth must be in [1, 8], got $depth")
     require(width >= 16, s"width must be >= 16, got $width")
-    graft.plans.GraftExtensions.register(df.sparkSession)
     df.select(keys :+ valueCol.cast("string").as("__s"): _*)
       .filter(col("__s").isNotNull)
       .select(keys :+ posexplode(array(cmsPositions(col("__s"), depth, width): _*))
@@ -1297,7 +1294,6 @@ object Relational {
     * touched. */
   def cmsEstimate(state: DataFrame, keyCols: Seq[String], probes: DataFrame,
                   probeCol: String, depth: Int, width: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(state.sparkSession)
     val pr = probes
       .select(probes.columns.map(col) :+ posexplode(array(
         cmsPositions(col(probeCol).cast("string"), depth, width): _*))
@@ -1333,7 +1329,6 @@ object Relational {
                k: Int = 64): DataFrame = {
     require(k >= 8 && k <= 64 && k % 8 == 0,
       s"k must be a multiple of 8 in [8, 64]; got $k")
-    graft.plans.GraftExtensions.register(df.sparkSession)
     import graft.functions.HexSliceLong.hex_slice_long
     val cnt = df.select(keys :+ valueCol.cast("string").as("__s"): _*)
       .filter(col("__s").isNotNull)
@@ -1406,6 +1401,16 @@ object Relational {
       .select(col("gm").as("join_size_est"))
   }
 
+  /** All `numHashes` bit positions for one value off ⌈n/4⌉ digests
+    * (the [[cmsPositions]] economy, prefixes "bloom|"/"bloom2|"). */
+  private def bloomPositions(s: Column, numHashes: Int, bits: Int): Seq[Column] = {
+    import graft.functions.HexSliceLong.hex_slice_long
+    (0 until numHashes).map { i =>
+      val m = md5(concat(lit(if (i < 4) "bloom|" else "bloom2|"), s).cast("binary"))
+      pmod(hex_slice_long(m, (i % 4) * 8), lit(bits.toLong))
+    }
+  }
+
   /** BLOOM membership sketch (Bloom 1970) — the set-membership state
     * completing the sketch suite (cardinality: [[kmvState]]; point
     * frequency: [[cmsState]]; moments: [[amsState]]; membership:
@@ -1420,21 +1425,10 @@ object Relational {
     * that 100 TB table" to the other side of a join at sketch size
     * (the engine-level twin is Spark's runtime bloom join; this one
     * is a MERGEABLE STORED artifact a daily ingest maintains). */
-  /** All `numHashes` bit positions for one value off ⌈n/4⌉ digests
-    * (the [[cmsPositions]] economy, prefixes "bloom|"/"bloom2|"). */
-  private def bloomPositions(s: Column, numHashes: Int, bits: Int): Seq[Column] = {
-    import graft.functions.HexSliceLong.hex_slice_long
-    (0 until numHashes).map { i =>
-      val m = md5(concat(lit(if (i < 4) "bloom|" else "bloom2|"), s).cast("binary"))
-      pmod(hex_slice_long(m, (i % 4) * 8), lit(bits.toLong))
-    }
-  }
-
   def bloomState(df: DataFrame, keys: Seq[Column], valueCol: Column,
                  numHashes: Int = 4, bits: Int = 1 << 17): DataFrame = {
     require(numHashes >= 1 && numHashes <= 8, s"numHashes in [1,8], got $numHashes")
     require(bits >= 64, s"bits must be >= 64, got $bits")
-    graft.plans.GraftExtensions.register(df.sparkSession)
     df.select(keys :+ valueCol.cast("string").as("__s"): _*)
       .filter(col("__s").isNotNull)
       .select(keys :+ explode(array(
@@ -1456,7 +1450,6 @@ object Relational {
     * the position set. */
   def bloomMightContain(state: DataFrame, keyCols: Seq[String], probes: DataFrame,
                         probeCol: String, numHashes: Int, bits: Int): DataFrame = {
-    graft.plans.GraftExtensions.register(state.sparkSession)
     val pr = probes
       .select(probes.columns.map(col) :+ posexplode(array(
         bloomPositions(col(probeCol).cast("string"), numHashes, bits): _*))

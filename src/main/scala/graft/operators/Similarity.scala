@@ -31,7 +31,6 @@ object Similarity {
 
   /** Candidate side with its squared norm precomputed (one pass). */
   def withNorm(df: DataFrame, vecCol: String = "embedding"): DataFrame = {
-    graft.plans.GraftExtensions.register(df.sparkSession)
     Partitioning.fanOut(df).withColumn("__n2", norm2(col(vecCol)))
   }
 
@@ -143,7 +142,6 @@ object Similarity {
   def rpLshSignature(df: DataFrame, numPlanes: Int = 16, dims: Int = 64,
                      vecCol: String = "embedding"): DataFrame = {
     require(numPlanes <= 63, "signature packs into a long")
-    graft.plans.GraftExtensions.register(df.sparkSession)
     val sig = (0 until numPlanes).map { h =>
       val plane = typedlit(rpPlane(h, dims).toSeq)
       when(dot(col(vecCol), plane) > 0, lit(1L << h)).otherwise(lit(0L))
@@ -195,7 +193,6 @@ object Similarity {
   def ivfTrain(emb: DataFrame, k: Int, iters: Int,
                idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = emb.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     // quantized vectors are read by every Lloyd round — cache across
     // iterations (the MLlib pattern), release before returning
     val q = Partitioning.fanOut(emb)
@@ -294,7 +291,6 @@ object Similarity {
   def ivfTrainPP(emb: DataFrame, k: Int, l: Int, rounds: Int, iters: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     val spark = emb.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     import graft.functions.HexSliceLong.hex_slice_long
     val q = Partitioning.fanOut(emb)
       .select(col(idCol).as("__id"), quantize(col(vecCol)).as("qv"))
@@ -395,7 +391,6 @@ object Similarity {
   /** [[assignCells]] from driver-side centroid rows (cell, cv) —
     * skips the collect when the caller already holds them. */
   private def assignCellsLocal(q: DataFrame, cents: Seq[(Long, Seq[Long])]): DataFrame = {
-    graft.plans.GraftExtensions.register(q.sparkSession)
     q.withColumn("cell",
         nearestCellCol(lit(0L), col("qv"), cents.map(c => (0L, c._1, c._2))))
       .filter(col("cell").isNotNull)
@@ -426,7 +421,6 @@ object Similarity {
   /** Final cell assignment under trained centroids: (id, cell). */
   def ivfAssign(emb: DataFrame, cents: DataFrame,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
     val q = Partitioning.fanOut(emb)
       .select(col(idCol).as("__id"), quantize(col(vecCol)).as("qv"))
     assignCells(q, cents).select(col("__id").as(idCol), col("cell"))
@@ -447,7 +441,6 @@ object Similarity {
                     cents: DataFrame, nprobe: Int,
                     idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     val c = cents.withColumn("__csq", dot(col("cv"), col("cv")))
     val probes = Partitioning.fanOut(queries)
       .select(col(idCol).as("query_id"), quantize(col(vecCol)).as("__qqv"))
@@ -545,7 +538,6 @@ object Similarity {
                    idCol: String = "vec_id",
                    vecCol: String = "embedding"): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     val c = index.centroids.withColumn("__csq", dot(col("cv"), col("cv")))
     val probes = Partitioning.fanOut(queries)
       .select(col(idCol).as("query_id"), quantize(col(vecCol)).as("__qqv"))
@@ -642,7 +634,6 @@ object Similarity {
 
   def sq8Quantize(emb: DataFrame, idCol: String = "vec_id",
                   vecCol: String = "embedding"): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
     Partitioning.fanOut(emb)
       .withColumn("__qv", quantize(col(vecCol)))
       .withColumn("amax", array_max(transform(col("__qv"), x => abs(x))))
@@ -691,7 +682,6 @@ object Similarity {
     * Model-small by construction: dims rows off one narrow scan. */
   def binaryThresholds(emb: DataFrame, idCol: String = "vec_id",
                        vecCol: String = "embedding"): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
     Partitioning.fanOut(emb)
       .select(posexplode(quantize(col(vecCol))).as(Seq("pos", "x")))
       .groupBy(col("pos"))
@@ -823,7 +813,6 @@ object Similarity {
     * driver-materialized like the k-means centroids. */
   def pqTrain(emb: DataFrame, m: Int, k: Int, iters: Int,
               idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
     pqTrainSub(subvectors(emb, m, idCol, vecCol), k, iters)
   }
 
@@ -876,7 +865,6 @@ object Similarity {
   /** [[assignPq]] from driver-side codebook rows (sub, cell, cv) —
     * the narrow nearest_cell form per subspace. */
   private def assignPqLocal(sub: DataFrame, book: Seq[(Long, Long, Seq[Long])]): DataFrame = {
-    graft.plans.GraftExtensions.register(sub.sparkSession)
     sub.withColumn("cell", nearestCellCol(col("sub"), col("sqv"), book))
       .filter(col("cell").isNotNull)
       .select(col("__id"), col("sub"), col("cell"), col("sqv"))
@@ -1011,7 +999,6 @@ object Similarity {
   def ivfPqScore(queries: DataFrame, encodedCands: DataFrame,
                  coarse: DataFrame, codebook: DataFrame, m: Int, k: Int,
                  idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     // query side in ONE pass (the [[pqCodesWithCell]] discipline): the
     // coarse-cell argmin carries the quantized vector, so the ADC
     // distance table is built from its output directly — the old form
@@ -1094,7 +1081,6 @@ object Similarity {
     * incremental appends (over a delta only). */
   def annEncode(emb: DataFrame, model: AnnModel,
                 idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
     val q = Partitioning.fanOut(emb)
       .select(col(idCol).as("__id"), quantize(col(vecCol)).as("qv"))
     pqCodesWithCell(assignCells(q, model.coarse), model.codebook, model.m)
@@ -1140,7 +1126,6 @@ object Similarity {
                              nprobe: Int, idCol: String = "vec_id",
                              vecCol: String = "embedding"): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     val m = index.model.m
     val sd = subWidth(index.model.codebook)
     val c = index.model.coarse.withColumn("__csq", dot(col("cv"), col("cv")))
@@ -1230,7 +1215,6 @@ object Similarity {
     * side never shuffles. */
   private def residuals(emb: DataFrame, coarse: DataFrame,
                         idCol: String, vecCol: String): DataFrame = {
-    graft.plans.GraftExtensions.register(emb.sparkSession)
     val q = Partitioning.fanOut(emb)
       .select(col(idCol).as("__id"), quantize(col(vecCol)).as("qv"))
     assignCells(q, coarse)
@@ -1280,7 +1264,6 @@ object Similarity {
                          model: AnnModel, k: Int, nprobe: Int = 1,
                          idCol: String = "vec_id", vecCol: String = "embedding"): DataFrame = {
     require(nprobe >= 1, "nprobe must be >= 1")
-    graft.plans.GraftExtensions.register(queries.sparkSession)
     val m = model.m
     val sd = subWidth(model.codebook)
     val c = model.coarse.withColumn("__csq", dot(col("cv"), col("cv")))

@@ -217,20 +217,6 @@ object TextAnalysis {
         col("n_replacement"), col("n_latin1_markers"), col("mojibake_permille"))
   }
 
-  /** Corpus-trained language ID: build a top-`profileSize` token
-    * profile per labeled language (training pass: one aggregation +
-    * windowed top-N), then score every document by profile hits and
-    * predict the argmax (hits desc, lang asc tie-break).
-    *
-    * The profile is tiny (langs × profileSize) — it is materialized on
-    * the driver (like the k-means centroids in
-    * [[Similarity.ivfTrain]]: legitimately model-small) and broadcast
-    * back into the scoring join, which therefore never shuffles the
-    * token table by profile key. The input is scanned twice (train +
-    * score), both passes narrow-until-agg; at 100 TB two passes beat
-    * retaining a corpus-sized (doc, token, count) cache in executor
-    * storage, and the returned frame is fully lazy with NO retained
-    * state — nothing for the caller to release. */
   /** The langid training pass (eager, aggregate-only): lang-level
     * token counts → top-N per lang → langs × profileSize rows on the
     * driver, returned as a broadcastable (cand_lang, t) frame. */
@@ -247,6 +233,20 @@ object TextAnalysis {
     profileRows.toDF("cand_lang", "t")
   }
 
+  /** Corpus-trained language ID: build a top-`profileSize` token
+    * profile per labeled language (training pass: one aggregation +
+    * windowed top-N), then score every document by profile hits and
+    * predict the argmax (hits desc, lang asc tie-break).
+    *
+    * The profile is tiny (langs × profileSize) — it is materialized on
+    * the driver (like the k-means centroids in
+    * [[Similarity.ivfTrain]]: legitimately model-small) and broadcast
+    * back into the scoring join, which therefore never shuffles the
+    * token table by profile key. The input is scanned twice (train +
+    * score), both passes narrow-until-agg; at 100 TB two passes beat
+    * retaining a corpus-sized (doc, token, count) cache in executor
+    * storage, and the returned frame is fully lazy with NO retained
+    * state — nothing for the caller to release. */
   def langId(docs: DataFrame, profileSize: Int = 20): DataFrame = {
     val profile = langProfileDf(docs, profileSize)
     // scoring pass (lazy): doc-level term frequencies × broadcast profile
@@ -349,7 +349,6 @@ object TextAnalysis {
     * they have no transitions to score. */
   def bigramFluency(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val bg = Partitioning.fanOut(docs)
       .select(col(idCol), explode(word_shingles(col("text"), 2)).as("b"))
     val counts = bg.groupBy(col("b")).agg(count(lit(1)).as("cnt"))
@@ -495,7 +494,6 @@ object TextAnalysis {
   def pmiTop(docs: DataFrame, k: Int = 25, minCount: Int = 5,
              textCol: String = "text"): DataFrame = {
     import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val fanned = Partitioning.fanOut(docs)
     val bg = fanned
       .select(explode(word_shingles(col(textCol), 2)).as("b"))
@@ -602,7 +600,6 @@ object TextAnalysis {
       s"merges must be in [1, 8] (statically unrolled folds), got $merges")
     import graft.functions.CharShingles.char_shingles
     val spark = words.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     val vocab = words
       .select(col("wcnt").as("cnt"), char_shingles(col("word"), 1).as("syms"))
       .cache()
@@ -666,7 +663,6 @@ object TextAnalysis {
     require(merges >= 1, s"merges must be >= 1, got $merges")
     import graft.functions.CharShingles.char_shingles
     val spark = docs.sparkSession
-    graft.plans.GraftExtensions.register(spark)
     // the single corpus scan. `loopPartitions` sizes the per-round
     // vocabulary frame: the merge loop launches 2 jobs per rank, and a
     // Zipf vocabulary is orders of magnitude smaller than the corpus,
@@ -822,7 +818,6 @@ object TextAnalysis {
     * (doc, word) groupBy, one word-keyed join, one per-doc sum. */
   def bpeEncode(docs: DataFrame, merges: DataFrame, idCol: String = "doc_id",
                 textCol: String = "text"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val ranked = merges.select(col("merge_rank"), col("left"), col("right"))
       .collect().sortBy(_.getLong(0))
       .map(r => (r.getString(1), r.getString(2)))
@@ -1051,7 +1046,6 @@ object TextAnalysis {
     * hash sequence and window minima never exist as rows. */
   def winnowStats(docs: DataFrame, k: Int = 5, w: Int = 4,
                   idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     import graft.functions.WinnowFp.winnow_fp
     Partitioning.fanOut(docs)
       .withColumn("__sl", winnow_fp(col(textCol), k, w))
@@ -1149,7 +1143,6 @@ object TextAnalysis {
     * policy). */
   def bigramPerplexity(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val fanned = Partitioning.fanOut(docs)
     val bg = fanned
       .select(col(idCol), explode(word_shingles(col("text"), 2)).as("b"))
@@ -1229,7 +1222,6 @@ object TextAnalysis {
     * ([[bigramPerplexity]] note). */
   def knPerplexity(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val fanned = Partitioning.fanOut(docs)
     val bg = fanned
       .select(col(idCol), explode(word_shingles(col("text"), 2)).as("b"))
@@ -1312,7 +1304,6 @@ object TextAnalysis {
     * off the aggregated count table. */
   def stupidBackoff(docs: DataFrame, idCol: String = "doc_id"): DataFrame = {
     import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val fanned = Partitioning.fanOut(docs)
     val train = fanned.filter(col(idCol) % 2 === 0)
     val score = fanned.filter(col(idCol) % 2 === 1)
@@ -1454,7 +1445,6 @@ object TextAnalysis {
   private[graft] def wordpieceVocabFromWords(words: DataFrame, k: Int,
                                              maxLen: Int): DataFrame = {
     require(k > 0 && maxLen >= 1, s"bad wordpiece params k=$k maxLen=$maxLen")
-    graft.plans.GraftExtensions.register(words.sparkSession)
     val pieces = words
       .select(col("word"), col("wcnt"),
         explode(sequence(lit(1), length(col("word")))).as("i"))
@@ -1509,7 +1499,6 @@ object TextAnalysis {
     * literal array. */
   def wordpieceEncode(docs: DataFrame, vocab: DataFrame, maxLen: Int = 4,
                       idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val vs = vocab.select(col("piece")).collect().map(_.getString(0)).sorted.toSeq
     val vlit = typedlit(vs)
     def wpLen(word: Column): Column = wpFoldLen(word, vlit, maxLen)
@@ -1543,7 +1532,6 @@ object TextAnalysis {
   def wordpieceVocabPositional(docs: DataFrame, k: Int = 48, maxLen: Int = 4,
                                textCol: String = "text"): DataFrame = {
     require(k > 0 && maxLen >= 1, s"bad wordpiece params k=$k maxLen=$maxLen")
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val words = Partitioning.fanOut(docs)
       .select(explode(tokens(col(textCol))).as("word"))
       .groupBy(col("word")).agg(count(lit(1)).as("wcnt"))
@@ -1571,7 +1559,6 @@ object TextAnalysis {
   def wordpieceEncodePositional(docs: DataFrame, vocab: DataFrame, maxLen: Int = 4,
                                 idCol: String = "doc_id",
                                 textCol: String = "text"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val rows = vocab.select(col("piece"), col("at_start")).collect()
     val vStart = typedlit(rows.filter(_.getLong(1) == 1L).map(_.getString(0)).sorted.toSeq)
     val vCont = typedlit(rows.filter(_.getLong(1) == 0L).map(_.getString(0)).sorted.toSeq)
@@ -1640,7 +1627,6 @@ object TextAnalysis {
                                            maxLen: Int): DataFrame = {
     require(v > 0 && maxLen >= 1 && maxLen <= 8,
       s"bad unigram params v=$v maxLen=$maxLen")
-    graft.plans.GraftExtensions.register(words.sparkSession)
     val pieces = words
       .select(col("word"), col("wcnt"),
         explode(sequence(lit(1), length(col("word")))).as("i"))
@@ -1710,7 +1696,6 @@ object TextAnalysis {
     * carrying the dp arrays — identical integers end to end. */
   def unigramEncode(docs: DataFrame, vocab: DataFrame, maxLen: Int = 4,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     val pairs = vocab.select(col("piece"), col("score")).collect()
       .map(r => r.getString(0) -> r.getLong(1)).toMap
     val scoreMap = typedlit(pairs)
@@ -1756,7 +1741,6 @@ object TextAnalysis {
   def tokenizerEval(docs: DataFrame, merges: Int = 3, wpK: Int = 48,
                     uniV: Int = 64, maxLen: Int = 4,
                     idCol: String = "doc_id", textCol: String = "text"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     import graft.functions.CharShingles.char_shingles
     import graft.functions.MergePair.merge_pair
     // ONE corpus token pass; the table feeds the vocabulary rollup,

@@ -1,190 +1,55 @@
 package graft.plans
 
+import scala.reflect.ClassTag
+
 import org.apache.spark.sql.SparkSessionExtensions
-import org.apache.spark.sql.catalyst.expressions.Expression
 import org.apache.spark.sql.catalyst.FunctionIdentifier
-import org.apache.spark.sql.catalyst.analysis.FunctionRegistry
-import org.apache.spark.sql.catalyst.expressions.ExpressionInfo
+import org.apache.spark.sql.catalyst.expressions.{Expression, ExpressionInfo}
 
 import graft.functions.{BagOverlap, CdcChunks, CharShingles, FpInterCount, FpSet, FpWeightedInter, FreqTopK, HammingDistance, HammingWords, HexPrefix16, HexSliceLong, HilbertIndex, MergePair, NearestCell, TokenCounts, TopKRows, VectorDot, WinnowFp, WordShingles}
 
-/** SQL-surface registration for graft's native expressions:
-  * `SparkSession.builder().withExtensions(new GraftExtensions)` (or
-  * `spark.sql.extensions=graft.plans.GraftExtensions`) makes
+/** SQL names for graft's native expressions:
+  * `SparkSession.builder().withExtensions(new GraftExtensions)` (what
+  * [[graft.Session.local]] does) or
+  * `spark.sql.extensions=graft.plans.GraftExtensions` makes
   * `hamming64(a, b)` available to plain SQL. The Column API
-  * ([[graft.functions.HammingDistance.hamming64]]) needs no
-  * registration.
+  * ([[graft.functions.HammingDistance.hamming64]]) builds the same
+  * expressions directly and works on any session.
   */
 class GraftExtensions extends (SparkSessionExtensions => Unit) {
   override def apply(ext: SparkSessionExtensions): Unit = {
-    ext.injectFunction(GraftExtensions.hamming64Descriptor)
-    ext.injectFunction(GraftExtensions.hilbertIndexDescriptor)
-    ext.injectFunction(GraftExtensions.vecDotDescriptor)
-    ext.injectFunction(GraftExtensions.wordShinglesDescriptor)
-    ext.injectFunction(GraftExtensions.topkRowsDescriptor)
-    ext.injectFunction(GraftExtensions.hexPrefix16Descriptor)
-    ext.injectFunction(GraftExtensions.hexSliceLongDescriptor)
-    ext.injectFunction(GraftExtensions.freqTopKDescriptor)
-    ext.injectFunction(GraftExtensions.charShinglesDescriptor)
-    ext.injectFunction(GraftExtensions.mergePairDescriptor)
-    ext.injectFunction(GraftExtensions.tokenCountsDescriptor)
-    ext.injectFunction(GraftExtensions.bagOverlapDescriptor)
-    ext.injectFunction(GraftExtensions.fp32SetDescriptor)
-    ext.injectFunction(GraftExtensions.fpInterCountDescriptor)
-    ext.injectFunction(GraftExtensions.fpWeightedInterDescriptor)
-    ext.injectFunction(GraftExtensions.cdcChunksDescriptor)
-    ext.injectFunction(GraftExtensions.nearestCellDescriptor)
-    ext.injectFunction(GraftExtensions.hammingWordsDescriptor)
-    ext.injectFunction(GraftExtensions.winnowFpDescriptor)
-    ext.injectFunction(GraftExtensions.bloomAggDescriptor)
-    ext.injectFunction(GraftExtensions.bloomMightContainDescriptor)
-    // strict mode: reject condition-free inner/cross joins at analysis
-    // time (no-op unless spark.graft.failOnCartesian=true)
-    ext.injectCheckRule(session => new CartesianGuard(session))
-    // composable fingerprint-set chain → fused native fp32_set
-    ext.injectOptimizerRule(_ => new FuseFingerprintSets)
+    GraftExtensions.functions.foreach(ext.injectFunction)
+    // strict mode: reject condition-free inner/cross joins before
+    // execution (no-op unless spark.graft.failOnCartesian=true)
+    ext.injectOptimizerRule(session => new CartesianGuard(session))
   }
 }
 
 object GraftExtensions {
-  val hamming64Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hamming64"),
-    new ExpressionInfo(classOf[HammingDistance].getName, "hamming64"),
-    (children: Seq[Expression]) => HammingDistance(children.head, children(1)))
+  private def fn[T <: Expression](name: String)(build: Seq[Expression] => T)(
+      implicit ct: ClassTag[T]): (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) =
+    (FunctionIdentifier(name), new ExpressionInfo(ct.runtimeClass.getName, name), build)
 
-  val hilbertIndexDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hilbert_index"),
-    new ExpressionInfo(classOf[HilbertIndex].getName, "hilbert_index"),
-    (children: Seq[Expression]) => HilbertIndex(children.head, children(1), children(2)))
-
-  val vecDotDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("vec_dot"),
-    new ExpressionInfo(classOf[VectorDot].getName, "vec_dot"),
-    (children: Seq[Expression]) => VectorDot(children.head, children(1)))
-
-  val wordShinglesDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("word_shingles"),
-    new ExpressionInfo(classOf[WordShingles].getName, "word_shingles"),
-    (children: Seq[Expression]) => WordShingles(children.head, children(1)))
-
-  val topkRowsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("topk_rows"),
-    new ExpressionInfo(classOf[TopKRows].getName, "topk_rows"),
-    (children: Seq[Expression]) => TopKRows(children.head, children(1)))
-
-  val hexPrefix16Descriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hex_prefix16"),
-    new ExpressionInfo(classOf[HexPrefix16].getName, "hex_prefix16"),
-    (children: Seq[Expression]) => HexPrefix16(children.head))
-
-  val hexSliceLongDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hex_slice_long"),
-    new ExpressionInfo(classOf[HexSliceLong].getName, "hex_slice_long"),
-    (children: Seq[Expression]) => HexSliceLong(children.head, children(1)))
-
-  val freqTopKDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("freq_topk"),
-    new ExpressionInfo(classOf[FreqTopK].getName, "freq_topk"),
-    (children: Seq[Expression]) => FreqTopK(children.head, children(1)))
-
-  val charShinglesDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("char_shingles"),
-    new ExpressionInfo(classOf[CharShingles].getName, "char_shingles"),
-    (children: Seq[Expression]) => CharShingles(children.head, children(1)))
-
-  val mergePairDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("merge_pair"),
-    new ExpressionInfo(classOf[MergePair].getName, "merge_pair"),
-    (children: Seq[Expression]) => MergePair(children.head, children(1), children(2)))
-
-  val tokenCountsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("token_counts"),
-    new ExpressionInfo(classOf[TokenCounts].getName, "token_counts"),
-    (children: Seq[Expression]) => TokenCounts(children.head))
-
-  val bagOverlapDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bag_overlap"),
-    new ExpressionInfo(classOf[BagOverlap].getName, "bag_overlap"),
-    (children: Seq[Expression]) => BagOverlap(children.head, children(1)))
-
-  val fp32SetDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("fp32_set"),
-    new ExpressionInfo(classOf[FpSet].getName, "fp32_set"),
-    (children: Seq[Expression]) => FpSet(children.head))
-
-  val fpInterCountDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("fp_inter_count"),
-    new ExpressionInfo(classOf[FpInterCount].getName, "fp_inter_count"),
-    (children: Seq[Expression]) => FpInterCount(children.head, children(1)))
-
-  val fpWeightedInterDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("fp_weighted_inter"),
-    new ExpressionInfo(classOf[FpWeightedInter].getName, "fp_weighted_inter"),
-    (children: Seq[Expression]) => FpWeightedInter(children.head, children(1)))
-
-  val cdcChunksDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("cdc_chunks"),
-    new ExpressionInfo(classOf[CdcChunks].getName, "cdc_chunks"),
-    (children: Seq[Expression]) => CdcChunks(children.head, children(1), children(2)))
-
-  val nearestCellDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("nearest_cell"),
-    new ExpressionInfo(classOf[NearestCell].getName, "nearest_cell"),
-    (children: Seq[Expression]) => NearestCell(children.head, children(1), children(2)))
-
-  val hammingWordsDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("hamming_words"),
-    new ExpressionInfo(classOf[HammingWords].getName, "hamming_words"),
-    (children: Seq[Expression]) => HammingWords(children.head, children(1)))
-
-  val winnowFpDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("winnow_fp"),
-    new ExpressionInfo(classOf[WinnowFp].getName, "winnow_fp"),
-    (children: Seq[Expression]) => WinnowFp(children.head, children(1), children(2)))
-
-  // Spark SHIPS native Bloom expressions (BloomFilterAggregate /
-  // BloomFilterMightContain — the runtime-filter machinery) but keeps
-  // them off the public registry; surface them so the delta-dedup
-  // Bloom prune is a codegen'd native probe instead of a ScalaUDF.
-  // The analyzer wraps a bare AggregateFunction builder result itself.
-  val bloomAggDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("bloom_filter_agg"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate].getName,
-      "bloom_filter_agg"),
-    (children: Seq[Expression]) =>
-      new org.apache.spark.sql.catalyst.expressions.aggregate.BloomFilterAggregate(
-        children(0), children(1), children(2)))
-
-  val bloomMightContainDescriptor: (FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression) = (
-    FunctionIdentifier("might_contain"),
-    new ExpressionInfo(
-      classOf[org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain].getName,
-      "might_contain"),
-    (children: Seq[Expression]) =>
-      org.apache.spark.sql.catalyst.expressions.BloomFilterMightContain(
-        children(0), children(1)))
-
-  /** Runtime registration on an existing session (the driver hands us
-    * sessions we didn't build). */
-  def register(spark: org.apache.spark.sql.SparkSession): Unit = {
-    val registry: FunctionRegistry = spark.sessionState.functionRegistry
-    Seq(hamming64Descriptor, vecDotDescriptor, wordShinglesDescriptor,
-        topkRowsDescriptor, hexPrefix16Descriptor, hexSliceLongDescriptor,
-        freqTopKDescriptor, charShinglesDescriptor, mergePairDescriptor,
-        tokenCountsDescriptor, bagOverlapDescriptor, fp32SetDescriptor,
-        fpInterCountDescriptor, fpWeightedInterDescriptor, cdcChunksDescriptor,
-        nearestCellDescriptor,
-        hammingWordsDescriptor, winnowFpDescriptor,
-        bloomAggDescriptor, bloomMightContainDescriptor,
-        hilbertIndexDescriptor).foreach { d =>
-      registry.registerFunction(d._1, d._2, d._3)
-    }
-    // optimizer rules can't be injected post-build through the
-    // extensions API — `experimental.extraOptimizations` is the
-    // supported runtime seam (idempotent: one instance per class)
-    if (!spark.experimental.extraOptimizations.exists(_.isInstanceOf[FuseFingerprintSets]))
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ new FuseFingerprintSets
-  }
+  /** Each SQL name with the expression it builds from its arguments;
+    * the aggregates are wrapped by the analyzer. */
+  val functions: Seq[(FunctionIdentifier, ExpressionInfo, Seq[Expression] => Expression)] = Seq(
+    fn("hamming64")(c => HammingDistance(c(0), c(1))),
+    fn("hilbert_index")(c => HilbertIndex(c(0), c(1), c(2))),
+    fn("vec_dot")(c => VectorDot(c(0), c(1))),
+    fn("word_shingles")(c => WordShingles(c(0), c(1))),
+    fn("topk_rows")(c => TopKRows(c(0), c(1))),
+    fn("hex_prefix16")(c => HexPrefix16(c(0))),
+    fn("hex_slice_long")(c => HexSliceLong(c(0), c(1))),
+    fn("freq_topk")(c => FreqTopK(c(0), c(1))),
+    fn("char_shingles")(c => CharShingles(c(0), c(1))),
+    fn("merge_pair")(c => MergePair(c(0), c(1), c(2))),
+    fn("token_counts")(c => TokenCounts(c(0))),
+    fn("bag_overlap")(c => BagOverlap(c(0), c(1))),
+    fn("fp32_set")(c => FpSet(c(0))),
+    fn("fp_inter_count")(c => FpInterCount(c(0), c(1))),
+    fn("fp_weighted_inter")(c => FpWeightedInter(c(0), c(1))),
+    fn("cdc_chunks")(c => CdcChunks(c(0), c(1), c(2))),
+    fn("nearest_cell")(c => NearestCell(c(0), c(1), c(2))),
+    fn("hamming_words")(c => HammingWords(c(0), c(1))),
+    fn("winnow_fp")(c => WinnowFp(c(0), c(1), c(2))))
 }

@@ -5,12 +5,13 @@ import org.apache.spark.sql.catalyst.plans.logical.{Repartition, Sort}
 
 /** Package-private bridge into the classic Column ↔ Expression
   * conversions (`org.apache.spark.sql.classic.ExpressionUtils` is
-  * `private[sql]`): the standard Spark-extension idiom for
-  * expressions whose constructors carry non-Expression state — here
-  * the held dimension that [[graft.streaming.HeldDimension]]'s lookup
-  * expression reads — which the FunctionRegistry path cannot
-  * transport. Also the one place a
-  * graft frame is rebuilt from a rewritten logical plan
+  * `private[sql]`): the path every native graft expression takes into
+  * a Column — the `graft.functions` forms, Spark's Bloom expressions
+  * in `Dedup`, and [[graft.streaming.HeldDimension]]'s lookup, whose
+  * constructor carries a held dimension no SQL name could. A Column
+  * built here holds its expression class from the start, so it needs
+  * no function registry and works on any session. Also the one place
+  * a graft frame is rebuilt from a rewritten logical plan
   * (`classic.Dataset.ofRows` is `private[sql]` too). */
 object GraftColumnBridge {
   def column(e: Expression): Column =

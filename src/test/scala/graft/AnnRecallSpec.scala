@@ -84,7 +84,6 @@ class AnnRecallSpec extends SparkSpec {
 
   test("binary codes: two 32-bit words, Hamming ≡ hand-popcount, recall@5 on clustered data") {
     import graft.functions.HammingWords.hamming_words
-    graft.plans.GraftExtensions.register(spark)
     val emb = clustered
     // code shape: ⌈64/32⌉ = 2 words, every word within unsigned-32 range
     val thr = Similarity.binaryThresholds(emb)

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.CdcChunks.cdc_chunks
-import graft.plans.GraftExtensions
 
 /** Native cdc_chunks (one-pass content-defined chunking): differential
   * against an independent reference implementation of the published
@@ -47,7 +46,6 @@ class CdcChunksSpec extends SparkSpec {
   }
 
   test("differential against the reference rule across windows/moduli, incl. multi-byte tokens") {
-    GraftExtensions.register(spark)
     val rnd = new scala.util.Random(31)
     val vocab = Vector("alpha", "beta", "Ａwide", "𝄞clef", "x", "longertokenvalue", "café")
     for ((window, modulus) <- Seq((1, 2), (2, 4), (4, 8), (4, 2))) {
@@ -69,7 +67,6 @@ class CdcChunksSpec extends SparkSpec {
   }
 
   test("null elements are skipped with their separators, as md5(array_join(...)) does") {
-    GraftExtensions.register(spark)
     val arrays = Seq(Seq("a", null, "b"), Seq(null, "a", "b"), Seq("a", "b", null),
       Seq("a", null, null, "b", "c"), Seq(null, null), Seq("x", null, "y", "z", null, "w"))
     val df = arrays.zipWithIndex.map { case (tk, i) => (i.toLong, tk) }.toDF("id", "tk")
@@ -100,7 +97,6 @@ class CdcChunksSpec extends SparkSpec {
   }
 
   test("chunk lengths sum to the token count; empty array yields no chunks") {
-    GraftExtensions.register(spark)
     val df = Seq((1L, Seq("a", "b", "c", "d", "e", "f", "g", "h")),
         (2L, Seq.empty[String]))
       .toDF("id", "tk")
@@ -112,7 +108,6 @@ class CdcChunksSpec extends SparkSpec {
   }
 
   test("cdc_chunks projects inside WholeStageCodegen") {
-    GraftExtensions.register(spark)
     // spark.range source: a local Seq would be constant-folded into a
     // LocalTableScan, leaving no runtime projection to codegen
     val df = spark.range(30)

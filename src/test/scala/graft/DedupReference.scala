@@ -23,7 +23,6 @@ object DedupReference {
   def charNgramPairs(docs: DataFrame, blockCols: Seq[String],
                      thresholdPermille: Int, k: Int = 5,
                      idCol: String = "doc_id"): DataFrame = {
-    graft.plans.GraftExtensions.register(docs.sparkSession)
     pairsOn(docs, array_distinct(char_shingles(col("text"), k)), blockCols,
       thresholdPermille, idCol)
   }

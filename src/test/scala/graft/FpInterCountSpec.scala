@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.FpSet.{fp32_set, fp_inter_count}
-import graft.plans.GraftExtensions
 
 /** Native fp_inter_count (two-pointer |A∩B| over sorted distinct
   * sets): differential against size(array_intersect) — the expression
@@ -13,7 +12,6 @@ class FpInterCountSpec extends SparkSpec {
   import spark.implicits._
 
   test("long sets: equals size(array_intersect) on fp32_set outputs, incl. empty/disjoint") {
-    GraftExtensions.register(spark)
     val rnd = new scala.util.Random(7)
     val rows = (0 until 200).map { i =>
       def words(n: Int) = Seq.fill(n)(s"w${rnd.nextInt(40)}")
@@ -30,7 +28,6 @@ class FpInterCountSpec extends SparkSpec {
   }
 
   test("string sets: equals size(array_intersect) on array_sort(array_distinct) inputs") {
-    GraftExtensions.register(spark)
     val rnd = new scala.util.Random(11)
     val rows = (0 until 200).map { i =>
       def words(n: Int) = Seq.fill(n)(s"tok${rnd.nextInt(25)}")
@@ -47,7 +44,6 @@ class FpInterCountSpec extends SparkSpec {
   }
 
   test("non-BMP strings order consistently between array_sort and the merge comparator") {
-    GraftExtensions.register(spark)
     // U+1D11E (surrogate pair) vs U+FF21: UTF-8 byte order differs from
     // UTF-16 code-unit order — both sides must use UTF8 binary order
     val hi = "𝄞"
@@ -59,7 +55,6 @@ class FpInterCountSpec extends SparkSpec {
   }
 
   test("hardening: null elements (sorted last) and duplicate runs match size(array_intersect)") {
-    GraftExtensions.register(spark)
     // ill-formed inputs reachable through the public jaccardVerifySets
     // boundary: nulls (array_sort puts them LAST) and duplicate runs —
     // previously an NPE / an over-count, now array_intersect semantics
@@ -97,7 +92,6 @@ class FpInterCountSpec extends SparkSpec {
   }
 
   test("fp_weighted_inter: equals the explicit Σ w over A∩B; inclusion-exclusion union holds") {
-    GraftExtensions.register(spark)
     import graft.functions.FpSet.fp_weighted_inter
     val rnd = new scala.util.Random(23)
     // a global weight per token (w functionally dependent on t — the
@@ -129,7 +123,6 @@ class FpInterCountSpec extends SparkSpec {
   }
 
   test("fp32_set / fp_inter_count / fp_weighted_inter project inside WholeStageCodegen") {
-    GraftExtensions.register(spark)
     import graft.functions.FpSet.fp_weighted_inter
     // spark.range source (a local Seq would constant-fold into a
     // LocalTableScan) and struct arrays built WITHOUT transform — a

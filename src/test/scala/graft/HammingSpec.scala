@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.HammingDistance.hamming64
-import graft.plans.GraftExtensions
 
 /** Native hamming64 expression: eval + codegen paths, SQL registration,
   * and codegen participation. */
@@ -11,7 +10,6 @@ class HammingSpec extends SparkSpec {
   import spark.implicits._
 
   test("hamming64 computes popcount(xor) via Column API and SQL") {
-    GraftExtensions.register(spark)
     val df = Seq((0L, 0L), (1L, 0L), (0xffffL, 0L), (-1L, 0L), (0b1010L, 0b0101L))
       .toDF("a", "b")
     val got = df.select(hamming64(col("a"), col("b"))).as[Long].collect()
@@ -23,13 +21,11 @@ class HammingSpec extends SparkSpec {
   }
 
   test("hamming64 is null-safe") {
-    GraftExtensions.register(spark)
     val df = Seq((Some(1L), None: Option[Long])).toDF("a", "b")
     assert(df.select(hamming64(col("a"), col("b"))).collect().head.isNullAt(0))
   }
 
   test("hamming64 participates in whole-stage codegen") {
-    GraftExtensions.register(spark)
     val df = spark.range(10).select(hamming64(col("id"), lit(3L)).as("h"))
     val plan = df.queryExecution.executedPlan.toString
     // the "*(n)" prefix marks operators fused into a WholeStageCodegen stage
@@ -38,7 +34,6 @@ class HammingSpec extends SparkSpec {
   }
 
   test("rejects non-long inputs at analysis") {
-    GraftExtensions.register(spark)
     val err = intercept[Exception] {
       Seq(("x", 1L)).toDF("a", "b").select(hamming64(col("a"), col("b"))).collect()
     }

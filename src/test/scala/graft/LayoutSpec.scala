@@ -66,7 +66,6 @@ class LayoutSpec extends SparkSpec {
       d
     }
     import graft.functions.HilbertIndex.hilbert_index
-    graft.plans.GraftExtensions.register(spark)
     val n = 16 // full 16×16 grid at bits=4
     val grid = (0 until n).flatMap(a => (0 until n).map(b => (a.toLong, b.toLong)))
       .toDF("a", "b")

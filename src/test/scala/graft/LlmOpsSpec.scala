@@ -40,7 +40,6 @@ class LlmOpsSpec extends SparkSpec {
 
   test("hex_slice_long matches the hex prefix semantics") {
     import graft.functions.HexSliceLong.hex_slice_long
-    graft.plans.GraftExtensions.register(spark)
     val r = Seq("00000001ffffffffcafebabe00000000").toDF("h")
       .select(hex_slice_long(col("h"), 0).as("a"), hex_slice_long(col("h"), 8).as("b"),
         hex_slice_long(col("h"), 16).as("c"))
@@ -52,7 +51,6 @@ class LlmOpsSpec extends SparkSpec {
 
   test("hex_slice_long equals Long.parseLong of the hex slice (randomized)") {
     import graft.functions.HexSliceLong.hex_slice_long
-    graft.plans.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(42)
     val hexes = Seq.fill(200)(
       Seq.fill(32)("0123456789abcdef"(rnd.nextInt(16))).mkString)
@@ -95,7 +93,6 @@ class LlmOpsSpec extends SparkSpec {
 
   test("hex_slice_long is null-safe out of range and tolerates uppercase hex") {
     import graft.functions.HexSliceLong.hex_slice_long
-    graft.plans.GraftExtensions.register(spark)
     val r = Seq(("abc", "CAFEBABE")).toDF("short", "up")
       .select(hex_slice_long(col("short"), 0).as("a"),
         hex_slice_long(col("up"), -1).as("b"),

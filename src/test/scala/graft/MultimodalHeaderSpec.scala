@@ -620,7 +620,6 @@ class MultimodalHeaderSpec extends SparkSpec {
 
   test("imageAHash: brightness-shift invariant; banded pairs ≡ brute force (pigeonhole)") {
     import graft.functions.HammingDistance.hamming64
-    graft.plans.GraftExtensions.register(spark)
     // shift invariance: +40 on every pixel (id%5 bumps the base only)
     // with identical structure must hash identically — ids 0 and 210
     // share id%7 and id%2 but differ in id%5 (pure brightness)
@@ -929,7 +928,7 @@ class MultimodalHeaderSpec extends SparkSpec {
     }
     // the stats walk accepts only format 6/7 at 8 bits
     import graft.sources.Tables
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(20)
+    val docs = Tables.documents(spark, sf).limit(20)
     val got = Multimodal.g711Stats(Multimodal.syntheticG711Audio(docs)).collect()
     assert(got.length === 20)
     got.foreach { r =>
@@ -950,7 +949,7 @@ class MultimodalHeaderSpec extends SparkSpec {
     "report unverified, unknown magics drop") {
     // one of each class through the mixed fixture
     import graft.sources.Tables
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(16)
+    val docs = Tables.documents(spark, sf).limit(16)
     val got = Multimodal.routeInventory(Multimodal.syntheticMixedBlobs(docs))
       .collect().map(r => r.getLong(0) -> ((r.getString(1), r.getLong(2), r.getLong(3)))).toMap
     assert(got.size === 16)
@@ -1092,7 +1091,7 @@ class MultimodalHeaderSpec extends SparkSpec {
     assert(r.getLong(4) === (1L + 1L + 8388607L * 8388607L + 8388608L * 8388608L) / 4)
     // corpus fixtures decode with the expected count
     import graft.sources.Tables
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(10)
+    val docs = Tables.documents(spark, sf).limit(10)
     val got = Multimodal.pcm24Stats(Multimodal.syntheticPcm24Audio(docs)).collect()
     assert(got.length === 10)
     got.foreach(row => assert(row.getLong(1) === 40 + row.getLong(0) % 40))
@@ -1135,7 +1134,7 @@ class MultimodalHeaderSpec extends SparkSpec {
     assert(r2.getLong(3) === 32767L) // first block saturated the clamp
     // corpus fixtures decode with the expected shape
     import graft.sources.Tables
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(20)
+    val docs = Tables.documents(spark, sf).limit(20)
     val got = Multimodal.adpcmStats(Multimodal.syntheticAdpcmAudio(docs)).collect()
     assert(got.length === 20)
     got.foreach { r =>
@@ -1196,7 +1195,7 @@ class MultimodalHeaderSpec extends SparkSpec {
     assert(Multimodal.exifMeta(Array.emptyByteArray).isEmpty)
     // corpus fixtures round-trip the analytic values
     import graft.sources.Tables
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(24)
+    val docs = Tables.documents(spark, sf).limit(24)
     val got = Multimodal.exifMetadata(Multimodal.syntheticExifJpegBlobs(docs))
       .orderBy(col("doc_id")).collect()
     assert(got.length === 24)
@@ -2186,7 +2185,7 @@ class MultimodalHeaderSpec extends SparkSpec {
 
   test("distributed round-trip: syntheticJpegBlobs → decodeJpeg recovers every doc") {
     import graft.sources.Tables
-    val docs = Tables.documents(spark, "/root/testdata/sf0.001").limit(120)
+    val docs = Tables.documents(spark, sf).limit(120)
     val got = Multimodal.decodeJpeg(Multimodal.syntheticJpegBlobs(docs))
       .collect().map(r => r.getLong(0) -> r).toMap
     val n = docs.count()

@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.NearestCell.nearest_cell
-import graft.plans.GraftExtensions
 
 /** Native nearest_cell (narrow k-means assignment): differential
   * against the crossJoin + min(struct(s, cell)) form it replaced —
@@ -17,7 +16,6 @@ class NearestCellSpec extends SparkSpec {
         array(cv.map(lit): _*).as("cv")) }: _*)
 
   test("argmin and tie-break match the crossJoin + struct-min reference") {
-    GraftExtensions.register(spark)
     val rnd = new scala.util.Random(13)
     val dims = 6
     val cents = (0L until 5L).map(c => (0L, c, Seq.fill(dims)(rnd.nextInt(2001).toLong - 1000)))
@@ -42,7 +40,6 @@ class NearestCellSpec extends SparkSpec {
   }
 
   test("per-subspace dispatch and null on a sub with no candidates") {
-    GraftExtensions.register(spark)
     val cents = Seq((0L, 0L, Seq(0L, 0L)), (0L, 1L, Seq(10L, 10L)),
       (1L, 0L, Seq(100L, 100L)))
     val df = Seq((1L, 0L, Seq(9L, 9L)), (1L, 1L, Seq(1L, 1L)), (1L, 2L, Seq(1L, 1L)))
@@ -56,7 +53,6 @@ class NearestCellSpec extends SparkSpec {
   }
 
   test("nearest_cell runs inside WholeStageCodegen (no fallback span break)") {
-    GraftExtensions.register(spark)
     val cents = Seq((0L, 0L, Seq(1L, 1L)), (0L, 1L, Seq(5L, 5L)))
     // spark.range source: a local Seq would be constant-folded into a
     // LocalTableScan, leaving no runtime projection to codegen

@@ -12,44 +12,6 @@ import graft.sources.Tables
   */
 class PlanShapeSpec extends SparkSpec {
 
-  test("FuseFingerprintSets: composable chain rewrites to fp32_set; nullable arrays keep literal semantics") {
-    import graft.functions.HexSliceLong.hex_slice_long
-    import graft.functions.FpSet.fp32_set
-    import spark.implicits._
-    graft.plans.GraftExtensions.register(spark) // also attaches the rule
-    // parquet-backed input: a local Seq would fold into a
-    // LocalRelation before the optimized plan can be inspected
-    val docs = Tables.documents(spark, sf).limit(20)
-      .withColumn("tset", split(col("text"), " "))
-    val composed = docs.select(sort_array(array_distinct(
-      transform(col("tset"), x => hex_slice_long(md5(x.cast("binary")), 0)))).as("hs"))
-    // the optimizer must swap in the fused native expression…
-    val optimized = composed.queryExecution.optimizedPlan
-    def hasFpSet(pl: org.apache.spark.sql.catalyst.plans.logical.LogicalPlan) =
-      pl.exists(_.expressions.exists(_.exists(_.isInstanceOf[graft.functions.FpSet])))
-    assert(hasFpSet(optimized), optimized.toString.take(800))
-    // …with identical results to both the direct call and the
-    // UNFUSED chain (evaluated via a plan the rule cannot touch:
-    // no sort_array wrapper, sorted afterwards in Scala)
-    val fused = composed.as[Seq[Long]].collect()
-    val direct = docs.select(fp32_set(col("tset")).as("hs")).as[Seq[Long]].collect()
-    assert(fused.toSeq === direct.toSeq)
-    val unfused = docs.select(array_distinct(
-        transform(col("tset"), x => hex_slice_long(md5(x.cast("binary")), 0))).as("h"))
-      .as[Seq[Long]].collect().map(_.sorted)
-    assert(fused.toSeq === unfused.toSeq)
-    // nullable element type → FpSet would skip nulls, the composed
-    // chain carries them: the rule must NOT fire
-    val nullable = spark.range(1)
-      .select(array(lit("a"), lit(null).cast("string")).as("tset"))
-      .select(sort_array(array_distinct(
-        transform(col("tset"), x => hex_slice_long(md5(x.cast("binary")), 0)))).as("hs"))
-    assert(!hasFpSet(nullable.queryExecution.optimizedPlan))
-    // null sorts first, survives distinct — literal semantics intact
-    val row = nullable.collect().head.getSeq[Any](0)
-    assert(row.length === 2 && row.head == null)
-  }
-
   test("saltedAggregate plans two hash aggregation stages, no sort aggregate") {
     val li = Tables.lineitem(spark, sf)
       .withColumn("qty_cents", round(col("l_quantity") * 100).cast("long"))
@@ -63,7 +25,6 @@ class PlanShapeSpec extends SparkSpec {
   test("skipAudit: one data scan feeds all layouts; manifest/probe joins broadcast") {
     import spark.implicits._
     import graft.functions.HilbertIndex.hilbert_index
-    graft.plans.GraftExtensions.register(spark)
     val li = Tables.lineitem(spark, sf).select("l_partkey", "l_suppkey")
     val probes = Seq(("w1", "l_partkey", 0L, 10L), ("w2", "l_suppkey", 0L, 10L))
       .toDF("workload", "on_col", "lo", "hi")
@@ -279,6 +240,11 @@ class PlanShapeSpec extends SparkSpec {
       val e = intercept[IllegalStateException](
         guard(a.crossJoin(b).queryExecution.analyzed))
       assert(e.getMessage.contains("condition-free"))
+      // the session's own guard (Session.local installs it) sees the
+      // optimized plan: a using-join passes, an unkeyed join does not
+      a.join(b, Seq("id")).queryExecution.optimizedPlan
+      val s = intercept[IllegalStateException](a.join(b).queryExecution.optimizedPlan)
+      assert(s.getMessage.contains("condition-free"))
     } finally spark.conf.unset(graft.plans.CartesianGuard.Flag)
   }
 

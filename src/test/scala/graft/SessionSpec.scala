@@ -13,4 +13,8 @@ class SessionSpec extends SparkSpec {
     assert(conf.get("spark.sql.legacy.parquet.nanosAsLong") === "true")
     assert(spark.sparkContext.uiWebUrl.isEmpty)
   }
+
+  test("Session.local carries graft's SQL function names") {
+    assert(spark.sql("SELECT hamming64(1L, 2L)").head().getLong(0) === 2L)
+  }
 }

@@ -33,7 +33,6 @@ class SketchBoundsSpec extends SparkSpec {
     import spark.implicits._
     import graft.functions.FreqTopK.freq_topk
     import org.apache.spark.sql.functions._
-    graft.plans.GraftExtensions.register(spark)
     // Zipf-ish stream with 200 distinct items, k=16 ≪ 200
     val rnd = new scala.util.Random(7)
     val items = Seq.fill(20000)(s"t${math.min(199, math.abs(rnd.nextGaussian() * 40).toInt)}")
@@ -82,7 +81,6 @@ class SketchBoundsSpec extends SparkSpec {
   test("freq_topk Misra–Gries bounds hold over sf0.1 testdata with k ≪ distinct") {
     import graft.functions.FreqTopK.freq_topk
     import graft.operators.Dedup
-    graft.plans.GraftExtensions.register(spark)
     // The synthetic corpus vocabulary is uniform (31 tokens, no natural
     // Zipf), so impose a deterministic power-law skew over the REAL
     // token stream: tokens starting with 's' weigh 64×. ~2.5M-row
@@ -120,7 +118,6 @@ class SketchBoundsSpec extends SparkSpec {
     import graft.functions.FreqTopK.freq_topk
     import spark.implicits._
     implicit val sqlCtx: org.apache.spark.sql.SQLContext = spark.sqlContext
-    graft.plans.GraftExtensions.register(spark)
     val mem = MemoryStream[String]
     val q = mem.toDF().toDF("t")
       .agg(freq_topk(col("t"), 4).as("hh"))
@@ -468,7 +465,6 @@ class SketchBoundsSpec extends SparkSpec {
   test("kmvOverlap estimates track the exact pairwise set sizes (k=64)") {
     import graft.operators.Corpus
     import graft.functions.WordShingles.word_shingles
-    graft.plans.GraftExtensions.register(spark)
     val docs = Tables.documents(spark, dir)
     val est = Corpus.sourceOverlap(docs, k = 64)
       .collect().map(r => (r.getAs[String]("source_a"), r.getAs[String]("source_b")) ->

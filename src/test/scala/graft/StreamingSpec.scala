@@ -284,7 +284,6 @@ class StreamingSpec extends SparkSpec {
     // windowed aggregation: partials per micro-batch, MG-merged across
     // batches by the state store — same code path as batch
     import graft.functions.FreqTopK.freq_topk
-    graft.plans.GraftExtensions.register(spark)
     val mem = MemoryStream[(Timestamp, String)]
     val out = mem.toDF().toDF("ts", "page")
       .withWatermark("ts", "10 minutes")

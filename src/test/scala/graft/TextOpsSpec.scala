@@ -68,7 +68,6 @@ class TextOpsSpec extends SparkSpec {
 
   test("char_shingles: code-point counted, short text → empty") {
     import graft.functions.CharShingles.char_shingles
-    graft.plans.GraftExtensions.register(spark)
     val got = Seq(("abcd", 1L), ("ab", 2L), ("héllo", 3L)).toDF("t", "id")
       .select(col("id"), char_shingles(col("t"), 3).as("g"))
       .as[(Long, Seq[String])].collect().toMap
@@ -78,7 +77,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("char_shingles rejects non-positive and null k at analysis time") {
-    graft.plans.GraftExtensions.register(spark)
     val df = Seq("abc").toDF("t")
     for (bad <- Seq("0", "-1", "CAST(NULL AS INT)")) {
       val e = intercept[org.apache.spark.sql.AnalysisException](
@@ -196,7 +194,6 @@ class TextOpsSpec extends SparkSpec {
 
   test("merge_pair ≡ the aggregate-lambda SQL form (hand cases + randomized)") {
     import graft.functions.MergePair.merge_pair
-    graft.plans.GraftExtensions.register(spark)
     def sqlForm(l: String, r: String): String = {
       def q(s: String) = "'" + s.replace("'", "''") + "'"
       s"aggregate(syms, CAST(array() AS array<string>), (acc, s) -> " +
@@ -235,7 +232,6 @@ class TextOpsSpec extends SparkSpec {
   }
 
   test("merge_pair: null array elements pass through unmatched, no NPE") {
-    graft.plans.GraftExtensions.register(spark)
     // SQL callers can hand array('a', NULL, ...): a null element must
     // behave like an unrelated symbol (break any straddle, survive in
     // place), not crash the executor scan loop

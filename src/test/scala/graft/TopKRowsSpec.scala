@@ -3,7 +3,6 @@ package graft
 import org.apache.spark.sql.functions._
 
 import graft.functions.TopKRows.topk_rows
-import graft.plans.GraftExtensions
 
 /** Custom bounded top-k aggregate: semantics, serialization across
   * partial merges, and the bounded-shuffle plan property.
@@ -12,7 +11,6 @@ class TopKRowsSpec extends SparkSpec {
   import spark.implicits._
 
   test("topk_rows keeps the k smallest structs in order") {
-    GraftExtensions.register(spark)
     val df = Seq((1, 30, "c"), (1, 10, "a"), (1, 20, "b"), (1, 40, "d"), (2, 5, "e"))
       .toDF("g", "ord", "payload")
     val got = df.groupBy(col("g"))
@@ -24,7 +22,6 @@ class TopKRowsSpec extends SparkSpec {
   }
 
   test("topk_rows survives partial aggregation across many partitions") {
-    GraftExtensions.register(spark)
     // 1000 rows over 16 partitions forces serialize/merge of partials
     val df = spark.range(1000).select(
       (col("id") % 7).as("g"), (lit(1000) - col("id")).as("ord"))
@@ -43,7 +40,6 @@ class TopKRowsSpec extends SparkSpec {
   }
 
   test("topk_rows agrees with the window row_number form on real data") {
-    GraftExtensions.register(spark)
     val viaAgg = SparkEntry.queries("rel_topn_agg")(spark, sf).collect().toSeq
     val o = graft.sources.Tables.orders(spark, sf)
     val w = org.apache.spark.sql.expressions.Window
@@ -55,7 +51,6 @@ class TopKRowsSpec extends SparkSpec {
   }
 
   test("topk_rows works as a stateful streaming aggregate") {
-    GraftExtensions.register(spark)
     implicit val ctx: org.apache.spark.sql.SQLContext = spark.sqlContext
     val mem = org.apache.spark.sql.execution.streaming.runtime.MemoryStream[(Long, Long)]
     val agg = mem.toDF().toDF("g", "ord")
@@ -75,7 +70,6 @@ class TopKRowsSpec extends SparkSpec {
   }
 
   test("hex_prefix16 matches the hex-digit decomposition") {
-    GraftExtensions.register(spark)
     val got = spark.sql(
       "SELECT hex_prefix16('beef1234'), hex_prefix16(md5('x'))").head()
     assert(got.getInt(0) === 0xbeef)
@@ -84,7 +78,6 @@ class TopKRowsSpec extends SparkSpec {
   }
 
   test("partial aggregation appears below the shuffle in the plan") {
-    GraftExtensions.register(spark)
     val df = graft.sources.Tables.orders(spark, sf)
       .groupBy(col("o_custkey"))
       .agg(topk_rows(struct(col("o_orderdate"), col("o_orderkey")), 3).as("top"))

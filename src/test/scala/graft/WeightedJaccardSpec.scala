@@ -17,7 +17,6 @@ class WeightedJaccardSpec extends SparkSpec {
   import spark.implicits._
 
   test("token_counts: sorted run-length bags; null elements skipped") {
-    graft.plans.GraftExtensions.register(spark)
     val df = Seq(Tuple1(Seq("b", "a", "b", null, "c", "b"))).toDF("tk")
       .select(token_counts(col("tk")).as("bag"))
     val bag = df.selectExpr("inline(bag)").as[(String, Long)].collect().toSeq
@@ -26,7 +25,6 @@ class WeightedJaccardSpec extends SparkSpec {
   }
 
   test("bag_overlap ≡ map-based Σmin on random bags") {
-    graft.plans.GraftExtensions.register(spark)
     val rnd = new scala.util.Random(77)
     val vocab = Array.tabulate(12)(i => s"t$i")
     val rows = (0 until 50).map { i =>

@@ -17,7 +17,6 @@ class WinnowSpec extends SparkSpec {
   private val W = 4
 
   private def winnowOf(texts: Seq[String]): Map[Long, Seq[Long]] = {
-    graft.plans.GraftExtensions.register(spark)
     import graft.functions.WinnowFp.winnow_fp
     texts.zipWithIndex.map { case (t, i) => (i.toLong, t) }
       .toDF("doc_id", "text")
@@ -56,7 +55,6 @@ class WinnowSpec extends SparkSpec {
   }
 
   test("native winnow_fp equals the composed slice-window-minima form on random strings") {
-    graft.plans.GraftExtensions.register(spark)
     import graft.functions.WinnowFp.winnow_fp
     val rnd = new scala.util.Random(13)
     // lengths straddle every edge: < k (empty), k..k+w-2 (one short
