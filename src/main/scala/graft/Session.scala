@@ -26,21 +26,25 @@ object Session {
       .foreach { case (k, v) => if (!submitted.contains(k)) builder.config(k, v) }
     val spark = builder.getOrCreate()
     spark.sparkContext.setLogLevel(logLevel)
-    silenceKBoundedWindowWarnings()
+    silenceBenignWarnings()
     spark
   }
 
-  /** Every unpartitioned window in the query surface is k-bounded
-    * (ivfTrain/pqTrain seed rows, the top-100 vocabulary rank — each
-    * commented at its site); WindowExec still WARNs "No Partition
-    * Defined" once per execution, ~176 lines per full run, burying
-    * real warnings. Silence exactly that logger — category log levels
-    * stay untouched, so a genuinely unpartitioned window over data
-    * still surfaces through plan lints (`PlanAuditSpec`), which ban it
-    * where it matters. */
-  private def silenceKBoundedWindowWarnings(): Unit =
+  /** Two WARNs that fire on purpose would bury real warnings, so
+    * exactly their loggers are set to ERROR; category log levels stay
+    * untouched.
+    *  - WindowExec's "No Partition Defined", ~176 lines per full run:
+    *    every unpartitioned window in the query surface is k-bounded
+    *    (ivfTrain/pqTrain seed rows, the top-100 vocabulary rank — each
+    *    commented at its site), and a genuinely unpartitioned window over
+    *    data still surfaces through plan lints (`PlanAuditSpec`).
+    *  - MapPartitionsRDD's "locally checkpointed … cannot be recomputed
+    *    after unpersisting", ~65 lines per Verify run: iterative
+    *    operators release their `localCheckpoint`ed rounds on purpose. */
+  private def silenceBenignWarnings(): Unit =
     for (cls <- Seq("org.apache.spark.sql.execution.window.WindowExec",
-                    "org.apache.spark.sql.execution.window.WindowExecBase"))
+                    "org.apache.spark.sql.execution.window.WindowExecBase",
+                    "org.apache.spark.rdd.MapPartitionsRDD"))
       org.apache.logging.log4j.core.config.Configurator.setLevel(
         cls, org.apache.logging.log4j.Level.ERROR)
 }

@@ -1,6 +1,6 @@
 package graft.operators
 
-import org.apache.spark.sql.{DataFrame, Row}
+import org.apache.spark.sql.{DataFrame, Encoders, Row}
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.types._
 
@@ -13,12 +13,18 @@ import org.apache.spark.sql.types._
   * little-endian rows, no codec needed) and sample decode for PCM16
   * WAV ([[pcm16Frames]]); formats no decoder here covers fall back to
   * deterministic stub dims (`ImageIO.read` / ffmpeg / soundfile would
-  * slot in there). The Spark-side
-  * contract is real throughout: binary columns, explicit output
-  * schema, `mapPartitions` batch shape (the Scala analog of
-  * `mapInPandas`), lazy per-partition iteration so a 100 TB blob
-  * column streams through executors without materializing a partition
-  * in memory.
+  * slot in there).
+  *
+  * The blob contract, shared by every operator and fixture here:
+  *  - an operator reads a frame's `(doc_id, blob)` columns;
+  *  - a null blob counts as an empty payload;
+  *  - its output is a non-null `doc_id` plus the operator's own fields,
+  *    zero or more rows per blob (payloads a parser refuses drop);
+  *  - each `synthetic*` fixture is built through [[blobFrame]] as
+  *    `(doc_id BIGINT NOT NULL, blob BINARY NOT NULL)`.
+  * Both sides are `mapPartitions` batches (the Scala analog of
+  * `mapInPandas`) iterated lazily, so a 100 TB blob column streams
+  * through executors without materializing a partition in memory.
   */
 object Multimodal {
 
@@ -30,6 +36,26 @@ object Multimodal {
       col(payloadCol).cast("binary").as("blob"),
       octet_length(col(payloadCol)).cast("long").as("n_bytes"),
       md5(col(payloadCol).cast("binary")).as("digest"))
+
+  /** One fixture row per `docs` row: its `doc_id` and `bytes(doc_id)`. */
+  private def blobFrame(docs: DataFrame)(bytes: Long => Array[Byte]): DataFrame =
+    docs.select(col("doc_id")).mapPartitions(_.map { r =>
+      val id = r.getLong(0)
+      Row(id, bytes(id))
+    })(Encoders.row(StructType(Seq(
+      StructField("doc_id", LongType, nullable = false),
+      StructField("blob", BinaryType, nullable = false)))))
+
+  /** Run `parse` over each blob's payload (a null blob as an empty
+    * one); every tuple it yields, in `fields` order, becomes one output
+    * row behind the blob's `doc_id`. */
+  private def perBlob(blobs: DataFrame, fields: Seq[StructField])(
+      parse: Array[Byte] => IterableOnce[Product]): DataFrame =
+    blobs.select(col("doc_id"), col("blob")).mapPartitions(_.flatMap { r =>
+      val id = r.getLong(0)
+      val bytes = Option(r.getAs[Array[Byte]](1)).getOrElse(Array.emptyByteArray)
+      parse(bytes).iterator.map(t => Row.fromSeq(id +: t.productIterator.toSeq))
+    })(Encoders.row(StructType(StructField("doc_id", LongType, nullable = false) +: fields)))
 
   // ---------------------------------------------------------------
   // Real (pure-JVM) header decode: BMP and WAV headers are fixed-
@@ -58,16 +84,6 @@ object Multimodal {
       ((b(off + 2) & 0xff) << 16) | ((b(off + 3) & 0xff) << 24)
   private def tag(b: Array[Byte], off: Int): String =
     new String(b, off, 4, java.nio.charset.StandardCharsets.US_ASCII)
-
-  val headerSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("format", StringType, nullable = false),
-    StructField("width", IntegerType, nullable = true),
-    StructField("height", IntegerType, nullable = true),
-    StructField("channels", IntegerType, nullable = true),
-    StructField("sample_rate", IntegerType, nullable = true),
-    StructField("bits_per_sample", IntegerType, nullable = true),
-    StructField("n_bytes", LongType, nullable = false)))
 
   /** Parse a BMP (BITMAPINFOHEADER), PNG (signature + IHDR chunk),
     * JPEG (SOI + marker walk to SOF0/1/2) or WAV (RIFF/fmt chunk walk)
@@ -193,32 +209,21 @@ object Multimodal {
   private def stubH(bytes: Array[Byte]): Int =
     64 + (if (bytes.length > 1) (bytes(1) & 0x3f) else 0)
 
-  /** Decode blob headers at scale: constant-memory per-partition
-    * iteration over (doc_id, blob), REAL BMP/WAV header parse, stub
-    * fallback for unknown formats. */
-  def decodeHeaders(blobs: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(headerSchema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.map { r =>
-        // null blobs (normal for nullable parquet columns) take the
-        // unknown/stub path like any other undecodable payload
-        val bytes = Option(r.getAs[Array[Byte]](1)).getOrElse(Array.emptyByteArray)
-        val (fmt, w, h, ch, rate, bits) = parseHeader(bytes)
-        Row(r.getLong(0), fmt, w, h, ch, rate, bits, bytes.length.toLong)
-      }
-    }(enc)
-  }
-
-  val pixelDecodedSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("width", IntegerType, nullable = false),
-    StructField("height", IntegerType, nullable = false),
-    StructField("channels", IntegerType, nullable = false),
-    StructField("n_pixels", LongType, nullable = false),
-    StructField("sum_b", LongType, nullable = false),
-    StructField("sum_g", LongType, nullable = false),
-    StructField("sum_r", LongType, nullable = false),
-    StructField("sum_a", LongType, nullable = false)))
+  /** [[parseHeader]] at scale: one row per blob, REAL BMP/PNG/JPEG/WAV
+    * header parse, stub fallback for unknown formats (a null blob
+    * included). */
+  def decodeHeaders(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
+      StructField("format", StringType, nullable = false),
+      StructField("width", IntegerType, nullable = true),
+      StructField("height", IntegerType, nullable = true),
+      StructField("channels", IntegerType, nullable = true),
+      StructField("sample_rate", IntegerType, nullable = true),
+      StructField("bits_per_sample", IntegerType, nullable = true),
+      StructField("n_bytes", LongType, nullable = false))) { bytes =>
+      val (fmt, w, h, ch, rate, bits) = parseHeader(bytes)
+      Some((fmt, w, h, ch, rate, bits, bytes.length.toLong))
+    }
 
   /** REAL pixel decode for uncompressed 24/32-bit BMP (BI_RGB,
     * BITMAPINFOHEADER): pixel rows are fixed-stride little-endian
@@ -261,21 +266,20 @@ object Multimodal {
     Some((width, height, bpx, width.toLong * height, sb, sg, sr, sa))
   }
 
-  /** [[decodeBmpPixels]] at scale: constant-memory per-partition
-    * iteration; rows whose payload is not an uncompressed 24/32-bit
-    * BMP are dropped (decode what is decodable without a codec — the
-    * documented stub seam still carries compressed formats). */
-  def decodePixels(blobs: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(pixelDecodedSchema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        decodeBmpPixels(r.getAs[Array[Byte]](1)).map {
-          case (w, h, ch, np, sb, sg, sr, sa) =>
-            Row(r.getLong(0), w, h, ch, np, sb, sg, sr, sa)
-        }
-      }
-    }(enc)
-  }
+  /** [[decodeBmpPixels]] at scale: rows whose payload is not an
+    * uncompressed 24/32-bit BMP are dropped (decode what is decodable
+    * without a codec — the documented stub seam still carries
+    * compressed formats). */
+  def decodePixels(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
+      StructField("width", IntegerType, nullable = false),
+      StructField("height", IntegerType, nullable = false),
+      StructField("channels", IntegerType, nullable = false),
+      StructField("n_pixels", LongType, nullable = false),
+      StructField("sum_b", LongType, nullable = false),
+      StructField("sum_g", LongType, nullable = false),
+      StructField("sum_r", LongType, nullable = false),
+      StructField("sum_a", LongType, nullable = false)))(decodeBmpPixels)
 
   /** Nearest-neighbor resample of decoded BMP pixels onto the FIXED
     * `outW`×`outH` mesh — the preprocessing step every vision
@@ -291,15 +295,14 @@ object Multimodal {
     * grid plus a POSITIONAL checksum Σ (y·outW + x + 1)·(B + G·2⁸ +
     * R·2¹⁶) — a transposed, flipped, or channel-swapped grid cannot
     * collide, so the oracle's analytic replay proves every resized
-    * pixel was read from the right source coordinate. Narrow
-    * per-partition decode, zero shuffle; max term 2²⁴·outW·outH per
-    * pixel keeps the checksum far inside Long. Alpha is outside the
-    * resize digest (32 bpp sources resize their RGB planes). */
+    * pixel was read from the right source coordinate. Zero shuffle;
+    * max term 2²⁴·outW·outH per pixel keeps the checksum far inside
+    * Long. Alpha is outside the resize digest (32 bpp sources resize
+    * their RGB planes). */
   def imageResize(blobs: DataFrame, outW: Int = 16, outH: Int = 16): DataFrame = {
     require(outW >= 1 && outH >= 1 && outW.toLong * outH <= (1L << 16),
       s"resize mesh must be in [1, 65536] pixels, got ${outW}x$outH")
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+    perBlob(blobs, Seq(
       StructField("width", IntegerType, nullable = false),
       StructField("height", IntegerType, nullable = false),
       StructField("out_w", IntegerType, nullable = false),
@@ -307,23 +310,15 @@ object Multimodal {
       StructField("sum_r", LongType, nullable = false),
       StructField("sum_g", LongType, nullable = false),
       StructField("sum_b", LongType, nullable = false),
-      StructField("checksum", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        // codec dispatch: BMP stride walk or baseline-JPEG planes —
-        // the same NN index rule either way
-        val resized =
-          if (bytes != null && bytes.length >= 2
-              && (bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8)
-            jpegResizeNn(bytes, outW, outH)
-          else bmpResizeNn(bytes, outW, outH)
-        resized.map { case (w, h, sr, sg, sb, ck) =>
-          Row(r.getLong(0), w, h, outW, outH, sr, sg, sb, ck)
-        }
-      }
-    }(enc)
+      StructField("checksum", LongType, nullable = false))) { bytes =>
+      // codec dispatch: BMP stride walk or baseline-JPEG planes —
+      // the same NN index rule either way
+      val resized =
+        if (bytes.length >= 2 && (bytes(0) & 0xff) == 0xff && (bytes(1) & 0xff) == 0xd8)
+          jpegResizeNn(bytes, outW, outH)
+        else bmpResizeNn(bytes, outW, outH)
+      resized.map { case (w, h, sr, sg, sb, ck) => (w, h, outW, outH, sr, sg, sb, ck) }
+    }
   }
 
   /** [[imageResize]]'s JPEG kernel: [[decodeJpegCore]] planes sampled
@@ -411,8 +406,9 @@ object Multimodal {
     Some((width, height, sumR, sumG, sumB, ck))
   }
 
-  val pngPixelSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
+  /** Output fields shared by the RGBA-sum decoders: [[decodePng]],
+    * [[decodeGif]], [[decodeJpeg]] and [[decodeBmpRle]]. */
+  private val rgbaSumFields: Seq[StructField] = Seq(
     StructField("width", IntegerType, nullable = false),
     StructField("height", IntegerType, nullable = false),
     StructField("channels", IntegerType, nullable = false),
@@ -420,7 +416,7 @@ object Multimodal {
     StructField("sum_r", LongType, nullable = false),
     StructField("sum_g", LongType, nullable = false),
     StructField("sum_b", LongType, nullable = false),
-    StructField("sum_a", LongType, nullable = false)))
+    StructField("sum_a", LongType, nullable = false))
 
   /** REAL pixel decode for 8-bit-depth non-interlaced PNG (color types
     * 0 grey / 2 RGB / 6 RGBA): concatenates the IDAT chunks, inflates
@@ -574,20 +570,10 @@ object Multimodal {
     Some((width, height, outCh, width.toLong * height, sr, sg, sb, sa))
   }
 
-  /** [[decodePngPixels]] at scale: constant-memory per-partition
-    * iteration; payloads that are not 8-bit non-interlaced grey/RGB/
-    * RGBA PNGs are dropped (the stub seam keeps carrying those). */
-  def decodePng(blobs: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(pngPixelSchema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        decodePngPixels(r.getAs[Array[Byte]](1)).map {
-          case (w, h, ch, np, sr, sg, sb, sa) =>
-            Row(r.getLong(0), w, h, ch, np, sr, sg, sb, sa)
-        }
-      }
-    }(enc)
-  }
+  /** [[decodePngPixels]] at scale: payloads it refuses are dropped
+    * (the stub seam keeps carrying those). */
+  def decodePng(blobs: DataFrame): DataFrame =
+    perBlob(blobs, rgbaSumFields)(decodePngPixels)
 
   /** REAL pixel decode for GIF87a/89a with a global color table: walks
     * the logical-screen descriptor + image descriptor, concatenates
@@ -814,13 +800,12 @@ object Multimodal {
   }
 
   /** [[decodeGifFrames]] at scale: one output row per frame,
-    * constant-memory per-partition iteration, non-animated-decodable
-    * payloads dropped. The video-adjacent curation readout: frame
-    * count, per-frame geometry/delay (scene pacing), real pixel sums
-    * per frame (content drift across the animation). */
-  def gifFrames(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+    * non-animated-decodable payloads dropped. The video-adjacent
+    * curation readout: frame count, per-frame geometry/delay (scene
+    * pacing), real pixel sums per frame (content drift across the
+    * animation). */
+  def gifFrames(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("canvas_w", LongType, nullable = false),
       StructField("canvas_h", LongType, nullable = false),
       StructField("frame_idx", LongType, nullable = false),
@@ -832,20 +817,14 @@ object Multimodal {
       StructField("n_pixels", LongType, nullable = false),
       StructField("sum_r", LongType, nullable = false),
       StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        decodeGifFrames(r.getAs[Array[Byte]](1)).toSeq.flatMap {
-          case (cw, ch, frames) =>
-            frames.map { case (fi, x0, y0, w, h, d, np, sr, sg, sb) =>
-              Row(r.getLong(0), cw.toLong, ch.toLong, fi.toLong, x0.toLong,
-                y0.toLong, w.toLong, h.toLong, d.toLong, np, sr, sg, sb)
-            }
+      StructField("sum_b", LongType, nullable = false))) { bytes =>
+      decodeGifFrames(bytes).toSeq.flatMap { case (cw, ch, frames) =>
+        frames.map { case (fi, x0, y0, w, h, d, np, sr, sg, sb) =>
+          (cw.toLong, ch.toLong, fi.toLong, x0.toLong, y0.toLong, w.toLong, h.toLong,
+            d.toLong, np, sr, sg, sb)
         }
       }
-    }(enc)
-  }
+    }
 
   /** A COMPLETE animated GIF89a: NETSCAPE loop extension, then per
     * frame a Graphic Control Extension (delay (3 + (id+7f) mod 50) cs)
@@ -906,33 +885,16 @@ object Multimodal {
 
   /** Deterministic animated GIFs keyed on doc_id: canvas (2+id%9) ×
     * (2+id%6), 1 + id%4 frames. */
-  def syntheticAnimatedGifBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        Row(id, animatedGifBytes(id, (2 + id % 9).toInt, (2 + id % 6).toInt,
-          (1 + id % 4).toInt))
-      }
-    }(enc)
-  }
+  def syntheticAnimatedGifBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(animatedGifFixtureBytes)
 
-  /** [[decodeGifPixels]] at scale: constant-memory per-partition
-    * iteration, non-decodable payloads dropped (stub seam). */
-  def decodeGif(blobs: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(pngPixelSchema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        decodeGifPixels(r.getAs[Array[Byte]](1)).map {
-          case (w, h, ch, np, sr, sg, sb, sa) =>
-            Row(r.getLong(0), w, h, ch, np, sr, sg, sb, sa)
-        }
-      }
-    }(enc)
-  }
+  private def animatedGifFixtureBytes(id: Long): Array[Byte] =
+    animatedGifBytes(id, (2 + id % 9).toInt, (2 + id % 6).toInt, (1 + id % 4).toInt)
+
+  /** [[decodeGifPixels]] at scale, non-decodable payloads dropped
+    * (stub seam). */
+  def decodeGif(blobs: DataFrame): DataFrame =
+    perBlob(blobs, rgbaSumFields)(decodeGifPixels)
 
   /** GIF LZW bitstream for an index sequence: a spec-valid ROOT-ONLY
     * parse (LZW encoders may choose any parse — greedy is customary,
@@ -1013,18 +975,8 @@ object Multimodal {
 
   /** Deterministic complete GIFs keyed on doc_id — the fixture
     * generator for [[decodeGif]]. */
-  def syntheticGifBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        Row(id, gifBytes(id, (1 + id % 12).toInt, (1 + id % 8).toInt))
-      }
-    }(enc)
-  }
+  def syntheticGifBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(id => gifBytes(id, (1 + id % 12).toInt, (1 + id % 8).toInt))
 
   // ------------------------------------------------------------------
   // Baseline JPEG (ITU-T T.81 / JFIF): pure-JVM pixel decode — the
@@ -1046,7 +998,7 @@ object Multimodal {
   // ------------------------------------------------------------------
 
   /** Natural position of zigzag index k (T.81 Figure A.6). */
-  private val JpegZigzag: Array[Int] = Array(
+  private[graft] val JpegZigzag: Array[Int] = Array(
     0, 1, 8, 16, 9, 2, 3, 10, 17, 24, 32, 25, 18, 11, 4, 5,
     12, 19, 26, 33, 40, 48, 41, 34, 27, 20, 13, 6, 7, 14, 21, 28,
     35, 42, 49, 56, 57, 50, 43, 36, 29, 22, 15, 23, 30, 37, 44, 51,
@@ -1407,30 +1359,13 @@ object Multimodal {
   }
 
   /** Deterministic complete PROGRESSIVE JPEGs keyed on doc_id. */
-  def syntheticJpegProgressiveBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r => Row(r.getLong(0), jpegProgressiveBytes(r.getLong(0))) }
-    }(enc)
-  }
+  def syntheticJpegProgressiveBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(jpegProgressiveBytes)
 
   /** Deterministic complete baseline JPEGs keyed on doc_id — the
     * fixture generator for [[decodeJpeg]]. */
-  def syntheticJpegBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r => Row(r.getLong(0), jpegBaselineBytes(r.getLong(0))) }
-    }(enc)
-  }
-
-  /** Zigzag→natural position (test hook for building AC fixtures). */
-  private[graft] def jpegZigzagAt(k: Int): Int = JpegZigzag(k)
+  def syntheticJpegBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(jpegBaselineBytes)
 
   /** Decoded component planes plus the geometry needed to sample
     * them: planes are MCU-padded; visible pixel (x,y) of component c
@@ -1444,27 +1379,18 @@ object Multimodal {
     * each aHash grid cell (grid=8 → 8×8 pixels) is EXACTLY one JPEG
     * block, flat at 2·dc+128 — so the block means, the threshold and
     * every hash bit replay in closed form in the oracle. */
-  def syntheticJpegAHashBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        // NON-LINEAR dc field (a linear gradient thresholds the same
-        // way for every id, collapsing the hash space); everything
-        // depends on id only through id mod 121, so ids ≡ (mod 121)
-        // stay EXACT duplicates — the curation signal
-        def blk(c: Int, bx: Int, by: Int): Array[Int] = {
-          val a = new Array[Int](64)
-          a(0) = (((id * (1 + bx) + (id + 5) * by * by + 3L * bx * by) % 121) - 60).toInt
-          a
-        }
-        Row(id, jpegAssemble(64, 64, 0, blk))
-      }
-    }(enc)
-  }
+  def syntheticJpegAHashBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      // NON-LINEAR dc field (a linear gradient thresholds the same
+      // way for every id, collapsing the hash space); everything
+      // depends on id only through id mod 121, so ids ≡ (mod 121)
+      // stay EXACT duplicates — the curation signal
+      jpegAssemble(64, 64, 0, (_, bx, by) => {
+        val a = new Array[Int](64)
+        a(0) = (((id * (1 + bx) + (id + 5) * by * by + 3L * bx * by) % 121) - 60).toInt
+        a
+      })
+    }
 
   /** Full baseline-sequential JPEG decode to component planes
     * (untrusted bytes: every malformed shape refuses with None, same
@@ -2309,19 +2235,10 @@ object Multimodal {
       }
     }
 
-  /** [[decodeJpegPixels]] at scale: constant-memory per-partition
-    * iteration, non-decodable payloads dropped (stub seam). */
-  def decodeJpeg(blobs: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(pngPixelSchema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        decodeJpegPixels(r.getAs[Array[Byte]](1)).map {
-          case (w, h, ch, np, sr, sg, sb, sa) =>
-            Row(r.getLong(0), w, h, ch, np, sr, sg, sb, sa)
-        }
-      }
-    }(enc)
-  }
+  /** [[decodeJpegPixels]] at scale, non-decodable payloads dropped
+    * (stub seam). */
+  def decodeJpeg(blobs: DataFrame): DataFrame =
+    perBlob(blobs, rgbaSumFields)(decodeJpegPixels)
 
   /** One PNG chunk: [len BE][type][payload][CRC32(type||payload)] —
     * real CRCs, so fixtures are valid PNGs end to end. */
@@ -2448,19 +2365,11 @@ object Multimodal {
 
   /** Deterministic 16-bit PNGs keyed on doc_id (grey/RGB/RGBA by
     * id%3, dims arithmetic in doc_id). */
-  def syntheticPng16Blobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val colorType = Array(0, 2, 6)((id % 3).toInt)
-        Row(id, pngPixel16Bytes(id, (1 + id % 10).toInt, (1 + id % 7).toInt, colorType))
-      }
-    }(enc)
-  }
+  def syntheticPng16Blobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(png16FixtureBytes)
+
+  private def png16FixtureBytes(id: Long): Array[Byte] =
+    pngPixel16Bytes(id, (1 + id % 10).toInt, (1 + id % 7).toInt, Array(0, 2, 6)((id % 3).toInt))
 
   /** [[pngPixelBytes]]' pixels in ADAM7 INTERLACED encoding: the same
     * analytic (x, row) grid extracted into the seven pass sub-images,
@@ -2491,19 +2400,9 @@ object Multimodal {
 
   /** Deterministic ADAM7-interlaced PNGs — [[syntheticPngBlobs]]' dims,
     * color types and pixels exactly, in interlaced encoding. */
-  def syntheticInterlacedPngBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val colorType = Array(0, 2, 6)((id % 3).toInt)
-        Row(id, pngInterlacedPixelBytes(id, (1 + id % 13).toInt, (1 + id % 9).toInt, colorType))
-      }
-    }(enc)
-  }
+  def syntheticInterlacedPngBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(id => pngInterlacedPixelBytes(id, (1 + id % 13).toInt, (1 + id % 9).toInt,
+      Array(0, 2, 6)((id % 3).toInt)))
 
   /** A COMPLETE indexed (colorType 3) PNG: 16-entry palette with
     * analytic RGB — entry j = ((id+3j)%256, (id+5j)%256, (id+7j)%256)
@@ -2524,37 +2423,17 @@ object Multimodal {
 
   /** Deterministic complete indexed PNGs keyed on doc_id — the
     * fixture generator for the palette path of [[decodePng]]. */
-  def syntheticPalettePngBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        Row(id, pngPalettePixelBytes(id, (1 + id % 11).toInt, (1 + id % 7).toInt))
-      }
-    }(enc)
-  }
+  def syntheticPalettePngBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(id => pngPalettePixelBytes(id, (1 + id % 11).toInt, (1 + id % 7).toInt))
 
   /** Deterministic complete PNGs keyed on doc_id (color type cycling
     * grey/RGB/RGBA by id%3; dims arithmetic in doc_id) — the fixture
     * generator for [[decodePng]]'s oracle: the oracle re-enumerates the
     * (x, row) grid in SQL, so a hash-match proves the inflate +
     * unfilter reconstruction read every byte back correctly. */
-  def syntheticPngBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val colorType = Array(0, 2, 6)((id % 3).toInt)
-        Row(id, pngPixelBytes(id, (1 + id % 13).toInt, (1 + id % 9).toInt, colorType))
-      }
-    }(enc)
-  }
+  def syntheticPngBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(id =>
+      pngPixelBytes(id, (1 + id % 13).toInt, (1 + id % 9).toInt, Array(0, 2, 6)((id % 3).toInt)))
 
   /** Minimal valid BMP bytes (BITMAPINFOHEADER, no pixel payload —
     * header-only, which is exactly what [[parseHeader]] reads). */
@@ -2620,23 +2499,13 @@ object Multimodal {
     * All integers, so the DuckDB oracle replays the analytic fixture
     * pixels through the identical arithmetic. Dims must divide the
     * grid (rescale belongs to the codec seam); non-conforming or
-    * undecodable payloads are dropped. Narrow per-partition decode —
-    * zero shuffle. */
+    * undecodable payloads are dropped. Zero shuffle. */
   def imageAHash(blobs: DataFrame, grid: Int = 8): DataFrame = {
     require(grid >= 2 && grid * grid <= 64, s"grid² must fit 64 bits, got $grid")
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+    perBlob(blobs, Seq(
       StructField("width", IntegerType, nullable = false),
       StructField("height", IntegerType, nullable = false),
-      StructField("ahash", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        bmpAHash(r.getAs[Array[Byte]](1), grid).map {
-          case (w, h, hash) => Row(r.getLong(0), w, h, hash)
-        }
-      }
-    }(enc)
+      StructField("ahash", LongType, nullable = false)))(bmpAHash(_, grid))
   }
 
   /** Codec-dispatching gray block means: BMP through the stride walk,
@@ -2712,24 +2581,14 @@ object Multimodal {
     * monotone global brightness shift (aHash's threshold is only
     * mean-shift invariant), and sensitive to horizontal structure —
     * the standard second opinion a perceptual near-dup pipeline pairs
-    * with aHash. Same narrow per-partition decode, zero shuffle, all
-    * integers; hashes feed [[aHashPairs]] unchanged (any 64-bit
-    * column). */
+    * with aHash. Zero shuffle, all integers; hashes feed
+    * [[aHashPairs]] unchanged (any 64-bit column). */
   def imageDHash(blobs: DataFrame, grid: Int = 8): DataFrame = {
     require(grid >= 2 && grid * grid <= 64, s"grid² must fit 64 bits, got $grid")
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+    perBlob(blobs, Seq(
       StructField("width", IntegerType, nullable = false),
       StructField("height", IntegerType, nullable = false),
-      StructField("dhash", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        bmpDHash(r.getAs[Array[Byte]](1), grid).map {
-          case (w, h, hash) => Row(r.getLong(0), w, h, hash)
-        }
-      }
-    }(enc)
+      StructField("dhash", LongType, nullable = false)))(bmpDHash(_, grid))
   }
 
   private[graft] def bmpDHash(bytes: Array[Byte], grid: Int): Option[(Int, Int, Long)] =
@@ -2908,19 +2767,11 @@ object Multimodal {
     * congruent mod the class key render pixel-identical images
     * (hamming 0), same-(id%5) neighbors render near-dups, and the
     * (id%3-free) formula keeps the oracle replay small. */
-  def syntheticAHashBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val dim = if (id % 2 == 0) 16 else 24
-        Row(id, grayBmpBytes(id, dim, dim))
-      }
-    }(enc)
-  }
+  def syntheticAHashBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      val dim = if (id % 2 == 0) 16 else 24
+      grayBmpBytes(id, dim, dim)
+    }
 
   /** Fixture generator for [[imageDHash]]: like
     * [[syntheticAHashBlobs]] but the gradient STRUCTURE is
@@ -2931,19 +2782,11 @@ object Multimodal {
     * aHash separates them). Here id%4 × id%3 give 12 distinct
     * structure classes while id%5 stays a pure brightness shift the
     * dhash must ignore. */
-  def syntheticDHashBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val dim = if (id % 2 == 0) 16 else 24
-        Row(id, dhashGrayBmpBytes(id, dim, dim))
-      }
-    }(enc)
-  }
+  def syntheticDHashBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      val dim = if (id % 2 == 0) 16 else 24
+      dhashGrayBmpBytes(id, dim, dim)
+    }
 
   private[graft] def dhashGrayBmpBytes(id: Long, width: Int, height: Int): Array[Byte] = {
     val stride = ((width * 3 + 3) / 4) * 4
@@ -3015,23 +2858,10 @@ object Multimodal {
     * the same (x, row) grid in SQL and recomputes each channel sum, so
     * a hash-match proves the decoder read the right strides, offsets
     * and channel order back. */
-  def syntheticPixelBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val bytes =
-          if (id % 2 == 0)
-            bmpPixelBytes(id, (1 + id % 16).toInt, (1 + id % 8).toInt, 24)
-          else
-            bmpPixelBytes(id, (1 + id % 12).toInt, (1 + id % 6).toInt, 32)
-        Row(id, bytes)
-      }
-    }(enc)
-  }
+  def syntheticPixelBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(id =>
+      if (id % 2 == 0) bmpPixelBytes(id, (1 + id % 16).toInt, (1 + id % 8).toInt, 24)
+      else bmpPixelBytes(id, (1 + id % 12).toInt, (1 + id % 6).toInt, 32))
 
   /** Minimal valid PNG bytes: the 8-byte signature + a complete IHDR
     * chunk (13-byte payload, zeroed CRC — [[parseHeader]] reads
@@ -3194,54 +3024,37 @@ object Multimodal {
     * sample sum / energy (Σs² div n) on the decoded linear values —
     * the telephony twin of the PCM16 family. Non-G.711 payloads drop
     * (the codec seam). */
-  def g711Stats(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  def g711Stats(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("fmt", StringType, nullable = false),
       StructField("n_samples", LongType, nullable = false),
       StructField("peak", LongType, nullable = false),
       StructField("sum_samples", LongType, nullable = false),
-      StructField("energy", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        locateG711Data(if (bytes == null) Array.emptyByteArray else bytes).map {
-          case (off, n, code) =>
-            var peak = 0L; var sum = 0L; var en = 0L
-            var i = 0
-            while (i < n) {
-              val s = if (code == 7) mulawExpand(bytes(off + i) & 0xff)
-                      else alawExpand(bytes(off + i) & 0xff)
-              peak = math.max(peak, math.abs(s))
-              sum += s
-              en += s.toLong * s
-              i += 1
-            }
-            Row(r.getLong(0), if (code == 7) "ulaw" else "alaw",
-              n.toLong, peak, sum, if (n > 0) en / n else 0L)
+      StructField("energy", LongType, nullable = false))) { bytes =>
+      locateG711Data(bytes).map { case (off, n, code) =>
+        var peak = 0L; var sum = 0L; var en = 0L
+        var i = 0
+        while (i < n) {
+          val s = if (code == 7) mulawExpand(bytes(off + i) & 0xff)
+                  else alawExpand(bytes(off + i) & 0xff)
+          peak = math.max(peak, math.abs(s))
+          sum += s
+          en += s.toLong * s
+          i += 1
         }
+        (if (code == 7) "ulaw" else "alaw", n.toLong, peak, sum, if (n > 0) en / n else 0L)
       }
-    }(enc)
-  }
+    }
 
   /** Deterministic G.711 WAVs keyed on doc_id: even ids µ-law, odd
     * A-law; byte j = (id·29 + j·23) % 256 — every segment/mantissa/
     * sign combination appears across the corpus. */
-  def syntheticG711Audio(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val n = (48 + id % 48).toInt
-        val data = Array.tabulate[Byte](n)(j => ((id * 29 + j * 23) % 256).toByte)
-        Row(id, wavG711Bytes(if (id % 2 == 0) 7 else 6, 8000, data))
-      }
-    }(enc)
-  }
+  def syntheticG711Audio(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      val n = (48 + id % 48).toInt
+      val data = Array.tabulate[Byte](n)(j => ((id * 29 + j * 23) % 256).toByte)
+      wavG711Bytes(if (id % 2 == 0) 7 else 6, 8000, data)
+    }
 
   // ------------------------------------------------------------------
   // FLAC STREAMINFO — lossless-audio corpus metadata: the fLaC
@@ -3290,22 +3103,14 @@ object Multimodal {
   } catch { case _: IndexOutOfBoundsException => None }
 
   /** [[flacStreamInfo]] at scale. */
-  def flacMetadata(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  def flacMetadata(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("sample_rate", LongType, nullable = false),
       StructField("channels", LongType, nullable = false),
       StructField("bits", LongType, nullable = false),
-      StructField("total_samples", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        flacStreamInfo(r.getAs[Array[Byte]](1)).map { case (sr, ch, b, t) =>
-          Row(r.getLong(0), sr.toLong, ch.toLong, b.toLong, t)
-        }
-      }
-    }(enc)
-  }
+      StructField("total_samples", LongType, nullable = false))) { bytes =>
+      flacStreamInfo(bytes).map { case (sr, ch, b, t) => (sr.toLong, ch.toLong, b.toLong, t) }
+    }
 
   /** A COMPLETE minimal FLAC: STREAMINFO (rate 8000 + (id·37) mod
     * 90000, channels 1 + id%8, bits 16 + id%9, total samples
@@ -3332,15 +3137,8 @@ object Multimodal {
   }
 
   /** Deterministic minimal FLACs keyed on doc_id. */
-  def syntheticFlacBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map(r => Row(r.getLong(0), flacBytes(r.getLong(0))))
-    }(enc)
-  }
+  def syntheticFlacBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(flacBytes)
 
   // ------------------------------------------------------------------
   // BMP RLE8 (BI_RLE8, compression 1) — the run-length variant legacy
@@ -3418,17 +3216,8 @@ object Multimodal {
   } catch { case _: IndexOutOfBoundsException | _: NegativeArraySizeException => None }
 
   /** [[decodeBmpRle8Pixels]] at scale (stub seam for non-RLE8). */
-  def decodeBmpRle(blobs: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(pngPixelSchema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        decodeBmpRle8Pixels(r.getAs[Array[Byte]](1)).map {
-          case (w, h, ch, np, sr, sg, sb, sa) =>
-            Row(r.getLong(0), w, h, ch, np, sr, sg, sb, sa)
-        }
-      }
-    }(enc)
-  }
+  def decodeBmpRle(blobs: DataFrame): DataFrame =
+    perBlob(blobs, rgbaSumFields)(decodeBmpRle8Pixels)
 
   /** A COMPLETE BI_RLE8 BMP: 16-entry analytic palette (B,G,R =
     * (id+7j, id+5j, id+3j) mod 256), index (id + x div 3 + 3·fr) mod
@@ -3483,18 +3272,8 @@ object Multimodal {
   }
 
   /** Deterministic RLE8 BMPs keyed on doc_id. */
-  def syntheticRleBmpBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        Row(id, bmpRle8Bytes(id, (1 + id % 14).toInt, (1 + id % 9).toInt))
-      }
-    }(enc)
-  }
+  def syntheticRleBmpBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(id => bmpRle8Bytes(id, (1 + id % 14).toInt, (1 + id % 9).toInt))
 
   // ------------------------------------------------------------------
   // PCM24 (WAVE format 1, 24-bit) — the studio/pro-audio depth: 3-byte
@@ -3548,56 +3327,40 @@ object Multimodal {
   /** Per-doc stats over decoded 24-bit PCM: exact integer peak /
     * sample sum / mean square (Σs² div n — s² reaches 2⁴⁶, still
     * exact in Long). Non-PCM24 payloads drop (the codec seam). */
-  def pcm24Stats(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  def pcm24Stats(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("n_samples", LongType, nullable = false),
       StructField("peak", LongType, nullable = false),
       StructField("sum_samples", LongType, nullable = false),
-      StructField("energy", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        locatePcm24Data(if (bytes == null) Array.emptyByteArray else bytes).map {
-          case (off, nb) =>
-            val n = nb / 3
-            var peak = 0L; var sum = 0L; var en = 0L
-            var i = 0
-            while (i < n) {
-              val o = off + 3 * i
-              // 3-byte LE, sign via the <<8 >>8 arithmetic-shift trick
-              val s = (((bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
-                ((bytes(o + 2) & 0xff) << 16)) << 8) >> 8
-              peak = math.max(peak, math.abs(s.toLong))
-              sum += s
-              en += s.toLong * s
-              i += 1
-            }
-            Row(r.getLong(0), n.toLong, peak, sum, if (n > 0) en / n else 0L)
+      StructField("energy", LongType, nullable = false))) { bytes =>
+      locatePcm24Data(bytes).map { case (off, nb) =>
+        val n = nb / 3
+        var peak = 0L; var sum = 0L; var en = 0L
+        var i = 0
+        while (i < n) {
+          val o = off + 3 * i
+          // 3-byte LE, sign via the <<8 >>8 arithmetic-shift trick
+          val s = (((bytes(o) & 0xff) | ((bytes(o + 1) & 0xff) << 8) |
+            ((bytes(o + 2) & 0xff) << 16)) << 8) >> 8
+          peak = math.max(peak, math.abs(s.toLong))
+          sum += s
+          en += s.toLong * s
+          i += 1
         }
+        (n.toLong, peak, sum, if (n > 0) en / n else 0L)
       }
-    }(enc)
-  }
+    }
 
   /** Deterministic 24-bit PCM WAVs keyed on doc_id: 40 + id%40 mono
     * samples of s_i = (id·9973 + i·5501) mod 2²⁴ − 2²³ — full-range
     * values, so a dropped sign extension is impossible to miss. */
-  def syntheticPcm24Audio(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val n = (40 + id % 40).toInt
-        val samples = Array.tabulate(n)(i =>
-          (((id * 9973 + i.toLong * 5501) % (1 << 24)) - (1 << 23)).toInt)
-        Row(id, wavPcm24Bytes(48000, samples))
-      }
-    }(enc)
-  }
+  def syntheticPcm24Audio(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      val n = (40 + id % 40).toInt
+      val samples = Array.tabulate(n)(i =>
+        (((id * 9973 + i.toLong * 5501) % (1 << 24)) - (1 << 23)).toInt)
+      wavPcm24Bytes(48000, samples)
+    }
 
   // ------------------------------------------------------------------
   // IMA ADPCM (WAVE format 0x11, "DVI/IMA") — the 4-bit differential
@@ -3702,60 +3465,51 @@ object Multimodal {
     * (predictor, step index) — the terminal state pins every
     * intermediate step, so one wrong clamp or table hop anywhere in
     * the stream flips the row. Non-ADPCM payloads drop. */
-  def adpcmStats(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  def adpcmStats(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("n_blocks", LongType, nullable = false),
       StructField("n_samples", LongType, nullable = false),
       StructField("peak", LongType, nullable = false),
       StructField("sum_samples", LongType, nullable = false),
       StructField("energy", LongType, nullable = false),
       StructField("final_predictor", LongType, nullable = false),
-      StructField("final_index", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        locateAdpcmData(if (bytes == null) Array.emptyByteArray else bytes).filter {
-          // strict framing, matching the WARC/ZIP walks: a data chunk
-          // that is not a whole number of blocks is truncation, and a
-          // truncated payload refuses wholesale rather than decoding
-          // the prefix that happens to parse
-          case (_, len, blockAlign, _) => len % blockAlign == 0
-        }.map {
-          case (off, len, blockAlign, _) =>
-            val nBlocks = len / blockAlign
-            var peak = 0L; var sum = 0L; var en = 0L; var n = 0L
-            var lastPred = 0; var lastIdx = 0
-            var b = 0
-            while (b < nBlocks) {
-              val base = off + b * blockAlign
-              var pred = ((bytes(base) & 0xff) | (bytes(base + 1) << 8)).toShort.toInt
-              var idx = math.max(0, math.min(88, bytes(base + 2) & 0xff))
-              def emit(s: Int): Unit = {
-                peak = math.max(peak, math.abs(s.toLong)); sum += s
-                en += s.toLong * s; n += 1
-              }
-              emit(pred)
-              var j = 0
-              val nNib = 2 * (blockAlign - 4)
-              while (j < nNib) {
-                val byte = bytes(base + 4 + (j >> 1)) & 0xff
-                val nib = if ((j & 1) == 0) byte & 0x0f else byte >> 4
-                val (p2, i2) = adpcmStep(nib, pred, idx)
-                pred = p2; idx = i2
-                emit(pred)
-                j += 1
-              }
-              lastPred = pred; lastIdx = idx
-              b += 1
-            }
-            Row(r.getLong(0), nBlocks.toLong, n, peak, sum,
-              if (n > 0) en / n else 0L, lastPred.toLong, lastIdx.toLong)
+      StructField("final_index", LongType, nullable = false))) { bytes =>
+      locateAdpcmData(bytes).filter {
+        // strict framing, matching the WARC/ZIP walks: a data chunk
+        // that is not a whole number of blocks is truncation, and a
+        // truncated payload refuses wholesale rather than decoding
+        // the prefix that happens to parse
+        case (_, len, blockAlign, _) => len % blockAlign == 0
+      }.map { case (off, len, blockAlign, _) =>
+        val nBlocks = len / blockAlign
+        var peak = 0L; var sum = 0L; var en = 0L; var n = 0L
+        var lastPred = 0; var lastIdx = 0
+        var b = 0
+        while (b < nBlocks) {
+          val base = off + b * blockAlign
+          var pred = ((bytes(base) & 0xff) | (bytes(base + 1) << 8)).toShort.toInt
+          var idx = math.max(0, math.min(88, bytes(base + 2) & 0xff))
+          def emit(s: Int): Unit = {
+            peak = math.max(peak, math.abs(s.toLong)); sum += s
+            en += s.toLong * s; n += 1
+          }
+          emit(pred)
+          var j = 0
+          val nNib = 2 * (blockAlign - 4)
+          while (j < nNib) {
+            val byte = bytes(base + 4 + (j >> 1)) & 0xff
+            val nib = if ((j & 1) == 0) byte & 0x0f else byte >> 4
+            val (p2, i2) = adpcmStep(nib, pred, idx)
+            pred = p2; idx = i2
+            emit(pred)
+            j += 1
+          }
+          lastPred = pred; lastIdx = idx
+          b += 1
         }
+        (nBlocks.toLong, n, peak, sum, if (n > 0) en / n else 0L, lastPred.toLong, lastIdx.toLong)
       }
-    }(enc)
-  }
+    }
 
   /** Deterministic IMA ADPCM WAVs keyed on doc_id: 1 + id%3 blocks of
     * 16 + id%24 nibble-bytes; block b seeds predictor
@@ -3763,25 +3517,18 @@ object Multimodal {
     * nibble j of block b is (id·7 + b·11 + j·5) mod 16 — every
     * mantissa/sign pattern and both index-clamp walls appear across
     * the corpus, and multi-block docs exercise the header restart. */
-  def syntheticAdpcmAudio(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val nBytes = (16 + id % 24).toInt
-        val nBlocks = (1 + id % 3).toInt
-        val blocks = (0 until nBlocks).map { b =>
-          val nib = Array.tabulate(2 * nBytes)(j => ((id * 7 + b * 11 + j * 5) % 16).toInt)
-          val packed = Array.tabulate[Byte](nBytes)(k =>
-            ((nib(2 * k) & 0x0f) | (nib(2 * k + 1) << 4)).toByte)
-          (((id * 211 + b * 97) % 4096 - 2048).toInt, ((id + 31 * b) % 89).toInt, packed)
-        }
-        Row(id, wavAdpcmBytes(8000, 1 + 2 * nBytes, blocks))
-      }
-    }(enc)
+  def syntheticAdpcmAudio(docs: DataFrame): DataFrame =
+    blobFrame(docs)(adpcmFixtureBytes)
+
+  private def adpcmFixtureBytes(id: Long): Array[Byte] = {
+    val nBytes = (16 + id % 24).toInt
+    val blocks = (0 until (1 + id % 3).toInt).map { b =>
+      val nib = Array.tabulate(2 * nBytes)(j => ((id * 7 + b * 11 + j * 5) % 16).toInt)
+      val packed = Array.tabulate[Byte](nBytes)(k =>
+        ((nib(2 * k) & 0x0f) | (nib(2 * k + 1) << 4)).toByte)
+      (((id * 211 + b * 97) % 4096 - 2048).toInt, ((id + 31 * b) % 89).toInt, packed)
+    }
+    wavAdpcmBytes(8000, 1 + 2 * nBytes, blocks)
   }
 
   // ------------------------------------------------------------------
@@ -3915,45 +3662,26 @@ object Multimodal {
     else Some((if (big) "MM" else "II", make, orientation, px, py))
   } catch { case _: IndexOutOfBoundsException | _: NegativeArraySizeException => None }
 
-  /** [[exifMeta]] at scale: constant-memory per-partition iteration,
-    * EXIF-less payloads dropped (the metadata seam). */
-  def exifMetadata(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  /** [[exifMeta]] at scale, EXIF-less payloads dropped (the metadata
+    * seam). */
+  def exifMetadata(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("endian", StringType, nullable = false),
       StructField("make", StringType, nullable = false),
       StructField("orientation", LongType, nullable = false),
       StructField("pixel_x", LongType, nullable = false),
-      StructField("pixel_y", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        exifMeta(r.getAs[Array[Byte]](1)).map { case (en, mk, o, x, y) =>
-          Row(r.getLong(0), en, mk, o, x, y)
-        }
-      }
-    }(enc)
-  }
+      StructField("pixel_y", LongType, nullable = false)))(exifMeta)
 
   /** Deterministic EXIF'd JPEGs keyed on doc_id: the [[jpegBaselineBytes]]
     * fixture with an APP1 spliced after SOI — byte order II/MM by
     * parity, Make "CAM-"+(id%10), Orientation 1+id%8, capture dims
     * 16·(1+id%80) × 16·(1+id%45). Still fully pixel-decodable. */
-  def syntheticExifJpegBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        Row(id, withExif(jpegBaselineBytes(id),
-          exifApp1(id % 2 == 1, "CAM-" + (id % 10),
-            (1 + id % 8).toInt, (16 * (1 + id % 80)).toInt,
-            (16 * (1 + id % 45)).toInt)))
-      }
-    }(enc)
-  }
+  def syntheticExifJpegBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(exifJpegFixtureBytes)
+
+  private def exifJpegFixtureBytes(id: Long): Array[Byte] =
+    withExif(jpegBaselineBytes(id), exifApp1(id % 2 == 1, "CAM-" + (id % 10),
+      (1 + id % 8).toInt, (16 * (1 + id % 80)).toInt, (16 * (1 + id % 45)).toInt))
 
   /** Stored-grid cell feeding UPRIGHT cell (r, c) of a g×g mesh under
     * EXIF orientation `o` (1 = as stored, 2 mirror-H, 3 rot180,
@@ -3980,36 +3708,29 @@ object Multimodal {
     * and its rotated/mirrored re-save hash IDENTICALLY (without this,
     * every orientation lands in a different near-dup bucket; the
     * mean threshold itself is permutation-invariant, so only the bit
-    * ORDER needs the remap). No/invalid EXIF → orientation 1. Same
-    * narrow per-partition decode, zero shuffle. */
+    * ORDER needs the remap). No/invalid EXIF → orientation 1. Zero
+    * shuffle. */
   def imageAHashOriented(blobs: DataFrame, grid: Int = 8): DataFrame = {
     require(grid >= 2 && grid * grid <= 64, s"grid² must fit 64 bits, got $grid")
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+    perBlob(blobs, Seq(
       StructField("orientation", LongType, nullable = false),
-      StructField("ahash", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { row =>
-        val bytes = row.getAs[Array[Byte]](1)
-        val o = exifMeta(bytes).map(_._3.toInt).filter(v => v >= 1 && v <= 8)
-          .getOrElse(1)
-        grayBlockMeans(bytes, grid).map { case (_, _, means) =>
-          var total = 0L
-          var i = 0
-          while (i < grid * grid) { total += means(i); i += 1 }
-          val gmean = total / (grid * grid)
-          var hash = 0L
-          i = 0
-          while (i < grid * grid) {
-            if (means(orientIndex(o, grid, i / grid, i % grid)) > gmean)
-              hash |= 1L << i
-            i += 1
-          }
-          Row(row.getLong(0), o.toLong, hash)
+      StructField("ahash", LongType, nullable = false))) { bytes =>
+      val o = exifMeta(bytes).map(_._3.toInt).filter(v => v >= 1 && v <= 8).getOrElse(1)
+      grayBlockMeans(bytes, grid).map { case (_, _, means) =>
+        var total = 0L
+        var i = 0
+        while (i < grid * grid) { total += means(i); i += 1 }
+        val gmean = total / (grid * grid)
+        var hash = 0L
+        i = 0
+        while (i < grid * grid) {
+          if (means(orientIndex(o, grid, i / grid, i % grid)) > gmean)
+            hash |= 1L << i
+          i += 1
         }
+        (o.toLong, hash)
       }
-    }(enc)
+    }
   }
 
   /** Deterministic oriented JPEGs: ONE upright 64×64 grayscale scene
@@ -4019,30 +3740,21 @@ object Multimodal {
     * matching EXIF tag — so [[imageAHashOriented]] must recover the
     * SAME upright hash for every orientation, which is exactly what
     * the (orientation-free) oracle asserts. */
-  def syntheticOrientedJpegBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val o = (1 + id % 8).toInt
-        // stored(orientIndex(o, r, c)) = upright(r, c) — decode inverts
-        val stored = new Array[Int](64)
-        for (row0 <- 0 until 8; c <- 0 until 8)
-          stored(orientIndex(o, 8, row0, c)) =
-            (((id + 3L * c + 5L * row0) % 121) - 60).toInt
-        val jpeg = jpegAssemble(64, 64, 0, (_, bx, by) => {
-          val a = new Array[Int](64)
-          a(0) = stored(by * 8 + bx)
-          a
-        })
-        Row(id, withExif(jpeg,
-          exifApp1(id % 2 == 1, "CAM-" + (id % 10), o, 64, 64)))
-      }
-    }(enc)
-  }
+  def syntheticOrientedJpegBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      val o = (1 + id % 8).toInt
+      // stored(orientIndex(o, r, c)) = upright(r, c) — decode inverts
+      val stored = new Array[Int](64)
+      for (row0 <- 0 until 8; c <- 0 until 8)
+        stored(orientIndex(o, 8, row0, c)) =
+          (((id + 3L * c + 5L * row0) % 121) - 60).toInt
+      val jpeg = jpegAssemble(64, 64, 0, (_, bx, by) => {
+        val a = new Array[Int](64)
+        a(0) = stored(by * 8 + bx)
+        a
+      })
+      withExif(jpeg, exifApp1(id % 2 == 1, "CAM-" + (id % 10), o, 64, 64))
+    }
 
   // ------------------------------------------------------------------
   // ZIP (central directory walk + real entry decode) — the document
@@ -4166,28 +3878,19 @@ object Multimodal {
     Some(out.result())
   } catch { case _: IndexOutOfBoundsException | _: NegativeArraySizeException => None }
 
-  /** [[zipEntries]] at scale: one row per verified entry,
-    * constant-memory per-partition iteration, non-zip payloads
-    * dropped. */
-  def zipInventory(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  /** [[zipEntries]] at scale: one row per verified entry, non-zip
+    * payloads dropped. */
+  def zipInventory(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("entry_idx", LongType, nullable = false),
       StructField("name", StringType, nullable = false),
       StructField("method", LongType, nullable = false),
       StructField("n_bytes", LongType, nullable = false),
-      StructField("sum_bytes", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        zipEntries(r.getAs[Array[Byte]](1)).toSeq.flatMap { entries =>
-          entries.map { case (e, name, m, n, s) =>
-            Row(r.getLong(0), e.toLong, name, m.toLong, n, s)
-          }
-        }
+      StructField("sum_bytes", LongType, nullable = false))) { bytes =>
+      zipEntries(bytes).toSeq.flatten.map { case (e, name, m, n, s) =>
+        (e.toLong, name, m.toLong, n, s)
       }
-    }(enc)
-  }
+    }
 
   /** A COMPLETE baseline ZIP keyed on doc_id: 1 + id%4 entries, entry
     * e named doc_<id>_<e>.(txt|json by parity), payload byte j =
@@ -4238,15 +3941,8 @@ object Multimodal {
   }
 
   /** Deterministic baseline ZIPs keyed on doc_id. */
-  def syntheticZipBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map(r => Row(r.getLong(0), zipBytes(r.getLong(0))))
-    }(enc)
-  }
+  def syntheticZipBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(zipBytes)
 
   // ------------------------------------------------------------------
   // WARC (ISO 28500) — THE training-data container: Common Crawl and
@@ -4349,28 +4045,17 @@ object Multimodal {
     case _: java.io.IOException => None // corrupt gzip transport
   }
 
-  /** [[warcRecords]] at scale: one row per verified record,
-    * constant-memory per-partition iteration, non-WARC payloads
-    * dropped. */
-  def warcInventory(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  /** [[warcRecords]] at scale: one row per verified record, non-WARC
+    * payloads dropped. */
+  def warcInventory(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("rec_idx", LongType, nullable = false),
       StructField("rec_type", StringType, nullable = false),
       StructField("uri", StringType, nullable = false),
       StructField("n_bytes", LongType, nullable = false),
-      StructField("sum_bytes", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        warcRecords(r.getAs[Array[Byte]](1)).toSeq.flatMap { recs =>
-          recs.map { case (i, t, u, n, s) =>
-            Row(r.getLong(0), i.toLong, t, u, n, s)
-          }
-        }
-      }
-    }(enc)
-  }
+      StructField("sum_bytes", LongType, nullable = false))) { bytes =>
+      warcRecords(bytes).toSeq.flatten.map { case (i, t, u, n, s) => (i.toLong, t, u, n, s) }
+    }
 
   /** A COMPLETE WARC keyed on doc_id: one warcinfo record (payload
     * length 10 + id%5, byte j = (id + j) mod 256) followed by
@@ -4407,15 +4092,8 @@ object Multimodal {
   }
 
   /** Deterministic WARCs keyed on doc_id (odd ids member-gzipped). */
-  def syntheticWarcBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map(r => Row(r.getLong(0), warcBytes(r.getLong(0))))
-    }(enc)
-  }
+  def syntheticWarcBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(warcBytes)
 
   /** Parse an HTTP/1.x response envelope out of a WARC response
     * payload and decode the body through its Content-Encoding:
@@ -4529,11 +4207,10 @@ object Multimodal {
     * decode), body_text (decoded bytes as UTF-8). This is the seam
     * that lets the HTML extractor see text inside crawl archives
     * whose bodies are gzip/deflate-compressed (most of Common Crawl).
-    * Non-response records and malformed/lying envelopes drop.
-    * Narrow per-partition walk, zero shuffle. */
-  def warcHttpBodies(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+    * Non-response records and malformed/lying envelopes drop. Zero
+    * shuffle. */
+  def warcHttpBodies(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("rec_idx", LongType, nullable = false),
       StructField("uri", StringType, nullable = false),
       StructField("status", LongType, nullable = false),
@@ -4541,23 +4218,17 @@ object Multimodal {
       StructField("content_encoding", StringType, nullable = false),
       StructField("n_raw", LongType, nullable = false),
       StructField("n_body", LongType, nullable = false),
-      StructField("body_text", StringType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        warcWalk(r.getAs[Array[Byte]](1)).toSeq.flatMap { case (buf, slices) =>
-          slices.collect { case (i, "response", uri, off, len) => (i, uri, off, len) }
-            .flatMap { case (i, uri, off, len) =>
-              httpResponse(buf, off, len).map { case (st, ct, ce, nRaw, body) =>
-                Row(r.getLong(0), i.toLong, uri, st.toLong, ct, ce,
-                  nRaw.toLong, body.length.toLong,
-                  new String(body, java.nio.charset.StandardCharsets.UTF_8))
-              }
+      StructField("body_text", StringType, nullable = false))) { bytes =>
+      warcWalk(bytes).toSeq.flatMap { case (buf, slices) =>
+        slices.collect { case (i, "response", uri, off, len) => (i, uri, off, len) }
+          .flatMap { case (i, uri, off, len) =>
+            httpResponse(buf, off, len).map { case (st, ct, ce, nRaw, body) =>
+              (i.toLong, uri, st.toLong, ct, ce, nRaw.toLong, body.length.toLong,
+                new String(body, java.nio.charset.StandardCharsets.UTF_8))
             }
-        }
+          }
       }
-    }(enc)
-  }
+    }
 
   /** A web-crawl WARC keyed on doc_id: warcinfo + ONE response record
     * whose payload is a full HTTP/1.1 response carrying the
@@ -4609,15 +4280,8 @@ object Multimodal {
   }
 
   /** Deterministic web-crawl WARCs (HTTP + content-coding matrix). */
-  def syntheticWebWarcBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map(r => Row(r.getLong(0), webWarcBytes(r.getLong(0))))
-    }(enc)
-  }
+  def syntheticWebWarcBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(webWarcBytes)
 
   // ------------------------------------------------------------------
   // MP3 (ID3v2 tag walk + MPEG frame header) — the music/podcast
@@ -4689,25 +4353,16 @@ object Multimodal {
     Some((title, artist, kbps, hz, frameBytes))
   } catch { case _: IndexOutOfBoundsException | _: NegativeArraySizeException => None }
 
-  /** [[mp3Meta]] at scale: constant-memory per-partition iteration,
-    * non-MP3 payloads dropped. */
-  def mp3Metadata(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  /** [[mp3Meta]] at scale, non-MP3 payloads dropped. */
+  def mp3Metadata(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("title", StringType, nullable = false),
       StructField("artist", StringType, nullable = false),
       StructField("bitrate_kbps", LongType, nullable = false),
       StructField("sample_rate", LongType, nullable = false),
-      StructField("frame_bytes", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        mp3Meta(r.getAs[Array[Byte]](1)).map { case (t, a, k, hz, fb) =>
-          Row(r.getLong(0), t, a, k.toLong, hz.toLong, fb.toLong)
-        }
-      }
-    }(enc)
-  }
+      StructField("frame_bytes", LongType, nullable = false))) { bytes =>
+      mp3Meta(bytes).map { case (t, a, k, hz, fb) => (t, a, k.toLong, hz.toLong, fb.toLong) }
+    }
 
   /** A COMPLETE minimal MP3 keyed on doc_id: ID3v2.3 tag carrying
     * TIT2 = "Track <id mod 100>" and TPE1 = "Artist <id mod 10>"
@@ -4813,9 +4468,8 @@ object Multimodal {
     * doc_id, n_frames, sample_rate, duration_ms (exact: MPEG1 Layer
     * III is 1152 samples/frame), kbps min/max/mode, is_vbr, n_padded,
     * n_audio_bytes. Narrow, zero shuffle. */
-  def mp3FrameInventory(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  def mp3FrameInventory(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("n_frames", LongType, nullable = false),
       StructField("sample_rate", LongType, nullable = false),
       StructField("duration_ms", LongType, nullable = false),
@@ -4824,19 +4478,12 @@ object Multimodal {
       StructField("kbps_mode", LongType, nullable = false),
       StructField("is_vbr", LongType, nullable = false),
       StructField("n_padded", LongType, nullable = false),
-      StructField("n_audio_bytes", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        mp3FrameCensus(r.getAs[Array[Byte]](1)).map {
-          case (n, hz, kMin, kMax, kMode, nPad, aBytes) =>
-            Row(r.getLong(0), n.toLong, hz.toLong,
-              1152000L * n / hz, kMin.toLong, kMax.toLong, kMode.toLong,
-              if (kMin != kMax) 1L else 0L, nPad.toLong, aBytes)
-        }
+      StructField("n_audio_bytes", LongType, nullable = false))) { bytes =>
+      mp3FrameCensus(bytes).map { case (n, hz, kMin, kMax, kMode, nPad, aBytes) =>
+        (n.toLong, hz.toLong, 1152000L * n / hz, kMin.toLong, kMax.toLong, kMode.toLong,
+          if (kMin != kMax) 1L else 0L, nPad.toLong, aBytes)
       }
-    }(enc)
-  }
+    }
 
   /** Multi-frame MP3s keyed on doc_id: 3 + id%6 frames; even ids CBR
     * (bitrate index 1 + id%14), odd ids VBR (frame f uses index
@@ -4883,26 +4530,12 @@ object Multimodal {
   }
 
   /** Deterministic multi-frame (CBR + VBR) MP3s keyed on doc_id. */
-  def syntheticMp3VbrBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map(r => Row(r.getLong(0), mp3VbrBytes(r.getLong(0))))
-    }(enc)
-  }
+  def syntheticMp3VbrBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(mp3VbrBytes)
 
   /** Deterministic minimal MP3s keyed on doc_id. */
-  def syntheticMp3Blobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map(r => Row(r.getLong(0), mp3Bytes(r.getLong(0))))
-    }(enc)
-  }
+  def syntheticMp3Blobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(mp3Bytes)
 
   // ------------------------------------------------------------------
   // TIFF (baseline, uncompressed strips) — the scan/document-corpus
@@ -5222,28 +4855,20 @@ object Multimodal {
       if (channels == 3) sums(2) else 0L))
   } catch { case _: IndexOutOfBoundsException | _: NegativeArraySizeException => None }
 
-  /** [[decodeTiffPixels]] at scale: constant-memory per-partition
-    * iteration, non-TIFF payloads dropped. */
-  def decodeTiff(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  /** [[decodeTiffPixels]] at scale, non-TIFF payloads dropped. */
+  def decodeTiff(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("width", LongType, nullable = false),
       StructField("height", LongType, nullable = false),
       StructField("channels", LongType, nullable = false),
       StructField("n_pixels", LongType, nullable = false),
       StructField("sum_r", LongType, nullable = false),
       StructField("sum_g", LongType, nullable = false),
-      StructField("sum_b", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        decodeTiffPixels(r.getAs[Array[Byte]](1)).map {
-          case (w, h, ch, np, sr, sg, sb) =>
-            Row(r.getLong(0), w.toLong, h.toLong, ch.toLong, np, sr, sg, sb)
-        }
+      StructField("sum_b", LongType, nullable = false))) { bytes =>
+      decodeTiffPixels(bytes).map { case (w, h, ch, np, sr, sg, sb) =>
+        (w.toLong, h.toLong, ch.toLong, np, sr, sg, sb)
       }
-    }(enc)
-  }
+    }
 
   /** A COMPLETE baseline striped TIFF in either byte order: 9-entry
     * IFD (dims, per-channel BitsPerSample, Compression 1, Photometric,
@@ -5306,19 +4931,12 @@ object Multimodal {
   /** Deterministic baseline TIFFs keyed on doc_id: gray (id%3 = 0) or
     * RGB, byte order by id parity, RowsPerStrip 1 + id%3 (so most
     * docs are MULTI-strip with offset-indirected arrays). */
-  def syntheticTiffBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        Row(id, tiffBytes(id, (1 + id % 12).toInt, (1 + id % 8).toInt,
-          if (id % 3 == 0) 1 else 3, id % 2 == 1, (1 + id % 3).toInt))
-      }
-    }(enc)
-  }
+  def syntheticTiffBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(tiffFixtureBytes)
+
+  private def tiffFixtureBytes(id: Long): Array[Byte] =
+    tiffBytes(id, (1 + id % 12).toInt, (1 + id % 8).toInt,
+      if (id % 3 == 0) 1 else 3, id % 2 == 1, (1 + id % 3).toInt)
 
   /** PackBits encoder (fixture twin of [[packbitsDecode]]): replicate
     * packets for runs ≥ 2, literal packets otherwise, 128-byte packet
@@ -5424,21 +5042,13 @@ object Multimodal {
   /** Deterministic COMPRESSED TIFFs keyed on doc_id: PackBits (id%3=0)
     * or LZW (id%3=1) or LZW+Predictor2 (id%3=2); gray when id%5=0;
     * byte order by parity; RowsPerStrip 1 + id%4. */
-  def syntheticTiffCompressedBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val comp = if (id % 3 == 0) 32773 else 5
-        val pred = if (id % 3 == 2) 2 else 1
-        Row(id, tiffCompressedBytes(id, (1 + id % 12).toInt, (1 + id % 8).toInt,
-          if (id % 5 == 0) 1 else 3, id % 2 == 1, (1 + id % 4).toInt, comp, pred))
-      }
-    }(enc)
-  }
+  def syntheticTiffCompressedBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      val comp = if (id % 3 == 0) 32773 else 5
+      val pred = if (id % 3 == 2) 2 else 1
+      tiffCompressedBytes(id, (1 + id % 12).toInt, (1 + id % 8).toInt,
+        if (id % 5 == 0) 1 else 3, id % 2 == 1, (1 + id % 4).toInt, comp, pred)
+    }
 
   // ------------------------------------------------------------------
   // MP4 / ISO-BMFF box walk — video-container metadata: a video corpus
@@ -5492,25 +5102,17 @@ object Multimodal {
   /** Deterministic MP4s keyed on doc_id: brand isom/mp42, timescale
     * 600·(1+id%5), duration 600+(id·7)%100000, video avc1/hvc1 at
     * 16·(1+id%80) × 16·(1+id%45), an audio track unless id%3 = 0. */
-  def syntheticMp4Blobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        Row(id, mp4Bytes(
-          if (id % 2 == 0) "isom" else "mp42",
-          (600 * (1 + id % 5)).toInt,
-          600 + (id * 7) % 100000,
-          if (id % 2 == 0) "avc1" else "hvc1",
-          (16 * (1 + id % 80)).toInt,
-          (16 * (1 + id % 45)).toInt,
-          id % 3 != 0))
-      }
-    }(enc)
-  }
+  def syntheticMp4Blobs(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      mp4Bytes(
+        if (id % 2 == 0) "isom" else "mp42",
+        (600 * (1 + id % 5)).toInt,
+        600 + (id * 7) % 100000,
+        if (id % 2 == 0) "avc1" else "hvc1",
+        (16 * (1 + id % 80)).toInt,
+        (16 * (1 + id % 45)).toInt,
+        id % 3 != 0)
+    }
 
   /** The walked metadata: (brand, timescale, durationMs, nTracks,
     * nVideo, nAudio, videoCodec, width, height). durationMs is
@@ -5577,10 +5179,9 @@ object Multimodal {
       nAudio, if (videoCodec == null) "" else videoCodec, vw, vh))
   } catch { case scala.util.control.NonFatal(_) => None }
 
-  /** [[mp4Meta]] at scale: per-partition walk, non-MP4 payloads drop. */
-  def mp4Metadata(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  /** [[mp4Meta]] at scale, non-MP4 payloads dropped. */
+  def mp4Metadata(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("brand", StringType, nullable = false),
       StructField("timescale", LongType, nullable = false),
       StructField("duration_ms", LongType, nullable = false),
@@ -5589,25 +5190,7 @@ object Multimodal {
       StructField("n_audio", LongType, nullable = false),
       StructField("video_codec", StringType, nullable = false),
       StructField("width", LongType, nullable = false),
-      StructField("height", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        mp4Meta(r.getAs[Array[Byte]](1)).map {
-          case (br, ts, du, nt, nv, na, vc, w, h) =>
-            Row(r.getLong(0), br, ts, du, nt, nv, na, vc, w, h)
-        }
-      }
-    }(enc)
-  }
-
-  val frameSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("frame_idx", LongType, nullable = false),
-    StructField("n_samples", LongType, nullable = false),
-    StructField("energy", LongType, nullable = false),
-    StructField("peak", LongType, nullable = false),
-    StructField("zero_crossings", LongType, nullable = false)))
+      StructField("height", LongType, nullable = false)))(mp4Meta)
 
   /** REAL sample-level PCM16 decode → per-frame audio features
     * (mean-square energy, peak amplitude, zero crossings) — the
@@ -5616,39 +5199,38 @@ object Multimodal {
     * "decode" is the RIFF chunk walk plus little-endian reads. All
     * features are exact integers (energy = Σs² DIV n).
     *
-    * Execution contract matches [[decodeHeaders]]: constant-memory
-    * per-partition iteration; one blob in → ⌈samples/frame⌉ feature
-    * rows out, the last frame partial. Blobs that are not canonical
-    * PCM16 WAV emit nothing (the codec seam — compressed formats need
-    * a real decoder). Chunk sizes are untrusted bytes: malformed sizes
-    * break to skip, never spin or index out of bounds. */
+    * One blob in → ⌈samples/frame⌉ feature rows out, the last frame
+    * partial. Blobs that are not canonical PCM16 WAV emit nothing (the
+    * codec seam — compressed formats need a real decoder). Chunk sizes
+    * are untrusted bytes: malformed sizes break to skip, never spin or
+    * index out of bounds. */
   def pcm16Frames(blobs: DataFrame, frameSamples: Int = 25): DataFrame = {
     require(frameSamples > 0, s"frameSamples must be positive, got $frameSamples")
-    val enc = org.apache.spark.sql.Encoders.row(frameSchema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val bytes = Option(r.getAs[Array[Byte]](1)).getOrElse(Array.emptyByteArray)
-        locatePcm16Data(bytes) match {
-          case None => Iterator.empty
-          case Some((off, nSamples, _)) =>
-            (0 until (nSamples + frameSamples - 1) / frameSamples).iterator.map { f =>
-              val s = f * frameSamples
-              val e = math.min(s + frameSamples, nSamples)
-              var i = s; var sumSq = 0L; var peak = 0L; var zc = 0L; var prev = 0
-              while (i < e) {
-                val v = (u16le(bytes, off + 2 * i) << 16) >> 16 // sign-extend
-                sumSq += v.toLong * v
-                if (math.abs(v.toLong) > peak) peak = math.abs(v.toLong)
-                if (i > s && prev * v < 0) zc += 1
-                prev = v; i += 1
-              }
-              val n = (e - s).toLong
-              Row(id, f.toLong, n, sumSq / n, peak, zc)
+    perBlob(blobs, Seq(
+      StructField("frame_idx", LongType, nullable = false),
+      StructField("n_samples", LongType, nullable = false),
+      StructField("energy", LongType, nullable = false),
+      StructField("peak", LongType, nullable = false),
+      StructField("zero_crossings", LongType, nullable = false))) { bytes =>
+      locatePcm16Data(bytes) match {
+        case None => Iterator.empty
+        case Some((off, nSamples, _)) =>
+          (0 until (nSamples + frameSamples - 1) / frameSamples).iterator.map { f =>
+            val s = f * frameSamples
+            val e = math.min(s + frameSamples, nSamples)
+            var i = s; var sumSq = 0L; var peak = 0L; var zc = 0L; var prev = 0
+            while (i < e) {
+              val v = (u16le(bytes, off + 2 * i) << 16) >> 16 // sign-extend
+              sumSq += v.toLong * v
+              if (math.abs(v.toLong) > peak) peak = math.abs(v.toLong)
+              if (i > s && prev * v < 0) zc += 1
+              prev = v; i += 1
             }
-        }
+            val n = (e - s).toLong
+            (f.toLong, n, sumSq / n, peak, zc)
+          }
       }
-    }(enc)
+    }
   }
 
   /** Silence segmentation over [[pcm16Frames]] output: maximal runs of
@@ -5670,14 +5252,6 @@ object Multimodal {
       .select(col(idCol), col("seg_start"), col("seg_end"), col("n_frames"))
   }
 
-  val autocorrSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("n_samples", LongType, nullable = false),
-    StructField("energy", LongType, nullable = false),
-    StructField("best_lag", LongType, nullable = false),
-    StructField("ac_best", LongType, nullable = false),
-    StructField("periodicity_permille", LongType, nullable = false)))
-
   /** Autocorrelation pitch/periodicity probe over DECODED PCM16: for
     * each lag in [minLag, maxLag], the exact integer autocorrelation
     * `ac(L) = Σ sᵢ·sᵢ₊L` over the overlapping span; the winning lag
@@ -5689,65 +5263,64 @@ object Multimodal {
     * in per-channel FRAME units and `ac`/`energy` sum the per-channel
     * products, so stereo never mixes L/R samples into one product
     * (mono output is bit-identical to the single-array formulation).
-    * Same execution contract as [[pcm16Frames]]: constant-memory
-    * per-partition decode, malformed payloads emit nothing, zero
-    * shuffle, all integers (the oracle recomputes every product from
-    * the analytic fixture samples). */
+    * Malformed payloads emit nothing, zero shuffle, all integers (the
+    * oracle recomputes every product from the analytic fixture
+    * samples). */
   def pcm16Autocorr(blobs: DataFrame, minLag: Int = 2, maxLag: Int = 16): DataFrame = {
     require(minLag >= 1 && maxLag >= minLag, s"need 1 <= minLag <= maxLag")
-    val enc = org.apache.spark.sql.Encoders.row(autocorrSchema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val bytes = Option(r.getAs[Array[Byte]](1)).getOrElse(Array.emptyByteArray)
-        locatePcm16Data(bytes) match {
-          case None => Iterator.empty
-          // block-misaligned payloads (sample count not a multiple of
-          // the channel count) are malformed — emit nothing rather
-          // than silently truncating a partial frame
-          case Some((_, nTotal, nCh)) if nCh < 1 || nTotal % nCh != 0 ||
-            nTotal / nCh <= minLag => Iterator.empty
-          case Some((off, nTotal, nCh)) =>
-            val nFrames = nTotal / nCh
-            val s = Array.ofDim[Int](nCh, nFrames)
-            var f = 0
-            while (f < nFrames) {
-              var c = 0
-              while (c < nCh) {
-                s(c)(f) = (u16le(bytes, off + 2 * (f * nCh + c)) << 16) >> 16 // sign-extend
-                c += 1
-              }
-              f += 1
-            }
-            var energy = 0L
+    perBlob(blobs, Seq(
+      StructField("n_samples", LongType, nullable = false),
+      StructField("energy", LongType, nullable = false),
+      StructField("best_lag", LongType, nullable = false),
+      StructField("ac_best", LongType, nullable = false),
+      StructField("periodicity_permille", LongType, nullable = false))) { bytes =>
+      locatePcm16Data(bytes) match {
+        case None => Iterator.empty
+        // block-misaligned payloads (sample count not a multiple of
+        // the channel count) are malformed — emit nothing rather
+        // than silently truncating a partial frame
+        case Some((_, nTotal, nCh)) if nCh < 1 || nTotal % nCh != 0 ||
+          nTotal / nCh <= minLag => Iterator.empty
+        case Some((off, nTotal, nCh)) =>
+          val nFrames = nTotal / nCh
+          val s = Array.ofDim[Int](nCh, nFrames)
+          var f = 0
+          while (f < nFrames) {
             var c = 0
+            while (c < nCh) {
+              s(c)(f) = (u16le(bytes, off + 2 * (f * nCh + c)) << 16) >> 16 // sign-extend
+              c += 1
+            }
+            f += 1
+          }
+          var energy = 0L
+          var c = 0
+          while (c < nCh) {
+            val ch = s(c)
+            var i = 0
+            while (i < nFrames) { energy += ch(i).toLong * ch(i); i += 1 }
+            c += 1
+          }
+          var bestLag = 0L
+          var bestAc = Long.MinValue
+          var lag = minLag
+          while (lag <= math.min(maxLag, nFrames - 1)) {
+            var ac = 0L
+            c = 0
             while (c < nCh) {
               val ch = s(c)
               var i = 0
-              while (i < nFrames) { energy += ch(i).toLong * ch(i); i += 1 }
+              while (i + lag < nFrames) { ac += ch(i).toLong * ch(i + lag); i += 1 }
               c += 1
             }
-            var bestLag = 0L
-            var bestAc = Long.MinValue
-            var lag = minLag
-            while (lag <= math.min(maxLag, nFrames - 1)) {
-              var ac = 0L
-              c = 0
-              while (c < nCh) {
-                val ch = s(c)
-                var i = 0
-                while (i + lag < nFrames) { ac += ch(i).toLong * ch(i + lag); i += 1 }
-                c += 1
-              }
-              if (ac > bestAc) { bestAc = ac; bestLag = lag.toLong }
-              lag += 1
-            }
-            if (energy == 0) Iterator.empty
-            else Iterator.single(Row(id, (nFrames.toLong * nCh), energy, bestLag, bestAc,
-              permille(bestAc, energy)))
-        }
+            if (ac > bestAc) { bestAc = ac; bestLag = lag.toLong }
+            lag += 1
+          }
+          if (energy == 0) Iterator.empty
+          else Iterator.single((nFrames.toLong * nCh, energy, bestLag, bestAc,
+            permille(bestAc, energy)))
       }
-    }(enc)
+    }
   }
 
   /** `floorDiv(a*1000, b)` without the Long overflow `a*1000L` hits
@@ -5790,14 +5363,6 @@ object Multimodal {
     None
   }
 
-  val channelStatsSchema: StructType = StructType(Seq(
-    StructField("doc_id", LongType, nullable = false),
-    StructField("channel", LongType, nullable = false),
-    StructField("n_samples", LongType, nullable = false),
-    StructField("energy", LongType, nullable = false),
-    StructField("peak", LongType, nullable = false),
-    StructField("zero_crossings", LongType, nullable = false)))
-
   /** Per-CHANNEL PCM16 statistics — the stereo-aware decode
     * [[pcm16Frames]] doesn't attempt (its frames run over the
     * interleaved stream): samples are deinterleaved by the fmt chunk's
@@ -5805,56 +5370,45 @@ object Multimodal {
     * `off + 2·(j·ch + c)`), and each channel gets exact integer
     * energy (Σs² DIV n), peak amplitude and zero crossings over ITS
     * OWN sequence — channel-imbalance / dead-channel detection for
-    * audio curation. Same execution contract as the other decoders:
-    * constant-memory per-partition iteration, malformed payloads emit
-    * nothing. */
-  def pcm16ChannelStats(blobs: DataFrame): DataFrame = {
-    val enc = org.apache.spark.sql.Encoders.row(channelStatsSchema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        val id = r.getLong(0)
-        val bytes = Option(r.getAs[Array[Byte]](1)).getOrElse(Array.emptyByteArray)
-        locatePcm16Data(bytes) match {
-          case None => Iterator.empty
-          case Some((off, nSamples, ch)) =>
-            (0 until ch).iterator.flatMap { c =>
-              var j = c
-              var prev = 0; var first = true
-              var sumSq = 0L; var peak = 0L; var zc = 0L; var n = 0L
-              while (j < nSamples) {
-                val v = (u16le(bytes, off + 2 * j) << 16) >> 16 // sign-extend
-                sumSq += v.toLong * v
-                if (math.abs(v.toLong) > peak) peak = math.abs(v.toLong)
-                if (!first && prev * v < 0) zc += 1
-                prev = v; first = false; n += 1; j += ch
-              }
-              if (n == 0) Iterator.empty
-              else Iterator.single(Row(id, c.toLong, n, sumSq / n, peak, zc))
+    * audio curation. Malformed payloads emit nothing. */
+  def pcm16ChannelStats(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
+      StructField("channel", LongType, nullable = false),
+      StructField("n_samples", LongType, nullable = false),
+      StructField("energy", LongType, nullable = false),
+      StructField("peak", LongType, nullable = false),
+      StructField("zero_crossings", LongType, nullable = false))) { bytes =>
+      locatePcm16Data(bytes) match {
+        case None => Iterator.empty
+        case Some((off, nSamples, ch)) =>
+          (0 until ch).iterator.flatMap { c =>
+            var j = c
+            var prev = 0; var first = true
+            var sumSq = 0L; var peak = 0L; var zc = 0L; var n = 0L
+            while (j < nSamples) {
+              val v = (u16le(bytes, off + 2 * j) << 16) >> 16 // sign-extend
+              sumSq += v.toLong * v
+              if (math.abs(v.toLong) > peak) peak = math.abs(v.toLong)
+              if (!first && prev * v < 0) zc += 1
+              prev = v; first = false; n += 1; j += ch
             }
-        }
+            if (n == 0) Iterator.empty
+            else Iterator.single((c.toLong, n, sumSq / n, peak, zc))
+          }
       }
-    }(enc)
-  }
+    }
 
   /** Deterministic synthetic STEREO PCM16 blobs keyed on doc_id:
     * 2 interleaved channels, 32 + id%32 samples each, sample i of the
     * interleaved stream = `(id·37 + i·13) mod 2048 − 1024` — so each
     * channel's sequence is analytic in (id, j, channel) and the
     * per-channel oracle recomputes energy/peak/crossings exactly. */
-  def syntheticStereoAudio(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val n = (32 + id % 32).toInt
-        val samples = Array.tabulate(2 * n)(i => ((id * 37 + i * 13) % 2048 - 1024).toShort)
-        Row(id, wavPcm16Bytes(2, (8000 + (id % 8) * 1000).toInt, samples))
-      }
-    }(enc)
-  }
+  def syntheticStereoAudio(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      val n = (32 + id % 32).toInt
+      val samples = Array.tabulate(2 * n)(i => ((id * 37 + i * 13) % 2048 - 1024).toShort)
+      wavPcm16Bytes(2, (8000 + (id % 8) * 1000).toInt, samples)
+    }
 
   /** Deterministic synthetic PCM16 audio blobs keyed on doc_id:
     * 64 + id%64 mono samples of the sawtooth
@@ -5862,20 +5416,12 @@ object Multimodal {
     * the frame-feature oracle recomputes the samples analytically and
     * a hash-match proves [[pcm16Frames]] read the REAL data-chunk
     * bytes back (same fixture idea as [[syntheticBlobs]]). */
-  def syntheticAudio(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val n = (64 + id % 64).toInt
-        val samples = Array.tabulate(n)(i => ((id * 31 + i * 17) % 2048 - 1024).toShort)
-        Row(id, wavPcm16Bytes(1, (8000 + (id % 8) * 1000).toInt, samples))
-      }
-    }(enc)
-  }
+  def syntheticAudio(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      val n = (64 + id % 64).toInt
+      val samples = Array.tabulate(n)(i => ((id * 31 + i * 17) % 2048 - 1024).toShort)
+      wavPcm16Bytes(1, (8000 + (id % 8) * 1000).toInt, samples)
+    }
 
   /** Deterministic synthetic media blobs keyed on doc_id (even → BMP;
     * id%4==1 → WAV; id%8==3 → PNG; id%8==7 → JPEG; dims/rates are
@@ -5883,29 +5429,19 @@ object Multimodal {
     * header decode oracle-expressible: the oracle recomputes the
     * encoded values analytically, so a hash-match proves
     * [[parseHeader]] read the right offsets back. */
-  def syntheticBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val bytes =
-          if (id % 2 == 0)
-            bmpBytes((1 + id % 64).toInt, (1 + id % 32).toInt, 24)
-          else if (id % 4 == 1)
-            wavBytes((1 + (id / 2) % 2).toInt, (8000 + (id % 8) * 1000).toInt, 16)
-          else if (id % 8 == 3) // PNG, color type cycling grey/RGB/RGBA
-            pngBytes((1 + id % 128).toInt, (1 + id % 64).toInt, 8,
-              Array(0, 2, 6)(((id / 4) % 3).toInt))
-          else // id % 8 == 7: JPEG, components cycling grey/YCbCr
-            jpegBytes((1 + id % 96).toInt, (1 + id % 48).toInt,
-              if ((id / 8) % 2 == 0) 1 else 3)
-        Row(id, bytes)
-      }
-    }(enc)
-  }
+  def syntheticBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      if (id % 2 == 0)
+        bmpBytes((1 + id % 64).toInt, (1 + id % 32).toInt, 24)
+      else if (id % 4 == 1)
+        wavBytes((1 + (id / 2) % 2).toInt, (8000 + (id % 8) * 1000).toInt, 16)
+      else if (id % 8 == 3) // PNG, color type cycling grey/RGB/RGBA
+        pngBytes((1 + id % 128).toInt, (1 + id % 64).toInt, 8,
+          Array(0, 2, 6)(((id / 4) % 3).toInt))
+      else // id % 8 == 7: JPEG, components cycling grey/YCbCr
+        jpegBytes((1 + id % 96).toInt, (1 + id % 48).toInt,
+          if ((id / 8) % 2 == 0) 1 else 3)
+    }
 
   /** Route ONE blob by magic bytes to its verified parser: (format,
     * verified, units) — units is the format's natural payload grain
@@ -5961,87 +5497,49 @@ object Multimodal {
   /** [[routeBlob]] at scale: the modality-router inventory over a
     * mixed corpus — one row per recognized blob with its verified
     * payload grain. */
-  def routeInventory(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  def routeInventory(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("format", StringType, nullable = false),
       StructField("verified", LongType, nullable = false),
-      StructField("units", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        routeBlob(r.getAs[Array[Byte]](1)).map { case (f, v, u) =>
-          Row(r.getLong(0), f, if (v) 1L else 0L, u)
-        }
-      }
-    }(enc)
-  }
+      StructField("units", LongType, nullable = false))) { bytes =>
+      routeBlob(bytes).map { case (f, v, u) => (f, if (v) 1L else 0L, u) }
+    }
 
   /** A mixed corpus exercising EVERY router branch: id%8 picks the
     * container (0 TIFF, 1 WARC, 2 ZIP, 3 MP3, 4 ADPCM WAV, 5 animated
     * GIF, 6 EXIF'd JPEG, 7 16-bit PNG), each built by its own fixture
     * rule — the one-corpus ingest shape [[routeInventory]] triages. */
-  def syntheticMixedBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map { r =>
-        val id = r.getLong(0)
-        val blob = (id % 8).toInt match {
-          case 0 => tiffBytes(id, (1 + id % 12).toInt, (1 + id % 8).toInt,
-            if (id % 3 == 0) 1 else 3, id % 2 == 1, (1 + id % 3).toInt)
-          case 1 => warcBytes(id)
-          case 2 => zipBytes(id)
-          case 3 => mp3Bytes(id)
-          case 4 =>
-            val nBytes = (16 + id % 24).toInt
-            val blocks = (0 until (1 + id % 3).toInt).map { bk =>
-              val nib = Array.tabulate(2 * nBytes)(j =>
-                ((id * 7 + bk * 11 + j * 5) % 16).toInt)
-              val packed = Array.tabulate[Byte](nBytes)(k =>
-                ((nib(2 * k) & 0x0f) | (nib(2 * k + 1) << 4)).toByte)
-              (((id * 211 + bk * 97) % 4096 - 2048).toInt,
-                ((id + 31 * bk) % 89).toInt, packed)
-            }
-            wavAdpcmBytes(8000, 1 + 2 * nBytes, blocks)
-          case 5 => animatedGifBytes(id, (2 + id % 9).toInt, (2 + id % 6).toInt,
-            (1 + id % 4).toInt)
-          case 6 => withExif(jpegBaselineBytes(id),
-            exifApp1(id % 2 == 1, "CAM-" + (id % 10), (1 + id % 8).toInt,
-              (16 * (1 + id % 80)).toInt, (16 * (1 + id % 45)).toInt))
-          case _ => pngPixel16Bytes(id, (1 + id % 10).toInt, (1 + id % 7).toInt,
-            Array(0, 2, 6)((id % 3).toInt))
-        }
-        Row(id, blob)
+  def syntheticMixedBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs) { id =>
+      (id % 8).toInt match {
+        case 0 => tiffFixtureBytes(id)
+        case 1 => warcBytes(id)
+        case 2 => zipBytes(id)
+        case 3 => mp3Bytes(id)
+        case 4 => adpcmFixtureBytes(id)
+        case 5 => animatedGifFixtureBytes(id)
+        case 6 => exifJpegFixtureBytes(id)
+        case _ => png16FixtureBytes(id)
       }
-    }(enc)
-  }
+    }
 
   /** Byte-histogram featurization: a fixed-length numeric feature
     * vector (16 buckets over byte values) per blob — the stand-in for
     * an embedding/feature-extraction stage (CLIP features, mel
     * spectrogram stats, …), with the real contract: binary in,
-    * `array<double>` out, constant-memory per-partition iteration.
+    * `array<double>` out (an empty or null blob gives all zeros).
     * Deterministic, so downstream similarity search over the features
     * is testable; plugs straight into [[Similarity]] (vec_dot works on
     * any array<double>). */
-  def featurize(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("features", ArrayType(DoubleType, containsNull = false), nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.map { r =>
-        val bytes = r.getAs[Array[Byte]](1)
-        val hist = new Array[Double](16)
-        bytes.foreach(b => hist((b & 0xff) >> 4) += 1.0)
-        val n = math.max(bytes.length, 1).toDouble
-        Row(r.getLong(0), hist.map(_ / n).toSeq)
-      }
-    }(enc)
-  }
+  def featurize(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
+      StructField("features", ArrayType(DoubleType, containsNull = false),
+        nullable = false))) { bytes =>
+      val hist = new Array[Double](16)
+      bytes.foreach(b => hist((b & 0xff) >> 4) += 1.0)
+      val n = math.max(bytes.length, 1).toDouble
+      Some(Tuple1(hist.map(_ / n).toSeq))
+    }
 
   /** Scene-change detection over sampled frames: a frame is a "cut"
     * when its content hash differs from the previous frame's (or it is
@@ -6500,69 +5998,56 @@ object Multimodal {
   /** PDF document facts: doc_id, version, n_pages, n_objects,
     * producer (from /Info, "" when absent). Non-PDF and malformed
     * payloads drop. Narrow, zero shuffle. */
-  def pdfMetadata(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  def pdfMetadata(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("version", StringType, nullable = false),
       StructField("n_pages", LongType, nullable = false),
       StructField("n_objects", LongType, nullable = false),
-      StructField("producer", StringType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        pdfWalk(r.getAs[Array[Byte]](1)).flatMap { case (ver, trailer, objs) =>
-          pdfPages(objs, trailer).map { pages =>
-            val producer = trailer.get("Info") match {
-              case Some(PRef(n)) => objs.get(n).map(_._1) match {
-                case Some(PDict(m)) => m.get("Producer") match {
-                  case Some(PStr(s)) => s
-                  case _ => ""
-                }
+      StructField("producer", StringType, nullable = false))) { bytes =>
+      pdfWalk(bytes).flatMap { case (ver, trailer, objs) =>
+        pdfPages(objs, trailer).map { pages =>
+          val producer = trailer.get("Info") match {
+            case Some(PRef(n)) => objs.get(n).map(_._1) match {
+              case Some(PDict(m)) => m.get("Producer") match {
+                case Some(PStr(s)) => s
                 case _ => ""
               }
               case _ => ""
             }
-            Row(r.getLong(0), ver, pages.length.toLong, objs.size.toLong, producer)
+            case _ => ""
           }
+          (ver, pages.length.toLong, objs.size.toLong, producer)
         }
       }
-    }(enc)
-  }
+    }
 
   /** Per-page extracted text: doc_id, page (0-based), text, n_chars.
     * A page whose /Contents is missing, mis-typed, or whose stream
     * refuses drops the WHOLE document (a partially-readable PDF is
     * corruption, not data). Narrow, zero shuffle. */
-  def pdfTextPages(blobs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
+  def pdfTextPages(blobs: DataFrame): DataFrame =
+    perBlob(blobs, Seq(
       StructField("page", LongType, nullable = false),
       StructField("text", StringType, nullable = false),
-      StructField("n_chars", LongType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    blobs.select(col("doc_id"), col("blob")).mapPartitions { it =>
-      it.flatMap { r =>
-        val rows = for {
-          (_, trailer, objs) <- pdfWalk(r.getAs[Array[Byte]](1))
-          pages <- pdfPages(objs, trailer)
-          texts <- pages.foldLeft(Option(Vector.empty[String])) { (acc, pg) =>
-            for {
-              a <- acc
-              ref <- pg.get("Contents")
-              n <- ref match { case PRef(x) => Some(x); case _ => None }
-              (_, stream) <- objs.get(n)
-              if stream != null
-              t <- pdfContentText(stream)
-            } yield a :+ t
-          }
-        } yield texts.zipWithIndex.map { case (t, i) =>
-          Row(r.getLong(0), i.toLong, t,
-            t.codePointCount(0, t.length).toLong)
+      StructField("n_chars", LongType, nullable = false))) { bytes =>
+      val rows = for {
+        (_, trailer, objs) <- pdfWalk(bytes)
+        pages <- pdfPages(objs, trailer)
+        texts <- pages.foldLeft(Option(Vector.empty[String])) { (acc, pg) =>
+          for {
+            a <- acc
+            ref <- pg.get("Contents")
+            n <- ref match { case PRef(x) => Some(x); case _ => None }
+            (_, stream) <- objs.get(n)
+            if stream != null
+            t <- pdfContentText(stream)
+          } yield a :+ t
         }
-        rows.getOrElse(Vector.empty)
+      } yield texts.zipWithIndex.map { case (t, i) =>
+        (i.toLong, t, t.codePointCount(0, t.length).toLong)
       }
-    }(enc)
-  }
+      rows.getOrElse(Vector.empty)
+    }
 
   /** A COMPLETE classic-xref PDF keyed on doc_id: catalog, page tree
     * (1 + id%4 pages), Helvetica font, /Info with an analytic
@@ -6676,24 +6161,10 @@ object Multimodal {
   }
 
   /** Deterministic incrementally-saved PDFs keyed on doc_id. */
-  def syntheticPdfIncrementalBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map(r => Row(r.getLong(0), pdfIncrementalBytes(r.getLong(0))))
-    }(enc)
-  }
+  def syntheticPdfIncrementalBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(pdfIncrementalBytes)
 
   /** Deterministic classic-xref PDFs keyed on doc_id. */
-  def syntheticPdfBlobs(docs: DataFrame): DataFrame = {
-    val schema = StructType(Seq(
-      StructField("doc_id", LongType, nullable = false),
-      StructField("blob", BinaryType, nullable = false)))
-    val enc = org.apache.spark.sql.Encoders.row(schema)
-    docs.select(col("doc_id")).mapPartitions { it =>
-      it.map(r => Row(r.getLong(0), pdfBytes(r.getLong(0))))
-    }(enc)
-  }
+  def syntheticPdfBlobs(docs: DataFrame): DataFrame =
+    blobFrame(docs)(pdfBytes)
 }

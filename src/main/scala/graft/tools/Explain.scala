@@ -9,7 +9,9 @@ package graft.tools
   * query's `.explain("formatted")` text to
   * `<dir>/<query><SPARK_GRAFT_EXPLAIN_SUFFIX>.txt` (suffix defaults to
   * empty) — the plan-evidence artifact format of the optimization
-  * rounds (`plans/r09/<query>_before.txt` / `_after.txt`).
+  * rounds (`plans/r09/<query>_before.txt` / `_after.txt`) — and its
+  * output schema (`df.schema.json`) to `<dir>/<query><suffix>.schema.json`,
+  * so a refactor can be checked to leave every plan and schema as it was.
   */
 object Explain {
   def main(args: Array[String]): Unit = {
@@ -28,6 +30,8 @@ object Explain {
           new java.io.File(dir).mkdirs()
           java.nio.file.Files.writeString(
             java.nio.file.Paths.get(s"$dir/$q$suffix.txt"), txt)
+          java.nio.file.Files.writeString(
+            java.nio.file.Paths.get(s"$dir/$q$suffix.schema.json"), df.schema.json)
           println(s"[explain] wrote $dir/$q$suffix.txt")
         case None =>
           println(df.queryExecution.executedPlan.toString)

@@ -2,6 +2,7 @@ package graft
 
 import java.nio.{ByteBuffer, ByteOrder}
 
+import org.apache.spark.sql.{DataFrame, Row}
 import org.apache.spark.sql.functions._
 
 import graft.operators.Multimodal
@@ -97,20 +98,60 @@ class MultimodalHeaderSpec extends SparkSpec {
     assert(Multimodal.parseHeader(v.array())._1 === "unknown")
   }
 
-  test("null blobs take the stub path, not an NPE") {
-    val schema = org.apache.spark.sql.types.StructType(Seq(
-      org.apache.spark.sql.types.StructField("doc_id",
-        org.apache.spark.sql.types.LongType, nullable = false),
-      org.apache.spark.sql.types.StructField("blob",
-        org.apache.spark.sql.types.BinaryType, nullable = true)))
-    val rows = java.util.Arrays.asList(
-      org.apache.spark.sql.Row(1L, null),
-      org.apache.spark.sql.Row(2L, "BM".getBytes))
-    val blobs = spark.createDataFrame(rows, schema)
-    val got = Multimodal.decodeHeaders(blobs).orderBy(col("doc_id")).collect()
-    assert(got(0).getString(1) === "unknown" && got(0).getLong(7) === 0L)
-    assert(got(1).getString(1) === "unknown")
+  // The blob contract over every public blob operator: a null blob is
+  // an empty payload, so it never throws and yields exactly the empty
+  // blob's rows (listed per operator; decodeHeaders keeps its stub row,
+  // featurize its all-zero histogram); a 2-byte blob never throws either.
+  private val blobOperators: Seq[(String, DataFrame => DataFrame, Seq[Seq[Any]])] = {
+    import Multimodal._
+    Seq(
+      ("decodeHeaders", decodeHeaders, Seq(Seq("unknown", 64, 64, 3, null, null, 0L))),
+      ("decodePixels", decodePixels, Nil),
+      ("imageResize", imageResize(_), Nil),
+      ("decodePng", decodePng, Nil),
+      ("gifFrames", gifFrames, Nil),
+      ("decodeGif", decodeGif, Nil),
+      ("decodeJpeg", decodeJpeg, Nil),
+      ("imageAHash", imageAHash(_), Nil),
+      ("imageDHash", imageDHash(_), Nil),
+      ("g711Stats", g711Stats, Nil),
+      ("flacMetadata", flacMetadata, Nil),
+      ("decodeBmpRle", decodeBmpRle, Nil),
+      ("pcm24Stats", pcm24Stats, Nil),
+      ("adpcmStats", adpcmStats, Nil),
+      ("exifMetadata", exifMetadata, Nil),
+      ("imageAHashOriented", imageAHashOriented(_), Nil),
+      ("zipInventory", zipInventory, Nil),
+      ("warcInventory", warcInventory, Nil),
+      ("warcHttpBodies", warcHttpBodies, Nil),
+      ("mp3Metadata", mp3Metadata, Nil),
+      ("mp3FrameInventory", mp3FrameInventory, Nil),
+      ("decodeTiff", decodeTiff, Nil),
+      ("mp4Metadata", mp4Metadata, Nil),
+      ("pcm16Frames", pcm16Frames(_), Nil),
+      ("pcm16Autocorr", pcm16Autocorr(_), Nil),
+      ("pcm16ChannelStats", pcm16ChannelStats, Nil),
+      ("routeInventory", routeInventory, Nil),
+      ("featurize", featurize, Seq(Seq(Seq.fill(16)(0.0)))),
+      ("pdfMetadata", pdfMetadata, Nil),
+      ("pdfTextPages", pdfTextPages, Nil))
   }
+
+  for ((name, op, emptyRows) <- blobOperators)
+    test(s"null blob reads as an empty payload: $name") {
+      val schema = org.apache.spark.sql.types.StructType(Seq(
+        org.apache.spark.sql.types.StructField("doc_id",
+          org.apache.spark.sql.types.LongType, nullable = false),
+        org.apache.spark.sql.types.StructField("blob",
+          org.apache.spark.sql.types.BinaryType, nullable = true)))
+      val blobs = spark.createDataFrame(java.util.Arrays.asList(
+        Row(1L, null), Row(2L, "BM".getBytes), Row(3L, Array.emptyByteArray)), schema)
+      val got = op(blobs).collect().toSeq.groupBy(_.getLong(0))
+        .map { case (id, rows) => id -> rows.map(_.toSeq.tail) }.withDefaultValue(Nil)
+      assert(got(1L) === emptyRows)
+      assert(got(3L) === emptyRows)
+      if (name == "decodeHeaders") assert(got(2L).map(_.head) === Seq("unknown"))
+    }
 
   test("PNG IHDR: width/height/channels/bit-depth from fixed offsets") {
     assert(Multimodal.parseHeader(Multimodal.pngBytes(800, 600, 8, 2)) ===
@@ -812,9 +853,9 @@ class MultimodalHeaderSpec extends SparkSpec {
     def blk(c: Int, bx: Int, by: Int): Array[Int] = {
       val a = new Array[Int](64)
       a(0) = (7 * bx - 5 * by) % 30
-      a(Multimodal.jpegZigzagAt(1)) = 1
-      a(Multimodal.jpegZigzagAt(3)) = -1
-      a(Multimodal.jpegZigzagAt(20)) = if ((bx + by) % 2 == 0) 1 else -1
+      a(Multimodal.JpegZigzag(1)) = 1
+      a(Multimodal.JpegZigzag(3)) = -1
+      a(Multimodal.JpegZigzag(20)) = if ((bx + by) % 2 == 0) 1 else -1
       a
     }
     val bytes = Multimodal.jpegAssemble(w, h, 0, blk)
@@ -841,7 +882,7 @@ class MultimodalHeaderSpec extends SparkSpec {
       val a = new Array[Int](64)
       if (c == 0) {
         a(0) = (9 * bx - 4 * by) % 40
-        a(Multimodal.jpegZigzagAt(1)) = if ((bx + by) % 3 == 0) 1 else -1
+        a(Multimodal.JpegZigzag(1)) = if ((bx + by) % 3 == 0) 1 else -1
       }
       a
     }
@@ -2106,9 +2147,9 @@ class MultimodalHeaderSpec extends SparkSpec {
     def blk(c: Int, bx: Int, by: Int): Array[Int] = {
       val a = new Array[Int](64)
       a(0) = (7 * bx - 5 * by) % 30
-      a(Multimodal.jpegZigzagAt(1)) = 3
-      a(Multimodal.jpegZigzagAt(3)) = -2
-      a(Multimodal.jpegZigzagAt(20)) = if ((bx + by) % 2 == 0) 1 else -1
+      a(Multimodal.JpegZigzag(1)) = 3
+      a(Multimodal.JpegZigzag(3)) = -2
+      a(Multimodal.JpegZigzag(20)) = if ((bx + by) % 2 == 0) 1 else -1
       a
     }
     val prog = Multimodal.jpegAssembleProgressive(w, h, 0, blk, acAl = 1)
